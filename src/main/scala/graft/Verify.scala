@@ -21,6 +21,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var emptyViolations = List.empty[String]
+    var failures = List.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
       .foreach { case (name, fn) =>
@@ -36,6 +37,7 @@ object Verify {
           emptyViolations ::= name
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures ::= name
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -54,9 +56,14 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-    if (emptyViolations.nonEmpty)
-      sys.error(s"[verify] gate rows returned 0 rows at $sfDir without an " +
-        s"emptyByDesign annotation (trivially-green hash-match): " +
-        emptyViolations.sorted.mkString(", "))
+    // a failed query leaves no parquet, which the compare would only see
+    // as a missing row; both checks fail the run after every query ran
+    val problems = Seq(
+      failures -> s"queries failed at $sfDir",
+      emptyViolations -> (s"gate rows returned 0 rows at $sfDir without an " +
+        "emptyByDesign annotation (trivially-green hash-match)"),
+    ).collect { case (names, what) if names.nonEmpty =>
+      s"$what: ${names.sorted.mkString(", ")}" }
+    if (problems.nonEmpty) sys.error(problems.mkString("[verify] ", "; ", ""))
   }
 }

@@ -2,6 +2,10 @@ package graft.operators
 
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,6 +39,13 @@ import graft.sources.S3AccessLog
   *    457-458), not to order output.
   *  - `mode(overwrite)` per (bucket, date) destination keeps daily re-runs
   *    and backfills idempotent (s3_server_access_logs.py:361-368,459).
+  *  - A backfill runs its (bucket, date) compactions concurrently on the
+  *    one session (`runBackfill`), not one after another as the
+  *    reference's loop does: one unit's listing, planning and commit
+  *    renames overlap another unit's tasks, and narrow stages (a few big
+  *    files, a 10-task write) share the cores. Each unit still writes
+  *    only its own destination with the same plan, so the files are
+  *    the same as a serial run's.
   */
 object LogEtl {
 
@@ -145,23 +156,71 @@ object LogEtl {
       .parquet(destRoot)
 
   /** O15: run-date loop / backfill driver (s3_server_access_logs.py:353-376):
-    * iterates FORWARD one compact per date from `startDate` up to and
-    * including `endDate` (the reference's `today - lookback_days`
-    * terminus), per bucket subdirectory — matching
-    * `while current_date <= self.lookback_days: ... += 1 day`.
+    * one compact per (bucket, date) for every date from `startDate` up to
+    * and including `endDate` (the reference's `today - lookback_days`
+    * terminus, `while current_date <= self.lookback_days: ... += 1 day`).
+    *
+    * The units are listed first, then run concurrently on the caller's
+    * session from a fixed driver-side pool of
+    * `min(units, defaultParallelism)` threads; Spark's scheduler shares
+    * the cores between their jobs. Bucket names must be non-blank and
+    * distinct, so no two units overwrite one destination.
+    *
+    * Failure: after the first unit fails no queued unit starts; units
+    * already running finish and keep their output, as do those that
+    * finished before. The first failure is then rethrown with the later
+    * ones attached as suppressed exceptions. The pool is always shut
+    * down before this returns or throws.
     */
   def runBackfill(spark: SparkSession, inputRoot: String, destRoot: String,
                   buckets: Seq[String], startDate: LocalDate,
                   endDate: LocalDate, numOutputFiles: Int = 10,
                   hiveLayout: Boolean = false, format: String = "s3"): Unit = {
-    var d = startDate
-    while (!d.isAfter(endDate)) {
-      val raw = DateTimeFormatter.ofPattern("yyyy/MM/dd").format(d)
-      buckets.foreach { b =>
-        compact(spark, s"$inputRoot/$b/$raw", destPath(destRoot, b, d, hiveLayout),
-          numOutputFiles, format = format)
-      }
-      d = d.plusDays(1)
+    requireBucketNames(buckets)
+    val rawDay = DateTimeFormatter.ofPattern("yyyy/MM/dd")
+    val units = Iterator.iterate(startDate)(_.plusDays(1))
+      .takeWhile(!_.isAfter(endDate))
+      .flatMap(d => buckets.map(b =>
+        (s"$inputRoot/$b/${rawDay.format(d)}", destPath(destRoot, b, d, hiveLayout))))
+      .toSeq
+    if (units.isEmpty) return
+    val threads = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(
+      math.min(units.size, spark.sparkContext.defaultParallelism),
+      { (r: Runnable) =>
+        val t = new Thread(r, s"log-etl-backfill-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    // in order of occurrence; a non-empty queue stops queued units
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    try {
+      units.map { case (in, dest) =>
+        pool.submit(new Runnable {
+          def run(): Unit =
+            if (failures.isEmpty)
+              try compact(spark, in, dest, numOutputFiles, format = format)
+              catch { case e: Throwable => failures.add(e) }
+        })
+      }.foreach(_.get())
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
     }
+    failures.asScala.toList match {
+      case first :: rest => rest.foreach(first.addSuppressed); throw first
+      case Nil =>
+    }
+  }
+
+  /** Backfill units are keyed by bucket name: a blank name would read
+    * `<root>//yyyy/MM/dd`, and a repeated one would run two concurrent
+    * overwrites of one destination.
+    */
+  private[operators] def requireBucketNames(buckets: Seq[String]): Unit = {
+    require(!buckets.exists(_.isBlank),
+      s"blank bucket name in ${buckets.mkString("[", ",", "]")}")
+    val dups = buckets.diff(buckets.distinct).distinct
+    require(dups.isEmpty, s"duplicate bucket names: ${dups.mkString(", ")}")
   }
 }

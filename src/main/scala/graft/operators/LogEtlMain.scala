@@ -55,6 +55,15 @@ object LogEtlMain {
     go(args.toList, Map.empty)
   }
 
+  /** `--buckets a,b`: a blank or repeated name (`a,,b`, `a,b,`, `a,a`)
+    * is rejected here rather than read as `<root>//yyyy/MM/dd`.
+    */
+  private[graft] def parseBuckets(arg: String): Seq[String] = {
+    val buckets = arg.split(",", -1).toSeq
+    LogEtl.requireBucketNames(buckets)
+    buckets
+  }
+
   def main(args: Array[String]): Unit = {
     val opts = parseOpts(args.toSeq)
     def req(k: String): String = opts.getOrElse(k,
@@ -62,7 +71,7 @@ object LogEtlMain {
 
     val inputRoot = req("input-root")
     val destRoot = req("dest-root")
-    val buckets = req("buckets").split(",").toSeq
+    val buckets = parseBuckets(req("buckets"))
     val lookbackDays = opts.getOrElse("lookback-days", "1").toInt
     val numOutputFiles = opts.getOrElse("num-output-files", "10").toInt
     val hive = opts.getOrElse("hive-formatted-folders", "false").toBoolean

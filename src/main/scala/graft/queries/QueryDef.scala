@@ -30,9 +30,4 @@ object QueryDef {
   def apply(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, run, Some(oracle))
-
-  /** Non-SQL-expressible ops: driver falls back to a rows-only check. */
-  def noOracle(name: String)(
-      run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, None)
 }

@@ -129,11 +129,6 @@ object S3AccessLog {
         lit("dd/MMM/yyyy:HH:mm:ss")))
   }
 
-  /** Mimics `datetime.isoformat()` at seconds resolution
-    * (s3_server_access_logs.py:197).
-    */
-  def isoFormat(ts: Column): Column = date_format(ts, "yyyy-MM-dd'T'HH:mm:ss")
-
   /** Typed/NULL-normalized output columns, given an accessor from raw
     * group name → string Column. Shared by the built-in `regexp_extract`
     * path and the fused single-pass Catalyst expression path so both are

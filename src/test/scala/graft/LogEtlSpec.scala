@@ -1,11 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.time.LocalDate
+import java.time.format.DateTimeFormatter
+import java.util.Locale
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.LogEtl
+import graft.operators.{LogEtl, LogEtlMain}
 import graft.sources.S3AccessLog
 
 class LogEtlSpec extends AnyFunSuite {
@@ -110,5 +113,91 @@ class LogEtlSpec extends AnyFunSuite {
     assert(LogEtl.destPath("/x", "b", d, hiveLayout = false) == "/x/b/2024/07/03")
     assert(LogEtl.destPath("/x", "b", d, hiveLayout = true) ==
       "/x/b/year=2024/month=07/day=03")
+  }
+
+  /** Raw logs for `<root>/<bucket>/yyyy/MM/dd/`, spread over three files
+    * (plus one dead-letter line) so each unit's write shuffles.
+    */
+  def writeDay(root: String, bucket: String, day: LocalDate, n: Int): Unit = {
+    val dir = Paths.get(root, bucket,
+      DateTimeFormatter.ofPattern("yyyy/MM/dd").format(day))
+    Files.createDirectories(dir)
+    val stamp = DateTimeFormatter.ofPattern("dd/MMM/yyyy", Locale.ENGLISH).format(day)
+    val rows = (0 until n).map(i => S3AccessLog.renderLine(RenderFixtures.baseFields
+      .updated("bucket", bucket)
+      .updated("reqid", s"$bucket-$day-$i")
+      .updated("time", f"[$stamp:${i * 7 % 24}%02d:${i % 60}%02d:08 +0000]")))
+    rows.grouped(n / 3).zipWithIndex.foreach { case (part, k) =>
+      Files.write(dir.resolve(s"f$k.log"), (part :+ "garbage").mkString("\n").getBytes)
+    }
+  }
+
+  def parquetFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+
+  val days: Seq[LocalDate] = Seq(LocalDate.of(2024, 7, 30),
+    LocalDate.of(2024, 7, 31), LocalDate.of(2024, 8, 1))
+
+  test("runBackfill: concurrent units equal per-unit compact, missing day skipped") {
+    val in = tmpDir(); val viaBackfill = tmpDir(); val viaCompact = tmpDir()
+    val buckets = Seq("b1", "b2")
+    for (b <- buckets; d <- days if !(b == "b2" && d == days(1)))
+      writeDay(in, b, d, 90 + 30 * days.indexOf(d))
+    LogEtl.runBackfill(spark, in, viaBackfill, buckets, days.head, days.last,
+      numOutputFiles = 3)
+    for (b <- buckets; d <- days) {
+      val raw = DateTimeFormatter.ofPattern("yyyy/MM/dd").format(d)
+      LogEtl.compact(spark, s"$in/$b/$raw",
+        LogEtl.destPath(viaCompact, b, d, hiveLayout = false), numOutputFiles = 3)
+    }
+    assert(!Files.exists(Paths.get(
+      LogEtl.destPath(viaBackfill, "b2", days(1), hiveLayout = false))),
+      "a day without input writes nothing")
+    for (b <- buckets; d <- days if !(b == "b2" && d == days(1))) {
+      val got = LogEtl.destPath(viaBackfill, b, d, hiveLayout = false)
+      val want = LogEtl.destPath(viaCompact, b, d, hiveLayout = false)
+      assert(parquetFiles(got).length == 3 && parquetFiles(want).length == 3)
+      val (g, w) = (spark.read.parquet(got), spark.read.parquet(want))
+      assert(g.count() == 90 + 30 * days.indexOf(d) + 3)
+      assert(g.exceptAll(w).isEmpty && w.exceptAll(g).isEmpty, s"$b $d rows")
+      for (f <- parquetFiles(got)) {
+        val times = spark.read.parquet(f.getPath).select("request_time")
+          .collect().flatMap(r => Option(r.getTimestamp(0))).toSeq
+        assert(times == times.sortBy(_.getTime), s"$f not sorted on request_time")
+      }
+    }
+  }
+
+  test("runBackfill: one failed unit throws, the others keep their output, no pool thread survives") {
+    val in = tmpDir(); val out = tmpDir()
+    val buckets = Seq("b1", "b2")
+    for (b <- buckets; d <- days.tail) writeDay(in, b, d, 60)
+    // a regular file where (b2, 2024-08-01)'s parent directory belongs;
+    // one at the destination itself would just be overwritten
+    Files.createDirectories(Paths.get(out, "b2", "2024"))
+    Files.write(Paths.get(out, "b2", "2024", "08"), "not a directory".getBytes)
+    intercept[Exception] {
+      LogEtl.runBackfill(spark, in, out, buckets, days(1), days(2), numOutputFiles = 2)
+    }
+    for ((b, d) <- Seq("b1" -> days(1), "b2" -> days(1), "b1" -> days(2)))
+      assert(spark.read.parquet(
+        LogEtl.destPath(out, b, d, hiveLayout = false)).count() == 63)
+    val alive = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith("log-etl-backfill"))
+    assert(alive.isEmpty, alive.map(_.getName).mkString(", "))
+  }
+
+  test("runBackfill and --buckets reject blank or duplicate bucket names") {
+    val in = tmpDir(); val out = tmpDir()
+    writeDay(in, "a", days.head, 30)
+    for (bad <- Seq(Seq("a", ""), Seq("a", "a"), Seq(" ")))
+      intercept[IllegalArgumentException] {
+        LogEtl.runBackfill(spark, in, out, bad, days.head, days.head)
+      }
+    assert(new java.io.File(out).list().isEmpty, "rejected before any unit ran")
+    assert(LogEtlMain.parseBuckets("a,b") == Seq("a", "b"))
+    for (bad <- Seq("a,,b", "a,b,", ",a", "a,b,a"))
+      intercept[IllegalArgumentException](LogEtlMain.parseBuckets(bad))
   }
 }
