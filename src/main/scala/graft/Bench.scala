@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at the configured
   * scale factor, one JSON line on stdout (BASELINE.md bench gate).
   * Queries run in sorted name order after an untimed warm-up query so
@@ -10,16 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus).getOrCreate()
     // untimed warm-up of every query at the two smaller SFs:
     // janino-compiles each plan's codegen stages, primes the parquet
     // reader, and pushes hot helper methods (the line scanner) past the
@@ -54,7 +44,7 @@ object Bench {
     // each query is timed in TWO full passes and the per-query min
     // reported: roughly 1 in 7 executions on this JVM hits a transient
     // deopt-to-interpreter mode (identical work burns 10-15x the CPU,
-    // recovering shortly after — measured with graft.tools.TimeOne; not
+    // recovering shortly after — measured with graft.tools.Profile; not
     // GC, safepoints, or code-cache size) and the mode can span several
     // consecutive executions, so the two attempts are a full query-sweep
     // apart rather than back-to-back. min-of-passes reports steady-state
@@ -93,9 +83,8 @@ object Bench {
     // what 32-thread query stages experience) inflates. Healthy: both
     // ≈ the single-thread figure.
     def calibParMs(): Double = {
-      val n = cpus.toInt
       val t0 = System.nanoTime()
-      val ts = (0 until n).map { _ =>
+      val ts = (0 until cpus).map { _ =>
         val t = new Thread(() => { if (spin() == 42L) println("") })
         t.start(); t
       }

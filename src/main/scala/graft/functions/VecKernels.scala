@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * ELEMENT evaluation walks an expression tree with virtual calls and
   * boxed lambda variables. A 64-dim dot product costs ~6 interpreted
   * expression evals per element (~400 per row); the IVF/PQ gates spend
-  * >70% of their executor time there (JobProfile: sim34 19 s of task
+  * >70% of their executor time there (job profile: sim34 19 s of task
   * time for ~2k-row inputs, sim21 10 s). Each kernel here evaluates the
   * SAME fold as straight-line JVM code over the unsafe ArrayData —
   * one virtual call per row, zero boxing — and emits a static helper

@@ -596,8 +596,8 @@ object Dedup {
     while (!converged && i < maxIter) {
       // the round's edge count rides the checkpoint job's own observed
       // metrics (r21) — the separate count() job per round is gone;
-      // ObserveProbe pins that eager localCheckpoint/checkpoint actions
-      // deliver observe() metrics
+      // CCPropSpec "observe() metrics arrive on an eager
+      // localCheckpoint()" pins that the checkpoint delivers them
       val obs = org.apache.spark.sql.Observation()
       val next = cp(smallStar(largeStar(e))
         .observe(obs, count(lit(1)).as("_n")))

@@ -59,18 +59,13 @@ object LogEtl {
     * is the actual family abstraction: everything downstream of parse
     * (repartition → sort → snappy parquet → overwrite) is shared.
     */
-  final case class Format(parse: (DataFrame, Boolean) => DataFrame,
-                          sortColumn: String)
+  final case class Format(parse: DataFrame => DataFrame, sortColumn: String)
 
   val Formats: Map[String, Format] = Map(
-    "s3" -> Format((df, fused) => S3AccessLog.parse(df, fused = fused),
-      "request_time"),
-    "vpc" -> Format((df, _) => graft.sources.VpcFlowLog.parse(df),
-      "start_ts"),
-    "alb" -> Format((df, fused) =>
-      graft.sources.AlbAccessLog.parse(df, fused = fused), "time"),
-    "cloudfront" -> Format((df, _) =>
-      graft.sources.CloudFrontLog.parse(df), "ts"))
+    "s3" -> Format(S3AccessLog.parse(_), "request_time"),
+    "vpc" -> Format(graft.sources.VpcFlowLog.parse(_), "start_ts"),
+    "alb" -> Format(graft.sources.AlbAccessLog.parse(_), "time"),
+    "cloudfront" -> Format(graft.sources.CloudFrontLog.parse(_), "ts"))
 
   /** Destination path for one (bucket, runDate): raw `%Y/%m/%d` or Hive
     * `year=%Y/month=%m/day=%d` layout (s3_server_access_logs.py:445-454).
@@ -86,8 +81,7 @@ object LogEtl {
   }
 
   /** Parse raw log lines into the reference's 27-column output shape. */
-  def parse(lines: DataFrame, fused: Boolean = true): DataFrame =
-    S3AccessLog.parse(lines, fused = fused)
+  def parse(lines: DataFrame): DataFrame = S3AccessLog.parse(lines)
 
   /** Full compact job for one input directory of raw log text files.
     * A date with no input directory is skipped, matching the reference's
@@ -99,8 +93,7 @@ object LogEtl {
     * Spark's own instrumentation.
     */
   def compact(spark: SparkSession, inputPath: String, dest: String,
-              numOutputFiles: Int = 10, fused: Boolean = true,
-              format: String = "s3"): Unit = {
+              numOutputFiles: Int = 10, format: String = "s3"): Unit = {
     val hadoopPath = new org.apache.hadoop.fs.Path(inputPath)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hadoopPath)) {
@@ -109,7 +102,7 @@ object LogEtl {
       val fmt = Formats.getOrElse(format,
         sys.error(s"unknown log format '$format' (know: ${Formats.keys.mkString(", ")})"))
       val t0 = System.nanoTime()
-      write(fmt.parse(spark.read.text(inputPath), fused), dest,
+      write(fmt.parse(spark.read.text(inputPath)), dest,
         numOutputFiles, fmt.sortColumn)
       System.err.println(
         f"[log-etl] compacted $inputPath -> $dest in ${(System.nanoTime() - t0) / 1e9}%.1f s")

@@ -2,8 +2,6 @@ package graft.operators
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point mirroring the reference's argument surface
   * (s3_server_access_logs.py:469-534) re-targeted at filesystem paths:
   *
@@ -88,17 +86,14 @@ object LogEtlMain {
       .getOrElse(lookbackDate)
     val endDateOverride = opts.get("end-date").map(LocalDate.parse)
 
-    val spark = SparkSession.builder()
+    // the reference's commit settings (s3_server_access_logs.py:59-68)
+    // and its deployment override of the local master
+    val spark = graft.GraftSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("s3_server_side_log_compacter")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.speculation", "false")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
-      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     try {
       val t0 = System.nanoTime()
       val endDate = endDateOverride.getOrElse(lookbackDate)

@@ -243,7 +243,7 @@ object EtlQueries {
               java.util.Locale.US).format(d.atStartOfDay())),
             col("i") + di * 1000, lit(di), col("i"),
             lit(200) + (col("i") % 5), (col("i") * 7 + di) % 1000).as("value"))
-        LogEtl.write(LogEtl.parse(lines, fused = true),
+        LogEtl.write(LogEtl.parse(lines),
           LogEtl.destPath(root, bucket, d, hiveLayout = false),
           numOutputFiles = 2)
       }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
@@ -16,13 +15,7 @@ object PipelineDemo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val work = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder().getOrCreate()
     import spark.implicits._
 
     // ---- streaming: stream the events table from disk, sessionize ----

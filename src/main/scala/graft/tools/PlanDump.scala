@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dev utility: dump finalized physical plans for selected queries to a
   * markdown file (PLANS.md) for plan review.
   * Usage: runMain graft.tools.PlanDump [outFile] [sfDir] [query...]
@@ -52,15 +51,9 @@ object PlanDump {
       "mm07_media_registry_screen", "mm08_media_registry_delete",
       "st18_cdc_schema_evolution",
       "cu01_curation_pipeline")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.builder().getOrCreate()
     val sb = new StringBuilder
-    sb.append("# Finalized physical plans (sf0.01, local[4], AQE on)\n\n")
+    sb.append(s"# Finalized physical plans ($sfDir, local[${graft.GraftSession.cpus}], AQE on)\n\n")
     sb.append("Generated by `graft.tools.PlanDump`. Shapes to check: filters\n")
     sb.append("and ReadSchema at the FileScan, BroadcastHashJoin for dims,\n")
     sb.append("TakeOrderedAndProject for top-k, partial_* before exchanges,\n")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -18,12 +17,7 @@ object RecallProbe {
     //   | 2lv160 (r15 rehearsal config) | pq | ivfpq
     val only = args.lift(1).getOrElse("all")
     def section(name: String): Boolean = only == "all" || only == name
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-recall-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder().getOrCreate()
 
     val e = graft.Tables.load(spark, sfDir, "embeddings")
     val q = e.filter(col("vec_id") < 10)

@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Clustering, Dedup, Similarity, TextAnalysis}
@@ -23,25 +20,14 @@ import graft.operators.{Clustering, Dedup, Similarity, TextAnalysis}
   *   volume scales the way a denser real corpus would.
   *
   * Usage: runMain graft.tools.ScaleRehearsal [sfDir] [workDir]
+  * (SCALE.md's rows ran at local[32]: set SPARK_GRAFT_CPUS=32)
   */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = args.lift(1).getOrElse("/tmp/graft-scale")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scale-rehearsal").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shuffleBytes = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
+    val spark = graft.GraftSession.builder().getOrCreate()
+    val rec = Profile.Recorder.attach(spark.sparkContext)
 
     def replicate(df: DataFrame, factor: Int, mutate: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until factor).map(k => mutate(df, k)).reduce(_ unionAll _)
@@ -55,12 +41,11 @@ object ScaleRehearsal {
     val rowFilter = args.lift(3)
     def measure(label: String)(body: => Long): Unit = {
       if (rowFilter.exists(f => !label.contains(f))) return
-      val mark = shuffleBytes.get()
+      rec.reset()
       val t0 = System.nanoTime()
       val n = body
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000) // listener bus drains asynchronously
-      val mb = (shuffleBytes.get() - mark) / 1e6
+      val mb = rec.stages.map(_.shuffleWriteBytes).sum / 1e6
       println(f"[scale] $label%-28s rows=$n%10d  ${sec}%7.2f s  shuffle=${mb}%9.1f MB")
     }
 

@@ -1,11 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dev utility: print Spark's view of the testdata schemas. */
 object SchemaDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.builder().getOrCreate()
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     graft.Tables.all.foreach { t =>
       println(s"== $t")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.operators.Similarity
 
@@ -15,12 +14,7 @@ object TwoLevelProbe {
     val work = args.headOption.getOrElse("/tmp/graft-scale")
     val which = args.lift(1).getOrElse("both")
     val mode = args.lift(2).getOrElse("2lv")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-two-level-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder().getOrCreate()
     val cases = Seq(
       ("10x", s"$work/embeddings10x.parquet", 160),
       ("100x", s"$work/embeddings100x.parquet", 1600))

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -9,8 +10,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * API was unified for Connect). Needed to expose custom Catalyst
   * expressions as user-facing `Column`s — same mechanism Spark's own
   * `functions` object uses internally.
+  *
+  * Also the listener-bus drain (`private[spark]`): listeners see events
+  * asynchronously, so a reader of listener state drains the bus first.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

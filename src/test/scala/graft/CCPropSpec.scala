@@ -1,5 +1,10 @@
 package graft
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{col, count, lit, when}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -79,5 +84,19 @@ class CCPropSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"trial $trial (m=$m)")
     }
+  }
+
+  test("observe() metrics arrive on an eager localCheckpoint()") {
+    // the CC loops read each round's edge count from the checkpoint
+    // job's observed metrics instead of a count() job; the wait is
+    // bounded so a regression fails here instead of hanging like obs.get
+    val obs = Observation("cc-round")
+    val cp = (1 to 1000).toDF("x").filter(col("x") % 3 === 0)
+      .observe(obs, count(lit(1)).as("n"),
+        count(when(col("x") > 900, lit(1))).as("big"))
+      .localCheckpoint()
+    val got = Await.result(obs.future, 30.seconds)
+    assert(got.getAs[Long]("n") == cp.count() && got.getAs[Long]("n") == 333L)
+    assert(got.getAs[Long]("big") == 33L)
   }
 }
