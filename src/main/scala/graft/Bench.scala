@@ -97,22 +97,10 @@ object Bench {
     val results = p1.zip(p2).map { case ((name, t1, e1), (_, t2, e2)) =>
       (name, math.min(t1, t2), e1.orElse(e2))
     }
-    // r21 output-contract fix (measurement unchanged — formatting only):
-    // the driver's tail capture holds the LAST 2000 bytes of sbt output
-    // and has parsed ZERO rounds' bench JSON (BENCH_r01–r20 all
-    // `parsed: null` — the one-line JSON grew past the window by round
-    // 1 and the window starts mid-line). Mitigations, per the r20
-    // verdict: (a) per-query seconds rounded to 3 decimals (ms
-    // precision — far below the documented inter-run noise), shrinking
-    // the line ~20% so the tail fragment covers more queries; (b) the
-    // identical line printed TWICE — once before the (log-noisy)
-    // spark.stop() and once after it as the process's true last line —
-    // so a full-stdout scanner finds a complete copy wherever its
-    // window lands; (c) the same line mirrored to ./bench_out.json, a
-    // fixed artifact path that cannot be truncated. With 227 query
-    // names totalling 3.9 KB the full dict can NEVER fit a 2000-byte
-    // tail, so (c) is the only complete channel. Key order, key set and
-    // semantics are unchanged from every prior round.
+    // the full per-query dict goes to ./bench_out.json (227 query names
+    // alone are ~3.9 KB) and is printed once before spark.stop(); the
+    // process's last stdout line is a compact totals-only summary, small
+    // enough for a reader that keeps only the tail of the output
     def r3(v: Double): String =
       java.math.BigDecimal.valueOf(v)
         .setScale(3, java.math.RoundingMode.HALF_UP).toPlainString
@@ -121,11 +109,12 @@ object Bench {
     val failed = results.collect { case (k, _, Some(e)) => s""""$k":"$e"""" }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failed,"calib_ms":[${r3(calibPre)},${r3(calibPost)}],"calib_par_ms":[${r3(calibParPre)},${r3(calibParPost)}],"sf":"$sfDir"}"""
+    val calib = s""""calib_ms":[${r3(calibPre)},${r3(calibPost)}],"calib_par_ms":[${r3(calibParPre)},${r3(calibParPost)}],"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failed,$calib"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
       (json + "\n").getBytes("UTF-8"))
     println(json)
     spark.stop()
-    println(json)
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},"failed":${results.count(_._3.isDefined)},$calib""")
   }
 }

@@ -81,16 +81,14 @@ object Bucketing {
     * the SAME `bucketCols` into the SAME `numBuckets` via narrow
     * transforms only — a frame that does not satisfy it still writes
     * correctly (the layout math is per-row), but multi-file buckets
-    * forfeit the one-file sorted-scan invariant.
+    * forfeit the one-file sorted-scan invariant. `path` must not exist
+    * yet: it is the staging path of a [[graft.io.Publish]] replace.
     */
   def rewriteBucketedAt(df: DataFrame, table: String,
                         bucketCols: Seq[String], numBuckets: Int,
                         path: String): Unit = {
     require(bucketCols.nonEmpty, "need at least one bucket column")
     df.sparkSession.sql(s"DROP TABLE IF EXISTS $table")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
     df.write.mode(SaveMode.Overwrite)
       .format("parquet")
       .option("path", path)
@@ -100,7 +98,7 @@ object Bucketing {
   }
 
   /** Re-register an EXTERNAL bucketed table over data that already
-    * sits at `path` (after a maintenance rename-swap moved it there):
+    * sits at `path` (after a maintenance publish moved it there):
     * plain DDL, no data touched. The bucket spec must match how the
     * files were written or reads would trust a layout that is not
     * there.
@@ -116,11 +114,4 @@ object Bucketing {
          |INTO $numBuckets BUCKETS
          |LOCATION '$path'""".stripMargin)
   }
-
-  /** Join two bucketed tables on their bucket key — plans with no
-    * Exchange when both sides share bucket count and key.
-    */
-  def bucketedJoin(spark: SparkSession, leftTable: String,
-                   rightTable: String, key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 }

@@ -1211,11 +1211,9 @@ object Dedup {
     * layout-establishing exchange precisely because the layout
     * already holds: the whole delete is scan → broadcast-anti →
     * write, 0.0 MB of shuffle at every registry decade (SCALE.md
-    * r20). The swap is crash-safe the house way: survivors land at
-    * `<path>.__next`, the live tree steps aside to `<path>.__pre`,
-    * next renames in, pre deletes last — an interrupted run leaves
-    * `__pre` (the previous registry, intact) and the next attempt
-    * refuses with the restore path named rather than guessing.
+    * r20). The survivors replace the registry through
+    * [[graft.io.Publish]]: a crash leaves the previous registry or the
+    * new one, and the next deletion settles it first.
     *
     * The deleted registry is value-IDENTICAL to one rebuilt from the
     * survivors (the sim27 contract): banding is a pure per-row
@@ -1229,16 +1227,14 @@ object Dedup {
                                 table: String, path: String,
                                 tombstones: DataFrame,
                                 numBuckets: Int = 32): Unit = {
+    val live = new org.apache.hadoop.fs.Path(path)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // settle an interrupted deletion before reading: its swap moved
+    // the files under the table's cached listing
+    if (graft.io.Publish.recover(fs, live)) spark.catalog.refreshTable(table)
     val reg = spark.table(table)
     val idName = reg.columns.head
     val tCol = tombstones.columns.head
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pre = new org.apache.hadoop.fs.Path(s"$path.__pre")
-    require(!fs.exists(pre),
-      s"interrupted registry deletion: $pre still holds the previous " +
-        s"registry — restore it to $path (or delete it if the swap " +
-        "completed) before deleting again")
     val survivors = reg.join(
       broadcast(tombstones
         .select(Similarity.castTombstone(col(tCol),
@@ -1246,18 +1242,12 @@ object Dedup {
           "deleteFromHammingRegistry").as(idName))
         .distinct()),
       Seq(idName), "left_anti")
-    val next = s"$path.__next"
-    Bucketing.rewriteBucketedAt(survivors, s"${table}_next",
-      Seq("band", "bv"), numBuckets, next)
-    val schemaDdl = survivors.schema.toDDL
-    spark.sql(s"DROP TABLE IF EXISTS ${table}_next")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val live = new org.apache.hadoop.fs.Path(path)
-    require(fs.rename(live, pre), s"rename $path -> $pre failed")
-    require(fs.rename(new org.apache.hadoop.fs.Path(next), live),
-      s"rename $next -> $path failed ($pre holds the previous registry)")
-    fs.delete(pre, true)
-    Bucketing.registerBucketedAt(spark, table, schemaDdl,
+    graft.io.Publish.replace(fs, live) { next =>
+      Bucketing.rewriteBucketedAt(survivors, s"${table}_next",
+        Seq("band", "bv"), numBuckets, next.toString)
+      spark.sql(s"DROP TABLE IF EXISTS ${table}_next")
+    }
+    Bucketing.registerBucketedAt(spark, table, survivors.schema.toDDL,
       Seq("band", "bv"), numBuckets, path)
   }
 

@@ -7,9 +7,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
+import graft.io.Publish
 import graft.sources.S3AccessLog
 
 /** The reference's whole pipeline surface, Spark-first
@@ -17,7 +18,7 @@ import graft.sources.S3AccessLog
   *
   *   text scan → parse → project(27 cols, request_time at position 3) →
   *   repartition(numOutputFiles) → sortWithinPartitions(request_time) →
-  *   snappy parquet, overwrite.
+  *   snappy parquet, published over the day's previous output.
   *
   * Differences by design (SURVEY.md §3/§4): the scan is Spark's native
   * text file source — distributed listing, split planning by
@@ -37,8 +38,11 @@ import graft.sources.S3AccessLog
   *    (no global range exchange) — it exists to give Parquet row-group
   *    min/max stats selectivity on time (s3_server_access_logs.py:442,
   *    457-458), not to order output.
-  *  - `mode(overwrite)` per (bucket, date) destination keeps daily re-runs
-  *    and backfills idempotent (s3_server_access_logs.py:361-368,459).
+  *  - Each (bucket, date) destination is replaced whole through
+  *    [[graft.io.Publish]], which keeps daily re-runs and backfills
+  *    idempotent (the reference's overwrite, s3_server_access_logs.py:
+  *    361-368,459) and, unlike Spark's overwrite mode, keeps the
+  *    previous day readable when a re-run fails or crashes mid-write.
   *  - A backfill runs its (bucket, date) compactions concurrently on the
   *    one session (`runBackfill`), not one after another as the
   *    reference's loop does: one unit's listing, planning and commit
@@ -57,7 +61,7 @@ object LogEtl {
     * The reference README claims "VPC, S3, ALB" converters but ships
     * only S3 (README.md:11, converters/ has one subdir) — this registry
     * is the actual family abstraction: everything downstream of parse
-    * (repartition → sort → snappy parquet → overwrite) is shared.
+    * (repartition → sort → snappy parquet → publish) is shared.
     */
   final case class Format(parse: DataFrame => DataFrame, sortColumn: String)
 
@@ -94,7 +98,7 @@ object LogEtl {
     */
   def compact(spark: SparkSession, inputPath: String, dest: String,
               numOutputFiles: Int = 10, format: String = "s3"): Unit = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(inputPath)
+    val hadoopPath = new Path(inputPath)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hadoopPath)) {
       System.err.println(s"[log-etl] no input at $inputPath — skipping")
@@ -110,43 +114,23 @@ object LogEtl {
   }
 
   /** O12–O14: bounded file count, partition-local time sort, snappy
-    * parquet, idempotent overwrite (s3_server_access_logs.py:457-463).
+    * parquet (s3_server_access_logs.py:457-463), published over `dest`
+    * in one swap: the files are written beside it and replace the old
+    * ones only once every task has committed.
     */
   def write(parsed: DataFrame, dest: String, numOutputFiles: Int = 10,
-            sortColumn: String = "request_time"): Unit =
-    parsed
-      .repartition(numOutputFiles)
-      .sortWithinPartitions(sortColumn)
-      .write.mode("overwrite")
-      .option("compression", "snappy")
-      .parquet(dest)
-
-  /** Spark-native evolution of the reference's Hive layout option
-    * (s3_server_access_logs.py:445-454 only TEMPLATES `year=/month=/day=`
-    * into the destination path; `partitionBy()` is called with an empty
-    * list, s3_server_access_logs.py:443,459-461): here the date parts are
-    * real partition COLUMNS, so any engine reading the table gets
-    * partition pruning from predicates instead of path construction —
-    * one table root, no per-day path fan-out, dynamic overwrite keeps
-    * re-runs idempotent per partition.
-    */
-  def writeHivePartitioned(parsed: DataFrame, destRoot: String,
-                           filesPerDay: Int = 10): Unit =
-    parsed
-      .withColumn("year", org.apache.spark.sql.functions.year(col("request_time")))
-      .withColumn("month", org.apache.spark.sql.functions.month(col("request_time")))
-      .withColumn("day", org.apache.spark.sql.functions.dayofmonth(col("request_time")))
-      // salt within each day so a day spreads over up to filesPerDay
-      // files/tasks (hashing the date columns alone would funnel each
-      // day into a single writer)
-      .repartition(filesPerDay, col("year"), col("month"), col("day"),
-        pmod(xxhash64(col("request_id")), lit(filesPerDay)))
-      .sortWithinPartitions("request_time")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "snappy")
-      .partitionBy("year", "month", "day")
-      .parquet(destRoot)
+            sortColumn: String = "request_time"): Unit = {
+    val target = new Path(dest)
+    val fs = target.getFileSystem(parsed.sparkSession.sparkContext.hadoopConfiguration)
+    Publish.replace(fs, target) { staging =>
+      parsed
+        .repartition(numOutputFiles)
+        .sortWithinPartitions(sortColumn)
+        .write
+        .option("compression", "snappy")
+        .parquet(staging.toString)
+    }
+  }
 
   /** O15: run-date loop / backfill driver (s3_server_access_logs.py:353-376):
     * one compact per (bucket, date) for every date from `startDate` up to
@@ -157,11 +141,12 @@ object LogEtl {
     * session from a fixed driver-side pool of
     * `min(units, defaultParallelism)` threads; Spark's scheduler shares
     * the cores between their jobs. Bucket names must be non-blank and
-    * distinct, so no two units overwrite one destination.
+    * distinct, so no two units publish to one destination.
     *
     * Failure: after the first unit fails no queued unit starts; units
     * already running finish and keep their output, as do those that
-    * finished before. The first failure is then rethrown with the later
+    * finished before, and the failed unit's destination keeps its
+    * previous output. The first failure is then rethrown with the later
     * ones attached as suppressed exceptions. The pool is always shut
     * down before this returns or throws.
     */
@@ -208,7 +193,7 @@ object LogEtl {
 
   /** Backfill units are keyed by bucket name: a blank name would read
     * `<root>//yyyy/MM/dd`, and a repeated one would run two concurrent
-    * overwrites of one destination.
+    * publishes to one destination.
     */
   private[operators] def requireBucketNames(buckets: Seq[String]): Unit = {
     require(!buckets.exists(_.isBlank),

@@ -1899,8 +1899,8 @@ object PipelineQueries {
     // Registry COMPACTION — the maintenance op a long-running screen
     // needs: the registry accrues one partition per micro-batch
     // (listing cost ∝ batch count, content ∝ survivors);
-    // compactRegistry folds every batch partition into ONE (write-new +
-    // rename-swap, at-rest contract) with identical screening
+    // compactRegistry folds every batch partition into ONE (published
+    // over the registry, at-rest contract) with identical screening
     // semantics. Gate: the corpus enters as batch 0, compacts to a
     // single partition, and dd19's truth set must flag identically
     // against the compacted registry.
@@ -1957,7 +1957,7 @@ object PipelineQueries {
     // Registry DELETION — the right-to-be-forgotten arm dd21's fold
     // machinery was built to carry: deleteFromRegistry folds the banded
     // registry MINUS a tombstone id set (broadcast anti-join inside the
-    // same write-new/rename-swap), so a doc whose ONLY match was a
+    // same publish), so a doc whose ONLY match was a
     // deleted registry doc stops being flagged — dd19's planted-
     // re-crawl pattern INVERTED. Twenty synthetic docs (nonsense
     // tokens, zero shingle overlap with the corpus) register alongside
@@ -4871,7 +4871,7 @@ object PipelineQueries {
     // registry could not). Build the mm07 registry, tombstone every
     // even-id image (the asset owner's deletion request), rewrite in
     // place (broadcast anti-join on the bucketed scan, zero-exchange
-    // rewrite, crash-safe rename-swap), then screen the SAME clone
+    // rewrite, crash-safe publish), then screen the SAME clone
     // batch mm07 screens: a clone whose source was deleted must now
     // KEEP — its hash is out of storage, not just out of the result —
     // while survivors' clones still flag with the same best match.
@@ -4883,7 +4883,7 @@ object PipelineQueries {
         .mediaRegistryDeleteOracleSql(300, 100, 5000L, 3, 2L)) { (s, dir) =>
       val m = graft.multimodal.Multimodal
       val work = gateWork(s, "mm08", dir)
-      val reg = s"$work/reg" // __next/__pre siblings stay inside the tree
+      val reg = s"$work/reg" // publish siblings (.reg.next, ...) stay inside the tree
       val tbl = "graft_mm08_reg_" +
         work.substring(work.lastIndexOf('/') + 1)
           .replaceAll("[^A-Za-z0-9_]", "_")
@@ -5824,7 +5824,7 @@ object PipelineQueries {
     // row — worse than the probe path sim27 already guards), so the
     // log must be deleted from on the same cadence as the index.
     // deltaLogDeleteIds rewrites ONLY the batch directories holding a
-    // tombstoned id through a write-new/rename-swap: here batch 0
+    // tombstoned id, each through a crash-safe publish: here batch 0
     // (% 20 == 9) holds no tombstone and keeps its files byte-for-byte
     // while batch 1 (% 20 == 19) is fully tombstoned and keeps a
     // zero-row schema-bearing directory. Invariants: no deleted id
@@ -5889,8 +5889,8 @@ object PipelineQueries {
     // discipline applied to the vector lifecycle: ivfAbsorbLog loads
     // the persisted index, folds every landed batch in one bounded
     // delta pass (the quantizer never retrains, the corpus is never
-    // re-read), swaps the index directory write-new/rename-swap with
-    // fail-loud markers, and REMOVES the absorbed batch directories —
+    // re-read), publishes the new index directory over the old one,
+    // and REMOVES the absorbed batch directories —
     // afterwards the log's bytes are exactly the rows the index does
     // NOT hold, the disjointness invariant ivfSearchWithDelta serves
     // by. Invariants: both streamed batches absorbed, the log left

@@ -2,9 +2,11 @@ package graft.sources
 
 import java.time.LocalDate
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.io.Publish
 import graft.operators.LogEtl
 
 /** Reader for the compacted log table — the engine-side replacement for
@@ -21,7 +23,9 @@ import graft.operators.LogEtl
 object LogTable {
 
   /** Expand the date range to existing per-day directories (missing days
-    * are skipped — sparse history is normal for backfilled tables).
+    * are skipped — sparse history is normal for backfilled tables). A
+    * missing day whose compaction was interrupted mid-publish refuses
+    * instead: skipping it would silently drop a day that has output.
     */
   def dayPaths(spark: SparkSession, destRoot: String, bucketName: String,
                from: LocalDate, to: LocalDate,
@@ -29,10 +33,13 @@ object LogTable {
     val conf = spark.sparkContext.hadoopConfiguration
     Iterator.iterate(from)(_.plusDays(1))
       .takeWhile(!_.isAfter(to))
-      .map(d => LogEtl.destPath(destRoot, bucketName, d, hiveLayout))
-      .filter { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).exists(hp)
+      .flatMap { d =>
+        val p = new Path(LogEtl.destPath(destRoot, bucketName, d, hiveLayout))
+        val fs = p.getFileSystem(conf)
+        val present = fs.exists(p)
+        require(present || !Publish.pending(fs, p), s"day $d of $bucketName " +
+          s"is missing at $p mid-publish; re-run its compaction")
+        if (present) Some(p.toString) else None
       }
       .toSeq
   }

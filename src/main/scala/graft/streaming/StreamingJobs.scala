@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.io.Publish
+
 /** Structured Streaming counterparts of the batch operators: the same
   * event-stream semantics (hourly rollups, gap sessionization) expressed
   * over an unbounded source with watermarks for late data.
@@ -765,18 +767,25 @@ object StreamingJobs {
     if (!fs.rename(tmp, p)) sys.error(s"could not commit params file $p")
   }
 
-  private def readParamsFile(fs: FileSystem, p: Path): Map[String, String] = {
+  private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
-    val txt = try {
+    try {
       val b = new java.io.ByteArrayOutputStream()
       org.apache.hadoop.io.IOUtils.copyBytes(in, b, 4096, false)
       b.toString("UTF-8")
     } finally in.close()
-    txt.linesIterator.filter(_.contains("=")).map { l =>
+  }
+
+  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def readParamsFile(fs: FileSystem, p: Path): Map[String, String] =
+    readText(fs, p).linesIterator.filter(_.contains("=")).map { l =>
       val i = l.indexOf('=')
       l.substring(0, i) -> l.substring(i + 1)
     }.toMap
-  }
 
   /** Re-create the catalog entry for a surviving registry data
     * directory — the application-restart path: the parquet (and the
@@ -831,14 +840,11 @@ object StreamingJobs {
     // parquet and the params file don't — so liveness keys on the
     // filesystem, and a live registry whose catalog entry is gone gets
     // RE-REGISTERED, never wiped
-    // an interrupted [[compactRegistry]] leaves the previous registry
-    // under registry_precompact — proceeding as if the tree were fresh
-    // would WIPE the surviving history; fail loudly with the recovery
-    // path instead
-    require(!fs.exists(new Path(s"$workDir/registry_precompact")),
-      s"interrupted registry compaction under $workDir — restore " +
-        "registry_precompact/ to registry/ (or delete it if the swap " +
-        "completed) before resuming the stream")
+    // the screen is a registry WRITER, so it settles an interrupted
+    // [[compactRegistry]] swap itself; a finished swap changed the
+    // partitions under the catalog entry, which re-registers below
+    if (Publish.recover(fs, new Path(regDir)))
+      spark.sql(s"DROP TABLE IF EXISTS $regTable")
     val live = fs.exists(new Path(regDir))
     if (live) {
       // param contract (persisted at create, NEXT TO THE DATA): a
@@ -850,7 +856,7 @@ object StreamingJobs {
         s"near-dup registry $regDir has no params file $paramsPath — " +
           "refusing to guess its MinHash config. If the registry was " +
           "built by THIS layout (pre-banded, bucketed, params-file " +
-          "contract), restore or recreate the params file " +
+          "contract), recreate the params file " +
           "(k=v lines: shingleN/numHashes/bands/regBuckets/idCol); a " +
           "registry from the pre-banded era stores raw (id, sig) rows " +
           "and must be re-banded into this layout regardless — " +
@@ -987,11 +993,10 @@ object StreamingJobs {
     *    same verdicts; its retry hygiene deletes only batch=N, never
     *    the compacted partition.
     *
-    * A crash MID-compaction keeps the fail-loud posture: the swap
-    * leaves `registry_precompact`, the resumed stream refuses to run
-    * over it, and the recovery message names the fix — "online" means
-    * no intervention in the happy path, not silent self-repair of a
-    * half-swapped table.
+    * A crash MID-compaction needs no intervention either: the fold
+    * publishes through [[graft.io.Publish]], and the resumed stream's
+    * next batch settles the interrupted swap before it reads the
+    * registry.
     *
     * Cost gate: one partition-directory listing per batch (pure
     * namenode metadata), the rewrite itself exactly once per
@@ -1044,11 +1049,10 @@ object StreamingJobs {
     * of 5-minute batches is ~100k partitions of mostly-tiny files.
     * Rewrites every row into a single partition keyed by the highest
     * compacted batch id — `batch < N` pruning sees exactly the same
-    * survivor set afterwards — with one file per bucket, via a
-    * write-new / rename-swap (never in place: the registry stays
-    * readable until the swap, and a crash leaves marker directories
-    * that [[screenBatch]] refuses to run over, rather than a silently
-    * half-compacted table).
+    * survivor set afterwards — with one file per bucket, published over
+    * the registry through [[graft.io.Publish]] (never in place: the
+    * registry stays readable until the swap, and the next fold or
+    * screen settles a crash before touching it).
     *
     * CONTRACT: everything folded must be COMMITTED. Two callers
     * satisfy it: [[maybeCompactInStream]] (the ONLINE arm — inside
@@ -1082,7 +1086,7 @@ object StreamingJobs {
     * batch id; docs whose only match has aged out stop being flagged
     * deterministically at the fold — no tombstone bookkeeping, the age
     * IS the row's own provenance. Same at-rest/commit contract, same
-    * write-new/rename-swap, same bucketed layout as the plain fold.
+    * publish, same bucketed layout as the plain fold.
     * Pre-ingest_batch-era rows (NULL) fall back to their partition key
     * — exact for never-folded rows, conservative after a legacy fold.
     */
@@ -1095,8 +1099,8 @@ object StreamingJobs {
 
   /** Delete signatures from the near-dup registry by document id — the
     * right-to-be-forgotten / license-revocation arm: fold the banded
-    * registry MINUS the tombstoned ids through the same write-new /
-    * rename-swap machinery as [[compactRegistry]], preserving the
+    * registry MINUS the tombstoned ids through the same publish as
+    * [[compactRegistry]], preserving the
     * bucketed (band, bucket) layout, the params contract, and the
     * zero-registry-exchange screen plan. After the fold a screen no
     * longer flags batch docs whose only match was a deleted registry
@@ -1130,8 +1134,8 @@ object StreamingJobs {
     * with `transform` (given the table and its id column name) applied
     * to the rows on the way — identity for plain compaction, a
     * retention filter, or a tombstone anti-join. The at-rest/committed
-    * CONTRACT, the commit-log verification, the precompact fail-loud
-    * recovery, and the write-new/rename-swap live exactly once here.
+    * CONTRACT, the commit-log verification and the publish live exactly
+    * once here.
     */
   private def foldRegistry(spark: org.apache.spark.sql.SparkSession,
                            workDir: String, what: String,
@@ -1140,20 +1144,11 @@ object StreamingJobs {
     val regTable = registryTable(workDir)
     val fs = new Path(regDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (Publish.recover(fs, new Path(regDir)))
+      spark.sql(s"DROP TABLE IF EXISTS $regTable")
     require(fs.exists(new Path(regDir)), s"no registry at $regDir")
     val params = readParamsFile(fs, new Path(s"$workDir/registry_params"))
     val regBuckets = params("regBuckets").toInt
-    val compactDir = s"$workDir/registry_compacting"
-    val trashDir = s"$workDir/registry_precompact"
-    // leftovers of an earlier interrupted compaction are recoverable
-    // state, not garbage — refuse to proceed over them (screenBatch
-    // refuses too); a fresh attempt may clear a compacting dir that
-    // never swapped, but a precompact dir IS the previous registry
-    require(!fs.exists(new Path(trashDir)),
-      s"interrupted compaction: $trashDir still holds the previous " +
-        "registry — restore it to registry/ (or delete it if the swap " +
-        "completed) before compacting again")
-    fs.delete(new Path(compactDir), true)
     // id column name/type come from the data itself (first column of
     // the banded layout) — the one place they are always right. Read
     // from ONE leaf file: a full spark.read.parquet(regDir) listing
@@ -1183,37 +1178,26 @@ object StreamingJobs {
           "commit land (or discard ckpt/ to start a fresh query) before " +
           "compacting")
     val cTable = regTable + "_c"
-    spark.sql(s"DROP TABLE IF EXISTS $cTable")
-    // transform sees the table WITH its partition key (retention reads
-    // it as the legacy ingest fallback); the fold then re-keys every
-    // surviving row to the highest folded batch id
-    transform(spark.table(regTable), idColName).drop("batch")
-      .withColumn("batch", lit(maxBatch))
-      .repartition(regBuckets, col("band"), col("bucket"))
-      .write.mode("overwrite")
-      .option("path", compactDir)
-      .partitionBy("batch")
-      .bucketBy(regBuckets, "band", "bucket")
-      .sortBy("band", "bucket")
-      .format("parquet")
-      .saveAsTable(cTable)
-    // swap: old → trash, new → live, drop stale catalog entries, then
-    // re-register the live location and clear the trash
-    spark.sql(s"DROP TABLE IF EXISTS $cTable")
+    Publish.replace(fs, new Path(regDir)) { next =>
+      spark.sql(s"DROP TABLE IF EXISTS $cTable")
+      // transform sees the table WITH its partition key (retention
+      // reads it as the legacy ingest fallback); the fold then re-keys
+      // every surviving row to the highest folded batch id
+      transform(spark.table(regTable), idColName).drop("batch")
+        .withColumn("batch", lit(maxBatch))
+        .repartition(regBuckets, col("band"), col("bucket"))
+        .write.mode("overwrite")
+        .option("path", next.toString)
+        .partitionBy("batch")
+        .bucketBy(regBuckets, "band", "bucket")
+        .sortBy("band", "bucket")
+        .format("parquet")
+        .saveAsTable(cTable)
+      spark.sql(s"DROP TABLE IF EXISTS $cTable")
+    }
+    // the swap changed the partitions under the catalog entry
     spark.sql(s"DROP TABLE IF EXISTS $regTable")
-    if (!fs.rename(new Path(regDir), new Path(trashDir)))
-      sys.error(s"$what: could not move $regDir aside")
-    if (!fs.rename(new Path(compactDir), new Path(regDir)))
-      sys.error(s"$what: could not install $compactDir — " +
-        s"the previous registry is intact at $trashDir; restore it")
     registerRegistry(spark, regTable, regDir, idColName, idType, regBuckets)
-    // a failed trash delete must raise: silence would leave the
-    // completed compaction permanently locked out as "interrupted"
-    // (both the screen and a re-compaction refuse over the marker)
-    if (!fs.delete(new Path(trashDir), true))
-      sys.error(s"$what: swap COMPLETED but the superseded " +
-        s"registry at $trashDir could not be deleted — delete it " +
-        "manually to unblock the screen (the live registry is intact)")
   }
 
   /** The id field (name + type) of a banded registry, read from ONE
@@ -1263,59 +1247,64 @@ object StreamingJobs {
     * by any batch so far (batch key dropped — the log is a set of
     * appended rows; per-batch lineage lives in the directory layout).
     *
-    * Refuses to read over the maintenance markers
-    * (`delta_predelete` from an interrupted [[deltaLogDeleteIds]],
-    * `delta_absorbed` from an interrupted [[ivfAbsorbLog]] /
-    * [[ivfPqAbsorbLog]]): while either exists, rows are mid-move and a
-    * read would silently serve a log that resurrects deleted vectors
-    * or drops absorbed-but-not-yet-indexed ones — the screenBatch
-    * fail-loud posture, applied to the read path.
+    * Refuses to read while a maintenance entry is interrupted — a
+    * batch's [[deltaLogDeleteIds]] rewrite past its commit marker, or
+    * an [[ivfAbsorbLog]] / [[ivfPqAbsorbLog]] whose batches sit under
+    * `delta_absorbed`: rows are mid-move then, and a read would
+    * silently serve a log that resurrects deleted vectors or drops
+    * absorbed-but-not-yet-indexed ones. A read never settles anything
+    * itself (it may be racing the writer); the next maintenance entry
+    * over the work tree does.
     */
   def deltaLog(spark: org.apache.spark.sql.SparkSession,
                workDir: String): DataFrame = {
     val p = new Path(s"$workDir/delta")
-    requireNoDeltaMarkers(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      workDir, "deltaLog", clearEmpty = false)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stuck = Publish.leftovers(fs, p).filter(Publish.pending(fs, _)) ++
+      Some(new Path(s"$workDir/delta_absorbed")).filter(fs.exists)
+    require(stuck.isEmpty, s"deltaLog: interrupted maintenance left " +
+      s"${stuck.mkString(", ")} mid-move; the next deltaLogDeleteIds, " +
+      "ivfAbsorbLog or ivfPqAbsorbLog over this work tree settles it")
     spark.read.parquet(p.toString).drop("batch")
   }
 
-  /** Fail loudly when a delta-log maintenance marker is present — the
-    * shared refusal behind [[deltaLog]], [[deltaLogDeleteIds]] and the
-    * absorb arms. Each message names the marker AND the recovery. An
-    * EMPTY marker directory is the residue of a move that moved
-    * nothing (the mkdirs ran, the first rename failed): it provably
-    * holds nothing to restore, so it never refuses — and MAINTENANCE
-    * entries (`clearEmpty`) additionally delete it. The READ path must
-    * NOT delete: a concurrent read racing a maintenance writer between
-    * its mkdirs and its first rename would otherwise rip the freshly
-    * created marker out from under the in-flight operation (reads may
-    * legitimately race maintenance — refusal is their only side
-    * effect).
+  /** Settle what an interrupted maintenance entry left in the delta
+    * log, before the next one reads it: each batch's interrupted
+    * rewrite finishes or rolls back ([[Publish.recover]]), and an
+    * interrupted absorb's parked batches are dropped when the live
+    * index lists them in its `_absorbed_batches` manifest (its swap
+    * happened) or moved back to delta/ when it does not.
     */
-  private def requireNoDeltaMarkers(fs: FileSystem, workDir: String,
-                                    what: String,
-                                    clearEmpty: Boolean): Unit = {
-    def holdsState(p: Path): Boolean =
-      fs.exists(p) && {
-        if (fs.listStatus(p).nonEmpty) true
-        else { if (clearEmpty) fs.delete(p, true); false }
+  private def settleDelta(spark: org.apache.spark.sql.SparkSession,
+                          workDir: String): Unit = {
+    val deltaDir = new Path(s"$workDir/delta")
+    val fs = deltaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Publish.leftovers(fs, deltaDir).foreach(Publish.recover(fs, _))
+    // an absorb parks the batches it folds here until its index swap
+    // is done; `_index` inside names that index
+    val parked = new Path(s"$workDir/delta_absorbed")
+    if (!fs.exists(parked)) return
+    val record = new Path(parked, "_index")
+    val indexed: Set[String] = if (!fs.exists(record)) Set.empty else {
+      val index = new Path(readText(fs, record))
+      val ifs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Publish.recover(ifs, index)
+      val manifest = new Path(index, "_absorbed_batches")
+      if (!ifs.exists(manifest)) Set.empty
+      else readText(ifs, manifest).linesIterator.map("batch=" + _).toSet
+    }
+    fs.listStatus(parked).map(_.getPath)
+      .filter(b => b.getName.startsWith("batch=") && !indexed(b.getName))
+      .foreach { b =>
+        val back = new Path(deltaDir, b.getName)
+        // the zero-row placeholder the absorb wrote may hold this id
+        if (fs.exists(back) && !fs.delete(back, true))
+          throw new java.io.IOException(s"could not delete $back")
+        if (!fs.rename(b, back))
+          throw new java.io.IOException(s"could not move $b back to $back")
       }
-    require(!holdsState(new Path(s"$workDir/delta_predelete")),
-      s"$what: interrupted deletion — $workDir/delta_predelete still " +
-        "holds pre-delete batch directories; if the rewritten batch is " +
-        "installed under delta/ delete the marker, otherwise restore " +
-        "its contents to delta/ before reading or deleting again")
-    require(!holdsState(new Path(s"$workDir/delta_absorbed")),
-      s"$what: interrupted absorption — $workDir/delta_absorbed still " +
-        "holds absorbed batch directories; if the index swap completed " +
-        "(the live index directory lists these batches in " +
-        "_absorbed_batches) delete the marker; if the index directory " +
-        "is MISSING, restore it from its *_preabsorb sibling first; " +
-        "otherwise restore the marker's contents to delta/ (replacing " +
-        "the zero-row placeholder directory if one shares a batch id) " +
-        "and delete the _absorbing index directory before reading or " +
-        "absorbing again")
+    if (!fs.delete(parked, true))
+      throw new java.io.IOException(s"could not delete $parked")
   }
 
   /** Delete vectors from the streaming append log by id — the
@@ -1331,10 +1320,10 @@ object StreamingJobs {
     *
     * Rewrites ONLY the batch directories that actually hold a
     * tombstoned id (one metadata-sized pass finds them — ≤ one row per
-    * log batch, the [[cdcDeleteKeys]] bound), each through a
-    * write-new / rename-swap: never in place, so a crash leaves
-    * `delta_predelete` marker state that [[deltaLog]] and every
-    * maintenance entry refuse to run over (with the fix named), not a
+    * log batch, the [[cdcDeleteKeys]] bound), each published over its
+    * batch through [[graft.io.Publish]]: never in place, so a crash
+    * leaves each batch old or new — [[deltaLog]] refuses while one is
+    * mid-swap and the next maintenance entry settles it — never a
     * silently half-deleted batch. Untouched batch directories keep
     * their files byte-for-byte; a fully-tombstoned batch keeps a
     * zero-row schema-bearing directory so the log stays readable.
@@ -1353,8 +1342,7 @@ object StreamingJobs {
     val deltaDir = s"$workDir/delta"
     val fs = new Path(deltaDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoDeltaMarkers(fs, workDir, "deltaLogDeleteIds",
-      clearEmpty = true)
+    settleDelta(spark, workDir)
     // an absent log, or one with zero batch directories (everything
     // absorbed), holds nothing to delete — and a parquet read over the
     // empty directory could not even infer a schema
@@ -1382,30 +1370,12 @@ object StreamingJobs {
           "the stream to let the commit land (or discard ckpt/ to " +
           "start a fresh query) before deleting")
     }
-    val preRoot = new Path(s"$workDir/delta_predelete")
     touched.foreach { b =>
-      val live = new Path(s"$deltaDir/batch=$b")
-      val next = new Path(s"$workDir/delta_deleting/batch=$b")
-      fs.delete(next, true) // pre-swap leftover of an earlier attempt
-      deltaBatchSurvivors(spark, live.toString, tomb, idCol)
-        .write.mode("overwrite").parquet(next.toString)
-      fs.mkdirs(preRoot)
-      val pre = new Path(preRoot, s"batch=$b")
-      if (!fs.rename(live, pre))
-        sys.error(s"deltaLogDeleteIds: could not move $live aside")
-      if (!fs.rename(next, live))
-        sys.error(s"deltaLogDeleteIds: could not install $next — the " +
-          s"pre-delete batch is intact at $pre; restore it to delta/")
-      // a failed marker delete must raise: the completed batch would
-      // otherwise permanently lock out the log (reads refuse over it)
-      if (!fs.delete(pre, true))
-        sys.error(s"deltaLogDeleteIds: batch $b rewritten but the " +
-          s"superseded directory at $pre could not be deleted — " +
-          "delete it manually to unblock the log")
+      val live = s"$deltaDir/batch=$b"
+      Publish.replace(fs, new Path(live)) { next =>
+        deltaBatchSurvivors(spark, live, tomb, idCol).write.parquet(next.toString)
+      }
     }
-    if (fs.exists(preRoot) && fs.listStatus(preRoot).isEmpty)
-      fs.delete(preRoot, true)
-    fs.delete(new Path(s"$workDir/delta_deleting"), true)
     touched
   }
 
@@ -1427,9 +1397,9 @@ object StreamingJobs {
     * turning the st11 contract's prose ("absorb empties the log") into
     * an operator, exactly as dd21 did for the registry's "compact
     * eventually". One bounded pass over the DELTA (the quantizer never
-    * retrains, the indexed corpus is never re-read), then a
-    * write-new / rename-swap of the index directory and removal of the
-    * absorbed `delta/batch=N` directories, so the log's remaining
+    * retrains, the indexed corpus is never re-read), then a publish
+    * of the new index over the old one and removal of the absorbed
+    * `delta/batch=N` directories, so the log's remaining
     * bytes are exactly the rows the index does NOT yet hold — the
     * disjointness invariant `ivfSearchWithDelta` serves by. Returns
     * the absorbed batch ids (empty when the log held nothing).
@@ -1442,12 +1412,12 @@ object StreamingJobs {
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): Seq[Long] =
     absorbLogCore(spark, indexPath, workDir, "ivfAbsorbLog") {
-      (delta, absorbing) =>
+      (delta, staging) =>
         graft.operators.Similarity.ivfAbsorbDelta(
             graft.operators.Similarity.ivfLoad(spark, indexPath), delta,
             twoLevelAssign, candidateGroups, twoLevelAutoNlist,
             idCol, vecCol)
-          .save(absorbing)
+          .save(staging)
     }
 
   /** [[ivfAbsorbLog]] on the production architecture: the log's rows
@@ -1465,35 +1435,28 @@ object StreamingJobs {
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): Seq[Long] =
     absorbLogCore(spark, indexPath, workDir, "ivfPqAbsorbLog") {
-      (delta, absorbing) =>
+      (delta, staging) =>
         graft.operators.Similarity.ivfPqAbsorbDelta(
             graft.operators.Similarity.ivfPqLoad(spark, indexPath), delta,
             m, twoLevelAssign, twoLevelAutoNlist, idCol, vecCol)
-          .save(absorbing)
+          .save(staging)
     }
 
   /** The ONE absorb-and-GC core behind [[ivfAbsorbLog]] and
     * [[ivfPqAbsorbLog]] — `absorbTo` reads the live index itself and
     * writes the absorbed one to the staging path it is given; the
-    * marker discipline, the committed check, the swap, and the log GC
-    * live exactly once here (the foldRegistry shape).
+    * committed check, the publish, and the log GC live exactly once
+    * here (the foldRegistry shape).
     *
-    * Crash anatomy, fail-loud at every window (never self-repair of a
-    * half-swapped state):
-    *  - before the batch-dir moves: only `_absorbing` staging exists —
-    *    garbage a fresh attempt clears;
-    *  - after moves, before the index swap: `delta_absorbed` holds the
-    *    moved batches (the zero-row placeholder lands right after the
-    *    moves, so every later window's recovery ends with a READABLE
-    *    log); reads and maintenance refuse over the marker, and the
-    *    recovery (restore to delta/ — replacing the placeholder where
-    *    the batch id collides — drop staging) is in the message;
-    *  - between the two index renames: `_preabsorb` additionally holds
-    *    the previous index — refused (the preabsorb message, checked
-    *    first, carries this window's full recovery);
-    *  - after the swap: `_absorbed_batches` inside the live index
-    *    proves completion — the fix is carrying any sibling artifacts
-    *    (cellstats) out of `_preabsorb`, then deleting the leftovers.
+    * Crash safety: the new index, with its `_absorbed_batches`
+    * manifest inside, is staged by [[graft.io.Publish]]; still inside
+    * the stage the absorbed batches move from delta/ to
+    * `delta_absorbed` (which records the index path) and the
+    * placeholder below lands. [[deltaLog]] refuses while
+    * `delta_absorbed` exists, and the next maintenance entry settles it
+    * from the live index's manifest: interrupted before the commit
+    * marker, the old index stays and the batches go back to delta/;
+    * from the marker on, the swap finishes and the batches go.
     *
     * The emptied log keeps one zero-row schema-bearing placeholder
     * directory (keyed by the highest absorbed batch id), so
@@ -1514,23 +1477,10 @@ object StreamingJobs {
     val deltaDir = s"$workDir/delta"
     val fs = new Path(deltaDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // preabsorb is checked FIRST: after a crash between the two index
-    // renames BOTH it and delta_absorbed exist, and this is the message
-    // with the complete recovery (the marker check's would be shown
-    // instead and its happy-path branches don't apply to that window)
-    val preAbs = new Path(s"${indexPath}_preabsorb")
-    require(!fs.exists(preAbs),
-      s"$what: interrupted absorption — $preAbs still holds the " +
-        s"previous index; if $indexPath/_absorbed_batches exists the " +
-        s"swap completed (move any extra artifacts such as cellstats " +
-        s"from $preAbs into $indexPath, then delete $preAbs and " +
-        s"$workDir/delta_absorbed), otherwise restore $preAbs to " +
-        s"$indexPath and the $workDir/delta_absorbed batches to " +
-        "delta/ before absorbing again")
-    requireNoDeltaMarkers(fs, workDir, what, clearEmpty = true)
-    require(fs.exists(new Path(indexPath)),
-      s"no index at $indexPath (if ${indexPath}_preabsorb exists, " +
-        "restore it there first)")
+    settleDelta(spark, workDir)
+    val index = new Path(indexPath)
+    val ifs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(ifs.exists(index), s"no index at $indexPath")
     if (!fs.exists(new Path(deltaDir))) return Nil // no log yet: no-op
     val batches = fs.listStatus(new Path(deltaDir)).iterator
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
@@ -1552,65 +1502,42 @@ object StreamingJobs {
     // rewrite of the whole index for zero rows would be all cost and
     // no state change. One limit-1 read, never a full delta pass.
     if (delta.isEmpty) return Nil
-    val absorbing = s"${indexPath}_absorbing"
-    fs.delete(new Path(absorbing), true) // pre-swap leftover: garbage
-    absorbTo(delta, absorbing)
-    // the manifest rides INSIDE the new index directory BEFORE any
-    // rename: it is what makes every later window's recovery decidable
-    val mf = fs.create(new Path(s"$absorbing/_absorbed_batches"), true)
-    try mf.write(batches.mkString("\n").getBytes("UTF-8"))
-    finally mf.close()
-    val absRoot = new Path(s"$workDir/delta_absorbed")
-    fs.mkdirs(absRoot)
-    batches.foreach { b =>
-      if (!fs.rename(new Path(s"$deltaDir/batch=$b"),
-          new Path(absRoot, s"batch=$b")))
-        sys.error(s"$what: could not move $deltaDir/batch=$b aside — " +
-          s"restore any batches already under $absRoot to delta/ and " +
-          "retry")
+    val parked = new Path(s"$workDir/delta_absorbed")
+    Publish.replace(ifs, index) { staging =>
+      absorbTo(delta, staging.toString)
+      // the manifest rides INSIDE the new index: it is what settles
+      // an interrupted absorb (see settleDelta)
+      writeText(ifs, new Path(staging, "_absorbed_batches"),
+        batches.mkString("\n"))
+      // sibling artifacts the save functions don't know about (e.g.
+      // the cellstats drift baseline, which must KEEP describing the
+      // BUILD's expectation — ivfDriftCheck prices drift against the
+      // build, not against the absorbed state) carry over
+      ifs.listStatus(index).map(_.getPath)
+        .filterNot(a => ifs.exists(new Path(staging, a.getName)))
+        .foreach(a => require(org.apache.hadoop.fs.FileUtil.copy(ifs, a, ifs,
+          new Path(staging, a.getName), false, ifs.getConf),
+          s"$what: could not carry $a into the new index"))
+      writeText(fs, new Path(parked, "_index"), index.toString)
+      batches.foreach { b =>
+        if (!fs.rename(new Path(s"$deltaDir/batch=$b"),
+            new Path(parked, s"batch=$b")))
+          throw new java.io.IOException(
+            s"$what: could not move $deltaDir/batch=$b to $parked")
+      }
+      // the zero-row schema-bearing placeholder (keyed by the highest
+      // absorbed batch — committed, so a resumed stream never collides
+      // with it) keeps deltaLog readable between an absorb and the
+      // next append, exactly the guarantee the delete path's
+      // fully-tombstoned rewrite provides. Built from the schema,
+      // never the (already-moved) batch paths.
+      spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), delta.schema)
+        .write.mode("overwrite")
+        .parquet(s"$deltaDir/batch=${batches.max}")
     }
-    // the zero-row schema-bearing placeholder lands IMMEDIATELY after
-    // the moves (keyed by the highest absorbed batch — committed, so a
-    // resumed stream never collides with it): from here on EVERY crash
-    // window leaves a log that reads fine once the markers are cleared
-    // — deltaLog stays readable between an absorb and the next append,
-    // exactly the guarantee the delete path's fully-tombstoned rewrite
-    // provides. Built from the schema, never the (already-moved) batch
-    // paths.
-    spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), delta.schema)
-      .write.mode("overwrite")
-      .parquet(s"$deltaDir/batch=${batches.max}")
-    if (!fs.rename(new Path(indexPath), preAbs))
-      sys.error(s"$what: could not move $indexPath aside — the log " +
-        s"batches are under $absRoot; restore them to delta/ and drop " +
-        s"$absorbing to retry")
-    if (!fs.rename(new Path(absorbing), new Path(indexPath)))
-      sys.error(s"$what: could not install $absorbing — the previous " +
-        s"index is intact at $preAbs; restore it to $indexPath and the " +
-        s"$absRoot batches to delta/")
-    // sibling artifacts the save functions don't know about (e.g. the
-    // cellstats drift baseline, which must KEEP describing the BUILD's
-    // expectation — ivfDriftCheck prices drift against the build, not
-    // against the absorbed state) carry over into the installed index
-    // before the superseded directory is dropped
-    fs.listStatus(preAbs).foreach { st =>
-      val dest = new Path(indexPath, st.getPath.getName)
-      if (!fs.exists(dest) && !fs.rename(st.getPath, dest))
-        sys.error(s"$what: swap COMPLETED but the sibling artifact " +
-          s"${st.getPath.getName} could not be carried from $preAbs " +
-          s"into $indexPath — move it manually, then delete $preAbs " +
-          s"and $absRoot")
-    }
-    // swap complete: the two leftovers are superseded data — a failed
-    // delete must raise (reads stay locked out over delta_absorbed)
-    if (!fs.delete(preAbs, true))
-      sys.error(s"$what: swap COMPLETED but the superseded index at " +
-        s"$preAbs could not be deleted — delete it manually")
-    if (!fs.delete(absRoot, true))
-      sys.error(s"$what: swap COMPLETED but the absorbed batches at " +
-        s"$absRoot could not be deleted — delete them manually to " +
-        "unblock the log")
+    if (!fs.delete(parked, true))
+      throw new java.io.IOException(s"$what: could not delete $parked")
     batches
   }
 

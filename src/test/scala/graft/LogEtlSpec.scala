@@ -132,6 +132,9 @@ class LogEtlSpec extends AnyFunSuite {
     }
   }
 
+  def dayRows(dir: String): Seq[String] =
+    spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+
   def parquetFiles(dir: String): Seq[java.io.File] =
     Option(new java.io.File(dir).listFiles).toSeq.flatten
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -173,19 +176,41 @@ class LogEtlSpec extends AnyFunSuite {
     val in = tmpDir(); val out = tmpDir()
     val buckets = Seq("b1", "b2")
     for (b <- buckets; d <- days.tail) writeDay(in, b, d, 60)
-    // a regular file where (b2, 2024-08-01)'s parent directory belongs;
-    // one at the destination itself would just be overwritten
-    Files.createDirectories(Paths.get(out, "b2", "2024"))
-    Files.write(Paths.get(out, "b2", "2024", "08"), "not a directory".getBytes)
+    LogEtl.runBackfill(spark, in, out, buckets, days(1), days(2), numOutputFiles = 2)
+    val failing = LogEtl.destPath(out, "b2", days(2), hiveLayout = false)
+    val before = (dayRows(failing), parquetFiles(failing).map(_.getName))
+    // the re-run's (b2, 2024-08-01) unit fails in its write tasks
+    FaultyFs.failNth("create", "/b2/2024/08/\\.01\\.next/.*part-")
     intercept[Exception] {
-      LogEtl.runBackfill(spark, in, out, buckets, days(1), days(2), numOutputFiles = 2)
+      LogEtl.runBackfill(spark, in, FaultyFs.uri(out), buckets, days(1), days(2),
+        numOutputFiles = 2)
     }
+    assert(!FaultyFs.reset(), "the fault never fired")
     for ((b, d) <- Seq("b1" -> days(1), "b2" -> days(1), "b1" -> days(2)))
       assert(spark.read.parquet(
         LogEtl.destPath(out, b, d, hiveLayout = false)).count() == 63)
+    assert((dayRows(failing), parquetFiles(failing).map(_.getName)) == before,
+      "the failed unit lost its previous output")
     val alive = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
       .filter(t => t.isAlive && t.getName.startsWith("log-etl-backfill"))
     assert(alive.isEmpty, alive.map(_.getName).mkString(", "))
+  }
+
+  test("a re-run that fails in its write tasks keeps the previous day: same rows, same files") {
+    val in = tmpDir(); val out = tmpDir()
+    writeDay(in, "b1", days.head, 60)
+    val raw = s"$in/b1/2024/07/30"
+    val day = LogEtl.destPath(out, "b1", days.head, hiveLayout = false)
+    LogEtl.compact(spark, raw, day, numOutputFiles = 2)
+    val before = (dayRows(day), parquetFiles(day).map(_.getName))
+    assert(before._1.size == 63)
+    // the first part-file create under the day, wherever the write puts it
+    FaultyFs.failNth("create", "/2024/07/\\.?30[^/]*/.*part-")
+    intercept[Exception] {
+      LogEtl.compact(spark, raw, FaultyFs.uri(day), numOutputFiles = 2)
+    }
+    assert(!FaultyFs.reset(), "the fault never fired")
+    assert((dayRows(day), parquetFiles(day).map(_.getName)) == before)
   }
 
   test("runBackfill and --buckets reject blank or duplicate bucket names") {

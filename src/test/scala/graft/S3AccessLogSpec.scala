@@ -11,6 +11,10 @@ object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.builder(cpus = 4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    // the fault-injecting file system (FaultyFs), uncached so no
+    // instance outlives a test's fault
+    .config("spark.hadoop.fs.faulty.impl", classOf[FaultyFs].getName)
+    .config("spark.hadoop.fs.faulty.impl.disable.cache", "true")
     .getOrCreate()
 }
 

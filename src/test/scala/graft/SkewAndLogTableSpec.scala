@@ -88,6 +88,40 @@ class SkewAndLogTableSpec extends AnyFunSuite {
     }
   }
 
+  test("LogTable.read refuses a day missing mid-publish, still skips a plain missing day") {
+    val inRoot = Files.createTempDirectory("graft-lt-in").toString
+    val outRoot = Files.createTempDirectory("graft-lt-out").toString
+    for (day <- Seq(1, 2, 4)) {
+      val dir = s"$inRoot/b1/2024/07/0$day"
+      Files.createDirectories(java.nio.file.Paths.get(dir))
+      Files.write(java.nio.file.Paths.get(s"$dir/f.log"), (0 until 20).map(i =>
+        S3AccessLog.renderLine(RenderFixtures.baseFields
+          .updated("time", f"[0$day/Jul/2024:${i % 24}%02d:00:00 +0000]")
+          .updated("reqid", s"D$day-R$i"))).mkString("\n").getBytes)
+    }
+    LogEtl.runBackfill(spark, inRoot, outRoot, Seq("b1"),
+      LocalDate.of(2024, 7, 1), LocalDate.of(2024, 7, 4), numOutputFiles = 1)
+    // a re-run of July 2 dies between moving the old day aside and
+    // renaming the new one in: the day is missing, its publish pending
+    val day2 = LogEtl.destPath(outRoot, "b1", LocalDate.of(2024, 7, 2), hiveLayout = false)
+    FaultyFs.failNth("rename", "/\\.02\\.next -> ")
+    intercept[java.io.IOException] {
+      LogEtl.compact(spark, s"$inRoot/b1/2024/07/02", FaultyFs.uri(day2), numOutputFiles = 1)
+    }
+    assert(!FaultyFs.reset(), "the fault never fired")
+    val e = intercept[IllegalArgumentException] {
+      LogTable.read(spark, outRoot, "b1", LocalDate.of(2024, 7, 1), LocalDate.of(2024, 7, 4))
+    }
+    assert(e.getMessage.contains("2024-07-02") &&
+      e.getMessage.contains("re-run its compaction"), e.getMessage)
+    // July 3 never had output: skipped as before
+    assert(LogTable.read(spark, outRoot, "b1",
+      LocalDate.of(2024, 7, 3), LocalDate.of(2024, 7, 4)).count() == 20)
+    LogEtl.compact(spark, s"$inRoot/b1/2024/07/02", day2, numOutputFiles = 1)
+    assert(LogTable.read(spark, outRoot, "b1",
+      LocalDate.of(2024, 7, 1), LocalDate.of(2024, 7, 4)).count() == 60)
+  }
+
   test("LogTable.ddl emits the published Athena contract from the schema") {
     val ddl = LogTable.ddl("logs-example",
       "s3://dest/processed/acct/us-east-1/logs-example/")

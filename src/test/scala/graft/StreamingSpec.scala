@@ -860,31 +860,41 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(e1.getMessage.contains("has not committed"), e1.getMessage)
     fs.delete(new org.apache.hadoop.fs.Path(s"$work/delta/batch=9"), true)
-    // an interrupted-deletion marker blocks BOTH the read path and a
-    // fresh delete, with the recovery named
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$work/delta_predelete/batch=0"))
+    // a deletion that dies between moving batch 0 aside and renaming
+    // its rewrite in blocks the read path, naming the batch, and the
+    // next deletion settles it before doing its own work
+    FaultyFs.failNth("rename", "/\\.batch=0\\.next -> ")
+    intercept[java.io.IOException] {
+      StreamingJobs.deltaLogDeleteIds(spark, FaultyFs.uri(work),
+        Seq(1L).toDF("vec_id"))
+    }
+    assert(!FaultyFs.reset(), "the fault never fired")
     val e2 = intercept[IllegalArgumentException] {
       StreamingJobs.deltaLog(spark, work)
     }
-    assert(e2.getMessage.contains("delta_predelete"), e2.getMessage)
-    intercept[IllegalArgumentException] {
-      StreamingJobs.deltaLogDeleteIds(spark, work, Seq(1L).toDF("vec_id"))
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$work/delta_predelete"), true)
-    // an EMPTY marker (a failed move that moved nothing) never
-    // refuses — it provably holds nothing to restore. The READ path
-    // tolerates it WITHOUT mutating (a read racing a maintenance
-    // writer between its mkdirs and first rename must not rip the
-    // fresh marker out from under it); the next MAINTENANCE entry
-    // clears it
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$work/delta_predelete"))
-    assert(StreamingJobs.deltaLog(spark, work).count() == 2)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$work/delta_predelete")),
-      "read path mutated the marker")
+    assert(e2.getMessage.contains("batch=0"), e2.getMessage)
     assert(StreamingJobs.deltaLogDeleteIds(spark, work,
       Seq(99L).toDF("vec_id")).isEmpty)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$work/delta_predelete")),
-      "maintenance entry left the empty marker")
+    assert(StreamingJobs.deltaLog(spark, work)
+      .select("vec_id").as[Long].collect().toSet == Set(2L))
+    // a deletion that dies in its write tasks, before its commit
+    // marker, leaves the batch as it was: the read path serves it
+    // without touching the staged leftovers, which the next
+    // maintenance entry clears
+    val delta = new org.apache.hadoop.fs.Path(s"$work/delta")
+    FaultyFs.failNth("create", "/\\.batch=0\\.next/.*part-")
+    intercept[Exception] {
+      StreamingJobs.deltaLogDeleteIds(spark, FaultyFs.uri(work),
+        Seq(2L).toDF("vec_id"))
+    }
+    assert(!FaultyFs.reset(), "the fault never fired")
+    assert(StreamingJobs.deltaLog(spark, work).count() == 1)
+    assert(graft.io.Publish.leftovers(fs, delta).nonEmpty,
+      "read path mutated the staged leftovers")
+    assert(StreamingJobs.deltaLogDeleteIds(spark, work,
+      Seq(99L).toDF("vec_id")).isEmpty)
+    assert(graft.io.Publish.leftovers(fs, delta).isEmpty,
+      "maintenance entry left the staged leftovers")
   }
 
   test("delta-log absorption: index swap + log GC equals the in-memory absorb, rerun no-ops, leftovers refuse") {
@@ -944,20 +954,30 @@ class StreamingSpec extends AnyFunSuite {
     assert(onDisk == ref, s"on-disk=$onDisk vs in-memory=$ref")
     // a second absorb over the emptied log is a no-op
     assert(StreamingJobs.ivfAbsorbLog(spark, s"$work/idx", work).isEmpty)
-    // an interrupted-swap leftover refuses with the recovery named
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$work/idx_preabsorb"))
-    val e1 = intercept[IllegalArgumentException] {
-      StreamingJobs.ivfAbsorbLog(spark, s"$work/idx", work)
+    // an absorb that dies between moving the old index aside and
+    // renaming the new one in: the log refuses reads while its batches
+    // are parked, and the next absorb finishes the swap on its own
+    Seq((103L, Array.tabulate(8)(j => (j * 3).toFloat)))
+      .toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$work/delta/batch=2")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$work/ckpt/commits/2"))
+    FaultyFs.failNth("rename", "/\\.idx\\.next -> ")
+    intercept[java.io.IOException] {
+      StreamingJobs.ivfAbsorbLog(spark, FaultyFs.uri(s"$work/idx"),
+        FaultyFs.uri(work))
     }
-    assert(e1.getMessage.contains("_absorbed_batches"), e1.getMessage)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$work/idx_preabsorb"), true)
-    // the absorbed-batches marker blocks the read path too
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$work/delta_absorbed/batch=0"))
+    assert(!FaultyFs.reset(), "the fault never fired")
     val e2 = intercept[IllegalArgumentException] {
       StreamingJobs.deltaLog(spark, work)
     }
     assert(e2.getMessage.contains("delta_absorbed"), e2.getMessage)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$work/delta_absorbed"), true)
+    assert(StreamingJobs.ivfAbsorbLog(spark, s"$work/idx", work).isEmpty)
+    assert(StreamingJobs.deltaLog(spark, work).isEmpty)
+    assert(graft.operators.Similarity.ivfLoad(spark, s"$work/idx").cells
+      .filter($"cid" === 103L).count() == 1, "the settled swap lost vector 103")
+    assert(graft.operators.Similarity
+      .ivfLoadStats(spark, s"$work/idx").collect().toSet == statsBefore)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$work/delta_absorbed")))
     // an UNCOMMITTED newest batch refuses the absorb (a resumed stream
     // would replay it and re-append rows the index now holds)
     Seq((102L, Array.tabulate(8)(_.toFloat)))
@@ -1036,7 +1056,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
-  test("registry compaction: one partition, verdicts preserved, interrupted swap blocks everything") {
+  test("registry compaction: one partition, verdicts preserved, an interrupted swap settles on the next screen") {
     import spark.implicits._
     val work = java.nio.file.Files.createTempDirectory("st10-compact").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"),
@@ -1074,20 +1094,25 @@ class StreamingSpec extends AnyFunSuite {
     java.nio.file.Files.createFile(
       java.nio.file.Paths.get(s"$work/ckpt/commits/2"))
     StreamingJobs.compactRegistry(spark, work) // committed → allowed
-    // an interrupted swap (precompact marker) must block the screen AND
-    // a re-compaction — proceeding would wipe or double the history
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$work/registry_precompact"))
-    val e1 = intercept[IllegalArgumentException] {
-      StreamingJobs.screenBatch(b2, 3L, work, "doc_id", "text", 3, 32, 8,
-        0.7, 4)
+    // a compaction that dies between moving the registry aside and
+    // renaming the folded one in leaves no registry dir; the next
+    // screen settles the swap before reading, so it screens against
+    // the whole history (every b2 doc now has a registry match)
+    FaultyFs.failNth("rename", "/\\.registry\\.next -> ")
+    intercept[java.io.IOException] {
+      StreamingJobs.compactRegistry(spark, FaultyFs.uri(work))
     }
-    assert(e1.getMessage.contains("interrupted"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      StreamingJobs.compactRegistry(spark, work)
-    }
-    assert(e2.getMessage.contains("interrupted"), e2.getMessage)
+    assert(!FaultyFs.reset(), "the fault never fired")
+    assert(!new java.io.File(s"$work/registry").exists())
+    StreamingJobs.screenBatch(b2, 3L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    val v3 = spark.read.parquet(s"$work/verdicts/batch=3").orderBy("doc_id")
+      .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
+    assert(v3 == Seq((11L, false), (13L, false), (15L, false)), v3.toString)
+    assert(new java.io.File(work).list()
+      .forall(!_.matches("\\.registry\\.(next|prev|commit)")))
     spark.sql(s"DROP TABLE IF EXISTS ${StreamingJobs.registryTable(work)}")
+    spark.sql("DROP TABLE IF EXISTS " +
+      StreamingJobs.registryTable(FaultyFs.uri(work)))
   }
 
   test("registry deletion: tombstoned signatures stop flagging, layout and history survive") {
