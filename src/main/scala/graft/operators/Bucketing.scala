@@ -13,30 +13,19 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Bucketing {
 
-  /** Persist `df` as a bucketed, bucket-sorted managed parquet table.
+  /** Persist `df` as a bucketed, bucket-sorted EXTERNAL parquet table
+    * rooted at `path` — never in the session's default warehouse
+    * directory (the gate's Verify runs with whatever cwd the driver
+    * chose).
     *
     * The pre-write `repartition` on the bucket key uses the SAME hash
     * (pmod(murmur3, n)) as bucket assignment, so every task holds
     * exactly one bucket and writes exactly one file — the invariant
     * that makes `spark.sql.legacy.bucketedTableScan.outputOrdering`
     * safe to enable (a multi-file bucket is only partially sorted, and
-    * claiming order over it would corrupt merge joins).
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    numBuckets: Int): Unit =
-    df.repartition(numBuckets, df.col(bucketCol))
-      .write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(table)
-
-  /** Same, but as an EXTERNAL table rooted at `path` — for callers that
-    * must not write into the session's default warehouse directory
-    * (the gate's Verify runs with whatever cwd the driver chose). The
-    * pre-write `repartition` on the bucket key leaves exactly one file
-    * per bucket, so reads see each bucket already globally sorted and
-    * downstream merge joins skip the per-partition re-sort too.
+    * claiming order over it would corrupt merge joins). Reads see each
+    * bucket already globally sorted, so downstream merge joins skip the
+    * per-partition re-sort too.
     */
   def writeBucketedAt(df: DataFrame, table: String, bucketCol: String,
                       numBuckets: Int, path: String): Unit =

@@ -398,7 +398,8 @@ object Similarity {
     * `refineIters` Lloyd-refines the hash-seeded codebooks in-plan
     * (per-subspace assignment argmin, then the DECIMAL per-position
     * member mean — deterministic, same machinery as [[ivfTopK]]'s
-    * option). Defaults to 0 on MEASURED evidence (RecallProbe): one
+    * option). Defaults to 0 on MEASURED evidence (BENCH_NOTES.md,
+    * "PQ codebook refinement measured" under round 9): one
     * pass moves top-5 recall 1.00→1.00 at sf0.01 and 0.92→0.94 at
     * sf0.1 (a second pass adds nothing) while costing two extra
     * corpus passes per iteration — not worth it here; a corpus with
@@ -1311,10 +1312,11 @@ object Similarity {
     * groups (default 2) before picking their ONE cell: with a single
     * group, a candidate whose true nearest centroid lives in a
     * different leader group is permanently lost to every probe — the
-    * structural 0.80 recall ceiling measured in r15 (RecallProbe:
-    * more query-side probes could not recover it). Spilling candidate
-    * assignment to the top-2 leader groups doubles the candidate
-    * scan term (still O(√nlist) per vector) and restores the exact
+    * structural 0.80 recall ceiling measured in r15 (BENCH_NOTES.md,
+    * "Round 16: two-level IVF recall": more query-side probes could
+    * not recover it). Spilling candidate assignment to the top-2
+    * leader groups doubles the candidate scan term (still O(√nlist)
+    * per vector) and restores the exact
     * cell for the boundary candidates (0.80 → 0.84 at the rehearsal
     * config; the residual gap vs exact-assign 0.86 is query-side
     * group visibility — BENCH_NOTES r16).
@@ -1636,9 +1638,9 @@ object Similarity {
     * the shift — landing where the build put nothing is shift by
     * definition. The indexed corpus is never re-read.
     *
-    * Defaults chosen from the measured margins (DriftProbe,
-    * BENCH_NOTES r19): an un-drifted corpus slice reads ratio ≈ 1.00
-    * ± 0.01 and shift ≈ sampling noise (~0.15 at 71 rows × 16 cells),
+    * Defaults chosen from the measured margins (BENCH_NOTES.md, "r19
+    * drift-signal margins"): an un-drifted corpus slice reads ratio ≈
+    * 1.00 ± 0.01 and shift ≈ sampling noise (~0.15 at 71 rows × 16 cells),
     * while a planted off-distribution delta concentrates its mass
     * (shift ≳ 0.8) long before the cosine fit ratio moves past ~1.16
     * on an isotropic corpus — so fit trips at 1.5 (half again worse

@@ -3367,7 +3367,7 @@ object PipelineQueries {
     // exact assignment at the same geometry; nprobe rises 8 → 12 to
     // buy margin, the sim13 convention (measured two-level recall
     // 0.88/0.88/0.86 across the three SFs vs exact 0.96/0.96/0.94 —
-    // RecallProbe ivfpq2) over sim07's floor 80.
+    // SCALE.md, "Second decade, round 17 additions") over sim07's floor 80.
     QueryDef("sim17_ivfpq_two_level",
       """SELECT CAST(q.nq * least(5, c.n_all - 1) AS BIGINT) AS n_exact,
         |  CAST(1 AS BIGINT) AS recall_ok
@@ -3427,7 +3427,7 @@ object PipelineQueries {
     // Invariant gate: ≥70% of the exact FILTERED top-5 recovered
     // (measured 0.94/0.86/0.96 across the three SFs at the 10·k
     // over-fetch; a 3·k fetch sits at 0.72–0.86 — the fetch depth IS
-    // the starvation/recall lever, RecallProbe `pf` sweep; pre-filter
+    // the starvation/recall lever, SURVEY.md's post-filter row; pre-filter
     // sim18 is the design to prefer when the predicate is known at
     // build time).
     QueryDef("sim19_postfilter_ann",
@@ -3649,7 +3649,7 @@ object PipelineQueries {
     // wrong. Invariant gate at all three SFs: an un-drifted corpus
     // slice must NOT trip (ratio ≈ 1, shift ≈ sampling noise), the
     // same slice pushed off-distribution MUST (measured shift ≥ 0.80
-    // vs the 0.5 threshold; DriftProbe/BENCH_NOTES r19).
+    // vs the 0.5 threshold; BENCH_NOTES.md, "r19 drift-signal margins").
     QueryDef("sim29_ivf_drift",
       """SELECT CAST(c.n AS BIGINT) AS n_delta,
         |  CAST(0 AS BIGINT) AS clean_trips,
@@ -3858,7 +3858,7 @@ object PipelineQueries {
     // The same search SERVED from persisted codes — the storage shape
     // that realizes binary quantization's 64× byte win (the fused path
     // re-packs from raw vectors, so its scan still reads the doubles;
-    // the ScaleRehearsal r17b rows measure the difference): codes
+    // SCALE.md's "round 17 late additions" rows measure the difference): codes
     // build once (a pure narrow pass), land as parquet, and the
     // hamming scan reads ONLY the code column. Same FULL oracle as
     // sim23 — the served path must be row-for-row identical.

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graft.bridge
 
 import graft.{GraftSession, SparkEntry}
@@ -20,7 +21,9 @@ import graft.{GraftSession, SparkEntry}
   *   --after a,b    run these queries once first, to see what in-session
   *                  state (cached blocks, checkpoints, codegen cache)
   *                  they leave costs the profiled query
-  *   --explain      print the final adaptive plan after the runs
+  *   --explain      print the final adaptive plan after the runs, in
+  *                  `explain("formatted")` form (operator tree, then
+  *                  each operator's details)
   *
   * Usage: runMain graft.tools.Profile <query> [sfDir] [--runs N] [--after a,b] [--explain]
   */
@@ -151,7 +154,7 @@ object Profile {
       // collect() runs this Dataset's own plan, so AQE finalizes it
       val df = fn(spark, sfDir)
       df.collect()
-      println(df.queryExecution.executedPlan.toString)
+      println(df.queryExecution.explainString(FormattedMode))
     }
     spark.stop()
   }

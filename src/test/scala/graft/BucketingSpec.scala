@@ -12,9 +12,10 @@ class BucketingSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     val li = Tables.load(spark, sf, "lineitem")
     val ord = Tables.load(spark, sf, "orders")
-    Bucketing.writeBucketed(li, "li_b", "l_orderkey", 4)
-    Bucketing.writeBucketed(
-      ord.withColumnRenamed("o_orderkey", "l_orderkey"), "ord_b", "l_orderkey", 4)
+    val dir = java.nio.file.Files.createTempDirectory("graft-bucketing").toString
+    Bucketing.writeBucketedAt(li, "li_b", "l_orderkey", 4, s"$dir/li_b")
+    Bucketing.writeBucketedAt(ord.withColumnRenamed("o_orderkey", "l_orderkey"),
+      "ord_b", "l_orderkey", 4, s"$dir/ord_b")
 
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -34,6 +35,7 @@ class BucketingSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS li_b")
       spark.sql("DROP TABLE IF EXISTS ord_b")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 }

@@ -84,7 +84,8 @@ class PipelineSpec extends AnyFunSuite {
   test("ANN LSH at the tuned default config clears the 80% recall floor") {
     // the r4 regression this pins: a bits=8 single-table-style override
     // collapsed recall to 0.20 — the tuned 4-bit × 16-table default
-    // measures 0.88/0.90/0.90 at sf0.001/0.01/0.1 (RecallProbe; the
+    // measures 0.88/0.90/0.90 at sf0.001/0.01/0.1 (BENCH_NOTES.md,
+    // "ANN recall tuning"; the
     // old 8-table default sat at 0.68–0.76, below the floor sim03
     // now enforces)
     val e = Tables.load(spark, sf, "embeddings")
@@ -135,7 +136,7 @@ class PipelineSpec extends AnyFunSuite {
   test("PQ ANN: shortlist re-rank clears the 80% recall floor vs exact L2") {
     // m (subspace count) is the lever this pins: m=8 sits at 0.78,
     // below the floor sim06 enforces; the m=16 default measures
-    // 0.98/1.00/0.92 across SFs (RecallProbe)
+    // 0.98/1.00/0.92 across SFs (BENCH_NOTES.md, "ANN recall tuning")
     val e = Tables.load(spark, sf, "embeddings")
     val q = e.filter($"vec_id" < 10)
     val brute = Similarity.l2TopK(q, e, 5)
@@ -149,7 +150,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("IVF-PQ: composed cells + residual codes clear the 80% recall floor vs exact L2") {
     // the coarse pruning is the recall cap: nprobe=2 measures 0.68,
-    // the nprobe=8 default 0.88-0.92 across SFs (RecallProbe)
+    // the nprobe=8 default 0.88-0.92 across SFs (BENCH_NOTES.md,
+    // "ANN recall tuning")
     val e = Tables.load(spark, sf, "embeddings")
     val q = e.filter($"vec_id" < 10)
     val brute = Similarity.l2TopK(q, e, 5)
@@ -262,8 +264,8 @@ class PipelineSpec extends AnyFunSuite {
     // ascending arrays, TopKAgg tie-breaks
     assert(r2 == run(), "two-level IVF-PQ is nondeterministic across runs")
     // the sim17 gate contract (measured 0.88/0.88/0.86 across SFs at
-    // this geometry vs exact-assign 0.96/0.96/0.94 — RecallProbe
-    // ivfpq2); the floor here is the gate's 0.80
+    // this geometry vs exact-assign 0.96/0.96/0.94 — SCALE.md, "Second
+    // decade, round 17 additions"); the floor here is the gate's 0.80
     val rec2 = r2.count(brute.contains).toDouble / brute.size
     assert(rec2 >= 0.8, s"two-level IVF-PQ recall below gate floor: $rec2")
     // boundary candidates move to near-best cells, never off the map:
