@@ -49,21 +49,20 @@ object PipelineQueries {
       lit("dd15 planted-clone offset 100000 collides with real vec_id "),
       id.cast(StringType))).cast(LongType))
 
-  /** Per-run /tmp work tree for a lifecycle gate (the sim16/st10
-    * hygiene, hardened): name-keyed by (gate, SF dir) so repeated runs
-    * of the same gate inside ONE process reuse — and therefore clean
-    * up — the same tree (Verify and Bench call each query several
-    * times per session; a fresh dir per invocation would leave an
-    * events-sized store in /tmp per call), PLUS this JVM's pid so two
-    * CONCURRENT processes running the same gate at the same SF can
-    * never share a tree — each gate leads with a recursive delete of
-    * its work path, which would otherwise destroy the sibling's
-    * in-flight store mid-query. Crash leftovers (a clean gate deletes
-    * its tree on the way out) are swept here by prefix, but ONLY
-    * entries whose embedded pid is provably dead, so the sweep itself
-    * cannot race a live sibling. Returns a freshly-deleted path.
+  /** Per-run work tree under java.io.tmpdir for a gate that keeps
+    * state on disk: `graft-<gate>-<sanitized dir>.p<pid>`. Keyed by
+    * the readable (gate, SF dir) name, not a hash two SF dirs could
+    * share, so repeated runs in ONE process reuse, and therefore clean
+    * up, the same tree (Verify and Bench call each query several
+    * times per session); plus this JVM's pid so two
+    * CONCURRENT processes running the same gate at the same SF never
+    * share a tree. Crash leftovers are swept by prefix, but ONLY trees
+    * whose embedded pid is provably dead, so the sweep cannot race a
+    * live sibling. Returns a freshly-deleted path: reuse without the
+    * pre-delete would resume an old checkpoint or registry.
     */
-  private def gateWork(s: SparkSession, gate: String, dir: String): String = {
+  private[queries] def gateWork(s: SparkSession, gate: String,
+                                dir: String): String = {
     val tmp = System.getProperty("java.io.tmpdir")
     val prefix = s"graft-$gate-" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_") + ".p"
@@ -89,6 +88,40 @@ object PipelineQueries {
     val work = s"$tmp/$prefix${ProcessHandle.current().pid()}"
     fs.delete(new org.apache.hadoop.fs.Path(work), true)
     work
+  }
+
+  /** Run a stateful gate's `body` in its [[gateWork]] tree, pin the
+    * result, then drop the tree's catalog entry and the tree itself —
+    * also when `body` throws, so a failed gate leaves nothing behind.
+    * The pin (eager localCheckpoint) must come BEFORE the delete: the
+    * result is lazy, and un-pinned it would scan the very files the
+    * delete removes. Registry-backed gates name their catalog table
+    * `StreamingJobs.registryTable(work)`, the one name dropped here.
+    * A tree that survives its delete fails the gate, naming the path
+    * (attached as suppressed when `body` already failed).
+    */
+  private[queries] def withGateWork(s: SparkSession, gate: String,
+                                    dir: String)(
+      body: String => DataFrame): DataFrame = {
+    val work = gateWork(s, gate, dir)
+    val workP = new org.apache.hadoop.fs.Path(work)
+    val fs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def cleanUp(): Unit =
+      try s.sql("DROP TABLE IF EXISTS " +
+        graft.streaming.StreamingJobs.registryTable(work))
+      finally {
+        fs.delete(workP, true)
+        if (fs.exists(workP))
+          throw new java.io.IOException(
+            s"gate $gate: work tree $work survived its delete")
+      }
+    val out = try body(work).localCheckpoint() catch {
+      case t: Throwable =>
+        try cleanUp() catch { case c: Throwable => t.addSuppressed(c) }
+        throw t
+    }
+    cleanUp()
+    out
   }
 
   /** The exact-decimal cosine top-5 oracle (DuckDB): shared verbatim by
@@ -429,22 +462,32 @@ object PipelineQueries {
     * and pins recall_ok = 1, so a recall regression OR a broken
     * brute-force baseline breaks the hash match.
     */
-  /** Land `df` as exactly ONE parquet file named `p<phase>-*` under
-    * `in` — each phase must be exactly one micro-batch of a
-    * maxFilesPerTrigger=1 file stream. The shared scaffolding of every
-    * streaming gate that drives batch boundaries by hand
-    * (st10/st11/st12/st14/st15/st16).
+  /** Land one phase of a hand-driven file stream: `write` `df` to a
+    * staging dir inside `work`, then move its `part-*` files into `in`
+    * as `p<phase>-*`, so the stream sees whole files only. The default
+    * write lands exactly ONE parquet file — one micro-batch of a
+    * maxFilesPerTrigger=1 stream (st10/st11/st12/st14/st15/st16);
+    * st07 and st08 pass their own.
     */
-  private def landPhase(work: String, in: String, phase: Int,
-                        df: DataFrame): Unit = {
+  private def landPhase(work: String, in: String, phase: Int, df: DataFrame,
+      write: (DataFrame, String) => Unit =
+        (d, at) => d.coalesce(1).write.mode("overwrite").parquet(at)): Unit = {
     val staging = s"$work/staging$phase"
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    val destP = java.nio.file.Paths.get(in)
+    write(df, staging)
+    val destP = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(in))
     val files = java.nio.file.Files.list(java.nio.file.Paths.get(staging))
     try files.filter(_.getFileName.toString.startsWith("part-"))
       .forEach(p => java.nio.file.Files.move(p,
         destP.resolve(s"p$phase-${p.getFileName}")))
     finally files.close()
+  }
+
+  /** Number of `batch=` partition directories under `path`. */
+  private def batchParts(s: SparkSession, path: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p)
+      .count(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
   }
 
   /** Count of (qid, rank, cid) rows on which two served shortlists
@@ -1869,31 +1912,23 @@ object PipelineQueries {
           .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
       val regSigs = Dedup.minHashSignatures(
         Dedup.shingles(reg, "doc_id", "text", 3), "doc_id", 32)
-      // one deterministic, name-keyed table + path per SF (sim21
-      // hygiene: no collisions, no /tmp accumulation)
-      val tblDir = gateWork(s, "dd20", dir)
-      val tbl = "graft_dd20_reg_" +
-        tblDir.substring(tblDir.lastIndexOf('/') + 1)
-          .replaceAll("[^A-Za-z0-9_]", "_")
-      Dedup.writeBandedRegistry(regSigs, "doc_id", tbl, tblDir,
-        numHashes = 32, bands = 8, numBuckets = 16)
-      val flagged = Dedup.incrementalNearDupBanded(batch,
-        s.table(tbl).select("doc_id", "band", "bucket", "sig"),
-        "doc_id", "text")
-        .filter(!col("keep")).select(col("doc_id")).withColumn("_f", lit(1L))
-      val clones = batch.select(col("doc_id"), col("text"))
-        .join(reg.filter(size(split(col("text"), " ")) >= 3)
-          .select("text").distinct(), Seq("text"))
-        .select("doc_id").distinct()
-      val out = clones.join(flagged, Seq("doc_id"), "left")
-        .agg(count(lit(1)).cast(LongType).as("n_clones"),
-          coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
-            .as("all_flagged"))
-        .localCheckpoint() // pin the verdict, then drop the registry copy
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val p = new org.apache.hadoop.fs.Path(tblDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      out
+      withGateWork(s, "dd20", dir) { work =>
+        val tbl = graft.streaming.StreamingJobs.registryTable(work)
+        Dedup.writeBandedRegistry(regSigs, "doc_id", tbl, work,
+          numHashes = 32, bands = 8, numBuckets = 16)
+        val flagged = Dedup.incrementalNearDupBanded(batch,
+          s.table(tbl).select("doc_id", "band", "bucket", "sig"),
+          "doc_id", "text")
+          .filter(!col("keep")).select(col("doc_id")).withColumn("_f", lit(1L))
+        val clones = batch.select(col("doc_id"), col("text"))
+          .join(reg.filter(size(split(col("text"), " ")) >= 3)
+            .select("text").distinct(), Seq("text"))
+          .select("doc_id").distinct()
+        clones.join(flagged, Seq("doc_id"), "left")
+          .agg(count(lit(1)).cast(LongType).as("n_clones"),
+            coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
+              .as("all_flagged"))
+      }
     },
 
     // Registry COMPACTION — the maintenance op a long-running screen
@@ -1916,42 +1951,34 @@ object PipelineQueries {
         |  CAST(1 AS BIGINT) AS all_flagged,
         |  CAST(1 AS BIGINT) AS compact_ok
         |FROM batch b JOIN rt ON b.text = rt.text""".stripMargin) { (s, dir) =>
-      val work = gateWork(s, "dd21", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val d = docs(s, dir)
-      val reg = d.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
-      val batch = d.filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-        .unionAll(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
-          .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
-      graft.streaming.StreamingJobs.screenBatch(reg, 0L, work,
-        "doc_id", "text", 3, 32, 8, 0.7, 16)
-      graft.streaming.StreamingJobs.compactRegistry(s, work)
-      // exactly one partition after compaction (checked BEFORE batch 1
-      // appends its own)
-      val nParts = workFs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$work/registry"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      graft.streaming.StreamingJobs.screenBatch(batch, 1L, work,
-        "doc_id", "text", 3, 32, 8, 0.7, 16)
-      val flagged = s.read.parquet(s"$work/verdicts/batch=1")
-        .filter(!col("keep")).select(col("doc_id")).withColumn("_f", lit(1L))
-      val clones = batch.select(col("doc_id"), col("text"))
-        .join(reg.filter(size(split(col("text"), " ")) >= 3)
-          .select("text").distinct(), Seq("text"))
-        .select("doc_id").distinct()
-      val out = clones.join(flagged, Seq("doc_id"), "left")
-        .agg(count(lit(1)).cast(LongType).as("n_clones"),
-          coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
-            .as("all_flagged"))
-        .select(col("n_clones"), col("all_flagged"),
-          lit(if (nParts == 1) 1L else 0L).as("compact_ok"))
-        .localCheckpoint() // pin the verdict, then drop the work tree
-      s.sql(s"DROP TABLE IF EXISTS " +
-        graft.streaming.StreamingJobs.registryTable(work))
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "dd21", dir) { work =>
+        val d = docs(s, dir)
+        val reg = d.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
+        val batch = d.filter(col("doc_id") % 2 === 1)
+          .select("doc_id", "text")
+          .unionAll(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
+            .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
+        graft.streaming.StreamingJobs.screenBatch(reg, 0L, work,
+          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        graft.streaming.StreamingJobs.compactRegistry(s, work)
+        // exactly one partition after compaction (checked BEFORE batch 1
+        // appends its own)
+        val nParts = batchParts(s, s"$work/registry")
+        graft.streaming.StreamingJobs.screenBatch(batch, 1L, work,
+          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        val flagged = s.read.parquet(s"$work/verdicts/batch=1")
+          .filter(!col("keep")).select(col("doc_id")).withColumn("_f", lit(1L))
+        val clones = batch.select(col("doc_id"), col("text"))
+          .join(reg.filter(size(split(col("text"), " ")) >= 3)
+            .select("text").distinct(), Seq("text"))
+          .select("doc_id").distinct()
+        clones.join(flagged, Seq("doc_id"), "left")
+          .agg(count(lit(1)).cast(LongType).as("n_clones"),
+            coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
+              .as("all_flagged"))
+          .select(col("n_clones"), col("all_flagged"),
+            lit(if (nParts == 1) 1L else 0L).as("compact_ok"))
+      }
     },
 
     // Registry DELETION — the right-to-be-forgotten arm dd21's fold
@@ -1977,50 +2004,45 @@ object PipelineQueries {
         |  CAST(20 AS BIGINT) AS n_tomb,
         |  CAST(1 AS BIGINT) AS tomb_kept
         |FROM batch b JOIN rt ON b.text = rt.text""".stripMargin) { (s, dir) =>
-      val work = gateWork(s, "dd22", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val d = docs(s, dir)
-      val reg = d.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
-      // synthetic tombstone targets: unique nonsense tokens — no
-      // shingle overlap with the corpus, so after deletion their
-      // re-crawls share no signature components with any survivor
-      val tomb = s.range(1, 21).select(
-        (col("id") + 20000000L).as("doc_id"),
-        concat_ws(" ", (1 to 6).map(j =>
-          concat(lit("zzq"), col("id"), lit(s"x$j"))): _*).as("text"))
-      graft.streaming.StreamingJobs.screenBatch(reg.unionAll(tomb), 0L, work,
-        "doc_id", "text", 3, 32, 8, 0.7, 16)
-      graft.streaming.StreamingJobs.deleteFromRegistry(s, work,
-        tomb.select("doc_id"))
-      val batch = d.filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-        .unionAll(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
-          .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
-        .unionAll(tomb.select((col("doc_id") + 10000000L).as("doc_id"),
-          col("text")))
-      graft.streaming.StreamingJobs.screenBatch(batch, 1L, work,
-        "doc_id", "text", 3, 32, 8, 0.7, 16)
-      val verd = s.read.parquet(s"$work/verdicts/batch=1")
-      val flagged = verd.filter(!col("keep")).select(col("doc_id"))
-        .withColumn("_f", lit(1L))
-      val clones = batch.filter(col("doc_id") < 30000000L)
-        .select(col("doc_id"), col("text"))
-        .join(reg.filter(size(split(col("text"), " ")) >= 3)
-          .select("text").distinct(), Seq("text"))
-        .select("doc_id").distinct()
-      val natural = clones.join(flagged, Seq("doc_id"), "left")
-        .agg(count(lit(1)).cast(LongType).as("n_clones"),
-          coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
-            .as("all_flagged"))
-      val tombRows = verd.filter(col("doc_id") > 30000000L)
-        .agg(count(lit(1)).cast(LongType).as("n_tomb"),
-          min(when(col("keep"), 1L).otherwise(0L)).as("tomb_kept"))
-      val out = natural.crossJoin(broadcast(tombRows)).localCheckpoint()
-      s.sql(s"DROP TABLE IF EXISTS " +
-        graft.streaming.StreamingJobs.registryTable(work))
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "dd22", dir) { work =>
+        val d = docs(s, dir)
+        val reg = d.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
+        // synthetic tombstone targets: unique nonsense tokens — no
+        // shingle overlap with the corpus, so after deletion their
+        // re-crawls share no signature components with any survivor
+        val tomb = s.range(1, 21).select(
+          (col("id") + 20000000L).as("doc_id"),
+          concat_ws(" ", (1 to 6).map(j =>
+            concat(lit("zzq"), col("id"), lit(s"x$j"))): _*).as("text"))
+        graft.streaming.StreamingJobs.screenBatch(reg.unionAll(tomb), 0L, work,
+          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        graft.streaming.StreamingJobs.deleteFromRegistry(s, work,
+          tomb.select("doc_id"))
+        val batch = d.filter(col("doc_id") % 2 === 1)
+          .select("doc_id", "text")
+          .unionAll(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
+            .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
+          .unionAll(tomb.select((col("doc_id") + 10000000L).as("doc_id"),
+            col("text")))
+        graft.streaming.StreamingJobs.screenBatch(batch, 1L, work,
+          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        val verd = s.read.parquet(s"$work/verdicts/batch=1")
+        val flagged = verd.filter(!col("keep")).select(col("doc_id"))
+          .withColumn("_f", lit(1L))
+        val clones = batch.filter(col("doc_id") < 30000000L)
+          .select(col("doc_id"), col("text"))
+          .join(reg.filter(size(split(col("text"), " ")) >= 3)
+            .select("text").distinct(), Seq("text"))
+          .select("doc_id").distinct()
+        val natural = clones.join(flagged, Seq("doc_id"), "left")
+          .agg(count(lit(1)).cast(LongType).as("n_clones"),
+            coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
+              .as("all_flagged"))
+        val tombRows = verd.filter(col("doc_id") > 30000000L)
+          .agg(count(lit(1)).cast(LongType).as("n_tomb"),
+            min(when(col("keep"), 1L).otherwise(0L)).as("tomb_kept"))
+        natural.crossJoin(broadcast(tombRows))
+      }
     },
 
     // Registry RETENTION — the TTL arm: compactRegistry(retainIngestSince)
@@ -2045,59 +2067,51 @@ object PipelineQueries {
         |  CAST(1 AS BIGINT) AS aged_kept,
         |  CAST(1 AS BIGINT) AS one_part
         |FROM batch b JOIN rt ON b.text = rt.text""".stripMargin) { (s, dir) =>
-      val work = gateWork(s, "dd23", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val d = docs(s, dir)
-      val aged = s.range(1, 21).select(
-        (col("id") + 20000000L).as("doc_id"),
-        concat_ws(" ", (1 to 6).map(j =>
-          concat(lit("zzq"), col("id"), lit(s"x$j"))): _*).as("text"))
-      val reg = d.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
-      graft.streaming.StreamingJobs.screenBatch(aged, 0L, work,
-        "doc_id", "text", 3, 32, 8, 0.7, 16)
-      graft.streaming.StreamingJobs.screenBatch(reg, 1L, work,
-        "doc_id", "text", 3, 32, 8, 0.7, 16)
-      // plain fold FIRST: re-keys every partition to batch=1 — the
-      // retention fold must then age by ingest provenance, not by the
-      // re-keyed partition
-      graft.streaming.StreamingJobs.compactRegistry(s, work)
-      graft.streaming.StreamingJobs.compactRegistry(s, work,
-        retainIngestSince = 1L)
-      val nParts = workFs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$work/registry"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      val batch = d.filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-        .unionAll(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
-          .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
-        .unionAll(aged.select((col("doc_id") + 10000000L).as("doc_id"),
-          col("text")))
-      graft.streaming.StreamingJobs.screenBatch(batch, 2L, work,
-        "doc_id", "text", 3, 32, 8, 0.7, 16)
-      val verd = s.read.parquet(s"$work/verdicts/batch=2")
-      val flagged = verd.filter(!col("keep")).select(col("doc_id"))
-        .withColumn("_f", lit(1L))
-      val clones = batch.filter(col("doc_id") < 30000000L)
-        .select(col("doc_id"), col("text"))
-        .join(reg.filter(size(split(col("text"), " ")) >= 3)
-          .select("text").distinct(), Seq("text"))
-        .select("doc_id").distinct()
-      val natural = clones.join(flagged, Seq("doc_id"), "left")
-        .agg(count(lit(1)).cast(LongType).as("n_clones"),
-          coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
-            .as("all_flagged"))
-      val agedRows = verd.filter(col("doc_id") > 30000000L)
-        .agg(count(lit(1)).cast(LongType).as("n_aged"),
-          min(when(col("keep"), 1L).otherwise(0L)).as("aged_kept"))
-      val out = natural.crossJoin(broadcast(agedRows))
-        .select(col("n_clones"), col("all_flagged"), col("n_aged"),
-          col("aged_kept"), lit(if (nParts == 1) 1L else 0L).as("one_part"))
-        .localCheckpoint()
-      s.sql(s"DROP TABLE IF EXISTS " +
-        graft.streaming.StreamingJobs.registryTable(work))
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "dd23", dir) { work =>
+        val d = docs(s, dir)
+        val aged = s.range(1, 21).select(
+          (col("id") + 20000000L).as("doc_id"),
+          concat_ws(" ", (1 to 6).map(j =>
+            concat(lit("zzq"), col("id"), lit(s"x$j"))): _*).as("text"))
+        val reg = d.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
+        graft.streaming.StreamingJobs.screenBatch(aged, 0L, work,
+          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        graft.streaming.StreamingJobs.screenBatch(reg, 1L, work,
+          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        // plain fold FIRST: re-keys every partition to batch=1 — the
+        // retention fold must then age by ingest provenance, not by the
+        // re-keyed partition
+        graft.streaming.StreamingJobs.compactRegistry(s, work)
+        graft.streaming.StreamingJobs.compactRegistry(s, work,
+          retainIngestSince = 1L)
+        val nParts = batchParts(s, s"$work/registry")
+        val batch = d.filter(col("doc_id") % 2 === 1)
+          .select("doc_id", "text")
+          .unionAll(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
+            .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
+          .unionAll(aged.select((col("doc_id") + 10000000L).as("doc_id"),
+            col("text")))
+        graft.streaming.StreamingJobs.screenBatch(batch, 2L, work,
+          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        val verd = s.read.parquet(s"$work/verdicts/batch=2")
+        val flagged = verd.filter(!col("keep")).select(col("doc_id"))
+          .withColumn("_f", lit(1L))
+        val clones = batch.filter(col("doc_id") < 30000000L)
+          .select(col("doc_id"), col("text"))
+          .join(reg.filter(size(split(col("text"), " ")) >= 3)
+            .select("text").distinct(), Seq("text"))
+          .select("doc_id").distinct()
+        val natural = clones.join(flagged, Seq("doc_id"), "left")
+          .agg(count(lit(1)).cast(LongType).as("n_clones"),
+            coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
+              .as("all_flagged"))
+        val agedRows = verd.filter(col("doc_id") > 30000000L)
+          .agg(count(lit(1)).cast(LongType).as("n_aged"),
+            min(when(col("keep"), 1L).otherwise(0L)).as("aged_kept"))
+        natural.crossJoin(broadcast(agedRows))
+          .select(col("n_clones"), col("all_flagged"), col("n_aged"),
+            col("aged_kept"), lit(if (nParts == 1) 1L else 0L).as("one_part"))
+      }
     },
 
     // ================= text analysis =================
@@ -3335,27 +3349,11 @@ object PipelineQueries {
         |     (SELECT count(*) AS n_all FROM embeddings) c""".stripMargin) { (s, dir) =>
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < 10)
-      // ONE deterministic index path per SF, overwritten each run —
-      // a fresh createTempDirectory per invocation would persist a
-      // full corpus copy on every bench/verify execution and
-      // accumulate until the box's /tmp fills. Keyed by the SANITIZED
-      // dir name, not dir.hashCode: two distinct SF dirs with
-      // colliding String hashCodes would share one path and an
-      // overwrite racing a concurrent read could serve the wrong
-      // corpus; the readable name also makes leftovers auditable
-      val idxDir = gateWork(s, "sim16", dir)
-      Similarity.ivfBuild(e).save(idxDir)
-      val served = Similarity.ivfSearch(q, Similarity.ivfLoad(s, idxDir), 5)
-      val out = recallFloor(Similarity.cosineTopK(q, e, 5), served,
-        floorPct = 85)
-      // recallFloor is lazy, so materialize the 1-row verdict (eager
-      // localCheckpoint) BEFORE dropping the corpus-sized index copy —
-      // otherwise the delete races the very scan that serves the gate;
-      // with the verdict pinned, nothing corpus-sized lingers in /tmp
-      val res = out.localCheckpoint()
-      val p = new org.apache.hadoop.fs.Path(idxDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      res
+      withGateWork(s, "sim16", dir) { idxDir =>
+        Similarity.ivfBuild(e).save(idxDir)
+        val served = Similarity.ivfSearch(q, Similarity.ivfLoad(s, idxDir), 5)
+        recallFloor(Similarity.cosineTopK(q, e, 5), served, floorPct = 85)
+      }
     },
 
     // IVF-PQ under the BIG-CORPUS coarse assignment: sim07's composed
@@ -3492,18 +3490,12 @@ object PipelineQueries {
         |     (SELECT count(*) AS n_all FROM embeddings) c""".stripMargin) { (s, dir) =>
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < 10)
-      // one deterministic, name-keyed index path per SF (the sim16
-      // hygiene: no hashCode collisions, no /tmp accumulation)
-      val idxDir = gateWork(s, "sim21", dir)
-      Similarity.ivfPqBuild(e).save(idxDir)
-      val served = Similarity.ivfPqSearch(q, Similarity.ivfPqLoad(s, idxDir),
-        e, 5)
-      val out = recallFloor(Similarity.l2TopK(q, e, 5), served, floorPct = 80)
-      // materialize the verdict before dropping the index copy
-      val res = out.localCheckpoint()
-      val p = new org.apache.hadoop.fs.Path(idxDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      res
+      withGateWork(s, "sim21", dir) { idxDir =>
+        Similarity.ivfPqBuild(e).save(idxDir)
+        val served = Similarity.ivfPqSearch(q, Similarity.ivfPqLoad(s, idxDir),
+          e, 5)
+        recallFloor(Similarity.l2TopK(q, e, 5), served, floorPct = 80)
+      }
     },
 
     // STALE IVF-PQ + DELTA serving — sim20's union mitigation on the
@@ -3827,19 +3819,15 @@ object PipelineQueries {
       (s, dir) =>
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < 10)
-      val idxDir = gateWork(s, "sim35", dir)
-      Similarity.lshBuild(e).write.mode("overwrite").parquet(idxDir)
-      val served = Similarity.lshSearch(q, s.read.parquet(idxDir), e, 5)
-        .localCheckpoint() // two consumers + the dir drops below
-      val mism = rankMismatches(served, Similarity.annTopK(q, e, 5))
-      val out = recallFloor(Similarity.cosineTopK(q, e, 5), served,
-        floorPct = 80)
-        .select(col("n_exact"), col("recall_ok"),
-          lit(mism).as("serve_mismatch"))
-        .localCheckpoint()
-      val p = new org.apache.hadoop.fs.Path(idxDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      out
+      withGateWork(s, "sim35", dir) { idxDir =>
+        Similarity.lshBuild(e).write.mode("overwrite").parquet(idxDir)
+        val served = Similarity.lshSearch(q, s.read.parquet(idxDir), e, 5)
+          .localCheckpoint() // two consumers
+        val mism = rankMismatches(served, Similarity.annTopK(q, e, 5))
+        recallFloor(Similarity.cosineTopK(q, e, 5), served, floorPct = 80)
+          .select(col("n_exact"), col("recall_ok"),
+            lit(mism).as("serve_mismatch"))
+      }
     },
 
     // BINARY-QUANTIZED two-stage retrieval — the 1-bit compression
@@ -3865,15 +3853,10 @@ object PipelineQueries {
     QueryDef("sim24_bq_code_serve", BqTopkSql) { (s, dir) =>
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < 10)
-      val codesDir = gateWork(s, "sim24", dir)
-      Similarity.binaryCodes(e).write.mode("overwrite").parquet(codesDir)
-      val served = Similarity.bqSearch(q, s.read.parquet(codesDir), e, 5)
-      // pin the 50-row result before dropping the code table (sim16/21
-      // hygiene: nothing index-sized lingers in /tmp)
-      val res = served.localCheckpoint()
-      val p = new org.apache.hadoop.fs.Path(codesDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      res
+      withGateWork(s, "sim24", dir) { codesDir =>
+        Similarity.binaryCodes(e).write.mode("overwrite").parquet(codesDir)
+        Similarity.bqSearch(q, s.read.parquet(codesDir), e, 5)
+      }
     },
 
     // BQ code-store DELETION — the last column of the lifecycle
@@ -3892,18 +3875,15 @@ object PipelineQueries {
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < 10)
       val surv = e.filter(col("vec_id") % 10 =!= 9)
-      val codesDir = gateWork(s, "sim31", dir)
-      Similarity.binaryCodes(e).write.mode("overwrite").parquet(codesDir)
-      val deleted = Similarity.bqDeleteIds(s.read.parquet(codesDir),
-        e.filter(col("vec_id") % 10 === 9).select("vec_id"))
-      // re-rank side drops the rows on the same cadence (the
-      // bqDeleteIds/ivfPqDeleteIds contract: codes gone = never
-      // shortlisted; a stale re-rank source is the only path back)
-      val served = Similarity.bqSearch(q, deleted, surv, 5)
-      val res = served.localCheckpoint()
-      val p = new org.apache.hadoop.fs.Path(codesDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      res
+      withGateWork(s, "sim31", dir) { codesDir =>
+        Similarity.binaryCodes(e).write.mode("overwrite").parquet(codesDir)
+        val deleted = Similarity.bqDeleteIds(s.read.parquet(codesDir),
+          e.filter(col("vec_id") % 10 === 9).select("vec_id"))
+        // re-rank side drops the rows on the same cadence (the
+        // bqDeleteIds/ivfPqDeleteIds contract: codes gone = never
+        // shortlisted; a stale re-rank source is the only path back)
+        Similarity.bqSearch(q, deleted, surv, 5)
+      }
     },
 
     // BQ code-store ABSORPTION — ivfAbsorbDelta's contract on the BQ
@@ -3920,16 +3900,13 @@ object PipelineQueries {
     QueryDef("sim32_bq_absorb", BqTopkSql) { (s, dir) =>
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < 10)
-      val codesDir = gateWork(s, "sim32", dir)
-      Similarity.binaryCodes(e.filter(col("vec_id") % 5 =!= 2))
-        .write.mode("overwrite").parquet(codesDir)
-      val absorbed = Similarity.bqAbsorbDelta(s.read.parquet(codesDir),
-        e.filter(col("vec_id") % 5 === 2))
-      val served = Similarity.bqSearch(q, absorbed, e, 5)
-      val res = served.localCheckpoint()
-      val p = new org.apache.hadoop.fs.Path(codesDir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      res
+      withGateWork(s, "sim32", dir) { codesDir =>
+        Similarity.binaryCodes(e.filter(col("vec_id") % 5 =!= 2))
+          .write.mode("overwrite").parquet(codesDir)
+        val absorbed = Similarity.bqAbsorbDelta(s.read.parquet(codesDir),
+          e.filter(col("vec_id") % 5 === 2))
+        Similarity.bqSearch(q, absorbed, e, 5)
+      }
     },
 
     // Retrieval EVALUATION: recall@5 / MRR / nDCG@5 of the exact dense
@@ -4843,26 +4820,20 @@ object PipelineQueries {
       graft.multimodal.Multimodal
         .mediaRegistryOracleSql(300, 100, 5000L, 3)) { (s, dir) =>
       val m = graft.multimodal.Multimodal
-      val work = gateWork(s, "mm07", dir)
-      val tbl = "graft_mm07_reg_" +
-        work.substring(work.lastIndexOf('/') + 1)
-          .replaceAll("[^A-Za-z0-9_]", "_")
-      Dedup.writeHammingRegistry(
-        m.dHashes(m.syntheticAssets(s, 300)).toDF(),
-        "asset_id", "dhash", tbl, work, maxDist = 3, numBuckets = 16)
-      val batch = m.cloneAssets(s, 300)
-        .unionByName(m.syntheticAssets(s, 100, offset = 5000L))
-      val screened = Dedup.incrementalHammingDup(
-        m.dHashes(batch).toDF(), s.table(tbl),
-        "asset_id", "dhash", maxDist = 3)
-        .select(col("asset_id"), col("keep").cast(LongType).as("keep"),
-          col("dup_of"), col("dist"))
-        .orderBy("asset_id")
-      val out = screened.localCheckpoint() // pin, then drop the registry
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val p = new org.apache.hadoop.fs.Path(work)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      out
+      withGateWork(s, "mm07", dir) { work =>
+        val tbl = graft.streaming.StreamingJobs.registryTable(work)
+        Dedup.writeHammingRegistry(
+          m.dHashes(m.syntheticAssets(s, 300)).toDF(),
+          "asset_id", "dhash", tbl, work, maxDist = 3, numBuckets = 16)
+        val batch = m.cloneAssets(s, 300)
+          .unionByName(m.syntheticAssets(s, 100, offset = 5000L))
+        Dedup.incrementalHammingDup(
+          m.dHashes(batch).toDF(), s.table(tbl),
+          "asset_id", "dhash", maxDist = 3)
+          .select(col("asset_id"), col("keep").cast(LongType).as("keep"),
+            col("dup_of"), col("dist"))
+          .orderBy("asset_id")
+      }
     },
 
     // RTBF deletion from the media registry — dd22's arm for the
@@ -4882,30 +4853,24 @@ object PipelineQueries {
       graft.multimodal.Multimodal
         .mediaRegistryDeleteOracleSql(300, 100, 5000L, 3, 2L)) { (s, dir) =>
       val m = graft.multimodal.Multimodal
-      val work = gateWork(s, "mm08", dir)
-      val reg = s"$work/reg" // publish siblings (.reg.next, ...) stay inside the tree
-      val tbl = "graft_mm08_reg_" +
-        work.substring(work.lastIndexOf('/') + 1)
-          .replaceAll("[^A-Za-z0-9_]", "_")
-      Dedup.writeHammingRegistry(
-        m.dHashes(m.syntheticAssets(s, 300)).toDF(),
-        "asset_id", "dhash", tbl, reg, maxDist = 3, numBuckets = 16)
-      Dedup.deleteFromHammingRegistry(s, tbl, reg,
-        s.range(0, 300, 2).select(col("id").as("asset_id")),
-        numBuckets = 16)
-      val batch = m.cloneAssets(s, 300)
-        .unionByName(m.syntheticAssets(s, 100, offset = 5000L))
-      val screened = Dedup.incrementalHammingDup(
-        m.dHashes(batch).toDF(), s.table(tbl),
-        "asset_id", "dhash", maxDist = 3)
-        .select(col("asset_id"), col("keep").cast(LongType).as("keep"),
-          col("dup_of"), col("dist"))
-        .orderBy("asset_id")
-      val out = screened.localCheckpoint() // pin, then drop the registry
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val p = new org.apache.hadoop.fs.Path(work)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      out
+      withGateWork(s, "mm08", dir) { work =>
+        val reg = s"$work/reg" // publish siblings (.reg.next, ...) stay inside the tree
+        val tbl = graft.streaming.StreamingJobs.registryTable(work)
+        Dedup.writeHammingRegistry(
+          m.dHashes(m.syntheticAssets(s, 300)).toDF(),
+          "asset_id", "dhash", tbl, reg, maxDist = 3, numBuckets = 16)
+        Dedup.deleteFromHammingRegistry(s, tbl, reg,
+          s.range(0, 300, 2).select(col("id").as("asset_id")),
+          numBuckets = 16)
+        val batch = m.cloneAssets(s, 300)
+          .unionByName(m.syntheticAssets(s, 100, offset = 5000L))
+        Dedup.incrementalHammingDup(
+          m.dHashes(batch).toDF(), s.table(tbl),
+          "asset_id", "dhash", maxDist = 3)
+          .select(col("asset_id"), col("keep").cast(LongType).as("keep"),
+            col("dup_of"), col("dist"))
+          .orderBy("asset_id")
+      }
     },
 
     // ================= events: JSON / sessions / windows =================
@@ -5376,56 +5341,49 @@ object PipelineQueries {
         |  CAST(max(200 + (l_linenumber % 5)) AS INTEGER) AS max_status
         |FROM lineitem WHERE l_orderkey % 32 = 0
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-      val work = java.nio.file.Files.createTempDirectory("graft-st07").toString
-      val in = s"$work/in"
-      // the request date is CONSTANT by design: the row is about restart
-      // exactly-once, and per-day fan-out is etl01/LogEtlSpec territory —
-      // a shipdate-derived log_date would write ~2400 tiny Hive
-      // partitions per phase and turn this row into a file-system bench
-      // (measured 53 s at sf0.1; ~3 s pinned)
-      def phaseLines(phase: Int) = Tables.spread(
-        Tables.load(s, dir, "lineitem")
-          .filter(col("l_orderkey") % 32 === 0 &&
-            col("l_linenumber") % 2 === phase)
-          .select("l_orderkey", "l_suppkey", "l_linenumber"),
-        "l_orderkey", "l_linenumber")
-        .select(format_string(
-          "owner%d bkt%d [01/Jul/2024:10:00:00 +0000] 10.0.0.1 " +
-            "arn:aws:iam::1:r REQ%d " +
-            "REST.GET.OBJECT key/%d \"GET /k HTTP/1.1\" %d - %d 1024 5 4 " +
-            "\"-\" \"agent/1.0\" - host= SigV4 TLS_AES_128_GCM_SHA256 " +
-            "AuthHeader h.example.com TLSv1.3 - -",
-          col("l_orderkey"),
-          col("l_suppkey") % 10,
-          col("l_orderkey") * 10 + col("l_linenumber"),
-          col("l_orderkey"),
-          lit(200) + (col("l_linenumber") % 5),
-          col("l_orderkey") % 100000).as("value"))
-      def land(phase: Int): Unit = {
-        val staging = s"$work/stage$phase"
-        phaseLines(phase).coalesce(4).write.mode("overwrite").text(staging)
-        val destP = java.nio.file.Paths.get(in)
-        java.nio.file.Files.createDirectories(destP)
-        val files = java.nio.file.Files.list(java.nio.file.Paths.get(staging))
-        try files.filter(_.getFileName.toString.startsWith("part-"))
-          .forEach(p => java.nio.file.Files.move(p,
-            destP.resolve(s"p$phase-${p.getFileName}")))
-        finally files.close()
+      withGateWork(s, "st07", dir) { work =>
+        val in = s"$work/in"
+        // the request date is CONSTANT by design: the row is about restart
+        // exactly-once, and per-day fan-out is etl01/LogEtlSpec territory —
+        // a shipdate-derived log_date would write ~2400 tiny Hive
+        // partitions per phase and turn this row into a file-system bench
+        // (measured 53 s at sf0.1; ~3 s pinned)
+        def phaseLines(phase: Int) = Tables.spread(
+          Tables.load(s, dir, "lineitem")
+            .filter(col("l_orderkey") % 32 === 0 &&
+              col("l_linenumber") % 2 === phase)
+            .select("l_orderkey", "l_suppkey", "l_linenumber"),
+          "l_orderkey", "l_linenumber")
+          .select(format_string(
+            "owner%d bkt%d [01/Jul/2024:10:00:00 +0000] 10.0.0.1 " +
+              "arn:aws:iam::1:r REQ%d " +
+              "REST.GET.OBJECT key/%d \"GET /k HTTP/1.1\" %d - %d 1024 5 4 " +
+              "\"-\" \"agent/1.0\" - host= SigV4 TLS_AES_128_GCM_SHA256 " +
+              "AuthHeader h.example.com TLSv1.3 - -",
+            col("l_orderkey"),
+            col("l_suppkey") % 10,
+            col("l_orderkey") * 10 + col("l_linenumber"),
+            col("l_orderkey"),
+            lit(200) + (col("l_linenumber") % 5),
+            col("l_orderkey") % 100000).as("value"))
+        def land(phase: Int): Unit = landPhase(work, in, phase,
+          phaseLines(phase),
+          (d, at) => d.coalesce(4).write.mode("overwrite").text(at))
+        land(0)
+        val q1 = graft.streaming.StreamingJobs
+          .streamCompact(s, in, s"$work/out", s"$work/ckpt")
+        try q1.processAllAvailable() finally q1.stop() // kill after batch 1
+        land(1) // input lands during the outage
+        val q2 = graft.streaming.StreamingJobs
+          .streamCompact(s, in, s"$work/out", s"$work/ckpt")
+        try q2.processAllAvailable() finally q2.stop()
+        s.read.parquet(s"$work/out")
+          .groupBy(col("s3_bucket"))
+          .agg(count(lit(1)).as("n_requests"),
+            sum(col("bytes_sent")).as("total_bytes"),
+            max(col("http_status")).as("max_status"))
+          .orderBy("s3_bucket")
       }
-      land(0)
-      val q1 = graft.streaming.StreamingJobs
-        .streamCompact(s, in, s"$work/out", s"$work/ckpt")
-      try q1.processAllAvailable() finally q1.stop() // kill after batch 1
-      land(1) // input lands during the outage
-      val q2 = graft.streaming.StreamingJobs
-        .streamCompact(s, in, s"$work/out", s"$work/ckpt")
-      try q2.processAllAvailable() finally q2.stop()
-      s.read.parquet(s"$work/out")
-        .groupBy(col("s3_bucket"))
-        .agg(count(lit(1)).as("n_requests"),
-          sum(col("bytes_sent")).as("total_bytes"),
-          max(col("http_status")).as("max_status"))
-        .orderBy("s3_bucket")
     },
 
     // foreachBatch CDC upsert in the gate — WITH a mid-stream kill and
@@ -5446,35 +5404,27 @@ object PipelineQueries {
         |SELECT user_id, event_id AS last_event_id,
         |  CAST(ts AS TIMESTAMP) AS last_ts, CAST(n AS BIGINT) AS n_updates
         |FROM l WHERE r = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
-      val work = java.nio.file.Files.createTempDirectory("graft-st08").toString
-      val in = s"$work/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
-      def land(phase: Int): Unit = { // stage, then move into the source dir
-        val staging = s"$work/staging$phase"
-        ev.filter(pmod(col("event_id"), lit(2)) === phase)
-          .repartition(2).write.mode("overwrite").parquet(staging)
-        val destP = java.nio.file.Paths.get(in)
-        val files = java.nio.file.Files.list(java.nio.file.Paths.get(staging))
-        try files.filter(_.getFileName.toString.startsWith("part-"))
-          .forEach(p => java.nio.file.Files.move(p,
-            destP.resolve(s"p$phase-${p.getFileName}")))
-        finally files.close()
+      withGateWork(s, "st08", dir) { work =>
+        val in = s"$work/in"
+        val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
+        def land(phase: Int): Unit = landPhase(work, in, phase,
+          ev.filter(pmod(col("event_id"), lit(2)) === phase),
+          (d, at) => d.repartition(2).write.mode("overwrite").parquet(at))
+        val sch = ev.schema
+        def stream() = s.readStream.schema(sch)
+          .option("maxFilesPerTrigger", "1").parquet(in)
+        land(0)
+        val (q1, _) =
+          graft.streaming.StreamingJobs.cdcUpsertQuery(stream(), work)
+        try q1.processAllAvailable() finally q1.stop() // kill after phase 0
+        land(1) // updates land during the outage
+        graft.streaming.StreamingJobs.cdcUpsertStream(stream(), work)
+          .select(col("user_id"),
+            col("_m.event_id").as("last_event_id"),
+            col("_m.ts").cast(TimestampNTZType).as("last_ts"),
+            col("n_updates"))
+          .orderBy("user_id")
       }
-      val sch = ev.schema
-      def stream() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      land(0)
-      val (q1, _) = graft.streaming.StreamingJobs.cdcUpsertQuery(stream(), work)
-      try q1.processAllAvailable() finally q1.stop() // kill after phase 0
-      land(1) // updates land during the outage
-      val table = graft.streaming.StreamingJobs.cdcUpsertStream(stream(), work)
-      table
-        .select(col("user_id"),
-          col("_m.event_id").as("last_event_id"),
-          col("_m.ts").cast(TimestampNTZType).as("last_ts"),
-          col("n_updates"))
-        .orderBy("user_id")
     },
 
     // CDC key DELETION — the right-to-be-forgotten arm of st08's
@@ -5496,28 +5446,21 @@ object PipelineQueries {
         |SELECT user_id, event_id AS last_event_id,
         |  CAST(ts AS TIMESTAMP) AS last_ts, CAST(n AS BIGINT) AS n_updates
         |FROM l WHERE r = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
-      // name-keyed per SF + deleted before and after (the st10 hygiene):
-      // a fresh temp dir per invocation would leave an events-sized CDC
-      // store in /tmp per bench/verify execution
-      val work = gateWork(s, "st13", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
-      graft.streaming.StreamingJobs.cdcApplyBatch(
-        ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, work, 8)
-      graft.streaming.StreamingJobs.cdcApplyBatch(
-        ev.filter(pmod(col("event_id"), lit(2)) === 1), 1L, work, 8)
-      graft.streaming.StreamingJobs.cdcDeleteKeys(s, work,
-        ev.filter(col("user_id") % 10 === 7).select("user_id").distinct())
-      val out = graft.streaming.StreamingJobs.cdcTable(s, work)
-        .select(col("user_id"),
-          col("_m.event_id").as("last_event_id"),
-          col("_m.ts").cast(TimestampNTZType).as("last_ts"),
-          col("n_updates"))
-        .orderBy("user_id")
-        .localCheckpoint() // pin the result, then drop the work tree
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "st13", dir) { work =>
+        val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
+        graft.streaming.StreamingJobs.cdcApplyBatch(
+          ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, work, 8)
+        graft.streaming.StreamingJobs.cdcApplyBatch(
+          ev.filter(pmod(col("event_id"), lit(2)) === 1), 1L, work, 8)
+        graft.streaming.StreamingJobs.cdcDeleteKeys(s, work,
+          ev.filter(col("user_id") % 10 === 7).select("user_id").distinct())
+        graft.streaming.StreamingJobs.cdcTable(s, work)
+          .select(col("user_id"),
+            col("_m.event_id").as("last_event_id"),
+            col("_m.ts").cast(TimestampNTZType).as("last_ts"),
+            col("n_updates"))
+          .orderBy("user_id")
+      }
     },
 
     // CDC RETENTION WINDOW — the TTL arm of the st08 maintained table,
@@ -5546,29 +5489,22 @@ object PipelineQueries {
         |  CAST(ts AS TIMESTAMP) AS last_ts, CAST(n AS BIGINT) AS n_updates
         |FROM l JOIN keep USING (user_id)
         |WHERE r = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
-      // name-keyed per SF + deleted before and after (the st10 hygiene):
-      // a fresh temp dir per invocation would leave an events-sized CDC
-      // store in /tmp per bench/verify execution
-      val work = gateWork(s, "st17", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
-      val cut = to_timestamp(lit("2024-01-10 00:00:00"))
-      graft.streaming.StreamingJobs.cdcApplyBatch(
-        ev.filter(col("ts") < cut), 0L, work, 8)
-      graft.streaming.StreamingJobs.cdcApplyBatch(
-        ev.filter(col("ts") >= cut && col("user_id") % 10 =!= 7), 1L,
-        work, 8)
-      graft.streaming.StreamingJobs.cdcRetention(s, work, cut)
-      val out = graft.streaming.StreamingJobs.cdcTable(s, work)
-        .select(col("user_id"),
-          col("_m.event_id").as("last_event_id"),
-          col("_m.ts").cast(TimestampNTZType).as("last_ts"),
-          col("n_updates"))
-        .orderBy("user_id")
-        .localCheckpoint() // pin the result, then drop the work tree
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "st17", dir) { work =>
+        val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
+        val cut = to_timestamp(lit("2024-01-10 00:00:00"))
+        graft.streaming.StreamingJobs.cdcApplyBatch(
+          ev.filter(col("ts") < cut), 0L, work, 8)
+        graft.streaming.StreamingJobs.cdcApplyBatch(
+          ev.filter(col("ts") >= cut && col("user_id") % 10 =!= 7), 1L,
+          work, 8)
+        graft.streaming.StreamingJobs.cdcRetention(s, work, cut)
+        graft.streaming.StreamingJobs.cdcTable(s, work)
+          .select(col("user_id"),
+            col("_m.event_id").as("last_event_id"),
+            col("_m.ts").cast(TimestampNTZType).as("last_ts"),
+            col("n_updates"))
+          .orderBy("user_id")
+      }
     },
 
     // CDC SCHEMA EVOLUTION — the contract the commit log can now
@@ -5595,26 +5531,22 @@ object PipelineQueries {
         |  CAST(amount AS BIGINT) AS last_amount,
         |  CAST(n AS BIGINT) AS n_updates
         |FROM l WHERE r = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
-      val work = gateWork(s, "st18", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
-      graft.streaming.StreamingJobs.cdcApplyBatch(
-        ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, work, 8)
-      graft.streaming.StreamingJobs.cdcApplyBatch(
-        ev.filter(pmod(col("event_id"), lit(2)) === 1)
-          .withColumn("amount", pmod(col("event_id"), lit(97L))),
-        1L, work, 8)
-      val out = graft.streaming.StreamingJobs.cdcTable(s, work)
-        .select(col("user_id"),
-          col("_m.event_id").as("last_event_id"),
-          col("_m.ts").cast(TimestampNTZType).as("last_ts"),
-          col("_m.amount").as("last_amount"),
-          col("n_updates"))
-        .orderBy("user_id")
-        .localCheckpoint() // pin the result, then drop the work tree
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "st18", dir) { work =>
+        val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
+        graft.streaming.StreamingJobs.cdcApplyBatch(
+          ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, work, 8)
+        graft.streaming.StreamingJobs.cdcApplyBatch(
+          ev.filter(pmod(col("event_id"), lit(2)) === 1)
+            .withColumn("amount", pmod(col("event_id"), lit(97L))),
+          1L, work, 8)
+        graft.streaming.StreamingJobs.cdcTable(s, work)
+          .select(col("user_id"),
+            col("_m.event_id").as("last_event_id"),
+            col("_m.ts").cast(TimestampNTZType).as("last_ts"),
+            col("_m.amount").as("last_amount"),
+            col("n_updates"))
+          .orderBy("user_id")
+      }
     },
 
     // Streaming NEAR-dup ingestion screen — dd19's registry lifecycle
@@ -5641,50 +5573,42 @@ object PipelineQueries {
         |  CAST((SELECT count(*) FROM cl) AS BIGINT) AS n_clones,
         |  CAST(1 AS BIGINT) AS all_flagged,
         |  CAST(1 AS BIGINT) AS batch0_clean""".stripMargin) { (s, dir) =>
-      // name-keyed per SF + deleted before AND after the run (the sim16
-      // hygiene): a fresh createTempDirectory per invocation would leave
-      // a corpus-sized copy (docs, registry, checkpoint) in /tmp per
-      // bench/verify execution; reuse without the pre-delete would
-      // resume the old checkpoint and accumulate stale verdict batches
-      val work = gateWork(s, "st10", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val in = s"$work/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val d = docs(s, dir).select("doc_id", "text")
-      val b0 = d.filter(col("doc_id") % 2 === 0)
-      val b1 = d.filter(col("doc_id") % 2 === 1).unionAll(
-        d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
-          .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
-      val sch = b0.schema
-      def stream() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      landPhase(work, in, 0, b0)
-      val q0 = graft.streaming.StreamingJobs.nearDupScreenStream(stream(), work)
-      try q0.processAllAvailable() finally q0.stop() // outage between batches
-      landPhase(work, in, 1, b1)
-      val q1 = graft.streaming.StreamingJobs.nearDupScreenStream(stream(), work)
-      try q1.processAllAvailable() finally q1.stop()
-      val v = s.read.parquet(s"$work/verdicts")
-      val flagged = v.filter(!col("keep")).select(col("doc_id"))
-        .withColumn("_f", lit(1L))
-      val clones = b1.join(
-        b0.filter(size(split(col("text"), " ")) >= 3)
-          .select("text").distinct(), Seq("text"))
-        .select("doc_id").distinct()
-      val totals = v.agg(count(lit(1)).cast(LongType).as("n_screened"),
-        coalesce(max(when(col("batch") === 0 && !col("keep"), 1L)), lit(0L))
-          .as("_b0bad"))
-      val cover = clones.join(flagged, Seq("doc_id"), "left")
-        .agg(count(lit(1)).cast(LongType).as("n_clones"),
-          coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
-            .as("all_flagged"))
-      val out = totals.crossJoin(cover)
-        .select(col("n_screened"), col("n_clones"), col("all_flagged"),
-          (lit(1L) - col("_b0bad")).as("batch0_clean"))
-        .localCheckpoint() // pin the verdict, then drop the work tree
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "st10", dir) { work =>
+        val in = s"$work/in"
+        val d = docs(s, dir).select("doc_id", "text")
+        val b0 = d.filter(col("doc_id") % 2 === 0)
+        val b1 = d.filter(col("doc_id") % 2 === 1).unionAll(
+          d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
+            .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
+        val sch = b0.schema
+        def stream() = s.readStream.schema(sch)
+          .option("maxFilesPerTrigger", "1").parquet(in)
+        landPhase(work, in, 0, b0)
+        val q0 =
+          graft.streaming.StreamingJobs.nearDupScreenStream(stream(), work)
+        try q0.processAllAvailable() finally q0.stop() // outage between batches
+        landPhase(work, in, 1, b1)
+        val q1 =
+          graft.streaming.StreamingJobs.nearDupScreenStream(stream(), work)
+        try q1.processAllAvailable() finally q1.stop()
+        val v = s.read.parquet(s"$work/verdicts")
+        val flagged = v.filter(!col("keep")).select(col("doc_id"))
+          .withColumn("_f", lit(1L))
+        val clones = b1.join(
+          b0.filter(size(split(col("text"), " ")) >= 3)
+            .select("text").distinct(), Seq("text"))
+          .select("doc_id").distinct()
+        val totals = v.agg(count(lit(1)).cast(LongType).as("n_screened"),
+          coalesce(max(when(col("batch") === 0 && !col("keep"), 1L)), lit(0L))
+            .as("_b0bad"))
+        val cover = clones.join(flagged, Seq("doc_id"), "left")
+          .agg(count(lit(1)).cast(LongType).as("n_clones"),
+            coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
+              .as("all_flagged"))
+        totals.crossJoin(cover)
+          .select(col("n_screened"), col("n_clones"), col("all_flagged"),
+            (lit(1L) - col("_b0bad")).as("batch0_clean"))
+      }
     },
 
     // STREAMING DELTA SERVING — the one serving-lifecycle edge with no
@@ -5701,32 +5625,27 @@ object PipelineQueries {
         |  CAST(1 AS BIGINT) AS recall_ok
         |FROM (SELECT count(*) AS nq FROM embeddings WHERE vec_id < 10) q,
         |     (SELECT count(*) AS n_all FROM embeddings) c""".stripMargin) { (s, dir) =>
-      val work = gateWork(s, "st11", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val in = s"$work/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < 10)
-      val stale = Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 9))
-      val d0 = e.filter(col("vec_id") % 20 === 9)
-      val d1 = e.filter(col("vec_id") % 20 === 19)
-      val sch = e.schema
-      def stream() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      landPhase(work, in, 0, d0)
-      val s0 = graft.streaming.StreamingJobs.vectorDeltaStream(stream(), work)
-      try s0.processAllAvailable() finally s0.stop() // outage between batches
-      landPhase(work, in, 1, d1)
-      val s1 = graft.streaming.StreamingJobs.vectorDeltaStream(stream(), work)
-      try s1.processAllAvailable() finally s1.stop()
-      val served = Similarity.ivfSearchWithDelta(q, stale,
-        graft.streaming.StreamingJobs.deltaLog(s, work), 5)
-      val out = recallFloor(Similarity.cosineTopK(q, e, 5), served,
-        floorPct = 85)
-        .localCheckpoint() // pin the verdict, then drop the work tree
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "st11", dir) { work =>
+        val in = s"$work/in"
+        val e = emb(s, dir)
+        val q = e.filter(col("vec_id") < 10)
+        val stale = Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 9))
+        val d0 = e.filter(col("vec_id") % 20 === 9)
+        val d1 = e.filter(col("vec_id") % 20 === 19)
+        val sch = e.schema
+        def stream() = s.readStream.schema(sch)
+          .option("maxFilesPerTrigger", "1").parquet(in)
+        landPhase(work, in, 0, d0)
+        val s0 = graft.streaming.StreamingJobs.vectorDeltaStream(stream(), work)
+        try s0.processAllAvailable() finally s0.stop() // outage between batches
+        landPhase(work, in, 1, d1)
+        val s1 = graft.streaming.StreamingJobs.vectorDeltaStream(stream(), work)
+        try s1.processAllAvailable() finally s1.stop()
+        val served = Similarity.ivfSearchWithDelta(q, stale,
+          graft.streaming.StreamingJobs.deltaLog(s, work), 5)
+        recallFloor(Similarity.cosineTopK(q, e, 5), served,
+          floorPct = 85)
+      }
     },
 
     // ONLINE registry compaction — the st10 screen run for FIVE
@@ -5756,65 +5675,58 @@ object PipelineQueries {
         |  CAST((SELECT count(*) FROM cl) AS BIGINT) AS n_clones,
         |  CAST(1 AS BIGINT) AS all_flagged,
         |  CAST(1 AS BIGINT) AS parts_bounded""".stripMargin) { (s, dir) =>
-      val work = gateWork(s, "st12", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val in = s"$work/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val d = docs(s, dir).select("doc_id", "text")
-      val planted = d
-        .filter(col("doc_id") % 4 === 0 && col("doc_id") < 40)
-        .select((col("doc_id") + 10000001L).as("doc_id"), col("text"))
-      val sch = d.schema
-      def stream() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      // batches 0..2 land one at a time (deterministic batch order for
-      // the registry-seeding prefix); the restart happens mid-cadence,
-      // between a compacted batch and the next compaction
-      landPhase(work, in, 0, d.filter(col("doc_id") % 4 === 0))
-      val q0 = graft.streaming.StreamingJobs.nearDupScreenStream(stream(),
-        work, compactEvery = 1)
-      try {
-        q0.processAllAvailable()
-        landPhase(work, in, 1, d.filter(col("doc_id") % 4 === 1))
-        q0.processAllAvailable()
-        landPhase(work, in, 2, d.filter(col("doc_id") % 4 === 2))
-        q0.processAllAvailable()
-      } finally q0.stop() // outage
-      // batches 3 and 4 land during the outage; their relative order
-      // is irrelevant to the invariants (the planted clones' originals
-      // are all in the batch-0 registry slice)
-      landPhase(work, in, 3, d.filter(col("doc_id") % 4 === 3))
-      landPhase(work, in, 4, planted)
-      val q1 = graft.streaming.StreamingJobs.nearDupScreenStream(stream(),
-        work, compactEvery = 1)
-      try q1.processAllAvailable() finally q1.stop()
-      val v = s.read.parquet(s"$work/verdicts")
-      val flagged = v.filter(!col("keep")).select(col("doc_id"))
-        .withColumn("_f", lit(1L))
-      // expected-flag set: planted clones whose ORIGINAL text shingles
-      // (≥ 3 words) — those originals all survived batch 0's empty-
-      // registry screen, so their signatures are in the registry no
-      // matter how many times it was folded since
-      val clones = planted.join(
-        d.filter(col("doc_id") % 4 === 0 &&
-            size(split(col("text"), " ")) >= 3)
-          .select("text").distinct(), Seq("text"))
-        .select("doc_id").distinct()
-      val nParts = workFs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$work/registry"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      val totals = v.agg(count(lit(1)).cast(LongType).as("n_screened"))
-      val cover = clones.join(flagged, Seq("doc_id"), "left")
-        .agg(count(lit(1)).cast(LongType).as("n_clones"),
-          coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
-            .as("all_flagged"))
-      val out = totals.crossJoin(cover)
-        .select(col("n_screened"), col("n_clones"), col("all_flagged"),
-          lit(if (nParts <= 2) 1L else 0L).as("parts_bounded"))
-        .localCheckpoint() // pin the verdict, then drop the work tree
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "st12", dir) { work =>
+        val in = s"$work/in"
+        val d = docs(s, dir).select("doc_id", "text")
+        val planted = d
+          .filter(col("doc_id") % 4 === 0 && col("doc_id") < 40)
+          .select((col("doc_id") + 10000001L).as("doc_id"), col("text"))
+        val sch = d.schema
+        def stream() = s.readStream.schema(sch)
+          .option("maxFilesPerTrigger", "1").parquet(in)
+        // batches 0..2 land one at a time (deterministic batch order for
+        // the registry-seeding prefix); the restart happens mid-cadence,
+        // between a compacted batch and the next compaction
+        landPhase(work, in, 0, d.filter(col("doc_id") % 4 === 0))
+        val q0 = graft.streaming.StreamingJobs.nearDupScreenStream(stream(),
+          work, compactEvery = 1)
+        try {
+          q0.processAllAvailable()
+          landPhase(work, in, 1, d.filter(col("doc_id") % 4 === 1))
+          q0.processAllAvailable()
+          landPhase(work, in, 2, d.filter(col("doc_id") % 4 === 2))
+          q0.processAllAvailable()
+        } finally q0.stop() // outage
+        // batches 3 and 4 land during the outage; their relative order
+        // is irrelevant to the invariants (the planted clones' originals
+        // are all in the batch-0 registry slice)
+        landPhase(work, in, 3, d.filter(col("doc_id") % 4 === 3))
+        landPhase(work, in, 4, planted)
+        val q1 = graft.streaming.StreamingJobs.nearDupScreenStream(stream(),
+          work, compactEvery = 1)
+        try q1.processAllAvailable() finally q1.stop()
+        val v = s.read.parquet(s"$work/verdicts")
+        val flagged = v.filter(!col("keep")).select(col("doc_id"))
+          .withColumn("_f", lit(1L))
+        // expected-flag set: planted clones whose ORIGINAL text shingles
+        // (≥ 3 words) — those originals all survived batch 0's empty-
+        // registry screen, so their signatures are in the registry no
+        // matter how many times it was folded since
+        val clones = planted.join(
+          d.filter(col("doc_id") % 4 === 0 &&
+              size(split(col("text"), " ")) >= 3)
+            .select("text").distinct(), Seq("text"))
+          .select("doc_id").distinct()
+        val nParts = batchParts(s, s"$work/registry")
+        val totals = v.agg(count(lit(1)).cast(LongType).as("n_screened"))
+        val cover = clones.join(flagged, Seq("doc_id"), "left")
+          .agg(count(lit(1)).cast(LongType).as("n_clones"),
+            coalesce(min(coalesce(col("_f"), lit(0L))), lit(1L))
+              .as("all_flagged"))
+        totals.crossJoin(cover)
+          .select(col("n_screened"), col("n_clones"), col("all_flagged"),
+            lit(if (nParts <= 2) 1L else 0L).as("parts_bounded"))
+      }
     },
 
     // DELTA-LOG DELETION — the right-to-be-forgotten hole the index
@@ -5845,43 +5757,39 @@ object PipelineQueries {
         |      WHERE vec_id % 10 <> 4 AND vec_id % 20 <> 19) c,
         |     (SELECT count(*) AS n FROM embeddings
         |      WHERE vec_id % 20 = 9) l""".stripMargin) { (s, dir) =>
-      val work = gateWork(s, "st14", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val in = s"$work/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < 10)
-      val stale = Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 9))
-      val sch = e.schema
-      def stream() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      landPhase(work, in, 0, e.filter(col("vec_id") % 20 === 9))
-      val s0 = graft.streaming.StreamingJobs.vectorDeltaStream(stream(), work)
-      try {
-        s0.processAllAvailable()
-        landPhase(work, in, 1, e.filter(col("vec_id") % 20 === 19))
-        s0.processAllAvailable()
-      } finally s0.stop()
-      val tomb = e.filter(col("vec_id") % 10 === 4 ||
-          col("vec_id") % 20 === 19).select("vec_id")
-      graft.streaming.StreamingJobs.deltaLogDeleteIds(s, work, tomb)
-      val served = Similarity.ivfSearchWithDelta(q,
-          Similarity.ivfDeleteIds(stale, tomb),
-          graft.streaming.StreamingJobs.deltaLog(s, work), 5)
-        .localCheckpoint() // two consumers: recall + the deleted-id scan
-      val leaked = served.join(tomb.select(col("vec_id").as("cid")), Seq("cid"))
-        .agg(when(count(lit(1)) === 0, 1L).otherwise(0L).as("none_deleted"))
-      val logRows = graft.streaming.StreamingJobs.deltaLog(s, work)
-        .agg(count(lit(1)).as("log_rows"))
-      val surv = e.filter(col("vec_id") % 10 =!= 4 &&
-        col("vec_id") % 20 =!= 19)
-      val out = recallFloor(Similarity.cosineTopK(q, surv, 5), served,
-          floorPct = 85)
-        .crossJoin(broadcast(leaked)).crossJoin(broadcast(logRows))
-        .localCheckpoint() // pin the verdict, then drop the work tree
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "st14", dir) { work =>
+        val in = s"$work/in"
+        val e = emb(s, dir)
+        val q = e.filter(col("vec_id") < 10)
+        val stale = Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 9))
+        val sch = e.schema
+        def stream() = s.readStream.schema(sch)
+          .option("maxFilesPerTrigger", "1").parquet(in)
+        landPhase(work, in, 0, e.filter(col("vec_id") % 20 === 9))
+        val s0 = graft.streaming.StreamingJobs.vectorDeltaStream(stream(), work)
+        try {
+          s0.processAllAvailable()
+          landPhase(work, in, 1, e.filter(col("vec_id") % 20 === 19))
+          s0.processAllAvailable()
+        } finally s0.stop()
+        val tomb = e.filter(col("vec_id") % 10 === 4 ||
+            col("vec_id") % 20 === 19).select("vec_id")
+        graft.streaming.StreamingJobs.deltaLogDeleteIds(s, work, tomb)
+        val served = Similarity.ivfSearchWithDelta(q,
+            Similarity.ivfDeleteIds(stale, tomb),
+            graft.streaming.StreamingJobs.deltaLog(s, work), 5)
+          .localCheckpoint() // two consumers: recall + the deleted-id scan
+        val leaked =
+          served.join(tomb.select(col("vec_id").as("cid")), Seq("cid"))
+          .agg(when(count(lit(1)) === 0, 1L).otherwise(0L).as("none_deleted"))
+        val logRows = graft.streaming.StreamingJobs.deltaLog(s, work)
+          .agg(count(lit(1)).as("log_rows"))
+        val surv = e.filter(col("vec_id") % 10 =!= 4 &&
+          col("vec_id") % 20 =!= 19)
+        recallFloor(Similarity.cosineTopK(q, surv, 5), served,
+            floorPct = 85)
+          .crossJoin(broadcast(leaked)).crossJoin(broadcast(logRows))
+      }
     },
 
     // DELTA-LOG ABSORPTION + GC — st11's contract ("absorb empties the
@@ -5904,47 +5812,40 @@ object PipelineQueries {
         |  CAST(1 AS BIGINT) AS absorb_noop
         |FROM (SELECT count(*) AS nq FROM embeddings WHERE vec_id < 10) q,
         |     (SELECT count(*) AS n_all FROM embeddings) c""".stripMargin) { (s, dir) =>
-      val work = gateWork(s, "st15", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val in = s"$work/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < 10)
-      Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 9))
-        .save(s"$work/idx")
-      val sch = e.schema
-      def stream() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      landPhase(work, in, 0, e.filter(col("vec_id") % 20 === 9))
-      val s0 = graft.streaming.StreamingJobs.vectorDeltaStream(stream(), work)
-      try {
-        s0.processAllAvailable()
-        landPhase(work, in, 1, e.filter(col("vec_id") % 20 === 19))
-        s0.processAllAvailable()
-      } finally s0.stop()
-      val absorbed = graft.streaming.StreamingJobs.ivfAbsorbLog(
-        s, s"$work/idx", work)
-      val noop = graft.streaming.StreamingJobs.ivfAbsorbLog(
-        s, s"$work/idx", work)
-      val remaining = workFs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$work/delta"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      // emptied = zero DATA rows, still readable through deltaLog (the
-      // one schema-bearing placeholder dir keeps the serve path alive)
-      val logEmpty = remaining <= 1 &&
-        graft.streaming.StreamingJobs.deltaLog(s, work).isEmpty
-      val served = Similarity.ivfSearch(q,
-        Similarity.ivfLoad(s, s"$work/idx"), 5)
-      val out = recallFloor(Similarity.cosineTopK(q, e, 5), served,
-          floorPct = 85)
-        .select(col("n_exact"), col("recall_ok"),
-          lit(absorbed.size.toLong).as("n_absorbed"),
-          lit(if (logEmpty) 1L else 0L).as("log_empty"),
-          lit(if (noop.isEmpty) 1L else 0L).as("absorb_noop"))
-        .localCheckpoint() // pin the verdict, then drop the work tree
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "st15", dir) { work =>
+        val in = s"$work/in"
+        val e = emb(s, dir)
+        val q = e.filter(col("vec_id") < 10)
+        Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 9))
+          .save(s"$work/idx")
+        val sch = e.schema
+        def stream() = s.readStream.schema(sch)
+          .option("maxFilesPerTrigger", "1").parquet(in)
+        landPhase(work, in, 0, e.filter(col("vec_id") % 20 === 9))
+        val s0 = graft.streaming.StreamingJobs.vectorDeltaStream(stream(), work)
+        try {
+          s0.processAllAvailable()
+          landPhase(work, in, 1, e.filter(col("vec_id") % 20 === 19))
+          s0.processAllAvailable()
+        } finally s0.stop()
+        val absorbed = graft.streaming.StreamingJobs.ivfAbsorbLog(
+          s, s"$work/idx", work)
+        val noop = graft.streaming.StreamingJobs.ivfAbsorbLog(
+          s, s"$work/idx", work)
+        val remaining = batchParts(s, s"$work/delta")
+        // emptied = zero DATA rows, still readable through deltaLog (the
+        // one schema-bearing placeholder dir keeps the serve path alive)
+        val logEmpty = remaining <= 1 &&
+          graft.streaming.StreamingJobs.deltaLog(s, work).isEmpty
+        val served = Similarity.ivfSearch(q,
+          Similarity.ivfLoad(s, s"$work/idx"), 5)
+        recallFloor(Similarity.cosineTopK(q, e, 5), served,
+            floorPct = 85)
+          .select(col("n_exact"), col("recall_ok"),
+            lit(absorbed.size.toLong).as("n_absorbed"),
+            lit(if (logEmpty) 1L else 0L).as("log_empty"),
+            lit(if (noop.isEmpty) 1L else 0L).as("absorb_noop"))
+      }
     },
 
     // st15 on the PRODUCTION architecture: the streamed log's rows
@@ -5963,47 +5864,40 @@ object PipelineQueries {
         |  CAST(1 AS BIGINT) AS absorb_noop
         |FROM (SELECT count(*) AS nq FROM embeddings WHERE vec_id < 10) q,
         |     (SELECT count(*) AS n_all FROM embeddings) c""".stripMargin) { (s, dir) =>
-      val work = gateWork(s, "st16", dir)
-      val workP = new org.apache.hadoop.fs.Path(work)
-      val workFs = workP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val in = s"$work/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < 10)
-      Similarity.ivfPqBuild(e.filter(col("vec_id") % 10 =!= 9))
-        .save(s"$work/idx")
-      val sch = e.schema
-      def stream() = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      landPhase(work, in, 0, e.filter(col("vec_id") % 20 === 9))
-      val s0 = graft.streaming.StreamingJobs.vectorDeltaStream(stream(), work)
-      try {
-        s0.processAllAvailable()
-        landPhase(work, in, 1, e.filter(col("vec_id") % 20 === 19))
-        s0.processAllAvailable()
-      } finally s0.stop()
-      val absorbed = graft.streaming.StreamingJobs.ivfPqAbsorbLog(
-        s, s"$work/idx", work)
-      val noop = graft.streaming.StreamingJobs.ivfPqAbsorbLog(
-        s, s"$work/idx", work)
-      val remaining = workFs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$work/delta"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      // emptied = zero DATA rows, still readable through deltaLog (the
-      // one schema-bearing placeholder dir keeps the serve path alive)
-      val logEmpty = remaining <= 1 &&
-        graft.streaming.StreamingJobs.deltaLog(s, work).isEmpty
-      val served = Similarity.ivfPqSearch(q,
-        Similarity.ivfPqLoad(s, s"$work/idx"), e, 5)
-      val out = recallFloor(Similarity.l2TopK(q, e, 5), served,
-          floorPct = 80)
-        .select(col("n_exact"), col("recall_ok"),
-          lit(absorbed.size.toLong).as("n_absorbed"),
-          lit(if (logEmpty) 1L else 0L).as("log_empty"),
-          lit(if (noop.isEmpty) 1L else 0L).as("absorb_noop"))
-        .localCheckpoint() // pin the verdict, then drop the work tree
-      workFs.delete(workP, true)
-      out
+      withGateWork(s, "st16", dir) { work =>
+        val in = s"$work/in"
+        val e = emb(s, dir)
+        val q = e.filter(col("vec_id") < 10)
+        Similarity.ivfPqBuild(e.filter(col("vec_id") % 10 =!= 9))
+          .save(s"$work/idx")
+        val sch = e.schema
+        def stream() = s.readStream.schema(sch)
+          .option("maxFilesPerTrigger", "1").parquet(in)
+        landPhase(work, in, 0, e.filter(col("vec_id") % 20 === 9))
+        val s0 = graft.streaming.StreamingJobs.vectorDeltaStream(stream(), work)
+        try {
+          s0.processAllAvailable()
+          landPhase(work, in, 1, e.filter(col("vec_id") % 20 === 19))
+          s0.processAllAvailable()
+        } finally s0.stop()
+        val absorbed = graft.streaming.StreamingJobs.ivfPqAbsorbLog(
+          s, s"$work/idx", work)
+        val noop = graft.streaming.StreamingJobs.ivfPqAbsorbLog(
+          s, s"$work/idx", work)
+        val remaining = batchParts(s, s"$work/delta")
+        // emptied = zero DATA rows, still readable through deltaLog (the
+        // one schema-bearing placeholder dir keeps the serve path alive)
+        val logEmpty = remaining <= 1 &&
+          graft.streaming.StreamingJobs.deltaLog(s, work).isEmpty
+        val served = Similarity.ivfPqSearch(q,
+          Similarity.ivfPqLoad(s, s"$work/idx"), e, 5)
+        recallFloor(Similarity.l2TopK(q, e, 5), served,
+            floorPct = 80)
+          .select(col("n_exact"), col("recall_ok"),
+            lit(absorbed.size.toLong).as("n_absorbed"),
+            lit(if (logEmpty) 1L else 0L).as("log_empty"),
+            lit(if (noop.isEmpty) 1L else 0L).as("absorb_noop"))
+      }
     },
 
     // Time-series gap fill: the hourly rollup densified onto the full

@@ -17,17 +17,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - timestamps stay TIMESTAMP_NTZ end-to-end (Spark writes plain
   *    TIMESTAMP as UTC-adjusted, which DuckDB reads as TIMESTAMPTZ and
   *    the hash compare would diverge).
+  *
+  * The oracle is built on first read, not with the def: some builders
+  * replay a gate's contract on the driver (`Multimodal.nearDupOracleSql`
+  * decodes and dHashes every planted image), and only `Verify` reads
+  * oracles — Bench, Profile and the tools only run the queries.
   */
-final case class QueryDef(
-    name: String,
-    run: (SparkSession, String) => DataFrame,
-    oracle: Option[String]) {
+final class QueryDef private (
+    val name: String,
+    val run: (SparkSession, String) => DataFrame,
+    oracleSql: () => String) {
+  lazy val oracle: Option[String] = Some(oracleSql())
   def tuple: (String, (SparkSession, String) => DataFrame) = name -> run
 }
 
 object QueryDef {
-  /** Shorthand for defs whose oracle exists. */
-  def apply(name: String, oracle: String)(
+  def apply(name: String, oracle: => String)(
       run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, Some(oracle))
+    new QueryDef(name, run, () => oracle)
 }

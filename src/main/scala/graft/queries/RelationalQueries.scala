@@ -61,27 +61,15 @@ object RelationalQueries {
     }
 
   /** q42 body: persist both join sides bucketed + bucket-sorted on the
-    * join key under a stable per-process tmpdir (writeBucketedAt clears
-    * the location first, so reruns overwrite in place instead of
-    * leaking one dir per run), then run the priority rollup over the
-    * co-located merge join. 8 buckets ≈ sf0.01; at 100 TB the same
-    * layout uses O(thousands) of buckets and is written ONCE, amortized
-    * over every subsequent query on the key.
+    * join key under the gate's [[PipelineQueries.gateWork]] tree
+    * (writeBucketedAt clears each location first, so reruns overwrite
+    * in place), then run the priority rollup over the co-located merge
+    * join. 8 buckets ≈ sf0.01; at 100 TB the same layout uses
+    * O(thousands) of buckets and is written ONCE, amortized over every
+    * subsequent query on the key. The result stays lazy (PlanSpec
+    * inspects its plan), so the tree outlives the call and is deleted
+    * when the JVM exits.
     */
-  private lazy val q42Base: String = {
-    val d = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_q42_bucketed")
-    // best-effort cleanup when the JVM exits; the stable name means a
-    // surviving dir is reused, never accumulated
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(d)
-    }))
-    d.toString
-  }
-
   private def bucketedPriorityRollup(s: SparkSession, dir: String): DataFrame = {
     val buckets = 8
     // Spark >= 3.0 hides bucket sort order from the planner by default
@@ -98,13 +86,16 @@ object RelationalQueries {
     // order it lacks.
     val s2 = s.newSession()
     s2.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    val work = PipelineQueries.gateWork(s, "q42", dir)
     graft.operators.Bucketing.writeBucketedAt(
       t(s2, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount"),
-      "graft_q42_lineitem", "l_orderkey", buckets, s"$q42Base/lineitem")
+      "graft_q42_lineitem", "l_orderkey", buckets, s"$work/lineitem")
     graft.operators.Bucketing.writeBucketedAt(
       t(s2, dir, "orders")
         .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority")),
-      "graft_q42_orders", "l_orderkey", buckets, s"$q42Base/orders")
+      "graft_q42_orders", "l_orderkey", buckets, s"$work/orders")
+    val workP = new org.apache.hadoop.fs.Path(work)
+    workP.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(workP)
     s2.table("graft_q42_lineitem").hint("merge")
       .join(s2.table("graft_q42_orders"), "l_orderkey")
       .groupBy(col("o_orderpriority").as("priority"))

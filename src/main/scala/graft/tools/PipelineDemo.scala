@@ -9,12 +9,18 @@ import graft.streaming.{SessionEvent, StreamingJobs}
   * streaming over a real file source and the multimodal binary pipeline.
   *
   * Usage: runMain graft.tools.PipelineDemo [sfDir] [workDir]
+  *
+  * Without `workDir` the demo works in a fresh temp dir and deletes it
+  * when the JVM exits; a given `workDir` is left in place.
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val work = args.lift(1).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft-demo").toString)
+    val work = args.lift(1).getOrElse {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-demo").toFile
+      sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(tmp))
+      tmp.toString
+    }
     val spark = graft.GraftSession.builder().getOrCreate()
     import spark.implicits._
 

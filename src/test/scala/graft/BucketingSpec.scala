@@ -12,7 +12,7 @@ class BucketingSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     val li = Tables.load(spark, sf, "lineitem")
     val ord = Tables.load(spark, sf, "orders")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketing").toString
+    val dir = SparkTestSession.tempDir("graft-bucketing").toString
     Bucketing.writeBucketedAt(li, "li_b", "l_orderkey", 4, s"$dir/li_b")
     Bucketing.writeBucketedAt(ord.withColumnRenamed("o_orderkey", "l_orderkey"),
       "ord_b", "l_orderkey", 4, s"$dir/ord_b")

@@ -192,7 +192,7 @@ class CurationOpsSpec extends AnyFunSuite {
     // fault-tolerant reliable-checkpoint posture (the cluster setting —
     // localCheckpoint blocks die with their executor); the CC spec in
     // PipelineSpec is the model, this covers the other six loops
-    val dir = java.nio.file.Files.createTempDirectory("graft-iter-cp")
+    val dir = SparkTestSession.tempDir("graft-iter-cp")
     val cpDir = Some(dir.toString)
     val edges = (1L to 9L).flatMap(l => Seq((0L, l), (l, 0L)))
       .toDF("src", "dst")
@@ -263,7 +263,7 @@ class CurationOpsSpec extends AnyFunSuite {
     // other chain's files written inside the same window and the next
     // round would delete that chain's LIVE checkpoint (hits runs three
     // chains on one dir; this pins the contract for any overlap).
-    val dir = java.nio.file.Files.createTempDirectory("graft-roll-conc")
+    val dir = SparkTestSession.tempDir("graft-roll-conc")
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     val rounds = 4
     def chain(start: Long, stepAdd: Long): Seq[Long] = {

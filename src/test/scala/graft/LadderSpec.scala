@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -13,7 +11,7 @@ class LadderSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  def tmp(): String = Files.createTempDirectory("graft-ladder").toString
+  def tmp(): String = SparkTestSession.tempDir("graft-ladder").toString
 
   def rows(dir: String, table: String): Long = Tables.load(spark, dir, table).count()
 

@@ -15,7 +15,7 @@ class LogEtlSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  def tmpDir(): String = Files.createTempDirectory("graft-etl").toString
+  def tmpDir(): String = SparkTestSession.tempDir("graft-etl").toString
 
   val lines: Seq[String] = {
     val fieldSets = (0 until 200).map { i =>

@@ -12,7 +12,7 @@ class MultimodalSpec extends AnyFunSuite {
   lazy val assets = Multimodal.syntheticAssets(spark, 90).cache()
 
   test("asset table round-trips through parquet with binary payload intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mm").toString
+    val dir = SparkTestSession.tempDir("graft-mm").toString
     assets.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     assert(back.schema("payload").dataType ==
@@ -166,7 +166,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("resize plan prunes the payload column from the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mm2").toString
+    val dir = SparkTestSession.tempDir("graft-mm2").toString
     assets.write.mode("overwrite").parquet(dir)
     val plan = Multimodal.resizePlan(spark.read.parquet(dir), 320)
       .queryExecution.executedPlan.toString
@@ -275,7 +275,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
   test("deleteFromHammingRegistry: deleted registry == survivors-built registry, row-for-row; swap is crash-safe") {
     import graft.operators.Dedup
-    val work = java.nio.file.Files.createTempDirectory("graft-mm08").toString
+    val work = SparkTestSession.tempDir("graft-mm08").toString
     val reg = s"$work/reg"
     val hashes = Multimodal.dHashes(Multimodal.syntheticAssets(spark, 90))
       .toDF().cache()

@@ -336,7 +336,7 @@ class PipelineSpec extends AnyFunSuite {
         r.getLong(3))).toSeq
     val fused = rows(Similarity.ivfTopK(q, e, 5))
     // exact-assign round-trip
-    val d1 = java.nio.file.Files.createTempDirectory("ivf-rt").toString
+    val d1 = SparkTestSession.tempDir("ivf-rt").toString
     Similarity.ivfBuild(e).save(d1)
     assert(rows(Similarity.ivfSearch(q, Similarity.ivfLoad(spark, d1), 5))
       == fused, "exact-assign round-trip diverged from fused ivfTopK")
@@ -344,7 +344,7 @@ class PipelineSpec extends AnyFunSuite {
     // from the persisted quantizer (g from the actual centroid count)
     val fused2 = rows(Similarity.ivfTopK(q, e, 5, nlist = 16, nprobe = 10,
       twoLevelAssign = true))
-    val d2 = java.nio.file.Files.createTempDirectory("ivf-rt2").toString
+    val d2 = SparkTestSession.tempDir("ivf-rt2").toString
     Similarity.ivfBuild(e, twoLevelAssign = true).save(d2)
     assert(rows(Similarity.ivfSearch(q, Similarity.ivfLoad(spark, d2), 5,
       nprobe = 10, twoLevelAssign = true)) == fused2,
@@ -364,14 +364,14 @@ class PipelineSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSeq
     val fused = rows(Similarity.ivfPqTopK(q, e, 5))
-    val d1 = java.nio.file.Files.createTempDirectory("ivfpq-rt").toString
+    val d1 = SparkTestSession.tempDir("ivfpq-rt").toString
     Similarity.ivfPqBuild(e).save(d1)
     assert(rows(Similarity.ivfPqSearch(q, Similarity.ivfPqLoad(spark, d1),
       e, 5)) == fused, "exact-assign round-trip diverged from fused ivfPqTopK")
     // two-level build round-trip (the big-corpus config)
     val fused2 = rows(Similarity.ivfPqTopK(q, e, 5, nprobe = 12,
       twoLevelAssign = true))
-    val d2 = java.nio.file.Files.createTempDirectory("ivfpq-rt2").toString
+    val d2 = SparkTestSession.tempDir("ivfpq-rt2").toString
     Similarity.ivfPqBuild(e, twoLevelAssign = true).save(d2)
     assert(rows(Similarity.ivfPqSearch(q, Similarity.ivfPqLoad(spark, d2),
       e, 5, nprobe = 12)) == fused2,
@@ -401,7 +401,7 @@ class PipelineSpec extends AnyFunSuite {
     // the absorbed index is a first-class IvfIndex: it persists, loads,
     // and serves identically (the compaction shape — saving rewrites
     // the cells with the delta folded in)
-    val d = java.nio.file.Files.createTempDirectory("ivf-absorb").toString
+    val d = SparkTestSession.tempDir("ivf-absorb").toString
     absorbed.save(d)
     assert(rows(Similarity.ivfSearch(q, Similarity.ivfLoad(spark, d), 5,
       nprobe = 16)) == a, "persisted absorbed index diverged")
@@ -505,7 +505,7 @@ class PipelineSpec extends AnyFunSuite {
     val idx = Similarity.ivfBuild(corpus, nlist = 3)
     val stats = Similarity.ivfCellStats(idx).localCheckpoint()
     // persistence round-trip: the third artifact loads back identically
-    val d = java.nio.file.Files.createTempDirectory("ivf-stats").toString
+    val d = SparkTestSession.tempDir("ivf-stats").toString
     Similarity.ivfSaveStats(idx, d)
     val loaded = Similarity.ivfLoadStats(spark, d)
     assert(loaded.collect().map(r => (r.getLong(0), r.getLong(1),
@@ -668,7 +668,7 @@ class PipelineSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSeq
     val fused = rows(Similarity.bqTopK(q, e, 5))
-    val d = java.nio.file.Files.createTempDirectory("bq-rt").toString
+    val d = SparkTestSession.tempDir("bq-rt").toString
     Similarity.binaryCodes(e).write.mode("overwrite").parquet(d)
     assert(rows(Similarity.bqSearch(q, spark.read.parquet(d), e, 5)) == fused,
       "served binary-quant search diverged from the fused path")
@@ -731,7 +731,7 @@ class PipelineSpec extends AnyFunSuite {
     // at rest the same absorb is a delta-sized parquet APPEND of
     // binaryCodes(delta) — nothing rewritten; the store reads back
     // identical to the grown re-encode
-    val d = java.nio.file.Files.createTempDirectory("bq-absorb").toString
+    val d = SparkTestSession.tempDir("bq-absorb").toString
     Similarity.binaryCodes(base).write.mode("overwrite").parquet(d)
     Similarity.binaryCodes(delta).write.mode("append").parquet(d)
     assert(codeSet(spark.read.parquet(d)) == grown,
@@ -769,7 +769,7 @@ class PipelineSpec extends AnyFunSuite {
   test("IVF index staleness: post-build rows are invisible; union-the-tail serves them") {
     val e = Tables.load(spark, sf, "embeddings")
     val q = e.filter($"vec_id" < 3)
-    val d = java.nio.file.Files.createTempDirectory("ivf-stale").toString
+    val d = SparkTestSession.tempDir("ivf-stale").toString
     Similarity.ivfBuild(e).save(d)
     val idx = Similarity.ivfLoad(spark, d)
     // clone the 3 query vectors at new ids AFTER the build: each is an
@@ -919,7 +919,7 @@ class PipelineSpec extends AnyFunSuite {
       .toDF("src", "dst")
     val local = Dedup.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-cp")
+    val dir = SparkTestSession.tempDir("graft-cc-cp")
     val reliable = Dedup.connectedComponents(edges, checkpointDir = Some(dir.toString))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(reliable == local)

@@ -150,7 +150,7 @@ class PlanSpec extends AnyFunSuite {
     // batch once per deletion request)
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("plan-st14").toString
+    val dir = SparkTestSession.tempDir("plan-st14").toString
     Tables.load(spark, sf, "embeddings").limit(50)
       .write.mode("overwrite").parquet(s"$dir/batch=0")
     val tomb = Seq(1L, 2L).toDF("vec_id")
@@ -756,7 +756,7 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val e = Tables.load(spark, sf, "embeddings")
     val q = e.filter($"vec_id" < 10)
-    val d = java.nio.file.Files.createTempDirectory("ivfpq-plan").toString
+    val d = SparkTestSession.tempDir("ivfpq-plan").toString
     graft.operators.Similarity.ivfPqBuild(e).save(d)
     val plan = graft.operators.Similarity
       .ivfPqSearch(q, graft.operators.Similarity.ivfPqLoad(spark, d), e, 5)
@@ -1151,7 +1151,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val d = java.nio.file.Files.createTempDirectory("nd-reg-plan").toString
+    val d = SparkTestSession.tempDir("nd-reg-plan").toString
     try {
       val docs = Tables.load(spark, sf, "documents")
       val reg = docs.filter(col("doc_id") % 2 === 0)
@@ -1197,7 +1197,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val d = java.nio.file.Files.createTempDirectory("hm-reg-plan").toString
+    val d = SparkTestSession.tempDir("hm-reg-plan").toString
     try {
       // synthetic 64-bit hashes — the screen is hash-space-only, so the
       // plan pin needs no media decode
@@ -1242,7 +1242,7 @@ class PlanSpec extends AnyFunSuite {
     // the same single batch-side exchange — deletion must not cost
     // the layout.
     import org.apache.spark.sql.functions._
-    val d = java.nio.file.Files.createTempDirectory("hm-del-plan").toString
+    val d = SparkTestSession.tempDir("hm-del-plan").toString
     try {
       val reg = spark.range(4000L).select(col("id").as("asset_id"),
         xxhash64(col("id")).as("dhash"))
@@ -1293,7 +1293,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val d = java.nio.file.Files.createTempDirectory("h-reg-plan").toString
+    val d = SparkTestSession.tempDir("h-reg-plan").toString
     try {
       val docs = Tables.load(spark, sf, "documents")
       val reg = docs.filter(col("doc_id") % 2 === 0)

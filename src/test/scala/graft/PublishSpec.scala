@@ -20,7 +20,7 @@ class PublishSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  def tmpDir(): String = Files.createTempDirectory("graft-publish").toString
+  def tmpDir(): String = SparkTestSession.tempDir("graft-publish").toString
   def f(local: String): String = FaultyFs.uri(local)
   lazy val fs = new Path(FaultyFs.Uri).getFileSystem(spark.sparkContext.hadoopConfiguration)
   def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq

@@ -8,9 +8,22 @@ import org.scalacheck.rng.Seed
 import graft.sources.S3AccessLog
 
 object SparkTestSession {
+  /** One scratch root per test JVM, deleted when the JVM exits: every
+    * spec's temp dirs (and the warehouse) live under it, so a run
+    * leaves nothing behind in java.io.tmpdir.
+    */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-test")
+    sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(root.toFile))
+    root
+  }
+
+  /** A fresh directory under the per-JVM scratch root. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
+
   lazy val spark: SparkSession = GraftSession.builder(cpus = 4)
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    .config("spark.sql.warehouse.dir", tempDir("graft-warehouse").toString)
     // the fault-injecting file system (FaultyFs), uncached so no
     // instance outlives a test's fault
     .config("spark.hadoop.fs.faulty.impl", classOf[FaultyFs].getName)

@@ -39,7 +39,7 @@ class SinksSpec extends AnyFunSuite {
       .collect().map(_.mkString("|")).toSeq
 
   test("csv roundtrip: header + schema read-back is lossless") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = SparkTestSession.tempDir("graft-csv").toString
     val d = slice()
     d.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.option("header", "true").schema(d.schema).csv(dir)
@@ -47,7 +47,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("json-lines roundtrip with schema is lossless") {
-    val dir = Files.createTempDirectory("graft-json").toString
+    val dir = SparkTestSession.tempDir("graft-json").toString
     val d = slice()
     d.write.mode("overwrite").json(dir)
     val back = spark.read.schema(d.schema).json(dir)
@@ -55,7 +55,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("orc roundtrip preserves types without a schema hint") {
-    val dir = Files.createTempDirectory("graft-orc").toString
+    val dir = SparkTestSession.tempDir("graft-orc").toString
     val d = slice()
     d.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -65,7 +65,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("avro roundtrip: types + logical types survive, independent reader agrees") {
     import graft.sources.AvroFiles
-    val dir = Files.createTempDirectory("graft-avro").toString
+    val dir = SparkTestSession.tempDir("graft-avro").toString
     // widen the slice so every supported family is exercised:
     // long/int/decimal/string/date from the slice, plus timestamp,
     // double, boolean, binary, and a NULL-bearing column
@@ -124,7 +124,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("avro reader-schema projection: subset + reorder via Avro resolution") {
     import graft.sources.AvroFiles
-    val dir = Files.createTempDirectory("graft-avro-proj").toString
+    val dir = SparkTestSession.tempDir("graft-avro-proj").toString
     // a deliberately widened file: 10 columns, read back only 2
     val d = slice()
       .withColumn("ts", to_timestamp(col("l_shipdate")))
@@ -156,7 +156,7 @@ class SinksSpec extends AnyFunSuite {
     // the lake reality: a column added mid-stream — old files lack it,
     // new files carry it; one mergeSchema read serves both generations
     // with NULLs where history has no value
-    val dir = Files.createTempDirectory("graft-evo").toString
+    val dir = SparkTestSession.tempDir("graft-evo").toString
     val d = slice()
     d.write.mode("overwrite").parquet(s"$dir/day=1")
     d.withColumn("quality_score",

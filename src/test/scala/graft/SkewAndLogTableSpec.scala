@@ -56,8 +56,8 @@ class SkewAndLogTableSpec extends AnyFunSuite {
   }
 
   test("LogTable.read prunes to exactly the requested date dirs") {
-    val inRoot = Files.createTempDirectory("graft-lt-in").toString
-    val outRoot = Files.createTempDirectory("graft-lt-out").toString
+    val inRoot = SparkTestSession.tempDir("graft-lt-in").toString
+    val outRoot = SparkTestSession.tempDir("graft-lt-out").toString
     // three days of logs, one bucket
     for (day <- Seq(1, 2, 3)) {
       val dir = s"$inRoot/b1/2024/07/0$day"
@@ -89,8 +89,8 @@ class SkewAndLogTableSpec extends AnyFunSuite {
   }
 
   test("LogTable.read refuses a day missing mid-publish, still skips a plain missing day") {
-    val inRoot = Files.createTempDirectory("graft-lt-in").toString
-    val outRoot = Files.createTempDirectory("graft-lt-out").toString
+    val inRoot = SparkTestSession.tempDir("graft-lt-in").toString
+    val outRoot = SparkTestSession.tempDir("graft-lt-out").toString
     for (day <- Seq(1, 2, 4)) {
       val dir = s"$inRoot/b1/2024/07/0$day"
       Files.createDirectories(java.nio.file.Paths.get(dir))

@@ -212,7 +212,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streamCompact: raw log files stream into date-partitioned parquet") {
-    val work = java.nio.file.Files.createTempDirectory("graft-sc").toString
+    val work = SparkTestSession.tempDir("graft-sc").toString
     val in = s"$work/in"; java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     def lines(day: Int, n: Int): String = (0 until n).map { i =>
       graft.sources.S3AccessLog.renderLine(RenderFixtures.baseFields
@@ -244,7 +244,7 @@ class StreamingSpec extends AnyFunSuite {
     // not silently lose it
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-scsort").toString
+    val work = SparkTestSession.tempDir("graft-scsort").toString
     val in = s"$work/in"; java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     val rnd = new scala.util.Random(4211)
     val lines = rnd.shuffle((0 until 120).map { i =>
@@ -282,7 +282,7 @@ class StreamingSpec extends AnyFunSuite {
     // checkpoint — already-committed files must not reprocess, the new
     // file must land exactly once, and the final table must equal a
     // one-shot batch run over the same input.
-    val work = java.nio.file.Files.createTempDirectory("graft-scr").toString
+    val work = SparkTestSession.tempDir("graft-scr").toString
     val in = s"$work/in"; java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     def lines(day: Int, n: Int): String = (0 until n).map { i =>
       graft.sources.S3AccessLog.renderLine(RenderFixtures.baseFields
@@ -322,7 +322,7 @@ class StreamingSpec extends AnyFunSuite {
       (3L, ts("2024-01-01 09:00:00"), 10L), // older than event 2
       (4L, ts("2024-01-01 10:30:00"), 20L))
     def run(batches: Seq[Seq[(Long, Timestamp, Long)]]): Set[(Long, Long, Long)] = {
-      val work = java.nio.file.Files.createTempDirectory("graft-cdc").toString
+      val work = SparkTestSession.tempDir("graft-cdc").toString
       val in = MemoryStream[(Long, Timestamp, Long)]
       val (q, table) = StreamingJobs.cdcUpsertQuery(
         in.toDF().toDF("event_id", "ts", "user_id"), work)
@@ -346,7 +346,7 @@ class StreamingSpec extends AnyFunSuite {
     // query folds ON TOP of the committed generations; the final table
     // must equal a one-shot batch computation over all updates.
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-cdcr").toString
+    val work = SparkTestSession.tempDir("graft-cdcr").toString
     val in = s"$work/in"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     val all = Seq(
@@ -374,7 +374,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CDC retried batch is a no-op: replays never double-count n_updates") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-cdcretry").toString
+    val work = SparkTestSession.tempDir("graft-cdcretry").toString
     val b0 = Seq((1L, ts("2024-01-01 10:00:00"), 10L),
       (2L, ts("2024-01-01 11:00:00"), 20L)).toDF("event_id", "ts", "user_id")
     val b1 = Seq((3L, ts("2024-01-01 12:00:00"), 10L))
@@ -396,7 +396,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CDC schema evolution: nullable widening merges, retype is refused, maintenance keeps the schema") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-cdcevo").toString
+    val work = SparkTestSession.tempDir("graft-cdcevo").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     // batch 0: legacy shape
     StreamingJobs.cdcApplyBatch(
@@ -455,7 +455,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CDC merge rewrites only touched buckets; untouched bucket files stay byte-identical") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-cdcbkt").toString
+    val work = SparkTestSession.tempDir("graft-cdcbkt").toString
     val b0 = (1L to 64L).map(i => (i, ts("2024-01-01 10:00:00"), i))
       .toDF("event_id", "ts", "user_id")
     StreamingJobs.cdcApplyBatch(b0, 0L, work, buckets = 8)
@@ -511,7 +511,7 @@ class StreamingSpec extends AnyFunSuite {
         (rnd.nextInt(6) + 1).toLong)
     }
     def run(grouping: Seq[Seq[(Long, Timestamp, Long)]]): Set[(Long, Long, Long)] = {
-      val work = java.nio.file.Files.createTempDirectory("graft-cdcperm").toString
+      val work = SparkTestSession.tempDir("graft-cdcperm").toString
       grouping.zipWithIndex.foreach { case (batch, i) =>
         StreamingJobs.cdcApplyBatch(
           batch.toDF("event_id", "ts", "user_id"), i.toLong, work, buckets = 8)
@@ -534,7 +534,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CDC storage is bounded: displaced partitions and old commits are GC'd") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-cdcgc").toString
+    val work = SparkTestSession.tempDir("graft-cdcgc").toString
     def one(eventId: Long, h: Int) =
       Seq((eventId, ts(f"2024-01-01 1$h%d:00:00"), 7L))
         .toDF("event_id", "ts", "user_id")
@@ -576,7 +576,7 @@ class StreamingSpec extends AnyFunSuite {
     // which must run GC and reclaim exactly that garbage
     // (StreamingJobs.cdcApplyBatch's replay branch).
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-cdccw").toString
+    val work = SparkTestSession.tempDir("graft-cdccw").toString
     def one(eventId: Long, h: Int) =
       Seq((eventId, ts(f"2024-01-01 1$h%d:00:00"), 7L))
         .toDF("event_id", "ts", "user_id")
@@ -609,7 +609,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("cdcTable before any commit fails with a clear error, not a missing-path read") {
-    val work = java.nio.file.Files.createTempDirectory("graft-cdcempty").toString
+    val work = SparkTestSession.tempDir("graft-cdcempty").toString
     val e = intercept[IllegalStateException] {
       StreamingJobs.cdcTable(spark, work)
     }
@@ -618,7 +618,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CDC deletion: tombstoned keys leave table AND storage; stream and replays continue past the revision") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("cdc-delete").toString
+    val work = SparkTestSession.tempDir("cdc-delete").toString
     def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
     def table() = StreamingJobs.cdcTable(spark, work)
       .select($"user_id", $"_m.event_id".as("last"), $"n_updates")
@@ -661,7 +661,7 @@ class StreamingSpec extends AnyFunSuite {
   test("CDC retention: stale keys age out of table AND storage; reactivated keys restart; replays no-op") {
     import spark.implicits._
     import org.apache.spark.sql.functions.lit
-    val work = java.nio.file.Files.createTempDirectory("cdc-retain").toString
+    val work = SparkTestSession.tempDir("cdc-retain").toString
     def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
     def table() = StreamingJobs.cdcTable(spark, work)
       .select($"user_id", $"_m.event_id".as("last"), $"n_updates")
@@ -714,7 +714,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CDC deletion: deleting every key is legit state — cdcTable fails with semantics, the next batch recreates") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("cdc-delall").toString
+    val work = SparkTestSession.tempDir("cdc-delall").toString
     def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
     StreamingJobs.cdcApplyBatch(Seq((1L, t(1), 10L))
       .toDF("event_id", "ts", "user_id"), 0L, work, 4)
@@ -743,7 +743,7 @@ class StreamingSpec extends AnyFunSuite {
   test("near-dup screen: retried batch replays identically and never sees its own signatures") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val work = java.nio.file.Files.createTempDirectory("st10-retry").toString
+    val work = SparkTestSession.tempDir("st10-retry").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"),
       (4L, "one two three four five")).toDF("doc_id", "text")
     val b1 = Seq((1L, "alpha beta gamma delta epsilon"), // re-crawl of 2
@@ -785,7 +785,7 @@ class StreamingSpec extends AnyFunSuite {
   test("vector delta stream: appends accumulate, replays overwrite, and the log serves mid-lifecycle") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val work = java.nio.file.Files.createTempDirectory("st11-delta").toString
+    val work = SparkTestSession.tempDir("st11-delta").toString
     val base = (1 to 64).map(_.toFloat).toArray
     val in = MemoryStream[(Long, Array[Float])]
     val q = StreamingJobs.vectorDeltaStream(
@@ -821,7 +821,7 @@ class StreamingSpec extends AnyFunSuite {
   test("delta-log deletion: only touched batches rewritten, emptied batch stays readable, markers and uncommitted batches fail loud") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val work = java.nio.file.Files.createTempDirectory("st14-del").toString
+    val work = SparkTestSession.tempDir("st14-del").toString
     val v = Array.tabulate(8)(_.toFloat + 1f)
     val in = MemoryStream[(Long, Array[Float])]
     val q = StreamingJobs.vectorDeltaStream(
@@ -900,7 +900,7 @@ class StreamingSpec extends AnyFunSuite {
   test("delta-log absorption: index swap + log GC equals the in-memory absorb, rerun no-ops, leftovers refuse") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val work = java.nio.file.Files.createTempDirectory("st15-abs").toString
+    val work = SparkTestSession.tempDir("st15-abs").toString
     val corpus = (1 to 20).map(i =>
         (i.toLong, Array.tabulate(8)(j => (i * (j + 1)).toFloat)))
       .toDF("vec_id", "embedding")
@@ -992,7 +992,7 @@ class StreamingSpec extends AnyFunSuite {
   test("delta-log absorption, IVF-PQ family: swap equals the in-memory absorb and GCs the log") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val work = java.nio.file.Files.createTempDirectory("st16-abs").toString
+    val work = SparkTestSession.tempDir("st16-abs").toString
     val corpus = (1 to 24).map(i =>
         (i.toLong, Array.tabulate(8)(j => (i * (j + 1)).toFloat)))
       .toDF("vec_id", "embedding")
@@ -1035,7 +1035,7 @@ class StreamingSpec extends AnyFunSuite {
     // catalog loss as registry loss would silently pass every
     // duplicate of the pre-restart corpus and delete the history
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("st10-catloss").toString
+    val work = SparkTestSession.tempDir("st10-catloss").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
     StreamingJobs.screenBatch(b0, 0L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
@@ -1058,7 +1058,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("registry compaction: one partition, verdicts preserved, an interrupted swap settles on the next screen") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("st10-compact").toString
+    val work = SparkTestSession.tempDir("st10-compact").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"),
       (4L, "one two three four five")).toDF("doc_id", "text")
     val b1 = Seq((3L, "something else entirely here now")).toDF("doc_id", "text")
@@ -1117,7 +1117,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("registry deletion: tombstoned signatures stop flagging, layout and history survive") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("st10-delete").toString
+    val work = SparkTestSession.tempDir("st10-delete").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"),
       (4L, "one two three four five")).toDF("doc_id", "text")
     val b1 = Seq((3L, "something else entirely here now")).toDF("doc_id", "text")
@@ -1151,7 +1151,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("registry deletion: deleting every id leaves a live empty registry the screen keeps using") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("st10-delall").toString
+    val work = SparkTestSession.tempDir("st10-delall").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
     StreamingJobs.screenBatch(b0, 0L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
@@ -1171,7 +1171,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("registry retention: rows age out by ingest batch, surviving a prior fold's re-keying") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("st10-retain").toString
+    val work = SparkTestSession.tempDir("st10-retain").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
     val b1 = Seq((4L, "one two three four five")).toDF("doc_id", "text")
@@ -1209,8 +1209,8 @@ class StreamingSpec extends AnyFunSuite {
       Seq((31L, "genuinely novel text right here"),
         (33L, "closing unique words finish line"))
     ).map(_.toDF("doc_id", "text"))
-    val plain = java.nio.file.Files.createTempDirectory("st12-plain").toString
-    val onl = java.nio.file.Files.createTempDirectory("st12-online").toString
+    val plain = SparkTestSession.tempDir("st12-plain").toString
+    val onl = SparkTestSession.tempDir("st12-online").toString
     b.zipWithIndex.foreach { case (df, i) =>
       StreamingJobs.screenBatch(df, i.toLong, plain, "doc_id", "text",
         3, 32, 8, 0.7, 4)
@@ -1245,7 +1245,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     assert(StreamingJobs.compactEveryDefault > 0,
       "online compaction must be self-engaging by default")
-    val work = java.nio.file.Files.createTempDirectory("st12-off").toString
+    val work = SparkTestSession.tempDir("st12-off").toString
     val b = Seq(
       Seq((2L, "alpha beta gamma delta epsilon")),
       Seq((3L, "something else entirely here now")),
@@ -1267,7 +1267,7 @@ class StreamingSpec extends AnyFunSuite {
     // (uncommitted) partition on disk — it must be dropped before the
     // partition count, never folded under a committed key
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("st12-replay").toString
+    val work = SparkTestSession.tempDir("st12-replay").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"),
       (4L, "one two three four five")).toDF("doc_id", "text")
     val b1 = Seq((3L, "something else entirely here now")).toDF("doc_id", "text")
@@ -1298,7 +1298,7 @@ class StreamingSpec extends AnyFunSuite {
     // and simply never collide — duplicates passing unflagged with
     // zero errors. The persisted table properties must reject it.
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("st10-params").toString
+    val work = SparkTestSession.tempDir("st10-params").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
     StreamingJobs.screenBatch(b0, 0L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
