@@ -38,10 +38,12 @@ object SparkEntry {
     all.map(_.tuple).toMap
 
   /** DuckDB-runnable ANSI SQL oracle per query (omitted → the driver
-    * records a weaker rows-only check).
+    * records a weaker rows-only check). Only the `selected` queries'
+    * oracles are built: some replay a gate's contract on the driver.
     */
-  def oracleSql: Map[String, String] =
-    all.flatMap(d => d.oracle.map(sql => d.name -> sql)).toMap
+  def oracleSql(selected: String => Boolean): Map[String, String] =
+    all.filter(d => selected(d.name))
+      .flatMap(d => d.oracle.map(sql => d.name -> sql)).toMap
 
   /** Gate rows allowed to return 0 rows at the gate SF. An empty result
     * hash-matches an empty oracle TRIVIALLY — proving nothing (the

@@ -23,9 +23,9 @@ object Tables {
     * scan (and everything pipelined into it: projection, parse, partial
     * aggregation) otherwise runs as a single task no matter how many
     * cores the session has. At production scale inputs carry thousands
-    * of row groups and this is a no-op: we only add the round-robin
-    * exchange when the scan has fewer partitions than the cluster has
-    * slots, so well-split inputs never pay an extra shuffle.
+    * of row groups and this is a no-op: we only add the exchange when
+    * fewer splits than the cluster has slots can carry rows, so
+    * well-split inputs never pay an extra shuffle.
     *
     * Call this on SCAN DataFrames only: with AQE enabled, `.rdd` on a
     * plan that already contains exchanges can force query-stage
@@ -34,7 +34,7 @@ object Tables {
     */
   def spread(df: DataFrame, keys: String*): DataFrame = {
     val slots = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= slots) df
+    if (rowSplits(df, slots) >= slots) df
     else if (keys.nonEmpty)
       // hash exchange on the given (well-distributed) keys: unlike the
       // keyless round-robin overload, the map side needs NO pre-exchange
@@ -43,6 +43,39 @@ object Tables {
       // order) — measured 2-13s of single-task sort CPU saved at sf0.1.
       df.repartition(slots, keys.map(org.apache.spark.sql.functions.col): _*)
     else df.repartition(slots)
+  }
+
+  /** How many of the scan's splits can carry rows. A parquet split reads
+    * only the row groups whose midpoint falls inside it, so a large file
+    * with one row group, planned as many splits, still runs on one core:
+    * the partition count is capped by the row-group count. Footers are
+    * read only when a parquet scan has fewer files than `slots` and
+    * at least `slots` partitions — the only case the cap can change the
+    * answer.
+    */
+  private def rowSplits(df: DataFrame, slots: Int): Int = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val parts = df.rdd.getNumPartitions
+    val parquetFiles = df.queryExecution.analyzed.collectLeaves() match {
+      case Seq(l: LogicalRelation) => l.relation match {
+        case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          r.location.inputFiles.toSeq
+        case _ => Nil
+      }
+      case _ => Nil
+    }
+    if (parts < slots || parquetFiles.isEmpty || parquetFiles.length >= slots) parts
+    else {
+      val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      val rowGroups = parquetFiles.map { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f), conf))
+        try reader.getRowGroups.size finally reader.close()
+      }.sum
+      math.min(parts, rowGroups)
+    }
   }
 
   /** `events.ts` has shipped in two physical layouts across testdata

@@ -13,21 +13,23 @@ import org.apache.spark.sql.types._
   * interpreted higher-order-function folds on the similarity/dedup hot
   * paths.
   *
-  * WHY (measured, r20 optimization round): Spark's array HOFs
-  * (`zip_with`, `aggregate`, `transform`) are CodegenFallback — every
-  * ELEMENT evaluation walks an expression tree with virtual calls and
-  * boxed lambda variables. A 64-dim dot product costs ~6 interpreted
-  * expression evals per element (~400 per row); the IVF/PQ gates spend
-  * >70% of their executor time there (job profile: sim34 19 s of task
-  * time for ~2k-row inputs, sim21 10 s). Each kernel here evaluates the
-  * SAME fold as straight-line JVM code over the unsafe ArrayData —
-  * one virtual call per row, zero boxing — and emits a static helper
-  * call under whole-stage codegen (the [[ParseS3AccessLogExpr]]
-  * pattern), so the surrounding stage stays fused.
+  * WHY: Spark's array HOFs (`zip_with`, `aggregate`, `transform`) are
+  * CodegenFallback — every ELEMENT evaluation walks an expression tree
+  * with virtual calls and boxed lambda variables. Each kernel here
+  * evaluates the SAME fold as straight-line JVM code over the unsafe
+  * ArrayData and emits a static helper call under whole-stage codegen
+  * (the [[ParseS3AccessLogExpr]] pattern), so the surrounding stage
+  * stays fused. Every factory has a row in the test-scope kernel table
+  * (`graft.KernelTable`: its twin = the cheapest equivalent formulation,
+  * a codegen'd built-in where Spark has one) and stays only while it
+  * pays against that twin at its gate length: ≥ 9 of 10 alternating
+  * pairs won AND a median gap wider than the twin's IQR
+  * (`sbt "Test/runMain graft.KernelBench"`, BENCH_NOTES.md "Kernel
+  * table"). Kernels that lost to a built-in were deleted.
   *
-  * EQUIVALENCE CONTRACT (pinned by VecKernelsSpec property tests
-  * against the original HOF formulations): every kernel reproduces its
-  * HOF twin exactly —
+  * EQUIVALENCE CONTRACT (pinned by VecKernelsSpec against each
+  * kernel's KernelTable twin): every kernel reproduces its twin
+  * exactly —
   *   - identical IEEE operation ORDER (sequential left fold, same ops),
   *   - identical decimal promotion/rounding (products exact, per-step
   *     accumulator cast with overflow→null, the cosineExact analysis),
@@ -110,14 +112,6 @@ object VecKernels {
     */
   def id_pairs(ids: Column): Column =
     bridge.column(IdPairs(bridge.expression(ids)))
-
-  /** ≡ transform(arr, x => x.cast(double).cast(DECIMAL(12,6))) — the
-    * stored-decimal projection every exact-cosine side builds once per
-    * row (HALF_UP at scale 6, ANSI overflow-throw, null elements pass
-    * through).
-    */
-  def to_dec6(arr: Column): Column =
-    bridge.column(ToDec6(bridge.expression(arr)))
 
   /** ≡ [[graft.operators.Dedup]]'s per-plane centered-sketch
     * projections: for j in 0..bits-1,
@@ -207,13 +201,6 @@ object VecKernels {
     */
   def binary_code(vec: Column): Column =
     bridge.column(BinaryCode(bridge.expression(vec)))
-
-  /** ≡ transform(arr, x => x.cast(double)) — the per-element double
-    * widening every IEEE vector path builds once per row (float/int
-    * widen exactly, decimal via toDouble, null elements pass through).
-    */
-  def to_double(arr: Column): Column =
-    bridge.column(ToDouble(bridge.expression(arr)))
 
   /** ≡ [[word_ngrams]] WITHOUT the distinct: transform(sequence(0,
     * len-n), i => concat_ws(" ", slice(words, i+1, n))) — ALL word
@@ -487,22 +474,6 @@ object VecKernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
   }
 
-  def toDec6(arr: ArrayData, et: DataType, ansi: Boolean): ArrayData = {
-    val n = arr.numElements()
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      out(i) =
-        if (arr.isNullAt(i)) null
-        else {
-          val v = elemDec6(arr, et, i, ansi)
-          if (v == null) null else Decimal(v, 12, 6)
-        }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
   private val Dec22Cap = new java.math.BigDecimal(
     java.math.BigInteger.TEN.pow(22), 6)
 
@@ -766,19 +737,6 @@ object VecKernels {
       }
       out(w) = code
       w += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  def toDoubleArr(arr: ArrayData, et: DataType): ArrayData = {
-    val n = arr.numElements()
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      out(i) =
-        if (arr.isNullAt(i)) null
-        else java.lang.Double.valueOf(elemD(arr, et, i))
-      i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
@@ -1052,33 +1010,6 @@ case class VecDotL(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(l: Expression, r: Expression)
     : VecDotL = copy(left = l, right = r)
   override def prettyName: String = "vec_dot_l"
-}
-
-case class ToDec6(child: Expression,
-    ansi: Boolean = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(DecimalType(12, 6), containsNull = true)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(_: NumericType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs a numeric array, got ${other.sql}")
-    }
-  private def elemType: DataType =
-    child.dataType.asInstanceOf[ArrayType].elementType
-  override def nullSafeEval(arr: Any): Any =
-    VecKernels.toDec6(arr.asInstanceOf[ArrayData], elemType, ansi)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = VecKernels.getClass.getName + ".MODULE$"
-    val et = ctx.addReferenceObj("et", elemType)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $helper.toDec6($c, $et, $ansi);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): ToDec6 =
-    copy(child = newChild)
-  override def prettyName: String = "to_dec6"
 }
 
 case class HplaneProjs(child: Expression, bits: Int,
@@ -1410,32 +1341,6 @@ case class BinaryCode(child: Expression)
   override protected def withNewChildInternal(newChild: Expression): BinaryCode =
     copy(child = newChild)
   override def prettyName: String = "binary_code"
-}
-
-case class ToDouble(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(_: NumericType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs a numeric array, got ${other.sql}")
-    }
-  private def elemType: DataType =
-    child.dataType.asInstanceOf[ArrayType].elementType
-  override def nullSafeEval(arr: Any): Any =
-    VecKernels.toDoubleArr(arr.asInstanceOf[ArrayData], elemType)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val helper = VecKernels.getClass.getName + ".MODULE$"
-    val et = ctx.addReferenceObj("et", elemType)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $helper.toDoubleArr($c, $et);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): ToDouble =
-    copy(child = newChild)
-  override def prettyName: String = "to_double"
 }
 
 case class WordNgramsAll(child: Expression, n: Int)

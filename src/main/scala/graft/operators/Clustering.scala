@@ -28,10 +28,6 @@ import org.apache.spark.sql.types._
   */
 object Clustering {
 
-  private def dec(c: Column): Column =
-    // compiled to_dec6 kernel (r20) ≡ the per-element cast transform
-    graft.functions.VecKernels.to_dec6(c)
-
   /** Exact squared euclidean distance between two DECIMAL(12,6) arrays.
     * Per-position (a-b)² is DECIMAL(27,12); the accumulator adds at
     * (31,12) and casts back to (30,12) — lossless (18 integer digits vs
@@ -56,7 +52,7 @@ object Clustering {
       .agg(min(col(idCol)).as("_cid"))
       .select(col("_cid"))
     df.join(broadcast(seedIds), col(idCol) === col("_cid"))
-      .select(col("_cid").as("cluster"), dec(col(vecCol)).as("cvec"))
+      .select(col("_cid").as("cluster"), Similarity.dec6(col(vecCol)).as("cvec"))
   }
 
   /** All ≤ k (cluster, cvec) seeds folded into ONE broadcast row,
@@ -100,7 +96,7 @@ object Clustering {
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
     val sa = seedArray(seedCentroids(df, k, idCol, vecCol))
-    df.select(col(idCol), dec(col(vecCol)).as("_x"))
+    df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
       .crossJoin(broadcast(sa))
       .select(col(idCol), nearestSeed(col("_x")).getField("_c").as("cluster"))
   }
@@ -200,7 +196,7 @@ object Clustering {
           struct(d.as("_d"), s.getField("cluster").as("_c")))
           .otherwise(acc)
       }).getField("_c")
-    df.select(col(idCol), dec(col(vecCol)).as("_x"))
+    df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
       .crossJoin(broadcast(groups))
       .withColumn("_b2", best2)
       .select(col(idCol), assign.as("cluster"))
@@ -259,7 +255,7 @@ object Clustering {
             struct(a0.as("a"), cand.as("b")))
           .otherwise(acc)
       })
-    val ranked = df.select(col(idCol), dec(col(vecCol)).as("_x"))
+    val ranked = df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
       .crossJoin(broadcast(sa))
       .select(col(idCol), best2.as("_near2"))
     val a = col("_near2")("a")("d")
@@ -280,7 +276,7 @@ object Clustering {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
     val assigned = assignToSeeds(df, k, idCol, vecCol)
-    val members = df.select(col(idCol), dec(col(vecCol)).as("_x"))
+    val members = df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
       .join(assigned, idCol)
     val posSums = members
       .select(col("cluster"), posexplode(col("_x")))
@@ -336,7 +332,7 @@ object Clustering {
     require(rounds >= 1, "need at least one round")
     val cp = Checkpointing.truncator(df.sparkSession, checkpoint,
       checkpointDir)
-    val e = df.select(col(idCol), dec(col(vecCol)).as("_x"))
+    val e = df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
     // zero-shuffle narrow argmin (see nearestSeed): the old
     // crossJoin + min(struct) shape both SORTED the N·k expansion in
     // every map task (SortAggregate spill at 100×) and exchanged one
@@ -412,7 +408,7 @@ object Clustering {
     val cp = Checkpointing.truncator(df.sparkSession, checkpoint,
       checkpointDir)
     val pts = cp(df.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast(LongType).as("_id"), dec(col(vecCol)).as("_x")))
+      .select(col(idCol).cast(LongType).as("_id"), Similarity.dec6(col(vecCol)).as("_x")))
     var centers = cp.rolling(pts.orderBy("_id").limit(1)
       .select(lit(0).as("step"), col("_id").as("center_id"),
         lit(0.0).as("radius"), col("_x").as("_cv")))

@@ -1422,7 +1422,6 @@ object Dedup {
                     twoLevelAssign: Boolean = false,
                     twoLevelAutoK: Int = 512): DataFrame = {
     require(k > 0 && tau > 0.0, "need k > 0 and tau > 0")
-    def decV(c: Column): Column = graft.functions.VecKernels.to_dec6(c)
     def dot(x: Column, y: Column): Column =
       graft.functions.VecKernels.vec_dot_dec(x, y)
     // twoLevelAssign is the big-corpus switch (k ∝ N makes the exact
@@ -1444,7 +1443,7 @@ object Dedup {
       if (twoLevelAssign || k >= twoLevelAutoK)
         Clustering.assignToSeedsTwoLevel(emb, k, idCol, vecCol)
       else Clustering.assignToSeeds(emb, k, idCol, vecCol)
-    val e = emb.select(col(idCol).as("_id"), decV(col(vecCol)).as("_x"))
+    val e = emb.select(col(idCol).as("_id"), Similarity.dec6(col(vecCol)).as("_x"))
       .join(assigned.select(col(idCol).as("_id"), col("cluster")), "_id")
       .withColumn("_n", dot(col("_x"), col("_x")).cast(DoubleType))
     val a = e.select(col("cluster"), col("_id").as("_ida"),

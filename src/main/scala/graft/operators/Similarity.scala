@@ -28,6 +28,20 @@ import org.apache.spark.sql.types._
   */
 object Similarity {
 
+  /** A vector column as array<double>: the built-in array Cast, per
+    * element exactly x.cast(double). A compiled widening kernel did not
+    * beat it (BENCH_NOTES.md "Kernel table").
+    */
+  private[graft] def dbl(c: Column): Column = c.cast(ArrayType(DoubleType))
+
+  /** The stored-decimal projection every exact path folds over: per
+    * element x.cast(double).cast(DECIMAL(12,6)) through the built-in
+    * array Casts (HALF_UP at scale 6, ANSI overflow throws, null elements
+    * pass through). A compiled kernel did not beat it either.
+    */
+  private[graft] def dec6(c: Column): Column =
+    c.cast(ArrayType(DoubleType)).cast(ArrayType(DecimalType(12, 6)))
+
   /** Fails fast (at plan time) when `idCol` is not an integral type —
     * ids ride through the bounded top-k aggregate as `bigint`, and a
     * lossy cast (string, float, decimal) would cast to null and
@@ -144,13 +158,10 @@ object Similarity {
                           exact: Boolean): DataFrame = {
     requireIntegralIds(queries, candidates, idCol)
     import graft.functions.VecKernels.{vec_dot_d, vec_dot_dec}
-    def dec(c: Column) = graft.functions.VecKernels.to_dec6(c)
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
 
     def side(df: DataFrame, id: String, v: String, n: String): DataFrame =
       if (exact)
-        df.select(col(idCol).cast(LongType).as(id), dec(col(vecCol)).as(v))
+        df.select(col(idCol).cast(LongType).as(id), dec6(col(vecCol)).as(v))
           .withColumn(n, vec_dot_dec(col(v), col(v)).cast(DoubleType))
       else
         df.select(col(idCol).cast(LongType).as(id), dbl(col(vecCol)).as(v))
@@ -218,12 +229,11 @@ object Similarity {
       s"need 1 <= k <= shortlist, got k=$k shortlist=$shortlist")
     requireIntegralIds(queries, candidates, idCol)
     import graft.functions.VecKernels.vec_dot_dec
-    def dec(c: Column) = graft.functions.VecKernels.to_dec6(c)
 
     val rel = cosineTopK(queries, candidates, shortlist, idCol, vecCol,
       exact = true)
     val cside = candidates
-      .select(col(idCol).cast(LongType).as("cid"), dec(col(vecCol)).as("cv"))
+      .select(col(idCol).cast(LongType).as("cid"), dec6(col(vecCol)).as("cv"))
       .withColumn("cn", vec_dot_dec(col("cv"), col("cv")).cast(DoubleType))
     // shortlist members with vectors: Q×s rows — broadcastable at any
     // corpus size, so the pair join below never shuffles the corpus
@@ -274,8 +284,6 @@ object Similarity {
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     requireIntegralIds(queries, candidates, idCol)
     import graft.functions.VecKernels.vec_sqdist_d
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
     val q = queries.select(col(idCol).cast(LongType).as("qid"), dbl(col(vecCol)).as("qv"))
     val c = candidates.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
     // bounded map-side top-k (see cosineTopK): ascending — smallest
@@ -413,8 +421,6 @@ object Similarity {
       "need m >= 1, codes >= 2, shortlist >= k")
     requireIntegralIds(queries, candidates, idCol)
     import graft.functions.VecKernels.vec_sqdist_d
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
     def l2(a: Column, b: Column) = vec_sqdist_d(a, b)
     def subSplit(v: Column): Column = subSplitExplode(v, m)
 
@@ -600,8 +606,6 @@ object Similarity {
     val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
     if (!twoLevelAssign && twoLevel)
       warnAutoTwoLevel("ivfPqBuild", nlist, twoLevelAutoNlist)
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
     def subSplit(v: Column): Column = subSplitExplode(v, m)
 
     val cand = candidates.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
@@ -735,8 +739,6 @@ object Similarity {
       if (m > 0) m
       else index.builtM.getOrElse(
         index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
     val cand = delta.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
     val coarse = index.coarse
     val nlist = coarse.count() // quantizer-sized, never the corpus
@@ -761,8 +763,6 @@ object Similarity {
       else index.builtM.getOrElse(
         index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
     import graft.functions.VecKernels.{vec_sqdist_d, vec_sub_d}
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
     def l2(a: Column, b: Column) = vec_sqdist_d(a, b)
 
     val coarse = index.coarse
@@ -1061,13 +1061,11 @@ object Similarity {
 
   // ---- IVF internals (shared by build and search) -----------------------
 
-  private def ivfDbl(c: Column): Column =
-    graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21)
   private def ivfDot(x: Column, y: Column): Column =
     graft.functions.VecKernels.vec_dot_d(x, y)
   private def ivfWithNorm(df: DataFrame, idCol: String, vecCol: String,
                           id: String, v: String, n: String): DataFrame =
-    df.select(col(idCol).cast(LongType).as(id), ivfDbl(col(vecCol)).as(v))
+    df.select(col(idCol).cast(LongType).as(id), dbl(col(vecCol)).as(v))
       .withColumn(n, sqrt(ivfDot(col(v), col(v))))
 
   // norms precomputed ONCE per vector; per-pair work is a single dot.
@@ -1348,7 +1346,7 @@ object Similarity {
       .select(col("_cid"))
     val seeds = candidates
       .join(broadcast(centroidIds), col(idCol) === col("_cid"))
-      .select(col("_cid").as("centroid_id"), ivfDbl(col(vecCol)).as("cvec"))
+      .select(col("_cid").as("centroid_id"), dbl(col(vecCol)).as("cvec"))
 
     // optional Lloyd refinement on a deterministic 1/sampleMod hash
     // sample: assign sample vectors to their nearest current centroid
@@ -1357,7 +1355,7 @@ object Similarity {
     // surviving lists
     val sample = candidates
       .filter(pmod(xxhash64(col(idCol)), lit(sampleMod)) === 0)
-      .select(col(idCol).as("_sid"), ivfDbl(col(vecCol)).as("_sv"))
+      .select(col(idCol).as("_sid"), dbl(col(vecCol)).as("_sv"))
       .withColumn("_sn", sqrt(ivfDot(col("_sv"), col("_sv"))))
     val refined = (1 to iters).foldLeft(seeds) { (cents, _) =>
       val cn = cents.withColumn("_cn", sqrt(ivfDot(col("cvec"), col("cvec"))))
@@ -1701,7 +1699,7 @@ object Similarity {
             col("cvec"), col("cnorm")))).as("_cs"))
         delta
           .select(col(idCol),
-            graft.functions.VecKernels.to_double(col(vecCol)).as("_v"))
+            dbl(col(vecCol)).as("_v"))
           .withColumn("_n", sqrt(ivfDot(col("_v"), col("_v"))))
           .crossJoin(broadcast(cn))
           .select(aggregate(col("_cs"),
@@ -1764,8 +1762,6 @@ object Similarity {
   private def pqPerCellResiduals(df: DataFrame, coarse: DataFrame,
                                  twoLevel: Boolean, idCol: String,
                                  vecCol: String): DataFrame = {
-    def dbl(c: Column) = graft.functions.VecKernels.to_double(c) // compiled cast kernel (r21): same values as the interpreted
-    // transform(cast) per element, one call per row
     ivfPqAssignResiduals(
       df.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv")),
       coarse, twoLevel)
@@ -2014,7 +2010,7 @@ object Similarity {
       val grown = index.cells
         .select(col("cid").cast(LongType).as(idCol), col("cv").as(vecCol))
         .unionByName(delta.select(col(idCol).cast(LongType).as(idCol),
-          ivfDbl(col(vecCol)).as(vecCol)))
+          dbl(col(vecCol)).as(vecCol)))
       IvfMaintainResult(ivfBuild(grown, nlist, rebuildIters,
         rebuildSampleMod, twoLevelAssign, candidateGroups,
         twoLevelAutoNlist, idCol, vecCol), report, rebuilt = true)
@@ -2066,9 +2062,9 @@ object Similarity {
           index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
       val grown = corpus
         .select(col(idCol).cast(LongType).as(idCol),
-          ivfDbl(col(vecCol)).as(vecCol))
+          dbl(col(vecCol)).as(vecCol))
         .unionByName(delta.select(col(idCol).cast(LongType).as(idCol),
-          ivfDbl(col(vecCol)).as(vecCol)))
+          dbl(col(vecCol)).as(vecCol)))
       IvfPqMaintainResult(ivfPqBuild(grown, nlist, mEff, codes,
         refineIters, twoLevelAssign, twoLevelAutoNlist, idCol, vecCol),
         report, rebuilt = true)
@@ -2149,7 +2145,7 @@ object Similarity {
   def quantizeInt8(df: DataFrame,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    val xd = graft.functions.VecKernels.to_double(col(vecCol))
+    val xd = dbl(col(vecCol))
     val q = when(col("_am") === 0.0,
       transform(col("_x"), _ => lit(0L)))
       .otherwise(transform(col("_x"),
@@ -2188,7 +2184,7 @@ object Similarity {
                              vecCol: String = "embedding"): DataFrame = {
     require(dims >= 1, s"dims must be >= 1, got $dims")
     requireIntegralId(df, idCol)
-    val decV = graft.functions.VecKernels.to_dec6(col(vecCol))
+    val decV = dec6(col(vecCol))
     val evenHex = Seq("0", "2", "4", "6", "8", "a", "c", "e")
     val coords = (0 until dims).map { kIdx =>
       val signed = zip_with(col("_v"), sequence(lit(1), size(col("_v"))),
@@ -2384,16 +2380,15 @@ object Similarity {
                                 idCol: String, vecCol: String,
                                 dropZeroNormQueries: Boolean): DataFrame = {
     import graft.functions.VecKernels.vec_dot_dec
-    def dec(c: Column) = graft.functions.VecKernels.to_dec6(c)
     val qv0 = queries
-      .select(col(idCol).cast(LongType).as("qid"), dec(col(vecCol)).as("_qv"))
+      .select(col(idCol).cast(LongType).as("qid"), dec6(col(vecCol)).as("_qv"))
       .withColumn("_qn", vec_dot_dec(col("_qv"), col("_qv")))
     val qv = if (dropZeroNormQueries) qv0.filter(col("_qn") > 0) else qv0
     val cvRaw = rerank
       .select(col(idCol).cast(LongType).as("cid"), col(vecCol).as("_craw"))
     // the kernel fuses the per-element double→DECIMAL(12,6) cast, so
     // the raw candidate array feeds it directly (same values as the
-    // old dec(_craw) projection — VecKernelsSpec pins both input forms)
+    // old dec6(_craw) projection — VecKernelsSpec pins both input forms)
     cvRaw.join(broadcast(sl), "cid").join(broadcast(qv), "qid")
       .select(col("qid"), col("cid"),
         (vec_dot_dec(col("_qv"), col("_craw")).cast(DoubleType) /
@@ -2444,7 +2439,7 @@ object Similarity {
     import graft.functions.VecKernels.{vec_dot_dec, vec_dot_l}
     // int8 side: (id, _q bigint[], _am double) — sim05's exact scheme
     def quant(df: DataFrame, id: String): DataFrame = {
-      val xd = graft.functions.VecKernels.to_double(col(vecCol))
+      val xd = dbl(col(vecCol))
       df.select(col(idCol).cast(LongType).as(id), xd.as("_x"))
         .withColumn("_am", array_max(transform(col("_x"), x => abs(x))))
         .withColumn("_q",

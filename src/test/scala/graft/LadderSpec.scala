@@ -76,4 +76,29 @@ class LadderSpec extends AnyFunSuite {
       Tables.all.map(t => s"$t.parquet").sorted)
     FileUtils.deleteDirectory(new java.io.File(work))
   }
+
+  test("spread: a one-row-group file planned as many splits gets the exchange") {
+    def exchanged(df: org.apache.spark.sql.DataFrame): Boolean =
+      Tables.spread(df, "x").queryExecution.optimizedPlan.collectFirst {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression => r
+      }.nonEmpty
+    val slots = spark.sparkContext.defaultParallelism
+    val data = spark.range(0, 200000).select(xxhash64(col("id")).as("x"))
+    val one = tmp()
+    data.coalesce(1).write.mode("overwrite").parquet(one)
+    val many = tmp()
+    data.repartition(slots).write.mode("overwrite").parquet(many)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "65536")
+    try {
+      val single = spark.read.parquet(one)
+      assert(single.rdd.getNumPartitions >= slots, "fixture must span >= slots splits")
+      assert(exchanged(single), "one row group on many splits runs on one core")
+      assert(!exchanged(spark.read.parquet(many)), "one file per slot is already spread")
+    } finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

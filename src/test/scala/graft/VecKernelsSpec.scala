@@ -6,15 +6,16 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VecKernels._
+import graft.KernelTable.Twins
 
-/** Equivalence pins for the compiled vector kernels (r20 optimization):
-  * each kernel must reproduce its original higher-order-function
-  * formulation BIT-IDENTICALLY — same IEEE fold order, same decimal
-  * promotion and overflow-null, same null poisoning — on adversarial
-  * inputs (nulls, length mismatches, empties, float elements, overflow
-  * magnitudes). A kernel that diverges on any row would silently change
-  * declared-query results, so these pins are the safety net under every
-  * call-site swap.
+/** Equivalence pins for the compiled vector kernels: each kernel must
+  * reproduce its twin in [[KernelTable]] BIT-IDENTICALLY — same IEEE
+  * fold order, same decimal promotion and overflow-null, same null
+  * poisoning — on adversarial inputs (nulls, length mismatches, empties,
+  * float elements, overflow magnitudes). A kernel that diverges on any
+  * row would silently change declared-query results, so these pins are
+  * the safety net under every call-site swap. Where a twin is a built-in,
+  * it is also pinned to the interpreted fold it stands for.
   */
 class VecKernelsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -70,10 +71,20 @@ class VecKernelsSpec extends AnyFunSuite {
       v.forall(x => x == null || math.abs(x) < 1e6))
   }.toDF("a", "b")
 
+  test("every VecKernels Column factory has a row in the kernel table") {
+    val factories = graft.functions.VecKernels.getClass.getDeclaredMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers) &&
+        m.getReturnType == classOf[Column])
+      .map(_.getName).toSet
+    assert(factories.nonEmpty)
+    val missing = factories -- KernelTable.rows.map(_.name)
+    assert(missing.isEmpty, s"factories without a kernel-table row (twin + " +
+      s"bench): ${missing.toSeq.sorted.mkString(", ")}")
+  }
+
   test("vec_dot_d ≡ aggregate(zip_with(*, *), 0.0, +) incl. null poisoning") {
-    val hof = aggregate(zip_with(col("a"), col("b"), (p, q) => p * q),
-      lit(0.0), (acc, v) => acc + v)
-    assertSame(dfD, vec_dot_d(col("a"), col("b")), hof, "dotD")
+    assertSame(dfD, vec_dot_d(col("a"), col("b")),
+      Twins.dotD(col("a"), col("b")), "dotD")
   }
 
   test("vec_dot_d on float arrays ≡ HOF over cast(double)") {
@@ -84,59 +95,43 @@ class VecKernelsSpec extends AnyFunSuite {
         else java.lang.Float.valueOf(x.floatValue())))
     }.toDF("a", "b")
     def dbl(c: Column) = transform(c, x => x.cast(DoubleType))
-    val hof = aggregate(zip_with(dbl(col("a")), dbl(col("b")),
-      (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
-    assertSame(fdf, vec_dot_d(col("a"), col("b")), hof, "dotD/float")
+    assertSame(fdf, vec_dot_d(col("a"), col("b")),
+      Twins.dotD(dbl(col("a")), dbl(col("b"))), "dotD/float")
   }
 
   test("vec_sqdist_d ≡ aggregate(zip_with((x-y)²), 0.0, +)") {
-    val hof = aggregate(zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
-    assertSame(dfD, vec_sqdist_d(col("a"), col("b")), hof, "sqDistD")
+    assertSame(dfD, vec_sqdist_d(col("a"), col("b")),
+      Twins.sqDistD(col("a"), col("b")), "sqDistD")
   }
 
   test("vec_sub_d ≡ zip_with(x - y) incl. padded/mismatched tails") {
-    val hof = zip_with(col("a"), col("b"), (x, y) => x - y)
-    assertSame(dfD, vec_sub_d(col("a"), col("b")), hof, "subD")
+    assertSame(dfD, vec_sub_d(col("a"), col("b")),
+      Twins.subD(col("a"), col("b")), "subD")
   }
 
   test("vec_dot_dec ≡ decimal fold (double inputs, fused dec6 cast)") {
-    def dec(c: Column) = transform(c, x => x.cast(DoubleType).cast(DecimalType(12, 6)))
-    val hof = aggregate(zip_with(dec(col("a")), dec(col("b")), (p, q) => p * q),
-      lit(0).cast(DecimalType(30, 12)),
-      (acc, v) => (acc + v).cast(DecimalType(30, 12)))
-    assertSame(dfDInRange, vec_dot_dec(col("a"), col("b")), hof, "dotDec/double")
+    assertSame(dfDInRange, vec_dot_dec(col("a"), col("b")),
+      Twins.dotDec(Twins.dec6(col("a")), Twins.dec6(col("b"))), "dotDec/double")
   }
 
   test("vec_dot_dec ≡ decimal fold (pre-cast decimal(12,6) arrays)") {
-    def dec(c: Column) = transform(c, x => x.cast(DoubleType).cast(DecimalType(12, 6)))
-    val ddf = dfDInRange.select(dec(col("a")).as("a"), dec(col("b")).as("b"))
-    val hof = aggregate(zip_with(col("a"), col("b"), (p, q) => p * q),
-      lit(0).cast(DecimalType(30, 12)),
-      (acc, v) => (acc + v).cast(DecimalType(30, 12)))
-    assertSame(ddf, vec_dot_dec(col("a"), col("b")), hof, "dotDec/decimal")
+    val ddf = dfDInRange.select(Twins.dec6(col("a")).as("a"), Twins.dec6(col("b")).as("b"))
+    assertSame(ddf, vec_dot_dec(col("a"), col("b")),
+      Twins.dotDec(col("a"), col("b")), "dotDec/decimal")
   }
 
   test("vec_sqdist_dec ≡ decimal (a-b)² fold (both input forms)") {
-    def dec(c: Column) = transform(c, x => x.cast(DoubleType).cast(DecimalType(12, 6)))
-    def hofOver(a: Column, b: Column) =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0).cast(DecimalType(30, 12)),
-        (acc, v) => (acc + v).cast(DecimalType(30, 12)))
     assertSame(dfDInRange, vec_sqdist_dec(col("a"), col("b")),
-      hofOver(dec(col("a")), dec(col("b"))), "sqDistDec/double")
-    val ddf = dfDInRange.select(dec(col("a")).as("a"), dec(col("b")).as("b"))
+      Twins.sqDistDec(Twins.dec6(col("a")), Twins.dec6(col("b"))), "sqDistDec/double")
+    val ddf = dfDInRange.select(Twins.dec6(col("a")).as("a"), Twins.dec6(col("b")).as("b"))
     assertSame(ddf, vec_sqdist_dec(col("a"), col("b")),
-      hofOver(col("a"), col("b")), "sqDistDec/decimal")
+      Twins.sqDistDec(col("a"), col("b")), "sqDistDec/decimal")
   }
 
   test("vec_dot_dec: ANSI element-cast overflow throws on both formulations") {
     val df = Seq((Seq[java.lang.Double](1.5e6), Seq[java.lang.Double](2.0)))
       .toDF("a", "b")
-    def dec(c: Column) = transform(c, x => x.cast(DoubleType).cast(DecimalType(12, 6)))
-    val hof = aggregate(zip_with(dec(col("a")), dec(col("b")), (p, q) => p * q),
-      lit(0).cast(DecimalType(30, 12)),
-      (acc, v) => (acc + v).cast(DecimalType(30, 12)))
+    val hof = Twins.dotDec(Twins.dec6(col("a")), Twins.dec6(col("b")))
     assertThrows[Exception](df.select(hof).collect())
     assertThrows[Exception](df.select(vec_dot_dec(col("a"), col("b"))).collect())
   }
@@ -149,8 +144,7 @@ class VecKernelsSpec extends AnyFunSuite {
     } ++ Seq((Seq[java.lang.Long](1L, null), Seq[java.lang.Long](2L, 3L)),
       (Seq[java.lang.Long](1L), Seq[java.lang.Long](1L, 2L)))
     val df = rows.toDF("a", "b")
-    val hof = aggregate(zip_with(col("a"), col("b"), (p, q) => p * q),
-      lit(0L), (acc, v) => acc + v)
+    val hof = Twins.dotL(col("a"), col("b"))
     assertSame(df, vec_dot_l(col("a"), col("b")), hof, "dotL")
     // ANSI long-multiply overflow throws on both formulations
     val odf = Seq((Seq[java.lang.Long](Long.MaxValue, 3L),
@@ -166,15 +160,8 @@ class VecKernelsSpec extends AnyFunSuite {
     } ++ Seq(Seq[java.lang.Long](), Seq[java.lang.Long](null, 5L, null),
       Seq[java.lang.Long](-1L), Seq[java.lang.Long](0L))
     val df = rows.toDF("hs")
-    val hof = aggregate(
-      sequence(lit(0), lit(63)), lit(0L),
-      (acc, b) => acc + when(
-        aggregate(col("hs"), lit(0),
-          (v, h) => v + when(call_function("shiftright", h, b)
-            .bitwiseAND(1) === 1, 1).otherwise(-1)) > 0,
-        call_function("shiftleft", lit(1L), b)).otherwise(0L))
-      .cast(LongType)
-    assertSame(df, simhash_vote(col("hs")), hof, "simHashVote")
+    assertSame(df, simhash_vote(col("hs")), Twins.simHashVote(col("hs")),
+      "simHashVote")
   }
 
   test("sig_agree ≡ size(filter(zip_with(===), identity)) incl. size(null) = -1") {
@@ -190,8 +177,8 @@ class VecKernelsSpec extends AnyFunSuite {
       (Seq[java.lang.Long](1L), null))
       .asInstanceOf[Seq[(Seq[java.lang.Long], Seq[java.lang.Long])]]
     val df = rows.toDF("a", "b")
-    val hof = size(filter(zip_with(col("a"), col("b"), (x, y) => x === y), v => v))
-    assertSame(df, sig_agree(col("a"), col("b")), hof, "sigAgree")
+    assertSame(df, sig_agree(col("a"), col("b")),
+      Twins.sigAgree(col("a"), col("b")), "sigAgree")
   }
 
   test("lsh_sigs ≡ lshTables' per-table xxhash64 hyperplane signatures") {
@@ -200,21 +187,8 @@ class VecKernelsSpec extends AnyFunSuite {
       (1 to 5).map(_ => randVec(1 + rnd.nextInt(16))) ++
       Seq(randVec(8, 3), Seq.empty[java.lang.Double], null)
     val df = rows.toDF("v")
-    // verbatim from Similarity.lshTables
-    def sig(t: Column): Column = {
-      val planes = (0 until bits).map { j =>
-        val proj = aggregate(
-          zip_with(col("v"), sequence(lit(0), size(col("v")) - 1), (x, p) =>
-            x.cast(DoubleType) *
-              (when(pmod(xxhash64(t * bits + j, p), lit(2)) === 0, 1.0)
-                .otherwise(-1.0))),
-          lit(0.0), (acc, v) => acc + v)
-        when(proj > 0, call_function("shiftleft", lit(1L), lit(j))).otherwise(0L)
-      }
-      planes.reduce(_ + _)
-    }
-    val hof = transform(sequence(lit(0), lit(tables - 1)), sig(_))
-    assertSame(df, lsh_sigs(col("v"), bits, tables), hof, "lshSigs")
+    assertSame(df, lsh_sigs(col("v"), bits, tables),
+      Twins.lshSigs(col("v"), bits, tables), "lshSigs")
   }
 
   test("word_ngrams ≡ array_distinct(transform(sequence, concat_ws(slice)))") {
@@ -228,10 +202,8 @@ class VecKernelsSpec extends AnyFunSuite {
     val nullRows = Seq(Seq[String]("a", null, "c", "d"))
     for (n <- Seq(3, 5)) {
       val df = (rows ++ nullRows).filter(_.length >= n).toDF("w")
-      val hof = array_distinct(
-        transform(sequence(lit(0), size(col("w")) - n),
-          i => concat_ws(" ", slice(col("w"), i + 1, lit(n)))))
-      assertSame(df, word_ngrams(col("w"), n), hof, s"wordNgrams/n=$n")
+      assertSame(df, word_ngrams(col("w"), n), Twins.wordNgrams(col("w"), n),
+        s"wordNgrams/n=$n")
     }
   }
 
@@ -242,45 +214,26 @@ class VecKernelsSpec extends AnyFunSuite {
     } ++ Seq(Seq[java.lang.Long](), Seq[java.lang.Long](5L),
       Seq[java.lang.Long](3L, null, 7L, 1L))
     val df = rows.toDF("ids")
-    val hof = flatten(transform(col("ids"), a =>
-      transform(filter(col("ids"), b => b > a),
-        b => struct(a.as("da"), b.as("db")))))
-    assertSame(df, id_pairs(col("ids")), hof, "idPairs")
+    assertSame(df, id_pairs(col("ids")), Twins.idPairs(col("ids")), "idPairs")
   }
 
-  test("to_dec6 ≡ transform(cast(double).cast(decimal(12,6)))") {
+  test("Similarity.dec6 (array casts) ≡ transform(cast(double).cast(decimal(12,6)))") {
+    // the built-in that replaced the to_dec6 kernel, pinned to the
+    // interpreted fold the kernel was pinned to
     val df = dfDInRange.select(col("a"))
     val hof = transform(col("a"), x => x.cast(DoubleType).cast(DecimalType(12, 6)))
-    assertSame(df, to_dec6(col("a")), hof, "toDec6")
+    assertSame(df, Twins.dec6(col("a")), hof, "dec6")
   }
 
   test("hplane_projs ≡ the centered-sketch decimal projection folds") {
-    // verbatim hyperplaneSign/hyperplaneProj from Dedup (pre-kernel)
-    def hSign(j: Column, p: Column): Column = {
-      val idx = (j * 4096 + p + 1).cast(LongType)
-      val h1 = pmod(idx * 2654435761L, lit(2147483648L))
-      val h2 = h1.bitwiseXOR(call_function("shiftright", h1, lit(16)))
-      val h3 = pmod(h2 * 1597334677L, lit(2147483648L))
-      val h4 = h3.bitwiseXOR(call_function("shiftright", h3, lit(16)))
-      when(pmod(h4, lit(2)) === 0, 1).otherwise(-1)
-    }
-    def hProj(arr: Column, j: Column): Column =
-      aggregate(
-        zip_with(arr, sequence(lit(0), size(arr) - 1), (x, p) =>
-          (x * hSign(j, p)).cast(DecimalType(22, 6))),
-        lit(java.math.BigDecimal.ZERO).cast(DecimalType(22, 6)),
-        (a, t) => (a + t).cast(DecimalType(22, 6)))
     val bits = 8
     val rows = (1 to 20).map(_ => randVec(64)) ++
       (1 to 5).map(_ => randVec(1 + rnd.nextInt(16))) ++
       Seq(randVec(8, 3), Seq.empty[java.lang.Double])
-    val df = rows.toDF("v")
-      .select(transform(col("v"),
-        x => x.cast(DoubleType).cast(DecimalType(12, 6))).as("d"), col("v"))
-    val hof = transform(sequence(lit(0), lit(bits - 1)), j => hProj(col("d"), j))
-    // kernel over the RAW double array (fused dec6 cast) must equal
-    // the HOF over the pre-cast decimal array
-    assertSame(df, hplane_projs(col("v"), bits), hof, "hplaneProjs")
+    // kernel over the RAW double array (fused dec6 cast) must equal the
+    // folds over the decimal(12,6) cast
+    assertSame(rows.toDF("v"), hplane_projs(col("v"), bits),
+      Twins.hplaneProjs(col("v"), bits), "hplaneProjs")
   }
 
   test("max_run ≡ the sorted-token run fold (incl. empty-string tokens)") {
@@ -290,14 +243,7 @@ class VecKernelsSpec extends AnyFunSuite {
       (0 until len).map(_ => words(rnd.nextInt(words.length)))
     } ++ Seq(Seq(""), Seq("", ""), Seq[String]())
     val df = rows.toDF("t").select(array_sort(col("t")).as("s"))
-    def run(acc: Column, x: Column): Column =
-      when(x === acc.getField("prev"), acc.getField("run") + 1).otherwise(lit(1L))
-    val hof = aggregate(col("s"),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => struct(x.as("prev"), run(acc, x).as("run"),
-        greatest(acc.getField("best"), run(acc, x)).as("best")),
-      acc => acc.getField("best"))
-    assertSame(df, max_run(col("s")), hof, "maxRun")
+    assertSame(df, max_run(col("s")), Twins.maxRun(col("s")), "maxRun")
   }
 
   test("winnow_fps ≡ md5-gram + window-min + distinct HOF pipeline") {
@@ -308,18 +254,12 @@ class VecKernelsSpec extends AnyFunSuite {
       (0 until len).map(_ => words(rnd.nextInt(words.length)))
     } ++ Seq(Seq("a", "b"), Seq("a", "b", "c"), Seq[String]())
     val df = rows.toDF("t")
-    val grams = when(size(col("t")) >= k,
-      transform(sequence(lit(0), size(col("t")) - k),
-        i => md5(concat_ws(" ", slice(col("t"), i + 1, lit(k))))))
-      .otherwise(array().cast(ArrayType(StringType)))
-    val hof = array_distinct(transform(
-      sequence(lit(0), greatest(size(col("g")) - w, lit(0))),
-      j => array_min(slice(col("g"), j + 1, lit(w)))))
     // the HOF pipeline only defines fingerprints for docs WITH grams
     // (the operator filters size(_grams) > 0 first); compare there and
     // pin the kernel's empty-case separately
-    val withGrams = df.select(col("t"), grams.as("g")).filter(size(col("g")) > 0)
-    assertSame(withGrams, winnow_fps(col("t"), k, w), hof, "winnowFps")
+    val withGrams = df.filter(size(Twins.winnowGrams(col("t"), k)) > 0)
+    assertSame(withGrams, winnow_fps(col("t"), k, w),
+      Twins.winnowFps(col("t"), k, w), "winnowFps")
     val empty = df.filter(size(col("t")) < k)
       .select(winnow_fps(col("t"), k, w).as("f")).collect()
     empty.foreach(r => assert(r.getSeq[String](0).isEmpty))
@@ -340,19 +280,8 @@ class VecKernelsSpec extends AnyFunSuite {
       .select(transform(col("codes"),
         s => struct(s.getField("_1").as("_code"), s.getField("_2").as("cvec")))
         .as("codes"), col("v"))
-    def l2(a: Column, b: Column) =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (a2, t) => a2 + t)
-    val hof = aggregate(col("codes"),
-      struct(lit(null).cast(DoubleType).as("_d"),
-        lit(null).cast(LongType).as("_c")),
-      (acc, s) => {
-        val d = l2(col("v"), s.getField("cvec"))
-        when(acc.getField("_c").isNull || d < acc.getField("_d"),
-          struct(d.as("_d"), s.getField("_code").cast(LongType).as("_c")))
-          .otherwise(acc)
-      }).getField("_c")
-    assertSame(df, nearest_code_l2(col("codes"), col("v")), hof, "nearestCodeL2")
+    assertSame(df, nearest_code_l2(col("codes"), col("v")),
+      Twins.nearestCodeL2(col("codes"), col("v")), "nearestCodeL2")
   }
 
   // ---------- r21 kernels ----------
@@ -370,11 +299,8 @@ class VecKernelsSpec extends AnyFunSuite {
       (Seq[java.lang.Long](1L), null))
       .asInstanceOf[Seq[(Seq[java.lang.Long], Seq[java.lang.Long])]]
     val df = rows.toDF("a", "b")
-    val hof = aggregate(
-      zip_with(col("a"), col("b"),
-        (a, b) => bit_count(a.bitwiseXOR(b)).cast(LongType)),
-      lit(0L), (acc, v) => acc + v)
-    assertSame(df, hamming_dist(col("a"), col("b")), hof, "hammingDist")
+    assertSame(df, hamming_dist(col("a"), col("b")),
+      Twins.hammingDist(col("a"), col("b")), "hammingDist")
   }
 
   test("binary_code ≡ the transform/aggregate sign-bit packing chain") {
@@ -390,29 +316,24 @@ class VecKernelsSpec extends AnyFunSuite {
       (rows.map(r => if (r == null) null else r.map(x =>
         if (x == null) null else java.lang.Float.valueOf(x.floatValue())))
         .toDF("v"), "float"))) {
-      val hof = transform(sequence(lit(0),
-        ((size(col("v")) - 1) / 64).cast(IntegerType)), w =>
-        aggregate(sequence(lit(0), lit(63)), lit(0L), (acc, j) => {
-          val idx = w * 64 + j + 1
-          acc + when(idx <= size(col("v")) &&
-            element_at(col("v"), idx).cast(DoubleType) > 0.0,
-            call_function("shiftleft", lit(1L), j)).otherwise(0L)
-        }))
-      assertSame(df, binary_code(col("v")), hof, s"binaryCode/$label")
+      assertSame(df, binary_code(col("v")), Twins.binaryCode(col("v")),
+        s"binaryCode/$label")
     }
   }
 
-  test("to_double ≡ transform(cast(double)) over float/long/double") {
+  test("Similarity.dbl (array cast) ≡ transform(cast(double)) over float/long/double") {
+    // the built-in that replaced the to_double kernel, pinned to the
+    // interpreted fold the kernel was pinned to
     val base = (1 to 20).map(_ => randVec(1 + rnd.nextInt(32))) ++
       Seq(randVec(8, 3), Seq.empty[java.lang.Double], null)
     def hof = transform(col("v"), x => x.cast(DoubleType))
-    assertSame(base.toDF("v"), to_double(col("v")), hof, "toDouble/double")
     val fl = base.map(r => if (r == null) null else r.map(x =>
       if (x == null) null else java.lang.Float.valueOf(x.floatValue())))
-    assertSame(fl.toDF("v"), to_double(col("v")), hof, "toDouble/float")
     val lg = base.map(r => if (r == null) null else r.map(x =>
       if (x == null) null else java.lang.Long.valueOf(x.longValue())))
-    assertSame(lg.toDF("v"), to_double(col("v")), hof, "toDouble/long")
+    for ((df, label) <- Seq((base.toDF("v"), "double"), (fl.toDF("v"), "float"),
+                            (lg.toDF("v"), "long")))
+      assertSame(df, graft.operators.Similarity.dbl(col("v")), hof, s"dbl/$label")
   }
 
   test("word_ngrams_all ≡ transform(sequence, concat_ws(slice)) in order") {
@@ -424,9 +345,8 @@ class VecKernelsSpec extends AnyFunSuite {
       Seq[String]("a", null, "c", "d", "e"))
     for (n <- Seq(3, 5)) {
       val df = rows.filter(_.length >= n).toDF("w")
-      val hof = transform(sequence(lit(0), size(col("w")) - n),
-        i => concat_ws(" ", slice(col("w"), i + 1, lit(n))))
-      assertSame(df, word_ngrams_all(col("w"), n), hof, s"wordNgramsAll/n=$n")
+      assertSame(df, word_ngrams_all(col("w"), n), Twins.wordNgramsAll(col("w"), n),
+        s"wordNgramsAll/n=$n")
     }
   }
 
@@ -439,13 +359,6 @@ class VecKernelsSpec extends AnyFunSuite {
       Seq.empty[String], null)
     val df = rows.toDF("t")
     val toks = col("t")
-    val hofHeads =
-      when(size(toks) >= 2, transform(sequence(lit(0), size(toks) - 2),
-        i => struct(
-          concat_ws(" ", slice(toks, i + 1, lit(2))).as("bg"),
-          element_at(toks, i + 1).as("w1"))))
-        .otherwise(array().cast(ArrayType(StructType(Seq(
-          StructField("bg", StringType), StructField("w1", StringType))))))
     val hofPairs =
       when(size(toks) >= 2, transform(sequence(lit(0), size(toks) - 2),
         i => struct(
@@ -453,7 +366,8 @@ class VecKernelsSpec extends AnyFunSuite {
           element_at(toks, i + 2).as("w2"))))
         .otherwise(array().cast(ArrayType(StructType(Seq(
           StructField("w1", StringType), StructField("w2", StringType))))))
-    assertSame(df, bigram_heads(toks), hofHeads, "bigramHeads")
-    assertSame(df, bigram_pairs(toks), hofPairs, "bigramPairs")
+    assertSame(df, bigram_heads(toks), Twins.bigramHeads(toks), "bigramHeads")
+    assertSame(df, bigram_pairs(toks), Twins.bigramPairs(toks), "bigramPairs")
+    assertSame(df, Twins.bigramPairs(toks), hofPairs, "bigramPairs/twin")
   }
 }
