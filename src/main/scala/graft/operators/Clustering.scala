@@ -22,9 +22,7 @@ import org.apache.spark.sql.types._
   * map-side partial `min(struct)` BEFORE the keyed shuffle — the only
   * full-width exchange is |corpus| rows keyed by id. The update step
   * shuffles (cluster, pos) partial sums — k·dim rows after map-side
-  * combine. General iterative refinement in IEEE doubles (when
-  * cross-engine exactness is not required) lives in
-  * [[Similarity.ivfTopK]]'s spherical-k-means option.
+  * combine.
   */
 object Clustering {
 

@@ -1412,15 +1412,14 @@ object Dedup {
     * straddling near-dups are the accepted recall loss, exactly as the
     * paper frames it. Because k ∝ N also makes the exact assignment
     * fold quadratic, the two-level assignment engages automatically at
-    * k ≥ `twoLevelAutoK` (default 512 — safely above every gate's
+    * k ≥ [[Similarity.TwoLevelAuto]] (512 — safely above every gate's
     * k=16, safely below the measured 718 s k=1600 wall); see the
     * switch note in the body.
     */
   def semanticDedup(emb: DataFrame, k: Int, tau: Double,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
-                    twoLevelAssign: Boolean = false,
-                    twoLevelAutoK: Int = 512): DataFrame = {
+                    twoLevelAssign: Boolean = false): DataFrame = {
     require(k > 0 && tau > 0.0, "need k > 0 and tau > 0")
     def dot(x: Column, y: Column): Column =
       graft.functions.VecKernels.vec_dot_dec(x, y)
@@ -1430,17 +1429,13 @@ object Dedup {
     // vectors, but EXACT duplicates still co-assign with certainty
     // (identical vectors fold identically), so the clone-recall
     // contract survives. The switch also engages ITSELF at k ≥
-    // twoLevelAutoK (the ev09 knownKeyCount guard pattern): in the
-    // SemDeDup regime k scales with the corpus, so k — known
+    // Similarity.TwoLevelAuto (the ev09 knownKeyCount guard pattern):
+    // in the SemDeDup regime k scales with the corpus, so k — known
     // statically, no corpus count needed — IS the quadratic-wall
-    // signal, and a 100 TB run must not depend on the caller knowing
-    // a flag exists. Pass twoLevelAutoK = Int.MaxValue to force the
-    // exact path at any k. Gates run k=16 (exact) and the dd18 gate
-    // pins the two-level path explicitly.
-    if (!twoLevelAssign && k >= twoLevelAutoK)
-      Similarity.warnAutoTwoLevel("semanticDedup", k, twoLevelAutoK)
+    // signal. Gates run k=16 (exact) and the dd18 gate pins the
+    // two-level path explicitly.
     val assigned =
-      if (twoLevelAssign || k >= twoLevelAutoK)
+      if (Similarity.decideTwoLevel("semanticDedup", twoLevelAssign, k))
         Clustering.assignToSeedsTwoLevel(emb, k, idCol, vecCol)
       else Clustering.assignToSeeds(emb, k, idCol, vecCol)
     val e = emb.select(col(idCol).as("_id"), Similarity.dec6(col(vecCol)).as("_x"))

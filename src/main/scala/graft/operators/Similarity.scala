@@ -62,20 +62,43 @@ object Similarity {
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** One-line runtime signal when the two-level path engages via the
-    * AUTO threshold rather than the explicit flag: the switch changes
-    * results (approximate assignment, ~0.06–0.10 measured recall drop
-    * vs exact at the rehearsal scales), and a caller crossing the
-    * threshold by growing nlist/k should learn that from the log, not
-    * from silently different output.
+  /** Cell or cluster count at which assignment goes two-level by
+    * itself: safely above every gate's nlist/k = 16, safely below the
+    * measured exact-assign walls (497 s at nlist = 1600, 718 s at
+    * k = 1600 — SCALE.md). nlist and k scale with the corpus in the
+    * IVF and SemDeDup regimes, so the count IS the quadratic-wall
+    * signal, and a 100 TB run must not depend on the caller knowing a
+    * flag exists.
     */
-  private[operators] def warnAutoTwoLevel(site: String, n: Long,
-                                          threshold: Int): Unit =
-    logger.warn(s"graft $site: two-level assignment AUTO-ENGAGED " +
-      s"($n >= $threshold): assignment is approximate (~0.06-0.10 " +
-      "measured recall cost vs exact) and kills the quadratic " +
-      "exact-assign wall. Pass twoLevelAssign = true to acknowledge, " +
-      "or threshold Int.MaxValue to force exact assignment.")
+  private[operators] val TwoLevelAuto = 512
+
+  /** The ONE two-level decision behind every IVF, IVF-PQ and SemDeDup
+    * entry point: the explicit flag, or `n` cells at or past
+    * [[TwoLevelAuto]]. IVF sites pass the SURVIVING quantizer size
+    * (hash-picked cells can leave fewer than the declared nlist), so
+    * build, absorb, drift check and stats assign a given index by the
+    * same rule. `n` is evaluated only when `atMost` — an upper bound
+    * known without a job, the declared nlist at build — reaches the
+    * threshold, so small builds run no count. An auto-engaged switch
+    * logs one WARN: it changes results (approximate assignment,
+    * ~0.06–0.10 measured recall drop vs exact at the rehearsal
+    * scales), and a caller crossing the threshold should learn that
+    * from the log, not from silently different output.
+    */
+  private[operators] def decideTwoLevel(site: String,
+                                        twoLevelAssign: Boolean,
+                                        n: => Long,
+                                        atMost: Long = Long.MaxValue): Boolean =
+    twoLevelAssign || atMost >= TwoLevelAuto && {
+      val cells = n
+      val auto = cells >= TwoLevelAuto
+      if (auto) logger.warn(s"graft $site: two-level assignment " +
+        s"AUTO-ENGAGED ($cells >= $TwoLevelAuto): assignment is " +
+        "approximate (~0.06-0.10 measured recall cost vs exact) and " +
+        "kills the quadratic exact-assign wall. Pass twoLevelAssign = " +
+        "true to acknowledge; exact assignment is not offered at this size.")
+      auto
+    }
 
   /** One-pass cosine similarity between two float/double arrays —
     * served by the compiled [[graft.functions.VecKernels.vec_dot_d]]
@@ -315,17 +338,6 @@ object Similarity {
         when(s === lit(m - 1), subDim + rem).otherwise(subDim))))
   }
 
-  /** `iters` in-plan Lloyd rounds over a per-subspace PQ codebook.
-    * `seeds` is (_code, sub, cvec); `subs` is the (cid, sub, sv)
-    * subvector stream. Each round assigns every subvector to its
-    * nearest current code (map-side `min(struct)` argmin — the encode
-    * shape, never a per-candidate window) and recomputes each
-    * (sub, code) centroid as the per-position member mean in DECIMAL
-    * (summation-order-independent → identical codebooks every run,
-    * [[ivfTopK]]'s discipline). A code that attracts no members drops
-    * out — standard k-means death; encode/ADC never assume exactly
-    * `codes` surviving rows. `iters = 0` returns the seeds untouched.
-    */
   /** Per-`sub` codebook rows (sub, _code, cvec) folded into ONE array
     * row per subspace, code-ascending — the input shape for
     * [[nearestCodeL2]]'s per-row argmin. The km01/dd15 lesson applied
@@ -353,22 +365,6 @@ object Similarity {
     */
   private def nearestCodeL2(v: Column): Column =
     graft.functions.VecKernels.nearest_code_l2(col("_codes"), v)
-
-  private def refineCodebook(seeds: DataFrame, subs: DataFrame,
-                             iters: Int): DataFrame = {
-    (1 to iters).foldLeft(seeds) { (cb, _) =>
-      subs
-        .join(broadcast(subCodeArrays(cb)), "sub")
-        .select(col("sub"), nearestCodeL2(col("sv")).as("_code"),
-          col("sv"))
-        .select(col("sub"), col("_code"), posexplode(col("sv")))
-        .groupBy(col("sub"), col("_code"), col("pos"))
-        .agg(avg(col("col").cast(DecimalType(25, 12))).cast(DoubleType).as("_m"))
-        .groupBy(col("sub"), col("_code"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("_m")))),
-          s => s.getField("_m")).as("cvec"))
-    }
-  }
 
   /** Product-quantization ANN — the compression half of the IVF-PQ
     * architecture every 100 TB vector store runs. Vectors split into
@@ -403,19 +399,14 @@ object Similarity {
     * vector); ADC scoring shuffles (cid, sub, code) triples only;
     * vectors rejoin by id for the shortlist re-rank (queries broadcast).
     *
-    * `refineIters` Lloyd-refines the hash-seeded codebooks in-plan
-    * (per-subspace assignment argmin, then the DECIMAL per-position
-    * member mean — deterministic, same machinery as [[ivfTopK]]'s
-    * option). Defaults to 0 on MEASURED evidence (BENCH_NOTES.md,
-    * "PQ codebook refinement measured" under round 9): one
-    * pass moves top-5 recall 1.00→1.00 at sf0.01 and 0.92→0.94 at
-    * sf0.1 (a second pass adds nothing) while costing two extra
-    * corpus passes per iteration — not worth it here; a corpus with
-    * real cluster structure is where trained codebooks pay.
+    * The codebooks stay hash-seeded. An in-plan Lloyd refinement of
+    * them was measured and deleted (BENCH_NOTES.md, "PQ codebook
+    * refinement measured" under round 9): one pass moved top-5 recall
+    * only 1.00→1.00 at sf0.01 and 0.92→0.94 at sf0.1, at two extra
+    * corpus passes per iteration.
     */
   def pqTopK(queries: DataFrame, candidates: DataFrame, k: Int,
              m: Int = 16, codes: Int = 32, shortlist: Int = 100,
-             refineIters: Int = 0,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(m >= 1 && codes >= 2 && shortlist >= k,
       "need m >= 1, codes >= 2, shortlist >= k")
@@ -431,13 +422,10 @@ object Similarity {
     val seedIds = candidates
       .groupBy(pmod(xxhash64(col(idCol)), lit(codes)).as("_code"))
       .agg(min(col(idCol)).as("_sid"))
-    val seedCents = candidates
+    val cents = candidates
       .join(broadcast(seedIds), col(idCol) === col("_sid"))
       .select(col("_code"), subSplit(dbl(col(vecCol))))
       .withColumnRenamed("pos", "sub").withColumnRenamed("col", "cvec")
-    val cents = refineCodebook(seedCents, cand.select(col("cid"),
-      subSplit(col("cv"))).withColumnRenamed("pos", "sub")
-      .withColumnRenamed("col", "sv"), refineIters)
 
     // encode: per (vector, subspace) the argmin-distance code as a
     // per-row fold over the broadcast per-subspace code array
@@ -513,37 +501,30 @@ object Similarity {
     * tables are broadcast-tiny; both argmins collapse map-side
     * (min(struct), never a per-candidate window); candidate vectors are
     * read exactly twice (encode + re-rank) at any corpus size.
-    * `refineIters` Lloyd-refines the residual codebook in-plan;
-    * defaults 0 on MEASURED evidence — on this structure-free corpus
-    * one pass LOWERS recall 0.92→0.86 at sf0.1 (the [[ivfTopK]]
-    * lesson repeated on residuals: means off actual corpus residuals
-    * track neighbor geometry worse than the skewed seed cells).
+    * The residual codebook stays hash-seeded: an in-plan Lloyd
+    * refinement of it was measured and deleted — on this
+    * structure-free corpus one pass LOWERED recall 0.92→0.86 at sf0.1
+    * (BENCH_NOTES.md, "PQ codebook refinement measured").
     *
     * `twoLevelAssign` is the corpus-scaled-nlist switch for the
     * CANDIDATE-side cell assignment (the N·nlist term — quadratic once
-    * nlist ∝ N): cells group under √nlist leaders and each candidate
-    * scans only its top-2 leader groups ([[ivfPqCellsTwoLevel]]).
-    * Approximate for boundary candidates, exactly like
-    * `ivfTopK(twoLevelAssign = true)`; gates keep the exact path.
+    * nlist ∝ N; measured 869 s exact vs 179 s two-level at the 100×
+    * rehearsal, SCALE.md r17): cells group under √nlist leaders and
+    * each candidate scans only its top-2 leader groups
+    * ([[ivfPqCellsTwoLevel]]). Approximate for boundary candidates,
+    * exactly like `ivfTopK(twoLevelAssign = true)`; it engages by
+    * itself once the build keeps [[TwoLevelAuto]] cells, and gates
+    * keep the exact path.
     */
   def ivfPqTopK(queries: DataFrame, candidates: DataFrame, k: Int,
                 nlist: Int = 16, nprobe: Int = 8,
                 m: Int = 16, codes: Int = 32, shortlist: Int = 100,
-                refineIters: Int = 0, twoLevelAssign: Boolean = false,
-                twoLevelAutoNlist: Int = 512,
+                twoLevelAssign: Boolean = false,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(nprobe >= 1 && nprobe <= nlist && shortlist >= k,
       "need 1 <= nprobe <= nlist and shortlist >= k")
-    // self-engaging big-corpus switch, same rationale and default as
-    // ivfTopK's twoLevelAutoNlist (nlist ∝ N makes the exact candidate
-    // assignment quadratic — measured 869 s vs 179 s two-level at the
-    // 100× rehearsal, SCALE.md r17); Int.MaxValue disarms
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfPqTopK", nlist, twoLevelAutoNlist)
     ivfPqSearch(queries,
-      ivfPqBuild(candidates, nlist, m, codes, refineIters, twoLevel,
-        twoLevelAutoNlist, idCol, vecCol),
+      ivfPqBuild(candidates, nlist, m, codes, twoLevelAssign, idCol, vecCol),
       candidates, k, nprobe, shortlist, m, idCol, vecCol)
   }
 
@@ -587,45 +568,36 @@ object Similarity {
 
   /** Build the [[IvfPqIndex]]: coarse cells hash-seeded in-plan,
     * candidates assigned per-row (exact fold, or the two-level
-    * leader-group fold past `nlist ≥ 512` / `twoLevelAssign` — see
-    * [[ivfPqTopK]]), residuals split into `m` subvectors and encoded
-    * against one shared `codes`-entry codebook. O(1) corpus passes
-    * regardless of how the index is consumed: the coarse quantizer and
-    * the codebook are localCheckpoint-materialized at build (both
-    * broadcast-tiny), so [[IvfPqIndex.save]]'s three writes and every
-    * serve re-derive nothing corpus-sized.
+    * leader-group fold at [[TwoLevelAuto]] surviving cells or under
+    * `twoLevelAssign` — see [[ivfPqTopK]]), residuals split into `m`
+    * subvectors and encoded against one shared `codes`-entry codebook.
+    * O(1) corpus passes regardless of how the index is consumed: the
+    * coarse quantizer and the codebook are localCheckpoint-materialized
+    * at build (both broadcast-tiny), so [[IvfPqIndex.save]]'s three
+    * writes and every serve re-derive nothing corpus-sized.
     */
   def ivfPqBuild(candidates: DataFrame,
                  nlist: Int = 16, m: Int = 16, codes: Int = 32,
-                 refineIters: Int = 0, twoLevelAssign: Boolean = false,
-                 twoLevelAutoNlist: Int = 512,
+                 twoLevelAssign: Boolean = false,
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): IvfPqIndex = {
     requireIntegralId(candidates, idCol)
-    // self-engaging big-corpus switch; Int.MaxValue disarms (ivfTopK doc)
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfPqBuild", nlist, twoLevelAutoNlist)
     def subSplit(v: Column): Column = subSplitExplode(v, m)
 
     val cand = candidates.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
 
-    // coarse cells: nlist corpus vectors picked in-plan by hash bucket.
-    // Two-level mode materializes them ONCE (nlist rows): the leader /
-    // group derivations reference the table repeatedly, and the live
-    // chain re-derives the corpus join per reference — the measured
-    // r15 ivfBuild trap. Exact mode keeps the untouched lazy chain.
-    val coarse0 = candidates
+    // coarse cells: nlist corpus vectors picked in-plan by hash bucket,
+    // ALWAYS materialized (the ivfBuild centroid precedent): coarse is
+    // referenced by the assignment, the probe side, the leader / group
+    // derivations and — via save() — its own write; lazy, each
+    // reference re-runs the corpus hash-pick join (the measured r15
+    // ivfBuild trap)
+    val coarse = candidates
       .join(broadcast(candidates
         .groupBy(pmod(xxhash64(col(idCol)), lit(nlist)).as("cell"))
         .agg(min(col(idCol)).as("_sid"))), col(idCol) === col("_sid"))
       .select(col("cell"), dbl(col(vecCol)).as("cellv"))
-    // ALWAYS materialized (the ivfBuild centroid precedent): coarse is
-    // referenced by the assignment, the probe side, and — via save() —
-    // its own write; lazy, each reference re-runs the corpus hash-pick
-    // join (save()'s three artifact writes would re-execute the corpus
-    // chain once each)
-    val coarse = coarse0.localCheckpoint()
+      .localCheckpoint()
 
     // assign candidates to their nearest cell via the per-row fold
     // (cells renamed to the shared (_code, cvec) shape; no expansion,
@@ -638,20 +610,20 @@ object Similarity {
     // ([[ivfPqCellsTwoLevel]]). The query-side probe stays exact: its
     // cost is nq·nlist, and nq is serving-bounded, not corpus-bounded
     // (a corpus-as-queries caller should use ivfTopK's two-level probe).
-    val assigned = ivfPqAssignResiduals(cand, coarse, twoLevel)
+    // The rule keys on the SURVIVING cell count, as absorb, drift check
+    // and stats decide it, so they all assign a given index alike.
+    val assigned = ivfPqAssignResiduals(cand, coarse,
+      decideTwoLevel("ivfPqBuild", twoLevelAssign, coarse.count(),
+        atMost = nlist))
 
-    // one shared PQ codebook over residuals, seeded by hash bucket,
-    // optionally Lloyd-refined on the residual subvector stream
+    // one shared PQ codebook over residuals, seeded by hash bucket
     val seedIds = candidates
       .groupBy(pmod(xxhash64(col(idCol), lit(7)), lit(codes)).as("_code"))
       .agg(min(col(idCol)).as("_pid"))
-    val seedCents = assigned
+    val cents = assigned
       .join(broadcast(seedIds), col("cid") === col("_pid"))
       .select(col("_code"), subSplit(col("rv")))
       .withColumnRenamed("pos", "sub").withColumnRenamed("col", "cvec")
-    val cents = refineCodebook(seedCents, assigned.select(col("cid"),
-      subSplit(col("rv"))).withColumnRenamed("pos", "sub")
-      .withColumnRenamed("col", "sv"), refineIters)
 
     // cents is codes×m rows — checkpointing costs one corpus pass and
     // makes the encode, the codes write, and every served ADC build
@@ -712,7 +684,7 @@ object Similarity {
     * [[ivfAbsorbDelta]]'s contract on the production architecture:
     * delta rows assign to the EXISTING coarse quantizer's cells (one
     * bounded pass over the delta; exact fold, or the two-level fold
-    * past the auto threshold), their residuals encode against the
+    * by the build's rule), their residuals encode against the
     * EXISTING codebook, and the integer codes append to the codes
     * table. Neither quantizer retrains, the indexed corpus is never
     * re-read, and the absorbed index serves through [[ivfPqSearch]]
@@ -731,7 +703,6 @@ object Similarity {
     */
   def ivfPqAbsorbDelta(index: IvfPqIndex, delta: DataFrame,
                        m: Int = -1, twoLevelAssign: Boolean = false,
-                       twoLevelAutoNlist: Int = 512,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): IvfPqIndex = {
     requireIntegralId(delta, idCol)
@@ -741,12 +712,10 @@ object Similarity {
         index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
     val cand = delta.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
     val coarse = index.coarse
-    val nlist = coarse.count() // quantizer-sized, never the corpus
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfPqAbsorbDelta", nlist, twoLevelAutoNlist)
+    // quantizer-sized count, never the corpus
     val encoded = ivfPqEncode(
-      ivfPqAssignResiduals(cand, coarse, twoLevel),
+      ivfPqAssignResiduals(cand, coarse, decideTwoLevel("ivfPqAbsorbDelta",
+        twoLevelAssign, coarse.count())),
       index.codebook, mEff, Some("ivfPqAbsorbDelta"))
     IvfPqIndex(coarse, index.codebook,
       index.codes.unionByName(encoded), builtM = Some(mEff))
@@ -963,30 +932,28 @@ object Similarity {
   }
 
   /** IVF-style ANN: a coarse quantizer of `nlist` centroids — real
-    * corpus vectors picked by hash, optionally refined by `iters` Lloyd
-    * rounds of spherical k-means over a deterministic hash SAMPLE of the
-    * corpus, all in-plan — every vector assigned to its nearest centroid
-    * (broadcast centroids, partition-local argmin), queries probed
-    * against their `nprobe` nearest centroid lists only.
+    * corpus vectors picked by hash, in-plan — every vector assigned to
+    * its nearest centroid (broadcast centroids, partition-local
+    * argmin), queries probed against their `nprobe` nearest centroid
+    * lists only.
     *
-    * `iters` defaults to 0 on MEASURED evidence: on this near-uniform
-    * synthetic corpus the refinement balances the lists (23–45 members
-    * vs the seeds' skew) but that LOWERS recall at every nprobe
-    * (sf0.01, top-5: 0.84→0.62 @nprobe=4, 0.92→0.78 @nprobe=8), because
-    * with no real cluster structure the skewed Voronoi cells around
-    * actual corpus vectors track neighbor geometry better than
-    * shrunken-norm means — the recall lever here is `nprobe`, not
-    * Lloyd. Corpora with genuine cluster structure are where `iters>0`
-    * pays; the machinery is deterministic either way (DECIMAL mean
-    * accumulation — summation-order-independent, identical centroids
-    * every run; a centroid that attracts no sample members drops out,
-    * standard k-means death).
+    * The centroids stay hash-picked. A spherical k-means refinement of
+    * them was measured and deleted: on this near-uniform synthetic
+    * corpus it balanced the lists (23–45 members vs the seeds' skew)
+    * but LOWERED recall at every nprobe (sf0.01, top-5: 0.84→0.62
+    * @nprobe=4, 0.92→0.78 @nprobe=8), because with no real cluster
+    * structure the skewed Voronoi cells around actual corpus vectors
+    * track neighbor geometry better than shrunken-norm means — the
+    * recall lever here is `nprobe`, not Lloyd (BENCH_NOTES.md round 6).
     *
     * Scale shape: assignment is a narrow broadcast pass; the probe join
     * is a hash-partitioned equi-join on centroid id — candidate count
-    * per query ≈ nprobe/nlist of the corpus instead of all of it. The
-    * k-means refinement touches only sample × nlist pairs per round
-    * (tune `sampleMod` down as the corpus grows).
+    * per query ≈ nprobe/nlist of the corpus instead of all of it.
+    *
+    * `twoLevelAssign` switches build and probe to the leader-group
+    * assignment ([[ivfBuild]]); it engages by itself once the build
+    * keeps [[TwoLevelAuto]] centroids (the measured 497 s exact-assign
+    * wall at nlist=1600, SCALE.md).
     *
     * `pinProbeParallelism`: pass TRUE when `queries` IS the corpus
     * (the kNN-graph build, sim12's shape) — the pair-scoring stage is
@@ -1000,23 +967,12 @@ object Similarity {
     */
   def ivfTopK(queries: DataFrame, candidates: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 8,
-              iters: Int = 0, sampleMod: Int = 4,
-              twoLevelAssign: Boolean = false, leaderGroups: Int = 3,
-              candidateGroups: Int = 2, twoLevelAutoNlist: Int = 512,
+              twoLevelAssign: Boolean = false,
               idCol: String = "vec_id", vecCol: String = "embedding",
               pinProbeParallelism: Boolean = false): DataFrame = {
     requireIntegralIds(queries, candidates, idCol)
-    // the two-level path engages ITSELF at nlist ≥ twoLevelAutoNlist
-    // (the semanticDedup twoLevelAutoK pattern): nlist scales with the
-    // corpus in the IVF regime, so nlist — known statically — IS the
-    // quadratic-wall signal (the measured 497 s exact-assign wall at
-    // nlist=1600, SCALE.md), and a 100 TB run must not depend on the
-    // caller knowing a flag exists. Default 512: safely above every
-    // gate's nlist=16, safely below the measured wall. Pass
-    // Int.MaxValue to force the exact assignment at any nlist.
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfTopK", nlist, twoLevelAutoNlist)
+    val (index, twoLevel) =
+      ivfBuildDecided(candidates, nlist, twoLevelAssign, idCol, vecCol)
     val g = math.max(1, math.round(math.sqrt(nlist.toDouble)).toInt)
     // AVERAGE-capacity sanity bound, not a guarantee: leader groups
     // are hash-picked and nearest-leader regrouping makes them uneven,
@@ -1026,15 +982,12 @@ object Similarity {
     // cannot work even with perfectly even groups. It is also checked
     // against the DECLARED nlist: execution derives g via gOf() from
     // the centroids that actually survive build (hash-bucket
-    // collisions / k-means death can leave fewer), so treat this as an
-    // approximate config check, not a bound on the executed geometry.
-    if (twoLevel) require(nprobe <= leaderGroups * (nlist / g),
-      s"two-level probes see ~leaderGroups*(nlist/g) cells on average: " +
-        s"nprobe=$nprobe > $leaderGroups*${nlist / g}")
-    ivfSearch(queries,
-      ivfBuild(candidates, nlist, iters, sampleMod, twoLevel,
-        candidateGroups, twoLevelAutoNlist, idCol, vecCol),
-      k, nprobe, twoLevel, leaderGroups, idCol, vecCol,
+    // collisions can leave fewer), so treat this as an approximate
+    // config check, not a bound on the executed geometry.
+    if (twoLevel) require(nprobe <= LeaderGroups * (nlist / g),
+      s"two-level probes see ~$LeaderGroups*(nlist/g) cells on average: " +
+        s"nprobe=$nprobe > $LeaderGroups*${nlist / g}")
+    ivfSearch(queries, index, k, nprobe, twoLevel, idCol, vecCol,
       pinProbeParallelism)
   }
 
@@ -1060,6 +1013,20 @@ object Similarity {
       spark.read.parquet(s"$path/cells"))
 
   // ---- IVF internals (shared by build and search) -----------------------
+
+  /** Leader groups a two-level QUERY probe scans: below √nlist at every
+    * nlist the gates use, so query-side pruning is genuinely exercised
+    * (sim13 pins recall at this value).
+    */
+  private val LeaderGroups = 3
+
+  /** Leader groups a two-level CANDIDATE scans before picking its one
+    * cell. One group loses boundary candidates to every probe — the
+    * structural 0.80 recall ceiling measured in r15; two restore the
+    * exact cell for them (0.80 → 0.84 at the rehearsal config, BENCH_NOTES
+    * "Round 16: two-level IVF recall").
+    */
+  private val CandidateGroups = 2
 
   private def ivfDot(x: Column, y: Column): Column =
     graft.functions.VecKernels.vec_dot_d(x, y)
@@ -1140,28 +1107,23 @@ object Similarity {
       .select(col(id), col(v), col(nn), explode(col("_tk")).as("_e"))
       .select(col(id), col(v), col(nn), col("_e.id").as("centroid_id"))
 
-  /** Two-level L2 cell pick for [[ivfPqTopK]]'s candidate-side coarse
-    * assignment — the sim13 leader trick carried into the L2/double
-    * regime IVF-PQ runs in (its quantizer, residuals, ADC and re-rank
-    * are all L2; reusing the cosine-metric [[ivfAssign2]] here would
-    * assign candidates by one geometry and probe them by another).
-    * The nlist cells group under g = √nlist hash-picked LEADER cells;
-    * each candidate folds over the g leaders, spills into its TOP-2
-    * leader groups (the sim13 candidate-side lesson: one group loses
-    * boundary candidates permanently — the structural 0.80 recall
-    * ceiling), and argmins over only those groups' cells —
-    * g + 2·(nlist/g) distances per candidate instead of nlist.
-    *
-    * Pure per-row folds over ONE broadcast nested-group row: zero
-    * expansion, zero exchange, zero sort on the corpus pass (the
-    * [[Clustering.assignToSeedsTwoLevel]] shape, doubles instead of
-    * decimals — IVF-PQ has no cross-engine-exactness contract on its
-    * assignment, and double L2 is ~an order of magnitude cheaper than
-    * decimal per fold step). Deterministic: hash-picked leaders,
-    * strict-< folds over ascending arrays, ties to the lower id.
-    * `coarse` must be materialized by the caller (it is referenced
-    * from the leader, group AND membership derivations).
+  /** Each vector of `df` to ONE cell of the materialized `centroids`:
+    * exact, or two-level through [[CandidateGroups]] leader groups —
+    * the one candidate-side rule [[ivfBuild]], [[ivfAbsorbDelta]] and
+    * [[ivfDriftCheck]] share, so built and later rows land alike. g
+    * derives from the ACTUAL surviving centroid count, exactly as
+    * ivfSearch re-derives it: build and search MUST group leaders
+    * identically, including after a save/load round-trip.
     */
+  private def ivfAssignCells(df: DataFrame, centroids: DataFrame,
+                             twoLevel: Boolean, idCol: String,
+                             vecCol: String): DataFrame =
+    if (twoLevel) {
+      val leaders = ivfLeaders(centroids, gOf(centroids))
+      ivfAssign2(df, leaders, ivfGrouped(centroids, leaders), 1,
+        CandidateGroups, idCol, vecCol, "cid", "cv", "cn")
+    } else ivfAssign(df, centroids, 1, idCol, vecCol, "cid", "cv", "cn")
+
   /** Exact L2 cell pick for the IVF-PQ family: per-row argmin fold
     * over the ONE broadcast cell array — zero expansion, zero
     * exchange, zero sort (the km01/dd15 fold shape). Shared by
@@ -1224,6 +1186,28 @@ object Similarity {
       nearestCodeL2(col("sv")).as("_code"))
   }
 
+  /** Two-level L2 cell pick for [[ivfPqTopK]]'s candidate-side coarse
+    * assignment — the sim13 leader trick carried into the L2/double
+    * regime IVF-PQ runs in (its quantizer, residuals, ADC and re-rank
+    * are all L2; reusing the cosine-metric [[ivfAssign2]] here would
+    * assign candidates by one geometry and probe them by another).
+    * The nlist cells group under g = √nlist hash-picked LEADER cells;
+    * each candidate folds over the g leaders, spills into its TOP-2
+    * leader groups (the sim13 candidate-side lesson: one group loses
+    * boundary candidates permanently — the structural 0.80 recall
+    * ceiling), and argmins over only those groups' cells —
+    * g + 2·(nlist/g) distances per candidate instead of nlist.
+    *
+    * Pure per-row folds over ONE broadcast nested-group row: zero
+    * expansion, zero exchange, zero sort on the corpus pass (the
+    * [[Clustering.assignToSeedsTwoLevel]] shape, doubles instead of
+    * decimals — IVF-PQ has no cross-engine-exactness contract on its
+    * assignment, and double L2 is ~an order of magnitude cheaper than
+    * decimal per fold step). Deterministic: hash-picked leaders,
+    * strict-< folds over ascending arrays, ties to the lower id.
+    * `coarse` must be materialized by the caller (it is referenced
+    * from the leader, group AND membership derivations).
+    */
   private def ivfPqCellsTwoLevel(cand: DataFrame,
                                  coarse: DataFrame): DataFrame = {
     def l2d(a: Column, b: Column): Column =
@@ -1306,8 +1290,8 @@ object Similarity {
     * N. Grouping the nlist centroids under √nlist hash-picked LEADER
     * centroids cuts assignment to N·(√nlist + nlist/√nlist·scanned):
     * each vector picks its nearest leader(s), then scans only those
-    * leaders' centroid groups. Candidates scan `candidateGroups`
-    * groups (default 2) before picking their ONE cell: with a single
+    * leaders' centroid groups. Candidates scan [[CandidateGroups]] = 2
+    * groups before picking their ONE cell: with a single
     * group, a candidate whose true nearest centroid lives in a
     * different leader group is permanently lost to every probe — the
     * structural 0.80 recall ceiling measured in r15 (BENCH_NOTES.md,
@@ -1324,18 +1308,26 @@ object Similarity {
     * and the live centroid chain re-scans the corpus per reference
     * (the measured r15 trap) — materializing once also makes every
     * ivfSearch flag combination safe on any built index.
+    *
+    * The two-level path also engages by itself once [[TwoLevelAuto]]
+    * centroids survive the hash pick (nlist ∝ N ⇒ the exact candidate
+    * assignment is quadratic) — the surviving count, not the declared
+    * nlist, so [[ivfAbsorbDelta]] and [[ivfDriftCheck]] assign later
+    * rows by the rule the build used.
     */
-  def ivfBuild(candidates: DataFrame,
-               nlist: Int = 16, iters: Int = 0, sampleMod: Int = 4,
-               twoLevelAssign: Boolean = false, candidateGroups: Int = 2,
-               twoLevelAutoNlist: Int = 512,
-               idCol: String = "vec_id", vecCol: String = "embedding"): IvfIndex = {
+  def ivfBuild(candidates: DataFrame, nlist: Int = 16,
+               twoLevelAssign: Boolean = false,
+               idCol: String = "vec_id",
+               vecCol: String = "embedding"): IvfIndex =
+    ivfBuildDecided(candidates, nlist, twoLevelAssign, idCol, vecCol)._1
+
+  /** [[ivfBuild]] plus the two-level decision it took, which
+    * [[ivfTopK]] hands on to its query-side probe.
+    */
+  private def ivfBuildDecided(candidates: DataFrame, nlist: Int,
+                              twoLevelAssign: Boolean, idCol: String,
+                              vecCol: String): (IvfIndex, Boolean) = {
     requireIntegralId(candidates, idCol)
-    // self-engaging big-corpus switch (nlist ∝ N ⇒ the exact candidate
-    // assignment is quadratic); Int.MaxValue disarms — see ivfTopK
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfBuild", nlist, twoLevelAutoNlist)
     // seed centroids picked ENTIRELY in-plan: min id per
     // pmod(xxhash64(id), nlist) hash bucket — ≤ nlist well-spread ids
     // with no driver-side action (an earlier candidates.count() here cost
@@ -1347,48 +1339,6 @@ object Similarity {
     val seeds = candidates
       .join(broadcast(centroidIds), col(idCol) === col("_cid"))
       .select(col("_cid").as("centroid_id"), dbl(col(vecCol)).as("cvec"))
-
-    // optional Lloyd refinement on a deterministic 1/sampleMod hash
-    // sample: assign sample vectors to their nearest current centroid
-    // (broadcast), then recompute each centroid as the per-position mean
-    // of its members — the probe math never assumes exactly nlist
-    // surviving lists
-    val sample = candidates
-      .filter(pmod(xxhash64(col(idCol)), lit(sampleMod)) === 0)
-      .select(col(idCol).as("_sid"), dbl(col(vecCol)).as("_sv"))
-      .withColumn("_sn", sqrt(ivfDot(col("_sv"), col("_sv"))))
-    val refined = (1 to iters).foldLeft(seeds) { (cents, _) =>
-      val cn = cents.withColumn("_cn", sqrt(ivfDot(col("cvec"), col("cvec"))))
-      // per-row codegen'd argmin fold over ONE broadcast centroid
-      // array (the r16 SortAggregate lesson applied to the refinement
-      // loop, closing the last flagged expansion site): no sample×nlist
-      // row blow-up, no struct-min SortAggregate, no groupBy exchange —
-      // each sample row picks its centroid in place. Array sorted by
-      // centroid_id asc + strict-< fold ⇒ lowest id wins ties, the
-      // old min(struct(_d, centroid_id)) semantics exactly.
-      val centArr = cn.agg(array_sort(collect_list(
-        struct(col("centroid_id"), col("cvec"), col("_cn")))).as("_cs"))
-      sample.crossJoin(broadcast(centArr))
-        .select(col("_sid"), col("_sv"),
-          aggregate(col("_cs"),
-            struct(lit(null).cast(DoubleType).as("_d"),
-              lit(-1L).as("_c")),
-            (acc, s) => {
-              val d = lit(1.0) - ivfDot(col("_sv"), s.getField("cvec")) /
-                (col("_sn") * s.getField("_cn"))
-              when(acc.getField("_d").isNull || d < acc.getField("_d"),
-                struct(d.as("_d"),
-                  s.getField("centroid_id").cast(LongType).as("_c")))
-                .otherwise(acc)
-            }).getField("_c").as("centroid_id"))
-        .select(col("centroid_id"), posexplode(col("_sv")))
-        .groupBy(col("centroid_id"), col("pos"))
-        .agg(avg(col("col").cast(DecimalType(25, 12))).cast(DoubleType).as("_m"))
-        .groupBy(col("centroid_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("_m")))),
-          s => s.getField("_m")).as("cvec"))
-    }
     // the centroid table is ALWAYS localCheckpoint-materialized: the
     // live chain re-scans the corpus per reference (seeds are a
     // corpus groupBy + join), and the index is referenced from the
@@ -1399,28 +1349,20 @@ object Similarity {
     // search over an exact-built fused index derives its leaders from
     // nlist materialized rows, never from ~5 corpus re-scans (the
     // measured r15 trap).
-    val centroids = refined
+    val centroids = seeds
       .withColumn("cnorm", sqrt(ivfDot(col("cvec"), col("cvec"))))
       .localCheckpoint()
-    if (twoLevel) {
-      // g derives from the ACTUAL surviving centroid count (hash-bucket
-      // collisions and k-means death can leave < nlist), exactly as
-      // ivfSearch re-derives it — build and search MUST group leaders
-      // identically, including after a save/load round-trip
-      val leaders = ivfLeaders(centroids, gOf(centroids))
-      val grouped = ivfGrouped(centroids, leaders)
-      IvfIndex(centroids,
-        ivfAssign2(candidates, leaders, grouped, 1, candidateGroups,
-          idCol, vecCol, "cid", "cv", "cn"))
-    } else IvfIndex(centroids,
-      ivfAssign(candidates, centroids, 1, idCol, vecCol,
-        "cid", "cv", "cn"))
+    val twoLevel = decideTwoLevel("ivfBuild", twoLevelAssign,
+      centroids.count(), atMost = nlist)
+    (IvfIndex(centroids,
+      ivfAssignCells(candidates, centroids, twoLevel, idCol, vecCol)),
+      twoLevel)
   }
 
   /** Serve top-`k` against a built [[IvfIndex]] — queries assign to
     * their `nprobe` nearest centroids (exact over the index's
-    * quantizer, or two-level through `leaderGroups` leader groups when
-    * the quantizer is corpus-scaled) and meet the cell-keyed corpus in
+    * quantizer, or two-level through [[LeaderGroups]] leader groups
+    * when the quantizer is corpus-scaled) and meet the cell-keyed corpus in
     * a hash equi-join on centroid id. The final top-k runs through the
     * same bounded aggregate as the assignment: the exchange carries
     * ≤ k pairs per (query × partition), never the ≈ nprobe/nlist·N
@@ -1444,8 +1386,8 @@ object Similarity {
     * index silently degrades recall with zero errors, which is why
     * this is a documented contract and a pinned spec
     * (PipelineSpec "IVF index staleness"), not just behavior.
-    */
-  /** `pinProbeParallelism`: keep the probe-side exchange at the full
+    *
+    * `pinProbeParallelism`: keep the probe-side exchange at the full
     * session shuffle-partition count instead of letting AQE coalesce
     * it by BYTES. The cell join's output explodes ×(cell width) in
     * CPU while its shuffled input stays kilobytes — exactly the shape
@@ -1460,12 +1402,11 @@ object Similarity {
     * right.
     */
   def ivfSearch(queries: DataFrame, index: IvfIndex, k: Int,
-                nprobe: Int = 8,
-                twoLevelAssign: Boolean = false, leaderGroups: Int = 3,
+                nprobe: Int = 8, twoLevelAssign: Boolean = false,
                 idCol: String = "vec_id", vecCol: String = "embedding",
                 pinProbeParallelism: Boolean = false): DataFrame =
     presentTopK(ivfPairs(queries, index, nprobe, twoLevelAssign,
-      leaderGroups, idCol, vecCol, pinProbeParallelism), k)
+      idCol, vecCol, pinProbeParallelism), k)
 
   /** Serve top-`k` against a STALE [[IvfIndex]] plus the unindexed
     * `delta` — the union mitigation the staleness contract above
@@ -1493,11 +1434,10 @@ object Similarity {
   def ivfSearchWithDelta(queries: DataFrame, index: IvfIndex,
                          delta: DataFrame, k: Int, nprobe: Int = 8,
                          twoLevelAssign: Boolean = false,
-                         leaderGroups: Int = 3,
                          idCol: String = "vec_id",
                          vecCol: String = "embedding"): DataFrame = {
     val indexed = ivfPairs(queries, index, nprobe, twoLevelAssign,
-      leaderGroups, idCol, vecCol)
+      idCol, vecCol)
     val fresh = scoredPairs(queries, delta, idCol, vecCol, exact = false)
     presentTopK(indexed.unionByName(fresh), k)
   }
@@ -1535,28 +1475,16 @@ object Similarity {
     */
   def ivfAbsorbDelta(index: IvfIndex, delta: DataFrame,
                      twoLevelAssign: Boolean = false,
-                     candidateGroups: Int = 2,
-                     twoLevelAutoNlist: Int = 512,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): IvfIndex = {
     requireIntegralId(delta, idCol)
     val centroids = index.centroids
     // nlist-sized count (the gOf discipline), never the corpus: the
     // auto two-level switch keys on the PERSISTED quantizer's size
-    val nlist = centroids.count()
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfAbsorbDelta", nlist, twoLevelAutoNlist)
-    val assigned =
-      if (twoLevel) {
-        val g = math.max(1, math.round(math.sqrt(nlist.toDouble)).toInt)
-        val leaders = ivfLeaders(centroids, g)
-        val grouped = ivfGrouped(centroids, leaders)
-        ivfAssign2(delta, leaders, grouped, 1, candidateGroups,
-          idCol, vecCol, "cid", "cv", "cn")
-      } else ivfAssign(delta, centroids, 1, idCol, vecCol,
-        "cid", "cv", "cn")
-    IvfIndex(centroids, index.cells.unionByName(assigned))
+    val twoLevel = decideTwoLevel("ivfAbsorbDelta", twoLevelAssign,
+      centroids.count())
+    IvfIndex(centroids, index.cells.unionByName(
+      ivfAssignCells(delta, centroids, twoLevel, idCol, vecCol)))
   }
 
   /** Per-cell assignment-quality statistics of a built [[IvfIndex]] —
@@ -1596,14 +1524,14 @@ object Similarity {
 
   /** The drift report [[ivfDriftCheck]] computes. Two complementary
     * signals, either of which trips `drifted`:
-    *  - FIT: deltaMeanDist > ratioThreshold × expectedMeanDist — the
+    *  - FIT: deltaMeanDist > [[FitTrip]] × expectedMeanDist — the
     *    delta's vectors sit farther from their assigned centroids than
     *    the built members of those same cells did (no division: a zero
     *    expectation with a zero delta mean is NOT drift). Catches a
     *    delta the quantizer can no longer REPRESENT.
     *  - SHIFT: cellShift (total-variation distance between the
     *    delta's and the build's cell-occupancy distributions, ∈ [0,1])
-    *    > shiftThreshold. Catches a delta that still FITS but lands
+    *    > [[ShiftTrip]]. Catches a delta that still FITS but lands
     *    somewhere else entirely — on a near-isotropic corpus any new
     *    direction scores ordinary distances (best-of-nlist cosine is
     *    distribution-free there), so a single-domain delta that would
@@ -1616,6 +1544,18 @@ object Similarity {
                                   expectedMeanDist: Double,
                                   cellShift: Double,
                                   drifted: Boolean)
+
+  /** Drift trip points, from the measured margins (BENCH_NOTES.md, "r19
+    * drift-signal margins"): an un-drifted corpus slice reads fit ratio
+    * ≈ 1.00 ± 0.01 and shift ≈ sampling noise (~0.15 at 71 rows × 16
+    * cells), while a planted off-distribution delta concentrates its
+    * mass (shift ≳ 0.8) long before the cosine fit ratio moves past
+    * ~1.16 on an isotropic corpus — so fit trips at 1.5 (half again
+    * worse than build, the anisotropic-regime signal) and shift at 0.5
+    * (>2.5× sampling noise, far under the planted reading).
+    */
+  private val FitTrip = 1.5
+  private val ShiftTrip = 0.5
 
   /** Measure quantizer DRIFT of an append log against a built index —
     * the signal that decides absorb-vs-rebuild, which absorption
@@ -1636,24 +1576,13 @@ object Similarity {
     * the shift — landing where the build put nothing is shift by
     * definition. The indexed corpus is never re-read.
     *
-    * Defaults chosen from the measured margins (BENCH_NOTES.md, "r19
-    * drift-signal margins"): an un-drifted corpus slice reads ratio ≈
-    * 1.00 ± 0.01 and shift ≈ sampling noise (~0.15 at 71 rows × 16 cells),
-    * while a planted off-distribution delta concentrates its mass
-    * (shift ≳ 0.8) long before the cosine fit ratio moves past ~1.16
-    * on an isotropic corpus — so fit trips at 1.5 (half again worse
-    * than build, the anisotropic-regime signal) and shift at 0.5
-    * (>2.5× sampling noise, far under the planted reading). WARN-logs
-    * like every self-engaging switch; the caller reacts by REBUILDING
+    * Trips at [[FitTrip]] and [[ShiftTrip]]. WARN-logs like every
+    * self-engaging switch; the caller reacts by REBUILDING
     * instead of absorbing. This is an ACTION (one job over the delta),
     * sized to the absorb cadence it gates.
     */
   def ivfDriftCheck(stats: DataFrame, centroids: DataFrame,
-                    delta: DataFrame, ratioThreshold: Double = 1.5,
-                    shiftThreshold: Double = 0.5,
-                    twoLevelAssign: Boolean = false,
-                    candidateGroups: Int = 2,
-                    twoLevelAutoNlist: Int = 512,
+                    delta: DataFrame, twoLevelAssign: Boolean = false,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): IvfDriftReport = {
     requireIntegralId(delta, idCol)
@@ -1665,31 +1594,24 @@ object Similarity {
     // biasing the fit low. Same auto-engage contract as every other
     // entry point; the threshold doubles as the cost switch — the
     // exact map-side fold is O(nlist) per row, the two-level arm
-    // O(√nlist).
-    val nlist = centroids.count() // quantizer-sized, never the corpus
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfDriftCheck", nlist, twoLevelAutoNlist)
+    // O(√nlist). Quantizer-sized count, never the corpus.
     val scored =
-      if (twoLevel) {
-        // the build's own leader-group fold (ivfAssign2 — identical
-        // cell placement), distance recovered via one broadcast join
-        // on the picked cell; the groupBy exchange inside ivfAssign2
-        // carries the delta once, the price of assignment parity in
-        // the big-nlist regime
-        val leaders = ivfLeaders(centroids, gOf(centroids))
-        val grouped = ivfGrouped(centroids, leaders)
-        ivfAssign2(delta, leaders, grouped, 1, candidateGroups,
-          idCol, vecCol, "cid", "cv", "cn")
+      if (decideTwoLevel("ivfDriftCheck", twoLevelAssign, centroids.count())) {
+        // the build's own leader-group fold (identical cell
+        // placement), distance recovered via one broadcast join on the
+        // picked cell; the groupBy exchange inside the fold carries the
+        // delta once, the price of assignment parity in the big-nlist
+        // regime
+        ivfAssignCells(delta, centroids, twoLevel = true, idCol, vecCol)
           .join(broadcast(centroids), "centroid_id")
           .select(col("centroid_id"),
             (lit(1.0) - ivfDot(col("cv"), col("cvec")) /
               (col("cn") * col("cnorm"))).as("_d"))
       } else {
         // exact arm: a MAP-SIDE per-row argmin fold over one broadcast
-        // sorted centroid array (the ivfBuild-refinement pattern —
-        // array sorted by centroid_id asc + strict-< fold ⇒ lowest id
-        // wins ties, ivfAssign's TopKAgg semantics exactly), emitting
+        // sorted centroid array (the km01/dd15 fold shape — array
+        // sorted by centroid_id asc + strict-< fold ⇒ lowest id wins
+        // ties, ivfAssign's TopKAgg semantics exactly), emitting
         // (cell, distance) in place. ivfAssign's groupBy(id) would
         // instead EXCHANGE every delta vector (measured 8.4 MB at a
         // 20k-row delta, r19life — delta-sized at 100 TB); here the
@@ -1722,7 +1644,7 @@ object Similarity {
       .agg(count(lit(1)).as("_dn"),
         sum(col("_d").cast(DecimalType(30, 12))).as("_ds"))
     driftReport(perCell, stats, "centroid_id", "ivfDriftCheck",
-      "ivfBuild over the grown corpus", ratioThreshold, shiftThreshold)
+      "ivfBuild over the grown corpus")
   }
 
   /** [[ivfCellStats]] on the production architecture — the per-cell
@@ -1739,14 +1661,12 @@ object Similarity {
     */
   def ivfPqCellStats(index: IvfPqIndex, corpus: DataFrame,
                      twoLevelAssign: Boolean = false,
-                     twoLevelAutoNlist: Int = 512,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
     requireIntegralId(corpus, idCol)
-    val nlist = index.coarse.count() // quantizer-sized, never the corpus
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfPqCellStats", nlist, twoLevelAutoNlist)
+    // quantizer-sized count, never the corpus
+    val twoLevel = decideTwoLevel("ivfPqCellStats", twoLevelAssign,
+      index.coarse.count())
     pqPerCellResiduals(corpus, index.coarse, twoLevel, idCol, vecCol)
       .select(col("cell"), col("_cnt").as("n"),
         (col("_sum") / col("_cnt")).cast(DoubleType).as("mean_dist"))
@@ -1792,23 +1712,18 @@ object Similarity {
     * longer fit the data mis-buckets rows before any code is read.
     */
   def ivfPqDriftCheck(stats: DataFrame, coarse: DataFrame,
-                      delta: DataFrame, ratioThreshold: Double = 1.5,
-                      shiftThreshold: Double = 0.5,
-                      twoLevelAssign: Boolean = false,
-                      twoLevelAutoNlist: Int = 512,
+                      delta: DataFrame, twoLevelAssign: Boolean = false,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): IvfDriftReport = {
     requireIntegralId(delta, idCol)
-    val nlist = coarse.count()
-    val twoLevel = twoLevelAssign || nlist >= twoLevelAutoNlist
-    if (!twoLevelAssign && twoLevel)
-      warnAutoTwoLevel("ivfPqDriftCheck", nlist, twoLevelAutoNlist)
+    val twoLevel = decideTwoLevel("ivfPqDriftCheck", twoLevelAssign,
+      coarse.count())
     // single consumer — materializes once inside driftReport's mix
     // checkpoint; no second pin needed (r21)
     val perCell = pqPerCellResiduals(delta, coarse, twoLevel, idCol, vecCol)
       .select(col("cell"), col("_cnt").as("_dn"), col("_sum").as("_ds"))
     driftReport(perCell, stats, "cell", "ivfPqDriftCheck",
-      "ivfPqBuild over the grown corpus", ratioThreshold, shiftThreshold)
+      "ivfPqBuild over the grown corpus")
   }
 
   /** The ONE drift-report core behind [[ivfDriftCheck]] and
@@ -1818,12 +1733,8 @@ object Similarity {
     * Everything here is quantizer-sized.
     */
   private def driftReport(perCell: DataFrame, stats: DataFrame,
-                          keyCol: String, site: String, rebuildHint: String,
-                          ratioThreshold: Double,
-                          shiftThreshold: Double): IvfDriftReport = {
-    require(ratioThreshold > 0.0, "ratioThreshold must be positive")
-    require(shiftThreshold > 0.0 && shiftThreshold <= 1.0,
-      "shiftThreshold must be in (0, 1]")
+                          keyCol: String, site: String,
+                          rebuildHint: String): IvfDriftReport = {
     val mix = perCell.join(
       stats.select(col(keyCol), col("n").as("_bn"), col("mean_dist")),
       Seq(keyCol), "full_outer")
@@ -1861,41 +1772,19 @@ object Similarity {
     val shift =
       if (dTot == 0 || bTot == 0) 0.0
       else tots.getDouble(5) / 2.0
-    val fitTrip = priced > 0 && dm > ratioThreshold * em
-    val shiftTrip = dTot > 0 && shift > shiftThreshold
+    val fitTrip = priced > 0 && dm > FitTrip * em
+    val shiftTrip = dTot > 0 && shift > ShiftTrip
     if (fitTrip || shiftTrip)
       logger.warn(f"graft $site: quantizer DRIFT detected — " +
         f"fit ratio ${if (em > 0) dm / em else Double.NaN}%.4f " +
-        f"(trip > $ratioThreshold%.2f: $fitTrip) over $priced%d priced " +
+        f"(trip > $FitTrip%.2f: $fitTrip) over $priced%d priced " +
         f"rows, cell-occupancy shift $shift%.4f (trip > " +
-        f"$shiftThreshold%.2f: $shiftTrip) over $dTot%d delta rows. " +
+        f"$ShiftTrip%.2f: $shiftTrip) over $dTot%d delta rows. " +
         "Absorbing into this index degrades recall silently; REBUILD " +
         s"instead ($rebuildHint).")
     IvfDriftReport(dTot, priced, dm, em, shift, fitTrip || shiftTrip)
   }
 
-  /** Delete vectors from a built [[IvfIndex]] by id — the absorb
-    * machinery's mirror image, and the operation a training-data
-    * pipeline legally cannot run without (right-to-be-forgotten,
-    * license revocation): the cell table drops the tombstoned rows in
-    * one bounded anti-join on the id key; the quantizer is untouched
-    * (deletion never retrains — cells keep their built centroids, the
-    * surviving rows their assignments). `tombstones`' FIRST column is
-    * the id set, broadcast — a deletion request list is metadata-sized
-    * by nature, so the corpus-sized cell side is never shuffled; the
-    * rewrite happens when the caller [[IvfIndex.save]]s the returned
-    * index (write-new over the cells artifact, like absorb).
-    *
-    * EQUIVALENCE (PipelineSpec pins it): because assignment is
-    * per-row, the deleted index is IDENTICAL to assigning only the
-    * survivors against the same quantizer — serve-after-delete returns
-    * no deleted id and scores exactly the surviving cells, so recall
-    * floors transfer to the surviving corpus unchanged. Mass deletion
-    * can empty cells (fine — probes just find fewer) and, like many
-    * absorptions, SKEW the live distribution away from the built
-    * quantizer: the drift signal ([[ivfDriftCheck]]) and a rebuild
-    * remain the answer when deletion stops being incremental.
-    */
   /** Cast a tombstone id to the store's own id type, RAISING on a
     * lossy cast instead of nulling it: a null tombstone matches
     * nothing in the anti-join, and a deletion API that silently skips
@@ -1920,6 +1809,28 @@ object Similarity {
       .otherwise(tc)
   }
 
+  /** Delete vectors from a built [[IvfIndex]] by id — the absorb
+    * machinery's mirror image, and the operation a training-data
+    * pipeline legally cannot run without (right-to-be-forgotten,
+    * license revocation): the cell table drops the tombstoned rows in
+    * one bounded anti-join on the id key; the quantizer is untouched
+    * (deletion never retrains — cells keep their built centroids, the
+    * surviving rows their assignments). `tombstones`' FIRST column is
+    * the id set, broadcast — a deletion request list is metadata-sized
+    * by nature, so the corpus-sized cell side is never shuffled; the
+    * rewrite happens when the caller [[IvfIndex.save]]s the returned
+    * index (write-new over the cells artifact, like absorb).
+    *
+    * EQUIVALENCE (PipelineSpec pins it): because assignment is
+    * per-row, the deleted index is IDENTICAL to assigning only the
+    * survivors against the same quantizer — serve-after-delete returns
+    * no deleted id and scores exactly the surviving cells, so recall
+    * floors transfer to the surviving corpus unchanged. Mass deletion
+    * can empty cells (fine — probes just find fewer) and, like many
+    * absorptions, SKEW the live distribution away from the built
+    * quantizer: the drift signal ([[ivfDriftCheck]]) and a rebuild
+    * remain the answer when deletion stops being incremental.
+    */
   def ivfDeleteIds(index: IvfIndex, tombstones: DataFrame): IvfIndex = {
     val tCol = tombstones.columns.head
     IvfIndex(index.centroids,
@@ -1982,25 +1893,17 @@ object Similarity {
     * as a fresh [[ivfBuild]] over the grown corpus (build is
     * value-deterministic — hash-seeded centroids, per-row argmin — so
     * reconstruction from the cell table changes nothing). Rebuild
-    * keeps the index's own nlist; `rebuildIters`/`rebuildSampleMod`
-    * pass through to [[ivfBuild]] (defaults = build defaults).
+    * keeps the index's own nlist.
     */
   def ivfMaintain(index: IvfIndex, stats: DataFrame, delta: DataFrame,
-                  ratioThreshold: Double = 1.5,
-                  shiftThreshold: Double = 0.5,
-                  rebuildIters: Int = 0, rebuildSampleMod: Int = 4,
                   twoLevelAssign: Boolean = false,
-                  candidateGroups: Int = 2,
-                  twoLevelAutoNlist: Int = 512,
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): IvfMaintainResult = {
     val report = ivfDriftCheck(stats, index.centroids, delta,
-      ratioThreshold, shiftThreshold, twoLevelAssign, candidateGroups,
-      twoLevelAutoNlist, idCol, vecCol)
+      twoLevelAssign, idCol, vecCol)
     if (!report.drifted)
       IvfMaintainResult(ivfAbsorbDelta(index, delta, twoLevelAssign,
-        candidateGroups, twoLevelAutoNlist, idCol, vecCol),
-        report, rebuilt = false)
+        idCol, vecCol), report, rebuilt = false)
     else {
       logger.warn("graft ivfMaintain: drift verdict REBUILD — " +
         "re-training the quantizer over the grown corpus instead of " +
@@ -2011,9 +1914,8 @@ object Similarity {
         .select(col("cid").cast(LongType).as(idCol), col("cv").as(vecCol))
         .unionByName(delta.select(col(idCol).cast(LongType).as(idCol),
           dbl(col(vecCol)).as(vecCol)))
-      IvfMaintainResult(ivfBuild(grown, nlist, rebuildIters,
-        rebuildSampleMod, twoLevelAssign, candidateGroups,
-        twoLevelAutoNlist, idCol, vecCol), report, rebuilt = true)
+      IvfMaintainResult(ivfBuild(grown, nlist, twoLevelAssign, idCol,
+        vecCol), report, rebuilt = true)
     }
   }
 
@@ -2037,20 +1939,15 @@ object Similarity {
     */
   def ivfPqMaintain(index: IvfPqIndex, stats: DataFrame,
                     corpus: DataFrame, delta: DataFrame,
-                    ratioThreshold: Double = 1.5,
-                    shiftThreshold: Double = 0.5,
-                    m: Int = -1, codes: Int = 32, refineIters: Int = 0,
+                    m: Int = -1, codes: Int = 32,
                     twoLevelAssign: Boolean = false,
-                    twoLevelAutoNlist: Int = 512,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): IvfPqMaintainResult = {
     val report = ivfPqDriftCheck(stats, index.coarse, delta,
-      ratioThreshold, shiftThreshold, twoLevelAssign, twoLevelAutoNlist,
-      idCol, vecCol)
+      twoLevelAssign, idCol, vecCol)
     if (!report.drifted)
       IvfPqMaintainResult(ivfPqAbsorbDelta(index, delta, m,
-        twoLevelAssign, twoLevelAutoNlist, idCol, vecCol),
-        report, rebuilt = false)
+        twoLevelAssign, idCol, vecCol), report, rebuilt = false)
     else {
       logger.warn("graft ivfPqMaintain: drift verdict REBUILD — " +
         "re-training coarse quantizer and codebook over the grown " +
@@ -2066,13 +1963,12 @@ object Similarity {
         .unionByName(delta.select(col(idCol).cast(LongType).as(idCol),
           dbl(col(vecCol)).as(vecCol)))
       IvfPqMaintainResult(ivfPqBuild(grown, nlist, mEff, codes,
-        refineIters, twoLevelAssign, twoLevelAutoNlist, idCol, vecCol),
-        report, rebuilt = true)
+        twoLevelAssign, idCol, vecCol), report, rebuilt = true)
     }
   }
 
   private def ivfPairs(queries: DataFrame, index: IvfIndex, nprobe: Int,
-                       twoLevelAssign: Boolean, leaderGroups: Int,
+                       twoLevelAssign: Boolean,
                        idCol: String, vecCol: String,
                        pinProbeParallelism: Boolean = false): DataFrame = {
     requireIntegralId(queries, idCol)
@@ -2084,7 +1980,7 @@ object Similarity {
         val centroids = index.centroids
         val leaders = ivfLeaders(centroids, gOf(centroids))
         val grouped = ivfGrouped(centroids, leaders)
-        ivfAssign2(queries, leaders, grouped, nprobe, leaderGroups,
+        ivfAssign2(queries, leaders, grouped, nprobe, LeaderGroups,
           idCol, vecCol, "qid", "qv", "qn")
       } else ivfAssign(queries, index.centroids, nprobe, idCol, vecCol,
         "qid", "qv", "qn")

@@ -3239,9 +3239,9 @@ object PipelineQueries {
     // with nlist ∝ N that term is the measured quadratic wall — 497 s
     // at the 100× rehearsal vs ~120 s two-level). Gated at the same
     // recall-floor contract as sim04 so the big-corpus switch is never
-    // the engine's only unoracled path: leaderGroups=3 < √nlist leader
-    // groups means query-side pruning is genuinely exercised, and
-    // candidateGroups=2 (the r16 default) pins the candidate-side
+    // the engine's only unoracled path: 3 query-side leader groups
+    // < √nlist means query-side pruning is genuinely exercised, and
+    // the 2 candidate-side groups (the r16 value) pin the candidate-side
     // top-2 spill that lifted the r15 structural ceiling (candidates
     // assigned through ONE leader group lost boundary cells to every
     // probe: measured 0.80 → 0.84 at the corpus-scaled rehearsal
@@ -3258,7 +3258,7 @@ object PipelineQueries {
       val q = e.filter(col("vec_id") < 10)
       recallFloor(Similarity.cosineTopK(q, e, 5),
         Similarity.ivfTopK(q, e, 5, nlist = 16, nprobe = 10,
-          twoLevelAssign = true, leaderGroups = 3, candidateGroups = 2),
+          twoLevelAssign = true),
         floorPct = 85)
     },
 

@@ -38,9 +38,17 @@ object AlbAccessLog {
     */
   def parse(lines: DataFrame, column: String = "value",
             fused: Boolean = true): DataFrame = {
-    val toks =
-      if (fused) graft.functions.QuoteTokenize.quote_tokenize(col(column))
-      else regexp_extract_all(col(column), lit(TokenPattern), lit(0))
+    // the reference path materializes its tokens in their own
+    // projection first, as S3AccessLog's regex path does its groups:
+    // inlined, the ~30 fields each re-derive regexp_extract_all under
+    // nested CASE WHENs and the stage outgrows Janino's 64 KB method
+    // limit (whole-stage codegen fails and falls back on every run)
+    val (in, toks) =
+      if (fused)
+        (lines, graft.functions.QuoteTokenize.quote_tokenize(col(column)))
+      else (lines.select(col(column),
+        regexp_extract_all(col(column), lit(TokenPattern), lit(0)).as("_toks")),
+        col("_toks"))
     val ok = size(toks) >= MinTokens
 
     def raw(i: Int): Column = element_at(toks, i + 1)
@@ -68,7 +76,7 @@ object AlbAccessLog {
     // the line is long enough, null otherwise (tolerant reader)
     def trail(i: Int): Column = when(ok && size(toks) > i, str(i))
 
-    lines.select(
+    in.select(
       whenOk(str(0)).as("request_type"),
       whenOk(ts(1)).as("time"),
       whenOk(str(2)).as("elb"),

@@ -1407,16 +1407,13 @@ object StreamingJobs {
   def ivfAbsorbLog(spark: org.apache.spark.sql.SparkSession,
                    indexPath: String, workDir: String,
                    twoLevelAssign: Boolean = false,
-                   candidateGroups: Int = 2,
-                   twoLevelAutoNlist: Int = 512,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): Seq[Long] =
     absorbLogCore(spark, indexPath, workDir, "ivfAbsorbLog") {
       (delta, staging) =>
         graft.operators.Similarity.ivfAbsorbDelta(
             graft.operators.Similarity.ivfLoad(spark, indexPath), delta,
-            twoLevelAssign, candidateGroups, twoLevelAutoNlist,
-            idCol, vecCol)
+            twoLevelAssign, idCol, vecCol)
           .save(staging)
     }
 
@@ -1431,14 +1428,13 @@ object StreamingJobs {
   def ivfPqAbsorbLog(spark: org.apache.spark.sql.SparkSession,
                      indexPath: String, workDir: String,
                      m: Int = -1, twoLevelAssign: Boolean = false,
-                     twoLevelAutoNlist: Int = 512,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): Seq[Long] =
     absorbLogCore(spark, indexPath, workDir, "ivfPqAbsorbLog") {
       (delta, staging) =>
         graft.operators.Similarity.ivfPqAbsorbDelta(
             graft.operators.Similarity.ivfPqLoad(spark, indexPath), delta,
-            m, twoLevelAssign, twoLevelAutoNlist, idCol, vecCol)
+            m, twoLevelAssign, idCol, vecCol)
           .save(staging)
     }
 

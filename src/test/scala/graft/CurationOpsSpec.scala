@@ -748,24 +748,21 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(out(9L)._1 && out(9L)._2.isEmpty, out(9L).toString)
   }
 
-  test("semanticDedup: k >= twoLevelAutoK engages the two-level assignment by itself") {
+  test("semanticDedup: k >= 512 engages the two-level assignment by itself") {
     // the 100 TB default must not depend on a caller knowing the flag:
     // at k past the threshold, the auto path must produce EXACTLY what
-    // an explicit twoLevelAssign = true produces, and the disarmed
-    // (autoK = MaxValue) run must replay the exact-assign path
-    val e = graft.Tables.load(spark, sf, "embeddings")
+    // an explicit twoLevelAssign = true produces
+    val rnd = new scala.util.Random(13)
+    val e = (0 until 2000).map { i =>
+      (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat))
+    }.toDF("vec_id", "embedding")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("vec_id").collect().map(r => (r.getLong(0), r.getLong(1),
         Option(r.get(2)).map(_.asInstanceOf[Long]), r.getBoolean(3))).toSeq
-    val auto = rows(graft.operators.Dedup
-      .semanticDedup(e, 16, 0.99, twoLevelAutoK = 16))
+    val auto = rows(graft.operators.Dedup.semanticDedup(e, 512, 0.99))
     val explicitTl = rows(graft.operators.Dedup
-      .semanticDedup(e, 16, 0.99, twoLevelAssign = true))
+      .semanticDedup(e, 512, 0.99, twoLevelAssign = true))
     assert(auto == explicitTl, "auto threshold did not engage the two-level path")
-    val exact = rows(graft.operators.Dedup
-      .semanticDedup(e, 16, 0.99, twoLevelAutoK = Int.MaxValue))
-    val gateDefault = rows(graft.operators.Dedup.semanticDedup(e, 16, 0.99))
-    assert(exact == gateDefault, "disarmed autoK diverged from the default exact path")
   }
 
   test("distributionDrift: zero PSI on identical snapshots, >0 on shift") {

@@ -201,6 +201,27 @@ class LogSourcesSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("alb parse: the regexp reference path compiles under whole-stage codegen") {
+    // lines from a range scan, not a local relation, so the projection
+    // runs in a codegen stage; with fallback off, a stage that Janino
+    // rejects fails the collect instead of logging and interpreting
+    import org.apache.spark.sql.functions.{col, format_string}
+    val lines = spark.range(4).select(format_string(
+      "http 2018-07-02T22:23:00.186641Z app/lb/1 10.0.0.9:%d 10.0.0.1:80 " +
+        "0.000 0.001 0.000 200 200 34 366 \"GET http://e/ HTTP/1.1\" " +
+        "\"ua x\" - - arn:tg \"Root=1-x\" \"-\" \"-\" 0 " +
+        "2018-07-02T22:22:48.364000Z \"forward\" \"-\" \"-\"",
+      col("id")).as("value"))
+    val key = "spark.sql.codegen.fallback"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val reference =
+      try AlbAccessLog.parse(lines, fused = false).collect().toSeq
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(reference.map(_.getAs[Int]("client_port")) == (0 until 4))
+    assert(reference == AlbAccessLog.parse(lines).collect().toSeq)
+  }
+
   test("alb: short line dead-letters") {
     val r = AlbAccessLog.parse(Seq("http too short").toDF("value"))
       .collect().head

@@ -163,22 +163,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(recall >= 0.8, s"IVF-PQ recall below floor: $recall")
   }
 
-  test("PQ Lloyd-refined codebook is deterministic and keeps the recall floor") {
-    // decimal mean accumulation → identical codebooks every run; the
-    // option defaults OFF by measurement (see pqTopK doc) but when a
-    // clustered corpus turns it on, results must be replayable
-    val e = Tables.load(spark, sf, "embeddings")
-    val q = e.filter($"vec_id" < 10)
-    def run() = Similarity.pqTopK(q, e, 5, refineIters = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
-    val a = run()
-    assert(a == run(), "refined PQ results differ between runs")
-    val brute = Similarity.l2TopK(q, e, 5)
-      .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = a.count { case (qid, cid, _) => brute((qid, cid)) }.toDouble / brute.size
-    assert(recall >= 0.8, s"refined PQ recall below floor: $recall")
-  }
-
   test("PQ on an indivisible dimension: the dim % m tail participates in scoring") {
     // dim=10, m=4 → subspaces [0,2)[2,4)[4,6)[6,10): the last takes the
     // remainder. Candidates are IDENTICAL except in the tail; a silent
@@ -233,21 +217,16 @@ class PipelineSpec extends AnyFunSuite {
     val q = e.filter($"vec_id" < 10)
     val brute = SparkEntry.queries("sim01_cosine_exact")(spark, sf)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def run(cg: Int) = Similarity.ivfTopK(q, e, 5, nlist = 16, nprobe = 10,
-      twoLevelAssign = true, leaderGroups = 3, candidateGroups = cg)
+    def run() = Similarity.ivfTopK(q, e, 5, nlist = 16, nprobe = 10,
+      twoLevelAssign = true)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val r2 = run(2)
+    val r2 = run()
     assert(r2.nonEmpty && r2.forall { case (qq, cc) => qq != cc })
     // deterministic: hash-picked seeds/leaders + TopKAgg tie-breaks
-    assert(r2 == run(2), "two-level IVF is nondeterministic across runs")
+    assert(r2 == run(), "two-level IVF is nondeterministic across runs")
     // the sim13 gate contract at this config (measured 0.94/0.90/0.94)
     val rec2 = r2.count(brute.contains).toDouble / brute.size
     assert(rec2 >= 0.85, s"two-level recall below gate floor: $rec2")
-    // the r16 fix: top-2 candidate spill never loses to the r15
-    // single-group shape on this corpus (measured equal or better at
-    // every swept config)
-    val rec1 = run(1).count(brute.contains).toDouble / brute.size
-    assert(rec2 >= rec1, s"cg=2 recall $rec2 < cg=1 recall $rec1")
   }
 
   test("IVF-PQ two-level assignment: deterministic, near exact-assign recall") {
@@ -276,35 +255,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(agree >= 0.7, s"two-level diverges from exact assignment: $agree")
   }
 
-  test("IVF/IVF-PQ: nlist >= twoLevelAutoNlist engages the two-level path by itself") {
+  test("IVF/IVF-PQ: 512 or more surviving cells engage the two-level path by itself") {
     // the 100 TB default must not depend on a caller knowing the flag
-    // (the semanticDedup twoLevelAutoK contract, mirrored): at nlist
-    // past the threshold the auto path must produce EXACTLY what an
-    // explicit twoLevelAssign = true produces, and the disarmed run
-    // (autoNlist = MaxValue) must replay the exact-assign default
-    val e = Tables.load(spark, sf, "embeddings")
+    // (the semanticDedup contract, mirrored): once the quantizer keeps
+    // 512 cells, the auto path must produce EXACTLY what an explicit
+    // twoLevelAssign = true produces. 3000 ids over 600 hash buckets
+    // keep ~596 cells.
+    val rnd = new scala.util.Random(11)
+    val e = (0 until 3000).map { i =>
+      (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat))
+    }.toDF("vec_id", "embedding")
     val q = e.filter($"vec_id" < 10)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "cid", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val autoIvf = rows(Similarity.ivfTopK(q, e, 5, nlist = 16, nprobe = 6,
-      twoLevelAutoNlist = 16))
-    val explIvf = rows(Similarity.ivfTopK(q, e, 5, nlist = 16, nprobe = 6,
+    assert(Similarity.ivfBuild(e, nlist = 600).centroids.count() >= 512)
+    val autoIvf = rows(Similarity.ivfTopK(q, e, 5, nlist = 600, nprobe = 6))
+    val explIvf = rows(Similarity.ivfTopK(q, e, 5, nlist = 600, nprobe = 6,
       twoLevelAssign = true))
     assert(autoIvf == explIvf, "ivfTopK auto threshold did not engage two-level")
-    val disIvf = rows(Similarity.ivfTopK(q, e, 5, nlist = 16, nprobe = 6,
-      twoLevelAutoNlist = Int.MaxValue))
-    assert(disIvf == rows(Similarity.ivfTopK(q, e, 5, nlist = 16, nprobe = 6)),
-      "disarmed autoNlist diverged from the default exact ivfTopK path")
-    val autoPq = rows(Similarity.ivfPqTopK(q, e, 5, nprobe = 12,
-      twoLevelAutoNlist = 16))
-    val explPq = rows(Similarity.ivfPqTopK(q, e, 5, nprobe = 12,
+    val autoPq = rows(Similarity.ivfPqTopK(q, e, 5, nlist = 600, nprobe = 12))
+    val explPq = rows(Similarity.ivfPqTopK(q, e, 5, nlist = 600, nprobe = 12,
       twoLevelAssign = true))
     assert(autoPq == explPq, "ivfPqTopK auto threshold did not engage two-level")
-    val disPq = rows(Similarity.ivfPqTopK(q, e, 5, nprobe = 12,
-      twoLevelAutoNlist = Int.MaxValue))
-    assert(disPq == rows(Similarity.ivfPqTopK(q, e, 5, nprobe = 12)),
-      "disarmed autoNlist diverged from the default exact ivfPqTopK path")
   }
 
   test("rrfFuse: exact fusion arithmetic, missing-side zero, id tie-break") {
@@ -438,6 +411,37 @@ class PipelineSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("ivfPqAbsorbDelta") ||
       Option(ex.getCause).exists(_.getMessage.contains("ivfPqAbsorbDelta")),
       s"wrong-m absorb did not raise the width guard: ${ex.getMessage}")
+  }
+
+  test("IVF/IVF-PQ absorb: a copy of an indexed vector lands in its original's cell when nlist = 512 leaves fewer cells") {
+    // 1000 ids over 512 hash buckets leave ~440 cells, under the
+    // two-level threshold: build and absorb must pick the same
+    // assignment rule from the cells that survive, or an absorbed copy
+    // and its built original can land in different cells
+    val rnd = new scala.util.Random(7)
+    val corpus = (0 until 1000).map { i =>
+      (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat))
+    }.toDF("vec_id", "embedding")
+    val copies = corpus.select(($"vec_id" + 100000L).as("vec_id"),
+      $"embedding")
+    def misplaced(cells: org.apache.spark.sql.DataFrame) = {
+      val cellOf = cells.distinct().collect()
+        .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue)
+        .toMap
+      (0L until 1000L).filter(i => cellOf(i) != cellOf(i + 100000L))
+    }
+    val ivf = Similarity.ivfBuild(corpus, nlist = 512)
+    assert(ivf.centroids.count() < 512)
+    val ivfMoved = misplaced(Similarity.ivfAbsorbDelta(ivf, copies)
+      .cells.select("cid", "centroid_id"))
+    assert(ivfMoved.isEmpty, s"IVF copies left their original's cell: " +
+      s"${ivfMoved.size} of 1000")
+    val pq = Similarity.ivfPqBuild(corpus, nlist = 512, m = 4, codes = 8)
+    assert(pq.coarse.count() < 512)
+    val pqMoved = misplaced(Similarity.ivfPqAbsorbDelta(pq, copies)
+      .codes.select("cid", "cell"))
+    assert(pqMoved.isEmpty, s"IVF-PQ copies left their original's cell: " +
+      s"${pqMoved.size} of 1000")
   }
 
   test("ivfDeleteIds: deleted index equals survivors assigned to the same quantizer; no deleted id served") {
@@ -855,22 +859,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(math.abs(q1._6 - 1.5 / 2.130930) < 1e-9, s"ndcg: $q1")
     val q2 = m(1)
     assert(q2 == ((2L, 0L, 1L, 0.0, 0.0, 0.0)), m.toString)
-  }
-
-  test("IVF k-means refinement: deterministic centroids, probe still works") {
-    val e = Tables.load(spark, sf, "embeddings")
-    val q = e.filter($"vec_id" < 10)
-    def run() = Similarity.ivfTopK(q, e, 5, nlist = 16, nprobe = 8, iters = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val r1 = run()
-    assert(r1.nonEmpty && r1.forall { case (qq, cc, _) => qq != cc })
-    // DECIMAL mean accumulation ⇒ identical centroids ⇒ identical output
-    assert(r1 == run(), "refined-centroid IVF is nondeterministic across runs")
-    // refinement must still recover a sane share of true neighbors
-    val brute = SparkEntry.queries("sim01_cosine_exact")(spark, sf)
-      .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = r1.map(t => (t._1, t._2)).count(brute.contains).toDouble / brute.size
-    assert(recall >= 0.3, s"refined IVF recall too low: $recall")
   }
 
   test("approx_top_k: planted heavy hitters reported with exact counts") {
