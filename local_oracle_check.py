@@ -4,12 +4,16 @@ given scale factor, then execute each oracle_sql.json query in DuckDB over
 the same parquet tables and compare against the Spark result parquet
 (columns sorted by name, rows in emitted order, values normalized).
 
-Usage: python3 local_oracle_check.py [sfDir] [outDir]
+Usage: python3 local_oracle_check.py [sfDir] [outDir] [--no-run]
+
+Each PASS/FAIL line ends with that oracle's wall seconds (DuckDB query +
+parquet read + compare); the ten slowest are listed after the total.
 """
 import json
 import math
 import subprocess
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -82,11 +86,18 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     oracles = json.load(open(f"{OUT}/oracle_sql.json"))
     n_ok = 0
+    elapsed = {}
     for name in sorted(oracles):
+        t0 = time.monotonic()
         res = compare(name, oracles[name], con)
-        print(f"{'PASS' if res == 'OK' else 'FAIL'} {name}: {res}")
+        elapsed[name] = time.monotonic() - t0
+        print(f"{'PASS' if res == 'OK' else 'FAIL'} {name}: {res} "
+              f"({elapsed[name]:.1f}s)", flush=True)
         n_ok += res == "OK"
     print(f"\n{n_ok}/{len(oracles)} oracle queries match")
+    print("slowest oracles:")
+    for name in sorted(elapsed, key=elapsed.get, reverse=True)[:10]:
+        print(f"  {elapsed[name]:8.1f}s  {name}")
     # rows-only queries: just confirm output exists and is non-empty
     import os
     for d in sorted(os.listdir(OUT)):

@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.IntegerType
 
 import graft.functions.{MinHashAggExpr, ParseS3AccessLogExpr}
+import graft.operators.Layout
 
 /** SQL front-end integration: registers graft's custom Catalyst
   * expressions as native SQL functions, so a pure-SQL user (spark-sql
@@ -154,27 +156,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "[1, 31]. Pure bitwise arithmetic, fully codegen'd.",
         "", "", "", "math_funcs", "0.1.0", "", "scala_udf"),
       (children: Seq[Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.{
-          BitwiseAnd, BitwiseOr, Cast, ShiftLeft}
-        import org.apache.spark.sql.types.LongType
         val bits = children match {
           case Seq(_, _, Literal(v: Int, IntegerType))
             if v >= 1 && v <= 31 => v
           case _ => throw new IllegalArgumentException(
             "z_value expects (a, b, <int literal in [1,31]>)")
         }
-        // the same fold as Layout.zValue, built as a raw Catalyst tree
-        val mask = Literal((1L << bits) - 1, LongType)
-        val am = BitwiseAnd(Cast(children.head, LongType), mask)
-        val bm = BitwiseAnd(Cast(children(1), LongType), mask)
-        (0 until bits).foldLeft[Expression](Literal(0L, LongType)) {
-          (acc, i) =>
-            BitwiseOr(BitwiseOr(acc,
-              ShiftLeft(BitwiseAnd(am, Literal(1L << i, LongType)),
-                Literal(i, IntegerType))),
-              ShiftLeft(BitwiseAnd(bm, Literal(1L << i, LongType)),
-                Literal(i + 1, IntegerType)))
-        }
+        bridge.catalyst(Layout.zValue(bridge.column(children.head),
+          bridge.column(children(1)), bits))
       }: Expression))
   }
 }

@@ -9,17 +9,21 @@ import org.apache.spark.storage.StorageLevel
 
 /** The ONE lineage-truncation policy shared by every iterative
   * operator in the engine (PageRank / personalized PR / k-core /
-  * label-prop, Lloyd and k-center seeding, BPE training, connected
-  * components). Iterative BSP loops grow their plan by one join + agg
-  * per round; truncating lineage each round keeps round N planning
-  * O(1) work instead of O(N).
+  * label-prop, k-center seeding, BPE training, connected components).
+  * Iterative BSP loops grow their plan by one join + agg per round;
+  * truncating lineage each round keeps round N planning O(1) work
+  * instead of O(N).
   *
-  * Two truncation modes, picked by `checkpointDir`:
-  *   - `None` (the local default): `localCheckpoint` — no distributed
-  *     write, but blocks are executor-local and NOT fault-tolerant; on
-  *     a real cluster one lost executor mid-iteration kills the job.
-  *   - `Some(dir)` (the cluster posture): reliable `checkpoint()` —
-  *     every round is recoverable from HDFS/S3 at the cost of one
+  * The mode is read from the SparkContext's own checkpoint directory
+  * when a truncator is constructed — configured once per session, like
+  * every other Spark setting, never per call:
+  *   - no directory (the local default): `localCheckpoint` — no
+  *     distributed write, but blocks are executor-local and NOT
+  *     fault-tolerant; on a real cluster one lost executor
+  *     mid-iteration kills the job.
+  *   - a directory (the cluster posture: `spark.checkpoint.dir`, which
+  *     the SparkContext installs at start-up): reliable `checkpoint()`
+  *     — every round is recoverable from HDFS/S3 at the cost of one
   *     distributed write per round. For the engine's longest-running
   *     jobs (multi-hour PageRank over a 100 TB-derived graph) this is
   *     the only safe setting. The frame is persisted around the eager
@@ -30,62 +34,43 @@ import org.apache.spark.storage.StorageLevel
   *     materialized, so a multi-hour loop holds O(1) checkpoint
   *     copies on disk instead of O(rounds).
   *
-  * `checkpointDir` is installed via `SparkContext.setCheckpointDir`,
-  * which is PER-SPARKCONTEXT state, not per-call: constructing a
-  * truncator re-points the context's checkpoint location (last writer
-  * wins) and it stays installed after the operator returns. Two
-  * operators running CONCURRENTLY on one session with different dirs
-  * would interleave writes across the two locations — both still
-  * durable, but placement follows whichever dir was installed at
-  * write time. Rolling cleanup is safe either way: each
+  * The truncator never writes the context's checkpoint directory.
+  * Rolling cleanup is safe under concurrency: each
   * [[Truncator.rolling]] chain attributes a round's files from the
   * checkpointed RDD itself (`RDD.getCheckpointFile`), so concurrent
   * chains — even three on one dir, as [[Graph.hits]] runs — can never
   * capture or delete another chain's live round.
-  *
-  * `enabled = false` (exposed by the operators as
-  * `checkpoint = false`) disables truncation entirely and exists for
-  * plan inspection only (PlanSpec pins per-round shapes that a
-  * checkpoint would truncate away); a reliable dir overrides it — a
-  * caller naming a durable location wants durability.
   */
 private[graft] object Checkpointing {
 
   /** Per-invocation truncation handle for one iterative loop. Call
-    * once per operator invocation (reliable mode installs
-    * `checkpointDir` on the SparkContext at construction — see the
-    * per-SparkContext note above), then apply to each frame:
-    * `cp(df)` for frames that live for the WHOLE loop (edge tables,
-    * node tables), `cp.rolling(df)` for per-round frames that
-    * supersede the previous round's.
+    * once per operator invocation (the mode is fixed at construction
+    * — see above), then apply to each frame: `cp(df)` for frames that
+    * live for the WHOLE loop (edge tables, node tables),
+    * `cp.rolling(df)` for per-round frames that supersede the previous
+    * round's.
     */
-  def truncator(spark: SparkSession, enabled: Boolean,
-                checkpointDir: Option[String]): Truncator =
-    new Truncator(spark, enabled, checkpointDir)
+  def truncator(spark: SparkSession): Truncator = new Truncator(spark)
 
-  private[graft] final class Truncator(spark: SparkSession, enabled: Boolean,
-                                       checkpointDir: Option[String])
+  private[graft] final class Truncator(spark: SparkSession)
       extends (DataFrame => DataFrame) {
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
+    private val reliableDir = spark.sparkContext.getCheckpointDir
 
-    // checkpoint files (reliable mode) / persisted block RDDs (local
-    // mode) written by the previous rolling() call — the round the
-    // latest rolling frame superseded
-    private var prevRound: Set[Path] = Set.empty
-    private var prevLocal: Seq[RDD[InternalRow]] = Nil
+    // the frame the latest rolling() call returned — the round the
+    // next rolling() call supersedes and releases
+    private var lastRound: Option[DataFrame] = None
 
     /** Truncate lineage; in reliable mode the files persist until the
       * caller (or a later [[rolling]] round) removes them.
       */
     def apply(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) {
+      if (reliableDir.isDefined) {
         // persist so the eager count() and the checkpoint WRITE job
         // share one computation of the plan instead of two
         df.persist(StorageLevel.MEMORY_AND_DISK)
         try df.checkpoint()
         finally df.unpersist()
-      } else if (enabled) df.localCheckpoint()
-      else df
+      } else df.localCheckpoint()
 
     /** Truncate a PER-ROUND frame: after this round's checkpoint has
       * fully materialized, the previous rolling round's storage is
@@ -108,18 +93,8 @@ private[graft] object Checkpointing {
       */
     def rolling(df: DataFrame): DataFrame = {
       val out = apply(df) // eager: fully materialized when this returns
-      if (checkpointDir.isEmpty) {
-        if (enabled) {
-          val rdds = blockRdds(out)
-          prevLocal.foreach(_.unpersist(blocking = false))
-          prevLocal = rdds
-        }
-      } else {
-        val added = checkpointFiles(out)
-        val fs = fileSystem()
-        prevRound.foreach(p => fs.delete(p, true))
-        prevRound = added
-      }
+      lastRound.foreach(release)
+      lastRound = Some(out)
       out
     }
 
@@ -133,17 +108,16 @@ private[graft] object Checkpointing {
       * about to return.
       */
     def release(df: DataFrame): Unit =
-      if (checkpointDir.isEmpty) {
-        if (enabled) blockRdds(df).foreach(_.unpersist(blocking = false))
-      } else {
+      if (reliableDir.isEmpty)
+        blockRdds(df).foreach(_.unpersist(blocking = false))
+      else {
         val fs = fileSystem()
         checkpointFiles(df).foreach(p => fs.delete(p, true))
       }
 
-    private def fileSystem() = {
-      val p = new Path(spark.sparkContext.getCheckpointDir.get)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    }
+    private def fileSystem() =
+      new Path(reliableDir.get)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     /** The checkpointed RDDs a just-truncated frame actually reads:
       * `Dataset.checkpoint`/`localCheckpoint` wrap the materialized

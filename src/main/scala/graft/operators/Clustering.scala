@@ -315,21 +315,15 @@ object Clustering {
     * Scale shape per round: centroids broadcast (≤ k rows); the argmin
     * collapses map-side via `min(struct)` (one exchanged row per
     * vector); the update shuffles (cluster, pos) partial sums — k·dim
-    * rows after map-side combine. With the defaults rounds chain
-    * lazily in ONE plan (at gate depth the doubled scan is cheaper
-    * than materialization); a production loop at depth sets
-    * `checkpoint = true` (per-round lineage truncation) and, on a
-    * cluster, `checkpointDir` for fault tolerance — the
-    * [[Checkpointing]] policy shared with [[farthestPointSeeds]].
+    * rows after map-side combine. The rounds chain lazily in ONE plan
+    * with no lineage truncation: at the round counts this runs (km05:
+    * 2) the doubled scan is cheaper than materialization, and the
+    * plan grows by one assign + update per round.
     */
   def lloydRounds(df: DataFrame, k: Int, rounds: Int,
                   idCol: String = "vec_id",
-                  vecCol: String = "embedding",
-                  checkpoint: Boolean = false,
-                  checkpointDir: Option[String] = None): DataFrame = {
+                  vecCol: String = "embedding"): DataFrame = {
     require(rounds >= 1, "need at least one round")
-    val cp = Checkpointing.truncator(df.sparkSession, checkpoint,
-      checkpointDir)
     val e = df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
     // zero-shuffle narrow argmin (see nearestSeed): the old
     // crossJoin + min(struct) shape both SORTED the N·k expansion in
@@ -357,16 +351,12 @@ object Clustering {
         .groupBy(col("cluster"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("_m")))),
           s => s.getField("_m")).as("cvec"))
-    // each round's SUMMARY is checkpointed persistently (tiny: k rows)
-    // BEFORE the next round's rolling checkpoint deletes the assignment
-    // it was computed from — the final union reads summaries, never a
-    // superseded assignment round
     val out = (2 to rounds).foldLeft {
-      val a1 = cp.rolling(assignTo(seedCentroids(df, k, idCol, vecCol)))
-      (cp(summarize(a1, 1)), a1)
+      val a1 = assignTo(seedCentroids(df, k, idCol, vecCol))
+      (summarize(a1, 1), a1)
     } { case ((acc, prev), r) =>
-      val ar = cp.rolling(assignTo(updated(prev)))
-      (acc.unionAll(cp(summarize(ar, r))), ar)
+      val ar = assignTo(updated(prev))
+      (acc.unionAll(summarize(ar, r)), ar)
     }._1
     out.orderBy("round", "cluster")
   }
@@ -399,12 +389,9 @@ object Clustering {
     */
   def farthestPointSeeds(df: DataFrame, k: Int,
                          idCol: String = "vec_id",
-                         vecCol: String = "embedding",
-                         checkpoint: Boolean = true,
-                         checkpointDir: Option[String] = None): DataFrame = {
+                         vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, "k must be positive")
-    val cp = Checkpointing.truncator(df.sparkSession, checkpoint,
-      checkpointDir)
+    val cp = Checkpointing.truncator(df.sparkSession)
     val pts = cp(df.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast(LongType).as("_id"), Similarity.dec6(col(vecCol)).as("_x")))
     var centers = cp.rolling(pts.orderBy("_id").limit(1)

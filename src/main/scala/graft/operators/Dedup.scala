@@ -522,10 +522,8 @@ object Dedup {
     * operator here — silence would return a half-contracted forest as
     * plausible-but-wrong groups.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    val cp = Checkpointing.truncator(edges.sparkSession, enabled = true,
-      checkpointDir)
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    val cp = Checkpointing.truncator(edges.sparkSession)
     // the non-self-loop edge count rides the dedup checkpoint's own
     // observed metrics (r21) — it seeds the star loop's convergence
     // counter, which previously cost a separate count() job
@@ -533,8 +531,7 @@ object Dedup {
     val e0 = cp(edges.distinct()
       .observe(obs, count(when(col("src") =!= col("dst"), lit(1)))
         .as("_n")))
-    starContractFrom(e0, obs.get("_n").asInstanceOf[Long], maxIter,
-      checkpointDir)
+    starContractFrom(e0, obs.get("_n").asInstanceOf[Long], maxIter)
   }
 
   /** The star-contraction rounds of [[connectedComponents]] over an
@@ -546,10 +543,9 @@ object Dedup {
     * storage once round 1 and the node-set pin have materialized
     * (nothing reads it after that), exactly as the fused form did.
     */
-  private def starContractFrom(e0: DataFrame, nEdges: Long, maxIter: Int,
-                               checkpointDir: Option[String]): DataFrame = {
-    val cp = Checkpointing.truncator(e0.sparkSession, enabled = true,
-      checkpointDir)
+  private def starContractFrom(e0: DataFrame, nEdges: Long,
+                               maxIter: Int): DataFrame = {
+    val cp = Checkpointing.truncator(e0.sparkSession)
     def clean(e: DataFrame): DataFrame =
       e.filter(col("src") =!= col("dst")).distinct()
     // large-star: m(u) = min(Γ(u) ∪ {u}) over the SYMMETRIC view;
@@ -627,17 +623,12 @@ object Dedup {
     * shallow components near-dup graphs usually produce and WRONG for
     * chain-shaped ones (use [[connectedComponents]], whose round count
     * is diameter-independent). Each round is one hash-partitioned join
-    * + partial-aggregated min, with per-round checkpoint truncation.
-    * `checkpointDir = None` (the local default) uses `localCheckpoint`
-    * — fast, but executor-local and not fault-tolerant; pass a
-    * reliable dir (HDFS/S3 on a cluster) to use `checkpoint()`
-    * instead, making every round recoverable at the cost of a
-    * distributed write per round.
+    * + partial-aggregated min, with per-round lineage truncation by
+    * the [[Checkpointing]] policy (reliable when the session has a
+    * checkpoint directory, `localCheckpoint` otherwise).
     */
-  def connectedComponentsBsp(edges: DataFrame, maxIter: Int = 20,
-                             checkpointDir: Option[String] = None): DataFrame = {
-    val cp = Checkpointing.truncator(edges.sparkSession, enabled = true,
-      checkpointDir)
+  def connectedComponentsBsp(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    val cp = Checkpointing.truncator(edges.sparkSession)
     // symmetrize with a single explode, NOT union(e, e.swap): union would
     // evaluate the (often expensive) upstream edge pipeline twice before
     // the checkpoint — measured as ~half of dd08's runtime when the edges
@@ -768,14 +759,11 @@ object Dedup {
     */
   def connectedComponentsHybrid(edges: DataFrame, bspRounds: Int = 4,
                                 maxIter: Int = 20,
-                                contractMinShrink: Double = 0.3,
-                                checkpointDir: Option[String] = None)
-    : DataFrame = {
+                                contractMinShrink: Double = 0.3): DataFrame = {
     require(bspRounds >= 1, s"bspRounds must be >= 1, got $bspRounds")
     require(contractMinShrink >= 0.0 && contractMinShrink <= 1.0,
       s"contractMinShrink must be in [0, 1], got $contractMinShrink")
-    val cp = Checkpointing.truncator(edges.sparkSession, enabled = true,
-      checkpointDir)
+    val cp = Checkpointing.truncator(edges.sparkSession)
     // one materialization of the (possibly expensive) upstream edge
     // pipeline serves the BSP rounds AND the contraction joins; the
     // per-round symmetric view is a cheap explode over the checkpoint.
@@ -819,8 +807,7 @@ object Dedup {
         // rounds (r21; was a second distinct + checkpoint of the same
         // set inside connectedComponents). starContractFrom releases
         // e0's storage itself once round 1 and its node pin land.
-        starContractFrom(e0, obsE.get("_n").asInstanceOf[Long], maxIter,
-          checkpointDir)
+        starContractFrom(e0, obsE.get("_n").asInstanceOf[Long], maxIter)
       } else {
         // contract by the partial labels (two id-keyed joins over the
         // checkpointed edges) and let star contraction finish
@@ -833,7 +820,7 @@ object Dedup {
           .join(labels.select(col("id").as("dst"), col("label").as("_ld")),
             "dst")
           .select(col("_ls").as("src"), col("_ld").as("dst"))
-        val star = connectedComponents(contracted, maxIter, checkpointDir)
+        val star = connectedComponents(contracted, maxIter)
         cp.release(e0)
         // compose. Every label is present in star's output: intra-class
         // edges contract to (L, L) self-loops, which are KEPT in

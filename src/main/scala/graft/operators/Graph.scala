@@ -42,6 +42,20 @@ object Graph {
     floor(c * 1000000000000.0 + 0.5).cast(DecimalType(14, 0)) *
       lit(new java.math.BigDecimal("0.000000000001"))
 
+  /** The damping factor and teleport share of the PageRank family
+    * ([[pageRank]], [[pageRankClassic]], [[personalizedPageRank]]).
+    * `Reset` is its own literal rather than `1 − Damping` because
+    * `1.0 − 0.85` is NOT the double `0.15` — the SQL oracles state the
+    * literal `0.15`, so the engine must too.
+    */
+  private val Damping = 0.85
+  private val Reset = 0.15
+
+  /** A (src, dst) edge list with both endpoints as longs. */
+  private def directedEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast(LongType).as("src"),
+      col("dst").cast(LongType).as("dst"))
+
   /** Lineage-truncation CADENCE for the single-consumer BSP loops
     * ([[pageRank]], [[personalizedPageRank]], [[labelPropagation]]):
     * checkpoint every 2nd round plus the final one, instead of every
@@ -63,29 +77,19 @@ object Graph {
                            last: Int)(df: DataFrame): DataFrame =
     if (round % lineageEvery == 0 || round == last) cp.rolling(df) else df
 
-  /** `iterations` rounds of damped PageRank over a directed edge list
-    * (srcCol, dstCol). Returns (v, r) for every node with at least one
-    * OUT-edge (symmetrize the input if every endpoint should score,
-    * or use [[pageRankClassic]] for the textbook semantics: sinks are
-    * nodes and their mass redistributes instead of draining).
-    * `reset` is passed explicitly rather than derived as `1 − damping`
-    * because `1.0 − 0.85` is NOT the double `0.15` — the caller (and
-    * any SQL oracle) must state the literal it means.
+  /** `iterations` rounds of damped PageRank (`Damping` 0.85, `Reset`
+    * 0.15) over a directed edge list (src, dst). Returns (v, r) for
+    * every node with at least one OUT-edge (symmetrize the input if
+    * every endpoint should score, or use [[pageRankClassic]] for the
+    * textbook semantics: sinks are nodes and their mass redistributes
+    * instead of draining). Lineage is truncated by the
+    * [[Checkpointing]] policy: reliable when the session has a
+    * checkpoint directory (`spark.checkpoint.dir`), local otherwise.
     */
-  def pageRank(edges: DataFrame, iterations: Int,
-               damping: Double = 0.85, reset: Double = 0.15,
-               srcCol: String = "src", dstCol: String = "dst",
-               checkpoint: Boolean = true,
-               checkpointDir: Option[String] = None): DataFrame = {
+  def pageRank(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 0, "iterations must be non-negative")
-    // checkpoint = false exists for plan inspection only (PlanSpec pins
-    // the per-iteration shape, which the checkpoint truncates away);
-    // checkpointDir = Some(reliable dir) is the cluster posture — see
-    // [[Checkpointing]]
-    val cp = Checkpointing.truncator(edges.sparkSession, checkpoint,
-      checkpointDir)
-    val e = edges.select(col(srcCol).cast(LongType).as("src"),
-      col(dstCol).cast(LongType).as("dst"))
+    val cp = Checkpointing.truncator(edges.sparkSession)
+    val e = directedEdges(edges)
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // one materialized (src, dst, outdeg) table feeds every iteration —
     // without it each round re-evaluates the upstream edge pipeline
@@ -103,7 +107,7 @@ object Graph {
       val next = rollingEvery(cp, i, iterations)(nodes
         .join(contrib, col("v") === col("dst"), "left")
         .select(col("v"),
-          (lit(reset / n) + lit(damping) *
+          (lit(Reset / n) + lit(Damping) *
             coalesce(col("cs").cast(DoubleType), lit(0.0))).as("r")))
       ranks = next
     }
@@ -136,16 +140,10 @@ object Graph {
     * single row rides a broadcast; no extra shuffle, no driver-side
     * per-round action.
     */
-  def pageRankClassic(edges: DataFrame, iterations: Int,
-                      damping: Double = 0.85, reset: Double = 0.15,
-                      srcCol: String = "src", dstCol: String = "dst",
-                      checkpoint: Boolean = true,
-                      checkpointDir: Option[String] = None): DataFrame = {
+  def pageRankClassic(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 0, "iterations must be non-negative")
-    val cp = Checkpointing.truncator(edges.sparkSession, checkpoint,
-      checkpointDir)
-    val e = edges.select(col(srcCol).cast(LongType).as("src"),
-      col(dstCol).cast(LongType).as("dst"))
+    val cp = Checkpointing.truncator(edges.sparkSession)
+    val e = directedEdges(edges)
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val ed = cp(e.join(deg, "src"))
     // classic node set = src ∪ dst; sinks carry outdeg NULL
@@ -167,7 +165,7 @@ object Graph {
         .join(contrib, col("v") === col("dst"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("v"), col("outdeg"),
-          (lit(reset / n) + lit(damping) *
+          (lit(Reset / n) + lit(Damping) *
             (coalesce(col("cs").cast(DoubleType), lit(0.0)) +
               col("dm").cast(DoubleType) / lit(n.toDouble))).as("r")))
       ranks = next
@@ -198,16 +196,10 @@ object Graph {
     * (one broadcast-joined bit, computed once).
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-                           iterations: Int,
-                           damping: Double = 0.85, reset: Double = 0.15,
-                           srcCol: String = "src", dstCol: String = "dst",
-                           checkpoint: Boolean = true,
-                           checkpointDir: Option[String] = None): DataFrame = {
+                           iterations: Int): DataFrame = {
     require(iterations >= 0, "iterations must be non-negative")
-    val cp = Checkpointing.truncator(edges.sparkSession, checkpoint,
-      checkpointDir)
-    val e = edges.select(col(srcCol).cast(LongType).as("src"),
-      col(dstCol).cast(LongType).as("dst"))
+    val cp = Checkpointing.truncator(edges.sparkSession)
+    val e = directedEdges(edges)
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val ed = cp(e.join(deg, "src"))
     val sd = seeds.select(seeds.columns.head).toDF("_sv")
@@ -228,8 +220,8 @@ object Graph {
       val next = rollingEvery(cp, i, iterations)(nodes
         .join(contrib, col("v") === col("dst"), "left")
         .select(col("v"), col("_isSeed"),
-          (when(col("_isSeed") === 1, lit(reset / nSeeds)).otherwise(lit(0.0)) +
-            lit(damping) * coalesce(col("cs").cast(DoubleType), lit(0.0)))
+          (when(col("_isSeed") === 1, lit(Reset / nSeeds)).otherwise(lit(0.0)) +
+            lit(Damping) * coalesce(col("cs").cast(DoubleType), lit(0.0)))
             .as("r")))
       ranks = next
     }
@@ -258,21 +250,15 @@ object Graph {
     * [[pageRank]] BSP shape twice per round; lineage truncated per
     * round ([[Checkpointing]] policy, rolling cleanup).
     */
-  def hits(edges: DataFrame, iterations: Int,
-           srcCol: String = "src", dstCol: String = "dst",
-           checkpoint: Boolean = true,
-           checkpointDir: Option[String] = None): DataFrame = {
+  def hits(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val cp = Checkpointing.truncator(edges.sparkSession, checkpoint,
-      checkpointDir)
+    val cp = Checkpointing.truncator(edges.sparkSession)
     // hub and auth are two INDEPENDENT rolling chains: hub_r is built
     // from auth_r and vice versa, so a single chain would delete the
     // final auth round the moment the final hub round lands. Each
     // chain's truncator prunes only its own superseded rounds.
-    val cpAuth = Checkpointing.truncator(edges.sparkSession, checkpoint,
-      checkpointDir)
-    val cpHub = Checkpointing.truncator(edges.sparkSession, checkpoint,
-      checkpointDir)
+    val cpAuth = Checkpointing.truncator(edges.sparkSession)
+    val cpHub = Checkpointing.truncator(edges.sparkSession)
     // per-half-round contrib chain (r21): contrib feeds BOTH the L1
     // normalizer broadcast and the score join — unpinned, the |E|-row
     // join + aggregation evaluated TWICE per half-round (once under the
@@ -281,10 +267,8 @@ object Graph {
     // read the materialized rows; a contrib is fully consumed by its
     // own half-round's materialization, so the next rolling call's
     // release can never strand a reader.
-    val cpContrib = Checkpointing.truncator(edges.sparkSession, checkpoint,
-      checkpointDir)
-    val e = cp(edges.select(col(srcCol).cast(LongType).as("src"),
-      col(dstCol).cast(LongType).as("dst")).distinct())
+    val cpContrib = Checkpointing.truncator(edges.sparkSession)
+    val e = cp(directedEdges(edges).distinct())
     val nodes = cp(e.select(explode(array(col("src"), col("dst"))).as("v"))
       .distinct())
     val n = nodes.count()
@@ -348,18 +332,18 @@ object Graph {
     * equi-join on the wedge pivot, one equi-join against oriented edges
     * for closure, one aggregation — no cartesian anywhere.
     */
-  def triangleCounts(edges: DataFrame, srcCol: String = "src",
-                     dstCol: String = "dst"): DataFrame = {
-    val und = undirectedEdges(edges, srcCol, dstCol)
+  def triangleCounts(edges: DataFrame): DataFrame = {
+    val und = undirectedEdges(edges)
     triangleCountsFrom(und, undirectedDegrees(und))
   }
 
-  /** Canonical undirected, de-duplicated, loop-free edge set (a < b). */
-  private def undirectedEdges(edges: DataFrame, srcCol: String,
-                              dstCol: String): DataFrame =
+  /** Canonical undirected, de-duplicated, loop-free edge set (a < b)
+    * of a (src, dst) edge list.
+    */
+  private def undirectedEdges(edges: DataFrame): DataFrame =
     edges
-      .select(least(col(srcCol), col(dstCol)).cast(LongType).as("a"),
-        greatest(col(srcCol), col(dstCol)).cast(LongType).as("b"))
+      .select(least(col("src"), col("dst")).cast(LongType).as("a"),
+        greatest(col("src"), col("dst")).cast(LongType).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
 
@@ -418,22 +402,14 @@ object Graph {
     * kept-node set — no windows, no cartesian; the per-round
     * checkpoint truncates lineage (the [[pageRank]] discipline).
     */
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-            srcCol: String = "src", dstCol: String = "dst",
-            checkpoint: Boolean = true,
-            checkpointDir: Option[String] = None): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val cp = Checkpointing.truncator(edges.sparkSession, checkpoint,
-      checkpointDir)
+    val cp = Checkpointing.truncator(edges.sparkSession)
     def degrees(und: DataFrame): DataFrame = und
       .select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("deg"))
-    var und = cp.rolling(edges
-      .select(least(col(srcCol), col(dstCol)).cast(LongType).as("a"),
-        greatest(col(srcCol), col(dstCol)).cast(LongType).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct())
+    var und = cp.rolling(undirectedEdges(edges))
     for (_ <- 1 to rounds) {
       val keep = degrees(und).filter(col("deg") >= k).select(col("node"))
       und = cp.rolling(und
@@ -458,9 +434,8 @@ object Graph {
     * from the degeneracy-bounded enumeration above; the final join is
     * node-keyed (aggregate-sized, broadcastable).
     */
-  def clusteringCoefficients(edges: DataFrame, srcCol: String = "src",
-                             dstCol: String = "dst"): DataFrame = {
-    val und = undirectedEdges(edges, srcCol, dstCol)
+  def clusteringCoefficients(edges: DataFrame): DataFrame = {
+    val und = undirectedEdges(edges)
     val deg = undirectedDegrees(und)
     deg.select(col("v").as("node"), col("deg")).filter(col("deg") >= 2)
       .join(triangleCountsFrom(und, deg), Seq("node"), "left")
@@ -490,18 +465,10 @@ object Graph {
     * node. No window over a node's full neighborhood list, no driver
     * state; lineage truncated per round as in [[pageRank]].
     */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-                       srcCol: String = "src", dstCol: String = "dst",
-                       checkpoint: Boolean = true,
-                       checkpointDir: Option[String] = None): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val cp = Checkpointing.truncator(edges.sparkSession, checkpoint,
-      checkpointDir)
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).cast(LongType).as("a"),
-        greatest(col(srcCol), col(dstCol)).cast(LongType).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val cp = Checkpointing.truncator(edges.sparkSession)
+    val und = undirectedEdges(edges)
     val sym = cp(und.select(col("a").as("u"), col("b").as("v"))
       .union(und.select(col("b").as("u"), col("a").as("v"))))
     var lab = sym.select(col("u").as("n")).distinct()

@@ -764,15 +764,15 @@ object TextAnalysis {
     * share division is one exact IEEE op on two integers, so the
     * doubles hash-match any engine computing the same integers.
     */
-  def corpusComposition(df: DataFrame, srcCol: String, langCol: String,
+  def corpusComposition(df: DataFrame, sourceCol: String, langCol: String,
                         textCol: String): DataFrame = {
-    val cells = df.groupBy(col(srcCol), col(langCol))
+    val cells = df.groupBy(col(sourceCol), col(langCol))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(col(textCol), " ")).cast(LongType)).as("n_tokens"),
         sum(length(col(textCol)).cast(LongType)).as("n_chars"))
     val total = cells.agg(sum(col("n_docs")).as("_total"))
     cells.crossJoin(broadcast(total))
-      .select(col(srcCol), col(langCol),
+      .select(col(sourceCol), col(langCol),
         col("n_docs"), col("n_tokens"), col("n_chars"),
         (col("n_docs").cast(DoubleType) / col("_total").cast(DoubleType))
           .as("doc_share"))
@@ -948,8 +948,9 @@ object TextAnalysis {
     * TakeOrdered that broadcasts back onto the word-type table; the
     * rewrite is a narrow pass. The corpus-sized explode happens ONCE
     * (word-type histogram); every round after runs on word TYPES, the
-    * classic BPE working set. Lineage is checkpoint-truncated per
-    * round like the other iterative operators.
+    * classic BPE working set. Lineage is truncated per round by the
+    * [[Checkpointing]] policy shared with the other iterative
+    * operators.
     */
   /** The greedy left-to-right non-overlapping pair merge as a per-word
     * `aggregate` fold over `syms`, against the broadcast winning pair
@@ -965,12 +966,9 @@ object TextAnalysis {
           array(concat(col("m_a"), col("m_b")))))
         .otherwise(concat(acc, array(x))))
 
-  def bpeMerges(df: DataFrame, textCol: String, rounds: Int,
-                checkpoint: Boolean = true,
-                checkpointDir: Option[String] = None): DataFrame = {
+  def bpeMerges(df: DataFrame, textCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val cp = Checkpointing.truncator(df.sparkSession, checkpoint,
-      checkpointDir)
+    val cp = Checkpointing.truncator(df.sparkSession)
     var words = cp.rolling(df
       .select(explode(split(col(textCol), " ")).as("word"))
       .filter(col("word") =!= "")
@@ -1022,11 +1020,8 @@ object TextAnalysis {
     * words against the broadcast-or-shuffle-joined type counts.
     */
   def bpeEncode(df: DataFrame, idCol: String, textCol: String,
-                merges: DataFrame,
-                checkpoint: Boolean = true,
-                checkpointDir: Option[String] = None): DataFrame = {
-    val cp = Checkpointing.truncator(df.sparkSession, checkpoint,
-      checkpointDir)
+                merges: DataFrame): DataFrame = {
+    val cp = Checkpointing.truncator(df.sparkSession)
     // the artifact must cover rounds 1..max contiguously — a missing
     // round would silently empty the type table at its crossJoin. The
     // min bound matters too: rounds {0, 2} satisfy max==count==distinct

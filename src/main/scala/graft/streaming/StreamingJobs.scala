@@ -1560,23 +1560,8 @@ object StreamingJobs {
     * the only stream-stream join shape that runs with finite state.
     */
   def clickToPurchase(events: DataFrame, maxLagMinutes: Int = 30,
-                      watermark: String = "30 minutes"): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", watermark)
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("ts").as("purchase_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("purchase_ts", watermark)
-    clicks.join(purchases,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") +
-          expr(s"INTERVAL $maxLagMinutes MINUTES"))
-      .select(col("user_id"), col("click_id"), col("click_ts"),
-        col("purchase_id"), col("purchase_ts"))
-  }
+                      watermark: String = "30 minutes"): DataFrame =
+    clickPurchaseJoin(events, maxLagMinutes, watermark, "inner")
 
   /** [[clickToPurchase]] as a LEFT OUTER stream-stream join — the
     * conversion-funnel variant that also emits every click that did
@@ -1594,7 +1579,16 @@ object StreamingJobs {
     * O(arrival rate × lag), never O(stream).
     */
   def clickToPurchaseOuter(events: DataFrame, maxLagMinutes: Int = 30,
-                           watermark: String = "30 minutes"): DataFrame = {
+                           watermark: String = "30 minutes"): DataFrame =
+    clickPurchaseJoin(events, maxLagMinutes, watermark, "leftOuter")
+
+  /** The one body of [[clickToPurchase]] / [[clickToPurchaseOuter]]:
+    * watermarked click and purchase sides joined on user within the
+    * `[click_ts, click_ts + maxLag]` window under `joinType`.
+    */
+  private def clickPurchaseJoin(events: DataFrame, maxLagMinutes: Int,
+                                watermark: String,
+                                joinType: String): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts").as("click_ts"),
         col("event_id").as("click_id"))
@@ -1608,7 +1602,7 @@ object StreamingJobs {
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") <= col("click_ts") +
           expr(s"INTERVAL $maxLagMinutes MINUTES"),
-      "leftOuter")
+      joinType)
       .select(col("user_id"), col("click_id"), col("click_ts"),
         col("purchase_id"), col("purchase_ts"))
   }

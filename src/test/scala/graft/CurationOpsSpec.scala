@@ -187,71 +187,99 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(once == again)
   }
 
+  /** rdd-* checkpoint directories anywhere under `dir`. */
+  private def rddDirsUnder(dir: java.nio.file.Path): Int = {
+    val walk = java.nio.file.Files.walk(dir)
+    try walk.iterator().asScala.count(_.getFileName.toString.startsWith("rdd-"))
+    finally walk.close()
+  }
+
+  /** Delete `dir` and everything under it, so repeated runs don't accrete. */
+  private def deleteTree(dir: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(dir)
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .iterator().asScala.foreach(java.nio.file.Files.delete)
+    finally walk.close()
+  }
+
   test("iterative loops: reliable checkpointDir replays the localCheckpoint result") {
     // every iterative operator must produce identical output under the
     // fault-tolerant reliable-checkpoint posture (the cluster setting —
     // localCheckpoint blocks die with their executor); the CC spec in
-    // PipelineSpec is the model, this covers the other six loops
+    // PipelineSpec is the model, this covers the other seven loops.
+    // The mode comes from the context's checkpoint directory, the one
+    // `spark.checkpoint.dir` installs on a cluster
     val dir = SparkTestSession.tempDir("graft-iter-cp")
-    val cpDir = Some(dir.toString)
     val edges = (1L to 9L).flatMap(l => Seq((0L, l), (l, 0L)))
       .toDF("src", "dst")
-    val G = graft.operators.Graph
-    def ranks(d: Option[String]) = G.pageRank(edges, 3, checkpointDir = d)
-      .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    assert(ranks(cpDir) == ranks(None))
-    def ppr(d: Option[String]) = G.personalizedPageRank(edges,
-        Seq(Tuple1(0L)).toDF("v"), 2, checkpointDir = d)
-      .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    assert(ppr(cpDir) == ppr(None))
-    def cores(d: Option[String]) = G.kCore(edges, k = 2, rounds = 2,
-        checkpointDir = d)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    assert(cores(cpDir) == cores(None))
-    def comms(d: Option[String]) = G.labelPropagation(edges, 2,
-        checkpointDir = d)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    assert(comms(cpDir) == comms(None))
     val docs = Seq("low lower lowest", "newer newest new").toDF("text")
-    def merges(d: Option[String]) = graft.operators.TextAnalysis
-      .bpeMerges(docs, "text", rounds = 2, checkpointDir = d)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-    assert(merges(cpDir) == merges(None))
     val vecs = Seq((1L, Seq(0f, 0f)), (2L, Seq(10f, 0f)), (3L, Seq(0f, 10f)),
       (4L, Seq(1f, 1f))).toDF("vec_id", "embedding")
-    def fps(d: Option[String]) = graft.operators.Clustering
-      .farthestPointSeeds(vecs, 3, checkpointDir = d)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    assert(fps(cpDir) == fps(None))
-    def lloyd(d: Option[String]) = graft.operators.Clustering
-      .lloydRounds(vecs, 2, rounds = 2, checkpointDir = d)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(lloyd(cpDir) == lloyd(None))
+    val G = graft.operators.Graph
+    def results(): Seq[Any] = Seq(
+      G.pageRank(edges, 3)
+        .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap,
+      G.personalizedPageRank(edges, Seq(Tuple1(0L)).toDF("v"), 2)
+        .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap,
+      G.kCore(edges, k = 2, rounds = 2)
+        .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap,
+      G.labelPropagation(edges, 2)
+        .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap,
+      TextAnalysis.bpeMerges(docs, "text", rounds = 2)
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq,
+      Clustering.farthestPointSeeds(vecs, 3)
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq,
+      Clustering.lloydRounds(vecs, 2, rounds = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val local = results()
+    // no directory: nothing reliable is written anywhere
+    assert(rddDirsUnder(dir) == 0)
+    val reliable = org.apache.spark.TestCheckpointDir
+      .withCheckpointDir(spark.sparkContext, dir.toString)(results())
+    assert(reliable == local)
     // the reliable path actually wrote RDD checkpoints to the dir —
     // and the ROLLING discipline pruned superseded rounds: each loop
     // may retain its persistent frames plus the last rolling round,
-    // never one checkpoint per round (pageRank alone would otherwise
-    // leave 3 rank rounds; across the six reliable runs here the
-    // unpruned total is ~2x the pruned one). Streams/dirs are closed
-    // and the temp tree deleted so repeated test runs don't accrete.
+    // never one checkpoint per round
     val walk = java.nio.file.Files.walk(dir)
-    val (files, rddDirs) =
-      try {
-        val all = walk.iterator().asScala.toVector
-        (all.count(_.toFile.isFile),
-          all.count(_.getFileName.toString.startsWith("rdd-")))
-      } finally walk.close()
+    val files =
+      try walk.iterator().asScala.count(_.toFile.isFile)
+      finally walk.close()
     assert(files > 0, s"no checkpoint files under $dir")
-    // 7 operators × (persistent frames + last rolling round): pageRank
-    // keeps 3 (ed, nodes, last ranks), ppr 3, kCore 1, labelProp 2,
-    // bpeMerges 1 + 2 winners, fps 2, lloyd 1 + 2 summaries = 20;
-    // without pruning the same runs checkpoint 27 rdds
-    assert(rddDirs <= 22, s"rolling cleanup left $rddDirs rdd-* dirs — " +
+    val rddDirs = rddDirsUnder(dir)
+    // 6 truncating operators × (persistent frames + last rolling
+    // round): pageRank keeps 3 (ed, nodes, last ranks), ppr 3, kCore 1,
+    // labelProp 2, bpeMerges 1 + 2 winners, fps 2 = 14 (lloydRounds
+    // truncates nothing); without pruning the same runs checkpoint 21
+    // rdds (pageRank 4, ppr 3, kCore 3, labelProp 2, bpeMerges 5, fps 4
+    // — the 2-round cadence of pageRank/ppr/labelProp included). Both
+    // counts measured; the bound sits between them
+    assert(rddDirs <= 17, s"rolling cleanup left $rddDirs rdd-* dirs — " +
       "superseded per-round checkpoints are not being deleted")
-    val cleanupWalk = java.nio.file.Files.walk(dir)
-    try cleanupWalk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
-    finally cleanupWalk.close()
+    deleteTree(dir)
+  }
+
+  test("iterative loops leave the context's checkpoint directory as they found it") {
+    // the truncator READS the directory; it never installs one, so an
+    // operator cannot re-point context-wide state under a concurrent
+    // caller — with no directory it stays unset, with one it stays put
+    val sc = spark.sparkContext
+    val edges = (1L to 5L).map(l => (l, l % 5 + 1)).toDF("src", "dst")
+    assert(sc.getCheckpointDir.isEmpty)
+    graft.operators.Graph.pageRank(edges, 2).collect()
+    graft.operators.Dedup.connectedComponents(edges).collect()
+    assert(sc.getCheckpointDir.isEmpty)
+    val dir = SparkTestSession.tempDir("graft-cp-unchanged")
+    org.apache.spark.TestCheckpointDir.withCheckpointDir(sc, dir.toString) {
+      val installed = sc.getCheckpointDir
+      assert(installed.isDefined)
+      graft.operators.Graph.pageRank(edges, 2).collect()
+      graft.operators.Dedup.connectedComponents(edges).collect()
+      assert(sc.getCheckpointDir == installed)
+    }
+    assert(sc.getCheckpointDir.isEmpty)
+    deleteTree(dir)
   }
 
   test("Truncator.rolling: concurrent chains on one dir never lose a live round") {
@@ -267,8 +295,7 @@ class CurationOpsSpec extends AnyFunSuite {
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     val rounds = 4
     def chain(start: Long, stepAdd: Long): Seq[Long] = {
-      val cp = graft.operators.Checkpointing.truncator(spark,
-        enabled = true, Some(dir.toString))
+      val cp = graft.operators.Checkpointing.truncator(spark)
       var df = spark.range(start, start + 10).toDF("x")
       for (_ <- 1 to rounds) {
         barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
@@ -280,23 +307,19 @@ class CurationOpsSpec extends AnyFunSuite {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(chain(0L, 1L))
-    val fb = Future(chain(100L, 2L))
-    val a = Await.result(fa, 120.seconds)
-    val b = Await.result(fb, 120.seconds)
+    val (a, b) = org.apache.spark.TestCheckpointDir
+      .withCheckpointDir(spark.sparkContext, dir.toString) {
+        val fa = Future(chain(0L, 1L))
+        val fb = Future(chain(100L, 2L))
+        (Await.result(fa, 120.seconds), Await.result(fb, 120.seconds))
+      }
     assert(a == (0L until 10L).map(_ + rounds * 1L).sorted)
     assert(b == (100L until 110L).map(_ + rounds * 2L).sorted)
     // and superseded rounds were still cleaned: each chain retains only
     // its last round (2 rdd-* dirs total), not one per round (8)
-    val walk = java.nio.file.Files.walk(dir)
-    val rddDirs =
-      try walk.iterator().asScala.count(_.getFileName.toString.startsWith("rdd-"))
-      finally walk.close()
+    val rddDirs = rddDirsUnder(dir)
     assert(rddDirs <= 2, s"expected ≤2 live rdd-* dirs, found $rddDirs")
-    val cleanupWalk = java.nio.file.Files.walk(dir)
-    try cleanupWalk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
-    finally cleanupWalk.close()
+    deleteTree(dir)
   }
 
   test("Truncator.rolling: local mode unpersists superseded rounds") {

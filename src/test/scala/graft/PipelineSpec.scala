@@ -908,8 +908,11 @@ class PipelineSpec extends AnyFunSuite {
     val local = Dedup.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dir = SparkTestSession.tempDir("graft-cc-cp")
-    val reliable = Dedup.connectedComponents(edges, checkpointDir = Some(dir.toString))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val reliable = org.apache.spark.TestCheckpointDir
+      .withCheckpointDir(spark.sparkContext, dir.toString) {
+        Dedup.connectedComponents(edges)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
     assert(reliable == local)
     // the fault-tolerant path actually wrote RDD checkpoints to the dir
     val wrote = java.nio.file.Files.walk(dir).filter(_.toFile.isFile).count()

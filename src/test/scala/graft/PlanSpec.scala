@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions — the 100 TB design gate (SURVEY.md §4 /
@@ -25,6 +28,29 @@ class PlanSpec extends AnyFunSuite {
     optimized(name).queryExecution.executedPlan.collect {
       case e: Exchange => e
     }.size
+
+  /** The executed plans of the `localCheckpoint` actions `body` runs,
+    * in order. An iterative operator's per-round shape lives in its
+    * round's truncation job — the frame it returns only reads the
+    * checkpoint — so per-round plan pins read these.
+    */
+  def truncationPlans(body: => Any): Seq[String] = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution,
+                    durationNs: Long): Unit =
+        if (funcName == "localCheckpoint")
+          plans.synchronized(plans += qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      bridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.synchronized(plans.toSeq)
+  }
 
   test("sim12: the corpus-probes-corpus pair stage keeps pinned parallelism") {
     // the r20 root-cause of the five BENCH_NOTES "sim12 transient"
@@ -446,13 +472,13 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("Window"), plan)
     // the per-iteration shape is truncated out of the final plan by the
-    // checkpoint — pin it on an un-checkpointed single iteration: the
-    // contribution sum must combine map-side before the dst exchange
+    // checkpoint — pin it on the single iteration's truncation job (the
+    // last localCheckpoint): the contribution sum must combine map-side
+    // before the dst exchange
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L)).toDF("src", "dst")
-    val iterPlan = graft.operators.Graph
-      .pageRank(edges, iterations = 1, checkpoint = false)
-      .queryExecution.executedPlan.toString
+    val iterPlan = truncationPlans(graft.operators.Graph
+      .pageRank(edges, iterations = 1)).last
     assert(iterPlan.contains("partial_sum"), iterPlan)
     assert(!iterPlan.contains("Window"), iterPlan)
   }
@@ -461,14 +487,13 @@ class PlanSpec extends AnyFunSuite {
     val plan = planOf("gr08_pagerank_dangling")
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("Window"), plan)
-    // un-checkpointed single iteration: the dangling scalar must ride
-    // a broadcast (never a shuffle), contributions partial-combine,
+    // the single iteration's truncation job: the dangling scalar must
+    // ride a broadcast (never a shuffle), contributions partial-combine,
     // and nothing joins cartesian
     import spark.implicits._
     val edges = Seq((1L, 5L), (2L, 5L), (3L, 5L)).toDF("src", "dst")
-    val iterPlan = graft.operators.Graph
-      .pageRankClassic(edges, iterations = 1, checkpoint = false)
-      .queryExecution.executedPlan.toString
+    val iterPlan = truncationPlans(graft.operators.Graph
+      .pageRankClassic(edges, iterations = 1)).last
     assert(iterPlan.contains("partial_sum"), iterPlan)
     assert(iterPlan.contains("BroadcastNestedLoopJoin") ||
       iterPlan.contains("BroadcastExchange"), iterPlan)
@@ -1062,13 +1087,12 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     // the per-round shape is truncated out of the gate plan by the
-    // checkpoint (the gr01 pattern) — pin it on an un-checkpointed
-    // single round: the vote argmax must combine map-side
+    // checkpoint (the gr01 pattern) — pin it on the single round's
+    // truncation job: the vote argmax must combine map-side
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val roundPlan = graft.operators.Graph
-      .labelPropagation(edges, rounds = 1, checkpoint = false)
-      .queryExecution.executedPlan.toString
+    val roundPlan = truncationPlans(graft.operators.Graph
+      .labelPropagation(edges, rounds = 1)).last
     assert(roundPlan.contains("partial_max"), roundPlan)
     assert(!roundPlan.contains("Window"), roundPlan)
   }
@@ -1099,22 +1123,24 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("ta24: BPE round = word-local pair math + 1-row TakeOrdered winner broadcast, no window") {
-    // per-round shape on an un-checkpointed single round (the gr01
+    // per-round shape on a single round's truncation jobs (the gr01
     // pattern): the winner is a TakeOrdered over the (a,b) aggregate
     // and rides a broadcast back onto the word-type table; the rewrite
     // fold is a narrow projection — no window, no position self-join
     import spark.implicits._
     val docs = Seq((1L, "banana band bans")).toDF("doc_id", "text")
-    // rounds=1 returns the round-1 winner plan itself (the round-2
-    // winner plan would contain the rewrite's broadcast join, but it
-    // rides the checkpoint boundary; the rewrite fold's correctness is
-    // pinned behaviorally in CurationOpsSpec)
-    val plan = graft.operators.TextAnalysis
-      .bpeMerges(docs, "text", rounds = 1, checkpoint = false)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), plan)
-    assert(plan.contains("TakeOrderedAndProject"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
+    // truncations in order: the word-type table, then round 1's winner
+    // and its rewrite (the rewrite fold's correctness is pinned
+    // behaviorally in CurationOpsSpec)
+    val plans = truncationPlans(graft.operators.TextAnalysis
+      .bpeMerges(docs, "text", rounds = 1))
+    assert(plans.size == 3, plans.mkString("\n"))
+    val Seq(winner, rewrite) = plans.drop(1)
+    assert(winner.contains("TakeOrderedAndProject"), winner)
+    for (plan <- Seq(winner, rewrite)) {
+      assert(!plan.contains("Window"), plan)
+      assert(!plan.contains("CartesianProduct"), plan)
+    }
   }
 
   test("sim10: random projection is a pure narrow pass — one Exchange (the sort), no join, no window") {
