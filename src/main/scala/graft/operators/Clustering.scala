@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import Similarity.{Embedding, VecId, dec6}
+
 /** Embedding-space clustering (SURVEY.md §2c extension surface): the
   * corpus-partitioning step of curriculum bucketing, topic-balanced
   * sampling, and IVF index builds.
@@ -23,6 +25,9 @@ import org.apache.spark.sql.types._
   * full-width exchange is |corpus| rows keyed by id. The update step
   * shuffles (cluster, pos) partial sums — k·dim rows after map-side
   * combine.
+  *
+  * Input: every operator here reads the fixed vector schema
+  * `(vec_id, embedding)` documented on [[Similarity]].
   */
 object Clustering {
 
@@ -42,15 +47,13 @@ object Clustering {
     * residue class — deterministic, engine-portable, well spread for
     * dense id spaces, and requiring no driver-side action.
     */
-  def seedCentroids(df: DataFrame, k: Int,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
+  def seedCentroids(df: DataFrame, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val seedIds = df.groupBy((col(idCol) % k).as("_b"))
-      .agg(min(col(idCol)).as("_cid"))
+    val seedIds = df.groupBy((col(VecId) % k).as("_b"))
+      .agg(min(col(VecId)).as("_cid"))
       .select(col("_cid"))
-    df.join(broadcast(seedIds), col(idCol) === col("_cid"))
-      .select(col("_cid").as("cluster"), Similarity.dec6(col(vecCol)).as("cvec"))
+    df.join(broadcast(seedIds), col(VecId) === col("_cid"))
+      .select(col("_cid").as("cluster"), dec6(col(Embedding)).as("cvec"))
   }
 
   /** All ≤ k (cluster, cvec) seeds folded into ONE broadcast row,
@@ -90,13 +93,11 @@ object Clustering {
     * zero-shuffle narrow pass: the ≤ k seeds ride ONE broadcast row
     * and each vector folds over them in-register ([[nearestSeed]]).
     */
-  def assignToSeeds(df: DataFrame, k: Int,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    val sa = seedArray(seedCentroids(df, k, idCol, vecCol))
-    df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
+  def assignToSeeds(df: DataFrame, k: Int): DataFrame = {
+    val sa = seedArray(seedCentroids(df, k))
+    df.select(col(VecId), dec6(col(Embedding)).as("_x"))
       .crossJoin(broadcast(sa))
-      .select(col(idCol), nearestSeed(col("_x")).getField("_c").as("cluster"))
+      .select(col(VecId), nearestSeed(col("_x")).getField("_c").as("cluster"))
   }
 
   /** Two-level variant of [[assignToSeeds]] for corpus-scaled k — the
@@ -126,10 +127,8 @@ object Clustering {
     * the corpus pass is one zero-exchange narrow fold over ONE
     * broadcast row of nested (leader, member-seeds) groups.
     */
-  def assignToSeedsTwoLevel(df: DataFrame, k: Int,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame = {
-    val seeds = seedCentroids(df, k, idCol, vecCol)
+  def assignToSeedsTwoLevel(df: DataFrame, k: Int): DataFrame = {
+    val seeds = seedCentroids(df, k)
       .select(col("cluster").cast(LongType).as("cluster"), col("cvec"))
       .localCheckpoint()
     val g = math.max(1, math.round(math.sqrt(k.toDouble)).toInt)
@@ -194,10 +193,10 @@ object Clustering {
           struct(d.as("_d"), s.getField("cluster").as("_c")))
           .otherwise(acc)
       }).getField("_c")
-    df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
+    df.select(col(VecId), dec6(col(Embedding)).as("_x"))
       .crossJoin(broadcast(groups))
       .withColumn("_b2", best2)
-      .select(col(idCol), assign.as("cluster"))
+      .select(col(VecId), assign.as("cluster"))
   }
 
   /** One Lloyd update, summarized exactly: per cluster, the member
@@ -229,11 +228,9 @@ object Clustering {
     * sort_array shape shipped all N·k scored pairs through the
     * id-keyed exchange (7.7 GB at the 100× rehearsal scale).
     */
-  def silhouetteStats(df: DataFrame, k: Int,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
+  def silhouetteStats(df: DataFrame, k: Int): DataFrame = {
     require(k >= 2, "silhouette needs at least 2 clusters")
-    val sa = seedArray(seedCentroids(df, k, idCol, vecCol))
+    val sa = seedArray(seedCentroids(df, k))
     val nullP = struct(lit(null).cast(DecimalType(30, 12)).as("d"),
       lit(-1L).as("c"))
     // ties: clusters iterate ascending and the comparisons are strict,
@@ -253,9 +250,9 @@ object Clustering {
             struct(a0.as("a"), cand.as("b")))
           .otherwise(acc)
       })
-    val ranked = df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
+    val ranked = df.select(col(VecId), dec6(col(Embedding)).as("_x"))
       .crossJoin(broadcast(sa))
-      .select(col(idCol), best2.as("_near2"))
+      .select(col(VecId), best2.as("_near2"))
     val a = col("_near2")("a")("d")
     val b = col("_near2")("b")("d")
     val s = when(b === lit(0).cast(DecimalType(30, 12)), lit(0.0))
@@ -270,12 +267,10 @@ object Clustering {
           .as("mean_silhouette"))
   }
 
-  def lloydUpdateStats(df: DataFrame, k: Int,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val assigned = assignToSeeds(df, k, idCol, vecCol)
-    val members = df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
-      .join(assigned, idCol)
+  def lloydUpdateStats(df: DataFrame, k: Int): DataFrame = {
+    val assigned = assignToSeeds(df, k)
+    val members = df.select(col(VecId), dec6(col(Embedding)).as("_x"))
+      .join(assigned, VecId)
     val posSums = members
       .select(col("cluster"), posexplode(col("_x")))
       .groupBy(col("cluster"), col("pos"))
@@ -320,26 +315,24 @@ object Clustering {
     * 2) the doubled scan is cheaper than materialization, and the
     * plan grows by one assign + update per round.
     */
-  def lloydRounds(df: DataFrame, k: Int, rounds: Int,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
+  def lloydRounds(df: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one round")
-    val e = df.select(col(idCol), Similarity.dec6(col(vecCol)).as("_x"))
+    val e = df.select(col(VecId), dec6(col(Embedding)).as("_x"))
     // zero-shuffle narrow argmin (see nearestSeed): the old
     // crossJoin + min(struct) shape both SORTED the N·k expansion in
     // every map task (SortAggregate spill at 100×) and exchanged one
     // row per vector per round — this exchanges nothing
     def assignTo(cent: DataFrame): DataFrame =
       e.crossJoin(broadcast(seedArray(cent)))
-        .select(col(idCol), nearestSeed(col("_x")).as("_b"))
-        .select(col(idCol), col("_b._c").as("cluster"), col("_b._d").as("_d"))
+        .select(col(VecId), nearestSeed(col("_x")).as("_b"))
+        .select(col(VecId), col("_b._c").as("cluster"), col("_b._d").as("_d"))
     def summarize(a: DataFrame, round: Int): DataFrame =
       a.groupBy(col("cluster"))
         .agg(count(lit(1)).as("n_members"), sum(col("_d")).as("_i"))
         .select(lit(round.toLong).as("round"), col("cluster"),
           col("n_members"), col("_i").cast(DoubleType).as("inertia"))
     def updated(a: DataFrame): DataFrame =
-      e.join(a.select(col(idCol), col("cluster")), idCol)
+      e.join(a.select(col(VecId), col("cluster")), VecId)
         .select(col("cluster"), posexplode(col("_x")))
         .groupBy(col("cluster"), col("pos"))
         .agg(sum(col("col")).as("_sp"), count(lit(1)).as("_n"))
@@ -352,7 +345,7 @@ object Clustering {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("_m")))),
           s => s.getField("_m")).as("cvec"))
     val out = (2 to rounds).foldLeft {
-      val a1 = assignTo(seedCentroids(df, k, idCol, vecCol))
+      val a1 = assignTo(seedCentroids(df, k))
       (summarize(a1, 1), a1)
     } { case ((acc, prev), r) =>
       val ar = assignTo(updated(prev))
@@ -387,13 +380,11 @@ object Clustering {
     * keeps round r from re-evaluating rounds 1..r−1 (the
     * [[Graph.pageRank]] discipline).
     */
-  def farthestPointSeeds(df: DataFrame, k: Int,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
+  def farthestPointSeeds(df: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     val cp = Checkpointing.truncator(df.sparkSession)
-    val pts = cp(df.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast(LongType).as("_id"), Similarity.dec6(col(vecCol)).as("_x")))
+    val pts = cp(df.filter(col(Embedding).isNotNull)
+      .select(col(VecId).cast(LongType).as("_id"), dec6(col(Embedding)).as("_x")))
     var centers = cp.rolling(pts.orderBy("_id").limit(1)
       .select(lit(0).as("step"), col("_id").as("center_id"),
         lit(0.0).as("radius"), col("_x").as("_cv")))

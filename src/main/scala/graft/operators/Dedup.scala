@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import Similarity.{Embedding, VecId}
+
 /** Deduplication operators for large-scale corpus curation (SURVEY.md
   * §2c): exact, content-hash, MinHash+LSH banding, SimHash.
   *
@@ -852,20 +854,21 @@ object Dedup {
     * lower id) are engine-portable: the struct comparison equals
     * `ORDER BY score DESC, id ASC` wherever the score doubles are
     * bit-identical.
+    *
+    * Fixed columns: `clusters` is (doc_id, cluster), `scores` is
+    * (doc_id, quality), e.g. [[TextAnalysis.qualityScore]] over doc_id.
     */
-  def resolveClusters(clusters: DataFrame, scores: DataFrame,
-                      idCol: String = "doc_id",
-                      clusterCol: String = "cluster",
-                      scoreCol: String = "quality"): DataFrame =
+  def resolveClusters(clusters: DataFrame, scores: DataFrame): DataFrame =
     // LEFT join: a member with no score row still counts toward
     // n_members (and can still survive — struct-max ranks its NULL
     // score below every scored member, ties broken by lowest id)
-    clusters.join(scores.select(col(idCol), col(scoreCol)), Seq(idCol), "left")
-      .groupBy(col(clusterCol))
+    clusters
+      .join(scores.select(col("doc_id"), col("quality")), Seq("doc_id"), "left")
+      .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_members"),
-        max(struct(col(scoreCol).as("_s"), (-col(idCol)).as("_negid")))
+        max(struct(col("quality").as("_s"), (-col("doc_id")).as("_negid")))
           .as("_best"))
-      .select(col(clusterCol), (-col("_best._negid")).as("survivor_id"),
+      .select(col("cluster"), (-col("_best._negid")).as("survivor_id"),
         col("_best._s").as("survivor_score"), col("n_members"))
 
   /** Pseudo-random ±1 hyperplane sign for (plane `j`, dimension `p`,
@@ -915,11 +918,11 @@ object Dedup {
     * The corpus-sum frame is one tiny broadcast (dims×16 B), never a
     * shuffle of the vectors.
     */
-  private[graft] def embeddingBlocks(emb: DataFrame, sketchBits: Int,
-                                     idCol: String = "vec_id",
-                                     vecCol: String = "embedding"): DataFrame = {
-    val e = emb.filter(col(vecCol).isNotNull && size(col(vecCol)) >= sketchBits)
-      .select(col(idCol).as("vid"), col(vecCol).as("v"))
+  private[graft] def embeddingBlocks(emb: DataFrame,
+                                     sketchBits: Int): DataFrame = {
+    val e = emb
+      .filter(col(Embedding).isNotNull && size(col(Embedding)) >= sketchBits)
+      .select(col(VecId).as("vid"), col(Embedding).as("v"))
     val dimSums = e.select(posexplode(col("v")))
       .select(col("pos"),
         col("col").cast(DoubleType).cast(DecimalType(12, 6)).as("x"))
@@ -972,14 +975,14 @@ object Dedup {
     * Scale shape: candidate generation is a hash-partitioned equi-join
     * on the block key — never all-pairs. Block-boundary misses are the
     * usual LSH recall trade-off; widen recall by probing multiple
-    * sketches (cf. Similarity.lshBuckets), not by widening the join.
+    * sketches (cf. Similarity.lshTables), not by widening the join.
     */
-  def embeddingNearDup(emb: DataFrame, k: Int, sketchBits: Int = 8,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val e = emb.filter(col(vecCol).isNotNull && size(col(vecCol)) >= sketchBits)
-      .select(col(idCol).as("vid"), col(vecCol).as("v"))
-    val b = embeddingBlocks(emb, sketchBits, idCol, vecCol)
+  def embeddingNearDup(emb: DataFrame, k: Int,
+                       sketchBits: Int = 8): DataFrame = {
+    val e = emb
+      .filter(col(Embedding).isNotNull && size(col(Embedding)) >= sketchBits)
+      .select(col(VecId).as("vid"), col(Embedding).as("v"))
+    val b = embeddingBlocks(emb, sketchBits)
     val cand = b.as("a").join(b.as("b"),
         col("a.bk") === col("b.bk") && col("a.vid") < col("b.vid"))
       .select(col("a.vid").as("va"), col("b.vid").as("vb"),
@@ -1383,7 +1386,9 @@ object Dedup {
     * duplicate iff some LOWER-ID vector in the same cluster has exact-
     * decimal cosine ≥ `tau`; `dup_of` names the smallest such id (the
     * greedy keep-first-by-id policy, deterministic on any engine).
-    * Output: (id, cluster, dup_of, keep) for every input vector.
+    * Input: the fixed vector schema `(vec_id, embedding)` documented on
+    * [[Similarity]]. Output: (vec_id, cluster, dup_of, keep) for every
+    * input vector.
     *
     * Cross-engine determinism: the assignment is [[Clustering
     * .assignToSeeds]] (hash-picked seeds, exact decimal distances,
@@ -1404,8 +1409,6 @@ object Dedup {
     * switch note in the body.
     */
   def semanticDedup(emb: DataFrame, k: Int, tau: Double,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding",
                     twoLevelAssign: Boolean = false): DataFrame = {
     require(k > 0 && tau > 0.0, "need k > 0 and tau > 0")
     def dot(x: Column, y: Column): Column =
@@ -1423,10 +1426,11 @@ object Dedup {
     // two-level path explicitly.
     val assigned =
       if (Similarity.decideTwoLevel("semanticDedup", twoLevelAssign, k))
-        Clustering.assignToSeedsTwoLevel(emb, k, idCol, vecCol)
-      else Clustering.assignToSeeds(emb, k, idCol, vecCol)
-    val e = emb.select(col(idCol).as("_id"), Similarity.dec6(col(vecCol)).as("_x"))
-      .join(assigned.select(col(idCol).as("_id"), col("cluster")), "_id")
+        Clustering.assignToSeedsTwoLevel(emb, k)
+      else Clustering.assignToSeeds(emb, k)
+    val e = emb
+      .select(col(VecId).as("_id"), Similarity.dec6(col(Embedding)).as("_x"))
+      .join(assigned.select(col(VecId).as("_id"), col("cluster")), "_id")
       .withColumn("_n", dot(col("_x"), col("_x")).cast(DoubleType))
     val a = e.select(col("cluster"), col("_id").as("_ida"),
       col("_x").as("_xa"), col("_n").as("_na"))
@@ -1438,7 +1442,7 @@ object Dedup {
         sqrt(col("_na") * col("_nb")) >= tau)
       .groupBy(col("_idb")).agg(min(col("_ida")).as("dup_of"))
     e.join(dups, col("_id") === col("_idb"), "left")
-      .select(col("_id").as(idCol), col("cluster"), col("dup_of"),
+      .select(col("_id").as(VecId), col("cluster"), col("dup_of"),
         col("dup_of").isNull.as("keep"))
   }
 }

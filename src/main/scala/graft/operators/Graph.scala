@@ -406,18 +406,15 @@ object Graph {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val cp = Checkpointing.truncator(edges.sparkSession)
-    def degrees(und: DataFrame): DataFrame = und
-      .select(explode(array(col("a"), col("b"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
     var und = cp.rolling(undirectedEdges(edges))
     for (_ <- 1 to rounds) {
-      val keep = degrees(und).filter(col("deg") >= k).select(col("node"))
+      val keep = undirectedDegrees(und).filter(col("deg") >= k)
       und = cp.rolling(und
-        .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
+        .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b")))
     }
-    degrees(und)
+    undirectedDegrees(und).select(col("v").as("node"), col("deg"))
   }
 
   /** Local clustering coefficient per node: c(v) = 2·tri(v) /

@@ -20,13 +20,26 @@ import org.apache.spark.sql.types._
   * size — so no top-k stage here ships more than k pairs per
   * (group × map partition).
   *
-  * ID CONTRACT: every `*TopK` method requires `idCol` to be an
-  * integral numeric column — ids ride through the bounded top-k
-  * aggregate as `bigint`, and output `qid`/`cid` are `bigint`. A
-  * non-numeric id would cast to null and those rows would be silently
-  * dropped; [[requireIntegralId]] rejects that at plan time instead.
+  * INPUT SCHEMA: every vector operator here, and the vector operators
+  * of [[Clustering]], [[Dedup]] and the streaming vector-log jobs, reads
+  * one fixed input schema, `(vec_id integral, embedding
+  * array<float|double>)` — the columns [[VecId]] and [[Embedding]]. No
+  * operator takes a column name; a caller whose frame names them
+  * otherwise re-aliases it first.
+  *
+  * ID CONTRACT: `vec_id` must be an integral numeric column — ids ride
+  * through the bounded top-k aggregate as `bigint`, and output
+  * `qid`/`cid` are `bigint`. A non-numeric id would cast to null and
+  * those rows would be silently dropped; [[requireIntegralId]] rejects
+  * that at plan time instead.
   */
 object Similarity {
+
+  /** The id column of every vector input (see ID CONTRACT). */
+  val VecId = "vec_id"
+
+  /** The vector column of every vector input. */
+  val Embedding = "embedding"
 
   /** A vector column as array<double>: the built-in array Cast, per
     * element exactly x.cast(double). A compiled widening kernel did not
@@ -54,10 +67,10 @@ object Similarity {
         s"through the bounded top-k aggregate as bigint; got $dt")
   }
 
-  private def requireIntegralIds(queries: DataFrame, candidates: DataFrame,
-                                 idCol: String): Unit = {
-    requireIntegralId(queries, idCol)
-    requireIntegralId(candidates, idCol)
+  private def requireIntegralIds(queries: DataFrame,
+                                 candidates: DataFrame): Unit = {
+    requireIntegralId(queries, VecId)
+    requireIntegralId(candidates, VecId)
   }
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -151,7 +164,6 @@ object Similarity {
     * doubles), so results stay bit-identical to the per-pair form.
     */
   def cosineTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-                 idCol: String = "vec_id", vecCol: String = "embedding",
                  exact: Boolean = false): DataFrame = {
     // top-k via the bounded TopKAgg buffer, NOT a per-query row_number
     // window: the window shape ships all N candidate scores to one task
@@ -159,7 +171,7 @@ object Similarity {
     // carries ≤ k pairs per (query × partition) — bounded by k at any
     // corpus size. Ties (score, then cid asc) identical to the window's
     // orderBy(sim.desc, cid), so output rows are unchanged.
-    scoredPairs(queries, candidates, idCol, vecCol, exact)
+    scoredPairs(queries, candidates, exact)
       .groupBy("qid")
       .agg(TopKAgg.top_k(col("sim"), col("cid"), k, ascending = false)
         .as("_tk"))
@@ -177,17 +189,16 @@ object Similarity {
     * stay bit-identical to the per-pair forms.
     */
   private def scoredPairs(queries: DataFrame, candidates: DataFrame,
-                          idCol: String, vecCol: String,
                           exact: Boolean): DataFrame = {
-    requireIntegralIds(queries, candidates, idCol)
+    requireIntegralIds(queries, candidates)
     import graft.functions.VecKernels.{vec_dot_d, vec_dot_dec}
 
     def side(df: DataFrame, id: String, v: String, n: String): DataFrame =
       if (exact)
-        df.select(col(idCol).cast(LongType).as(id), dec6(col(vecCol)).as(v))
+        df.select(col(VecId).cast(LongType).as(id), dec6(col(Embedding)).as(v))
           .withColumn(n, vec_dot_dec(col(v), col(v)).cast(DoubleType))
       else
-        df.select(col(idCol).cast(LongType).as(id), dbl(col(vecCol)).as(v))
+        df.select(col(VecId).cast(LongType).as(id), dbl(col(Embedding)).as(v))
           .withColumn(n, sqrt(vec_dot_d(col(v), col(v))))
 
     val q = side(queries, "qid", "qv", "qn")
@@ -217,9 +228,8 @@ object Similarity {
     * (bit-identical doubles ⇒ identical ≥ decisions in any engine).
     */
   def cosineRange(queries: DataFrame, candidates: DataFrame, tau: Double,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
                   exact: Boolean = false): DataFrame =
-    scoredPairs(queries, candidates, idCol, vecCol, exact)
+    scoredPairs(queries, candidates, exact)
       .filter(col("sim") >= tau)
 
   /** Diversity-aware re-ranking: greedy Maximal Marginal Relevance
@@ -246,17 +256,15 @@ object Similarity {
     * bounded-exchange top-s (or any ANN shortlist fed in its place).
     */
   def mmrTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-              shortlist: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+              shortlist: Int): DataFrame = {
     require(k >= 1 && shortlist >= k,
       s"need 1 <= k <= shortlist, got k=$k shortlist=$shortlist")
-    requireIntegralIds(queries, candidates, idCol)
+    requireIntegralIds(queries, candidates)
     import graft.functions.VecKernels.vec_dot_dec
 
-    val rel = cosineTopK(queries, candidates, shortlist, idCol, vecCol,
-      exact = true)
+    val rel = cosineTopK(queries, candidates, shortlist, exact = true)
     val cside = candidates
-      .select(col(idCol).cast(LongType).as("cid"), dec6(col(vecCol)).as("cv"))
+      .select(col(VecId).cast(LongType).as("cid"), dec6(col(Embedding)).as("cv"))
       .withColumn("cn", vec_dot_dec(col("cv"), col("cv")).cast(DoubleType))
     // shortlist members with vectors: Q×s rows — broadcastable at any
     // corpus size, so the pair join below never shuffles the corpus
@@ -303,12 +311,12 @@ object Similarity {
     * candidates never shuffle; the squared-distance fold runs in array
     * order (deterministic IEEE).
     */
-  def l2TopK(queries: DataFrame, candidates: DataFrame, k: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    requireIntegralIds(queries, candidates, idCol)
+  def l2TopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
+    requireIntegralIds(queries, candidates)
     import graft.functions.VecKernels.vec_sqdist_d
-    val q = queries.select(col(idCol).cast(LongType).as("qid"), dbl(col(vecCol)).as("qv"))
-    val c = candidates.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
+    val q = queries.select(col(VecId).cast(LongType).as("qid"),
+      dbl(col(Embedding)).as("qv"))
+    val c = candidates.select(col(VecId).as("cid"), dbl(col(Embedding)).as("cv"))
     // bounded map-side top-k (see cosineTopK): ascending — smallest
     // distance first; ties by cid match the window's orderBy(dist, cid)
     c.join(broadcast(q), col("qid") =!= col("cid"))
@@ -406,25 +414,26 @@ object Similarity {
     * corpus passes per iteration.
     */
   def pqTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-             m: Int = 16, codes: Int = 32, shortlist: Int = 100,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+             m: Int = 16, codes: Int = 32, shortlist: Int = 100): DataFrame = {
     require(m >= 1 && codes >= 2 && shortlist >= k,
       "need m >= 1, codes >= 2, shortlist >= k")
-    requireIntegralIds(queries, candidates, idCol)
+    requireIntegralIds(queries, candidates)
     import graft.functions.VecKernels.vec_sqdist_d
     def l2(a: Column, b: Column) = vec_sqdist_d(a, b)
     def subSplit(v: Column): Column = subSplitExplode(v, m)
 
-    val cand = candidates.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
-    val q = queries.select(col(idCol).cast(LongType).as("qid"), dbl(col(vecCol)).as("qv"))
+    val cand =
+      candidates.select(col(VecId).as("cid"), dbl(col(Embedding)).as("cv"))
+    val q = queries.select(col(VecId).cast(LongType).as("qid"),
+      dbl(col(Embedding)).as("qv"))
 
     // deterministic per-subspace codebook from real corpus vectors
     val seedIds = candidates
-      .groupBy(pmod(xxhash64(col(idCol)), lit(codes)).as("_code"))
-      .agg(min(col(idCol)).as("_sid"))
+      .groupBy(pmod(xxhash64(col(VecId)), lit(codes)).as("_code"))
+      .agg(min(col(VecId)).as("_sid"))
     val cents = candidates
-      .join(broadcast(seedIds), col(idCol) === col("_sid"))
-      .select(col("_code"), subSplit(dbl(col(vecCol))))
+      .join(broadcast(seedIds), col(VecId) === col("_sid"))
+      .select(col("_code"), subSplit(dbl(col(Embedding))))
       .withColumnRenamed("pos", "sub").withColumnRenamed("col", "cvec")
 
     // encode: per (vector, subspace) the argmin-distance code as a
@@ -519,13 +528,12 @@ object Similarity {
   def ivfPqTopK(queries: DataFrame, candidates: DataFrame, k: Int,
                 nlist: Int = 16, nprobe: Int = 8,
                 m: Int = 16, codes: Int = 32, shortlist: Int = 100,
-                twoLevelAssign: Boolean = false,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                twoLevelAssign: Boolean = false): DataFrame = {
     require(nprobe >= 1 && nprobe <= nlist && shortlist >= k,
       "need 1 <= nprobe <= nlist and shortlist >= k")
     ivfPqSearch(queries,
-      ivfPqBuild(candidates, nlist, m, codes, twoLevelAssign, idCol, vecCol),
-      candidates, k, nprobe, shortlist, m, idCol, vecCol)
+      ivfPqBuild(candidates, nlist, m, codes, twoLevelAssign),
+      candidates, k, nprobe, shortlist, m)
   }
 
   /** A built IVF-PQ index — three plain relational tables, the
@@ -578,13 +586,12 @@ object Similarity {
     */
   def ivfPqBuild(candidates: DataFrame,
                  nlist: Int = 16, m: Int = 16, codes: Int = 32,
-                 twoLevelAssign: Boolean = false,
-                 idCol: String = "vec_id",
-                 vecCol: String = "embedding"): IvfPqIndex = {
-    requireIntegralId(candidates, idCol)
+                 twoLevelAssign: Boolean = false): IvfPqIndex = {
+    requireIntegralId(candidates, VecId)
     def subSplit(v: Column): Column = subSplitExplode(v, m)
 
-    val cand = candidates.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
+    val cand =
+      candidates.select(col(VecId).as("cid"), dbl(col(Embedding)).as("cv"))
 
     // coarse cells: nlist corpus vectors picked in-plan by hash bucket,
     // ALWAYS materialized (the ivfBuild centroid precedent): coarse is
@@ -594,9 +601,9 @@ object Similarity {
     // ivfBuild trap)
     val coarse = candidates
       .join(broadcast(candidates
-        .groupBy(pmod(xxhash64(col(idCol)), lit(nlist)).as("cell"))
-        .agg(min(col(idCol)).as("_sid"))), col(idCol) === col("_sid"))
-      .select(col("cell"), dbl(col(vecCol)).as("cellv"))
+        .groupBy(pmod(xxhash64(col(VecId)), lit(nlist)).as("cell"))
+        .agg(min(col(VecId)).as("_sid"))), col(VecId) === col("_sid"))
+      .select(col("cell"), dbl(col(Embedding)).as("cellv"))
       .localCheckpoint()
 
     // assign candidates to their nearest cell via the per-row fold
@@ -618,8 +625,8 @@ object Similarity {
 
     // one shared PQ codebook over residuals, seeded by hash bucket
     val seedIds = candidates
-      .groupBy(pmod(xxhash64(col(idCol), lit(7)), lit(codes)).as("_code"))
-      .agg(min(col(idCol)).as("_pid"))
+      .groupBy(pmod(xxhash64(col(VecId), lit(7)), lit(codes)).as("_code"))
+      .agg(min(col(VecId)).as("_pid"))
     val cents = assigned
       .join(broadcast(seedIds), col("cid") === col("_pid"))
       .select(col("_code"), subSplit(col("rv")))
@@ -639,7 +646,7 @@ object Similarity {
     * probed cell from the query's residual w.r.t. THAT cell's centroid,
     * score only the probed cells' candidates over their integer codes,
     * and exact-re-rank the `shortlist` against `rerank` — the raw
-    * corpus table (idCol, vecCol), which is NOT part of the index (a
+    * corpus table (vec_id, embedding), which is NOT part of the index (a
     * production store keeps codes hot and fetches full vectors only
     * for the ≤ shortlist·nq re-rank rows). All quantizer artifacts are
     * broadcast-tiny; both argmins collapse map-side.
@@ -654,11 +661,8 @@ object Similarity {
     */
   def ivfPqSearch(queries: DataFrame, index: IvfPqIndex, rerank: DataFrame,
                   k: Int, nprobe: Int = 8, shortlist: Int = 100,
-                  m: Int = -1,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame =
-    ivfPqServe(queries, index, rerank, None, k, nprobe, shortlist, m,
-      idCol, vecCol)
+                  m: Int = -1): DataFrame =
+    ivfPqServe(queries, index, rerank, None, k, nprobe, shortlist, m)
 
   /** [[ivfPqSearch]] against a STALE [[IvfPqIndex]] plus the unindexed
     * `delta` — the same union mitigation [[ivfSearchWithDelta]] ships
@@ -674,11 +678,8 @@ object Similarity {
   def ivfPqSearchWithDelta(queries: DataFrame, index: IvfPqIndex,
                            rerank: DataFrame, delta: DataFrame, k: Int,
                            nprobe: Int = 8, shortlist: Int = 100,
-                           m: Int = -1,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding"): DataFrame =
-    ivfPqServe(queries, index, rerank, Some(delta), k, nprobe, shortlist,
-      m, idCol, vecCol)
+                           m: Int = -1): DataFrame =
+    ivfPqServe(queries, index, rerank, Some(delta), k, nprobe, shortlist, m)
 
   /** Fold the append log back INTO a built [[IvfPqIndex]] —
     * [[ivfAbsorbDelta]]'s contract on the production architecture:
@@ -702,15 +703,14 @@ object Similarity {
     * same width guard the serve path ships.
     */
   def ivfPqAbsorbDelta(index: IvfPqIndex, delta: DataFrame,
-                       m: Int = -1, twoLevelAssign: Boolean = false,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): IvfPqIndex = {
-    requireIntegralId(delta, idCol)
+                       m: Int = -1,
+                       twoLevelAssign: Boolean = false): IvfPqIndex = {
+    requireIntegralId(delta, VecId)
     val mEff =
       if (m > 0) m
       else index.builtM.getOrElse(
         index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
-    val cand = delta.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
+    val cand = delta.select(col(VecId).as("cid"), dbl(col(Embedding)).as("cv"))
     val coarse = index.coarse
     // quantizer-sized count, never the corpus
     val encoded = ivfPqEncode(
@@ -723,10 +723,10 @@ object Similarity {
 
   private def ivfPqServe(queries: DataFrame, index: IvfPqIndex,
                          rerank: DataFrame, delta: Option[DataFrame],
-                         k: Int, nprobe: Int, shortlist: Int, m: Int,
-                         idCol: String, vecCol: String): DataFrame = {
+                         k: Int, nprobe: Int, shortlist: Int,
+                         m: Int): DataFrame = {
     require(shortlist >= k, "need shortlist >= k")
-    requireIntegralId(queries, idCol)
+    requireIntegralId(queries, VecId)
     val mEff =
       if (m > 0) m
       else index.builtM.getOrElse(
@@ -740,11 +740,11 @@ object Similarity {
     // the re-rank vector source: the indexed corpus, plus the appended
     // tail when serving a stale index — disjoint by contract, so the
     // union never double-scores a candidate
-    val cand0 = rerank.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))
+    val cand0 = rerank.select(col(VecId).as("cid"), dbl(col(Embedding)).as("cv"))
     val cand = delta.fold(cand0)(d => cand0.unionByName(
-      d.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv"))))
-    val q = queries.select(col(idCol).cast(LongType).as("qid"),
-      dbl(col(vecCol)).as("qv"))
+      d.select(col(VecId).as("cid"), dbl(col(Embedding)).as("cv"))))
+    val q = queries.select(col(VecId).cast(LongType).as("qid"),
+      dbl(col(Embedding)).as("qv"))
 
     // probe: per query the nprobe nearest cells. Only nlist rows per
     // query, but the bounded TopKAgg keeps even this stage map-side
@@ -809,7 +809,7 @@ object Similarity {
     // real defense against duplicate SCORING rows in `cand`.
     val rerankSet = delta.fold(short)(d => short.unionByName(
       broadcast(q.select(col("qid")))
-        .crossJoin(d.select(col(idCol).cast(LongType).as("cid")))
+        .crossJoin(d.select(col(VecId).cast(LongType).as("cid")))
         .filter(col("qid") =!= col("cid")))
       .distinct())
 
@@ -828,29 +828,6 @@ object Similarity {
       .orderBy("qid", "rank")
   }
 
-  /** Random-hyperplane LSH signature: `bits` sign-bits, bit j = sign of
-    * ⟨v, r_j⟩ where r_j components are deterministic ±1 from xxhash64 —
-    * no stored projection matrix, fully codegen'd. Hamming-close
-    * signatures ⇒ cosine-close vectors.
-    */
-  def lshSignature(vec: Column, bits: Int): Column =
-    // compiled kernel (r20): one table's signature = element 1 of
-    // lsh_sigs(vec, bits, 1) — table 0's planes hash with seed
-    // t·bits + j = j, exactly the lit(j) chain the HOF form used. The
-    // HOF form re-evaluated xxhash64 per (element, plane) inside an
-    // interpreted zip_with; the kernel hashes each (plane, position)
-    // once in compiled code. VecKernelsSpec pins value equality.
-    element_at(graft.functions.VecKernels.lsh_sigs(vec, bits, 1), 1)
-
-  /** Bucketed ANN: vectors grouped by LSH signature; probing joins on
-    * the signature (hash-partitioned equi-join), then exact cosine +
-    * top-k only within buckets.
-    */
-  def lshBuckets(df: DataFrame, bits: Int = 16,
-                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    df.select(col(idCol), col(vecCol),
-      lshSignature(col(vecCol), bits).as("bucket"))
-
   /** `tables` independent `bits`-bit signatures per vector (table t uses
     * hyperplanes seeded t*bits+j, so no plane is shared). One signature
     * of b bits has collision probability p^b for per-bit agreement p —
@@ -859,8 +836,7 @@ object Similarity {
     * standard recall lever for hyperplane LSH. Output one row per
     * (vector, table): (id, vec, table, bucket).
     */
-  def lshTables(df: DataFrame, bits: Int, tables: Int,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+  def lshTables(df: DataFrame, bits: Int, tables: Int): DataFrame =
     // compiled kernel (r20): the HOF formulation evaluated
     // xxhash64(t·bits + j, p) inside an interpreted zip_with — dim ×
     // bits × tables hash + branch expression-tree walks per ROW (4096
@@ -869,15 +845,16 @@ object Similarity {
     // projection order, same null-folds-to-zero planes — VecKernelsSpec
     // pins it) in one compiled pass; posexplode(pos → table) keeps the
     // output schema byte-identical.
-    df.select(col(idCol), col(vecCol),
-      posexplode(graft.functions.VecKernels.lsh_sigs(col(vecCol), bits, tables)))
+    df.select(col(VecId), col(Embedding),
+      posexplode(
+        graft.functions.VecKernels.lsh_sigs(col(Embedding), bits, tables)))
       .withColumnRenamed("pos", "table")
       .withColumnRenamed("col", "bucket")
 
   /** The PERSISTABLE LSH index asset — the sim16 build/serve split for
     * the hyperplane-LSH family, which until now existed only fused
     * ([[annTopK]] re-derives every corpus signature per query batch):
-    * (idCol, table, bucket), one 24-byte row per (vector, table) —
+    * (vec_id, table, bucket), one 24-byte row per (vector, table) —
     * raw vectors deliberately NOT included (the re-rank side lives
     * with the corpus, the IvfPqIndex contract). Because the
     * hyperplanes are derived from (table·bits + j) hashes rather than
@@ -890,12 +867,10 @@ object Similarity {
     * like [[bqAbsorbDelta]] (the encoder is stateless — new rows band
     * through the same definition and append).
     */
-  def lshBuild(df: DataFrame, bits: Int = 4, tables: Int = 16,
-               idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
-    requireIntegralId(df, idCol)
-    lshTables(df, bits, tables, idCol, vecCol)
-      .select(col(idCol).cast(LongType).as(idCol), col("table"),
+  def lshBuild(df: DataFrame, bits: Int = 4, tables: Int = 16): DataFrame = {
+    requireIntegralId(df, VecId)
+    lshTables(df, bits, tables)
+      .select(col(VecId).cast(LongType).as(VecId), col("table"),
         col("bucket"))
   }
 
@@ -912,20 +887,18 @@ object Similarity {
     * from, never what they are.
     */
   def lshSearch(queries: DataFrame, index: DataFrame, rerank: DataFrame,
-                k: Int, bits: Int = 4, tables: Int = 16,
-                idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
-    requireIntegralIds(queries, rerank, idCol)
-    val qb = lshTables(queries, bits, tables, idCol, vecCol)
-      .select(col(idCol).cast(LongType).as("qid"), col("table"),
+                k: Int, bits: Int = 4, tables: Int = 16): DataFrame = {
+    requireIntegralIds(queries, rerank)
+    val qb = lshTables(queries, bits, tables)
+      .select(col(VecId).cast(LongType).as("qid"), col("table"),
         col("bucket"))
-    val cb = index.select(col(idCol).as("cid"), col("table"), col("bucket"))
+    val cb = index.select(col(VecId).as("cid"), col("table"), col("bucket"))
     val pairs = qb.join(cb, Seq("table", "bucket"))
       .filter(col("qid") =!= col("cid"))
       .select("qid", "cid").distinct()
-    val qv = queries.select(col(idCol).cast(LongType).as("qid"),
-      col(vecCol).as("qv"))
-    val cv = rerank.select(col(idCol).as("cid"), col(vecCol).as("cv"))
+    val qv = queries.select(col(VecId).cast(LongType).as("qid"),
+      col(Embedding).as("qv"))
+    val cv = rerank.select(col(VecId).as("cid"), col(Embedding).as("cv"))
     presentTopK(pairs.join(broadcast(qv), "qid").join(cv, "cid")
       .select(col("qid"), col("cid").cast(LongType).as("cid"),
         cosine(col("qv"), col("cv")).as("sim")), k)
@@ -968,11 +941,10 @@ object Similarity {
   def ivfTopK(queries: DataFrame, candidates: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 8,
               twoLevelAssign: Boolean = false,
-              idCol: String = "vec_id", vecCol: String = "embedding",
               pinProbeParallelism: Boolean = false): DataFrame = {
-    requireIntegralIds(queries, candidates, idCol)
+    requireIntegralIds(queries, candidates)
     val (index, twoLevel) =
-      ivfBuildDecided(candidates, nlist, twoLevelAssign, idCol, vecCol)
+      ivfBuildDecided(candidates, nlist, twoLevelAssign)
     val g = math.max(1, math.round(math.sqrt(nlist.toDouble)).toInt)
     // AVERAGE-capacity sanity bound, not a guarantee: leader groups
     // are hash-picked and nearest-leader regrouping makes them uneven,
@@ -987,8 +959,7 @@ object Similarity {
     if (twoLevel) require(nprobe <= LeaderGroups * (nlist / g),
       s"two-level probes see ~$LeaderGroups*(nlist/g) cells on average: " +
         s"nprobe=$nprobe > $LeaderGroups*${nlist / g}")
-    ivfSearch(queries, index, k, nprobe, twoLevel, idCol, vecCol,
-      pinProbeParallelism)
+    ivfSearch(queries, index, k, nprobe, twoLevel, pinProbeParallelism)
   }
 
   /** A built IVF index: `centroids` is the coarse quantizer
@@ -1030,9 +1001,9 @@ object Similarity {
 
   private def ivfDot(x: Column, y: Column): Column =
     graft.functions.VecKernels.vec_dot_d(x, y)
-  private def ivfWithNorm(df: DataFrame, idCol: String, vecCol: String,
+  private def ivfWithNorm(df: DataFrame,
                           id: String, v: String, n: String): DataFrame =
-    df.select(col(idCol).cast(LongType).as(id), dbl(col(vecCol)).as(v))
+    df.select(col(VecId).cast(LongType).as(id), dbl(col(Embedding)).as(v))
       .withColumn(n, sqrt(ivfDot(col(v), col(v))))
 
   // norms precomputed ONCE per vector; per-pair work is a single dot.
@@ -1041,9 +1012,8 @@ object Similarity {
   // row_number window shipped N·nlist scored rows through a shuffle
   // keyed on the vector id); ties (_dist, centroid_id asc) identical.
   private def ivfAssign(df: DataFrame, centroids: DataFrame, topN: Int,
-                        idCol: String, vecCol: String,
                         id: String, v: String, nn: String): DataFrame =
-    ivfWithNorm(df, idCol, vecCol, id, v, nn)
+    ivfWithNorm(df, id, v, nn)
       .crossJoin(broadcast(centroids))
       .select(col(id), col(v), col(nn),
         (lit(1.0) - ivfDot(col(v), col("cvec")) / (col(nn) * col("cnorm")))
@@ -1083,9 +1053,8 @@ object Similarity {
 
   private def ivfAssign2(df: DataFrame, leaders: DataFrame,
                          grouped: DataFrame, topN: Int, scanGroups: Int,
-                         idCol: String, vecCol: String,
                          id: String, v: String, nn: String): DataFrame =
-    ivfWithNorm(df, idCol, vecCol, id, v, nn)
+    ivfWithNorm(df, id, v, nn)
       .crossJoin(broadcast(leaders))
       .select(col(id), col(v), col(nn),
         (lit(1.0) - ivfDot(col(v), col("lvec")) / (col(nn) * col("lnorm")))
@@ -1116,13 +1085,12 @@ object Similarity {
     * identically, including after a save/load round-trip.
     */
   private def ivfAssignCells(df: DataFrame, centroids: DataFrame,
-                             twoLevel: Boolean, idCol: String,
-                             vecCol: String): DataFrame =
+                             twoLevel: Boolean): DataFrame =
     if (twoLevel) {
       val leaders = ivfLeaders(centroids, gOf(centroids))
       ivfAssign2(df, leaders, ivfGrouped(centroids, leaders), 1,
-        CandidateGroups, idCol, vecCol, "cid", "cv", "cn")
-    } else ivfAssign(df, centroids, 1, idCol, vecCol, "cid", "cv", "cn")
+        CandidateGroups, "cid", "cv", "cn")
+    } else ivfAssign(df, centroids, 1, "cid", "cv", "cn")
 
   /** Exact L2 cell pick for the IVF-PQ family: per-row argmin fold
     * over the ONE broadcast cell array — zero expansion, zero
@@ -1316,29 +1284,26 @@ object Similarity {
     * rows by the rule the build used.
     */
   def ivfBuild(candidates: DataFrame, nlist: Int = 16,
-               twoLevelAssign: Boolean = false,
-               idCol: String = "vec_id",
-               vecCol: String = "embedding"): IvfIndex =
-    ivfBuildDecided(candidates, nlist, twoLevelAssign, idCol, vecCol)._1
+               twoLevelAssign: Boolean = false): IvfIndex =
+    ivfBuildDecided(candidates, nlist, twoLevelAssign)._1
 
   /** [[ivfBuild]] plus the two-level decision it took, which
     * [[ivfTopK]] hands on to its query-side probe.
     */
   private def ivfBuildDecided(candidates: DataFrame, nlist: Int,
-                              twoLevelAssign: Boolean, idCol: String,
-                              vecCol: String): (IvfIndex, Boolean) = {
-    requireIntegralId(candidates, idCol)
+                              twoLevelAssign: Boolean): (IvfIndex, Boolean) = {
+    requireIntegralId(candidates, VecId)
     // seed centroids picked ENTIRELY in-plan: min id per
     // pmod(xxhash64(id), nlist) hash bucket — ≤ nlist well-spread ids
     // with no driver-side action (an earlier candidates.count() here cost
     // a full extra pass over the corpus before the real job)
     val centroidIds = candidates
-      .groupBy(pmod(xxhash64(col(idCol)), lit(nlist)).as("_b"))
-      .agg(min(col(idCol)).as("_cid"))
+      .groupBy(pmod(xxhash64(col(VecId)), lit(nlist)).as("_b"))
+      .agg(min(col(VecId)).as("_cid"))
       .select(col("_cid"))
     val seeds = candidates
-      .join(broadcast(centroidIds), col(idCol) === col("_cid"))
-      .select(col("_cid").as("centroid_id"), dbl(col(vecCol)).as("cvec"))
+      .join(broadcast(centroidIds), col(VecId) === col("_cid"))
+      .select(col("_cid").as("centroid_id"), dbl(col(Embedding)).as("cvec"))
     // the centroid table is ALWAYS localCheckpoint-materialized: the
     // live chain re-scans the corpus per reference (seeds are a
     // corpus groupBy + join), and the index is referenced from the
@@ -1355,7 +1320,7 @@ object Similarity {
     val twoLevel = decideTwoLevel("ivfBuild", twoLevelAssign,
       centroids.count(), atMost = nlist)
     (IvfIndex(centroids,
-      ivfAssignCells(candidates, centroids, twoLevel, idCol, vecCol)),
+      ivfAssignCells(candidates, centroids, twoLevel)),
       twoLevel)
   }
 
@@ -1403,10 +1368,9 @@ object Similarity {
     */
   def ivfSearch(queries: DataFrame, index: IvfIndex, k: Int,
                 nprobe: Int = 8, twoLevelAssign: Boolean = false,
-                idCol: String = "vec_id", vecCol: String = "embedding",
                 pinProbeParallelism: Boolean = false): DataFrame =
     presentTopK(ivfPairs(queries, index, nprobe, twoLevelAssign,
-      idCol, vecCol, pinProbeParallelism), k)
+      pinProbeParallelism), k)
 
   /** Serve top-`k` against a STALE [[IvfIndex]] plus the unindexed
     * `delta` — the union mitigation the staleness contract above
@@ -1433,12 +1397,9 @@ object Similarity {
     */
   def ivfSearchWithDelta(queries: DataFrame, index: IvfIndex,
                          delta: DataFrame, k: Int, nprobe: Int = 8,
-                         twoLevelAssign: Boolean = false,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
-    val indexed = ivfPairs(queries, index, nprobe, twoLevelAssign,
-      idCol, vecCol)
-    val fresh = scoredPairs(queries, delta, idCol, vecCol, exact = false)
+                         twoLevelAssign: Boolean = false): DataFrame = {
+    val indexed = ivfPairs(queries, index, nprobe, twoLevelAssign)
+    val fresh = scoredPairs(queries, delta, exact = false)
     presentTopK(indexed.unionByName(fresh), k)
   }
 
@@ -1474,17 +1435,15 @@ object Similarity {
     * exact), which is the absorb-vs-delta-arm trade by construction.
     */
   def ivfAbsorbDelta(index: IvfIndex, delta: DataFrame,
-                     twoLevelAssign: Boolean = false,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): IvfIndex = {
-    requireIntegralId(delta, idCol)
+                     twoLevelAssign: Boolean = false): IvfIndex = {
+    requireIntegralId(delta, VecId)
     val centroids = index.centroids
     // nlist-sized count (the gOf discipline), never the corpus: the
     // auto two-level switch keys on the PERSISTED quantizer's size
     val twoLevel = decideTwoLevel("ivfAbsorbDelta", twoLevelAssign,
       centroids.count())
     IvfIndex(centroids, index.cells.unionByName(
-      ivfAssignCells(delta, centroids, twoLevel, idCol, vecCol)))
+      ivfAssignCells(delta, centroids, twoLevel)))
   }
 
   /** Per-cell assignment-quality statistics of a built [[IvfIndex]] —
@@ -1582,10 +1541,9 @@ object Similarity {
     * sized to the absorb cadence it gates.
     */
   def ivfDriftCheck(stats: DataFrame, centroids: DataFrame,
-                    delta: DataFrame, twoLevelAssign: Boolean = false,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): IvfDriftReport = {
-    requireIntegralId(delta, idCol)
+                    delta: DataFrame,
+                    twoLevelAssign: Boolean = false): IvfDriftReport = {
+    requireIntegralId(delta, VecId)
     // the delta must be assigned the way the BUILD assigned its cells,
     // or the report compares incompatible rules: a two-level-built
     // index (nlist past the auto threshold) placed its rows through
@@ -1602,7 +1560,7 @@ object Similarity {
         // picked cell; the groupBy exchange inside the fold carries the
         // delta once, the price of assignment parity in the big-nlist
         // regime
-        ivfAssignCells(delta, centroids, twoLevel = true, idCol, vecCol)
+        ivfAssignCells(delta, centroids, twoLevel = true)
           .join(broadcast(centroids), "centroid_id")
           .select(col("centroid_id"),
             (lit(1.0) - ivfDot(col("cv"), col("cvec")) /
@@ -1620,8 +1578,8 @@ object Similarity {
           .agg(array_sort(collect_list(struct(col("centroid_id"),
             col("cvec"), col("cnorm")))).as("_cs"))
         delta
-          .select(col(idCol),
-            dbl(col(vecCol)).as("_v"))
+          .select(col(VecId),
+            dbl(col(Embedding)).as("_v"))
           .withColumn("_n", sqrt(ivfDot(col("_v"), col("_v"))))
           .crossJoin(broadcast(cn))
           .select(aggregate(col("_cs"),
@@ -1660,14 +1618,12 @@ object Similarity {
     * layout is family-agnostic).
     */
   def ivfPqCellStats(index: IvfPqIndex, corpus: DataFrame,
-                     twoLevelAssign: Boolean = false,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    requireIntegralId(corpus, idCol)
+                     twoLevelAssign: Boolean = false): DataFrame = {
+    requireIntegralId(corpus, VecId)
     // quantizer-sized count, never the corpus
     val twoLevel = decideTwoLevel("ivfPqCellStats", twoLevelAssign,
       index.coarse.count())
-    pqPerCellResiduals(corpus, index.coarse, twoLevel, idCol, vecCol)
+    pqPerCellResiduals(corpus, index.coarse, twoLevel)
       .select(col("cell"), col("_cnt").as("n"),
         (col("_sum") / col("_cnt")).cast(DoubleType).as("mean_dist"))
   }
@@ -1680,10 +1636,9 @@ object Similarity {
     * extended to the statistic computed on top of it.
     */
   private def pqPerCellResiduals(df: DataFrame, coarse: DataFrame,
-                                 twoLevel: Boolean, idCol: String,
-                                 vecCol: String): DataFrame = {
+                                 twoLevel: Boolean): DataFrame = {
     ivfPqAssignResiduals(
-      df.select(col(idCol).as("cid"), dbl(col(vecCol)).as("cv")),
+      df.select(col(VecId).as("cid"), dbl(col(Embedding)).as("cv")),
       coarse, twoLevel)
       .select(col("cell"),
         // Σ v·v over one array ≡ vec_dot_d(rv, rv): same products, same
@@ -1697,10 +1652,8 @@ object Similarity {
   /** Persist [[ivfPqCellStats]] next to the index artifacts — the
     * fourth IVF-PQ artifact (coarse, codebook, codes, cellstats).
     */
-  def ivfPqSaveStats(index: IvfPqIndex, corpus: DataFrame, path: String,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): Unit =
-    ivfPqCellStats(index, corpus, idCol = idCol, vecCol = vecCol)
+  def ivfPqSaveStats(index: IvfPqIndex, corpus: DataFrame, path: String): Unit =
+    ivfPqCellStats(index, corpus)
       .write.mode("overwrite").parquet(s"$path/cellstats")
 
   /** [[ivfDriftCheck]] for the IVF-PQ family: price a delta against
@@ -1712,15 +1665,14 @@ object Similarity {
     * longer fit the data mis-buckets rows before any code is read.
     */
   def ivfPqDriftCheck(stats: DataFrame, coarse: DataFrame,
-                      delta: DataFrame, twoLevelAssign: Boolean = false,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): IvfDriftReport = {
-    requireIntegralId(delta, idCol)
+                      delta: DataFrame,
+                      twoLevelAssign: Boolean = false): IvfDriftReport = {
+    requireIntegralId(delta, VecId)
     val twoLevel = decideTwoLevel("ivfPqDriftCheck", twoLevelAssign,
       coarse.count())
     // single consumer — materializes once inside driftReport's mix
     // checkpoint; no second pin needed (r21)
-    val perCell = pqPerCellResiduals(delta, coarse, twoLevel, idCol, vecCol)
+    val perCell = pqPerCellResiduals(delta, coarse, twoLevel)
       .select(col("cell"), col("_cnt").as("_dn"), col("_sum").as("_ds"))
     driftReport(perCell, stats, "cell", "ivfPqDriftCheck",
       "ivfPqBuild over the grown corpus")
@@ -1896,14 +1848,11 @@ object Similarity {
     * keeps the index's own nlist.
     */
   def ivfMaintain(index: IvfIndex, stats: DataFrame, delta: DataFrame,
-                  twoLevelAssign: Boolean = false,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): IvfMaintainResult = {
-    val report = ivfDriftCheck(stats, index.centroids, delta,
-      twoLevelAssign, idCol, vecCol)
+                  twoLevelAssign: Boolean = false): IvfMaintainResult = {
+    val report = ivfDriftCheck(stats, index.centroids, delta, twoLevelAssign)
     if (!report.drifted)
-      IvfMaintainResult(ivfAbsorbDelta(index, delta, twoLevelAssign,
-        idCol, vecCol), report, rebuilt = false)
+      IvfMaintainResult(ivfAbsorbDelta(index, delta, twoLevelAssign), report,
+        rebuilt = false)
     else {
       logger.warn("graft ivfMaintain: drift verdict REBUILD — " +
         "re-training the quantizer over the grown corpus instead of " +
@@ -1911,11 +1860,11 @@ object Similarity {
         "price a quantizer that no longer exists).")
       val nlist = index.centroids.count().toInt // quantizer-sized
       val grown = index.cells
-        .select(col("cid").cast(LongType).as(idCol), col("cv").as(vecCol))
-        .unionByName(delta.select(col(idCol).cast(LongType).as(idCol),
-          dbl(col(vecCol)).as(vecCol)))
-      IvfMaintainResult(ivfBuild(grown, nlist, twoLevelAssign, idCol,
-        vecCol), report, rebuilt = true)
+        .select(col("cid").cast(LongType).as(VecId), col("cv").as(Embedding))
+        .unionByName(delta.select(col(VecId).cast(LongType).as(VecId),
+          dbl(col(Embedding)).as(Embedding)))
+      IvfMaintainResult(ivfBuild(grown, nlist, twoLevelAssign), report,
+        rebuilt = true)
     }
   }
 
@@ -1940,14 +1889,11 @@ object Similarity {
   def ivfPqMaintain(index: IvfPqIndex, stats: DataFrame,
                     corpus: DataFrame, delta: DataFrame,
                     m: Int = -1, codes: Int = 32,
-                    twoLevelAssign: Boolean = false,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): IvfPqMaintainResult = {
-    val report = ivfPqDriftCheck(stats, index.coarse, delta,
-      twoLevelAssign, idCol, vecCol)
+                    twoLevelAssign: Boolean = false): IvfPqMaintainResult = {
+    val report = ivfPqDriftCheck(stats, index.coarse, delta, twoLevelAssign)
     if (!report.drifted)
       IvfPqMaintainResult(ivfPqAbsorbDelta(index, delta, m,
-        twoLevelAssign, idCol, vecCol), report, rebuilt = false)
+        twoLevelAssign), report, rebuilt = false)
     else {
       logger.warn("graft ivfPqMaintain: drift verdict REBUILD — " +
         "re-training coarse quantizer and codebook over the grown " +
@@ -1958,20 +1904,19 @@ object Similarity {
         else index.builtM.getOrElse(
           index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
       val grown = corpus
-        .select(col(idCol).cast(LongType).as(idCol),
-          dbl(col(vecCol)).as(vecCol))
-        .unionByName(delta.select(col(idCol).cast(LongType).as(idCol),
-          dbl(col(vecCol)).as(vecCol)))
+        .select(col(VecId).cast(LongType).as(VecId),
+          dbl(col(Embedding)).as(Embedding))
+        .unionByName(delta.select(col(VecId).cast(LongType).as(VecId),
+          dbl(col(Embedding)).as(Embedding)))
       IvfPqMaintainResult(ivfPqBuild(grown, nlist, mEff, codes,
-        twoLevelAssign, idCol, vecCol), report, rebuilt = true)
+        twoLevelAssign), report, rebuilt = true)
     }
   }
 
   private def ivfPairs(queries: DataFrame, index: IvfIndex, nprobe: Int,
                        twoLevelAssign: Boolean,
-                       idCol: String, vecCol: String,
                        pinProbeParallelism: Boolean = false): DataFrame = {
-    requireIntegralId(queries, idCol)
+    requireIntegralId(queries, VecId)
     val probes0 =
       if (twoLevelAssign) {
         // g re-derives from the index itself (√nlist of the PERSISTED
@@ -1981,9 +1926,8 @@ object Similarity {
         val leaders = ivfLeaders(centroids, gOf(centroids))
         val grouped = ivfGrouped(centroids, leaders)
         ivfAssign2(queries, leaders, grouped, nprobe, LeaderGroups,
-          idCol, vecCol, "qid", "qv", "qn")
-      } else ivfAssign(queries, index.centroids, nprobe, idCol, vecCol,
-        "qid", "qv", "qn")
+          "qid", "qv", "qn")
+      } else ivfAssign(queries, index.centroids, nprobe, "qid", "qv", "qn")
     // repartition-by-NUMBER on the join key (AQE never coalesces a
     // user-numbered repartition) PLUS a merge-join hint (AQE's
     // broadcast conversion would move the scoring onto the OTHER
@@ -2038,18 +1982,17 @@ object Similarity {
     * decimal machinery. A pure narrow projection: scan-fused, zero
     * shuffle at any scale.
     */
-  def quantizeInt8(df: DataFrame,
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    val xd = dbl(col(vecCol))
+  def quantizeInt8(df: DataFrame): DataFrame = {
+    requireIntegralId(df, VecId)
+    val xd = dbl(col(Embedding))
     val q = when(col("_am") === 0.0,
       transform(col("_x"), _ => lit(0L)))
       .otherwise(transform(col("_x"),
         x => floor(x / col("_am") * 127.0 + 0.5).cast(LongType)))
-    df.select(col(idCol), xd.as("_x"))
+    df.select(col(VecId), xd.as("_x"))
       .withColumn("_am", array_max(transform(col("_x"), x => abs(x))))
       .withColumn("_q", q)
-      .select(col(idCol),
+      .select(col(VecId),
         aggregate(col("_q"), lit(0L), (acc, v) => acc + v).as("q_sum"),
         array_min(col("_q")).as("q_min"),
         array_max(col("_q")).as("q_max"),
@@ -2066,7 +2009,7 @@ object Similarity {
     * cosineExact discipline), bit-identical on any engine.
     *
     * The hash is md5 OF THE DECIMAL STRING "k_i" (not xxhash64 like
-    * [[lshSignature]]) so a SQL oracle can replay the exact projection
+    * [[lshTables]]) so a SQL oracle can replay the exact projection
     * matrix: every mainstream engine agrees on md5 hex of a UTF-8
     * string, while xxhash64 is Spark-specific.
     *
@@ -2075,12 +2018,10 @@ object Similarity {
     * materialized projection matrix (the "matrix" is the hash). The
     * presentation explode to long format is output-sized (N·dims).
     */
-  def signedRandomProjection(df: DataFrame, dims: Int,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding"): DataFrame = {
+  def signedRandomProjection(df: DataFrame, dims: Int): DataFrame = {
     require(dims >= 1, s"dims must be >= 1, got $dims")
-    requireIntegralId(df, idCol)
-    val decV = dec6(col(vecCol))
+    requireIntegralId(df, VecId)
+    val decV = dec6(col(Embedding))
     val evenHex = Seq("0", "2", "4", "6", "8", "a", "c", "e")
     val coords = (0 until dims).map { kIdx =>
       val signed = zip_with(col("_v"), sequence(lit(1), size(col("_v"))),
@@ -2091,9 +2032,9 @@ object Similarity {
       aggregate(signed, lit(0).cast(DecimalType(30, 12)),
         (acc, v) => (acc + v).cast(DecimalType(30, 12)))
     }
-    df.select(col(idCol).cast(LongType).as(idCol), decV.as("_v"))
-      .select(col(idCol), posexplode(array(coords: _*)))
-      .select(col(idCol), (col("pos") + 1).cast(LongType).as("k"),
+    df.select(col(VecId).cast(LongType).as(VecId), decV.as("_v"))
+      .select(col(VecId), posexplode(array(coords: _*)))
+      .select(col(VecId), (col("pos") + 1).cast(LongType).as("k"),
         col("col").cast(DoubleType).as("coord"))
   }
 
@@ -2169,14 +2110,11 @@ object Similarity {
     * codes in memory and fetch full vectors per shortlist.
     */
   def bqTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-             shortlist: Int = 50,
-             idCol: String = "vec_id",
-             vecCol: String = "embedding"): DataFrame =
-    bqSearch(queries, binaryCodes(candidates, idCol, vecCol), candidates,
-      k, shortlist, idCol, vecCol)
+             shortlist: Int = 50): DataFrame =
+    bqSearch(queries, binaryCodes(candidates), candidates, k, shortlist)
 
   /** The packed sign-bit codes of a vector column — the persistable
-    * 1-bit index asset: (idCol, code array<long>), one bit per
+    * 1-bit index asset: (vec_id, code array<long>), one bit per
     * dimension packed little-endian within each 64-dim word (bit =
     * xᵢ > 0; dims past the vector length pack as 0, identical on both
     * sides of any hamming distance). A pure narrow projection —
@@ -2184,16 +2122,14 @@ object Similarity {
     * [[bqSearch]] without touching raw vectors again except for the
     * bounded re-rank.
     */
-  def binaryCodes(df: DataFrame,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame =
+  def binaryCodes(df: DataFrame): DataFrame =
     // compiled packing kernel (r21): the previous transform/aggregate
     // HOF chain walked 64 interpreted when/shiftleft nodes per WORD per
     // row; binary_code packs the same little-endian sign bits (null
     // element → bit 0, empty vector → [0], the (size-1)/64 word count)
     // in one pass — VecKernelsSpec pins it against the HOF form
-    df.select(col(idCol).cast(LongType).as(idCol),
-      graft.functions.VecKernels.binary_code(col(vecCol)).as("code"))
+    df.select(col(VecId).cast(LongType).as(VecId),
+      graft.functions.VecKernels.binary_code(col(Embedding)).as("code"))
 
   /** Delete vectors from a binary-quantized code store by id — the
     * right-to-be-forgotten arm of the BQ family, closing the lifecycle
@@ -2215,15 +2151,14 @@ object Similarity {
     * re-rank side is the only path back into serving, exactly the
     * [[ivfPqDeleteIds]] contract.
     */
-  def bqDeleteIds(codes: DataFrame, tombstones: DataFrame,
-                  idCol: String = "vec_id"): DataFrame = {
+  def bqDeleteIds(codes: DataFrame, tombstones: DataFrame): DataFrame = {
     val tCol = tombstones.columns.head
     codes.join(
       broadcast(tombstones
-        .select(castTombstone(col(tCol), codes.schema(idCol).dataType,
-          "bqDeleteIds").as(idCol))
+        .select(castTombstone(col(tCol), codes.schema(VecId).dataType,
+          "bqDeleteIds").as(VecId))
         .distinct()),
-      Seq(idCol), "left_anti")
+      Seq(VecId), "left_anti")
   }
 
   /** Fold an append log into a binary-quantized code store —
@@ -2245,11 +2180,9 @@ object Similarity {
     * its ids must not already be in `codes` (a row in both would hold
     * two shortlist slots).
     */
-  def bqAbsorbDelta(codes: DataFrame, delta: DataFrame,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    requireIntegralId(delta, idCol)
-    codes.unionByName(binaryCodes(delta, idCol, vecCol))
+  def bqAbsorbDelta(codes: DataFrame, delta: DataFrame): DataFrame = {
+    requireIntegralId(delta, VecId)
+    codes.unionByName(binaryCodes(delta))
   }
 
   /** Serve [[bqTopK]] against PRE-BUILT codes ([[binaryCodes]] output,
@@ -2273,15 +2206,15 @@ object Similarity {
     */
   private def exactCosineRerank(sl: DataFrame, queries: DataFrame,
                                 rerank: DataFrame, k: Int,
-                                idCol: String, vecCol: String,
                                 dropZeroNormQueries: Boolean): DataFrame = {
     import graft.functions.VecKernels.vec_dot_dec
     val qv0 = queries
-      .select(col(idCol).cast(LongType).as("qid"), dec6(col(vecCol)).as("_qv"))
+      .select(col(VecId).cast(LongType).as("qid"),
+        dec6(col(Embedding)).as("_qv"))
       .withColumn("_qn", vec_dot_dec(col("_qv"), col("_qv")))
     val qv = if (dropZeroNormQueries) qv0.filter(col("_qn") > 0) else qv0
     val cvRaw = rerank
-      .select(col(idCol).cast(LongType).as("cid"), col(vecCol).as("_craw"))
+      .select(col(VecId).cast(LongType).as("cid"), col(Embedding).as("_craw"))
     // the kernel fuses the per-element double→DECIMAL(12,6) cast, so
     // the raw candidate array feeds it directly (same values as the
     // old dec6(_craw) projection — VecKernelsSpec pins both input forms)
@@ -2301,14 +2234,12 @@ object Similarity {
   }
 
   def bqSearch(queries: DataFrame, codes: DataFrame, rerank: DataFrame,
-               k: Int, shortlist: Int = 50,
-               idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
+               k: Int, shortlist: Int = 50): DataFrame = {
     require(shortlist >= k, s"need shortlist >= k, got $shortlist < $k")
-    requireIntegralId(queries, idCol)
-    val qp = binaryCodes(queries, idCol, vecCol)
-      .select(col(idCol).as("qid"), col("code").as("_qb"))
-    val cp = codes.select(col(idCol).cast(LongType).as("cid"),
+    requireIntegralId(queries, VecId)
+    val qp = binaryCodes(queries)
+      .select(col(VecId).as("qid"), col("code").as("_qb"))
+    val cp = codes.select(col(VecId).cast(LongType).as("cid"),
       col("code").as("_cb"))
     // compiled hamming kernel (r21): the aggregate(zip_with(bit_count(
     // xor))) fold ran interpreted per candidate PAIR — the scan stage's
@@ -2323,20 +2254,17 @@ object Similarity {
         .as("_tk"))
       .select(col("qid"), explode(col("_tk")).as("_e"))
       .select(col("qid"), col("_e.id").as("cid"))
-    exactCosineRerank(sl, queries, rerank, k, idCol, vecCol,
-      dropZeroNormQueries = false)
+    exactCosineRerank(sl, queries, rerank, k, dropZeroNormQueries = false)
   }
 
   def int8RerankTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-                     shortlist: Int = 50,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    requireIntegralIds(queries, candidates, idCol)
+                     shortlist: Int = 50): DataFrame = {
+    requireIntegralIds(queries, candidates)
     import graft.functions.VecKernels.{vec_dot_dec, vec_dot_l}
     // int8 side: (id, _q bigint[], _am double) — sim05's exact scheme
     def quant(df: DataFrame, id: String): DataFrame = {
-      val xd = dbl(col(vecCol))
-      df.select(col(idCol).cast(LongType).as(id), xd.as("_x"))
+      val xd = dbl(col(Embedding))
+      df.select(col(VecId).cast(LongType).as(id), xd.as("_x"))
         .withColumn("_am", array_max(transform(col("_x"), x => abs(x))))
         .withColumn("_q",
           when(col("_am") === 0.0, transform(col("_x"), _ => lit(0L)))
@@ -2359,23 +2287,22 @@ object Similarity {
       .select(col("qid"), col("_e.id").as("cid"))
     // raw bytes below the shortlist join; decimal projection + norm
     // only for the ≤ |Q|·shortlist surviving pairs
-    exactCosineRerank(sl, queries, candidates, k, idCol, vecCol,
-      dropZeroNormQueries = true)
+    exactCosineRerank(sl, queries, candidates, k, dropZeroNormQueries = true)
   }
 
   def annTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-              bits: Int = 4, tables: Int = 16,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    requireIntegralIds(queries, candidates, idCol)
-    val qb = lshTables(queries, bits, tables, idCol, vecCol)
-      .select(col(idCol).cast(LongType).as("qid"), col("table"), col("bucket"))
-    val cb = lshTables(candidates, bits, tables, idCol, vecCol)
-      .select(col(idCol).as("cid"), col("table"), col("bucket"))
+              bits: Int = 4, tables: Int = 16): DataFrame = {
+    requireIntegralIds(queries, candidates)
+    val qb = lshTables(queries, bits, tables)
+      .select(col(VecId).cast(LongType).as("qid"), col("table"), col("bucket"))
+    val cb = lshTables(candidates, bits, tables)
+      .select(col(VecId).as("cid"), col("table"), col("bucket"))
     val pairs = qb.join(cb, Seq("table", "bucket"))
       .filter(col("qid") =!= col("cid"))
       .select("qid", "cid").distinct()
-    val qv = queries.select(col(idCol).cast(LongType).as("qid"), col(vecCol).as("qv"))
-    val cv = candidates.select(col(idCol).as("cid"), col(vecCol).as("cv"))
+    val qv = queries.select(col(VecId).cast(LongType).as("qid"),
+      col(Embedding).as("qv"))
+    val cv = candidates.select(col(VecId).as("cid"), col(Embedding).as("cv"))
     // bounded map-side top-k (see cosineTopK): the LSH candidate set per
     // query is ≈ tables/2^bits of the corpus on a structure-free corpus
     // — linear in N — so the old per-query rank window shipped a

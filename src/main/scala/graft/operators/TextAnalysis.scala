@@ -904,21 +904,20 @@ object TextAnalysis {
       ((col("sy") - slope * col("sx")) / kd).as("intercept"))
   }
 
-  /** Per-slice unigram diversity report: token/type/hapax counts plus
-    * Shannon entropy `H = −Σ p·ln p` of the token distribution — the
-    * lexical-diversity signal corpus curation uses to spot boilerplate
-    * floods (low H) and OCR noise (H near ln(types), hapax share → 1).
-    *
-    * Determinism: counts are exact longs; each `p·ln p` term is two
-    * IEEE ops on identical long-derived operands, quantized to
-    * DECIMAL(18,6) BEFORE the per-slice sum (the dq06/PSI discipline —
-    * a last-ulp libm-`ln` divergence can't flip a 6-dp quantization),
-    * so the entropy sum is exact and order-independent.
-    *
-    * Scale shape: one (slice, token) aggregation with map-side combine
-    * carries the corpus; everything after is type-table-sized, and the
-    * per-slice totals ride a broadcast back onto the term table.
+  /** The greedy left-to-right non-overlapping pair merge as a per-word
+    * `aggregate` fold over `syms`, against the broadcast winning pair
+    * (m_a, m_b) — shared verbatim by [[bpeMerges]] (training) and
+    * [[bpeEncode]] (application), so the encoder replays EXACTLY the
+    * rewrite the trainer counted.
     */
+  private def greedyMergeFold: Column =
+    aggregate(col("syms"), array().cast(ArrayType(StringType)), (acc, x) =>
+      when(size(acc) > 0 &&
+          element_at(acc, -1) === col("m_a") && x === col("m_b"),
+        concat(slice(acc, lit(1), size(acc) - 1),
+          array(concat(col("m_a"), col("m_b")))))
+        .otherwise(concat(acc, array(x))))
+
   /** BPE merge-table training (Sennrich 2016): starting from the
     * character-split word-type table, each round counts adjacent
     * symbol pairs weighted by word frequency, promotes the most
@@ -952,20 +951,6 @@ object TextAnalysis {
     * [[Checkpointing]] policy shared with the other iterative
     * operators.
     */
-  /** The greedy left-to-right non-overlapping pair merge as a per-word
-    * `aggregate` fold over `syms`, against the broadcast winning pair
-    * (m_a, m_b) — shared verbatim by [[bpeMerges]] (training) and
-    * [[bpeEncode]] (application), so the encoder replays EXACTLY the
-    * rewrite the trainer counted.
-    */
-  private def greedyMergeFold: Column =
-    aggregate(col("syms"), array().cast(ArrayType(StringType)), (acc, x) =>
-      when(size(acc) > 0 &&
-          element_at(acc, -1) === col("m_a") && x === col("m_b"),
-        concat(slice(acc, lit(1), size(acc) - 1),
-          array(concat(col("m_a"), col("m_b")))))
-        .otherwise(concat(acc, array(x))))
-
   def bpeMerges(df: DataFrame, textCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val cp = Checkpointing.truncator(df.sparkSession)
@@ -1063,6 +1048,21 @@ object TextAnalysis {
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
   }
 
+  /** Per-slice unigram diversity report: token/type/hapax counts plus
+    * Shannon entropy `H = −Σ p·ln p` of the token distribution — the
+    * lexical-diversity signal corpus curation uses to spot boilerplate
+    * floods (low H) and OCR noise (H near ln(types), hapax share → 1).
+    *
+    * Determinism: counts are exact longs; each `p·ln p` term is two
+    * IEEE ops on identical long-derived operands, quantized to
+    * DECIMAL(18,6) BEFORE the per-slice sum (the dq06/PSI discipline —
+    * a last-ulp libm-`ln` divergence can't flip a 6-dp quantization),
+    * so the entropy sum is exact and order-independent.
+    *
+    * Scale shape: one (slice, token) aggregation with map-side combine
+    * carries the corpus; everything after is type-table-sized, and the
+    * per-slice totals ride a broadcast back onto the term table.
+    */
   def sliceEntropy(df: DataFrame, sliceCol: String,
                    textCol: String): DataFrame = {
     val c = df

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.io.Publish
+import graft.operators.Similarity.VecId
 
 /** Structured Streaming counterparts of the batch operators: the same
   * event-stream semantics (hourly rollups, gap sessionization) expressed
@@ -1225,6 +1226,8 @@ object StreamingJobs {
     * and [[ivfAbsorbLog]] / [[ivfPqAbsorbLog]] fold it into the
     * persisted index on the rebuild cadence, emptying the log;
     * [[deltaLogDeleteIds]] is the log's right-to-be-forgotten arm.
+    * The log and every job over it use the fixed vector schema
+    * `(vec_id, embedding)` documented on [[graft.operators.Similarity]].
     *
     * Exactly-once under retries, the st10 pattern: each batch's write
     * is overwrite-idempotent under its batch id, so a replayed batch
@@ -1335,10 +1338,12 @@ object StreamingJobs {
     * present every TOUCHED batch must be committed — a resumed stream
     * replays an uncommitted batch and its whole-directory retry
     * overwrite would resurrect exactly the rows this function deleted.
+    *
+    * `tombstones`' first column holds the ids; they match the log's
+    * fixed `vec_id` column (see [[vectorDeltaStream]]).
     */
   def deltaLogDeleteIds(spark: org.apache.spark.sql.SparkSession,
-                        workDir: String, tombstones: DataFrame,
-                        idCol: String = "vec_id"): Seq[Long] = {
+                        workDir: String, tombstones: DataFrame): Seq[Long] = {
     val deltaDir = s"$workDir/delta"
     val fs = new Path(deltaDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1353,12 +1358,12 @@ object StreamingJobs {
     val log = spark.read.parquet(deltaDir) // carries the batch key
     val tCol = tombstones.columns.head
     val tomb = tombstones.select(graft.operators.Similarity
-        .castTombstone(col(tCol), log.schema(idCol).dataType,
-          "deltaLogDeleteIds").as(idCol))
+        .castTombstone(col(tCol), log.schema(VecId).dataType,
+          "deltaLogDeleteIds").as(VecId))
       .distinct()
     // metadata-sized driver set: ≤ one row per log batch (the
     // cdcDeleteKeys discipline), never the log rows themselves
-    val touched = log.join(broadcast(tomb), Seq(idCol))
+    val touched = log.join(broadcast(tomb), Seq(VecId))
       .select(col("batch").cast(LongType)).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     if (touched.isEmpty) return Nil
@@ -1373,7 +1378,7 @@ object StreamingJobs {
     touched.foreach { b =>
       val live = s"$deltaDir/batch=$b"
       Publish.replace(fs, new Path(live)) { next =>
-        deltaBatchSurvivors(spark, live, tomb, idCol).write.parquet(next.toString)
+        deltaBatchSurvivors(spark, live, tomb).write.parquet(next.toString)
       }
     }
     touched
@@ -1387,9 +1392,9 @@ object StreamingJobs {
     */
   private[graft] def deltaBatchSurvivors(
       spark: org.apache.spark.sql.SparkSession, batchDir: String,
-      tomb: DataFrame, idCol: String): DataFrame =
+      tomb: DataFrame): DataFrame =
     spark.read.parquet(batchDir)
-      .join(broadcast(tomb), Seq(idCol), "left_anti")
+      .join(broadcast(tomb), Seq(VecId), "left_anti")
 
   /** Fold the persisted delta log into the persisted [[graft.operators.
     * Similarity.IvfIndex]] at `indexPath` and GC the absorbed batch
@@ -1402,18 +1407,18 @@ object StreamingJobs {
     * `delta/batch=N` directories, so the log's remaining
     * bytes are exactly the rows the index does NOT yet hold — the
     * disjointness invariant `ivfSearchWithDelta` serves by. Returns
-    * the absorbed batch ids (empty when the log held nothing).
+    * the absorbed batch ids (empty when the log held nothing). The log
+    * rows carry the fixed `(vec_id, embedding)` schema (see
+    * [[vectorDeltaStream]]).
     */
   def ivfAbsorbLog(spark: org.apache.spark.sql.SparkSession,
                    indexPath: String, workDir: String,
-                   twoLevelAssign: Boolean = false,
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding"): Seq[Long] =
+                   twoLevelAssign: Boolean = false): Seq[Long] =
     absorbLogCore(spark, indexPath, workDir, "ivfAbsorbLog") {
       (delta, staging) =>
         graft.operators.Similarity.ivfAbsorbDelta(
             graft.operators.Similarity.ivfLoad(spark, indexPath), delta,
-            twoLevelAssign, idCol, vecCol)
+            twoLevelAssign)
           .save(staging)
     }
 
@@ -1427,14 +1432,12 @@ object StreamingJobs {
     */
   def ivfPqAbsorbLog(spark: org.apache.spark.sql.SparkSession,
                      indexPath: String, workDir: String,
-                     m: Int = -1, twoLevelAssign: Boolean = false,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): Seq[Long] =
+                     m: Int = -1, twoLevelAssign: Boolean = false): Seq[Long] =
     absorbLogCore(spark, indexPath, workDir, "ivfPqAbsorbLog") {
       (delta, staging) =>
         graft.operators.Similarity.ivfPqAbsorbDelta(
             graft.operators.Similarity.ivfPqLoad(spark, indexPath), delta,
-            m, twoLevelAssign, idCol, vecCol)
+            m, twoLevelAssign)
           .save(staging)
     }
 

@@ -17,7 +17,9 @@ import graft.{GraftSession, SparkEntry}
   * task-time sum; then the last run's stages by task time, each with
   * its longest task and the `graft.` frames that submitted it.
   *
-  *   --runs N       profiled runs (default 3)
+  *   --runs N       profiled runs (default 3), followed by one summary
+  *                  line: median, IQR and min of wall, inJob and
+  *                  driverGap over the N runs
   *   --after a,b    run these queries once first, to see what in-session
   *                  state (cached blocks, checkpoints, codegen cache)
   *                  they leave costs the profiled query
@@ -101,6 +103,20 @@ object Profile {
         if (e <= cursor) (busy, cursor) else (busy + e - math.max(s, cursor), e)
     }._1
 
+  /** (median, interquartile range, min) of `xs`; quartiles interpolate
+    * linearly between order statistics (numpy's default).
+    */
+  def spread(xs: Seq[Double]): (Double, Double, Double) = {
+    require(xs.nonEmpty, "spread of no values")
+    val s = xs.sorted.toIndexedSeq
+    def q(p: Double): Double = {
+      val x = p * (s.size - 1)
+      val i = x.toInt
+      if (i + 1 < s.size) s(i) + (x - i) * (s(i + 1) - s(i)) else s(i)
+    }
+    (q(0.5), q(0.75) - q(0.25), s.head)
+  }
+
   def main(args: Array[String]): Unit = {
     var pos = Vector.empty[String]
     var runs = 3
@@ -135,7 +151,7 @@ object Profile {
       val (n, wall) = timed(query(a)(spark, sfDir).count())
       println(f"[profile] after $a: wall=$wall%.2fs rows=$n")
     }
-    for (i <- 1 to runs) {
+    val samples = (1 to runs).map { i =>
       rec.reset()
       val (n, wall) = timed(fn(spark, sfDir).count())
       val jobs = rec.jobs
@@ -145,6 +161,16 @@ object Profile {
         f"stages=${stages.size} tasks=${stages.map(_.tasks).sum} " +
         f"inJob=$inJob%.2fs driverGap=${wall - inJob}%.2fs " +
         f"taskTime=${stages.map(_.taskMs).sum / 1e3}%.2fs")
+      (wall, inJob, wall - inJob)
+    }
+    if (samples.nonEmpty) {
+      def line(xs: Seq[Double]) = {
+        val (med, iqr, lo) = spread(xs)
+        f"median=$med%.2fs iqr=$iqr%.2fs min=$lo%.2fs"
+      }
+      println(s"[profile] $name summary: runs=$runs " +
+        s"wall ${line(samples.map(_._1))} inJob ${line(samples.map(_._2))} " +
+        s"driverGap ${line(samples.map(_._3))}")
     }
     rec.stages.sortBy(-_.taskMs).take(TopStages).foreach { s =>
       println(f"[profile]   stage ${s.id}%4d ${s.taskMs}%8d ms ${s.tasks}%4d tasks " +

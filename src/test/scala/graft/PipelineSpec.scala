@@ -81,6 +81,28 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("similarity operators reject a string vec_id before any job runs") {
+    // the loud half of the ID CONTRACT: a string id would cast to null
+    // on its way to bigint and silently drop rows, so every entry point
+    // refuses it while planning — ivfBuild before its first count
+    val e = Seq(("a", Array(1f, 0f)), ("b", Array(0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val sc = spark.sparkContext
+    sc.setJobGroup("string-vec-id", "ID contract rejection")
+    try {
+      for ((site, call) <- Seq[(String, () => Any)](
+          "cosineTopK" -> (() => Similarity.cosineTopK(e, e, 1)),
+          "ivfBuild" -> (() => Similarity.ivfBuild(e)),
+          "quantizeInt8" -> (() => Similarity.quantizeInt8(e)))) {
+        val err = intercept[IllegalArgumentException](call())
+        assert(err.getMessage.contains("'vec_id' must be integral"),
+          s"$site: ${err.getMessage}")
+      }
+      org.apache.spark.sql.graft.bridge.drainListeners(sc)
+      assert(sc.statusTracker.getJobIdsForGroup("string-vec-id").isEmpty)
+    } finally sc.clearJobGroup()
+  }
+
   test("ANN LSH at the tuned default config clears the 80% recall floor") {
     // the r4 regression this pins: a bits=8 single-table-style override
     // collapsed recall to 0.20 — the tuned 4-bit × 16-table default

@@ -181,7 +181,7 @@ class PlanSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/batch=0")
     val tomb = Seq(1L, 2L).toDF("vec_id")
     val p = graft.streaming.StreamingJobs
-      .deltaBatchSurvivors(spark, s"$dir/batch=0", tomb, "vec_id")
+      .deltaBatchSurvivors(spark, s"$dir/batch=0", tomb)
       .queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p)
     assert(!p.contains("SortMergeJoin"), p)

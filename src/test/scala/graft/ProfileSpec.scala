@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.Profile
 
-/** The profiler's two moving parts: the job-span merge behind the
-  * driver-gap number, and the listener's per-stage record.
+/** The profiler's moving parts: the job-span merge behind the
+  * driver-gap number, the summary statistics over runs, and the
+  * listener's per-stage record.
   */
 class ProfileSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -19,6 +20,14 @@ class ProfileSpec extends AnyFunSuite {
     // a span nested in an earlier one must not move the cursor back
     assert(Profile.busyMs(Seq(0L -> 30L, 5L -> 10L, 25L -> 40L)) == 40L)
     assert(Profile.busyMs(Seq(100L -> 110L, 100L -> 110L)) == 10L)
+  }
+
+  test("spread reports median, interpolated IQR and min") {
+    assert(Profile.spread(Seq(2.0)) == ((2.0, 0.0, 2.0)))
+    // quartiles of 1..5 sit on order statistics: 2 and 4
+    assert(Profile.spread(Seq(5.0, 1.0, 4.0, 2.0, 3.0)) == ((3.0, 2.0, 1.0)))
+    // of 1..4 they interpolate: 1.75 and 3.25
+    assert(Profile.spread(Seq(4.0, 3.0, 2.0, 1.0)) == ((2.5, 1.5, 1.0)))
   }
 
   test("Recorder sees a shuffling job's spans and stages once drained") {

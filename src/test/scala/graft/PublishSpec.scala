@@ -81,6 +81,24 @@ class PublishSpec extends AnyFunSuite {
       ("the delete of the marker", "delete", s"/\\.$q\\.commit$$"))
   }
 
+  /** Wait until no task is running. A failed write job leaves its
+    * other tasks running until they notice the kill; one of them can
+    * then open its part file after the next fault is armed, take that
+    * fault, and let the call meant to hit it succeed.
+    */
+  def quiesce(): Unit = {
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    def running: Int = {
+      org.apache.spark.sql.graft.bridge.drainListeners(sc)
+      sc.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum
+    }
+    while (running > 0) {
+      assert(System.nanoTime() < deadline, "tasks still running after 60 s")
+      Thread.sleep(20)
+    }
+  }
+
   /** Drive one adopter through every crash point. `arrange` builds a
     * fresh work tree; `run` is the entry under test; `state` reads the
     * target back; `target` names it inside the tree.
@@ -95,11 +113,13 @@ class PublishSpec extends AnyFunSuite {
       assert(old != want, "the entry changes nothing")
       FaultyFs.failNth(op, regex)
       intercept[Exception](run(w))
+      quiesce()
       assert(!FaultyFs.reset(), s"$point: fault never fired")
       // the next call settles on its own; failing its own stage right
       // after that leaves the settled target to read
       FaultyFs.failNth("create", crashes.head._3)
       Try(run(w))
+      quiesce()
       FaultyFs.reset()
       assert(state(w) == (if (i < 2) old else want), s"$point: settled state")
       run(w)
