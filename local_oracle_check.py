@@ -18,6 +18,9 @@ import time
 import duckdb
 import pandas as pd
 
+USAGE = __doc__.split("\n\n")[1].strip()
+if any(a.startswith("-") and a != "--no-run" for a in sys.argv[1:]):
+    sys.exit(USAGE)
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft-verify-out"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",

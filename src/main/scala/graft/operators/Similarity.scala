@@ -32,6 +32,18 @@ import org.apache.spark.sql.types._
   * `qid`/`cid` are `bigint`. A non-numeric id would cast to null and
   * those rows would be silently dropped; [[requireIntegralId]] rejects
   * that at plan time instead.
+  *
+  * INDEX CONTRACT: a built [[IvfIndex]] / [[IvfPqIndex]] carries the
+  * decisions of its build — the two-level assignment rule, and for
+  * IVF-PQ the subvector count `m` and codebook size — and every
+  * consumer (search, absorb, drift check, stats, maintain, the
+  * streaming absorb) reads them from the index; none takes them as a
+  * parameter. An index directory holds one parquet table per frame
+  * plus the `_build` record (`key=value` lines, read back without a
+  * Spark job); a directory without the record is refused. `save` is
+  * one [[graft.io.Publish.replace]] of the whole directory, and the
+  * stats savers publish `cellstats` the same way, so a crash leaves
+  * the old artifact or the new one, never a mix.
   */
 object Similarity {
 
@@ -86,11 +98,12 @@ object Similarity {
   private[operators] val TwoLevelAuto = 512
 
   /** The ONE two-level decision behind every IVF, IVF-PQ and SemDeDup
-    * entry point: the explicit flag, or `n` cells at or past
-    * [[TwoLevelAuto]]. IVF sites pass the SURVIVING quantizer size
-    * (hash-picked cells can leave fewer than the declared nlist), so
-    * build, absorb, drift check and stats assign a given index by the
-    * same rule. `n` is evaluated only when `atMost` — an upper bound
+    * build: the explicit flag, or `n` cells at or past
+    * [[TwoLevelAuto]]. IVF builds pass the SURVIVING quantizer size
+    * (hash-picked cells can leave fewer than the declared nlist) and
+    * record the result in the index, so absorb, drift check and stats
+    * assign a given index by the build's rule (INDEX CONTRACT).
+    * `n` is evaluated only when `atMost` — an upper bound
     * known without a job, the declared nlist at build — reaches the
     * threshold, so small builds run no count. An auto-engaged switch
     * logs one WARN: it changes results (approximate assignment,
@@ -533,7 +546,7 @@ object Similarity {
       "need 1 <= nprobe <= nlist and shortlist >= k")
     ivfPqSearch(queries,
       ivfPqBuild(candidates, nlist, m, codes, twoLevelAssign),
-      candidates, k, nprobe, shortlist, m)
+      candidates, k, nprobe, shortlist)
   }
 
   /** A built IVF-PQ index — three plain relational tables, the
@@ -547,32 +560,64 @@ object Similarity {
     * the index — the exact re-rank stage reads it from wherever it
     * already lives (the corpus parquet), exactly like a production
     * store keeps codes hot and fetches full vectors only for the
-    * shortlist. [[save]] persists all three as parquet;
-    * [[Similarity.ivfPqLoad]] reads them back; any engine can inspect
-    * them.
+    * shortlist. `m`, `codebookSize` (the build's `codes`) and
+    * `twoLevel` are the build's decisions, carried per the INDEX
+    * CONTRACT; [[save]] publishes the
+    * tables and the record, [[Similarity.ivfPqLoad]] reads them back,
+    * and any engine can inspect them.
     */
   final case class IvfPqIndex(coarse: DataFrame, codebook: DataFrame,
-                              codes: DataFrame,
-                              builtM: Option[Int] = None) {
-    // builtM: the subvector count the index was built with, carried
-    // in-process so every serve/absorb on a freshly-built index skips
-    // the codebook-max derivation JOB (r20: one driver action per
-    // serve; ~15 such jobs across the maintain gates). Persisted
-    // indexes don't carry it — ivfPqLoad leaves None and the first
-    // consumer derives it from the codebook exactly as before. Not
-    // part of equality/the storage contract.
-    def save(path: String): Unit = {
-      coarse.write.mode("overwrite").parquet(s"$path/coarse")
-      codebook.write.mode("overwrite").parquet(s"$path/codebook")
-      codes.write.mode("overwrite").parquet(s"$path/codes")
-    }
+                              codes: DataFrame, m: Int, codebookSize: Int,
+                              twoLevel: Boolean) {
+    def save(path: String): Unit = publishDir(coarse.sparkSession, path)(stage)
+
+    /** Write the tables and the build record into the fresh `dir`. */
+    private[graft] def stage(dir: String): Unit =
+      stageIndex(dir, Seq("coarse" -> coarse, "codebook" -> codebook,
+        "codes" -> codes), Seq("m" -> m.toString,
+        "codebookSize" -> codebookSize.toString,
+        "twoLevel" -> twoLevel.toString))
   }
 
   def ivfPqLoad(spark: org.apache.spark.sql.SparkSession,
-                path: String): IvfPqIndex =
+                path: String): IvfPqIndex = {
+    val build = loadRecord(spark, path)
     IvfPqIndex(spark.read.parquet(s"$path/coarse"),
       spark.read.parquet(s"$path/codebook"),
-      spark.read.parquet(s"$path/codes"))
+      spark.read.parquet(s"$path/codes"), build("m").toInt,
+      build("codebookSize").toInt, build("twoLevel").toBoolean)
+  }
+
+  /** The build record inside every saved index directory. */
+  private val BuildRecord = "_build"
+
+  private def stageIndex(dir: String, tables: Seq[(String, DataFrame)],
+                         record: Seq[(String, String)]): Unit = {
+    tables.foreach { case (name, df) => df.write.parquet(s"$dir/$name") }
+    val p = new org.apache.hadoop.fs.Path(dir, BuildRecord)
+    graft.io.TextFiles.writeParams(fsOf(tables.head._2.sparkSession, p),
+      p, record)
+  }
+
+  private def publishDir(spark: org.apache.spark.sql.SparkSession,
+                         path: String)(stage: String => Unit): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    graft.io.Publish.replace(fsOf(spark, p), p)(next => stage(next.toString))
+  }
+
+  private def loadRecord(spark: org.apache.spark.sql.SparkSession,
+                         path: String): String => String = {
+    val p = new org.apache.hadoop.fs.Path(path, BuildRecord)
+    val fs = fsOf(spark, p)
+    require(fs.exists(p), s"$path holds no $BuildRecord record: not an " +
+      "index directory written by IvfIndex.save / IvfPqIndex.save")
+    val record = graft.io.TextFiles.readParams(fs, p)
+    key => record.getOrElse(key, sys.error(s"$p lacks '$key'"))
+  }
+
+  private def fsOf(spark: org.apache.spark.sql.SparkSession,
+                   p: org.apache.hadoop.fs.Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Build the [[IvfPqIndex]]: coarse cells hash-seeded in-plan,
     * candidates assigned per-row (exact fold, or the two-level
@@ -617,11 +662,11 @@ object Similarity {
     // ([[ivfPqCellsTwoLevel]]). The query-side probe stays exact: its
     // cost is nq·nlist, and nq is serving-bounded, not corpus-bounded
     // (a corpus-as-queries caller should use ivfTopK's two-level probe).
-    // The rule keys on the SURVIVING cell count, as absorb, drift check
-    // and stats decide it, so they all assign a given index alike.
-    val assigned = ivfPqAssignResiduals(cand, coarse,
-      decideTwoLevel("ivfPqBuild", twoLevelAssign, coarse.count(),
-        atMost = nlist))
+    // The rule keys on the SURVIVING cell count and rides in the index,
+    // so absorb, drift check and stats assign later rows alike.
+    val twoLevel = decideTwoLevel("ivfPqBuild", twoLevelAssign,
+      coarse.count(), atMost = nlist)
+    val assigned = ivfPqAssignResiduals(cand, coarse, twoLevel)
 
     // one shared PQ codebook over residuals, seeded by hash bucket
     val seedIds = candidates
@@ -637,8 +682,8 @@ object Similarity {
     // free of the codebook re-derivation (the encode reads the
     // CHECKPOINTED frame, not the live chain)
     val cb = cents.localCheckpoint()
-    IvfPqIndex(coarse, cb, ivfPqEncode(assigned, cb, m, None),
-      builtM = Some(m))
+    IvfPqIndex(coarse, cb, ivfPqEncode(assigned, cb, m, None), m, codes,
+      twoLevel)
   }
 
   /** Serve top-`k` L2 neighbors against a built [[IvfPqIndex]]:
@@ -651,18 +696,14 @@ object Similarity {
     * for the ≤ shortlist·nq re-rank rows). All quantizer artifacts are
     * broadcast-tiny; both argmins collapse map-side.
     *
-    * `m` (the subvector count the index was built with) is taken from
-    * the caller when positive — the fused [[ivfPqTopK]] path passes it
-    * through so no extra job runs — and otherwise derived from the
-    * persisted codebook (one max over a codes×m-row broadcast-sized
-    * table, the [[ivfPqLoad]] path). The same STALENESS CONTRACT as
-    * [[ivfSearch]] applies: the index is a snapshot; rows appended to
-    * the corpus after [[ivfPqBuild]] are invisible until a rebuild.
+    * The subvector count comes from the index (INDEX CONTRACT). The
+    * same STALENESS CONTRACT as [[ivfSearch]] applies: the index is a
+    * snapshot; rows appended to the corpus after [[ivfPqBuild]] are
+    * invisible until a rebuild.
     */
   def ivfPqSearch(queries: DataFrame, index: IvfPqIndex, rerank: DataFrame,
-                  k: Int, nprobe: Int = 8, shortlist: Int = 100,
-                  m: Int = -1): DataFrame =
-    ivfPqServe(queries, index, rerank, None, k, nprobe, shortlist, m)
+                  k: Int, nprobe: Int = 8, shortlist: Int = 100): DataFrame =
+    ivfPqServe(queries, index, rerank, None, k, nprobe, shortlist)
 
   /** [[ivfPqSearch]] against a STALE [[IvfPqIndex]] plus the unindexed
     * `delta` — the same union mitigation [[ivfSearchWithDelta]] ships
@@ -677,9 +718,8 @@ object Similarity {
     */
   def ivfPqSearchWithDelta(queries: DataFrame, index: IvfPqIndex,
                            rerank: DataFrame, delta: DataFrame, k: Int,
-                           nprobe: Int = 8, shortlist: Int = 100,
-                           m: Int = -1): DataFrame =
-    ivfPqServe(queries, index, rerank, Some(delta), k, nprobe, shortlist, m)
+                           nprobe: Int = 8, shortlist: Int = 100): DataFrame =
+    ivfPqServe(queries, index, rerank, Some(delta), k, nprobe, shortlist)
 
   /** Fold the append log back INTO a built [[IvfPqIndex]] —
     * [[ivfAbsorbDelta]]'s contract on the production architecture:
@@ -697,40 +737,24 @@ object Similarity {
     * Same disjointness contract and absorb-vs-rebuild trade as
     * [[ivfAbsorbDelta]]: absorbed rows get probe-path + ADC recall
     * instead of the delta arm's exact scoring, and quantizer drift
-    * after many absorptions still means rebuild. `m` as in
-    * [[ivfPqSearch]]: positive = caller-known, otherwise derived from
-    * the persisted codebook; a mismatched m raises in-plan via the
-    * same width guard the serve path ships.
+    * after many absorptions still means rebuild. An index whose `m`
+    * does not match its codebook raises in-plan via the encode's width
+    * guard.
     */
-  def ivfPqAbsorbDelta(index: IvfPqIndex, delta: DataFrame,
-                       m: Int = -1,
-                       twoLevelAssign: Boolean = false): IvfPqIndex = {
+  def ivfPqAbsorbDelta(index: IvfPqIndex, delta: DataFrame): IvfPqIndex = {
     requireIntegralId(delta, VecId)
-    val mEff =
-      if (m > 0) m
-      else index.builtM.getOrElse(
-        index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
     val cand = delta.select(col(VecId).as("cid"), dbl(col(Embedding)).as("cv"))
-    val coarse = index.coarse
-    // quantizer-sized count, never the corpus
     val encoded = ivfPqEncode(
-      ivfPqAssignResiduals(cand, coarse, decideTwoLevel("ivfPqAbsorbDelta",
-        twoLevelAssign, coarse.count())),
-      index.codebook, mEff, Some("ivfPqAbsorbDelta"))
-    IvfPqIndex(coarse, index.codebook,
-      index.codes.unionByName(encoded), builtM = Some(mEff))
+      ivfPqAssignResiduals(cand, index.coarse, index.twoLevel),
+      index.codebook, index.m, Some("ivfPqAbsorbDelta"))
+    index.copy(codes = index.codes.unionByName(encoded))
   }
 
   private def ivfPqServe(queries: DataFrame, index: IvfPqIndex,
                          rerank: DataFrame, delta: Option[DataFrame],
-                         k: Int, nprobe: Int, shortlist: Int,
-                         m: Int): DataFrame = {
+                         k: Int, nprobe: Int, shortlist: Int): DataFrame = {
     require(shortlist >= k, "need shortlist >= k")
     requireIntegralId(queries, VecId)
-    val mEff =
-      if (m > 0) m
-      else index.builtM.getOrElse(
-        index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
     import graft.functions.VecKernels.{vec_sqdist_d, vec_sub_d}
     def l2(a: Column, b: Column) = vec_sqdist_d(a, b)
 
@@ -765,21 +789,21 @@ object Similarity {
 
     // per-(query, probed cell) ADC table against the shared codebook
     val adc = probes.select(col("qid"), col("cell"),
-        subSplitExplode(col("qrv"), mEff))
+        subSplitExplode(col("qrv"), index.m))
       .withColumnRenamed("pos", "sub").withColumnRenamed("col", "qsv")
       .join(broadcast(cents), "sub")
-      // in-plan guard, zero extra jobs: a caller-passed m that
-      // mismatches the index's built m slices query residuals into
-      // subvectors of a different width than the codebook's — without
-      // this check the zip_with yields nulls and the shortlist goes
-      // silently wrong/empty
+      // in-plan guard, zero extra jobs: an index whose recorded m does
+      // not match the codebook read from disk slices query residuals
+      // into subvectors of a different width than the codebook's —
+      // without this check the zip_with yields nulls and the shortlist
+      // goes silently wrong/empty
       .select(col("qid"), col("cell"), col("sub"), col("_code"),
         when(size(col("qsv")) =!= size(col("cvec")),
           raise_error(concat(lit("ivfPqSearch: subvector width "),
             size(col("qsv")).cast(StringType),
             lit(" != codebook width "),
             size(col("cvec")).cast(StringType),
-            lit(" — the m passed to search must match the built index"))))
+            lit(" — the index's m does not match its codebook"))))
           .otherwise(l2(col("qsv"), col("cvec")))
           .cast(DecimalType(28, 12)).as("_d"))
 
@@ -851,45 +875,46 @@ object Similarity {
       .withColumnRenamed("pos", "table")
       .withColumnRenamed("col", "bucket")
 
+  /** The one LSH shape every build and search uses: 4 bits × 16
+    * tables (the recall tuning on [[annTopK]]).
+    */
+  private val LshBits = 4
+  private val LshTableCount = 16
+
   /** The PERSISTABLE LSH index asset — the sim16 build/serve split for
-    * the hyperplane-LSH family, which until now existed only fused
-    * ([[annTopK]] re-derives every corpus signature per query batch):
-    * (vec_id, table, bucket), one 24-byte row per (vector, table) —
-    * raw vectors deliberately NOT included (the re-rank side lives
-    * with the corpus, the IvfPqIndex contract). Because the
-    * hyperplanes are derived from (table·bits + j) hashes rather than
-    * a stored projection matrix, the asset needs NO quantizer
-    * artifact: a query batch re-derives the identical planes from the
-    * same (bits, tables) — persist those two ints next to the table
-    * (a mismatched serve simply stops colliding, the undetectable-
-    * from-rows caveat the MinHash registry documents). Same staleness
+    * the hyperplane-LSH family: (vec_id, table, bucket), one 24-byte
+    * row per (vector, table) — raw vectors deliberately NOT included
+    * (the re-rank side lives with the corpus, the IvfPqIndex
+    * contract). Because the hyperplanes are derived from
+    * (table·bits + j) hashes rather than a stored projection matrix,
+    * the asset needs NO quantizer artifact: a query batch re-derives
+    * the identical planes from the one fixed shape. Same staleness
     * contract as every persisted index here; append-absorb is EXACT
     * like [[bqAbsorbDelta]] (the encoder is stateless — new rows band
     * through the same definition and append).
     */
-  def lshBuild(df: DataFrame, bits: Int = 4, tables: Int = 16): DataFrame = {
+  def lshBuild(df: DataFrame): DataFrame = {
     requireIntegralId(df, VecId)
-    lshTables(df, bits, tables)
+    lshTables(df, LshBits, LshTableCount)
       .select(col(VecId).cast(LongType).as(VecId), col("table"),
         col("bucket"))
   }
 
   /** Serve top-k against a PRE-BUILT [[lshBuild]] table (typically
     * persisted parquet): the query batch derives its own signatures
-    * (same (bits, tables) ⇒ same hyperplanes), candidates meet in the
+    * (same shape ⇒ same hyperplanes), candidates meet in the
     * (table, bucket) equi-join against the persisted layout — the
-    * corpus-sized signature derivation [[annTopK]] pays per call never
-    * runs — and the exact cosine + bounded top-k scores only the
-    * colliding candidates against `rerank` (the raw corpus handle).
-    * EQUIVALENCE (sim35 pins it): row-for-row identical to the fused
-    * [[annTopK]] at the same (bits, tables) — the signatures are
-    * value-deterministic, so persistence changes where they are read
-    * from, never what they are.
+    * corpus-sized signature derivation never runs — and the exact
+    * cosine + bounded top-k scores only the colliding candidates
+    * against `rerank` (the raw corpus handle). EQUIVALENCE (sim35
+    * pins it): [[annTopK]] is this search over a fresh [[lshBuild]] —
+    * the signatures are value-deterministic, so persistence changes
+    * where they are read from, never what they are.
     */
   def lshSearch(queries: DataFrame, index: DataFrame, rerank: DataFrame,
-                k: Int, bits: Int = 4, tables: Int = 16): DataFrame = {
+                k: Int): DataFrame = {
     requireIntegralIds(queries, rerank)
-    val qb = lshTables(queries, bits, tables)
+    val qb = lshTables(queries, LshBits, LshTableCount)
       .select(col(VecId).cast(LongType).as("qid"), col("table"),
         col("bucket"))
     val cb = index.select(col(VecId).as("cid"), col("table"), col("bucket"))
@@ -899,6 +924,11 @@ object Similarity {
     val qv = queries.select(col(VecId).cast(LongType).as("qid"),
       col(Embedding).as("qv"))
     val cv = rerank.select(col(VecId).as("cid"), col(Embedding).as("cv"))
+    // bounded map-side top-k (see cosineTopK): the LSH candidate set per
+    // query is ≈ tables/2^bits of the corpus on a structure-free corpus
+    // — linear in N — so the old per-query rank window shipped a
+    // linear-in-N row set to one task per query; the aggregate's
+    // exchange carries ≤ k pairs per (query × partition)
     presentTopK(pairs.join(broadcast(qv), "qid").join(cv, "cid")
       .select(col("qid"), col("cid").cast(LongType).as("cid"),
         cosine(col("qv"), col("cv")).as("sim")), k)
@@ -931,20 +961,28 @@ object Similarity {
     * `pinProbeParallelism`: pass TRUE when `queries` IS the corpus
     * (the kNN-graph build, sim12's shape) — the pair-scoring stage is
     * then CPU-dense with kilobyte-sized shuffle stats, exactly what
-    * AQE's byte-based coalescing misjudges into a one-task stage (see
-    * [[ivfSearch]]'s scaladoc for the measured flip). Leave FALSE
-    * (default) for nq-sized query sides: there the probe set should
-    * stay broadcastable and AQE keeps its freedom — pinning a tiny
-    * probe side would force a corpus-sided exchange the broadcast
-    * plan never pays.
+    * AQE's byte-based coalescing misjudges into a one-task stage. The
+    * pin keeps the probe-side exchange at the full session
+    * shuffle-partition count instead of letting AQE coalesce it by
+    * BYTES: the cell join's output explodes ×(cell width) in CPU while
+    * its shuffled input stays kilobytes — with a corpus-sized query
+    * side AQE folded the whole pair-scoring stage into ONE task
+    * (measured r20, sim12 at sf0.1: a 7–11 s single-task stage vs 3
+    * tasks on the runs where the size estimate landed differently —
+    * the five BENCH_NOTES "sim12 transient" observations were this
+    * plan flip, not JVM noise). The pin is an explicit
+    * repartition-by-number on the join key, which AQE never rewrites.
+    * Leave FALSE (default) for nq-sized query sides: there the probe
+    * set should stay broadcastable and AQE keeps its freedom — pinning
+    * a tiny probe side would force a corpus-sided exchange the
+    * broadcast plan never pays.
     */
   def ivfTopK(queries: DataFrame, candidates: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 8,
               twoLevelAssign: Boolean = false,
               pinProbeParallelism: Boolean = false): DataFrame = {
     requireIntegralIds(queries, candidates)
-    val (index, twoLevel) =
-      ivfBuildDecided(candidates, nlist, twoLevelAssign)
+    val index = ivfBuild(candidates, nlist, twoLevelAssign)
     val g = math.max(1, math.round(math.sqrt(nlist.toDouble)).toInt)
     // AVERAGE-capacity sanity bound, not a guarantee: leader groups
     // are hash-picked and nearest-leader regrouping makes them uneven,
@@ -956,32 +994,38 @@ object Similarity {
     // the centroids that actually survive build (hash-bucket
     // collisions can leave fewer), so treat this as an approximate
     // config check, not a bound on the executed geometry.
-    if (twoLevel) require(nprobe <= LeaderGroups * (nlist / g),
+    if (index.twoLevel) require(nprobe <= LeaderGroups * (nlist / g),
       s"two-level probes see ~$LeaderGroups*(nlist/g) cells on average: " +
         s"nprobe=$nprobe > $LeaderGroups*${nlist / g}")
-    ivfSearch(queries, index, k, nprobe, twoLevel, pinProbeParallelism)
+    presentTopK(ivfPairs(queries, index, nprobe, pinProbeParallelism), k)
   }
 
   /** A built IVF index: `centroids` is the coarse quantizer
     * (centroid_id, cvec array<double>, cnorm), `cells` the cell-keyed
     * corpus (cid, cv array<double>, cn, centroid_id) — vectors stored
-    * cell-ordered, the layout a production vector store serves from.
-    * Both frames are plain relational tables: [[save]] persists them
-    * as parquet, [[Similarity.ivfLoad]] reads them back, and any
+    * cell-ordered, the layout a production vector store serves from —
+    * and `twoLevel` the build's assignment rule (INDEX CONTRACT).
+    * Both frames are plain relational tables: [[save]] publishes them
+    * with the record, [[Similarity.ivfLoad]] reads them back, and any
     * engine can inspect them.
     */
-  final case class IvfIndex(centroids: DataFrame, cells: DataFrame) {
-    def save(path: String): Unit = {
-      centroids.write.mode("overwrite").parquet(s"$path/centroids")
-      cells.write.mode("overwrite").parquet(s"$path/cells")
-    }
+  final case class IvfIndex(centroids: DataFrame, cells: DataFrame,
+                            twoLevel: Boolean) {
+    def save(path: String): Unit =
+      publishDir(centroids.sparkSession, path)(stage)
+
+    /** Write the tables and the build record into the fresh `dir`. */
+    private[graft] def stage(dir: String): Unit =
+      stageIndex(dir, Seq("centroids" -> centroids, "cells" -> cells),
+        Seq("twoLevel" -> twoLevel.toString))
   }
 
   /** Load an [[IvfIndex]] persisted by `IvfIndex.save`. */
   def ivfLoad(spark: org.apache.spark.sql.SparkSession,
               path: String): IvfIndex =
     IvfIndex(spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/cells"))
+      spark.read.parquet(s"$path/cells"),
+      loadRecord(spark, path)("twoLevel").toBoolean)
 
   // ---- IVF internals (shared by build and search) -----------------------
 
@@ -1274,24 +1318,17 @@ object Similarity {
     * The centroid table is localCheckpoint-materialized in BOTH
     * modes: leaders/groups derive from it here AND in [[ivfSearch]],
     * and the live centroid chain re-scans the corpus per reference
-    * (the measured r15 trap) — materializing once also makes every
-    * ivfSearch flag combination safe on any built index.
+    * (the measured r15 trap).
     *
     * The two-level path also engages by itself once [[TwoLevelAuto]]
     * centroids survive the hash pick (nlist ∝ N ⇒ the exact candidate
     * assignment is quadratic) — the surviving count, not the declared
-    * nlist, so [[ivfAbsorbDelta]] and [[ivfDriftCheck]] assign later
-    * rows by the rule the build used.
+    * nlist. The index records the decision, so [[ivfSearch]],
+    * [[ivfAbsorbDelta]] and [[ivfDriftCheck]] treat later rows by the
+    * rule the build used.
     */
   def ivfBuild(candidates: DataFrame, nlist: Int = 16,
-               twoLevelAssign: Boolean = false): IvfIndex =
-    ivfBuildDecided(candidates, nlist, twoLevelAssign)._1
-
-  /** [[ivfBuild]] plus the two-level decision it took, which
-    * [[ivfTopK]] hands on to its query-side probe.
-    */
-  private def ivfBuildDecided(candidates: DataFrame, nlist: Int,
-                              twoLevelAssign: Boolean): (IvfIndex, Boolean) = {
+               twoLevelAssign: Boolean = false): IvfIndex = {
     requireIntegralId(candidates, VecId)
     // seed centroids picked ENTIRELY in-plan: min id per
     // pmod(xxhash64(id), nlist) hash bucket — ≤ nlist well-spread ids
@@ -1309,25 +1346,21 @@ object Similarity {
     // corpus groupBy + join), and the index is referenced from the
     // build's assignment, from ivfSearch's probe side, and — in
     // two-level mode — from the leader/group derivations on BOTH
-    // sides. Materializing once also makes EVERY ivfSearch flag
-    // combination safe on any built index: a twoLevelAssign=true
-    // search over an exact-built fused index derives its leaders from
-    // nlist materialized rows, never from ~5 corpus re-scans (the
-    // measured r15 trap).
+    // sides, which then read nlist materialized rows, never ~5 corpus
+    // re-scans (the measured r15 trap).
     val centroids = seeds
       .withColumn("cnorm", sqrt(ivfDot(col("cvec"), col("cvec"))))
       .localCheckpoint()
     val twoLevel = decideTwoLevel("ivfBuild", twoLevelAssign,
       centroids.count(), atMost = nlist)
-    (IvfIndex(centroids,
-      ivfAssignCells(candidates, centroids, twoLevel)),
+    IvfIndex(centroids, ivfAssignCells(candidates, centroids, twoLevel),
       twoLevel)
   }
 
   /** Serve top-`k` against a built [[IvfIndex]] — queries assign to
     * their `nprobe` nearest centroids (exact over the index's
     * quantizer, or two-level through [[LeaderGroups]] leader groups
-    * when the quantizer is corpus-scaled) and meet the cell-keyed corpus in
+    * when the index was built two-level) and meet the cell-keyed corpus in
     * a hash equi-join on centroid id. The final top-k runs through the
     * same bounded aggregate as the assignment: the exchange carries
     * ≤ k pairs per (query × partition), never the ≈ nprobe/nlist·N
@@ -1351,26 +1384,10 @@ object Similarity {
     * index silently degrades recall with zero errors, which is why
     * this is a documented contract and a pinned spec
     * (PipelineSpec "IVF index staleness"), not just behavior.
-    *
-    * `pinProbeParallelism`: keep the probe-side exchange at the full
-    * session shuffle-partition count instead of letting AQE coalesce
-    * it by BYTES. The cell join's output explodes ×(cell width) in
-    * CPU while its shuffled input stays kilobytes — exactly the shape
-    * byte-based coalescing misjudges: with a corpus-sized query side
-    * AQE folded the whole pair-scoring stage into ONE task (measured
-    * r20, sim12 at sf0.1: a 7–11 s single-task stage vs 3 tasks on the
-    * runs where the size estimate landed differently — the five
-    * BENCH_NOTES "sim12 transient" observations were this plan flip,
-    * not JVM noise). The pin is an explicit repartition-by-number on
-    * the join key, which AQE never rewrites. Default OFF: for the
-    * normal nq-sized query side, coalescing tiny probe exchanges is
-    * right.
     */
   def ivfSearch(queries: DataFrame, index: IvfIndex, k: Int,
-                nprobe: Int = 8, twoLevelAssign: Boolean = false,
-                pinProbeParallelism: Boolean = false): DataFrame =
-    presentTopK(ivfPairs(queries, index, nprobe, twoLevelAssign,
-      pinProbeParallelism), k)
+                nprobe: Int = 8): DataFrame =
+    presentTopK(ivfPairs(queries, index, nprobe), k)
 
   /** Serve top-`k` against a STALE [[IvfIndex]] plus the unindexed
     * `delta` — the union mitigation the staleness contract above
@@ -1396,9 +1413,9 @@ object Similarity {
     * being small, that IS the rebuild signal.
     */
   def ivfSearchWithDelta(queries: DataFrame, index: IvfIndex,
-                         delta: DataFrame, k: Int, nprobe: Int = 8,
-                         twoLevelAssign: Boolean = false): DataFrame = {
-    val indexed = ivfPairs(queries, index, nprobe, twoLevelAssign)
+                         delta: DataFrame, k: Int,
+                         nprobe: Int = 8): DataFrame = {
+    val indexed = ivfPairs(queries, index, nprobe)
     val fresh = scoredPairs(queries, delta, exact = false)
     presentTopK(indexed.unionByName(fresh), k)
   }
@@ -1434,16 +1451,10 @@ object Similarity {
     * the two differ only in the delta slice's recall (probe-path vs
     * exact), which is the absorb-vs-delta-arm trade by construction.
     */
-  def ivfAbsorbDelta(index: IvfIndex, delta: DataFrame,
-                     twoLevelAssign: Boolean = false): IvfIndex = {
+  def ivfAbsorbDelta(index: IvfIndex, delta: DataFrame): IvfIndex = {
     requireIntegralId(delta, VecId)
-    val centroids = index.centroids
-    // nlist-sized count (the gOf discipline), never the corpus: the
-    // auto two-level switch keys on the PERSISTED quantizer's size
-    val twoLevel = decideTwoLevel("ivfAbsorbDelta", twoLevelAssign,
-      centroids.count())
-    IvfIndex(centroids, index.cells.unionByName(
-      ivfAssignCells(delta, centroids, twoLevel)))
+    index.copy(cells = index.cells.unionByName(
+      ivfAssignCells(delta, index.centroids, index.twoLevel)))
   }
 
   /** Per-cell assignment-quality statistics of a built [[IvfIndex]] —
@@ -1470,11 +1481,14 @@ object Similarity {
         (sum(col("_d").cast(DecimalType(30, 12))) / count(lit(1)))
           .cast(DoubleType).as("mean_dist"))
 
-  /** Persist [[ivfCellStats]] next to the index artifacts (one pass
-    * over the cells, amortized into the build/save cadence).
+  /** Publish [[ivfCellStats]] as `cellstats` inside the index directory
+    * (one pass over the cells, amortized into the build/save cadence).
     */
   def ivfSaveStats(index: IvfIndex, path: String): Unit =
-    ivfCellStats(index).write.mode("overwrite").parquet(s"$path/cellstats")
+    saveStats(ivfCellStats(index), path)
+
+  private def saveStats(stats: DataFrame, path: String): Unit =
+    publishDir(stats.sparkSession, s"$path/cellstats")(stats.write.parquet)
 
   /** Load the stats artifact persisted by [[ivfSaveStats]]. */
   def ivfLoadStats(spark: org.apache.spark.sql.SparkSession,
@@ -1540,21 +1554,19 @@ object Similarity {
     * instead of absorbing. This is an ACTION (one job over the delta),
     * sized to the absorb cadence it gates.
     */
-  def ivfDriftCheck(stats: DataFrame, centroids: DataFrame,
-                    delta: DataFrame,
-                    twoLevelAssign: Boolean = false): IvfDriftReport = {
+  def ivfDriftCheck(stats: DataFrame, index: IvfIndex,
+                    delta: DataFrame): IvfDriftReport = {
     requireIntegralId(delta, VecId)
+    val centroids = index.centroids
     // the delta must be assigned the way the BUILD assigned its cells,
     // or the report compares incompatible rules: a two-level-built
-    // index (nlist past the auto threshold) placed its rows through
-    // the leader-group fold, so an exact-assigned delta would land
-    // differently on an IN-distribution delta, inflating cellShift and
-    // biasing the fit low. Same auto-engage contract as every other
-    // entry point; the threshold doubles as the cost switch — the
-    // exact map-side fold is O(nlist) per row, the two-level arm
-    // O(√nlist). Quantizer-sized count, never the corpus.
+    // index placed its rows through the leader-group fold, so an
+    // exact-assigned delta would land differently on an
+    // IN-distribution delta, inflating cellShift and biasing the fit
+    // low. The build's rule doubles as the cost switch — the exact
+    // map-side fold is O(nlist) per row, the two-level arm O(√nlist).
     val scored =
-      if (decideTwoLevel("ivfDriftCheck", twoLevelAssign, centroids.count())) {
+      if (index.twoLevel) {
         // the build's own leader-group fold (identical cell
         // placement), distance recovered via one broadcast join on the
         // picked cell; the groupBy exchange inside the fold carries the
@@ -1617,13 +1629,9 @@ object Similarity {
     * [[ivfPqSaveStats]]; [[ivfLoadStats]] reads it back (the artifact
     * layout is family-agnostic).
     */
-  def ivfPqCellStats(index: IvfPqIndex, corpus: DataFrame,
-                     twoLevelAssign: Boolean = false): DataFrame = {
+  def ivfPqCellStats(index: IvfPqIndex, corpus: DataFrame): DataFrame = {
     requireIntegralId(corpus, VecId)
-    // quantizer-sized count, never the corpus
-    val twoLevel = decideTwoLevel("ivfPqCellStats", twoLevelAssign,
-      index.coarse.count())
-    pqPerCellResiduals(corpus, index.coarse, twoLevel)
+    pqPerCellResiduals(corpus, index.coarse, index.twoLevel)
       .select(col("cell"), col("_cnt").as("n"),
         (col("_sum") / col("_cnt")).cast(DoubleType).as("mean_dist"))
   }
@@ -1649,12 +1657,12 @@ object Similarity {
         sum(col("_d").cast(DecimalType(30, 12))).as("_sum"))
   }
 
-  /** Persist [[ivfPqCellStats]] next to the index artifacts — the
-    * fourth IVF-PQ artifact (coarse, codebook, codes, cellstats).
+  /** Publish [[ivfPqCellStats]] as `cellstats` inside the index
+    * directory — the fourth IVF-PQ artifact (coarse, codebook, codes,
+    * cellstats).
     */
   def ivfPqSaveStats(index: IvfPqIndex, corpus: DataFrame, path: String): Unit =
-    ivfPqCellStats(index, corpus)
-      .write.mode("overwrite").parquet(s"$path/cellstats")
+    saveStats(ivfPqCellStats(index, corpus), path)
 
   /** [[ivfDriftCheck]] for the IVF-PQ family: price a delta against
     * the coarse quantizer's build-time stats ([[ivfPqCellStats]]) in
@@ -1664,15 +1672,12 @@ object Similarity {
     * property of the coarse partition; a quantizer whose cells no
     * longer fit the data mis-buckets rows before any code is read.
     */
-  def ivfPqDriftCheck(stats: DataFrame, coarse: DataFrame,
-                      delta: DataFrame,
-                      twoLevelAssign: Boolean = false): IvfDriftReport = {
+  def ivfPqDriftCheck(stats: DataFrame, index: IvfPqIndex,
+                      delta: DataFrame): IvfDriftReport = {
     requireIntegralId(delta, VecId)
-    val twoLevel = decideTwoLevel("ivfPqDriftCheck", twoLevelAssign,
-      coarse.count())
     // single consumer — materializes once inside driftReport's mix
     // checkpoint; no second pin needed (r21)
-    val perCell = pqPerCellResiduals(delta, coarse, twoLevel)
+    val perCell = pqPerCellResiduals(delta, index.coarse, index.twoLevel)
       .select(col("cell"), col("_cnt").as("_dn"), col("_sum").as("_ds"))
     driftReport(perCell, stats, "cell", "ivfPqDriftCheck",
       "ivfPqBuild over the grown corpus")
@@ -1785,13 +1790,12 @@ object Similarity {
     */
   def ivfDeleteIds(index: IvfIndex, tombstones: DataFrame): IvfIndex = {
     val tCol = tombstones.columns.head
-    IvfIndex(index.centroids,
-      index.cells.join(
-        broadcast(tombstones
-          .select(castTombstone(col(tCol), LongType, "ivfDeleteIds")
-            .as("cid"))
-          .distinct()),
-        Seq("cid"), "left_anti"))
+    index.copy(cells = index.cells.join(
+      broadcast(tombstones
+        .select(castTombstone(col(tCol), LongType, "ivfDeleteIds")
+          .as("cid"))
+        .distinct()),
+      Seq("cid"), "left_anti"))
   }
 
   /** [[ivfDeleteIds]] on the production architecture: the integer
@@ -1805,13 +1809,12 @@ object Similarity {
     */
   def ivfPqDeleteIds(index: IvfPqIndex, tombstones: DataFrame): IvfPqIndex = {
     val tCol = tombstones.columns.head
-    IvfPqIndex(index.coarse, index.codebook,
-      index.codes.join(
-        broadcast(tombstones
-          .select(castTombstone(col(tCol), index.codes.schema("cid").dataType,
-            "ivfPqDeleteIds").as("cid"))
-          .distinct()),
-        Seq("cid"), "left_anti"), index.builtM)
+    index.copy(codes = index.codes.join(
+      broadcast(tombstones
+        .select(castTombstone(col(tCol), index.codes.schema("cid").dataType,
+          "ivfPqDeleteIds").as("cid"))
+        .distinct()),
+      Seq("cid"), "left_anti"))
   }
 
   /** What [[ivfMaintain]] did and why: the absorbed-or-rebuilt index,
@@ -1845,13 +1848,13 @@ object Similarity {
     * as a fresh [[ivfBuild]] over the grown corpus (build is
     * value-deterministic — hash-seeded centroids, per-row argmin — so
     * reconstruction from the cell table changes nothing). Rebuild
-    * keeps the index's own nlist.
+    * keeps the index's own nlist and two-level rule.
     */
-  def ivfMaintain(index: IvfIndex, stats: DataFrame, delta: DataFrame,
-                  twoLevelAssign: Boolean = false): IvfMaintainResult = {
-    val report = ivfDriftCheck(stats, index.centroids, delta, twoLevelAssign)
+  def ivfMaintain(index: IvfIndex, stats: DataFrame,
+                  delta: DataFrame): IvfMaintainResult = {
+    val report = ivfDriftCheck(stats, index, delta)
     if (!report.drifted)
-      IvfMaintainResult(ivfAbsorbDelta(index, delta, twoLevelAssign), report,
+      IvfMaintainResult(ivfAbsorbDelta(index, delta), report,
         rebuilt = false)
     else {
       logger.warn("graft ivfMaintain: drift verdict REBUILD — " +
@@ -1863,7 +1866,7 @@ object Similarity {
         .select(col("cid").cast(LongType).as(VecId), col("cv").as(Embedding))
         .unionByName(delta.select(col(VecId).cast(LongType).as(VecId),
           dbl(col(Embedding)).as(Embedding)))
-      IvfMaintainResult(ivfBuild(grown, nlist, twoLevelAssign), report,
+      IvfMaintainResult(ivfBuild(grown, nlist, index.twoLevel), report,
         rebuilt = true)
     }
   }
@@ -1881,44 +1884,34 @@ object Similarity {
     * rides in explicitly — it is the same handle the serve path
     * already requires as `rerank`, per the IvfPqIndex contract that
     * raw vectors live outside the index. Rebuild keeps the index's own
-    * nlist and m (m derived from the codebook when not caller-known,
-    * the [[ivfPqSearch]] pattern); `codes` cannot be derived from a
-    * possibly-gapped codebook, so pass the build's own value when it
-    * wasn't the default.
+    * nlist and the build decisions it carries (INDEX CONTRACT).
     */
   def ivfPqMaintain(index: IvfPqIndex, stats: DataFrame,
-                    corpus: DataFrame, delta: DataFrame,
-                    m: Int = -1, codes: Int = 32,
-                    twoLevelAssign: Boolean = false): IvfPqMaintainResult = {
-    val report = ivfPqDriftCheck(stats, index.coarse, delta, twoLevelAssign)
+                    corpus: DataFrame, delta: DataFrame): IvfPqMaintainResult = {
+    val report = ivfPqDriftCheck(stats, index, delta)
     if (!report.drifted)
-      IvfPqMaintainResult(ivfPqAbsorbDelta(index, delta, m,
-        twoLevelAssign), report, rebuilt = false)
+      IvfPqMaintainResult(ivfPqAbsorbDelta(index, delta), report,
+        rebuilt = false)
     else {
       logger.warn("graft ivfPqMaintain: drift verdict REBUILD — " +
         "re-training coarse quantizer and codebook over the grown " +
         "corpus instead of absorbing (re-derive stats on save).")
       val nlist = index.coarse.count().toInt // quantizer-sized
-      val mEff =
-        if (m > 0) m
-        else index.builtM.getOrElse(
-          index.codebook.agg(max(col("sub"))).head().getInt(0) + 1)
       val grown = corpus
         .select(col(VecId).cast(LongType).as(VecId),
           dbl(col(Embedding)).as(Embedding))
         .unionByName(delta.select(col(VecId).cast(LongType).as(VecId),
           dbl(col(Embedding)).as(Embedding)))
-      IvfPqMaintainResult(ivfPqBuild(grown, nlist, mEff, codes,
-        twoLevelAssign), report, rebuilt = true)
+      IvfPqMaintainResult(ivfPqBuild(grown, nlist, index.m,
+        index.codebookSize, index.twoLevel), report, rebuilt = true)
     }
   }
 
   private def ivfPairs(queries: DataFrame, index: IvfIndex, nprobe: Int,
-                       twoLevelAssign: Boolean,
                        pinProbeParallelism: Boolean = false): DataFrame = {
     requireIntegralId(queries, VecId)
     val probes0 =
-      if (twoLevelAssign) {
+      if (index.twoLevel) {
         // g re-derives from the index itself (√nlist of the PERSISTED
         // quantizer): leaders must group identically across build and
         // search, including after a save/load round-trip
@@ -1934,7 +1927,7 @@ object Similarity {
     // side's exchange, which — tiny in bytes — coalesces to one task):
     // together they keep the CPU-dense pair-scoring stage at full
     // parallelism even though every byte count in sight looks
-    // coalescible (see ivfSearch's pinProbeParallelism scaladoc for
+    // coalescible (see ivfTopK's pinProbeParallelism scaladoc for
     // the measured single-task collapse this prevents)
     val probes =
       if (pinProbeParallelism)
@@ -2038,57 +2031,6 @@ object Similarity {
         col("col").cast(DoubleType).as("coord"))
   }
 
-  /** ANN top-k through multi-table LSH: candidate pairs = union over
-    * `tables` independent signature tables of same-bucket meetings
-    * (measured on the test corpus: one 8-bit table recalls ~0% of true
-    * top-5 — moderate-cosine neighbors almost never agree on all 8
-    * random hyperplanes — while 4 bits × 16 tables recalls 0.88–0.90
-    * across sf0.001–0.1, vs 0.68–0.76 at 8 tables), then exact cosine +
-    * top-k on the deduped candidates.
-    *
-    * Scale shape: the table join shuffles (id, table, bucket) triples —
-    * never vectors; vectors re-join by id afterwards (queries broadcast,
-    * candidates hash join). Recall < 1 by construction; raise `tables`
-    * for recall, `bits` for precision. On a corpus without cluster
-    * structure a random pair still collides in some table with
-    * probability ≈ tables/2^bits, so `bits` must grow ~log2(corpus) to
-    * keep candidate volume sub-quadratic — the defaults suit the gate
-    * corpus; a 100 TB deployment sizes bits ≈ log2(N)−log2(avg bucket)
-    * and re-tunes tables to its recall target.
-    */
-  /** Two-stage retrieval over int8-quantized vectors — the
-    * memory-bounded search shape a 100 TB index actually serves from:
-    * the full-precision corpus stays on disk; RAM holds only the 4×
-    * smaller int8 codes ([[quantizeInt8]]'s symmetric scheme), and only
-    * the per-query `shortlist` survivors ever touch floats again.
-    *
-    *  1. Shortlist: every candidate is scored against the quantized
-    *     query by INTEGER dot product (exact int64 — 64 dims × 127²
-    *     fits a long with 38 bits to spare), rescaled by the candidate's
-    *     dequantization factor and norm:
-    *     `score1 = adot · am_c / ‖x_c‖` — a monotone proxy for cosine
-    *     up to the per-query constant `am_q / ‖x_q‖` (constants cannot
-    *     change a per-query ranking). Each factor is individually exact
-    *     (int sum; absmax; decimal norm² cast once to double) so the
-    *     three-op IEEE expression is engine-portable and the shortlist
-    *     is deterministic — ties break to the lower cid.
-    *  2. Re-rank: the ≤ `shortlist` pairs per query rescore with the
-    *     exact-decimal cosine ([[cosineExact]]'s discipline) and the
-    *     bounded [[TopKAgg]] emits the final top `k`. The decimal math
-    *     runs AFTER the shortlist join, so the full-precision pass
-    *     touches only `|Q|·shortlist` pairs — the corpus is never
-    *     re-projected into decimal.
-    *
-    * Zero-norm vectors are EXCLUDED on both sides (a cosine against
-    * the zero vector is undefined; Spark's 0/0 is NULL where DuckDB's
-    * is NaN, so excluding them is also what keeps the oracle
-    * row-for-row). Both rank stages are TopKAgg partial aggregates —
-    * exchange ≤ shortlist (stage 1) / k (stage 2) ids per query × map
-    * partition, never a per-query rank window. Every arithmetic step
-    * is deterministic cross-engine, so unlike the ANN family this
-    * approximate index gets a full row-for-row SQL oracle, not just a
-    * recall floor.
-    */
   /** Binary-quantized two-stage retrieval — the 1-bit compression
     * serving shape (32× smaller than int8, 256× smaller than doubles):
     * each vector packs to one sign bit per dimension (bit = xᵢ > 0,
@@ -2185,15 +2127,6 @@ object Similarity {
     codes.unionByName(binaryCodes(delta))
   }
 
-  /** Serve [[bqTopK]] against PRE-BUILT codes ([[binaryCodes]] output,
-    * typically a persisted parquet table): the hamming scan reads ONLY
-    * the ⌈d/64⌉-long code column — 1/64th the bytes of the raw doubles,
-    * the actual storage/bandwidth win of binary quantization — and raw
-    * vectors are fetched from `rerank` only for the ≤ shortlist·nq
-    * exact-decimal re-rank rows. Same staleness contract as every
-    * persisted index here: codes are a snapshot; rebuild (one narrow
-    * pass) or screen the append log separately.
-    */
   /** Shared exact-decimal cosine re-rank of a bounded (qid, cid)
     * shortlist against raw vectors — the final stage of every two-stage
     * retrieval here ([[bqSearch]], [[int8RerankTopK]]): the shortlist
@@ -2233,6 +2166,15 @@ object Similarity {
       .orderBy("qid", "rank")
   }
 
+  /** Serve [[bqTopK]] against PRE-BUILT codes ([[binaryCodes]] output,
+    * typically a persisted parquet table): the hamming scan reads ONLY
+    * the ⌈d/64⌉-long code column — 1/64th the bytes of the raw doubles,
+    * the actual storage/bandwidth win of binary quantization — and raw
+    * vectors are fetched from `rerank` only for the ≤ shortlist·nq
+    * exact-decimal re-rank rows. Same staleness contract as every
+    * persisted index here: codes are a snapshot; rebuild (one narrow
+    * pass) or screen the append log separately.
+    */
   def bqSearch(queries: DataFrame, codes: DataFrame, rerank: DataFrame,
                k: Int, shortlist: Int = 50): DataFrame = {
     require(shortlist >= k, s"need shortlist >= k, got $shortlist < $k")
@@ -2257,6 +2199,39 @@ object Similarity {
     exactCosineRerank(sl, queries, rerank, k, dropZeroNormQueries = false)
   }
 
+  /** Two-stage retrieval over int8-quantized vectors — the
+    * memory-bounded search shape a 100 TB index actually serves from:
+    * the full-precision corpus stays on disk; RAM holds only the 4×
+    * smaller int8 codes ([[quantizeInt8]]'s symmetric scheme), and only
+    * the per-query `shortlist` survivors ever touch floats again.
+    *
+    *  1. Shortlist: every candidate is scored against the quantized
+    *     query by INTEGER dot product (exact int64 — 64 dims × 127²
+    *     fits a long with 38 bits to spare), rescaled by the candidate's
+    *     dequantization factor and norm:
+    *     `score1 = adot · am_c / ‖x_c‖` — a monotone proxy for cosine
+    *     up to the per-query constant `am_q / ‖x_q‖` (constants cannot
+    *     change a per-query ranking). Each factor is individually exact
+    *     (int sum; absmax; decimal norm² cast once to double) so the
+    *     three-op IEEE expression is engine-portable and the shortlist
+    *     is deterministic — ties break to the lower cid.
+    *  2. Re-rank: the ≤ `shortlist` pairs per query rescore with the
+    *     exact-decimal cosine ([[cosineExact]]'s discipline) and the
+    *     bounded [[TopKAgg]] emits the final top `k`. The decimal math
+    *     runs AFTER the shortlist join, so the full-precision pass
+    *     touches only `|Q|·shortlist` pairs — the corpus is never
+    *     re-projected into decimal.
+    *
+    * Zero-norm vectors are EXCLUDED on both sides (a cosine against
+    * the zero vector is undefined; Spark's 0/0 is NULL where DuckDB's
+    * is NaN, so excluding them is also what keeps the oracle
+    * row-for-row). Both rank stages are TopKAgg partial aggregates —
+    * exchange ≤ shortlist (stage 1) / k (stage 2) ids per query × map
+    * partition, never a per-query rank window. Every arithmetic step
+    * is deterministic cross-engine, so unlike the ANN family this
+    * approximate index gets a full row-for-row SQL oracle, not just a
+    * recall floor.
+    */
   def int8RerankTopK(queries: DataFrame, candidates: DataFrame, k: Int,
                      shortlist: Int = 50): DataFrame = {
     requireIntegralIds(queries, candidates)
@@ -2290,28 +2265,26 @@ object Similarity {
     exactCosineRerank(sl, queries, candidates, k, dropZeroNormQueries = true)
   }
 
-  def annTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-              bits: Int = 4, tables: Int = 16): DataFrame = {
-    requireIntegralIds(queries, candidates)
-    val qb = lshTables(queries, bits, tables)
-      .select(col(VecId).cast(LongType).as("qid"), col("table"), col("bucket"))
-    val cb = lshTables(candidates, bits, tables)
-      .select(col(VecId).as("cid"), col("table"), col("bucket"))
-    val pairs = qb.join(cb, Seq("table", "bucket"))
-      .filter(col("qid") =!= col("cid"))
-      .select("qid", "cid").distinct()
-    val qv = queries.select(col(VecId).cast(LongType).as("qid"),
-      col(Embedding).as("qv"))
-    val cv = candidates.select(col(VecId).as("cid"), col(Embedding).as("cv"))
-    // bounded map-side top-k (see cosineTopK): the LSH candidate set per
-    // query is ≈ tables/2^bits of the corpus on a structure-free corpus
-    // — linear in N — so the old per-query rank window shipped a
-    // linear-in-N row set to one task per query; the aggregate's
-    // exchange carries ≤ k pairs per (query × partition)
-    presentTopK(pairs.join(broadcast(qv), "qid").join(cv, "cid")
-      .select(col("qid"), col("cid").cast(LongType).as("cid"),
-        cosine(col("qv"), col("cv")).as("sim")), k)
-  }
+  /** ANN top-k through multi-table LSH: candidate pairs = union over
+    * 16 independent 4-bit signature tables of same-bucket meetings
+    * (measured on the test corpus: one 8-bit table recalls ~0% of true
+    * top-5 — moderate-cosine neighbors almost never agree on all 8
+    * random hyperplanes — while 4 bits × 16 tables recalls 0.88–0.90
+    * across sf0.001–0.1, vs 0.68–0.76 at 8 tables), then exact cosine +
+    * top-k on the deduped candidates.
+    *
+    * Scale shape: the table join shuffles (id, table, bucket) triples —
+    * never vectors; vectors re-join by id afterwards (queries broadcast,
+    * candidates hash join). Recall < 1 by construction; more tables
+    * buy recall, more bits precision. On a corpus without cluster
+    * structure a random pair still collides in some table with
+    * probability ≈ tables/2^bits, so bits must grow ~log2(corpus) to
+    * keep candidate volume sub-quadratic — the fixed shape suits the gate
+    * corpus; a 100 TB deployment sizes bits ≈ log2(N)−log2(avg bucket)
+    * and re-tunes tables to its recall target.
+    */
+  def annTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame =
+    lshSearch(queries, lshBuild(candidates), candidates, k)
 
   /** Retrieval-quality metrics per query — the eval side of a serving
     * stack (recall@k, MRR, nDCG@k), computed from a ranked result list

@@ -3349,9 +3349,10 @@ object PipelineQueries {
         |     (SELECT count(*) AS n_all FROM embeddings) c""".stripMargin) { (s, dir) =>
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < 10)
-      withGateWork(s, "sim16", dir) { idxDir =>
-        Similarity.ivfBuild(e).save(idxDir)
-        val served = Similarity.ivfSearch(q, Similarity.ivfLoad(s, idxDir), 5)
+      withGateWork(s, "sim16", dir) { work =>
+        Similarity.ivfBuild(e).save(s"$work/idx")
+        val served = Similarity.ivfSearch(q,
+          Similarity.ivfLoad(s, s"$work/idx"), 5)
         recallFloor(Similarity.cosineTopK(q, e, 5), served, floorPct = 85)
       }
     },
@@ -3490,10 +3491,10 @@ object PipelineQueries {
         |     (SELECT count(*) AS n_all FROM embeddings) c""".stripMargin) { (s, dir) =>
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < 10)
-      withGateWork(s, "sim21", dir) { idxDir =>
-        Similarity.ivfPqBuild(e).save(idxDir)
-        val served = Similarity.ivfPqSearch(q, Similarity.ivfPqLoad(s, idxDir),
-          e, 5)
+      withGateWork(s, "sim21", dir) { work =>
+        Similarity.ivfPqBuild(e).save(s"$work/idx")
+        val served = Similarity.ivfPqSearch(q,
+          Similarity.ivfPqLoad(s, s"$work/idx"), e, 5)
         recallFloor(Similarity.l2TopK(q, e, 5), served, floorPct = 80)
       }
     },
@@ -3653,10 +3654,10 @@ object PipelineQueries {
       val stats = Similarity.ivfCellStats(idx).localCheckpoint()
       val slice = e.filter(col("vec_id") % 7 === 3)
         .select("vec_id", "embedding")
-      val clean = Similarity.ivfDriftCheck(stats, idx.centroids, slice)
+      val clean = Similarity.ivfDriftCheck(stats, idx, slice)
       val shifted = slice.select(col("vec_id"),
         transform(col("embedding"), x => x + lit(2.0)).as("embedding"))
-      val moved = Similarity.ivfDriftCheck(stats, idx.centroids, shifted)
+      val moved = Similarity.ivfDriftCheck(stats, idx, shifted)
       s.range(1).select(lit(clean.nDelta).as("n_delta"),
         lit(if (clean.drifted) 1L else 0L).as("clean_trips"),
         lit(if (moved.drifted) 1L else 0L).as("drifted_trips"))
@@ -3682,10 +3683,10 @@ object PipelineQueries {
       val stats = Similarity.ivfPqCellStats(idx, e).localCheckpoint()
       val slice = e.filter(col("vec_id") % 7 === 3)
         .select("vec_id", "embedding")
-      val clean = Similarity.ivfPqDriftCheck(stats, idx.coarse, slice)
+      val clean = Similarity.ivfPqDriftCheck(stats, idx, slice)
       val shifted = slice.select(col("vec_id"),
         transform(col("embedding"), x => x + lit(2.0)).as("embedding"))
-      val moved = Similarity.ivfPqDriftCheck(stats, idx.coarse, shifted)
+      val moved = Similarity.ivfPqDriftCheck(stats, idx, shifted)
       s.range(1).select(lit(clean.nDelta).as("n_delta"),
         lit(if (clean.drifted) 1L else 0L).as("clean_trips"),
         lit(if (moved.drifted) 1L else 0L).as("drifted_trips"))
@@ -3720,8 +3721,7 @@ object PipelineQueries {
       // job + block copy per gate run (r21); only the corpus-sized
       // cell assignment needs the pin here
       val idx0 = Similarity.ivfBuild(e)
-      val idx = Similarity.IvfIndex(idx0.centroids,
-        idx0.cells.localCheckpoint())
+      val idx = idx0.copy(cells = idx0.cells.localCheckpoint())
       val stats = Similarity.ivfCellStats(idx).localCheckpoint()
       val slice = e.filter(col("vec_id") % 7 === 3)
         .select((col("vec_id") + 200000L).as("vec_id"), col("embedding"))
@@ -3771,9 +3771,7 @@ object PipelineQueries {
       // extra jobs + block copies per gate run (r21); only the
       // corpus-sized codes table needs the pin here
       val idx0 = Similarity.ivfPqBuild(e)
-      val idx = Similarity.IvfPqIndex(idx0.coarse,
-        idx0.codebook, idx0.codes.localCheckpoint(),
-        idx0.builtM)
+      val idx = idx0.copy(codes = idx0.codes.localCheckpoint())
       val stats = Similarity.ivfPqCellStats(idx, e).localCheckpoint()
       val slice = e.filter(col("vec_id") % 7 === 3)
         .select((col("vec_id") + 200000L).as("vec_id"), col("embedding"))

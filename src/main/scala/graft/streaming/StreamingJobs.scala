@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.io.Publish
+import graft.io.{Publish, TextFiles}
 import graft.operators.Similarity.VecId
 
 /** Structured Streaming counterparts of the batch operators: the same
@@ -760,33 +760,10 @@ object StreamingJobs {
   private def writeParamsFile(fs: FileSystem, p: Path,
                               params: Seq[(String, String)]): Unit = {
     val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(params.map { case (k, v) => s"$k=$v" }.mkString("\n")
-      .getBytes("UTF-8"))
-    finally out.close()
+    TextFiles.writeParams(fs, tmp, params)
     fs.delete(p, false)
     if (!fs.rename(tmp, p)) sys.error(s"could not commit params file $p")
   }
-
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val b = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, b, 4096, false)
-      b.toString("UTF-8")
-    } finally in.close()
-  }
-
-  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readParamsFile(fs: FileSystem, p: Path): Map[String, String] =
-    readText(fs, p).linesIterator.filter(_.contains("=")).map { l =>
-      val i = l.indexOf('=')
-      l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
 
   /** Re-create the catalog entry for a surviving registry data
     * directory — the application-restart path: the parquet (and the
@@ -863,7 +840,7 @@ object StreamingJobs {
           "and must be re-banded into this layout regardless — " +
           "writeBandedRegistry over its signatures, then write the " +
           "params file")
-      val stored = readParamsFile(fs, paramsPath)
+      val stored = TextFiles.readParams(fs, paramsPath)
       params.foreach { case (k, v) =>
         val got = stored.getOrElse(k, "<absent>")
         require(got == v,
@@ -1148,7 +1125,7 @@ object StreamingJobs {
     if (Publish.recover(fs, new Path(regDir)))
       spark.sql(s"DROP TABLE IF EXISTS $regTable")
     require(fs.exists(new Path(regDir)), s"no registry at $regDir")
-    val params = readParamsFile(fs, new Path(s"$workDir/registry_params"))
+    val params = TextFiles.readParams(fs, new Path(s"$workDir/registry_params"))
     val regBuckets = params("regBuckets").toInt
     // id column name/type come from the data itself (first column of
     // the banded layout) — the one place they are always right. Read
@@ -1289,12 +1266,12 @@ object StreamingJobs {
     if (!fs.exists(parked)) return
     val record = new Path(parked, "_index")
     val indexed: Set[String] = if (!fs.exists(record)) Set.empty else {
-      val index = new Path(readText(fs, record))
+      val index = new Path(TextFiles.read(fs, record))
       val ifs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
       Publish.recover(ifs, index)
       val manifest = new Path(index, "_absorbed_batches")
       if (!ifs.exists(manifest)) Set.empty
-      else readText(ifs, manifest).linesIterator.map("batch=" + _).toSet
+      else TextFiles.read(ifs, manifest).linesIterator.map("batch=" + _).toSet
     }
     fs.listStatus(parked).map(_.getPath)
       .filter(b => b.getName.startsWith("batch=") && !indexed(b.getName))
@@ -1412,14 +1389,12 @@ object StreamingJobs {
     * [[vectorDeltaStream]]).
     */
   def ivfAbsorbLog(spark: org.apache.spark.sql.SparkSession,
-                   indexPath: String, workDir: String,
-                   twoLevelAssign: Boolean = false): Seq[Long] =
+                   indexPath: String, workDir: String): Seq[Long] =
     absorbLogCore(spark, indexPath, workDir, "ivfAbsorbLog") {
       (delta, staging) =>
         graft.operators.Similarity.ivfAbsorbDelta(
-            graft.operators.Similarity.ivfLoad(spark, indexPath), delta,
-            twoLevelAssign)
-          .save(staging)
+            graft.operators.Similarity.ivfLoad(spark, indexPath), delta)
+          .stage(staging)
     }
 
   /** [[ivfAbsorbLog]] on the production architecture: the log's rows
@@ -1431,21 +1406,20 @@ object StreamingJobs {
     * the IvfPqIndex contract).
     */
   def ivfPqAbsorbLog(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, workDir: String,
-                     m: Int = -1, twoLevelAssign: Boolean = false): Seq[Long] =
+                     indexPath: String, workDir: String): Seq[Long] =
     absorbLogCore(spark, indexPath, workDir, "ivfPqAbsorbLog") {
       (delta, staging) =>
         graft.operators.Similarity.ivfPqAbsorbDelta(
-            graft.operators.Similarity.ivfPqLoad(spark, indexPath), delta,
-            m, twoLevelAssign)
-          .save(staging)
+            graft.operators.Similarity.ivfPqLoad(spark, indexPath), delta)
+          .stage(staging)
     }
 
   /** The ONE absorb-and-GC core behind [[ivfAbsorbLog]] and
     * [[ivfPqAbsorbLog]] — `absorbTo` reads the live index itself and
-    * writes the absorbed one to the staging path it is given; the
-    * committed check, the publish, and the log GC live exactly once
-    * here (the foldRegistry shape).
+    * writes the absorbed one to the staging path it is given through
+    * the index's own `stage` (the writer inside `save`'s publish, so
+    * no publish nests in this one); the committed check, the publish,
+    * and the log GC live exactly once here (the foldRegistry shape).
     *
     * Crash safety: the new index, with its `_absorbed_batches`
     * manifest inside, is staged by [[graft.io.Publish]]; still inside
@@ -1506,7 +1480,7 @@ object StreamingJobs {
       absorbTo(delta, staging.toString)
       // the manifest rides INSIDE the new index: it is what settles
       // an interrupted absorb (see settleDelta)
-      writeText(ifs, new Path(staging, "_absorbed_batches"),
+      TextFiles.write(ifs, new Path(staging, "_absorbed_batches"),
         batches.mkString("\n"))
       // sibling artifacts the save functions don't know about (e.g.
       // the cellstats drift baseline, which must KEEP describing the
@@ -1517,7 +1491,7 @@ object StreamingJobs {
         .foreach(a => require(org.apache.hadoop.fs.FileUtil.copy(ifs, a, ifs,
           new Path(staging, a.getName), false, ifs.getConf),
           s"$what: could not carry $a into the new index"))
-      writeText(fs, new Path(parked, "_index"), index.toString)
+      TextFiles.write(fs, new Path(parked, "_index"), index.toString)
       batches.foreach { b =>
         if (!fs.rename(new Path(s"$deltaDir/batch=$b"),
             new Path(parked, s"batch=$b")))

@@ -73,8 +73,7 @@ class PipelineSpec extends AnyFunSuite {
       graft.operators.Similarity.cosineTopK(
         e.filter($"vec_id" === 1), e, 2, exact = false),
       graft.operators.Similarity.l2TopK(e.filter($"vec_id" === 1), e, 2),
-      graft.operators.Similarity.annTopK(
-        e.filter($"vec_id" === 1), e, 2, bits = 1, tables = 4))) {
+      graft.operators.Similarity.annTopK(e.filter($"vec_id" === 1), e, 2))) {
       assert(r.schema("qid").dataType == LongType, r.schema.treeString)
       assert(r.schema("cid").dataType == LongType, r.schema.treeString)
       assert(r.count() >= 1)
@@ -335,15 +334,20 @@ class PipelineSpec extends AnyFunSuite {
     Similarity.ivfBuild(e).save(d1)
     assert(rows(Similarity.ivfSearch(q, Similarity.ivfLoad(spark, d1), 5))
       == fused, "exact-assign round-trip diverged from fused ivfTopK")
-    // two-level round-trip: leader groups must re-derive identically
-    // from the persisted quantizer (g from the actual centroid count)
+    // two-level round-trip: the loaded index carries the build's rule,
+    // and leader groups must re-derive identically from the persisted
+    // quantizer (g from the actual centroid count)
     val fused2 = rows(Similarity.ivfTopK(q, e, 5, nlist = 16, nprobe = 10,
       twoLevelAssign = true))
     val d2 = SparkTestSession.tempDir("ivf-rt2").toString
     Similarity.ivfBuild(e, twoLevelAssign = true).save(d2)
     assert(rows(Similarity.ivfSearch(q, Similarity.ivfLoad(spark, d2), 5,
-      nprobe = 10, twoLevelAssign = true)) == fused2,
+      nprobe = 10)) == fused2,
       "two-level round-trip diverged from fused ivfTopK")
+    // a directory without the build record is refused, not guessed at
+    new java.io.File(d2, "_build").delete()
+    val err = intercept[IllegalArgumentException](Similarity.ivfLoad(spark, d2))
+    assert(err.getMessage.contains("_build"), err.getMessage)
   }
 
   test("IVF-PQ build/save/load/search round-trip equals the fused ivfPqTopK row-for-row") {
@@ -351,7 +355,7 @@ class PipelineSpec extends AnyFunSuite {
     // residual codebook, and integer codes all persist as parquet;
     // doubles round-trip bit-exactly, so the served shortlist must be
     // IDENTICAL to the fused path — including the ADC decimal sums —
-    // with m re-derived from the persisted codebook (the load path
+    // with m read back from the persisted build record (the load path
     // never receives it)
     val e = Tables.load(spark, sf, "embeddings")
     val q = e.filter($"vec_id" < 10)
@@ -422,9 +426,10 @@ class PipelineSpec extends AnyFunSuite {
       5, nprobe = 16, shortlist = 600))
     assert(a == b,
       "probe-all full-shortlist absorb-serve diverged from stale+delta")
-    // m guard: absorbing with a mismatched m slices residuals that
-    // cannot match the codebook width — must raise, never mis-encode
-    val bad = Similarity.ivfPqAbsorbDelta(stale, delta, m = 4)
+    // m guard: an index whose m mismatches its codebook slices
+    // residuals that cannot match the codebook width — must raise,
+    // never mis-encode
+    val bad = Similarity.ivfPqAbsorbDelta(stale.copy(m = 4), delta)
     val ex = intercept[Exception] {
       // force the guarded `sub` projection to evaluate (a bare count
       // would prune it away)
@@ -464,6 +469,33 @@ class PipelineSpec extends AnyFunSuite {
       .codes.select("cid", "cell"))
     assert(pqMoved.isEmpty, s"IVF-PQ copies left their original's cell: " +
       s"${pqMoved.size} of 1000")
+  }
+
+  test("IVF/IVF-PQ absorb: a forced two-level build's absorbed copies land in their originals' cells") {
+    // the build's rule rides in the index: a build forced two-level at
+    // nlist 16 (far under the auto threshold) must absorb two-level too,
+    // with no flag restated by the absorb
+    val rnd = new scala.util.Random(7)
+    val corpus = (0 until 1000).map { i =>
+      (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat))
+    }.toDF("vec_id", "embedding")
+    val copies = corpus.select(($"vec_id" + 100000L).as("vec_id"),
+      $"embedding")
+    def misplaced(cells: org.apache.spark.sql.DataFrame) = {
+      val cellOf = cells.distinct().collect()
+        .map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue)
+        .toMap
+      (0L until 1000L).count(i => cellOf(i) != cellOf(i + 100000L))
+    }
+    val ivf = Similarity.ivfBuild(corpus, nlist = 16, twoLevelAssign = true)
+    val ivfMoved = misplaced(Similarity.ivfAbsorbDelta(ivf, copies)
+      .cells.select("cid", "centroid_id"))
+    assert(ivfMoved == 0, s"IVF copies left their original's cell: $ivfMoved of 1000")
+    val pq = Similarity.ivfPqBuild(corpus, nlist = 16, m = 4, codes = 8,
+      twoLevelAssign = true)
+    val pqMoved = misplaced(Similarity.ivfPqAbsorbDelta(pq, copies)
+      .codes.select("cid", "cell"))
+    assert(pqMoved == 0, s"IVF-PQ copies left their original's cell: $pqMoved of 1000")
   }
 
   test("ivfDeleteIds: deleted index equals survivors assigned to the same quantizer; no deleted id served") {
@@ -542,7 +574,7 @@ class PipelineSpec extends AnyFunSuite {
     val delta = (0 until 30).map { i =>
       (1000L + i, unit(i % 3, 0.33))
     }.toDF("vec_id", "embedding")
-    val r = Similarity.ivfDriftCheck(loaded, idx.centroids, delta)
+    val r = Similarity.ivfDriftCheck(loaded, idx, delta)
     assert(r.drifted, s"off-axis delta did not trip: $r")
     assert(r.deltaMeanDist > 1.5 * r.expectedMeanDist,
       s"fit ratio did not trip: $r")
@@ -551,16 +583,16 @@ class PipelineSpec extends AnyFunSuite {
     val clean = (0 until 30).map { i =>
       (2000L + i, unit(i % 3, 0.03 * (i % 5 - 2)))
     }.toDF("vec_id", "embedding")
-    val rc = Similarity.ivfDriftCheck(loaded, idx.centroids, clean)
+    val rc = Similarity.ivfDriftCheck(loaded, idx, clean)
     assert(!rc.drifted, s"in-distribution delta tripped: $rc")
     // the PQ family reads the same plants through its L2-residual fit:
     // off-axis trips, in-distribution stays quiet
     val pq = Similarity.ivfPqBuild(corpus, nlist = 3, m = 4, codes = 8)
     val pqStats = Similarity.ivfPqCellStats(pq, corpus).localCheckpoint()
-    val rp = Similarity.ivfPqDriftCheck(pqStats, pq.coarse, delta)
+    val rp = Similarity.ivfPqDriftCheck(pqStats, pq, delta)
     assert(rp.drifted && rp.deltaMeanDist > 1.5 * rp.expectedMeanDist,
       s"PQ fit did not trip on the off-axis delta: $rp")
-    assert(!Similarity.ivfPqDriftCheck(pqStats, pq.coarse, clean).drifted,
+    assert(!Similarity.ivfPqDriftCheck(pqStats, pq, clean).drifted,
       "PQ tripped on the in-distribution delta")
   }
 
@@ -604,7 +636,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(hits * 100 >= total * 80,
       s"hot-cell recall $hits/$total below the 80% floor")
     assert(Similarity.ivfDriftCheck(Similarity.ivfCellStats(idx),
-      idx.centroids, planted).drifted,
+      idx, planted).drifted,
       "the absorb that created the hot cell did not trip the drift signal")
   }
 
@@ -643,10 +675,10 @@ class PipelineSpec extends AnyFunSuite {
     val freshStats = Similarity.ivfCellStats(res.index).localCheckpoint()
     val planted2 = planted.select(($"vec_id" + 70000000L).as("vec_id"),
       $"embedding")
-    assert(!Similarity.ivfDriftCheck(freshStats, res.index.centroids,
+    assert(!Similarity.ivfDriftCheck(freshStats, res.index,
       planted2).drifted,
       "post-rebuild stats still flag the re-priced distribution as drift")
-    assert(Similarity.ivfDriftCheck(stats, idx.centroids,
+    assert(Similarity.ivfDriftCheck(stats, idx,
       planted2).drifted,
       "fixture drifted — the pre-rebuild stats no longer trip on the plant")
     // and the rebuilt index serves the grown corpus above the floor

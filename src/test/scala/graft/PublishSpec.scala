@@ -229,4 +229,54 @@ class PublishSpec extends AnyFunSuite {
       w => read(s"$w/idx/cells") ++
         Try(rows(StreamingJobs.deltaLog(spark, f(w)))).getOrElse(Seq("<refused>")))
   }
+
+  // two disjoint corpora: the old and the new index serve different ids
+  lazy val corpora = Seq(0, 100).map(off => (1 to 12).map(i =>
+      (i.toLong + off, Array.tabulate(8)(j => (i * (j + 1) + off * j).toFloat)))
+    .toDF("vec_id", "embedding").localCheckpoint())
+  lazy val queries = corpora.head.filter($"vec_id" <= 3)
+  lazy val ivf = corpora.map(Similarity.ivfBuild(_, nlist = 2))
+  lazy val ivfPq = corpora.map(Similarity.ivfPqBuild(_, nlist = 2, m = 4, codes = 4))
+  def idx(w: String): String = f(s"$w/idx")
+
+  /** Crash matrix of a save into the index directory `w/idx`: `before`
+    * and version 0 are arranged, version 1 is the entry under test, and
+    * `load` must read and serve either version.
+    */
+  def saveMatrix(target: String, save: (Int, String) => Unit,
+                 before: String => Unit = _ => ())(load: String => DataFrame): Unit =
+    crashMatrix(
+      () => { val w = tmpDir(); before(idx(w)); save(0, idx(w)); w },
+      w => s"$w/$target",
+      w => save(1, idx(w)),
+      w => rows(load(idx(w))))
+
+  test("crash matrix: IvfIndex.save keeps the old index or publishes the new one") {
+    saveMatrix("idx", (v, d) => ivf(v).save(d)) { d =>
+      Similarity.ivfSearch(queries, Similarity.ivfLoad(spark, d), 3, nprobe = 2)
+    }
+  }
+
+  test("crash matrix: IvfPqIndex.save keeps the old index or publishes the new one") {
+    val rerank = corpora(0).unionByName(corpora(1))
+    saveMatrix("idx", (v, d) => ivfPq(v).save(d)) { d =>
+      Similarity.ivfPqSearch(queries, Similarity.ivfPqLoad(spark, d), rerank, 3,
+        nprobe = 2)
+    }
+  }
+
+  test("crash matrix: ivfSaveStats over an index's existing cellstats") {
+    saveMatrix("idx/cellstats", (v, d) => Similarity.ivfSaveStats(ivf(v), d),
+      d => ivf(0).save(d)) { d =>
+      Similarity.ivfLoadStats(spark, d)
+    }
+  }
+
+  test("crash matrix: ivfPqSaveStats over an index's existing cellstats") {
+    saveMatrix("idx/cellstats",
+      (v, d) => Similarity.ivfPqSaveStats(ivfPq(v), corpora(v), d),
+      d => ivfPq(0).save(d)) { d =>
+      Similarity.ivfLoadStats(spark, d)
+    }
+  }
 }
