@@ -57,28 +57,27 @@ object Multimodal {
     * pixel texture encoded with `javax.imageio` at the asset's
     * metadata dimensions (PNG is lossless, so decode→pool downstream is
     * exact and stable across runs). Audio/video payloads are raw
-    * seed-derived bytes standing in for undecodable codec streams.
-    */
-  /** `withPayload = false` skips codec encoding and carries an empty
+    * seed-derived bytes standing in for undecodable codec streams
+    * (audio: 2048 16-bit samples).
+    *
+    * `withPayload = false` skips codec encoding and carries an empty
     * payload — for metadata-only consumers (resize/frame plans), which
     * on a real parquet asset table would prune the binary column at the
     * scan and never pay for bytes; generating payloads they won't read
     * would misrepresent those plans' cost.
     */
   def syntheticAssets(spark: SparkSession, n: Int,
-                      payloadBytes: Int = 4096,
                       withPayload: Boolean = true,
                       offset: Long = 0L): Dataset[MediaAsset] = {
     import spark.implicits._
-    spark.range(n.toLong).map(i => makeAsset(i + offset, payloadBytes,
-      withPayload))
+    spark.range(n.toLong).map(i => makeAsset(i + offset, withPayload))
   }
 
   /** The generation contract for asset `i` — a pure function of the
     * asset id, shared by the distributed table ([[syntheticAssets]]) and
     * the sequential oracle replay ([[checksumOracleSql]]).
     */
-  private[graft] def makeAsset(i: Long, payloadBytes: Int = 4096,
+  private[graft] def makeAsset(i: Long,
                                withPayload: Boolean = true): MediaAsset = {
     val kinds = Seq("image", "audio", "video")
     val kind = kinds((i % 3).toInt)
@@ -98,7 +97,7 @@ object Multimodal {
       else kind match {
         case "image" => encodePng(seed, w, h)
         case "audio" => encodeWav(seed, sampleRate = 16000,
-          nSamples = payloadBytes / 2)
+          nSamples = 2048)
         case _ => encodeGif(seed, w, h, nFrames)
       }
     MediaAsset(i, kind, payload,
@@ -406,15 +405,15 @@ object Multimodal {
   }
 
   /** Feature extraction over the binary column, batched per partition
-    * (the JVM analog of `mapInPandas`: decode amortized over
-    * `batchSize`-row groups, never row-at-a-time through a boxed UDF,
-    * payload bytes never shuffled).
+    * (the JVM analog of `mapInPandas`: decode amortized over 128-row
+    * groups, never row-at-a-time through a boxed UDF, payload bytes
+    * never shuffled).
     */
-  def extractFeatures(assets: Dataset[MediaAsset], dim: Int = 64,
-                      batchSize: Int = 128): Dataset[MediaFeature] = {
+  def extractFeatures(assets: Dataset[MediaAsset],
+                      dim: Int = 64): Dataset[MediaFeature] = {
     import assets.sparkSession.implicits._
     assets.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
+      it.grouped(128).flatMap { batch =>
         // batch boundary = where a real impl would hand an Arrow batch
         // to the codec/model runtime
         batch.iterator.map { a =>

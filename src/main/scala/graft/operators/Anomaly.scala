@@ -34,7 +34,7 @@ import org.apache.spark.sql.types._
 object Anomaly {
 
   def zScoreOutliers(df: DataFrame, groupCol: String, valueCol: String,
-                     idCol: String, nSigma: Double = 3.0): DataFrame = {
+                     idCol: String): DataFrame = {
     val v = col(valueCol).cast(DecimalType(12, 3))
     val stats = df.groupBy(col(groupCol)).agg(
       count(lit(1)).as("_n"),
@@ -49,7 +49,7 @@ object Anomaly {
       .select(col(groupCol), col("_mean"), col("_std"))
     df.join(broadcast(stats), groupCol)
       .withColumn("z", (v.cast(DoubleType) - col("_mean")) / col("_std"))
-      .filter(abs(col("z")) > nSigma)
+      .filter(abs(col("z")) > 3.0)
       .select(col(idCol), col(groupCol),
         col(valueCol).cast(DoubleType).as(valueCol), col("z"))
   }

@@ -16,10 +16,33 @@ import Similarity.{Embedding, VecId}
   * only formulation that survives 100 TB; the all-pairs n-gram Jaccard in
   * PipelineQueries is deliberately capped to a small corpus and exists as
   * a verifiable oracle for the shingling math.
+  *
+  * MINHASH SHAPE: every text near-dup path — [[lshBuckets]],
+  * [[minHashCandidates]], the incremental screens, the persisted banded
+  * registry and `StreamingJobs.nearDupScreenStream` — uses ONE fixed
+  * shape: word 3-gram shingles ([[ShingleN]]), 32-wide signatures
+  * ([[NumHashes]]) cut into 8 bands of 4 rows ([[Bands]]), and a
+  * candidate pair is a duplicate when its signature-estimated Jaccard
+  * reaches 0.7 ([[MinEstJac]]). Batch and registry candidates only meet
+  * if they band identically, so the shape is not a parameter; a
+  * persisted registry built under another shape is refused (the in-plan
+  * width guard and the streaming registry's params file).
   */
 object Dedup {
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Word n-gram length of a MinHash shingle (MINHASH SHAPE). */
+  val ShingleN = 3
+
+  /** MinHash signature width (MINHASH SHAPE). */
+  val NumHashes = 32
+
+  /** LSH bands per signature, `NumHashes / Bands` rows each. */
+  val Bands = 8
+
+  /** Signature-estimated Jaccard at which a screen flags a duplicate. */
+  val MinEstJac = 0.7
 
   /** Deterministic exact dedup: keep exactly one row per key set — the
     * one minimizing `tiebreak` — unlike `dropDuplicates`, whose survivor
@@ -91,14 +114,15 @@ object Dedup {
       .select(col(idCol), explode(
         graft.functions.VecKernels.word_ngrams(col("_words"), n)).as("shingle"))
 
-  /** MinHash signatures: (id, sig array<long>[numHashes]), one pass via
-    * the custom [[graft.functions.MinHashAggExpr]] TypedImperativeAggregate
-    * — the shuffle carries ONE fixed-width signature row per document
-    * (map-side partial min), not |shingles| × numHashes exploded rows.
+  /** MinHash signatures: (id, sig: [[NumHashes]] longs), one pass
+    * via the custom [[graft.functions.MinHashAggExpr]]
+    * TypedImperativeAggregate — the shuffle carries ONE fixed-width
+    * signature row per document (map-side partial min), not |shingles| ×
+    * NumHashes exploded rows.
     */
-  def minHashSignatures(sh: DataFrame, idCol: String, numHashes: Int): DataFrame =
+  def minHashSignatures(sh: DataFrame, idCol: String): DataFrame =
     sh.groupBy(col(idCol))
-      .agg(graft.functions.MinHashAgg.minhash_sketch(col("shingle"), numHashes)
+      .agg(graft.functions.MinHashAgg.minhash_sketch(col("shingle"), NumHashes)
         .as("sig"))
 
   /** LSH banding over MinHash signatures: (id, band, bucket). Docs
@@ -106,11 +130,10 @@ object Dedup {
     * array slicing over the signature — no extra shuffle beyond the
     * signature aggregation.
     */
-  def lshBuckets(df: DataFrame, idCol: String, textCol: String,
-                 shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8): DataFrame =
-    bandSignatures(
-      minHashSignatures(shingles(df, idCol, textCol, shingleN), idCol, numHashes),
-      idCol, idCol, numHashes, bands)
+  def lshBuckets(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    bandedSignatures(
+      minHashSignatures(shingles(df, idCol, textCol, ShingleN), idCol), idCol)
+      .select(col(idCol), col("band"), col("bucket"))
 
   /** LSH banding of a signature frame (id, sig) → (id, band, bucket,
     * sig): pure array slicing, no shuffle, the signature carried
@@ -120,32 +143,25 @@ object Dedup {
     * ZERO registry-side exchange — the candidate join co-locates on the
     * bucket layout and the signature needed for verification arrives
     * WITH the candidate, so the corpus-sized signature table is never
-    * shuffled and never joined a second time. The price is `bands`
-    * copies of each fixed-width signature at rest (8 × ~260 B per doc
-    * at the defaults) — storage traded for a per-batch shuffle that
-    * otherwise grows with the corpus.
+    * shuffled and never joined a second time. The price is [[Bands]]
+    * copies of each fixed-width signature at rest (8 × ~260 B per doc)
+    * — storage traded for a per-batch shuffle that otherwise grows with
+    * the corpus.
     *
     * ONE banding definition for every consumer ([[lshBuckets]],
     * [[incrementalNearDup]]'s batch AND registry sides, the persisted
     * registry) — batch and registry candidates only meet if they band
     * identically, so the scheme must never fork.
     */
-  def bandedSignatures(sigs: DataFrame, idCol: String, numHashes: Int,
-                       bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
+  def bandedSignatures(sigs: DataFrame, idCol: String): DataFrame = {
+    val r = NumHashes / Bands
     sigs.select(col(idCol), col("sig"), posexplode(
-      transform(sequence(lit(0), lit(bands - 1)),
+      transform(sequence(lit(0), lit(Bands - 1)),
         b => xxhash64(slice(col("sig"), b * r + 1, lit(r))))))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
       .select(col(idCol), col("band"), col("bucket"), col("sig"))
   }
-
-  private def bandSignatures(sigs: DataFrame, idCol: String, idAs: String,
-                             numHashes: Int, bands: Int): DataFrame =
-    bandedSignatures(sigs, idCol, numHashes, bands)
-      .select(col(idCol).as(idAs), col("band"), col("bucket"))
 
   /** Persist `sigs` (id, sig) as the pre-banded signature registry: an
     * external parquet TABLE bucketed AND bucket-sorted BY (band,
@@ -157,28 +173,26 @@ object Dedup {
     * per batch at the 100× rehearsal under the re-band-per-call path).
     */
   def writeBandedRegistry(sigs: DataFrame, idCol: String, table: String,
-                          path: String, numHashes: Int = 32, bands: Int = 8,
-                          numBuckets: Int = 32): Unit =
-    Bucketing.writeBucketedAt(bandedSignatures(sigs, idCol, numHashes, bands),
+                          path: String, numBuckets: Int = 32): Unit =
+    Bucketing.writeBucketedAt(bandedSignatures(sigs, idCol),
       table, Seq("band", "bucket"), numBuckets, path)
 
   /** Registry-side signature guard, applied to every registry row
     * BEFORE the candidate join: a registry persisted under a different
-    * MinHash config (numHashes/bands) would otherwise band into
-    * different buckets and simply stop colliding — duplicates passing
-    * unflagged with zero errors (a guard at estimate time never fires,
-    * because mismatched configs produce no candidate pairs to
+    * MinHash shape (signature width / band count) would otherwise band
+    * into different buckets and simply stop colliding — duplicates
+    * passing unflagged with zero errors (a guard at estimate time never
+    * fires, because mismatched shapes produce no candidate pairs to
     * estimate). Costs one size()/comparison per registry row.
     */
-  private def guardRegistrySig(sig: Column, band: Column, numHashes: Int,
-                               bands: Int): Column =
-    when(size(sig) =!= numHashes || band >= bands,
+  private def guardRegistrySig(sig: Column, band: Column): Column =
+    when(size(sig) =!= NumHashes || band >= Bands,
       raise_error(concat(
         lit("incrementalNearDup: registry row has signature width "),
         size(sig).cast(StringType), lit(" / band "), band.cast(StringType),
-        lit(s" but the caller screens with numHashes=$numHashes, " +
-          s"bands=$bands — the registry was built under a different " +
-          "MinHash config; rebuild it or pass the matching parameters"))))
+        lit(s" but the screen's MinHash shape is numHashes=$NumHashes, " +
+          s"bands=$Bands — the registry was built under a different " +
+          "shape; rebuild it with writeBandedRegistry"))))
       .otherwise(sig)
 
   /** Shared screening core: banded batch rows (_bid, band, bucket, _bs)
@@ -191,17 +205,16 @@ object Dedup {
     * extra shuffle) is spent on collapsing them.
     */
   private def screenAgainstBanded(batch: DataFrame, batchBanded: DataFrame,
-                                  regBanded: DataFrame, idCol: String,
-                                  numHashes: Int,
-                                  minEstJac: Double): DataFrame = {
+                                  regBanded: DataFrame,
+                                  idCol: String): DataFrame = {
     val est = batchBanded.join(regBanded, Seq("band", "bucket"))
       .select(col("_bid"), col("_rid"),
         // compiled sig_agree kernel (r20) ≡ size(filter(zip_with(===)))
         // — the per-collision estimate is the screen's hottest
-        // expression (numHashes interpreted walks per candidate pair)
+        // expression (NumHashes interpreted walks per candidate pair)
         (graft.functions.VecKernels.sig_agree(col("_bs"), col("_rs"))
-          .cast(DoubleType) / numHashes).as("_e"))
-      .filter(col("_e") >= minEstJac)
+          .cast(DoubleType) / NumHashes).as("_e"))
+      .filter(col("_e") >= MinEstJac)
       // bounded top-1, ties to the LOWEST registry id (TopKAgg's
       // (score desc, id asc) order) — never a struct-min SortAggregate
       .groupBy(col("_bid"))
@@ -220,10 +233,9 @@ object Dedup {
     * bucket are joined — the shuffle is keyed on (band, bucket), never
     * all-pairs.
     */
-  def minHashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, numHashes: Int = 32,
-                        bands: Int = 8): DataFrame = {
-    val b = lshBuckets(df, idCol, textCol, shingleN, numHashes, bands)
+  def minHashCandidates(df: DataFrame, idCol: String,
+                        textCol: String): DataFrame = {
+    val b = lshBuckets(df, idCol, textCol)
     val l = b.select(col(idCol).as("id_a"), col("band"), col("bucket"))
     val r = b.select(col(idCol).as("id_b"), col("band"), col("bucket"))
     l.join(r, Seq("band", "bucket"))
@@ -242,13 +254,13 @@ object Dedup {
     * the standard unbiased MinHash estimator). Per batch doc the best
     * registry match rides a bounded top-1 aggregate (ties to the
     * lowest registry id); `keep = false` iff the best estimate clears
-    * `minEstJac`. Exact copies of a registry doc are flagged with
+    * [[MinEstJac]]. Exact copies of a registry doc are flagged with
     * CERTAINTY: identical text ⇒ identical shingle set ⇒ identical
     * signature ⇒ same bucket in every band and estimate 1.0.
     *
     * Emits one row per batch doc: (idCol, keep, dup_of, est_jac) —
     * dup_of/est_jac NULL for docs with no clearing match (including
-    * docs under `shingleN` words, which have no signature; screen
+    * docs under [[ShingleN]] words, which have no signature; screen
     * those with the exact [[incremental]] registry instead).
     * Within-batch duplicates are OUT of scope by design — this is the
     * batch-vs-corpus screen; run the intra-batch pass ([[exact]] /
@@ -269,40 +281,37 @@ object Dedup {
     *
     * IDs must be integral (they ride the bounded top-1 aggregate as
     * bigint — a lossy cast would null `dup_of` and silently under-flag),
-    * and every registry signature must be `numHashes` wide (an in-plan
-    * guard raises otherwise — a mismatched registry would silently stop
-    * colliding instead).
+    * and every registry signature must be [[NumHashes]] wide (an
+    * in-plan guard raises otherwise — a mismatched registry would
+    * silently stop colliding instead).
     */
   def incrementalNearDup(batch: DataFrame, registrySigs: DataFrame,
-                         idCol: String, textCol: String,
-                         shingleN: Int = 3, numHashes: Int = 32,
-                         bands: Int = 8,
-                         minEstJac: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, s"bands must divide numHashes")
-    require(minEstJac > 0.0 && minEstJac <= 1.0, "need 0 < minEstJac <= 1")
+                         idCol: String, textCol: String): DataFrame = {
     Similarity.requireIntegralId(batch, idCol)
     Similarity.requireIntegralId(registrySigs, idCol)
-    // lazy: since the signature rides the banded rows, the batch
-    // signatures have exactly ONE consumer (the banding) — the old
-    // second reference (a separate verify join) is gone, so a
-    // checkpoint here would cost an extra job per (micro-)batch for
-    // nothing
-    val batchSigs = minHashSignatures(
-      shingles(batch, idCol, textCol, shingleN), idCol, numHashes)
-    val bb = bandedSignatures(batchSigs, idCol, numHashes, bands)
-      .select(col(idCol).as("_bid"), col("band"), col("bucket"),
-        col("sig").as("_bs"))
     // width-guard BEFORE banding collisions are relied on: band the
     // guarded rows so a mismatched registry errors on its first
-    // scanned row (band < bands always holds here — it is ours)
+    // scanned row (band < Bands always holds here — it is ours)
     val rb = bandedSignatures(
       registrySigs.select(col(idCol),
-        guardRegistrySig(col("sig"), lit(0), numHashes, bands).as("sig")),
-      idCol, numHashes, bands)
+        guardRegistrySig(col("sig"), lit(0)).as("sig")), idCol)
       .select(col(idCol).as("_rid"), col("band"), col("bucket"),
         col("sig").as("_rs"))
-    screenAgainstBanded(batch, bb, rb, idCol, numHashes, minEstJac)
+    screenAgainstBanded(batch, bandBatch(batch, idCol, textCol), rb, idCol)
   }
+
+  /** The batch side of every screen: shingle → MinHash → band, as
+    * (_bid, band, bucket, _bs). Lazy: the signature rides the banded
+    * rows, so the batch signatures have exactly ONE consumer (the
+    * banding) and a checkpoint here would cost an extra job per
+    * (micro-)batch for nothing.
+    */
+  private def bandBatch(batch: DataFrame, idCol: String,
+                        textCol: String): DataFrame =
+    bandedSignatures(minHashSignatures(
+      shingles(batch, idCol, textCol, ShingleN), idCol), idCol)
+      .select(col(idCol).as("_bid"), col("band"), col("bucket"),
+        col("sig").as("_bs"))
 
   /** [[incrementalNearDup]] against a PRE-BANDED registry — the 100 TB
     * daily-screen path: `registryBanded` is the (idCol, band, bucket,
@@ -314,36 +323,17 @@ object Dedup {
     * registry grows — not the O(registry) re-band-and-shuffle the
     * in-memory entry point pays per call.
     *
-    * The registry must have been banded under the SAME (shingleN,
-    * numHashes, bands): width and band-range violations raise in-plan
-    * (per-row guard); a registry banded with FEWER bands than the
-    * caller's cannot be detected from the rows alone (its buckets
-    * simply never collide) — persist the build params alongside the
-    * table and verify them on read, as the streaming screen's registry
-    * lifecycle does (`StreamingJobs.screenBatch`).
+    * The registry must have been banded under the SAME MinHash shape:
+    * width and band-range violations raise in-plan (per-row guard); a
+    * registry banded with FEWER bands cannot be detected from the rows
+    * alone (its buckets simply never collide) — persist the build
+    * shape alongside the table and verify it on read, as the streaming
+    * screen's registry lifecycle does (`StreamingJobs.screenBatch`).
     */
   def incrementalNearDupBanded(batch: DataFrame, registryBanded: DataFrame,
-                               idCol: String, textCol: String,
-                               shingleN: Int = 3, numHashes: Int = 32,
-                               bands: Int = 8,
-                               minEstJac: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, s"bands must divide numHashes")
-    require(minEstJac > 0.0 && minEstJac <= 1.0, "need 0 < minEstJac <= 1")
-    Similarity.requireIntegralId(batch, idCol)
-    Similarity.requireIntegralId(registryBanded, idCol)
-    // lazy — one consumer (see incrementalNearDup)
-    val batchSigs = minHashSignatures(
-      shingles(batch, idCol, textCol, shingleN), idCol, numHashes)
-    val bb = bandedSignatures(batchSigs, idCol, numHashes, bands)
-      .select(col(idCol).as("_bid"), col("band"), col("bucket"),
-        col("sig").as("_bs"))
-    // the projection renames only non-key columns, so the bucketed
-    // scan's (band, bucket) partitioning survives to the join
-    val rb = registryBanded.select(col(idCol).as("_rid"), col("band"),
-      col("bucket"),
-      guardRegistrySig(col("sig"), col("band"), numHashes, bands).as("_rs"))
-    screenAgainstBanded(batch, bb, rb, idCol, numHashes, minEstJac)
-  }
+                               idCol: String, textCol: String): DataFrame =
+    screenPreBanded(batch, bandBatch(batch, idCol, textCol), registryBanded,
+      idCol)
 
   /** [[incrementalNearDupBanded]] when the BATCH side is already banded
     * — the one-pass streaming-screen path (r20 optimization):
@@ -359,23 +349,27 @@ object Dedup {
   private[graft] def incrementalNearDupPreBanded(batch: DataFrame,
                                                  batchBanded: DataFrame,
                                                  registryBanded: DataFrame,
-                                                 idCol: String,
-                                                 numHashes: Int, bands: Int,
-                                                 minEstJac: Double): DataFrame = {
-    require(numHashes % bands == 0, s"bands must divide numHashes")
-    require(minEstJac > 0.0 && minEstJac <= 1.0, "need 0 < minEstJac <= 1")
+                                                 idCol: String): DataFrame =
+    screenPreBanded(batch, batchBanded.select(col(idCol).as("_bid"),
+      col("band"), col("bucket"), col("sig").as("_bs")), registryBanded, idCol)
+
+  /** The pre-banded registry screens' shared tail: `bb` is the batch's
+    * (_bid, band, bucket, _bs) rows; the registry side is guarded per
+    * row. The projection renames only non-key columns, so the bucketed
+    * scan's (band, bucket) partitioning survives to the join.
+    */
+  private def screenPreBanded(batch: DataFrame, bb: DataFrame,
+                              registryBanded: DataFrame,
+                              idCol: String): DataFrame = {
     Similarity.requireIntegralId(batch, idCol)
     Similarity.requireIntegralId(registryBanded, idCol)
-    val bb = batchBanded.select(col(idCol).as("_bid"), col("band"),
-      col("bucket"), col("sig").as("_bs"))
     val rb = registryBanded.select(col(idCol).as("_rid"), col("band"),
-      col("bucket"),
-      guardRegistrySig(col("sig"), col("band"), numHashes, bands).as("_rs"))
-    screenAgainstBanded(batch, bb, rb, idCol, numHashes, minEstJac)
+      col("bucket"), guardRegistrySig(col("sig"), col("band")).as("_rs"))
+    screenAgainstBanded(batch, bb, rb, idCol)
   }
 
-  /** All-pairs word-n-gram Jaccard similarities: (da, db, jac) with
-    * da < db. Shingles are keyed by xxhash64 (longs shuffle, not
+  /** All-pairs word-[[ShingleN]]-gram Jaccard similarities: (da, db,
+    * jac) with da < db. Shingles are keyed by xxhash64 (longs shuffle, not
     * strings); pair generation groups each shingle's doc list ONCE and
     * emits combinations with higher-order functions — one shuffle of
     * |distinct shingles| small lists instead of a self-join that
@@ -398,8 +392,8 @@ object Dedup {
     * the call site. The cap must be mirrored in any oracle SQL.
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = 3, maxPosting: Int = 64): DataFrame =
-    pairOverlap(df, idCol, textCol, n, maxPosting, "jaccard_postings")
+                   maxPosting: Int = 64): DataFrame =
+    pairOverlap(df, idCol, textCol, maxPosting, "jaccard_postings")
       .select(col("da"), col("db"),
         (col("inter").cast(DoubleType) /
           (col("na") + col("nb") - col("inter")).cast(DoubleType)).as("jac"))
@@ -412,12 +406,13 @@ object Dedup {
     * near-contained when max(c_ab, c_ba) clears a threshold (Broder
     * 1997's "containment" resemblance; the CCNet/RefinedWeb
     * sub-document dedup signal). Same capped-posting candidate plan as
-    * [[jaccardPairs]] (and the same quadratic safety valve — one extra
+    * [[jaccardPairs]] over the same 3-gram shingles, with its default
+    * 64-id posting cap (the same quadratic safety valve — one extra
     * ratio, zero extra shuffles).
     */
-  def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, maxPosting: Int = 64): DataFrame =
-    pairOverlap(df, idCol, textCol, n, maxPosting, "containment_postings")
+  def containmentPairs(df: DataFrame, idCol: String,
+                       textCol: String): DataFrame =
+    pairOverlap(df, idCol, textCol, 64, "containment_postings")
       .select(col("da"), col("db"),
         (col("inter").cast(DoubleType) / col("na").cast(DoubleType))
           .as("c_ab"),
@@ -431,9 +426,8 @@ object Dedup {
     * unique per query execution, hence the parameter).
     */
   private def pairOverlap(df: DataFrame, idCol: String, textCol: String,
-                          n: Int, maxPosting: Int,
-                          metricName: String): DataFrame = {
-    val sh = shingles(df, idCol, textCol, n)
+                          maxPosting: Int, metricName: String): DataFrame = {
+    val sh = shingles(df, idCol, textCol, ShingleN)
       .select(col(idCol), xxhash64(col("shingle")).as("sh64"))
     val sz = sh.groupBy(idCol).agg(count(lit(1)).as("n"))
     val postings = sh.groupBy("sh64")
@@ -462,30 +456,30 @@ object Dedup {
   /** Benchmark decontamination — the training-data stage that removes
     * (or flags) training documents overlapping an evaluation set, so
     * benchmark answers don't leak into the corpus. A training doc is
-    * contaminated when it shares ≥1 word n-gram with any holdout doc;
-    * returns (id, n_hits) per contaminated doc, n_hits = how many of its
-    * distinct shingles appear anywhere in the holdout.
+    * contaminated when it shares ≥1 word 5-gram ([[ContaminationN]])
+    * with any holdout doc; returns (id, n_hits) per contaminated doc,
+    * n_hits = how many of its distinct shingles appear anywhere in the
+    * holdout.
     *
     * Scale shape: the holdout is a BENCHMARK — thousands of docs against
     * a 100 TB corpus — so its distinct shingles broadcast and the
     * training side streams through a map-side hash join: no shuffle of
-    * corpus shingles at all. For a holdout too large to broadcast, pass
-    * `broadcastHoldout = false`: same semantics through a shuffled
-    * equi-join on the shingle key (never a cartesian) — the hint is a
-    * caller switch because Spark honors an explicit `broadcast()`
-    * regardless of the autoBroadcastJoinThreshold, so "degrade when
-    * big" cannot be left to the planner while the hint is in place.
+    * corpus shingles at all. Spark honors an explicit `broadcast()`
+    * regardless of the autoBroadcastJoinThreshold, so a holdout too
+    * large to broadcast is out of this operator's envelope.
     */
   def contaminationHits(training: DataFrame, holdout: DataFrame,
-                        idCol: String, textCol: String, n: Int = 5,
-                        broadcastHoldout: Boolean = true): DataFrame = {
-    val holdSh = shingles(holdout, idCol, textCol, n)
+                        idCol: String, textCol: String): DataFrame = {
+    val holdSh = shingles(holdout, idCol, textCol, ContaminationN)
       .select("shingle").distinct()
-    shingles(training, idCol, textCol, n)
-      .join(if (broadcastHoldout) broadcast(holdSh) else holdSh, "shingle")
+    shingles(training, idCol, textCol, ContaminationN)
+      .join(broadcast(holdSh), "shingle")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hits"))
   }
+
+  /** Word n-gram length of a [[contaminationHits]] match. */
+  private val ContaminationN = 5
 
   /** Connected components over an undirected edge list (src, dst) —
     * near-dup PAIRS become dedup GROUPS only through transitivity
@@ -752,19 +746,16 @@ object Dedup {
     * `bspRounds`. The label table already in hand carries the signal:
     * distinct-label count vs node count (node-sized aggregates, never
     * the edge set). When the proxy shrinkage (1 − labels/nodes) is
-    * below `contractMinShrink`, the contraction AND the composition
-    * join are skipped and star contraction runs on the ORIGINAL
-    * edges — its output is the same min-id component labeling either
-    * way (CCPropSpec holds at every budget), so the switch changes
-    * the plan, never the rows. Warn-logged like every self-engaging
-    * switch; 0.0 forces contraction, 1.0 forces the direct-star path.
+    * below [[ContractMinShrink]] (0.3), the contraction AND the
+    * composition join are skipped and star contraction runs on the
+    * ORIGINAL edges — its output is the same min-id component labeling
+    * either way (CCPropSpec holds at every budget), so the switch
+    * changes the plan, never the rows. Warn-logged like every
+    * self-engaging switch.
     */
   def connectedComponentsHybrid(edges: DataFrame, bspRounds: Int = 4,
-                                maxIter: Int = 20,
-                                contractMinShrink: Double = 0.3): DataFrame = {
+                                maxIter: Int = 20): DataFrame = {
     require(bspRounds >= 1, s"bspRounds must be >= 1, got $bspRounds")
-    require(contractMinShrink >= 0.0 && contractMinShrink <= 1.0,
-      s"contractMinShrink must be in [0, 1], got $contractMinShrink")
     val cp = Checkpointing.truncator(edges.sparkSession)
     // one materialization of the (possibly expensive) upstream edge
     // pipeline serves the BSP rounds AND the contraction joins; the
@@ -794,17 +785,17 @@ object Dedup {
       val (nNodes, nLabels) = (stats.getLong(0), stats.getLong(1))
       val shrink =
         if (nNodes == 0) 0.0 else (nNodes - nLabels).toDouble / nNodes
-      if (shrink < contractMinShrink) {
+      if (shrink < ContractMinShrink) {
         // the BSP prefix barely merged anything (the monotone-id chain
         // shape): contracting would pay two edge-keyed joins plus the
         // composition join to shrink the graph by ~nothing — hand the
         // ORIGINAL edges to star contraction instead and drop the
         // partial labels (bounded waste: bspRounds cheap rounds)
         logger.warn(f"graft connectedComponentsHybrid: contraction " +
-          f"SKIPPED at shrinkage $shrink%.3f < $contractMinShrink%.2f " +
+          f"SKIPPED at shrinkage $shrink%.3f < $ContractMinShrink%.2f " +
           f"($nLabels%d labels / $nNodes%d nodes after $bspRounds%d BSP " +
-          "rounds) — star contraction runs on the original edges. " +
-          "Tune with contractMinShrink (0.0 always contracts).")
+          "rounds) — star contraction runs on the original edges; the " +
+          "labels are the same either way.")
         // e0 is already deduped + pinned: hand it straight to the star
         // rounds (r21; was a second distinct + checkpoint of the same
         // set inside connectedComponents). starContractFrom releases
@@ -838,6 +829,11 @@ object Dedup {
       }
     }
   }
+
+  /** Proxy shrinkage below which [[connectedComponentsHybrid]] skips
+    * the contraction and runs star contraction on the original edges.
+    */
+  private val ContractMinShrink = 0.3
 
   /** Cluster resolution — the step that makes dup CLUSTERS a dedup:
     * per cluster, keep the highest-scoring member (ties to the lowest
@@ -973,16 +969,16 @@ object Dedup {
     * of a close pair identically.
     *
     * Scale shape: candidate generation is a hash-partitioned equi-join
-    * on the block key — never all-pairs. Block-boundary misses are the
-    * usual LSH recall trade-off; widen recall by probing multiple
-    * sketches (cf. Similarity.lshTables), not by widening the join.
+    * on the block key ([[SketchBits]] = 8 bits) — never all-pairs.
+    * Block-boundary misses are the usual LSH recall trade-off; widen
+    * recall by probing multiple sketches (cf. Similarity.lshTables),
+    * not by widening the join.
     */
-  def embeddingNearDup(emb: DataFrame, k: Int,
-                       sketchBits: Int = 8): DataFrame = {
+  def embeddingNearDup(emb: DataFrame, k: Int): DataFrame = {
     val e = emb
-      .filter(col(Embedding).isNotNull && size(col(Embedding)) >= sketchBits)
+      .filter(col(Embedding).isNotNull && size(col(Embedding)) >= SketchBits)
       .select(col(VecId).as("vid"), col(Embedding).as("v"))
-    val b = embeddingBlocks(emb, sketchBits)
+    val b = embeddingBlocks(emb, SketchBits)
     val cand = b.as("a").join(b.as("b"),
         col("a.bk") === col("b.bk") && col("a.vid") < col("b.vid"))
       .select(col("a.vid").as("va"), col("b.vid").as("vb"),
@@ -1003,6 +999,9 @@ object Dedup {
       .orderBy(col("sim").desc, col("va"), col("vb"))
       .limit(k)
   }
+
+  /** Sign-sketch width of an [[embeddingNearDup]] block key. */
+  private val SketchBits = 8
 
   /** 64-bit SimHash per document over whitespace tokens: per-bit
     * majority vote of token hashes. One shuffle of |docs| rows carrying
@@ -1104,17 +1103,21 @@ object Dedup {
     * bucket layout with ZERO registry-side exchange — per-batch cost
     * O(batch + colliding buckets), flat as the registry grows, instead
     * of the O(corpus) re-hash-and-shuffle a batch-mode
-    * [[hammingPairs]] sweep pays per crawl. Persist `maxDist`
-    * alongside (the band count is derived from it); a registry banded
-    * under a different maxDist raises in-plan on read where
-    * detectable (band index out of range) — the same config-mismatch
-    * discipline as the MinHash registry.
+    * [[hammingPairs]] sweep pays per crawl. The registry is banded for
+    * [[RegistryMaxDist]] = 3 (4 bands); a registry banded under a
+    * different maxDist raises in-plan on read where detectable (band
+    * index out of range) — the same shape-mismatch discipline as the
+    * MinHash registry.
     */
   def writeHammingRegistry(hashes: DataFrame, idCol: String,
                            hashCol: String, table: String, path: String,
-                           maxDist: Int = 3, numBuckets: Int = 32): Unit =
-    Bucketing.writeBucketedAt(bandedHashes(hashes, idCol, hashCol, maxDist),
+                           numBuckets: Int = 32): Unit =
+    Bucketing.writeBucketedAt(
+      bandedHashes(hashes, idCol, hashCol, RegistryMaxDist),
       table, Seq("band", "bv"), numBuckets, path)
+
+  /** Hamming radius of the persisted registry and its screen. */
+  private val RegistryMaxDist = 3
 
   /** Incremental near-dup screening of a batch of 64-bit hashes
     * against a persisted [[writeHammingRegistry]] registry — the
@@ -1129,21 +1132,20 @@ object Dedup {
     * (dist asc, ties to the lowest registry id).
     *
     * Emits one row per batch hash: (idCol, keep, dup_of, dist) —
-    * keep = false iff some registry hash sits within `maxDist`;
+    * keep = false iff some registry hash sits within [[RegistryMaxDist]];
     * dup_of/dist NULL otherwise. Batch-vs-corpus only, like the text
     * screen: run the intra-batch pass ([[hammingPairs]]) separately,
     * then append the survivors' banded rows to the registry.
     *
     * `registryBanded` must carry the (idCol, band, bv, h64) layout
-    * banded under the SAME maxDist: an out-of-range band raises
+    * [[writeHammingRegistry]] writes: an out-of-range band raises
     * in-plan per row; a registry banded COARSER (fewer bands) is not
-    * detectable from rows alone — persist maxDist next to the table
-    * and verify on read, the [[incrementalNearDupBanded]] caveat
-    * verbatim.
+    * detectable from rows alone, the [[incrementalNearDupBanded]]
+    * caveat verbatim.
     */
   def incrementalHammingDup(batch: DataFrame, registryBanded: DataFrame,
-                            idCol: String, hashCol: String,
-                            maxDist: Int = 3): DataFrame = {
+                            idCol: String, hashCol: String): DataFrame = {
+    val maxDist = RegistryMaxDist
     Similarity.requireIntegralId(batch, idCol)
     Similarity.requireIntegralId(registryBanded, idCol)
     val bands = maxDist + 1
@@ -1158,9 +1160,9 @@ object Dedup {
       when(col("band") >= bands, raise_error(concat(
         lit("incrementalHammingDup: registry row has band "),
         col("band").cast(StringType),
-        lit(s" but the caller screens with maxDist=$maxDist (" +
+        lit(s" but the screen's radius is maxDist=$maxDist (" +
           s"$bands bands) — the registry was banded under a different " +
-          "maxDist; rebuild it or pass the matching value")))
+          "maxDist; rebuild it with writeHammingRegistry")))
         .cast(LongType))
         .otherwise(col("h64")).as("_rh"))
     val best = bb.join(rb, Seq("band", "bv"))
@@ -1242,10 +1244,10 @@ object Dedup {
   }
 
   /** Typo-pair detection over a token vocabulary (the fuzzy-key-matching
-    * step of entity/token normalization): candidates blocked on (first
-    * char, ±1 length band) so only plausible typo pairs ever meet, then
-    * exact Levenshtein distance == 1. Output: `(tok_a, tok_b, dist)`
-    * with `tok_a < tok_b`.
+    * step of entity/token normalization) over tokens of at least 4
+    * characters: candidates blocked on (first char, ±1 length band) so
+    * only plausible typo pairs ever meet, then exact Levenshtein
+    * distance == 1. Output: `(tok_a, tok_b, dist)` with `tok_a < tok_b`.
     *
     * Known blocking trade-off (standard for candidate generation): pairs
     * differing in their FIRST character never meet. The dist column is
@@ -1258,9 +1260,9 @@ object Dedup {
     * vocabulary. For vocabularies with heavy first-char skew, widen the
     * block key (first char + length) or salt the hot block.
     */
-  def typoPairs(vocab: DataFrame, tokCol: String, minLen: Int = 4): DataFrame = {
+  def typoPairs(vocab: DataFrame, tokCol: String): DataFrame = {
     val v = vocab.select(col(tokCol).as("tok")).distinct()
-      .filter(length(col("tok")) >= minLen)
+      .filter(length(col("tok")) >= 4)
       .select(col("tok"), substring(col("tok"), 1, 1).as("_c1"),
         length(col("tok")).as("_len"))
     val a = v.select(col("tok").as("tok_a"), col("_c1"), col("_len").as("_la"))
@@ -1272,8 +1274,9 @@ object Dedup {
       .select(col("tok_a"), col("tok_b"), lit(1L).as("dist"))
   }
 
-  /** Cross-document duplicated spans: every `n`-word span occurring in
-    * at least `minDocs` distinct documents — the exact-substring
+  /** Cross-document duplicated spans: every [[SpanN]]-word span
+    * occurring in at least [[SpanMinDocs]] distinct documents — the
+    * exact-substring
     * duplication detector (the span-granular shape of suffix-array
     * dedup à la "Deduplicating Training Data Makes Language Models
     * Better") at fixed window size. Boilerplate headers, license
@@ -1292,18 +1295,16 @@ object Dedup {
     * exchange is reused by the postings build (one tokenize pass).
     */
   def dupSpans(df: DataFrame, idCol: String, textCol: String,
-               n: Int = 8, minDocs: Int = 2,
                maxPostings: Int = 10000): DataFrame = {
-    require(n >= 2 && minDocs >= 2 && maxPostings >= 1,
-      "need span length and minDocs >= 2, maxPostings >= 1")
+    require(maxPostings >= 1, "need maxPostings >= 1")
     val w = split(col(textCol), " ")
     val spans = df
       .select(col(idCol), w.as("_w"))
-      .filter(size(col("_w")) >= n)
+      .filter(size(col("_w")) >= SpanN)
       // word_ngrams kernel (r21): same distinct n-grams as the
       // transform/slice/concat_ws/array_distinct chain, compiled
       .select(col(idCol), explode(
-        graft.functions.VecKernels.word_ngrams(col("_w"), n)).as("span"))
+        graft.functions.VecKernels.word_ngrams(col("_w"), SpanN)).as("span"))
     // (doc, span) is already unique per row (array_distinct above); the
     // repartition+distinct exist for the PLAN, not the data — as in
     // [[TextAnalysis.invertedIndex]], they form the shared pruning-proof
@@ -1317,7 +1318,7 @@ object Dedup {
     val sp = spans.repartition(col("span")).distinct()
     val counts = sp.groupBy(col("span"))
       .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= minDocs)
+      .filter(col("n_docs") >= SpanMinDocs)
     sp.join(counts, "span")
       .withColumn("shard",
         pmod(col(idCol),
@@ -1329,12 +1330,18 @@ object Dedup {
           .as("postings"))
   }
 
+  /** Span length, in words, of [[dupSpans]] / [[dupSpanRegions]]. */
+  private val SpanN = 8
+
+  /** Distinct documents a span must occur in to count as duplicated. */
+  private val SpanMinDocs = 2
+
   /** Maximal duplicated regions per document — [[dupSpans]]'s fixed
     * windows merged into maximal token runs, the REMOVAL granularity of
     * suffix-array span dedup ("Deduplicating Training Data Makes
     * Language Models Better": cut every duplicated substring over the
-    * length threshold). A token position is hot when the `n`-window
-    * starting there occurs in ≥ `minDocs` distinct documents; runs of
+    * length threshold). A token position is hot when the [[SpanN]]-window
+    * starting there occurs in ≥ [[SpanMinDocs]] distinct documents; runs of
     * consecutive hot positions chain into one maximal region
     * `[start_tok, start_tok + n_tokens)` covering every overlapping hot
     * window. Output per region: (id, start_tok 1-based, n_tokens,
@@ -1351,9 +1358,9 @@ object Dedup {
     * projection instead of carrying every token array through the
     * window.
     */
-  def dupSpanRegions(df: DataFrame, idCol: String, textCol: String,
-                     n: Int = 8, minDocs: Int = 2): DataFrame = {
-    require(n >= 2 && minDocs >= 2, "need span length and minDocs >= 2")
+  def dupSpanRegions(df: DataFrame, idCol: String,
+                     textCol: String): DataFrame = {
+    val n = SpanN
     val w = split(col(textCol), " ")
     val pos = df.select(col(idCol), w.as("_w"))
       .filter(size(col("_w")) >= n)
@@ -1364,7 +1371,7 @@ object Dedup {
       .select(col(idCol), (col("pos") + 1).as("i"), col("col").as("span"))
     val hot = pos.select(col(idCol), col("span")).distinct()
       .groupBy(col("span")).agg(count(lit(1)).as("_nd"))
-      .filter(col("_nd") >= minDocs).select("span")
+      .filter(col("_nd") >= SpanMinDocs).select("span")
     val runs = pos.join(hot, "span")
       .select(col(idCol), col("i"))
       .withColumn("_grp", col("i") - row_number().over(

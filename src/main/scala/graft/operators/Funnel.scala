@@ -17,11 +17,19 @@ import org.apache.spark.sql.functions._
   * many steps a single-shuffle collect-and-walk (sorted per-user list +
   * HOF fold) wins; for the typical 3-5 step funnel the per-stage
   * filtered shuffles are smaller in total.
+  *
+  * Input: the fixed `events` columns `user_id`, `event_type`, `ts` and
+  * (for [[attribution]]) `event_id`.
   */
 object Funnel {
 
+  private val UserCol = "user_id"
+  private val TypeCol = "event_type"
+  private val TsCol = "ts"
+  private val IdCol = "event_id"
+
   /** Per-user step-completion times: (user, t_1, ..., t_n) where t_k =
-    * earliest `tsCol` of an event of type steps(k) at or after t_{k-1}
+    * earliest `ts` of an event of type steps(k) at or after t_{k-1}
     * (null if the user never completed step k in order). With
     * `deadlineHours` set, each step must ALSO land within that many
     * hours of the previous step's time — the conversion-window variant
@@ -29,23 +37,21 @@ object Funnel {
     * purchase a year after the click).
     */
   def stepTimes(events: DataFrame, steps: Seq[String],
-                userCol: String = "user_id", typeCol: String = "event_type",
-                tsCol: String = "ts",
                 deadlineHours: Option[Int] = None): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     def stepRows(step: String) =
-      events.filter(col(typeCol) === step).select(col(userCol), col(tsCol))
+      events.filter(col(TypeCol) === step).select(col(UserCol), col(TsCol))
     val first = stepRows(steps.head)
-      .groupBy(col(userCol))
-      .agg(min(col(tsCol)).as("t_1"))
+      .groupBy(col(UserCol))
+      .agg(min(col(TsCol)).as("t_1"))
     steps.zipWithIndex.tail.foldLeft(first) { case (acc, (step, i)) =>
-      val groupCols = col(userCol) +: (1 to i).map(j => col(s"t_$j"))
-      val inWindow = deadlineHours.foldLeft(col(tsCol) >= col(s"t_$i")) {
-        (c, d) => c && col(tsCol) <= col(s"t_$i") + expr(s"INTERVAL $d HOURS")
+      val groupCols = col(UserCol) +: (1 to i).map(j => col(s"t_$j"))
+      val inWindow = deadlineHours.foldLeft(col(TsCol) >= col(s"t_$i")) {
+        (c, d) => c && col(TsCol) <= col(s"t_$i") + expr(s"INTERVAL $d HOURS")
       }
-      acc.join(stepRows(step), Seq(userCol), "left")
+      acc.join(stepRows(step), Seq(UserCol), "left")
         .groupBy(groupCols: _*)
-        .agg(min(when(inWindow, col(tsCol))).as(s"t_${i + 1}"))
+        .agg(min(when(inWindow, col(TsCol))).as(s"t_${i + 1}"))
     }
   }
 
@@ -58,11 +64,8 @@ object Funnel {
     * names with quotes/backslashes pass through verbatim.
     */
   def counts(events: DataFrame, steps: Seq[String],
-             userCol: String = "user_id", typeCol: String = "event_type",
-             tsCol: String = "ts",
              deadlineHours: Option[Int] = None): DataFrame = {
-    val times = stepTimes(events, steps, userCol, typeCol, tsCol,
-      deadlineHours)
+    val times = stepTimes(events, steps, deadlineHours)
     val agg = times.agg(
       count(col("t_1")).as("n_1"),
       (2 to steps.length).map(i => count(col(s"t_$i")).as(s"n_$i")): _*)
@@ -84,8 +87,7 @@ object Funnel {
     * with ties to the SMALLER id and max the latest with ties to the
     * LARGER (by the id column's own ordering) — instead of a
     * per-conversion rank window. Ids pass through in their native type
-    * (no cast, no key encoding), so any orderable id — long, string
-    * UUID, decimal — works at any width. A conversion with no in-window touches
+    * (no cast, no key encoding). A conversion with no in-window touches
     * keeps its row from the left join: its single all-null-fields
     * struct is the group's only value, so first/last ids stay null and
     * `count(touch_id)` stays 0.
@@ -99,24 +101,22 @@ object Funnel {
     * single-user hot key would salt by (user, day) — the q39 pattern.
     */
   def attribution(events: DataFrame, touchTypes: Seq[String],
-                  convType: String, lookbackHours: Int,
-                  userCol: String = "user_id", typeCol: String = "event_type",
-                  tsCol: String = "ts", idCol: String = "event_id"): DataFrame = {
+                  convType: String, lookbackHours: Int): DataFrame = {
     require(touchTypes.nonEmpty, "attribution needs at least one touch type")
-    val p = events.filter(col(typeCol) === convType)
-      .select(col(idCol).as("conv_id"), col(userCol),
-        col(tsCol).as("conv_ts"))
-    val t = events.filter(col(typeCol).isin(touchTypes: _*))
-      .select(col(userCol).as("_tu"), col(tsCol).as("_tts"),
-        col(idCol).as("_tid"))
+    val p = events.filter(col(TypeCol) === convType)
+      .select(col(IdCol).as("conv_id"), col(UserCol),
+        col(TsCol).as("conv_ts"))
+    val t = events.filter(col(TypeCol).isin(touchTypes: _*))
+      .select(col(UserCol).as("_tu"), col(TsCol).as("_tts"),
+        col(IdCol).as("_tid"))
     p.join(t,
-        col("_tu") === col(userCol) &&
+        col("_tu") === col(UserCol) &&
           col("_tts") <= col("conv_ts") &&
           col("_tts") > col("conv_ts") - expr(s"INTERVAL $lookbackHours HOURS"),
         "left")
-      .select(col("conv_id"), col(userCol), col("conv_ts"), col("_tid"),
+      .select(col("conv_id"), col(UserCol), col("conv_ts"), col("_tid"),
         struct(col("_tts"), col("_tid")).as("_k"))
-      .groupBy("conv_id", userCol, "conv_ts")
+      .groupBy("conv_id", UserCol, "conv_ts")
       .agg(count(col("_tid")).as("n_touches"),
         min(col("_k")).getField("_tid").as("first_touch_id"),
         max(col("_k")).getField("_tid").as("last_touch_id"))

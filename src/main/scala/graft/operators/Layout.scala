@@ -27,7 +27,7 @@ object Layout {
     * Negative inputs are masked like any other value; callers who need
     * sign order preserved should bias to non-negative first.
     */
-  def zValue(a: Column, b: Column, bits: Int = 16): Column = {
+  def zValue(a: Column, b: Column, bits: Int): Column = {
     require(bits >= 1 && bits <= 31, s"bits must be in [1,31], got $bits")
     val mask = (1L << bits) - 1
     val am = a.cast(LongType).bitwiseAND(lit(mask))
@@ -43,7 +43,7 @@ object Layout {
     * the DuckDB oracle runs this text so both engines compute the same
     * bit-exact integer.
     */
-  def zSql(a: String, b: String, bits: Int = 16): String = {
+  def zSql(a: String, b: String, bits: Int): String = {
     require(bits >= 1 && bits <= 31, s"bits must be in [1,31], got $bits")
     val mask = (1L << bits) - 1
     val am = s"(CAST($a AS BIGINT) & $mask)"
@@ -55,15 +55,16 @@ object Layout {
   }
 
   /** Cluster `df` into `numFiles` z-ordered output partitions on
-    * (aCol, bCol): range-partition by the interleaved value, then sort
+    * (aCol, bCol): range-partition by the interleaved value (the low 16
+    * bits of each dimension), then sort
     * within each partition — each output file covers a contiguous
     * z-range, i.e. a bounded rectangle stack in (a, b). One range
     * exchange (sampled boundaries), no global sort barrier; this is
     * the write-side layout step before a parquet sink.
     */
   def zorder(df: DataFrame, aCol: String, bCol: String,
-             numFiles: Int, bits: Int = 16): DataFrame = {
-    val z = zValue(col(aCol), col(bCol), bits).as("__z")
+             numFiles: Int): DataFrame = {
+    val z = zValue(col(aCol), col(bCol), 16).as("__z")
     df.withColumn("__z", z)
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")

@@ -65,12 +65,11 @@ object Quality {
   /** [[profile]] with `approx_count_distinct` (HLL++) in place of the
     * exact distinct: identical report schema, but the plan is one
     * narrow aggregation pass with NO multi-distinct Expand — profiling
-    * a 500-column table costs one scan, not 500× the row stream. `rsd`
-    * is the HLL relative standard deviation (default 2%).
+    * a 500-column table costs one scan, not 500× the row stream, at a
+    * 2% HLL relative standard deviation.
     */
-  def profileApprox(df: DataFrame, cols: Seq[String],
-                    rsd: Double = 0.02): DataFrame =
-    profileWith(df, cols, approx_count_distinct(_, rsd))
+  def profileApprox(df: DataFrame, cols: Seq[String]): DataFrame =
+    profileWith(df, cols, approx_count_distinct(_, 0.02))
 
   /** Declarative rule check: each rule is (name, boolean column); a row
     * violates a rule when the predicate is false OR null (an

@@ -101,21 +101,18 @@ object Sampling {
 
   /** Deterministic train/val/test assignment: the same md5 hex gate as
     * [[hashSample]], carved into three contiguous bands —
-    * `[0, trainNum)` → "train", `[trainNum, valNum)` → "val",
-    * `[valNum, 256)` → "test" (fractions in 1/256 steps; defaults
-    * 245/5/6 ≈ 95.7/2.0/2.3%). Disjoint and exhaustive BY CONSTRUCTION
+    * `[0, 245)` → "train", `[245, 250)` → "val", `[250, 256)` → "test"
+    * (≈ 95.7/2.0/2.3%). Disjoint and exhaustive BY CONSTRUCTION
     * (one CASE over one hash of one stable key), reproducible on any
     * engine/partitioning/retry, and CONSISTENT across tables: a doc
     * lands in the same split wherever its key appears, so features
     * derived in another table can never leak across the boundary.
     * Scan-fused per-row expression — no shuffle, no RNG.
     */
-  def assignSplit(key: Column, trainNum: Int = 245, valNum: Int = 250): Column = {
-    require(0 <= trainNum && trainNum <= valNum && valNum <= 256,
-      "need 0 <= trainNum <= valNum <= 256")
+  def assignSplit(key: Column): Column = {
     val h = substring(md5(key.cast("string")), 1, 2)
-    when(h < lit(hexGate(trainNum)), lit("train"))
-      .when(h < lit(hexGate(valNum)), lit("val"))
+    when(h < lit(hexGate(245)), lit("train"))
+      .when(h < lit(hexGate(250)), lit("val"))
       .otherwise(lit("test"))
   }
 
@@ -332,32 +329,33 @@ object Sampling {
     * never straddle folds, which is what makes CV scores honest on
     * web-scale corpora). Exact integer arithmetic — `(u·k) div 2³²` —
     * so the assignment replays bit-for-bit on any engine; the hash is
-    * salted with `seed` so independent CV repeats are independent
-    * partitions. Returns the input plus a `fold` column in [0, k).
+    * salted with the fixed seed "cv1" ([[seededHex8]]). Returns the
+    * input plus a `fold` column in [0, k).
     *
     * Scale: a scan-fused per-row projection, zero shuffle, no RNG.
     */
-  def kFoldAssign(df: DataFrame, groupCol: String, k: Int,
-                  seed: String = "cv1"): DataFrame = {
+  def kFoldAssign(df: DataFrame, groupCol: String, k: Int): DataFrame = {
     require(k >= 2, s"k-fold needs k >= 2, got $k")
     // a NULL group key is its own group (all NULL-key rows share a
     // fold) rather than propagating to a NULL fold outside [0, k) —
     // NULL-fold rows would silently vanish from every train AND
-    // validation filter. The encoding is COLLISION-FREE by prefix
-    // discipline, not by a sentinel no key is supposed to contain:
-    // NULL renders as the bare tag "n", every value as "v"+value, so
-    // no key string can alias the NULL group. The seed is
-    // domain-separated through a fixed-width md5 digest prefix
-    // (constant-folded), so seed "a_b"+key "c" and seed "a"+key
-    // "b_c" — which a plain seed+"_"+key concat aliases — hash apart.
-    val u = conv(substring(md5(concat(md5(lit(seed)), seedableKey(groupCol))),
-      1, 8), 16, 10).cast(LongType)
+    // validation filter ([[seedableKey]]).
+    val u = conv(seededHex8("cv1", groupCol), 16, 10).cast(LongType)
     df.withColumn("_u", u)
       // SQL `div`: exact BIGINT floor division on non-negative
       // operands in Spark and DuckDB alike (the sp08 idiom)
       .withColumn("fold", expr(s"(_u * $k) div 4294967296"))
       .drop("_u")
   }
+
+  /** The first 8 hex digits of md5(seed digest ‖ [[seedableKey]]): the
+    * one salted hash of [[kFoldAssign]] and [[poissonReplicates]]. The
+    * seed is domain-separated through a fixed-width md5 digest prefix
+    * (constant-folded), so seed "a_b"+key "c" and seed "a"+key "b_c" —
+    * which a plain seed+"_"+key concat aliases — hash apart.
+    */
+  private[graft] def seededHex8(seed: String, keyCol: String): Column =
+    substring(md5(concat(md5(lit(seed)), seedableKey(keyCol))), 1, 8)
 
   /** Cumulative Poisson(λ=1) CDF at k = 0..5, scaled to 32-bit hex
     * LITERALS (floor(P(X≤k)·2³²) rendered as 8 lowercase hex digits).
@@ -372,19 +370,17 @@ object Sampling {
     * replacement from n is, per-row, Binomial(n, 1/n) → Poisson(1), so
     * each row independently draws a replicate count and explodes into
     * (row, rep 1..count); count 0 (≈ 36.8% of rows) drops the row.
-    * The draw inverts the CDF on an md5 hex prefix of the (seeded) key
-    * against [[PoissonCdfHex]] — deterministic, partition-invariant,
-    * engine-portable, and independent across `seed`s, so B bootstrap
-    * resamples are B seeds, not B shuffles. Counts cap at 6
+    * The draw inverts the CDF on an md5 hex prefix of the key salted
+    * with the fixed seed "bs1" ([[seededHex8]]) against
+    * [[PoissonCdfHex]] — deterministic, partition-invariant,
+    * engine-portable. Counts cap at 6
     * (P(X>6|λ=1) ≈ 8·10⁻⁵, the tail the 32-bit table resolves).
     *
     * Scale shape: a scan-fused narrow projection + generator — zero
     * shuffle, no RNG state, output volume ≈ input (E[count] = 1).
     */
-  def poissonReplicates(df: DataFrame, keyCol: String,
-                        seed: String = "bs1"): DataFrame = {
-    // same domain-separated seed digest + tagged key as [[kFoldAssign]]
-    val h = substring(md5(concat(md5(lit(seed)), seedableKey(keyCol))), 1, 8)
+  def poissonReplicates(df: DataFrame, keyCol: String): DataFrame = {
+    val h = seededHex8("bs1", keyCol)
     val cnt = PoissonCdfHex.tail.zipWithIndex
       .foldLeft(when(h < lit(PoissonCdfHex.head), 0)) {
         case (acc, (t, i)) => acc.when(h < lit(t), i + 1)

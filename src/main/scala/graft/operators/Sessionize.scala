@@ -12,17 +12,16 @@ import org.apache.spark.sql.types._
   */
 object Sessionize {
 
-  /** Assign session ids: a new session starts when the gap since the
-    * previous event of the same user exceeds `gapMinutes`. Ordering is
-    * pinned (ts, tiebreak) so results are deterministic under ties.
+  /** Assign session ids over the `events` columns: a new session starts
+    * when the gap since the previous event of the same `user_id`
+    * exceeds `gapMinutes`. Ordering is pinned (ts, event_id) so results
+    * are deterministic under ties.
     */
-  def assign(events: DataFrame, gapMinutes: Int,
-             userCol: String = "user_id", tsCol: String = "ts",
-             tiebreakCol: String = "event_id"): DataFrame = {
-    val w = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(tiebreakCol))
-    val prev = lag(col(tsCol), 1).over(w)
+  def assign(events: DataFrame, gapMinutes: Int): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    val prev = lag(col("ts"), 1).over(w)
     val newSession = when(prev.isNull ||
-      col(tsCol) - prev > expr(s"INTERVAL $gapMinutes MINUTES"), 1).otherwise(0)
+      col("ts") - prev > expr(s"INTERVAL $gapMinutes MINUTES"), 1).otherwise(0)
     events
       .withColumn("_new_s", newSession)
       .withColumn("session_id",

@@ -34,11 +34,11 @@ import org.apache.spark.sql.types._
   * that at plan time instead.
   *
   * INDEX CONTRACT: a built [[IvfIndex]] / [[IvfPqIndex]] carries the
-  * decisions of its build — the two-level assignment rule, and for
-  * IVF-PQ the subvector count `m` and codebook size — and every
-  * consumer (search, absorb, drift check, stats, maintain, the
-  * streaming absorb) reads them from the index; none takes them as a
-  * parameter. An index directory holds one parquet table per frame
+  * decisions of its build — the declared `nlist`, the two-level
+  * assignment rule, and for IVF-PQ the subvector count `m` and codebook
+  * size — and every consumer (search, absorb, drift check, stats,
+  * maintain, the streaming absorb) reads them from the index; none
+  * takes them as a parameter. An index directory holds one parquet table per frame
   * plus the `_build` record (`key=value` lines, read back without a
   * Spark job); a directory without the record is refused. `save` is
   * one [[graft.io.Publish.replace]] of the whole directory, and the
@@ -393,19 +393,21 @@ object Similarity {
     * codebook centroids (codebook seeded deterministically from corpus
     * vectors by hash bucket, the same in-plan discipline as
     * [[ivfTopK]]'s coarse quantizer — no driver-side training loop).
-    * A stored vector is then `m` small codes (defaults: 16 subspaces ×
-    * 5-bit codes = 10 bytes vs 256 bytes of floats, a 26× cut — the
-    * compression that makes exabyte indexes fit in RAM). Subspace
-    * count `m` is the accuracy lever (measured on the 64-d gate
-    * corpus: m=8 → 0.78 recall, m=16 → 0.92–1.00 across SFs at
-    * shortlist=100), `shortlist` trades re-rank cost for recall.
+    * A stored vector is then [[PqM]] = 16 small codes from a
+    * [[PqCodes]] = 32-entry codebook per subspace (5-bit codes = 10
+    * bytes vs 256 bytes of floats, a 26× cut — the compression that
+    * makes exabyte indexes fit in RAM). The subspace count is the
+    * accuracy lever (measured on the 64-d gate corpus: m=8 → 0.78
+    * recall, m=16 → 0.92–1.00 across SFs at a 100-candidate
+    * shortlist); the shortlist ([[PqShortlist]]) trades re-rank cost
+    * for recall.
     *
     * Search is the production two-stage shape:
     *  1. ADC (asymmetric distance computation): the query precomputes
     *     an (m × codes) distance table — broadcast-tiny — and every
     *     candidate is scored by summing table entries for its codes,
     *     touching ONLY the codes, never the vectors.
-    *  2. The top `shortlist` ADC candidates re-rank with exact L2.
+    *  2. The top [[PqShortlist]] ADC candidates re-rank with exact L2.
     *
     * Per-subspace ADC distances are summed as DECIMAL, so the shortlist
     * is summation-order-independent (the one groupBy-sum of doubles a
@@ -426,10 +428,9 @@ object Similarity {
     * only 1.00→1.00 at sf0.01 and 0.92→0.94 at sf0.1, at two extra
     * corpus passes per iteration.
     */
-  def pqTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-             m: Int = 16, codes: Int = 32, shortlist: Int = 100): DataFrame = {
-    require(m >= 1 && codes >= 2 && shortlist >= k,
-      "need m >= 1, codes >= 2, shortlist >= k")
+  def pqTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
+    val (m, codes, shortlist) = (PqM, PqCodes, PqShortlist)
+    require(shortlist >= k, s"need k <= $shortlist, got $k")
     requireIntegralIds(queries, candidates)
     import graft.functions.VecKernels.vec_sqdist_d
     def l2(a: Column, b: Column) = vec_sqdist_d(a, b)
@@ -506,11 +507,20 @@ object Similarity {
       .orderBy("qid", "rank")
   }
 
+  /** Subvectors per PQ-coded vector ([[pqTopK]], [[ivfPqBuild]]). */
+  private val PqM = 16
+
+  /** Entries of a PQ codebook per subspace. */
+  private val PqCodes = 32
+
+  /** ADC candidates per query that re-rank with exact L2. */
+  private val PqShortlist = 100
+
   /** IVF-PQ — the composed architecture production vector stores ship:
     * an IVF coarse quantizer prunes the corpus to `nprobe` of `nlist`
     * cells, and product quantization encodes each vector's RESIDUAL
-    * (v − its cell centroid) in `m` subspaces × `codes` codebook
-    * entries. Residual encoding is what makes the composition better
+    * (v − its cell centroid) in [[PqM]] subspaces × [[PqCodes]]
+    * codebook entries. Residual encoding is what makes the composition better
     * than either half alone: residuals concentrate near the origin, so
     * one shared codebook (trained on all residuals, the standard
     * choice) spends its codes on a tighter distribution than raw
@@ -519,7 +529,7 @@ object Similarity {
     * Search: queries pick their `nprobe` nearest cells, build one ADC
     * table per probed cell from the query's residual w.r.t. THAT
     * cell's centroid, score only the probed cells' candidates over
-    * their codes, and exact-re-rank the `shortlist`. All codebooks and
+    * their codes, and exact-re-rank the [[PqShortlist]]. All codebooks and
     * tables are broadcast-tiny; both argmins collapse map-side
     * (min(struct), never a per-candidate window); candidate vectors are
     * read exactly twice (encode + re-rank) at any corpus size.
@@ -540,13 +550,11 @@ object Similarity {
     */
   def ivfPqTopK(queries: DataFrame, candidates: DataFrame, k: Int,
                 nlist: Int = 16, nprobe: Int = 8,
-                m: Int = 16, codes: Int = 32, shortlist: Int = 100,
                 twoLevelAssign: Boolean = false): DataFrame = {
-    require(nprobe >= 1 && nprobe <= nlist && shortlist >= k,
-      "need 1 <= nprobe <= nlist and shortlist >= k")
-    ivfPqSearch(queries,
-      ivfPqBuild(candidates, nlist, m, codes, twoLevelAssign),
-      candidates, k, nprobe, shortlist)
+    require(nprobe >= 1 && nprobe <= nlist && PqShortlist >= k,
+      s"need 1 <= nprobe <= nlist and k <= $PqShortlist")
+    ivfPqSearch(queries, ivfPqBuild(candidates, nlist, twoLevelAssign),
+      candidates, k, nprobe, PqShortlist)
   }
 
   /** A built IVF-PQ index — three plain relational tables, the
@@ -560,21 +568,21 @@ object Similarity {
     * the index — the exact re-rank stage reads it from wherever it
     * already lives (the corpus parquet), exactly like a production
     * store keeps codes hot and fetches full vectors only for the
-    * shortlist. `m`, `codebookSize` (the build's `codes`) and
-    * `twoLevel` are the build's decisions, carried per the INDEX
-    * CONTRACT; [[save]] publishes the
+    * shortlist. `nlist` (as declared, not the surviving cell count),
+    * `m`, `codebookSize` and `twoLevel` are the build's decisions,
+    * carried per the INDEX CONTRACT; [[save]] publishes the
     * tables and the record, [[Similarity.ivfPqLoad]] reads them back,
     * and any engine can inspect them.
     */
   final case class IvfPqIndex(coarse: DataFrame, codebook: DataFrame,
-                              codes: DataFrame, m: Int, codebookSize: Int,
-                              twoLevel: Boolean) {
+                              codes: DataFrame, nlist: Int, m: Int,
+                              codebookSize: Int, twoLevel: Boolean) {
     def save(path: String): Unit = publishDir(coarse.sparkSession, path)(stage)
 
     /** Write the tables and the build record into the fresh `dir`. */
     private[graft] def stage(dir: String): Unit =
       stageIndex(dir, Seq("coarse" -> coarse, "codebook" -> codebook,
-        "codes" -> codes), Seq("m" -> m.toString,
+        "codes" -> codes), Seq("nlist" -> nlist.toString, "m" -> m.toString,
         "codebookSize" -> codebookSize.toString,
         "twoLevel" -> twoLevel.toString))
   }
@@ -584,8 +592,9 @@ object Similarity {
     val build = loadRecord(spark, path)
     IvfPqIndex(spark.read.parquet(s"$path/coarse"),
       spark.read.parquet(s"$path/codebook"),
-      spark.read.parquet(s"$path/codes"), build("m").toInt,
-      build("codebookSize").toInt, build("twoLevel").toBoolean)
+      spark.read.parquet(s"$path/codes"), build("nlist").toInt,
+      build("m").toInt, build("codebookSize").toInt,
+      build("twoLevel").toBoolean)
   }
 
   /** The build record inside every saved index directory. */
@@ -622,16 +631,17 @@ object Similarity {
   /** Build the [[IvfPqIndex]]: coarse cells hash-seeded in-plan,
     * candidates assigned per-row (exact fold, or the two-level
     * leader-group fold at [[TwoLevelAuto]] surviving cells or under
-    * `twoLevelAssign` — see [[ivfPqTopK]]), residuals split into `m`
-    * subvectors and encoded against one shared `codes`-entry codebook.
+    * `twoLevelAssign` — see [[ivfPqTopK]]), residuals split into
+    * [[PqM]] subvectors and encoded against one shared
+    * [[PqCodes]]-entry codebook.
     * O(1) corpus passes regardless of how the index is consumed: the
     * coarse quantizer and the codebook are localCheckpoint-materialized
     * at build (both broadcast-tiny), so [[IvfPqIndex.save]]'s three
     * writes and every serve re-derive nothing corpus-sized.
     */
-  def ivfPqBuild(candidates: DataFrame,
-                 nlist: Int = 16, m: Int = 16, codes: Int = 32,
+  def ivfPqBuild(candidates: DataFrame, nlist: Int = 16,
                  twoLevelAssign: Boolean = false): IvfPqIndex = {
+    val (m, codes) = (PqM, PqCodes)
     requireIntegralId(candidates, VecId)
     def subSplit(v: Column): Column = subSplitExplode(v, m)
 
@@ -682,8 +692,8 @@ object Similarity {
     // free of the codebook re-derivation (the encode reads the
     // CHECKPOINTED frame, not the live chain)
     val cb = cents.localCheckpoint()
-    IvfPqIndex(coarse, cb, ivfPqEncode(assigned, cb, m, None), m, codes,
-      twoLevel)
+    IvfPqIndex(coarse, cb, ivfPqEncode(assigned, cb, m, None), nlist, m,
+      codes, twoLevel)
   }
 
   /** Serve top-`k` L2 neighbors against a built [[IvfPqIndex]]:
@@ -702,7 +712,8 @@ object Similarity {
     * invisible until a rebuild.
     */
   def ivfPqSearch(queries: DataFrame, index: IvfPqIndex, rerank: DataFrame,
-                  k: Int, nprobe: Int = 8, shortlist: Int = 100): DataFrame =
+                  k: Int, nprobe: Int = 8,
+                  shortlist: Int = PqShortlist): DataFrame =
     ivfPqServe(queries, index, rerank, None, k, nprobe, shortlist)
 
   /** [[ivfPqSearch]] against a STALE [[IvfPqIndex]] plus the unindexed
@@ -718,7 +729,8 @@ object Similarity {
     */
   def ivfPqSearchWithDelta(queries: DataFrame, index: IvfPqIndex,
                            rerank: DataFrame, delta: DataFrame, k: Int,
-                           nprobe: Int = 8, shortlist: Int = 100): DataFrame =
+                           nprobe: Int = 8,
+                           shortlist: Int = PqShortlist): DataFrame =
     ivfPqServe(queries, index, rerank, Some(delta), k, nprobe, shortlist)
 
   /** Fold the append log back INTO a built [[IvfPqIndex]] —
@@ -1004,28 +1016,32 @@ object Similarity {
     * (centroid_id, cvec array<double>, cnorm), `cells` the cell-keyed
     * corpus (cid, cv array<double>, cn, centroid_id) — vectors stored
     * cell-ordered, the layout a production vector store serves from —
-    * and `twoLevel` the build's assignment rule (INDEX CONTRACT).
+    * and `nlist` (as declared; hash-picked cells can collide, so fewer
+    * may survive) and `twoLevel` the build's decisions (INDEX
+    * CONTRACT).
     * Both frames are plain relational tables: [[save]] publishes them
     * with the record, [[Similarity.ivfLoad]] reads them back, and any
     * engine can inspect them.
     */
   final case class IvfIndex(centroids: DataFrame, cells: DataFrame,
-                            twoLevel: Boolean) {
+                            nlist: Int, twoLevel: Boolean) {
     def save(path: String): Unit =
       publishDir(centroids.sparkSession, path)(stage)
 
     /** Write the tables and the build record into the fresh `dir`. */
     private[graft] def stage(dir: String): Unit =
       stageIndex(dir, Seq("centroids" -> centroids, "cells" -> cells),
-        Seq("twoLevel" -> twoLevel.toString))
+        Seq("nlist" -> nlist.toString, "twoLevel" -> twoLevel.toString))
   }
 
   /** Load an [[IvfIndex]] persisted by `IvfIndex.save`. */
   def ivfLoad(spark: org.apache.spark.sql.SparkSession,
-              path: String): IvfIndex =
+              path: String): IvfIndex = {
+    val build = loadRecord(spark, path)
     IvfIndex(spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/cells"),
-      loadRecord(spark, path)("twoLevel").toBoolean)
+      spark.read.parquet(s"$path/cells"), build("nlist").toInt,
+      build("twoLevel").toBoolean)
+  }
 
   // ---- IVF internals (shared by build and search) -----------------------
 
@@ -1354,7 +1370,7 @@ object Similarity {
     val twoLevel = decideTwoLevel("ivfBuild", twoLevelAssign,
       centroids.count(), atMost = nlist)
     IvfIndex(centroids, ivfAssignCells(candidates, centroids, twoLevel),
-      twoLevel)
+      nlist, twoLevel)
   }
 
   /** Serve top-`k` against a built [[IvfIndex]] — queries assign to
@@ -1848,7 +1864,7 @@ object Similarity {
     * as a fresh [[ivfBuild]] over the grown corpus (build is
     * value-deterministic — hash-seeded centroids, per-row argmin — so
     * reconstruction from the cell table changes nothing). Rebuild
-    * keeps the index's own nlist and two-level rule.
+    * keeps the index's own declared nlist and two-level rule.
     */
   def ivfMaintain(index: IvfIndex, stats: DataFrame,
                   delta: DataFrame): IvfMaintainResult = {
@@ -1861,12 +1877,11 @@ object Similarity {
         "re-training the quantizer over the grown corpus instead of " +
         "absorbing (re-derive stats on save; the old expectations " +
         "price a quantizer that no longer exists).")
-      val nlist = index.centroids.count().toInt // quantizer-sized
       val grown = index.cells
         .select(col("cid").cast(LongType).as(VecId), col("cv").as(Embedding))
         .unionByName(delta.select(col(VecId).cast(LongType).as(VecId),
           dbl(col(Embedding)).as(Embedding)))
-      IvfMaintainResult(ivfBuild(grown, nlist, index.twoLevel), report,
+      IvfMaintainResult(ivfBuild(grown, index.nlist, index.twoLevel), report,
         rebuilt = true)
     }
   }
@@ -1884,7 +1899,7 @@ object Similarity {
     * rides in explicitly — it is the same handle the serve path
     * already requires as `rerank`, per the IvfPqIndex contract that
     * raw vectors live outside the index. Rebuild keeps the index's own
-    * nlist and the build decisions it carries (INDEX CONTRACT).
+    * declared nlist and two-level rule; the PQ shape is the fixed one.
     */
   def ivfPqMaintain(index: IvfPqIndex, stats: DataFrame,
                     corpus: DataFrame, delta: DataFrame): IvfPqMaintainResult = {
@@ -1896,14 +1911,13 @@ object Similarity {
       logger.warn("graft ivfPqMaintain: drift verdict REBUILD — " +
         "re-training coarse quantizer and codebook over the grown " +
         "corpus instead of absorbing (re-derive stats on save).")
-      val nlist = index.coarse.count().toInt // quantizer-sized
       val grown = corpus
         .select(col(VecId).cast(LongType).as(VecId),
           dbl(col(Embedding)).as(Embedding))
         .unionByName(delta.select(col(VecId).cast(LongType).as(VecId),
           dbl(col(Embedding)).as(Embedding)))
-      IvfPqMaintainResult(ivfPqBuild(grown, nlist, index.m,
-        index.codebookSize, index.twoLevel), report, rebuilt = true)
+      IvfPqMaintainResult(ivfPqBuild(grown, index.nlist, index.twoLevel),
+        report, rebuilt = true)
     }
   }
 
@@ -2379,17 +2393,18 @@ object Similarity {
     * hybrid-retrieval composition (Cormack/Clarke/Buettcher RRF): fuse
     * a lexical shortlist (e.g. [[graft.operators.TextAnalysis.bm25Rank]])
     * with a dense shortlist (e.g. [[cosineTopK]]) by summing
-    * 1/(kRrf + rank) over the lists each id appears in. RRF needs only
+    * 1/(60 + rank) over the lists each id appears in (the usual
+    * k_rrf = 60). RRF needs only
     * RANKS, never the incomparable raw scores — which is why it is the
     * fusion production retrieval stacks ship.
     *
-    * Inputs are (idCol, rankCol) frames, k-bounded BY CONTRACT (they
+    * Inputs are (id, rank) frames, k-bounded BY CONTRACT (they
     * are top-k shortlists); an id missing from one list contributes 0
     * from that list. Emits (id, score, rank) — top `k` by fused score,
     * ties broken by id ascending.
     *
     * Cross-engine determinism: each term is one IEEE-correctly-rounded
-    * division of exact integers (1.0 / (rank + kRrf)), and the fused
+    * division of exact integers (1.0 / (rank + 60)), and the fused
     * score is a TWO-term sum in a fixed written order — no
     * summation-order ambiguity exists, so the doubles are bit-identical
     * to a SQL oracle writing the same shape (no decimal machinery
@@ -2401,14 +2416,13 @@ object Similarity {
     * bounded retrieval operators upstream. The window here is over ≤ 2k
     * rows by construction, never by corpus.
     */
-  def rrfFuse(a: DataFrame, b: DataFrame, k: Int, kRrf: Int = 60,
-              idCol: String = "id", rankCol: String = "rank"): DataFrame = {
-    require(k > 0 && kRrf > 0, s"need k > 0 and kRrf > 0, got k=$k kRrf=$kRrf")
+  def rrfFuse(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
+    require(k > 0, s"need k > 0, got k=$k")
     def side(df: DataFrame, r: String): DataFrame =
-      df.select(col(idCol).cast(LongType).as("id"),
-        col(rankCol).cast(LongType).as(r))
+      df.select(col("id").cast(LongType).as("id"),
+        col("rank").cast(LongType).as(r))
     def term(r: String): Column =
-      coalesce(lit(1.0) / (col(r) + lit(kRrf.toLong)).cast(DoubleType), lit(0.0))
+      coalesce(lit(1.0) / (col(r) + lit(60L)).cast(DoubleType), lit(0.0))
     side(a, "_ra").join(side(b, "_rb"), Seq("id"), "full_outer")
       .select(col("id"), (term("_ra") + term("_rb")).as("score"))
       .orderBy(col("score").desc, col("id"))

@@ -24,7 +24,7 @@ object Skew {
     * a plain inner join; only the shuffle distribution changes.
     *
     * The salt is a pure function of the left ROW (xxhash64 over every
-    * column plus `seed`), so a task retry or speculative duplicate
+    * column plus the fixed seed 42), so a task retry or speculative duplicate
     * recomputes the identical salt even when the upstream is
     * nondeterministic — unlike `rand()`, whose value depends on
     * partition index and row order. Hashing the whole row (not just the
@@ -41,7 +41,7 @@ object Skew {
     * sides instead of assuming "_salt" is free.
     */
   def saltedJoin(left: DataFrame, right: DataFrame, key: String,
-                 factor: Int, seed: Long = 42L): DataFrame = {
+                 factor: Int): DataFrame = {
     require(factor > 0, "salt factor must be positive")
     def hashable(dt: DataType): Boolean = dt match {
       case _: MapType    => false
@@ -57,7 +57,7 @@ object Skew {
     val saltCol = Iterator.from(0).map(i => s"__graft_salt$i")
       .find(n => !left.columns.contains(n) && !right.columns.contains(n)).get
     val saltedLeft = left.withColumn(saltCol,
-      pmod(xxhash64(lit(seed) +: hashCols: _*), lit(factor))
+      pmod(xxhash64(lit(42L) +: hashCols: _*), lit(factor))
         .cast(IntegerType))
     val replicatedRight = right.withColumn(saltCol,
       explode(sequence(lit(0), lit(factor - 1))))

@@ -88,14 +88,14 @@ object TextAnalysis {
       "ar ", "ra ", "ado"))
 
   /** Multi-language identification by Cavnar–Trenkle out-of-place
-    * distance: per document, the top-`topN` character trigrams (by
-    * count desc, trigram asc — a total order) form the doc profile;
-    * against each language profile the distance is
+    * distance: per document, the top-40 character
+    * trigrams (by count desc, trigram asc — a total order) form the doc
+    * profile; against each language profile the distance is
     * Σ over doc-profile trigrams of |doc_rank − profile_rank|, with
-    * absent trigrams penalized at `topN`; the language is the argmin
+    * absent trigrams penalized at 40; the language is the argmin
     * (ties toward the lexicographically first code). Returns
     * (id, language, distance, n_grams, confidence) with
-    * confidence = 1 − distance / (n_grams·topN) ∈ [0, 1].
+    * confidence = 1 − distance / (n_grams·40) ∈ [0, 1].
     *
     * Text shorter than one trigram after trim-normalization scores no
     * profile and is labeled "und" with distance NULL, confidence 0 —
@@ -111,13 +111,10 @@ object TextAnalysis {
     * sentence-length docs (the ta26 gate plants those), but a 2–3 word
     * doc yields a handful of trigrams whose accidental overlap with
     * one profile produces a CONFIDENT wrong label (e.g. a lone French
-    * loan-phrase inside an English catalog row). `minGrams` is the
-    * abstention cutoff: a doc whose profile has fewer than `minGrams`
-    * trigrams is labeled "und" (its measured distance/n_grams/
-    * confidence still reported, so the cascade can see WHY it
-    * abstained). Default 0 preserves the always-classify behavior;
-    * short-doc-heavy corpora should run ≥ 10 (a sentence of ~4 words
-    * clears it, a fragment does not).
+    * loan-phrase inside an English catalog row). Every doc is
+    * classified; a short-doc-heavy cascade abstains on the reported
+    * `n_grams` instead (treat `n_grams < 10` as "und": a sentence of ~4
+    * words clears it, a fragment does not).
     *
     * Determinism: trigram counts are exact, both rank orders are
     * total, the distance is exact integer arithmetic, the argmin
@@ -128,14 +125,13 @@ object TextAnalysis {
     * Scale shape: the corpus pass is one narrow trigram explode + one
     * (id, trigram) count with map-side combine; the per-doc rank
     * window is partitioned by document (each doc's grams bounded by
-    * its length — no global window); everything after runs on ≤ topN
+    * its length — no global window); everything after runs on ≤ 40
     * rows per doc against a 120-row broadcast profile table. No UDFs,
     * no driver actions.
     */
-  def languageIdentify(df: DataFrame, idCol: String, textCol: String,
-                       topN: Int = 40, minGrams: Int = 0): DataFrame = {
-    require(topN >= 1, s"topN must be >= 1, got $topN")
-    require(minGrams >= 0, s"minGrams must be >= 0, got $minGrams")
+  def languageIdentify(df: DataFrame, idCol: String,
+                       textCol: String): DataFrame = {
+    val topN = 40
     val spark = df.sparkSession
     import spark.implicits._
     val profiles = LidProfiles.toSeq.sortBy(_._1).flatMap { case (l, gs) =>
@@ -174,11 +170,8 @@ object TextAnalysis {
       .select(col("_id"),
         // a FULL MISS (no doc gram in any profile — pure digits,
         // unprofiled scripts) is "und", not the alphabetically first
-        // language at confidence 0; a doc too short to clear the
-        // minGrams abstention cutoff is also "und" — a fragment's few
-        // trigrams can confidently match the wrong profile
+        // language at confidence 0
         when(col("_b.d") === col("_b.n_grams") * topN, lit("und"))
-          .when(col("_b.n_grams") < minGrams, lit("und"))
           .otherwise(col("_b.lang")).as("language"),
         col("_b.d").as("distance"), col("_b.n_grams").as("n_grams"),
         (lit(1.0) - col("_b.d").cast(DoubleType) /
@@ -262,12 +255,12 @@ object TextAnalysis {
       lit(0.3) * least(nTok.cast(DoubleType) / 100.0, lit(1.0)) +
       lit(0.2) * (lit(1.0) - least(pr / 0.2, lit(1.0)))
 
-  /** Heuristic language ID: stopword-hit ratio per language, label =
-    * argmax when above `threshold`, else "und". Deterministic, exact
-    * double division — oracle-able in SQL.
+  /** Heuristic language ID: stopword-hit ratio for `lang`; `is_lang`
+    * when the ratio reaches 0.08 (the fluency norm [[qualityScore]]
+    * uses). Deterministic, exact double division — oracle-able in SQL.
     */
   def languageScore(df: DataFrame, idCol: String, textCol: String,
-                    lang: String, threshold: Double = 0.08): DataFrame = {
+                    lang: String): DataFrame = {
     val toks = split(col(textCol), " ")
     val hits = stopHitsCol(toks, lang).cast(LongType)
     df.select(
@@ -275,7 +268,7 @@ object TextAnalysis {
       hits.as("stop_hits"),
       size(toks).cast(LongType).as("n_tokens"),
       (hits.cast(DoubleType) / size(toks).cast(DoubleType)).as("stop_ratio"))
-      .withColumn("is_lang", (col("stop_ratio") >= threshold).cast(IntegerType))
+      .withColumn("is_lang", (col("stop_ratio") >= 0.08).cast(IntegerType))
   }
 
   /** Composite document quality score for corpus filtering — the
@@ -286,14 +279,14 @@ object TextAnalysis {
     *   - punctuation density penalty (boilerplate/markup).
     * quality = 0.5·min(stop/0.08, 1) + 0.3·min(ntok/100, 1)
     *         + 0.2·(1 − min(punct/0.2, 1));  keep = quality ≥ 0.5.
-    * Pure double arithmetic in a fixed evaluation order — the DuckDB
-    * oracle reproduces it bit-for-bit.
+    * Stopwords are English ([[CurationLang]]). Pure double arithmetic
+    * in a fixed evaluation order — the DuckDB oracle reproduces it
+    * bit-for-bit.
     */
-  def qualityScore(df: DataFrame, idCol: String, textCol: String,
-                   lang: String = "en"): DataFrame = {
+  def qualityScore(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = split(col(textCol), " ")
     df.select(col(idCol), size(toks).cast(LongType).as("n_tokens"),
-        stopRatioCol(toks, lang).as("stop_ratio"),
+        stopRatioCol(toks, CurationLang).as("stop_ratio"),
         punctRatioCol(col(textCol)).as("punct_ratio"))
       .withColumn("quality",
         qualityCol(col("stop_ratio"), col("n_tokens"), col("punct_ratio")))
@@ -306,16 +299,16 @@ object TextAnalysis {
     * curation team audits, so they are first-class output, not a
     * boolean). Filters evaluate in fixed priority order and the FIRST
     * failure labels the document:
-    *   1. `too_short`       — n_tokens < `minTokens` (no signal),
-    *   2. `non_target_lang` — stopword ratio < `minStopRatio` (the
+    *   1. `too_short`       — n_tokens < 20 (no signal),
+    *   2. `non_target_lang` — English stopword ratio < 0.04 (the
     *                          [[languageScore]] heuristic),
-    *   3. `repetitive`      — duplicate-2-gram fraction > `maxDup2`
+    *   3. `repetitive`      — duplicate-2-gram fraction > 0.08
     *                          (the [[repetitionStats]] boilerplate
     *                          signal),
     *   4. `low_quality`     — the [[qualityScore]] composite (its own
-    *                          0.08 fluency norm, unchanged) < `minQuality`,
+    *                          0.08 fluency norm, unchanged) < 0.6,
     *   else `keep`.
-    * Default cutoffs are calibrated on the gate corpus so every class
+    * The cutoffs are calibrated on the gate corpus so every class
     * is populated (keep 316 / lang 104 / short 43 / repeat 24 / low 13
     * of 500 at sf0.01).
     *
@@ -327,16 +320,12 @@ object TextAnalysis {
     * fixed-order IEEE expression, so verdicts are bit-identical across
     * engines.
     */
-  def curationReport(df: DataFrame, idCol: String, textCol: String,
-                     lang: String = "en",
-                     minTokens: Int = 20,
-                     minStopRatio: Double = 0.04,
-                     maxDup2: Double = 0.08,
-                     minQuality: Double = 0.6): DataFrame = {
+  def curationReport(df: DataFrame, idCol: String,
+                     textCol: String): DataFrame = {
     val base = df.select(col(idCol), col(textCol).as("_t"),
       split(col(textCol), " ").as("_toks"))
     val nTok = size(col("_toks")).cast(LongType)
-    val stopRatio = stopRatioCol(col("_toks"), lang)
+    val stopRatio = stopRatioCol(col("_toks"), CurationLang)
     val punctRatio = punctRatioCol(col("_t"))
     // compiled word_ngrams kernel (r20): total 2-grams = len − 1,
     // distinct from the kernel — the same integers the old
@@ -353,12 +342,15 @@ object TextAnalysis {
       stopRatio.as("stop_ratio"),
       dup2.as("dup_2gram_frac"),
       quality.as("quality"),
-      when(nTok < minTokens, "too_short")
-        .when(stopRatio < minStopRatio, "non_target_lang")
-        .when(dup2 > maxDup2, "repetitive")
-        .when(quality < minQuality, "low_quality")
+      when(nTok < 20, "too_short")
+        .when(stopRatio < 0.04, "non_target_lang")
+        .when(dup2 > 0.08, "repetitive")
+        .when(quality < 0.6, "low_quality")
         .otherwise("keep").as("verdict"))
   }
+
+  /** Stopword language of [[qualityScore]] and [[curationReport]]. */
+  private val CurationLang = "en"
 
   /** Positional rolling fingerprint: Σ codepoint(c_i)·((i mod 64)+1) —
     * order-sensitive (an anagram fingerprints differently), overflow-free
@@ -411,7 +403,8 @@ object TextAnalysis {
     *   score += idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)),
     *   idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5))
     *
-    * (the Robertson/Lucene always-positive idf). Unlike
+    * (the Robertson/Lucene always-positive idf) at the usual
+    * k1 = 1.2, b = 0.75. Unlike
     * [[tfIdfTopTerms]], BM25 saturates term frequency and normalizes by
     * document length — a short doc mentioning a term twice outranks a
     * rambling one doing the same.
@@ -435,9 +428,9 @@ object TextAnalysis {
     * already-limited k rows — bounded by construction, never by corpus.
     */
   def bm25Rank(df: DataFrame, idCol: String, textCol: String,
-               terms: Seq[String], k: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+               terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty && k > 0, "need terms and k > 0")
+    val (k1, b) = (1.2, 0.75)
     val tok = tokens(df, idCol, textCol)
     val dl = tok.groupBy(col(idCol)).agg(count(lit(1)).as("dl"))
     val tf = tok.filter(col("tok").isin(terms: _*))
@@ -478,13 +471,12 @@ object TextAnalysis {
     "[0-9]{2}-[0-9]{3}-[0-9]{3}-[0-9]{4}" -> "<PHONE>",
     "([0-9]{1,3}\\.){3}[0-9]{1,3}" -> "<IP>")
 
-  /** Redact PII spans (default: email, phone, IPv4 — [[PiiPatterns]])
-    * to fixed tokens. A pure narrow projection: regexp_replace chain,
-    * scan-fused, zero shuffle — the shape a 100 TB scrub pass needs.
+  /** Redact PII spans (email, phone, IPv4 — [[PiiPatterns]]) to fixed
+    * tokens. A pure narrow projection: regexp_replace chain, scan-fused,
+    * zero shuffle — the shape a 100 TB scrub pass needs.
     */
-  def redactPii(text: Column,
-                patterns: Seq[(String, String)] = PiiPatterns): Column =
-    patterns.foldLeft(text) { case (acc, (p, tok)) =>
+  def redactPii(text: Column): Column =
+    PiiPatterns.foldLeft(text) { case (acc, (p, tok)) =>
       regexp_replace(acc, p, tok)
     }
 
@@ -650,9 +642,9 @@ object TextAnalysis {
 
   /** CCNet-style perplexity bucketing: rank every document by its
     * [[bigramLogProb]] fluency score (best first) and cut the corpus
-    * into `nBuckets` equal GLOBAL-RANK slices — head/middle/tail for
-    * nBuckets = 3, the split CCNet feeds to per-bucket sampling rates.
-    * A doc's bucket is `((rank−1)·nBuckets) div N` — a pure integer
+    * into 3 equal GLOBAL-RANK slices — head/middle/tail, the split
+    * CCNet feeds to per-bucket sampling rates.
+    * A doc's bucket is `((rank−1)·3) div N` — a pure integer
     * function of its global rank, so assignment is engine-portable and
     * bucket sizes differ by at most one. Docs with no bigrams (< 2
     * tokens) are unscored and not emitted. Output:
@@ -664,9 +656,9 @@ object TextAnalysis {
     * counts broadcast back as offsets. No corpus-wide single-task
     * window; N joins in as a broadcast scalar.
     */
-  def perplexityBuckets(df: DataFrame, idCol: String, textCol: String,
-                        nBuckets: Int = 3): DataFrame = {
-    require(nBuckets > 0, "nBuckets must be positive")
+  def perplexityBuckets(df: DataFrame, idCol: String,
+                        textCol: String): DataFrame = {
+    val nBuckets = 3
     val scored = bigramLogProb(df, idCol, textCol)
       .select(col(idCol), col("avg_logprob"))
     val local = scored
@@ -724,11 +716,12 @@ object TextAnalysis {
   }
 
   /** Winnowing document fingerprints (the MOSS scheme): hash every
-    * word `k`-gram, slide a window of `w` consecutive gram hashes, keep
-    * each window's MINIMUM, emit the distinct selected hashes — one
-    * `(id, fp)` row per fingerprint. Guarantees every shared substring
-    * of ≥ `w + k - 1` tokens between two documents shares at least one
-    * fingerprint, at ~1/w the k-gram count — the sub-document overlap
+    * word `k`-gram (k = 3), slide a window of `w` = 4 consecutive gram
+    * hashes, keep each window's MINIMUM, emit the distinct selected
+    * hashes — one `(id, fp)` row per fingerprint. Guarantees every
+    * shared substring of ≥ `w + k - 1` = 6 tokens between two documents
+    * shares at least one fingerprint, at ~1/w the k-gram count — the
+    * sub-document overlap
     * detector exact dedup can't be and full k-gram sets are too big to
     * be.
     *
@@ -739,9 +732,8 @@ object TextAnalysis {
     * j + w - 1 grams remain; a doc with fewer than `w` grams emits one
     * whole-array window).
     */
-  def winnow(df: DataFrame, idCol: String, textCol: String,
-             k: Int = 3, w: Int = 4): DataFrame = {
-    require(k >= 1 && w >= 1, "k and w must be positive")
+  def winnow(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (k, w) = (3, 4)
     // compiled winnow_fps kernel (r20): md5-per-gram + per-window
     // binary min + first-occurrence distinct fused into one compiled
     // pass (the HOF form ran an interpreted md5 expression per gram
@@ -862,7 +854,7 @@ object TextAnalysis {
   }
 
   /** Zipf's-law fit over the corpus vocabulary: least-squares slope and
-    * intercept of ln(freq) on ln(rank) for the top-`topN` terms — the
+    * intercept of ln(freq) on ln(rank) for the top-1000 terms — the
     * one-number "does this corpus look like natural language" probe
     * (natural text slopes ≈ −1; templated/log spam diverges) used to
     * screen crawl snapshots before training.
@@ -871,8 +863,8 @@ object TextAnalysis {
     *
     * Scale shape: term counting is the only corpus-sized stage
     * (map-side partial agg); the top-N selection is a TakeOrdered, and
-    * the rank window runs over topN ALREADY-SELECTED rows — bounded by
-    * the parameter, never by vocabulary or corpus size.
+    * the rank window runs over ≤ 1000 ALREADY-SELECTED rows — bounded
+    * by a constant, never by vocabulary or corpus size.
     *
     * Determinism: ranks are assigned by the total order (freq DESC,
     * term ASC); each ln() is quantized to DECIMAL(12,6) (the ta08
@@ -881,12 +873,10 @@ object TextAnalysis {
     * products, and the closing slope/intercept arithmetic is the same
     * chain of individually-rounded IEEE ops in both engines.
     */
-  def zipfFit(df: DataFrame, idCol: String, textCol: String,
-              topN: Int = 1000): DataFrame = {
-    require(topN >= 3, s"topN must be >= 3, got $topN")
+  def zipfFit(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tf = tokens(df, idCol, textCol)
       .groupBy("tok").agg(count(lit(1)).as("n"))
-    val top = tf.orderBy(desc("n"), col("tok")).limit(topN)
+    val top = tf.orderBy(desc("n"), col("tok")).limit(1000)
     val w = Window.orderBy(desc("n"), col("tok"))
     val q = top.withColumn("r", row_number().over(w))
       .select(log(col("r").cast(DoubleType)).cast(DecimalType(12, 6)).as("x"),

@@ -25,13 +25,18 @@ object TimeSeries {
   /** Densify `rollup` onto the full [min, max] bucket grid per key.
     *
     * The bucket frame is generated DISTRIBUTED, in-plan: a first
-    * `sequence` emits only every `chunkSize`-th bucket (one coarse
-    * chunk-start per ~4k buckets), those chunk rows are shuffled across
-    * the cluster, and each chunk explodes its own sub-range — so the
-    * largest single array is max(chunkSize, n/chunkSize) elements and a
-    * year at 1-second grain (31M buckets) never materializes in one row
-    * (the r5-verdict hardening item). The only driver-side action is
-    * the distinct-key-count guard below.
+    * `sequence` emits only every 4096th bucket (one coarse chunk-start
+    * per 4096 buckets), those chunk rows are shuffled across the
+    * cluster, and each chunk explodes its own sub-range — so the
+    * largest single array is max(4096, n/4096) elements and a year at
+    * 1-second grain (31M buckets) never materializes in one row (the
+    * r5-verdict hardening item). The only driver-side action is the
+    * distinct-key count that sizes the grid: up to [[MaxBroadcastKeys]]
+    * (1M) keys broadcast, above it the grid is built as a distributed
+    * cartesian with the keys repartitioned so each task pairs one
+    * bucket chunk with ≤ 1M keys — per-user series at 100 TB never
+    * ride a broadcast. The count re-executes the rollup's upstream
+    * once; persist an expensive rollup first.
     *
     * @param rollup    one row per (bucket timestamp, key) — the output
     *                  of a windowed aggregation
@@ -43,34 +48,23 @@ object TimeSeries {
     * @param ffillCols gauge-like columns: missing buckets carry the last
     *                  observed value forward (null before the first
     *                  observation — there is nothing to carry)
-    * @param chunkSize buckets generated per task in the distributed
-    *                  frame (tuning knob; correctness-neutral)
-    * @param maxBroadcastKeys key-cardinality ceiling for broadcasting
-    *                  the key side of the grid. The distinct-key count
-    *                  is measured first (one cheap aggregate action —
-    *                  map-side combined, key-column-only); at or below
-    *                  the ceiling the keys broadcast, above it the
-    *                  grid is built as a distributed cartesian with
-    *                  the keys repartitioned so each task pairs one
-    *                  bucket chunk with ≤ maxBroadcastKeys keys —
-    *                  per-user series at 100 TB never ride a broadcast
-    *                  (tuning knob; correctness-neutral)
-    * @param knownKeyCount caller-supplied key cardinality, when known
-    *                  (e.g. the rollup came out of a groupBy whose key
-    *                  count was just measured, or the caller persists
-    *                  the rollup). Skips the guard's count action —
-    *                  which otherwise re-executes the rollup's
-    *                  UPSTREAM pipeline once before the grid join
-    *                  re-executes it again, doubling the dominant cost
-    *                  when the rollup is an expensive uncached frame
     */
   def gapFill(rollup: DataFrame, tsCol: String, keyCol: String, step: Column,
-              zeroCols: Seq[String], ffillCols: Seq[String],
-              chunkSize: Int = 4096,
-              maxBroadcastKeys: Long = 1000000L,
-              knownKeyCount: Option[Long] = None): DataFrame = {
-    require(maxBroadcastKeys >= 1,
-      s"maxBroadcastKeys must be >= 1, got $maxBroadcastKeys")
+              zeroCols: Seq[String], ffillCols: Seq[String]): DataFrame =
+    gapFillGrid(rollup, tsCol, keyCol, step, zeroCols, ffillCols,
+      MaxBroadcastKeys)
+
+  /** Key count up to which [[gapFill]] broadcasts the key side. */
+  private val MaxBroadcastKeys = 1000000L
+
+  /** [[gapFill]] with the broadcast ceiling as an argument, so a spec
+    * can drive the distributed-cartesian arm with a handful of keys.
+    */
+  private[graft] def gapFillGrid(rollup: DataFrame, tsCol: String,
+                                 keyCol: String, step: Column,
+                                 zeroCols: Seq[String], ffillCols: Seq[String],
+                                 maxBroadcastKeys: Long): DataFrame = {
+    val chunkSize = 4096
     val bounds = rollup.agg(min(col(tsCol)).as("_lo"), max(col(tsCol)).as("_hi"))
     val chunkStarts = bounds.select(
       explode(sequence(col("_lo"), col("_hi"), step * lit(chunkSize))).as("_cs"),
@@ -87,9 +81,8 @@ object TimeSeries {
     // to a distributed cartesian whose output volume IS the grid —
     // keys repartitioned so no task holds more than maxBroadcastKeys
     // of them. The count is the one driver-side action here: a
-    // key-column-only distinct with map-side partials — skipped
-    // entirely when the caller already knows the cardinality.
-    val nKeys = knownKeyCount.getOrElse(keys.count())
+    // key-column-only distinct with map-side partials.
+    val nKeys = keys.count()
     val grid =
       if (nKeys <= maxBroadcastKeys) buckets.crossJoin(broadcast(keys))
       else buckets.crossJoin(keys.repartition(
@@ -105,35 +98,6 @@ object TimeSeries {
     }
   }
 
-  /** Lag-k autocorrelation (Pearson r over the (x_t, x_{t+k}) pairs)
-    * for k = 1..maxLag over an INTEGER-valued regular series — the
-    * seasonality probe run over rollup output (daily volumes, hourly
-    * counts) before picking training windows or alert baselines.
-    *
-    * Returns (lag, n_pairs, acf), one row per lag with ≥ 2 pairs.
-    *
-    * Cross-engine determinism: the series is integer-valued and all
-    * five moment sums (Σx, Σy, Σx², Σy², Σxy) stay in exact BIGINT, so
-    * both Pearson numerator n·Σxy − Σx·Σy and the two variance terms
-    * are exact integers for any rollup-sized series — the n·Σ(x·x) <
-    * 2⁶³ bound this needs (≈ 10⁴ daily buckets × values to ~10⁶) is
-    * ENFORCED by an in-plan guard (a DECIMAL side-aggregate +
-    * raise_error: data-dependent, so it cannot be a plan-time
-    * require); wider series should pre-scale or pre-aggregate. The
-    * only floating point is one
-    * division against sqrt(da)·sqrt(db) — three correctly-rounded IEEE
-    * ops on identical operands, bit-identical on any engine.
-    *
-    * Scale shape: the input is a ROLLUP (one row per bucket — thousands
-    * of rows for years of daily data, not event-sized), exploded maxLag
-    * ways and equi-joined to itself on the shifted index; both sides
-    * are aggregate-sized so the join broadcasts, and the final moment
-    * aggregation is maxLag groups. Nothing here touches raw events.
-    *
-    * @param series one row per time index (pre-aggregated)
-    * @param tCol   integer time index (e.g. epoch-day); must be unique
-    * @param xCol   integer series value (a count or integer gauge)
-    */
   /** Single change-point scan (AMOC / binary-segmentation step) over an
     * INTEGER-valued regular series: for every split boundary s, the
     * scaled mean-shift statistic
@@ -177,6 +141,35 @@ object TimeSeries {
           col("n").cast(DoubleType))).as("stat"))
   }
 
+  /** Lag-k autocorrelation (Pearson r over the (x_t, x_{t+k}) pairs)
+    * for k = 1..maxLag over an INTEGER-valued regular series — the
+    * seasonality probe run over rollup output (daily volumes, hourly
+    * counts) before picking training windows or alert baselines.
+    *
+    * Returns (lag, n_pairs, acf), one row per lag with ≥ 2 pairs.
+    *
+    * Cross-engine determinism: the series is integer-valued and all
+    * five moment sums (Σx, Σy, Σx², Σy², Σxy) stay in exact BIGINT, so
+    * both Pearson numerator n·Σxy − Σx·Σy and the two variance terms
+    * are exact integers for any rollup-sized series — the n·Σ(x·x) <
+    * 2⁶³ bound this needs (≈ 10⁴ daily buckets × values to ~10⁶) is
+    * ENFORCED by an in-plan guard (a DECIMAL side-aggregate +
+    * raise_error: data-dependent, so it cannot be a plan-time
+    * require); wider series should pre-scale or pre-aggregate. The
+    * only floating point is one
+    * division against sqrt(da)·sqrt(db) — three correctly-rounded IEEE
+    * ops on identical operands, bit-identical on any engine.
+    *
+    * Scale shape: the input is a ROLLUP (one row per bucket — thousands
+    * of rows for years of daily data, not event-sized), exploded maxLag
+    * ways and equi-joined to itself on the shifted index; both sides
+    * are aggregate-sized so the join broadcasts, and the final moment
+    * aggregation is maxLag groups. Nothing here touches raw events.
+    *
+    * @param series one row per time index (pre-aggregated)
+    * @param tCol   integer time index (e.g. epoch-day); must be unique
+    * @param xCol   integer series value (a count or integer gauge)
+    */
   def autocorrelation(series: DataFrame, tCol: String, xCol: String,
                       maxLag: Int): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1, got $maxLag")
@@ -230,26 +223,7 @@ object TimeSeries {
       .orderBy("lag")
   }
 
-  /** Truncated exponentially-weighted moving average over an
-    * INTEGER-valued regular series: for each bucket t,
-    * `ewma(t) = Σ_{lag=0..maxLag} w(lag)·x(t−lag) / Σ w(lag)` with
-    * `w(lag) = alpha·(1−alpha)^lag` — the streaming-friendly smoother
-    * (trend lines, anomaly baselines) with the infinite tail cut at
-    * `maxLag` and the kept mass renormalized, so the result is a
-    * proper weighted mean even in the warm-up region.
-    *
-    * Determinism: `alpha` must be DYADIC (1−alpha = 2^-m — enforced by
-    * a runtime require, not left as a caller convention; the default
-    * 0.5 makes w(lag) = 2^-(lag+1), exact in IEEE pow AND in decimal);
-    * each weight lands exactly on the DECIMAL(14,13) grid,
-    * weight×integer products and both sums are then exact, and the
-    * final division is one IEEE op on identical operands in any
-    * engine — the same discipline as [[meanShiftSplits]].
-    *
-    * Scale: a bounded-lag self-join on the ROLLUP (|buckets|·(maxLag+1)
-    * rows), never event-sized; the lag side broadcasts. No ordered
-    * window at all, so no single-task ordering bottleneck.
-    */
+
   /** Periodic (seasonal) baseline + residuals over an INTEGER-valued
     * regular series: phase = t mod `period` (pure epoch-bucket
     * arithmetic — deliberately NOT a calendar dayofweek(), whose
@@ -277,25 +251,30 @@ object TimeSeries {
         (col("x").cast(DoubleType) - col("phase_mean")).as("resid"))
   }
 
-  def ewmaTruncated(series: DataFrame, tCol: String, xCol: String,
-                    maxLag: Int = 12, alpha: Double = 0.5): DataFrame = {
-    require(maxLag >= 1, s"maxLag must be >= 1, got $maxLag")
-    // The exactness contract is ENFORCED, not assumed: 1−alpha must be
-    // exactly 2^-m (so (1−alpha)^lag is an exact IEEE power of two and
-    // w(lag) = alpha·2^-(m·lag) an exact product), and the widest
-    // weight alpha·2^-(m·maxLag) needs m·(maxLag+1) decimal digits —
-    // the DECIMAL(14,13) weight type holds 13, beyond which the cast
-    // would silently ROUND w differently per engine (Spark rounds the
-    // shortest decimal string, DuckDB the exact binary) and break the
-    // determinism claim. alpha=0.5 (m=1) admits maxLag ≤ 12;
-    // alpha=0.75 (m=2) maxLag ≤ 5; alpha=0.875 (m=3) maxLag ≤ 3.
-    val oneMinus = 1.0 - alpha
-    val m = math.round(math.log(oneMinus) / math.log(0.5)).toInt
-    require(alpha > 0.0 && alpha < 1.0 && m >= 1 &&
-      math.pow(0.5, m) == oneMinus && m * (maxLag + 1) <= 13,
-      s"ewmaTruncated requires a dyadic smoothing factor: 1-alpha = 2^-m " +
-        s"with m*(maxLag+1) <= 13 for exact DECIMAL(14,13) weights " +
-        s"(alpha in {0.5, 0.75, 0.875, ...}); got alpha=$alpha maxLag=$maxLag")
+  /** Truncated exponentially-weighted moving average over an
+    * INTEGER-valued regular series: for each bucket t,
+    * `ewma(t) = Σ_{lag=0..12} w(lag)·x(t−lag) / Σ w(lag)` with
+    * `w(lag) = 0.5^(lag+1)` (alpha = 0.5) — the streaming-friendly
+    * smoother (trend lines, anomaly baselines) with the infinite tail
+    * cut at lag 12 and the kept mass renormalized, so the result is a
+    * proper weighted mean even in the warm-up region.
+    *
+    * Determinism: alpha is DYADIC, so every weight is an exact power of
+    * two in IEEE pow AND in decimal, and the deepest one, 2^-13, is
+    * the last that lands exactly on the DECIMAL(14,13) grid (a deeper
+    * weight would ROUND differently per engine: Spark rounds the
+    * shortest decimal string, DuckDB the exact binary).
+    * Weight×integer products and both sums are then exact, and the
+    * final division is one IEEE op on identical operands in any
+    * engine — the same discipline as [[meanShiftSplits]].
+    *
+    * Scale: a bounded-lag self-join on the ROLLUP (|buckets|·13 rows),
+    * never event-sized; the lag side broadcasts. No ordered window at
+    * all, so no single-task ordering bottleneck.
+    */
+  def ewmaTruncated(series: DataFrame, tCol: String,
+                    xCol: String): DataFrame = {
+    val (maxLag, alpha) = (12, 0.5)
     val s = series.select(col(tCol).cast(LongType).as("t"),
       col(xCol).cast(LongType).as("x"))
     val a = s.select(col("t"), col("x"),
@@ -341,13 +320,13 @@ object TimeSeries {
     *
     * Scale: the dedup is the only event-volume shuffle; the spine join
     * broadcasts (days are rollup-sized) and each day's distinct-count
-    * partial-aggregates map-side.
+    * partial-aggregates map-side. Reads the `events` columns `user_id`
+    * and `ts`.
     */
-  def stickiness(events: DataFrame, tsCol: String = "ts",
-                 userCol: String = "user_id"): DataFrame = {
+  def stickiness(events: DataFrame): DataFrame = {
     val ud = events
-      .filter(col(userCol).isNotNull)
-      .select(to_date(col(tsCol)).as("day"), col(userCol).as("u"))
+      .filter(col("user_id").isNotNull)
+      .select(to_date(col("ts")).as("day"), col("user_id").as("u"))
       .distinct()
     val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
     val spine = dau.select(col("day").as("d"))

@@ -554,7 +554,7 @@ object PipelineQueries {
                            minJac: Double): DataFrame =
     // uncapped on purpose: the DuckDB oracle computes exact all-pairs
     // Jaccard, so the gate row must too (gate SF postings are tiny)
-    Dedup.jaccardPairs(docsWide(s, dir), "doc_id", "text", 3,
+    Dedup.jaccardPairs(docsWide(s, dir), "doc_id", "text",
         maxPosting = Int.MaxValue)
       .filter(col("jac") >= minJac)
       .select("da", "db")
@@ -607,7 +607,7 @@ object PipelineQueries {
         |JOIN sz sa ON sa.doc_id = da
         |JOIN sz sb ON sb.doc_id = db
         |ORDER BY jac DESC, da, db LIMIT 20""".stripMargin) { (s, dir) =>
-      Dedup.jaccardPairs(docsWide(s, dir), "doc_id", "text", 3,
+      Dedup.jaccardPairs(docsWide(s, dir), "doc_id", "text",
           maxPosting = 64)
         .orderBy(col("jac").desc, col("da"), col("db"))
         .limit(20)
@@ -715,8 +715,7 @@ object PipelineQueries {
         |ORDER BY greatest(CAST(inter AS DOUBLE) / CAST(sa.n AS DOUBLE),
         |                  CAST(inter AS DOUBLE) / CAST(sb.n AS DOUBLE)) DESC,
         |  da, db LIMIT 20""".stripMargin) { (s, dir) =>
-      Dedup.containmentPairs(docsWide(s, dir), "doc_id", "text", 3,
-          maxPosting = 64)
+      Dedup.containmentPairs(docsWide(s, dir), "doc_id", "text")
         .orderBy(greatest(col("c_ab"), col("c_ba")).desc,
           col("da"), col("db"))
         .limit(20)
@@ -776,7 +775,7 @@ object PipelineQueries {
         |  CAST(dot AS DOUBLE) / sqrt(CAST(na.nrm AS DOUBLE) * CAST(nb.nrm AS DOUBLE)) AS sim
         |FROM d JOIN n na ON na.vec_id = va JOIN n nb ON nb.vec_id = vb
         |ORDER BY sim DESC, va, vb LIMIT 20""".stripMargin) { (s, dir) =>
-      Dedup.embeddingNearDup(embWide(s, dir), k = 20, sketchBits = 8)
+      Dedup.embeddingNearDup(embWide(s, dir), k = 20)
     },
 
     // Near-dup pairs -> dedup GROUPS: connected components (iterative
@@ -807,7 +806,7 @@ object PipelineQueries {
       // uncapped: mirrors the oracle's exact recursive-CTE edge set.
       // Hybrid CC: near-dup graphs are usually shallow (BSP price),
       // but a chain-shaped crawl history can't hang it (star escape)
-      val edges = Dedup.jaccardPairs(docsWide(s, dir), "doc_id", "text", 3,
+      val edges = Dedup.jaccardPairs(docsWide(s, dir), "doc_id", "text",
           maxPosting = Int.MaxValue)
         .filter(col("jac") >= 0.5)
         .select(col("da").as("src"), col("db").as("dst"))
@@ -869,7 +868,7 @@ object PipelineQueries {
         |FROM m WHERE rn = 1 ORDER BY cluster""".stripMargin) { (s, dir) =>
       // uncapped: mirrors the oracle's exact recursive-CTE edge set;
       // hybrid CC as in dd08 (shallow at BSP price, chain-immune)
-      val edges = Dedup.jaccardPairs(docsWide(s, dir), "doc_id", "text", 3,
+      val edges = Dedup.jaccardPairs(docsWide(s, dir), "doc_id", "text",
           maxPosting = Int.MaxValue)
         .filter(col("jac") >= 0.5)
         .select(col("da").as("src"), col("db").as("dst"))
@@ -1278,7 +1277,7 @@ object PipelineQueries {
       Dedup.contaminationHits(
         d.filter(col("doc_id") % 50 =!= 0),
         d.filter(col("doc_id") % 50 === 0),
-        "doc_id", "text", n = 5)
+        "doc_id", "text")
         .orderBy("doc_id")
     },
 
@@ -1680,7 +1679,7 @@ object PipelineQueries {
         |FROM x GROUP BY span, n_docs, shard
         |ORDER BY n_docs DESC, span, shard LIMIT 50""".stripMargin) { (s, dir) =>
       Dedup.dupSpans(docsWide(s, dir), "doc_id", "text",
-        n = 8, minDocs = 2, maxPostings = 8)
+        maxPostings = 8)
         .orderBy(desc("n_docs"), col("span"), col("shard"))
         .limit(50)
     },
@@ -1709,8 +1708,7 @@ object PipelineQueries {
         |  array_to_string(w[start_tok:end_tok], ' ') AS region
         |FROM runs r JOIN ws USING (doc_id)
         |ORDER BY doc_id, start_tok""".stripMargin) { (s, dir) =>
-      Dedup.dupSpanRegions(docsWide(s, dir), "doc_id", "text",
-        n = 8, minDocs = 2)
+      Dedup.dupSpanRegions(docsWide(s, dir), "doc_id", "text")
         .orderBy("doc_id", "start_tok")
     },
 
@@ -1872,7 +1870,7 @@ object PipelineQueries {
         .unionAll(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
           .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
       val regSigs = Dedup.minHashSignatures(
-        Dedup.shingles(reg, "doc_id", "text", 3), "doc_id", 32)
+        Dedup.shingles(reg, "doc_id", "text", Dedup.ShingleN), "doc_id")
       val flagged = Dedup.incrementalNearDup(batch, regSigs, "doc_id", "text")
         .filter(!col("keep")).select(col("doc_id")).withColumn("_f", lit(1L))
       val clones = batch.select(col("doc_id"), col("text"))
@@ -1911,11 +1909,11 @@ object PipelineQueries {
         .unionAll(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
           .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
       val regSigs = Dedup.minHashSignatures(
-        Dedup.shingles(reg, "doc_id", "text", 3), "doc_id", 32)
+        Dedup.shingles(reg, "doc_id", "text", Dedup.ShingleN), "doc_id")
       withGateWork(s, "dd20", dir) { work =>
         val tbl = graft.streaming.StreamingJobs.registryTable(work)
         Dedup.writeBandedRegistry(regSigs, "doc_id", tbl, work,
-          numHashes = 32, bands = 8, numBuckets = 16)
+          numBuckets = 16)
         val flagged = Dedup.incrementalNearDupBanded(batch,
           s.table(tbl).select("doc_id", "band", "bucket", "sig"),
           "doc_id", "text")
@@ -1958,14 +1956,12 @@ object PipelineQueries {
           .select("doc_id", "text")
           .unionAll(d.filter(col("doc_id") % 2 === 0 && col("doc_id") < 40)
             .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
-        graft.streaming.StreamingJobs.screenBatch(reg, 0L, work,
-          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        graft.streaming.StreamingJobs.screenBatch(reg, 0L, work, 16)
         graft.streaming.StreamingJobs.compactRegistry(s, work)
         // exactly one partition after compaction (checked BEFORE batch 1
         // appends its own)
         val nParts = batchParts(s, s"$work/registry")
-        graft.streaming.StreamingJobs.screenBatch(batch, 1L, work,
-          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        graft.streaming.StreamingJobs.screenBatch(batch, 1L, work, 16)
         val flagged = s.read.parquet(s"$work/verdicts/batch=1")
           .filter(!col("keep")).select(col("doc_id")).withColumn("_f", lit(1L))
         val clones = batch.select(col("doc_id"), col("text"))
@@ -2014,8 +2010,7 @@ object PipelineQueries {
           (col("id") + 20000000L).as("doc_id"),
           concat_ws(" ", (1 to 6).map(j =>
             concat(lit("zzq"), col("id"), lit(s"x$j"))): _*).as("text"))
-        graft.streaming.StreamingJobs.screenBatch(reg.unionAll(tomb), 0L, work,
-          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        graft.streaming.StreamingJobs.screenBatch(reg.unionAll(tomb), 0L, work, 16)
         graft.streaming.StreamingJobs.deleteFromRegistry(s, work,
           tomb.select("doc_id"))
         val batch = d.filter(col("doc_id") % 2 === 1)
@@ -2024,8 +2019,7 @@ object PipelineQueries {
             .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
           .unionAll(tomb.select((col("doc_id") + 10000000L).as("doc_id"),
             col("text")))
-        graft.streaming.StreamingJobs.screenBatch(batch, 1L, work,
-          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        graft.streaming.StreamingJobs.screenBatch(batch, 1L, work, 16)
         val verd = s.read.parquet(s"$work/verdicts/batch=1")
         val flagged = verd.filter(!col("keep")).select(col("doc_id"))
           .withColumn("_f", lit(1L))
@@ -2074,10 +2068,8 @@ object PipelineQueries {
           concat_ws(" ", (1 to 6).map(j =>
             concat(lit("zzq"), col("id"), lit(s"x$j"))): _*).as("text"))
         val reg = d.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
-        graft.streaming.StreamingJobs.screenBatch(aged, 0L, work,
-          "doc_id", "text", 3, 32, 8, 0.7, 16)
-        graft.streaming.StreamingJobs.screenBatch(reg, 1L, work,
-          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        graft.streaming.StreamingJobs.screenBatch(aged, 0L, work, 16)
+        graft.streaming.StreamingJobs.screenBatch(reg, 1L, work, 16)
         // plain fold FIRST: re-keys every partition to batch=1 — the
         // retention fold must then age by ingest provenance, not by the
         // re-keyed partition
@@ -2091,8 +2083,7 @@ object PipelineQueries {
             .select((col("doc_id") + 10000001L).as("doc_id"), col("text")))
           .unionAll(aged.select((col("doc_id") + 10000000L).as("doc_id"),
             col("text")))
-        graft.streaming.StreamingJobs.screenBatch(batch, 2L, work,
-          "doc_id", "text", 3, 32, 8, 0.7, 16)
+        graft.streaming.StreamingJobs.screenBatch(batch, 2L, work, 16)
         val verd = s.read.parquet(s"$work/verdicts/batch=2")
         val flagged = verd.filter(!col("keep")).select(col("doc_id"))
           .withColumn("_f", lit(1L))
@@ -2326,7 +2317,7 @@ object PipelineQueries {
         |FROM b JOIN documents USING (doc_id)
         |GROUP BY bucket, lang ORDER BY bucket, lang""".stripMargin) { (s, dir) =>
       val buckets = TextAnalysis
-        .perplexityBuckets(docsWide(s, dir), "doc_id", "text", nBuckets = 3)
+        .perplexityBuckets(docsWide(s, dir), "doc_id", "text")
       val lbl = when(col("bucket") === 0, "head")
         .when(col("bucket") === 1, "middle").otherwise("tail")
       buckets
@@ -2395,7 +2386,7 @@ object PipelineQueries {
         |          / (CAST(k AS DOUBLE) * sxx - sx * sx) * sx)
         |    / CAST(k AS DOUBLE) AS intercept
         |FROM m""".stripMargin) { (s, dir) =>
-      TextAnalysis.zipfFit(docsWide(s, dir), "doc_id", "text", topN = 1000)
+      TextAnalysis.zipfFit(docsWide(s, dir), "doc_id", "text")
     },
 
     // Per-language unigram diversity: token/type/hapax counts and
@@ -2470,7 +2461,7 @@ object PipelineQueries {
       val corp = docs(s, dir).filter(col("doc_id") < 100)
         .select(col("doc_id"), col("text"))
       TextAnalysis.languageIdentify(planted.unionAll(corp),
-          "doc_id", "text", topN = 40)
+          "doc_id", "text")
         .select(col("doc_id").cast(LongType).as("doc_id"), col("language"),
           col("distance"), col("n_grams"), col("confidence"))
         .orderBy("doc_id")
@@ -2658,7 +2649,7 @@ object PipelineQueries {
       val kept = d.join(TextAnalysis.curationReport(d, "doc_id", "text")
           .filter(col("verdict") === "keep").select("doc_id"), Seq("doc_id"))
         .select("doc_id", "text")
-      val edges = Dedup.jaccardPairs(kept, "doc_id", "text", 3,
+      val edges = Dedup.jaccardPairs(kept, "doc_id", "text",
           maxPosting = Int.MaxValue)
         .filter(col("jac") >= 0.5)
         .select(col("da").as("src"), col("db").as("dst"))
@@ -2668,7 +2659,7 @@ object PipelineQueries {
       val surv = kept.join(losers, Seq("doc_id"), "left_anti")
       val candidates = surv.filter(col("doc_id") % 50 =!= 0)
       val hits = Dedup.contaminationHits(candidates,
-        d.filter(col("doc_id") % 50 === 0), "doc_id", "text", n = 5)
+        d.filter(col("doc_id") % 50 === 0), "doc_id", "text")
       val train = candidates
         .join(hits.select("doc_id"), Seq("doc_id"), "left_anti")
         .withColumn("split",
@@ -2698,7 +2689,7 @@ object PipelineQueries {
         |SELECT DISTINCT doc_id, mh AS fp
         |FROM wn WHERE i <= greatest(1, ng - 3)
         |ORDER BY doc_id, fp""".stripMargin) { (s, dir) =>
-      TextAnalysis.winnow(docs(s, dir), "doc_id", "text", k = 3, w = 4)
+      TextAnalysis.winnow(docs(s, dir), "doc_id", "text")
         .orderBy("doc_id", "fp")
     },
 
@@ -4822,12 +4813,12 @@ object PipelineQueries {
         val tbl = graft.streaming.StreamingJobs.registryTable(work)
         Dedup.writeHammingRegistry(
           m.dHashes(m.syntheticAssets(s, 300)).toDF(),
-          "asset_id", "dhash", tbl, work, maxDist = 3, numBuckets = 16)
+          "asset_id", "dhash", tbl, work, numBuckets = 16)
         val batch = m.cloneAssets(s, 300)
           .unionByName(m.syntheticAssets(s, 100, offset = 5000L))
         Dedup.incrementalHammingDup(
           m.dHashes(batch).toDF(), s.table(tbl),
-          "asset_id", "dhash", maxDist = 3)
+          "asset_id", "dhash")
           .select(col("asset_id"), col("keep").cast(LongType).as("keep"),
             col("dup_of"), col("dist"))
           .orderBy("asset_id")
@@ -4856,7 +4847,7 @@ object PipelineQueries {
         val tbl = graft.streaming.StreamingJobs.registryTable(work)
         Dedup.writeHammingRegistry(
           m.dHashes(m.syntheticAssets(s, 300)).toDF(),
-          "asset_id", "dhash", tbl, reg, maxDist = 3, numBuckets = 16)
+          "asset_id", "dhash", tbl, reg, numBuckets = 16)
         Dedup.deleteFromHammingRegistry(s, tbl, reg,
           s.range(0, 300, 2).select(col("id").as("asset_id")),
           numBuckets = 16)
@@ -4864,7 +4855,7 @@ object PipelineQueries {
           .unionByName(m.syntheticAssets(s, 100, offset = 5000L))
         Dedup.incrementalHammingDup(
           m.dHashes(batch).toDF(), s.table(tbl),
-          "asset_id", "dhash", maxDist = 3)
+          "asset_id", "dhash")
           .select(col("asset_id"), col("keep").cast(LongType).as("keep"),
             col("dup_of"), col("dist"))
           .orderBy("asset_id")
@@ -5109,7 +5100,7 @@ object PipelineQueries {
       val sink = s"st01_sink_${StSinkSeq.incrementAndGet()}"
       withStateSizedShuffle(s) {
         val q = graft.streaming.StreamingJobs
-          .hourlyRollup(Tables.eventsStream(s, dir), watermark = "1 hour")
+          .hourlyRollup(Tables.eventsStream(s, dir))
           .writeStream.outputMode("append")
           .format("memory").queryName(sink)
           .start()
@@ -5144,8 +5135,7 @@ object PipelineQueries {
       val sink = s"st09_sink_${StSinkSeq.incrementAndGet()}"
       withStateSizedShuffle(s) {
         val q = graft.streaming.StreamingJobs
-          .windowedTopK(Tables.eventsStream(s, dir), k = 3,
-            watermark = "1 hour")
+          .windowedTopK(Tables.eventsStream(s, dir), k = 3)
           .writeStream.outputMode("append")
           .format("memory").queryName(sink)
           .start()
@@ -5201,7 +5191,7 @@ object PipelineQueries {
         .as[graft.streaming.SessionEvent]
       withStateSizedShuffle(s) {
         val q = graft.streaming.StreamingJobs
-          .sessionize(ev, gapMinutes = 30, watermark = "10 minutes")
+          .sessionize(ev, gapMinutes = 30)
           .toDF()
           .writeStream.outputMode("append")
           .format("memory").queryName(sink)
@@ -5232,7 +5222,7 @@ object PipelineQueries {
           (col("user_id") % 100).cast("string")).as("content"))
       withStateSizedShuffle(s) {
         val q = graft.streaming.StreamingJobs
-          .dedupStream(ev, "ts", "content", watermark = "1 hour")
+          .dedupStream(ev, "ts", "content")
           .writeStream.outputMode("append")
           .format("memory").queryName(sink)
           .start()
@@ -5311,7 +5301,7 @@ object PipelineQueries {
       val sink = s"st05_sink_${StSinkSeq.incrementAndGet()}"
       withStateSizedShuffle(s) {
         val q = graft.streaming.StreamingJobs
-          .slidingRollup(Tables.eventsStream(s, dir), watermark = "1 hour")
+          .slidingRollup(Tables.eventsStream(s, dir))
           .writeStream.outputMode("append")
           .format("memory").queryName(sink)
           .start()
@@ -5447,9 +5437,9 @@ object PipelineQueries {
       withGateWork(s, "st13", dir) { work =>
         val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
         graft.streaming.StreamingJobs.cdcApplyBatch(
-          ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, work, 8)
+          ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, work)
         graft.streaming.StreamingJobs.cdcApplyBatch(
-          ev.filter(pmod(col("event_id"), lit(2)) === 1), 1L, work, 8)
+          ev.filter(pmod(col("event_id"), lit(2)) === 1), 1L, work)
         graft.streaming.StreamingJobs.cdcDeleteKeys(s, work,
           ev.filter(col("user_id") % 10 === 7).select("user_id").distinct())
         graft.streaming.StreamingJobs.cdcTable(s, work)
@@ -5491,10 +5481,10 @@ object PipelineQueries {
         val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
         val cut = to_timestamp(lit("2024-01-10 00:00:00"))
         graft.streaming.StreamingJobs.cdcApplyBatch(
-          ev.filter(col("ts") < cut), 0L, work, 8)
+          ev.filter(col("ts") < cut), 0L, work)
         graft.streaming.StreamingJobs.cdcApplyBatch(
           ev.filter(col("ts") >= cut && col("user_id") % 10 =!= 7), 1L,
-          work, 8)
+          work)
         graft.streaming.StreamingJobs.cdcRetention(s, work, cut)
         graft.streaming.StreamingJobs.cdcTable(s, work)
           .select(col("user_id"),
@@ -5532,11 +5522,11 @@ object PipelineQueries {
       withGateWork(s, "st18", dir) { work =>
         val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
         graft.streaming.StreamingJobs.cdcApplyBatch(
-          ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, work, 8)
+          ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, work)
         graft.streaming.StreamingJobs.cdcApplyBatch(
           ev.filter(pmod(col("event_id"), lit(2)) === 1)
             .withColumn("amount", pmod(col("event_id"), lit(97L))),
-          1L, work, 8)
+          1L, work)
         graft.streaming.StreamingJobs.cdcTable(s, work)
           .select(col("user_id"),
             col("_m.event_id").as("last_event_id"),
@@ -6219,8 +6209,7 @@ object PipelineQueries {
         .groupBy(datediff(col("ts").cast(DateType), lit("1970-01-01"))
           .cast(LongType).as("t"))
         .agg(count(lit(1)).as("x"))
-      graft.operators.TimeSeries.ewmaTruncated(daily, "t", "x",
-          maxLag = 12, alpha = 0.5)
+      graft.operators.TimeSeries.ewmaTruncated(daily, "t", "x")
         .select(date_add(to_date(lit("1970-01-01")),
             col("t").cast(IntegerType)).as("day"),
           col("x").as("n_events"), col("ewma"))

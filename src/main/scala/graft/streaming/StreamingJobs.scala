@@ -44,13 +44,20 @@ object StreamingJobs {
     */
   val compactEveryDefault: Int = 64
 
+  /** Event-time lateness every watermarked `events` job tolerates
+    * ([[hourlyRollup]], [[slidingRollup]], [[windowedTopK]],
+    * [[dedupStream]]); a row later than this behind the newest event
+    * may be dropped.
+    */
+  private val EventsWatermark = "1 hour"
+
   /** Tumbling-window rollup with watermark: counts + value sums per
     * (1-hour window, event_type); windows finalize (append-mode emit)
     * once the watermark passes their end.
     */
-  def hourlyRollup(events: DataFrame, watermark: String = "1 hour"): DataFrame =
+  def hourlyRollup(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", EventsWatermark)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("v"))
@@ -62,9 +69,9 @@ object StreamingJobs {
     * trade monitoring rollups actually run. Same watermark-bounded
     * keyed state; window count (not event count) bounds state size.
     */
-  def slidingRollup(events: DataFrame, watermark: String = "1 hour"): DataFrame =
+  def slidingRollup(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", EventsWatermark)
       .groupBy(window(col("ts"), "1 hour", "15 minutes"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("total_value"))
@@ -82,11 +89,10 @@ object StreamingJobs {
     * aggregate (malformed rows can't occupy a slot); callers who need
     * them loud should assert upstream.
     */
-  def windowedTopK(events: DataFrame, k: Int,
-                   watermark: String = "1 hour"): DataFrame =
+  def windowedTopK(events: DataFrame, k: Int): DataFrame =
     events
       .filter(col("value").isNotNull)
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", EventsWatermark)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(graft.functions.TopKAgg.top_k(col("value"), col("event_id"),
         k, ascending = false).as("_tk"))
@@ -176,12 +182,12 @@ object StreamingJobs {
     *    crashed mid-write left a generation directory but no commit
     *    file; its replay overwrites that directory and commits once.
     *  - The per-batch merge cost is bounded by the batch, not the
-    *    table: keys hash into `buckets` fixed buckets
-    *    (`pmod(xxhash64(user_id), buckets)`), the fold reads ONLY the
+    *    table: keys hash into [[CdcBuckets]] = 8 fixed buckets
+    *    (`pmod(xxhash64(user_id), 8)`), the fold reads ONLY the
     *    buckets the batch touches and writes ONLY those buckets into
     *    the new generation; untouched buckets keep their files from
     *    older generations, referenced as-is by the new commit. A batch
-    *    touching one key rewrites 1/`buckets` of the table, not all of
+    *    touching one key rewrites 1/8 of the table, not all of
     *    it.
     *  - Storage is BOUNDED: after each commit the log keeps the two
     *    newest commit files and deletes displaced bucket partitions
@@ -398,13 +404,13 @@ object StreamingJobs {
     * what lets the fold read/write only the touched slice of the table.
     */
   private[graft] def cdcApplyBatch(batch: DataFrame, batchId: Long,
-                                   workDir: String, buckets: Int): Unit =
+                                   workDir: String): Unit =
     // cleanup runs whenever a commit for this batch is durable — fresh
     // merge OR replayed no-op (the original attempt may have crashed in
     // the window between the commit rename and its GC, leaving the
     // displaced partitions and a third commit file for the replay to
     // reclaim). Only an empty batch, which commits nothing, skips GC.
-    if (cdcMergeAndCommit(batch, batchId, workDir, buckets))
+    if (cdcMergeAndCommit(batch, batchId, workDir))
       cdcGc(cdcFs(batch.sparkSession, workDir), workDir)
 
   /** The merge + commit WITHOUT the trailing cleanup — split from
@@ -414,7 +420,8 @@ object StreamingJobs {
     * present from a prior attempt), false for an empty batch.
     */
   private[graft] def cdcMergeAndCommit(batch: DataFrame, batchId: Long,
-                                       workDir: String, buckets: Int): Boolean = {
+                                       workDir: String): Boolean = {
+    val buckets = CdcBuckets
     import org.apache.spark.sql.types.{StructField, StructType}
     val s = batch.sparkSession
     val fs0 = cdcFs(s, workDir)
@@ -672,29 +679,34 @@ object StreamingJobs {
     *    deleted under it. Readers needing older snapshots must copy
     *    them out, not rely on the log.
     */
-  def cdcUpsertQuery(updates: DataFrame, workDir: String, buckets: Int = 8)
+  def cdcUpsertQuery(updates: DataFrame, workDir: String)
       : (org.apache.spark.sql.streaming.StreamingQuery, () => DataFrame) = {
     val spark = updates.sparkSession
     val q = updates.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cdcApplyBatch(batch, batchId, workDir, buckets)
+        cdcApplyBatch(batch, batchId, workDir)
       }
       .option("checkpointLocation", s"$workDir/ckpt")
       .start()
     (q, () => cdcTable(spark, workDir))
   }
 
-  def cdcUpsertStream(updates: DataFrame, workDir: String,
-                      buckets: Int = 8): DataFrame = {
-    val (q, table) = cdcUpsertQuery(updates, workDir, buckets)
+  def cdcUpsertStream(updates: DataFrame, workDir: String): DataFrame = {
+    val (q, table) = cdcUpsertQuery(updates, workDir)
     try q.processAllAvailable() finally q.stop()
     table()
   }
 
+  /** Key buckets of every CDC table; a table committed with another
+    * count is refused at its next merge.
+    */
+  private val CdcBuckets = 8
+
   /** Streaming NEAR-dup ingestion screen — the
     * [[graft.operators.Dedup.incrementalNearDup]] registry lifecycle
-    * run as a Structured Streaming job: each micro-batch of documents
-    * is screened against the MinHash signature registry built by all
+    * run as a Structured Streaming job over the fixed `(doc_id, text)`
+    * document columns and Dedup's MINHASH SHAPE: each micro-batch of
+    * documents is screened against the MinHash signature registry built by all
     * PRIOR batches, its verdicts land under `workDir/verdicts/batch=N`,
     * and the batch's SURVIVORS' signatures append to the registry
     * (`workDir/registry/batch=N`) so every later batch sees them. The
@@ -720,28 +732,25 @@ object StreamingJobs {
     * BATCH at 100×; PlanSpec pins the exchange-free shape, the r18
     * rehearsal the flat per-batch shuffle). Durability keys on the
     * FILESYSTEM, not the catalog: the registry's build params
-    * (shingleN, numHashes, bands, regBuckets) persist in a params file
-    * next to the data and are verified on every batch — restarting
-    * over an existing registry with a different MinHash config fails
-    * loudly instead of silently never colliding — and a resumed
+    * (shingleN, numHashes, bands, regBuckets, idCol) persist in a params
+    * file next to the data and are verified on every batch — a registry
+    * built under a different MinHash shape fails loudly instead of
+    * silently never colliding — and a resumed
     * APPLICATION (fresh in-memory catalog, surviving work tree)
     * re-registers the table on its existing location instead of
     * treating catalog loss as registry loss.
     */
   def nearDupScreenStream(docs: DataFrame, workDir: String,
-                          idCol: String = "doc_id",
-                          textCol: String = "text",
-                          shingleN: Int = 3, numHashes: Int = 32,
-                          bands: Int = 8, minEstJac: Double = 0.7,
-                          regBuckets: Int = 32,
                           compactEvery: Int = compactEveryDefault)
     : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream.outputMode("append")
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        screenBatch(batch, batchId, workDir, idCol, textCol,
-          shingleN, numHashes, bands, minEstJac, regBuckets, compactEvery)
+        screenBatch(batch, batchId, workDir, StreamRegBuckets, compactEvery)
       }.start()
+
+  /** Registry buckets of [[nearDupScreenStream]]. */
+  private val StreamRegBuckets = 32
 
   /** Deterministic catalog name for `workDir`'s registry table: stable
     * across query restarts over the same work tree (the table must be
@@ -794,23 +803,26 @@ object StreamingJobs {
     spark.catalog.recoverPartitions(table)
   }
 
+  /** One micro-batch of [[nearDupScreenStream]] over the `(doc_id,
+    * text)` columns of `batch`, against the registry under `workDir`
+    * bucketed into `regBuckets`.
+    */
   private[graft] def screenBatch(batch: DataFrame, batchId: Long,
-                                 workDir: String, idCol: String,
-                                 textCol: String, shingleN: Int,
-                                 numHashes: Int, bands: Int,
-                                 minEstJac: Double, regBuckets: Int,
+                                 workDir: String, regBuckets: Int,
                                  compactEvery: Int = compactEveryDefault): Unit = {
+    import graft.operators.Dedup
+    val (idCol, textCol) = ("doc_id", "text")
     val spark = batch.sparkSession
     val regDir = s"$workDir/registry"
     val regTable = registryTable(workDir)
     val fs = new Path(regDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // idCol is part of the config contract too: re-registering a
-    // surviving registry under a RENAMED id column would declare a
+    // the id column is part of the config contract too: re-registering
+    // a surviving registry under a RENAMED id column would declare a
     // column the parquet lacks — by-name resolution reads NULL ids,
     // dup_of nulls out, and every duplicate passes silently
-    val params = Seq("shingleN" -> shingleN.toString,
-      "numHashes" -> numHashes.toString, "bands" -> bands.toString,
+    val params = Seq("shingleN" -> Dedup.ShingleN.toString,
+      "numHashes" -> Dedup.NumHashes.toString, "bands" -> Dedup.Bands.toString,
       "regBuckets" -> regBuckets.toString, "idCol" -> idCol)
     val paramsPath = new Path(s"$workDir/registry_params")
     // the DATA DIRECTORY is the registry's source of truth: the
@@ -826,10 +838,9 @@ object StreamingJobs {
     val live = fs.exists(new Path(regDir))
     if (live) {
       // param contract (persisted at create, NEXT TO THE DATA): a
-      // restart over an existing registry with a different MinHash
-      // config would band into different buckets and simply never
-      // collide — duplicates passing unflagged with zero errors — so
-      // fail loudly instead
+      // registry built under a different MinHash shape would band into
+      // different buckets and simply never collide — duplicates passing
+      // unflagged with zero errors — so fail loudly instead
       require(fs.exists(paramsPath),
         s"near-dup registry $regDir has no params file $paramsPath — " +
           "refusing to guess its MinHash config. If the registry was " +
@@ -845,9 +856,9 @@ object StreamingJobs {
         val got = stored.getOrElse(k, "<absent>")
         require(got == v,
           s"near-dup registry $regDir was built with $k=$got but this " +
-            s"stream screens with $k=$v — mismatched MinHash configs " +
-            "never collide (duplicates would pass unflagged); restart " +
-            "with the original parameters or rebuild the registry")
+            s"screen runs with $k=$v — mismatched MinHash configs " +
+            "never collide (duplicates would pass unflagged); rebuild " +
+            "the registry under the screen's shape")
       }
       if (!spark.catalog.tableExists(regTable))
         // declare the id column AS THE DATA HAS IT (one leaf-file
@@ -880,10 +891,8 @@ object StreamingJobs {
     // every micro-batch, at any scale). Signatures are value-
     // deterministic, so reusing the screened rows for the append is
     // byte-identical to re-deriving them from the survivors.
-    val batchBanded = graft.operators.Dedup.bandedSignatures(
-      graft.operators.Dedup.minHashSignatures(
-        graft.operators.Dedup.shingles(batch, idCol, textCol, shingleN),
-        idCol, numHashes), idCol, numHashes, bands)
+    val batchBanded = Dedup.bandedSignatures(Dedup.minHashSignatures(
+        Dedup.shingles(batch, idCol, textCol, Dedup.ShingleN), idCol), idCol)
       .localCheckpoint()
     val verdicts =
       if (live) {
@@ -893,15 +902,12 @@ object StreamingJobs {
         // join exchange-free (PlanSpec pins the shape).
         val reg = spark.table(regTable).filter(col("batch") < batchId)
           .select(col(idCol), col("band"), col("bucket"), col("sig"))
-        graft.operators.Dedup.incrementalNearDupPreBanded(
-          batch, batchBanded, reg, idCol, numHashes, bands, minEstJac)
+        Dedup.incrementalNearDupPreBanded(batch, batchBanded, reg, idCol)
       } else {
         import spark.implicits._
-        graft.operators.Dedup.incrementalNearDupPreBanded(
-          batch, batchBanded,
+        Dedup.incrementalNearDupPreBanded(batch, batchBanded,
           Seq.empty[(Long, Int, Long, Array[Long])]
-            .toDF(idCol, "band", "bucket", "sig"),
-          idCol, numHashes, bands, minEstJac)
+            .toDF(idCol, "band", "bucket", "sig"), idCol)
       }
     verdicts.write.mode("overwrite")
       .parquet(s"$workDir/verdicts/batch=$batchId")
@@ -1522,29 +1528,29 @@ object StreamingJobs {
     * in state and what the equality check shuffles on — same shape as
     * the batch [[graft.operators.Dedup.byContentHash]].
     */
-  def dedupStream(docs: DataFrame, tsCol: String, contentCol: String,
-                  watermark: String = "1 hour"): DataFrame =
+  def dedupStream(docs: DataFrame, tsCol: String,
+                  contentCol: String): DataFrame =
     docs
       .withColumn("_h", sha2(col(contentCol), 256))
-      .withWatermark(tsCol, watermark)
+      .withWatermark(tsCol, EventsWatermark)
       .dropDuplicatesWithinWatermark("_h")
       .drop("_h")
 
   /** Stream-stream interval join: each click matched to the same user's
-    * purchases landing within `maxLagMinutes` AFTER it. Both sides carry
-    * watermarks and the join condition bounds event-time distance in
-    * both directions, so each side's buffered state is evictable —
-    * the only stream-stream join shape that runs with finite state.
+    * purchases landing within 30 minutes ([[MaxLagMinutes]]) AFTER it.
+    * Both sides carry 30-minute watermarks and the join condition
+    * bounds event-time distance in both directions, so each side's
+    * buffered state is evictable — the only stream-stream join shape
+    * that runs with finite state.
     */
-  def clickToPurchase(events: DataFrame, maxLagMinutes: Int = 30,
-                      watermark: String = "30 minutes"): DataFrame =
-    clickPurchaseJoin(events, maxLagMinutes, watermark, "inner")
+  def clickToPurchase(events: DataFrame): DataFrame =
+    clickPurchaseJoin(events, "inner")
 
   /** [[clickToPurchase]] as a LEFT OUTER stream-stream join — the
     * conversion-funnel variant that also emits every click that did
     * NOT convert, with null purchase columns. Matches emit as they
     * arrive (inner behavior); an unmatched click's null row emits only
-    * once the watermark passes `click_ts + maxLag` — before that the
+    * once the watermark passes `click_ts + 30 minutes` — before that the
     * engine cannot know a match isn't still coming, which is why the
     * outer emission is inherently watermark-delayed (and why a gate
     * over a finite file stream can't pin it: the final clicks' outer
@@ -1555,17 +1561,21 @@ object StreamingJobs {
     * rows older than watermark + lag are evicted, so state is
     * O(arrival rate × lag), never O(stream).
     */
-  def clickToPurchaseOuter(events: DataFrame, maxLagMinutes: Int = 30,
-                           watermark: String = "30 minutes"): DataFrame =
-    clickPurchaseJoin(events, maxLagMinutes, watermark, "leftOuter")
+  def clickToPurchaseOuter(events: DataFrame): DataFrame =
+    clickPurchaseJoin(events, "leftOuter")
+
+  /** Click-to-purchase window of [[clickToPurchase]], also each side's
+    * watermark.
+    */
+  private val MaxLagMinutes = 30
 
   /** The one body of [[clickToPurchase]] / [[clickToPurchaseOuter]]:
     * watermarked click and purchase sides joined on user within the
-    * `[click_ts, click_ts + maxLag]` window under `joinType`.
+    * `[click_ts, click_ts + MaxLagMinutes]` window under `joinType`.
     */
-  private def clickPurchaseJoin(events: DataFrame, maxLagMinutes: Int,
-                                watermark: String,
+  private def clickPurchaseJoin(events: DataFrame,
                                 joinType: String): DataFrame = {
+    val watermark = s"$MaxLagMinutes minutes"
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts").as("click_ts"),
         col("event_id").as("click_id"))
@@ -1578,7 +1588,7 @@ object StreamingJobs {
       col("user_id") === col("p_user_id") &&
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") <= col("click_ts") +
-          expr(s"INTERVAL $maxLagMinutes MINUTES"),
+          expr(s"INTERVAL $MaxLagMinutes MINUTES"),
       joinType)
       .select(col("user_id"), col("click_id"), col("click_ts"),
         col("purchase_id"), col("purchase_ts"))
@@ -1587,7 +1597,8 @@ object StreamingJobs {
   /** Stateful gap sessionization: per-user session state in the state
     * store, closed sessions emitted when a gap arrives in-stream or the
     * event-time timeout fires (watermark passed last event + gap).
-    * Mirrors the batch `Sessionize.summarize` semantics.
+    * Mirrors the batch `Sessionize.summarize` semantics. Events may
+    * arrive up to 10 minutes late (the watermark).
     *
     * State tracks MICROSECONDS (the event-time precision Spark encodes),
     * not `Timestamp.getTime` milliseconds — ms truncation would silently
@@ -1596,8 +1607,8 @@ object StreamingJobs {
     * rounds, and it rounds UP so a timeout can never fire before
     * `end + gap`.
     */
-  def sessionize(events: Dataset[SessionEvent], gapMinutes: Int,
-                 watermark: String = "10 minutes"): Dataset[SessionAgg] = {
+  def sessionize(events: Dataset[SessionEvent],
+                 gapMinutes: Int): Dataset[SessionAgg] = {
     import events.sparkSession.implicits._
     val gapUs = gapMinutes * 60000000L
 
@@ -1645,7 +1656,7 @@ object StreamingJobs {
     }
 
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "10 minutes")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(fn)

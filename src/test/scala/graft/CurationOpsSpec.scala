@@ -108,7 +108,7 @@ class CurationOpsSpec extends AnyFunSuite {
 
   test("perplexityBuckets: terciles balanced within 1, exhaustive, partition-invariant") {
     val docs = Tables.load(spark, sf, "documents")
-    val b = TextAnalysis.perplexityBuckets(docs, "doc_id", "text", 3)
+    val b = TextAnalysis.perplexityBuckets(docs, "doc_id", "text")
     val sizes = b.groupBy("bucket").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sizes.keySet == Set(0L, 1L, 2L), sizes.toString)
@@ -118,7 +118,7 @@ class CurationOpsSpec extends AnyFunSuite {
       .filter(size(split(col("text"), " ")) >= 2).count()
     assert(sizes.values.sum == scored)
     val again = TextAnalysis
-      .perplexityBuckets(docs.repartition(7), "doc_id", "text", 3)
+      .perplexityBuckets(docs.repartition(7), "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val once = b.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(once == again)
@@ -498,7 +498,7 @@ class CurationOpsSpec extends AnyFunSuite {
       (3L, s"$boiler zeta $boiler"),       // twice in ONE doc
       (4L, "nothing shared here at all by anyone ever")
     ).toDF("doc_id", "text")
-    val got = graft.operators.Dedup.dupSpans(docs, "doc_id", "text", n = 8)
+    val got = graft.operators.Dedup.dupSpans(docs, "doc_id", "text")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(4)))
     val hit = got.find(_._1 == boiler)
     assert(hit.exists(h => h._2 == 3L && h._3 == "1,2,3"),
@@ -517,8 +517,7 @@ class CurationOpsSpec extends AnyFunSuite {
       // never hot, no region
       (3L, "s1 s2 s3 r1 r2 r3 r4 r5 r6 r7 r8 mid r1 r2 r3 r4 r5 r6 r7 r8 t1")
     ).toDF("doc_id", "text")
-    val got = graft.operators.Dedup.dupSpanRegions(docs, "doc_id", "text",
-      n = 8, minDocs = 2)
+    val got = graft.operators.Dedup.dupSpanRegions(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .toSet
     // each 12-token block = 5 overlapping hot windows → ONE region of
@@ -559,12 +558,14 @@ class CurationOpsSpec extends AnyFunSuite {
   }
 
   test("dupSpans matches a brute-force reference on random corpora") {
+    // the operator's span is 8 words: a two-word vocabulary keeps
+    // shared 8-grams common across 40 short random docs
     val rnd = new scala.util.Random(1717)
-    val vocab = Vector("a", "b", "c", "d")
+    val vocab = Vector("a", "b")
     val docs = (0L until 40L).map { id =>
-      (id, Seq.fill(4 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+      (id, Seq.fill(6 + rnd.nextInt(20))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
     }
-    val n = 3
+    val n = 8
     val brute = docs
       .flatMap { case (id, t) =>
         t.split(" ").sliding(n).filter(_.length == n)
@@ -572,8 +573,9 @@ class CurationOpsSpec extends AnyFunSuite {
       }
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted)
       .filter(_._2.length >= 2).toMap
+    assert(brute.size > 10, s"corpus shares too few 8-grams: ${brute.size}")
     val got = graft.operators.Dedup
-      .dupSpans(docs.toDF("doc_id", "text"), "doc_id", "text", n = n)
+      .dupSpans(docs.toDF("doc_id", "text"), "doc_id", "text")
       .collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getString(4))).toMap
     assert(got.keySet == brute.keySet)
@@ -587,7 +589,7 @@ class CurationOpsSpec extends AnyFunSuite {
     val maxP = 2
     val sharded = graft.operators.Dedup
       .dupSpans(docs.toDF("doc_id", "text"), "doc_id", "text",
-        n = n, maxPostings = maxP)
+        maxPostings = maxP)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getString(4)))
@@ -755,7 +757,7 @@ class CurationOpsSpec extends AnyFunSuite {
       (9L, "totally unrelated content words here now") // within-batch dup
     ).toDF("doc_id", "text")
     val regSigs = graft.operators.Dedup.minHashSignatures(
-      graft.operators.Dedup.shingles(reg, "doc_id", "text", 3), "doc_id", 32)
+      graft.operators.Dedup.shingles(reg, "doc_id", "text", 3), "doc_id")
     val out = graft.operators.Dedup
       .incrementalNearDup(batch, regSigs, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
@@ -1052,12 +1054,16 @@ class CurationOpsSpec extends AnyFunSuite {
     }
     // the gate corpus populates every fold
     assert(a.map(_._2).distinct.length == 5, a.map(_._2).distinct.toSeq.toString)
-    val b = Sampling.kFoldAssign(d, "source", 5, seed = "cv2")
-      .select("source", "fold").collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    // compare ASSIGNMENTS, not row order — a mere ordering difference
-    // must not satisfy this
-    assert(a.toMap != b.toMap, "seeds cv1/cv2 produced identical folds")
+    // the folds come from the "cv1"-salted hash; another seed through
+    // the same hash is a different partition. Compare ASSIGNMENTS, not
+    // row order — a mere ordering difference must not satisfy this
+    def foldsOf(seed: String) = d
+      .select(col("source"), conv(Sampling.seededHex8(seed, "source"), 16, 10)
+        .cast("long").as("_u"))
+      .select(col("source"), expr("(_u * 5) div 4294967296").as("fold"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(foldsOf("cv1") == a.toMap, "kFoldAssign is not the cv1-salted hash")
+    assert(foldsOf("cv2") != a.toMap, "seeds cv1/cv2 produced identical folds")
   }
 
   test("stickiness: DAU/WAU window boundary at exactly 7 days") {
@@ -1089,27 +1095,27 @@ class CurationOpsSpec extends AnyFunSuite {
       .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
     assert(folds.values.toSeq.distinct.length == 3,
       s"NULL / 'NULL' / 'n' keys collided: $folds")
-    // seed "a_b"+key "c" vs seed "a"+key "b_c": the old seed+"_"+key
-    // concat hashed these identically; the digest prefix must not
+    // seed "a_b"+key "c" vs seed "a"+key "b_c" through the salted hash
+    // kFoldAssign folds: the old seed+"_"+key concat hashed these
+    // identically; the digest prefix must not
     val c = Seq(Option("c")).toDF("g")
     val bc = Seq(Option("b_c")).toDF("g")
-    val f1 = Sampling.kFoldAssign(c, "g", k, seed = "a_b")
-      .select("fold").head().getLong(0)
-    val f2 = Sampling.kFoldAssign(bc, "g", k, seed = "a")
-      .select("fold").head().getLong(0)
+    val f1 = c.select(Sampling.seededHex8("a_b", "g")).head().getString(0)
+    val f2 = bc.select(Sampling.seededHex8("a", "g")).head().getString(0)
     assert(f1 != f2, s"aliased seed/key pairs still collide: $f1")
   }
 
   test("poissonReplicates: aliased seed/key pairs draw independent counts") {
     import graft.operators.Sampling
-    // under the old seed+"_"+key concat these two configurations were
-    // the SAME hash stream key-for-key; across 500 keys the replicate
-    // maps must now differ somewhere (deterministic, not flaky)
-    def reps(seed: String, prefix: String) = Sampling.poissonReplicates(
-      (1 to 500).map(i => s"$prefix$i").toDF("k"), "k", seed)
-      .groupBy("k").count().collect()
-      .map(r => r.getString(0).split("_").last -> r.getLong(1)).toMap
-    assert(reps("a_b", "c") != reps("a", "b_c"),
+    // poissonReplicates draws from the salted hash (seed "bs1"); under
+    // the old seed+"_"+key concat these two configurations were the
+    // SAME hash stream key-for-key; across 500 keys the hash streams
+    // must now differ somewhere (deterministic, not flaky)
+    def hashes(seed: String, prefix: String) =
+      (1 to 500).map(i => s"$prefix$i").toDF("k")
+        .select(col("k"), Sampling.seededHex8(seed, "k")).collect()
+        .map(r => r.getString(0).split("_").last -> r.getString(1)).toMap
+    assert(hashes("a_b", "c") != hashes("a", "b_c"),
       "seed a_b/key c... and seed a/key b_c... still alias")
   }
 
@@ -1119,7 +1125,7 @@ class CurationOpsSpec extends AnyFunSuite {
       java.sql.Timestamp.valueOf(f"2024-01-$d%02d 00:00:00")
     val roll = Seq(("a", ts(1), 3L), ("a", ts(4), 1L), ("b", ts(2), 7L),
       ("c", ts(1), 2L), ("c", ts(3), 9L)).toDF("k", "ts", "n")
-    def run(ceiling: Long) = TimeSeries.gapFill(roll, "ts", "k",
+    def run(ceiling: Long) = TimeSeries.gapFillGrid(roll, "ts", "k",
         expr("INTERVAL '1' DAY"), zeroCols = Seq("n"), ffillCols = Nil,
         maxBroadcastKeys = ceiling)
       .collect().map(r => (r.getString(1), r.getTimestamp(0), r.getLong(2)))
@@ -1130,20 +1136,17 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(broadcastPath.size == 12, s"3 keys x 4 days: $broadcastPath")
   }
 
-  test("ewmaTruncated: non-dyadic alpha is rejected, wider dyadics honor the digit budget") {
+  test("ewmaTruncated: the deepest kept weight 2^-13 is exact at DECIMAL(14,13)") {
     import graft.operators.TimeSeries
-    val s = (1L to 8L).map(t => (t, 10L)).toDF("t", "x")
-    intercept[IllegalArgumentException] {
-      TimeSeries.ewmaTruncated(s, "t", "x", maxLag = 4, alpha = 0.3)
-    }
-    // alpha = 0.75 (m = 2): exact up to maxLag 5, rejected at 6
-    intercept[IllegalArgumentException] {
-      TimeSeries.ewmaTruncated(s, "t", "x", maxLag = 6, alpha = 0.75)
-    }
-    val got = TimeSeries.ewmaTruncated(s, "t", "x", maxLag = 5, alpha = 0.75)
+    // an impulse 2^13 at t = 0 reaches t = 12 only through the deepest
+    // kept weight 0.5^13: ewma(12) = (2^-13 · 2^13) / Σ_{0..12} 2^-(lag+1)
+    // = 1 / (1 − 2^-13), both operands exact — a rounded weight moves it
+    val s = (0L to 20L).map(t => (t, if (t == 0) 8192L else 0L)).toDF("t", "x")
+    val got = TimeSeries.ewmaTruncated(s, "t", "x")
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    // renormalized weighted mean of a constant series is the constant
-    assert(got.values.forall(_ == 10.0), got.toString)
+    assert(got(12L) == 1.0 / 0.9998779296875, got.toString)
+    // past the truncation the impulse is gone entirely
+    assert(got(13L) == 0.0, got.toString)
   }
 
   test("stickiness: NULL users count toward neither DAU nor WAU") {
@@ -1221,16 +1224,19 @@ class CurationOpsSpec extends AnyFunSuite {
 
   test("languageIdentify minGrams: fragments abstain to und instead of a confident wrong label") {
     import graft.operators.TextAnalysis
-    // a 3-word fragment whose few trigrams happen to overlap a profile:
-    // with minGrams=0 it gets SOME confident label; with the abstention
-    // cutoff it must be "und" — while a sentence-length doc still
-    // classifies (the cutoff only silences fragments)
+    // a 3-word fragment whose few trigrams happen to overlap a profile
+    // gets SOME confident label; a cascade abstaining on the reported
+    // n_grams (the documented minGrams = 10 cutoff) must turn it "und"
+    // — while a sentence-length doc still classifies (the cutoff only
+    // silences fragments)
     val docs = Seq(
       (1L, "que de la"), // 3 short function words — profile-overlap bait
       (2L, "the quick brown fox jumps over the lazy dog and runs on"))
       .toDF("doc_id", "text")
-    val strict = TextAnalysis.languageIdentify(docs, "doc_id", "text",
-      minGrams = 10)
+    val minGrams = 10
+    val strict = TextAnalysis.languageIdentify(docs, "doc_id", "text")
+      .withColumn("language",
+        when(col("n_grams") < minGrams, "und").otherwise(col("language")))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(3))).toSeq
       .sortBy(_._1)
     assert(strict(0)._2 == "und", s"fragment not abstained: $strict")
@@ -1470,11 +1476,11 @@ class CurationOpsSpec extends AnyFunSuite {
   test("poissonReplicates: partition-invariant, seed-independent, contiguous reps") {
     import graft.operators.Sampling
     val keys = (1L to 2000L).toDF("k")
-    def draw(df: org.apache.spark.sql.DataFrame, seed: String) =
-      Sampling.poissonReplicates(df, "k", seed).collect()
+    def draw(df: org.apache.spark.sql.DataFrame) =
+      Sampling.poissonReplicates(df, "k").collect()
         .map(r => (r.getLong(0), r.getInt(1)))
-    val a = draw(keys, "bs1").sortBy(identity)
-    val b = draw(keys.repartition(7), "bs1").sortBy(identity)
+    val a = draw(keys).sortBy(identity)
+    val b = draw(keys.repartition(7)).sortBy(identity)
     assert(a.sameElements(b), "resample depends on partitioning")
     // replicate indices per key are exactly 1..count
     a.groupBy(_._1).foreach { case (k, rs) =>
@@ -1482,9 +1488,11 @@ class CurationOpsSpec extends AnyFunSuite {
     }
     // mean replicate count ≈ λ=1 over ALL keys (dropped zeros included)
     assert(math.abs(a.length / 2000.0 - 1.0) < 0.1, s"${a.length} replicas")
-    // a different seed draws a genuinely different resample
-    val c = draw(keys, "bs2").sortBy(identity)
-    assert(!a.sameElements(c), "seeds bs1/bs2 drew identical resamples")
+    // the draw is the "bs1"-salted hash; another seed through the same
+    // hash is a genuinely different resample
+    def hex(seed: String) = keys.select(Sampling.seededHex8(seed, "k"))
+      .collect().map(_.getString(0)).toSeq
+    assert(hex("bs1") != hex("bs2"), "seeds bs1/bs2 hash identically")
   }
 
   test("curationReport: filter precedence and each verdict class on planted docs") {

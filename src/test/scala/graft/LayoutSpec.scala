@@ -45,7 +45,7 @@ class LayoutSpec extends AnyFunSuite {
     val grid = (for (a <- 0 until 64; b <- 0 until 64) yield (a, b))
       .toDF("a", "b").repartition(8)
     val zEnv = Layout.fileEnvelopes(
-      Layout.zorder(grid, "a", "b", numFiles = 16, bits = 8), "a", "b")
+      Layout.zorder(grid, "a", "b", numFiles = 16), "a", "b")
       .collect()
     assert(zEnv.length == 16)
     for (r <- zEnv) {

@@ -41,13 +41,13 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("feature extraction: deterministic, right shape, batched") {
-    val f1 = Multimodal.extractFeatures(assets, dim = 32, batchSize = 16)
+    val f1 = Multimodal.extractFeatures(assets, dim = 32)
       .collect().map(f => f.asset_id -> f.feature.toSeq).toMap
-    val f2 = Multimodal.extractFeatures(assets, dim = 32, batchSize = 64)
+    val f2 = Multimodal.extractFeatures(assets.repartition(7), dim = 32)
       .collect().map(f => f.asset_id -> f.feature.toSeq).toMap
     assert(f1.size == 90)
     assert(f1.values.forall(_.length == 32))
-    assert(f1 == f2)  // batch size must not change results
+    assert(f1 == f2)  // batch boundaries must not change results
     assert(f1(0L) != f1(1L))  // distinct payloads → distinct features
     assert(f1.values.flatten.forall(v => v >= -1f && v <= 1f))
   }
@@ -280,7 +280,7 @@ class MultimodalSpec extends AnyFunSuite {
     val hashes = Multimodal.dHashes(Multimodal.syntheticAssets(spark, 90))
       .toDF().cache()
     Dedup.writeHammingRegistry(hashes, "asset_id", "dhash",
-      "graft_t_mm08", reg, maxDist = 3, numBuckets = 8)
+      "graft_t_mm08", reg, numBuckets = 8)
     // malformed tombstone raises in-plan, registry untouched
     val bad = intercept[Exception] {
       Dedup.deleteFromHammingRegistry(spark, "graft_t_mm08", reg,
@@ -298,7 +298,7 @@ class MultimodalSpec extends AnyFunSuite {
     val rebuilt = s"$work/rebuilt"
     Dedup.writeHammingRegistry(
       hashes.filter($"asset_id" % 2 =!= 0), "asset_id", "dhash",
-      "graft_t_mm08_rb", rebuilt, maxDist = 3, numBuckets = 8)
+      "graft_t_mm08_rb", rebuilt, numBuckets = 8)
     val key = (df: org.apache.spark.sql.DataFrame) => df
       .select("asset_id", "band", "bv", "h64").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))

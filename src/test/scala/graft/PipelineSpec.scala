@@ -185,20 +185,21 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("PQ on an indivisible dimension: the dim % m tail participates in scoring") {
-    // dim=10, m=4 → subspaces [0,2)[2,4)[4,6)[6,10): the last takes the
-    // remainder. Candidates are IDENTICAL except in the tail; a silent
-    // truncation (the old subDim-only slicing) would make every ADC
-    // distance equal and the shortlist would fill with the lowest cids,
-    // missing the true neighbor at cid 29.
-    val cand = (0 until 30).map { i =>
-      (i.toLong, Array.fill(6)(0.0) ++ Array.fill(4)(1000.0 * i))
+    // dim=20, m=16 → fifteen 1-wide subspaces then [15,20): the last
+    // takes the remainder. Candidates are IDENTICAL except in the tail;
+    // a silent truncation (the old subDim-only slicing) would make every
+    // ADC distance equal and the 100-wide shortlist would fill with the
+    // lowest cids, missing the true neighbor at cid 299. Tail values
+    // permute the ids (i·37 mod 300), so the low-id codebook seeds span
+    // the whole tail range and cid 299 (tail 263) has a nearby code.
+    val cand = (0 until 300).map { i =>
+      (i.toLong, Array.fill(16)(0.0) ++ Array.fill(4)(1000.0 * (i * 37 % 300)))
     }.toDF("vec_id", "embedding")
-    val query = Seq((1000L, Array.fill(6)(0.0) ++ Array.fill(4)(1000.0 * 29 + 1)))
+    val query = Seq((1000L, Array.fill(16)(0.0) ++ Array.fill(4)(1000.0 * 263 + 1)))
       .toDF("vec_id", "embedding")
-    val got = Similarity.pqTopK(query, cand, k = 1, m = 4, codes = 32,
-      shortlist = 5)
+    val got = Similarity.pqTopK(query, cand, k = 1)
       .select("cid").collect().map(_.getLong(0))
-    assert(got.toSeq == Seq(29L), s"tail components ignored: ${got.toSeq}")
+    assert(got.toSeq == Seq(299L), s"tail components ignored: ${got.toSeq}")
   }
 
   test("lshTables: per-table signatures are independent and bits-bounded") {
@@ -463,7 +464,7 @@ class PipelineSpec extends AnyFunSuite {
       .cells.select("cid", "centroid_id"))
     assert(ivfMoved.isEmpty, s"IVF copies left their original's cell: " +
       s"${ivfMoved.size} of 1000")
-    val pq = Similarity.ivfPqBuild(corpus, nlist = 512, m = 4, codes = 8)
+    val pq = Similarity.ivfPqBuild(corpus, nlist = 512)
     assert(pq.coarse.count() < 512)
     val pqMoved = misplaced(Similarity.ivfPqAbsorbDelta(pq, copies)
       .codes.select("cid", "cell"))
@@ -491,8 +492,7 @@ class PipelineSpec extends AnyFunSuite {
     val ivfMoved = misplaced(Similarity.ivfAbsorbDelta(ivf, copies)
       .cells.select("cid", "centroid_id"))
     assert(ivfMoved == 0, s"IVF copies left their original's cell: $ivfMoved of 1000")
-    val pq = Similarity.ivfPqBuild(corpus, nlist = 16, m = 4, codes = 8,
-      twoLevelAssign = true)
+    val pq = Similarity.ivfPqBuild(corpus, nlist = 16, twoLevelAssign = true)
     val pqMoved = misplaced(Similarity.ivfPqAbsorbDelta(pq, copies)
       .codes.select("cid", "cell"))
     assert(pqMoved == 0, s"IVF-PQ copies left their original's cell: $pqMoved of 1000")
@@ -587,7 +587,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(!rc.drifted, s"in-distribution delta tripped: $rc")
     // the PQ family reads the same plants through its L2-residual fit:
     // off-axis trips, in-distribution stays quiet
-    val pq = Similarity.ivfPqBuild(corpus, nlist = 3, m = 4, codes = 8)
+    val pq = Similarity.ivfPqBuild(corpus, nlist = 3)
     val pqStats = Similarity.ivfPqCellStats(pq, corpus).localCheckpoint()
     val rp = Similarity.ivfPqDriftCheck(pqStats, pq, delta)
     assert(rp.drifted && rp.deltaMeanDist > 1.5 * rp.expectedMeanDist,
@@ -692,6 +692,47 @@ class PipelineSpec extends AnyFunSuite {
     val total = exact.count()
     assert(hits * 100 >= total * 80,
       s"rebuilt-index recall $hits/$total below the 80% floor")
+  }
+
+  test("ivfMaintain / ivfPqMaintain rebuild at the built nlist, not the surviving cells") {
+    // 1000 ids over 512 hash buckets keep ~440 cells: a drifted rebuild
+    // must re-hash the grown corpus into the 512 buckets the index was
+    // built with, so it equals a fresh build over the grown corpus row
+    // for row — re-hashing into the ~440 survivors is another quantizer
+    val rnd = new scala.util.Random(11)
+    val corpus = (0 until 1000).map { i =>
+      (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat))
+    }.toDF("vec_id", "embedding")
+    // one direction, tiny noise: the whole delta piles into one cell
+    val planted = (0 until 1000).map { i =>
+      (100000L + i, Array.tabulate(16)(j =>
+        if (j == 0) 5.0f else (rnd.nextGaussian() / 100).toFloat))
+    }.toDF("vec_id", "embedding")
+    val grown = corpus.unionByName(planted)
+    val idx = Similarity.ivfBuild(corpus, nlist = 512)
+    assert(idx.nlist == 512 && idx.centroids.count() < 512)
+    val res = Similarity.ivfMaintain(idx,
+      Similarity.ivfCellStats(idx).localCheckpoint(), planted)
+    assert(res.rebuilt, s"the plant did not route to rebuild: ${res.report}")
+    def cells(i: Similarity.IvfIndex) = i.cells
+      .select($"cid".cast("long"), $"centroid_id".cast("long")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    val fresh = Similarity.ivfBuild(grown, nlist = 512)
+    assert(res.index.nlist == 512)
+    assert(cells(res.index) == cells(fresh),
+      "IVF rebuild diverged from a fresh ivfBuild(grown, 512)")
+    val pq = Similarity.ivfPqBuild(corpus, nlist = 512)
+    val pqRes = Similarity.ivfPqMaintain(pq,
+      Similarity.ivfPqCellStats(pq, corpus).localCheckpoint(), corpus, planted)
+    assert(pqRes.rebuilt, s"the plant did not route to rebuild: ${pqRes.report}")
+    def codes(i: Similarity.IvfPqIndex) = i.codes
+      .select($"cid".cast("long"), $"cell".cast("long"), $"sub".cast("long"),
+        $"_code".cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .sorted.toSeq
+    assert(pqRes.index.nlist == 512)
+    assert(codes(pqRes.index) == codes(Similarity.ivfPqBuild(grown, nlist = 512)),
+      "IVF-PQ rebuild diverged from a fresh ivfPqBuild(grown, 512)")
   }
 
   test("bqTopK: packed hamming = sign-mismatch count (multi-word), exact re-rank ranks by cosine") {
@@ -1077,20 +1118,19 @@ class PipelineSpec extends AnyFunSuite {
 
   test("hybrid components: adaptive handoff skips contraction on monotone chains") {
     // a monotone-id chain shrinks only ADDITIVELY by bspRounds, so the
-    // default threshold skips the contraction joins and hands the
-    // ORIGINAL edges to star — and forcing contraction
-    // (contractMinShrink = 0.0) must produce identical labels: the
-    // switch changes the plan, never the rows
+    // fixed threshold skips the contraction joins and hands the
+    // ORIGINAL edges to star — whose labels must equal plain star
+    // contraction's on the same chain: the switch changes the plan,
+    // never the rows
     val edges = (500L until 560L).map(i => (i, i + 1)).toDF("src", "dst")
     val skip = Dedup.connectedComponentsHybrid(edges, bspRounds = 2,
         maxIter = 30)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val forced = Dedup.connectedComponentsHybrid(edges, bspRounds = 2,
-        maxIter = 30, contractMinShrink = 0.0)
+    val star = Dedup.connectedComponents(edges, maxIter = 30)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(skip == forced,
-      s"skip vs forced-contraction diverged: ${skip.toSet.diff(forced.toSet)}" +
-        s" / ${forced.toSet.diff(skip.toSet)}")
+    assert(skip == star,
+      s"skip arm vs star contraction diverged: ${skip.toSet.diff(star.toSet)}" +
+        s" / ${star.toSet.diff(skip.toSet)}")
     assert((500L to 560L).forall(skip(_) == 500L), s"$skip")
   }
 
@@ -1151,27 +1191,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(!hits.contains(2L), s"clean doc flagged: $hits")
   }
 
-  test("decontamination without broadcast degrades to a shuffled equi-join, same hits") {
-    // the >threshold-holdout path the dd11 scaladoc promises: identical
-    // results through a shuffled join, never a cartesian
+  test("decontamination broadcasts the holdout even with auto-broadcast off, same hits") {
+    // the dd11 scaladoc: the explicit broadcast() hint holds regardless
+    // of autoBroadcastJoinThreshold — a map-side hash join on the
+    // shingle key, never a cartesian, with the same hit set
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val hold = docs.filter(col("doc_id") % 10 === 0)
-    val broadcastHits = Dedup.contaminationHits(docs, hold, "doc_id", "text")
+    val autoHits = Dedup.contaminationHits(docs, hold, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val df = Dedup.contaminationHits(docs, hold, "doc_id", "text",
-        broadcastHoldout = false)
+      val df = Dedup.contaminationHits(docs, hold, "doc_id", "text")
       val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"), plan)
+      assert(plan.contains("BroadcastHashJoin"), plan)
       assert(!plan.contains("CartesianProduct") &&
         !plan.contains("BroadcastNestedLoopJoin"), plan)
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
-        s"expected a shuffled equi-join on the shingle key:\n$plan")
-      val shuffledHits = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-      assert(shuffledHits == broadcastHits,
-        "non-broadcast decontamination changed the hit set")
+      val offHits = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+      assert(offHits == autoHits,
+        "auto-broadcast off changed the decontamination hit set")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
@@ -1368,7 +1406,7 @@ class PipelineSpec extends AnyFunSuite {
       (2L, s"nine eight $shared seven"),
       (3L, "red green blue cyan magenta yellow black white"))
       .toDF("doc_id", "text")
-    val fps = TextAnalysis.winnow(d, "doc_id", "text", k = 3, w = 4)
+    val fps = TextAnalysis.winnow(d, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1))
     val bySet = fps.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert((bySet(1L) & bySet(2L)).nonEmpty,
@@ -1376,7 +1414,7 @@ class PipelineSpec extends AnyFunSuite {
     assert((bySet(1L) & bySet(3L)).isEmpty && (bySet(2L) & bySet(3L)).isEmpty)
     // short doc (fewer than w grams): one whole-array window, 1 fp
     val tiny = TextAnalysis.winnow(
-      Seq((9L, "a b c d")).toDF("doc_id", "text"), "doc_id", "text", 3, 4)
+      Seq((9L, "a b c d")).toDF("doc_id", "text"), "doc_id", "text")
       .collect()
     assert(tiny.length == 1)
   }
@@ -1606,7 +1644,7 @@ class PipelineSpec extends AnyFunSuite {
     val page = para + " " + (1 to 40).map(i => s"filler$i word$i").mkString(" ")
     val docs = Seq((1L, para), (2L, page), (3L, "nothing shared here at all ok"))
       .toDF("doc_id", "text")
-    val got = Dedup.containmentPairs(docs, "doc_id", "text", 3)
+    val got = Dedup.containmentPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getDouble(2), r.getDouble(3))).toMap
     val (cab, cba) = got((1L, 2L))
@@ -1614,7 +1652,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(cba < 0.1, s"big side barely covered, got $cba")
     assert(!got.contains((1L, 3L)) && !got.contains((2L, 3L)))
     // the signal Jaccard misses: same pair scores low on Jaccard
-    val jac = Dedup.jaccardPairs(docs, "doc_id", "text", 3)
+    val jac = Dedup.jaccardPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(jac((1L, 2L)) < 0.1, s"jaccard should be low: ${jac((1L, 2L))}")
   }
@@ -1711,15 +1749,16 @@ class PipelineSpec extends AnyFunSuite {
     // a proper weighted MEAN of a constant series is that constant at
     // every t including the warm-up region (un-renormalized EWMA ramps)
     assert(g1.forall(_ == 7.0), g1.toSeq)
-    // step response: x jumps 0→8 at t=10; with maxLag=2, α=1/2 the
-    // step row is exactly (1/2·8) / (1/2+1/4+1/8) = 4/0.875, both
-    // operands dyadic-exact, so the IEEE quotient is pinned
+    // step response: x jumps 0→8 at t=10; with α=1/2 the step row
+    // renormalizes over the 11 lags t=10 still has (0..10), so it is
+    // exactly (1/2·8) / (1 − 2^-11) = 4/0.99951171875, both operands
+    // dyadic-exact, so the IEEE quotient is pinned
     val step = (0L to 12L).map(t => (t, if (t >= 10) 8L else 0L))
       .toDF("t", "x")
     val at10 = graft.operators.TimeSeries
-      .ewmaTruncated(step, "t", "x", maxLag = 2)
+      .ewmaTruncated(step, "t", "x")
       .filter(col("t") === 10).collect().head.getDouble(2)
-    assert(at10 == 4.0 / 0.875, at10)
+    assert(at10 == 4.0 / 0.99951171875, at10)
   }
 
   test("clusteringCoefficients: triangle nodes score 1, hub with open wedge scores 1/3") {
@@ -1745,13 +1784,13 @@ class PipelineSpec extends AnyFunSuite {
     val docs = words.grouped(50).zipWithIndex
       .map { case (g, i) => (i.toLong, g.mkString(" ")) }
       .toSeq.toDF("doc_id", "text")
-    val fit = TextAnalysis.zipfFit(docs, "doc_id", "text", topN = 30)
+    val fit = TextAnalysis.zipfFit(docs, "doc_id", "text")
       .collect().head
     assert(fit.getLong(0) == 30)
     val slope = fit.getDouble(1)
     assert(slope > -1.05 && slope < -0.95, s"slope: $slope")
-    val fit2 = TextAnalysis.zipfFit(docs.repartition(11), "doc_id", "text",
-      topN = 30).collect().head
+    val fit2 = TextAnalysis.zipfFit(docs.repartition(11), "doc_id", "text")
+      .collect().head
     assert(fit2.getDouble(1) == slope && fit2.getDouble(2) == fit.getDouble(2),
       "layout must not change the fit bits")
   }

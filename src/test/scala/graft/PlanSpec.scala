@@ -119,7 +119,7 @@ class PlanSpec extends AnyFunSuite {
     val surv = d.join(losers, Seq("doc_id"), "left_anti")
     val candidates = surv.filter(col("doc_id") % 50 =!= 0)
     val hits = graft.operators.Dedup.contaminationHits(candidates,
-      d.filter(col("doc_id") % 50 === 0), "doc_id", "text", n = 5)
+      d.filter(col("doc_id") % 50 === 0), "doc_id", "text")
     val train = candidates
       .join(hits.select("doc_id"), Seq("doc_id"), "left_anti")
       .withColumn("split",
@@ -1185,9 +1185,9 @@ class PlanSpec extends AnyFunSuite {
       graft.operators.Dedup.writeBandedRegistry(
         graft.operators.Dedup.minHashSignatures(
           graft.operators.Dedup.shingles(reg, "doc_id", "text", 3),
-          "doc_id", 32),
+          "doc_id"),
         "doc_id", "graft_plan_nd_reg", s"$d/reg",
-        numHashes = 32, bands = 8, numBuckets = 8)
+        numBuckets = 8)
       val screened = graft.operators.Dedup.incrementalNearDupBanded(batch,
         spark.table("graft_plan_nd_reg")
           .select("doc_id", "band", "bucket", "sig"),
@@ -1235,9 +1235,9 @@ class PlanSpec extends AnyFunSuite {
       val batch = spark.range(400L).select((col("id") + 4000L).as("asset_id"),
         xxhash64(col("id")).bitwiseXOR(lit(1L)).as("dhash"))
       graft.operators.Dedup.writeHammingRegistry(reg, "asset_id", "dhash",
-        "graft_plan_hm_reg", s"$d/reg", maxDist = 3, numBuckets = 8)
+        "graft_plan_hm_reg", s"$d/reg", numBuckets = 8)
       val screened = graft.operators.Dedup.incrementalHammingDup(batch,
-        spark.table("graft_plan_hm_reg"), "asset_id", "dhash", maxDist = 3)
+        spark.table("graft_plan_hm_reg"), "asset_id", "dhash")
       screened.collect() // finalize the adaptive plan
       val plan = screened.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
@@ -1273,7 +1273,7 @@ class PlanSpec extends AnyFunSuite {
       val reg = spark.range(4000L).select(col("id").as("asset_id"),
         xxhash64(col("id")).as("dhash"))
       graft.operators.Dedup.writeHammingRegistry(reg, "asset_id", "dhash",
-        "graft_plan_hm_del", s"$d/reg", maxDist = 3, numBuckets = 8)
+        "graft_plan_hm_del", s"$d/reg", numBuckets = 8)
       val tomb = spark.range(0, 4000, 2).select(col("id").as("asset_id"))
       val survivors = spark.table("graft_plan_hm_del").join(
         broadcast(tomb), Seq("asset_id"), "left_anti")
@@ -1294,8 +1294,7 @@ class PlanSpec extends AnyFunSuite {
           .select((col("id") + 4000L).as("asset_id"),
             xxhash64(col("id")).bitwiseXOR(lit(1L)).as("dhash"))
         val screened = graft.operators.Dedup.incrementalHammingDup(batch,
-          spark.table("graft_plan_hm_del"), "asset_id", "dhash",
-          maxDist = 3)
+          spark.table("graft_plan_hm_del"), "asset_id", "dhash")
         screened.collect()
         val sp = screened.queryExecution.executedPlan.toString
           .split("== Initial Plan ==")(0)

@@ -163,7 +163,7 @@ class PublishSpec extends AnyFunSuite {
         val w = tmpDir()
         trees += w
         Dedup.writeHammingRegistry(hashes, "asset_id", "dhash", table(w),
-          f(s"$w/reg"), maxDist = 3, numBuckets = 4)
+          f(s"$w/reg"), numBuckets = 4)
         w
       },
       w => s"$w/reg",
@@ -182,8 +182,8 @@ class PublishSpec extends AnyFunSuite {
       () => {
         val w = tmpDir()
         trees += w
-        StreamingJobs.screenBatch(b0, 0L, f(w), "doc_id", "text", 3, 32, 8, 0.7, 4)
-        StreamingJobs.screenBatch(b1, 1L, f(w), "doc_id", "text", 3, 32, 8, 0.7, 4)
+        StreamingJobs.screenBatch(b0, 0L, f(w), 4)
+        StreamingJobs.screenBatch(b1, 1L, f(w), 4)
         w
       },
       w => s"$w/registry",
@@ -236,7 +236,7 @@ class PublishSpec extends AnyFunSuite {
     .toDF("vec_id", "embedding").localCheckpoint())
   lazy val queries = corpora.head.filter($"vec_id" <= 3)
   lazy val ivf = corpora.map(Similarity.ivfBuild(_, nlist = 2))
-  lazy val ivfPq = corpora.map(Similarity.ivfPqBuild(_, nlist = 2, m = 4, codes = 4))
+  lazy val ivfPq = corpora.map(Similarity.ivfPqBuild(_, nlist = 2))
   def idx(w: String): String = f(s"$w/idx")
 
   /** Crash matrix of a save into the index directory `w/idx`: `before`

@@ -20,7 +20,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String, Double)]
     val df = in.toDF().toDF("ts", "event_type", "value")
-    val q = StreamingJobs.hourlyRollup(df, "30 minutes")
+    val q = StreamingJobs.hourlyRollup(df)
       .writeStream.outputMode("append")
       .format("memory").queryName("rollup_out")
       .start()
@@ -45,7 +45,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, Long, String, Double)]
     val df = in.toDF().toDF("ts", "event_id", "event_type", "value")
-    val q = StreamingJobs.windowedTopK(df, k = 2, watermark = "30 minutes")
+    val q = StreamingJobs.windowedTopK(df, k = 2)
       .writeStream.outputMode("append")
       .format("memory").queryName("topk_out")
       .start()
@@ -76,13 +76,13 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String, Double)]
     val df = in.toDF().toDF("ts", "event_type", "value")
-    val q = StreamingJobs.hourlyRollup(df, "30 minutes")
+    val q = StreamingJobs.hourlyRollup(df)
       .writeStream.outputMode("append")
       .format("memory").queryName("late_out")
       .start()
     in.addData((ts("2024-01-01 12:10:00"), "click", 1.0))
     q.processAllAvailable()
-    // watermark now 11:40 — hour-10 windows are closed, hour-11 still open
+    // watermark now 11:10 — hour-10 windows are closed, hour-11 still open
     in.addData(
       (ts("2024-01-01 10:15:00"), "click", 100.0), // behind watermark: dropped
       (ts("2024-01-01 11:50:00"), "click", 2.0))   // in horizon: lands
@@ -104,7 +104,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, Long, String)]
     val df = in.toDF().toDF("ts", "doc_id", "text")
-    val q = StreamingJobs.dedupStream(df, "ts", "text", "10 minutes")
+    val q = StreamingJobs.dedupStream(df, "ts", "text")
       .writeStream.outputMode("append")
       .format("memory").queryName("dedup_out")
       .start()
@@ -115,9 +115,9 @@ class StreamingSpec extends AnyFunSuite {
     q.processAllAvailable()
     // advance watermark past alpha's horizon, then re-send alpha: the
     // expired hash must have left the state store → alpha emits again
-    in.addData((ts("2024-01-01 11:00:00"), 4L, "gamma"))
+    in.addData((ts("2024-01-01 12:30:00"), 4L, "gamma"))
     q.processAllAvailable()
-    in.addData((ts("2024-01-01 11:01:00"), 5L, "alpha"))
+    in.addData((ts("2024-01-01 12:31:00"), 5L, "alpha"))
     q.processAllAvailable()
     q.stop()
     val ids = spark.table("dedup_out").collect().map(_.getLong(1)).toSet
@@ -152,7 +152,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, Long, Long, String)]
     val df = in.toDF().toDF("ts", "event_id", "user_id", "event_type")
-    val q = StreamingJobs.clickToPurchase(df, maxLagMinutes = 30, "20 minutes")
+    val q = StreamingJobs.clickToPurchase(df)
       .writeStream.outputMode("append")
       .format("memory").queryName("ssj_out")
       .start()
@@ -177,8 +177,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, Long, Long, String)]
     val df = in.toDF().toDF("ts", "event_id", "user_id", "event_type")
-    val q = StreamingJobs.clickToPurchaseOuter(df, maxLagMinutes = 30,
-        watermark = "20 minutes")
+    val q = StreamingJobs.clickToPurchaseOuter(df)
       .writeStream.outputMode("append")
       .format("memory").queryName("ssoj_out")
       .start()
@@ -383,14 +382,14 @@ class StreamingSpec extends AnyFunSuite {
       StreamingJobs.cdcTable(spark, work)
         .selectExpr("user_id", "_m.event_id", "n_updates")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    StreamingJobs.cdcApplyBatch(b0, 0L, work, buckets = 8)
+    StreamingJobs.cdcApplyBatch(b0, 0L, work)
     val after0 = snap()
-    StreamingJobs.cdcApplyBatch(b0, 0L, work, buckets = 8) // crash-replay of batch 0
+    StreamingJobs.cdcApplyBatch(b0, 0L, work) // crash-replay of batch 0
     assert(snap() == after0, "replayed batch 0 changed the table")
-    StreamingJobs.cdcApplyBatch(b1, 1L, work, buckets = 8)
+    StreamingJobs.cdcApplyBatch(b1, 1L, work)
     val after1 = snap()
     assert(after1 == Set((10L, 3L, 2L), (20L, 2L, 1L)), after1)
-    StreamingJobs.cdcApplyBatch(b1, 1L, work, buckets = 8) // retry of batch 1
+    StreamingJobs.cdcApplyBatch(b1, 1L, work) // retry of batch 1
     assert(snap() == after1, "retried batch 1 double-counted")
   }
 
@@ -402,12 +401,12 @@ class StreamingSpec extends AnyFunSuite {
     StreamingJobs.cdcApplyBatch(
       Seq((1L, ts("2024-01-01 10:00:00"), 10L),
         (2L, ts("2024-01-01 11:00:00"), 20L))
-        .toDF("event_id", "ts", "user_id"), 0L, work, 8)
+        .toDF("event_id", "ts", "user_id"), 0L, work)
     // batch 1 ADDS amount (bigint): widening — user 10's last update
     // now carries it, user 20's stays NULL
     StreamingJobs.cdcApplyBatch(
       Seq((3L, ts("2024-01-01 12:00:00"), 10L, 42L))
-        .toDF("event_id", "ts", "user_id", "amount"), 1L, work, 8)
+        .toDF("event_id", "ts", "user_id", "amount"), 1L, work)
     val snap1 = StreamingJobs.cdcTable(spark, work)
       .selectExpr("user_id", "_m.event_id", "_m.amount", "n_updates")
       .collect().map(r => (r.getLong(0), r.getLong(1),
@@ -417,7 +416,7 @@ class StreamingSpec extends AnyFunSuite {
     // (latest-wins: user 20's last update has no amount → still NULL)
     StreamingJobs.cdcApplyBatch(
       Seq((4L, ts("2024-01-01 13:00:00"), 20L))
-        .toDF("event_id", "ts", "user_id"), 2L, work, 8)
+        .toDF("event_id", "ts", "user_id"), 2L, work)
     val snap2 = StreamingJobs.cdcTable(spark, work)
       .selectExpr("user_id", "_m.amount", "n_updates")
       .collect().map(r => (r.getLong(0),
@@ -427,7 +426,7 @@ class StreamingSpec extends AnyFunSuite {
     val ex = intercept[IllegalArgumentException] {
       StreamingJobs.cdcApplyBatch(
         Seq((5L, ts("2024-01-01 14:00:00"), 10L, "not-a-number"))
-          .toDF("event_id", "ts", "user_id", "amount"), 3L, work, 8)
+          .toDF("event_id", "ts", "user_id", "amount"), 3L, work)
     }
     assert(ex.getMessage.contains("amount") &&
       ex.getMessage.contains("retyped") || ex.getMessage.contains("BIGINT"),
@@ -448,7 +447,7 @@ class StreamingSpec extends AnyFunSuite {
     val ex2 = intercept[IllegalArgumentException] {
       StreamingJobs.cdcApplyBatch(
         Seq((6L, ts("2024-01-01 15:00:00"), 10L, "nope"))
-          .toDF("event_id", "ts", "user_id", "amount"), 4L, work, 8)
+          .toDF("event_id", "ts", "user_id", "amount"), 4L, work)
     }
     assert(ex2.getMessage.contains("amount"), ex2.getMessage)
   }
@@ -458,7 +457,7 @@ class StreamingSpec extends AnyFunSuite {
     val work = SparkTestSession.tempDir("graft-cdcbkt").toString
     val b0 = (1L to 64L).map(i => (i, ts("2024-01-01 10:00:00"), i))
       .toDF("event_id", "ts", "user_id")
-    StreamingJobs.cdcApplyBatch(b0, 0L, work, buckets = 8)
+    StreamingJobs.cdcApplyBatch(b0, 0L, work)
     val Some((_, _, map0)) = StreamingJobs.cdcReadCommit(spark, work)
     assert(map0.size == 8, s"64 uniform keys should touch all 8 buckets: $map0")
     // second batch touches exactly ONE key → one bucket
@@ -482,7 +481,7 @@ class StreamingSpec extends AnyFunSuite {
       finally s.close()
     }
     val untouchedBefore = (map0 - touchedBucket).map { case (b, p) => b -> filesOf(p) }
-    StreamingJobs.cdcApplyBatch(b1, 1L, work, buckets = 8)
+    StreamingJobs.cdcApplyBatch(b1, 1L, work)
     val Some((_, _, map1)) = StreamingJobs.cdcReadCommit(spark, work)
     // untouched buckets: same generation paths, same files, same bytes
     assert((map1 - touchedBucket) == (map0 - touchedBucket),
@@ -514,7 +513,7 @@ class StreamingSpec extends AnyFunSuite {
       val work = SparkTestSession.tempDir("graft-cdcperm").toString
       grouping.zipWithIndex.foreach { case (batch, i) =>
         StreamingJobs.cdcApplyBatch(
-          batch.toDF("event_id", "ts", "user_id"), i.toLong, work, buckets = 8)
+          batch.toDF("event_id", "ts", "user_id"), i.toLong, work)
       }
       StreamingJobs.cdcTable(spark, work)
         .selectExpr("user_id", "_m.event_id", "n_updates")
@@ -540,9 +539,9 @@ class StreamingSpec extends AnyFunSuite {
         .toDF("event_id", "ts", "user_id")
     val b0 = (1L to 64L).map(i => (i, ts("2024-01-01 09:00:00"), i))
       .toDF("event_id", "ts", "user_id")
-    StreamingJobs.cdcApplyBatch(b0, 0L, work, buckets = 8)
-    StreamingJobs.cdcApplyBatch(one(100L, 0), 1L, work, buckets = 8)
-    StreamingJobs.cdcApplyBatch(one(101L, 1), 2L, work, buckets = 8)
+    StreamingJobs.cdcApplyBatch(b0, 0L, work)
+    StreamingJobs.cdcApplyBatch(one(100L, 0), 1L, work)
+    StreamingJobs.cdcApplyBatch(one(101L, 1), 2L, work)
     def ls(p: String): Set[String] = {
       val s = java.nio.file.Files.list(java.nio.file.Paths.get(p))
       // drop Hadoop local-FS .crc sidecars — deleted with their file,
@@ -564,7 +563,7 @@ class StreamingSpec extends AnyFunSuite {
       .filter($"user_id" === 7L).collect()
     assert(u7.map(r => (r.getLong(1), r.getLong(2))).toSeq == Seq((101L, 3L)))
     // replaying a committed batch after GC stays a no-op
-    StreamingJobs.cdcApplyBatch(one(100L, 0), 1L, work, buckets = 8)
+    StreamingJobs.cdcApplyBatch(one(100L, 0), 1L, work)
     assert(ls(s"$work/_commits") == Set("c1", "c2"))
   }
 
@@ -582,11 +581,11 @@ class StreamingSpec extends AnyFunSuite {
         .toDF("event_id", "ts", "user_id")
     val b0 = (1L to 64L).map(i => (i, ts("2024-01-01 09:00:00"), i))
       .toDF("event_id", "ts", "user_id")
-    StreamingJobs.cdcApplyBatch(b0, 0L, work, buckets = 8)
-    StreamingJobs.cdcApplyBatch(one(100L, 0), 1L, work, buckets = 8)
+    StreamingJobs.cdcApplyBatch(b0, 0L, work)
+    StreamingJobs.cdcApplyBatch(one(100L, 0), 1L, work)
     // batch 2: merge + commit rename succeed, then the process "dies"
     // before GC — the seam split out of cdcApplyBatch for this window
-    assert(StreamingJobs.cdcMergeAndCommit(one(101L, 1), 2L, work, buckets = 8))
+    assert(StreamingJobs.cdcMergeAndCommit(one(101L, 1), 2L, work))
     def ls(p: String): Set[String] = {
       val s = java.nio.file.Files.list(java.nio.file.Paths.get(p))
       try s.iterator().asScala.map(_.getFileName.toString)
@@ -597,7 +596,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(ls(s"$work/_commits") == Set("c0", "c1", "c2"), ls(s"$work/_commits"))
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$work/gen1")))
     // restart: the checkpoint replays batch 2 → no-op merge + GC
-    StreamingJobs.cdcApplyBatch(one(101L, 1), 2L, work, buckets = 8)
+    StreamingJobs.cdcApplyBatch(one(101L, 1), 2L, work)
     assert(ls(s"$work/_commits") == Set("c1", "c2"), ls(s"$work/_commits"))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$work/gen1")),
       "displaced gen1 partition survived the replayed no-op's GC")
@@ -625,10 +624,10 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     StreamingJobs.cdcApplyBatch(
       Seq((1L, t(1), 10L), (2L, t(2), 20L), (3L, t(3), 30L))
-        .toDF("event_id", "ts", "user_id"), 0L, work, 4)
+        .toDF("event_id", "ts", "user_id"), 0L, work)
     val b1 = Seq((4L, t(4), 10L), (5L, t(5), 40L))
       .toDF("event_id", "ts", "user_id")
-    StreamingJobs.cdcApplyBatch(b1, 1L, work, 4)
+    StreamingJobs.cdcApplyBatch(b1, 1L, work)
     assert(table() == Map(10L -> (4L, 2L), 20L -> (2L, 1L),
       30L -> (3L, 1L), 40L -> (5L, 1L)))
     StreamingJobs.cdcDeleteKeys(spark, work, Seq(10L, 30L).toDF("user_id"))
@@ -649,11 +648,11 @@ class StreamingSpec extends AnyFunSuite {
     // the stream continues: a later batch re-inserts a deleted key
     // FRESH (deletion erased its history, so the count restarts)
     StreamingJobs.cdcApplyBatch(Seq((6L, t(6), 10L))
-      .toDF("event_id", "ts", "user_id"), 2L, work, 4)
+      .toDF("event_id", "ts", "user_id"), 2L, work)
     assert(table() == Map(10L -> (6L, 1L), 20L -> (2L, 1L),
       40L -> (5L, 1L)), table().toString)
     // a replayed pre-delete batch still no-ops against the revision
-    StreamingJobs.cdcApplyBatch(b1, 1L, work, 4)
+    StreamingJobs.cdcApplyBatch(b1, 1L, work)
     assert(table() == Map(10L -> (6L, 1L), 20L -> (2L, 1L),
       40L -> (5L, 1L)), "replayed batch disturbed the revised table")
   }
@@ -668,10 +667,10 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     StreamingJobs.cdcApplyBatch(
       Seq((1L, t(1), 10L), (2L, t(2), 20L), (3L, t(3), 30L))
-        .toDF("event_id", "ts", "user_id"), 0L, work, 4)
+        .toDF("event_id", "ts", "user_id"), 0L, work)
     val b1 = Seq((4L, t(10), 10L), (5L, t(12), 40L))
       .toDF("event_id", "ts", "user_id")
-    StreamingJobs.cdcApplyBatch(b1, 1L, work, 4)
+    StreamingJobs.cdcApplyBatch(b1, 1L, work)
     // horizon 00:05 — users 20 and 30 last updated before it age out;
     // 10's history (2 updates, one pre-horizon) survives INTACT: the
     // window keys on the row's last update, not on per-update pruning.
@@ -695,11 +694,11 @@ class StreamingSpec extends AnyFunSuite {
     // an aged-out key that becomes active again re-enters FRESH (its
     // update count restarts — retention erased its history)
     StreamingJobs.cdcApplyBatch(Seq((6L, t(20), 20L))
-      .toDF("event_id", "ts", "user_id"), 2L, work, 4)
+      .toDF("event_id", "ts", "user_id"), 2L, work)
     assert(table() == Map(10L -> (4L, 2L), 20L -> (6L, 1L),
       40L -> (5L, 1L)), table().toString)
     // a replayed pre-retention batch still no-ops against the revision
-    StreamingJobs.cdcApplyBatch(b1, 1L, work, 4)
+    StreamingJobs.cdcApplyBatch(b1, 1L, work)
     assert(table() == Map(10L -> (4L, 2L), 20L -> (6L, 1L),
       40L -> (5L, 1L)), "replayed batch disturbed the revised table")
     // maintenance COMPOSES: two at-rest ops without an intervening
@@ -717,14 +716,14 @@ class StreamingSpec extends AnyFunSuite {
     val work = SparkTestSession.tempDir("cdc-delall").toString
     def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
     StreamingJobs.cdcApplyBatch(Seq((1L, t(1), 10L))
-      .toDF("event_id", "ts", "user_id"), 0L, work, 4)
+      .toDF("event_id", "ts", "user_id"), 0L, work)
     StreamingJobs.cdcDeleteKeys(spark, work, Seq(10L).toDF("user_id"))
     val e = intercept[IllegalStateException] {
       StreamingJobs.cdcTable(spark, work)
     }
     assert(e.getMessage.contains("EMPTY"), e.getMessage)
     StreamingJobs.cdcApplyBatch(Seq((2L, t(2), 20L))
-      .toDF("event_id", "ts", "user_id"), 1L, work, 4)
+      .toDF("event_id", "ts", "user_id"), 1L, work)
     val rows = StreamingJobs.cdcTable(spark, work)
       .select($"user_id", $"n_updates").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -751,20 +750,20 @@ class StreamingSpec extends AnyFunSuite {
     def verdicts(id: Long) = spark.read
       .parquet(s"$work/verdicts/batch=$id").orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
-    StreamingJobs.screenBatch(b0, 0L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
-    StreamingJobs.screenBatch(b1, 1L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b0, 0L, work, 4)
+    StreamingJobs.screenBatch(b1, 1L, work, 4)
     val first = verdicts(1L)
     assert(first == Seq((1L, false), (3L, true)), first.toString)
     // RETRY batch 1 with its own signature write already on disk: the
     // registry read prunes batch < batchId, so the replay must neither
     // self-flag doc 3 (whose own signature is sitting in
     // registry/batch=1) nor change any verdict
-    StreamingJobs.screenBatch(b1, 1L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b1, 1L, work, 4)
     assert(verdicts(1L) == first, "retried batch changed its verdicts")
     // batch 2 sees BOTH earlier batches' survivors: a re-crawl of the
     // batch-1 survivor is now flagged too
     val b2 = Seq((5L, "something else entirely here now")).toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b2, 2L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b2, 2L, work, 4)
     assert(verdicts(2L) == Seq((5L, false)), verdicts(2L).toString)
     // flagged docs never entered the registry (read the banded table's
     // files directly: bands copies per doc, same id set)
@@ -996,8 +995,8 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = (1 to 24).map(i =>
         (i.toLong, Array.tabulate(8)(j => (i * (j + 1)).toFloat)))
       .toDF("vec_id", "embedding")
-    graft.operators.Similarity.ivfPqBuild(corpus, nlist = 4, m = 4,
-      codes = 8).save(s"$work/idx")
+    graft.operators.Similarity.ivfPqBuild(corpus, nlist = 4)
+      .save(s"$work/idx")
     val in = MemoryStream[(Long, Array[Float])]
     val q = StreamingJobs.vectorDeltaStream(
       in.toDF().toDF("vec_id", "embedding"), work)
@@ -1038,12 +1037,12 @@ class StreamingSpec extends AnyFunSuite {
     val work = SparkTestSession.tempDir("st10-catloss").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b0, 0L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b0, 0L, work, 4)
     val tbl = StreamingJobs.registryTable(work)
     spark.sql(s"DROP TABLE $tbl") // the app restart
     val b1 = Seq((1L, "alpha beta gamma delta epsilon"), // re-crawl of 2
       (3L, "fresh new content right here")).toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b1, 1L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b1, 1L, work, 4)
     val v = spark.read.parquet(s"$work/verdicts/batch=1").orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
     assert(v == Seq((1L, false), (3L, true)),
@@ -1062,8 +1061,8 @@ class StreamingSpec extends AnyFunSuite {
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"),
       (4L, "one two three four five")).toDF("doc_id", "text")
     val b1 = Seq((3L, "something else entirely here now")).toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b0, 0L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
-    StreamingJobs.screenBatch(b1, 1L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b0, 0L, work, 4)
+    StreamingJobs.screenBatch(b1, 1L, work, 4)
     StreamingJobs.compactRegistry(spark, work)
     // every batch partition folded into ONE keyed by the max batch id
     val parts = new java.io.File(s"$work/registry").listFiles()
@@ -1077,7 +1076,7 @@ class StreamingSpec extends AnyFunSuite {
     val b2 = Seq((11L, "alpha beta gamma delta epsilon"),
       (13L, "something else entirely here now"),
       (15L, "genuinely novel text right here")).toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b2, 2L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b2, 2L, work, 4)
     val v = spark.read.parquet(s"$work/verdicts/batch=2").orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
     assert(v == Seq((11L, false), (13L, false), (15L, true)), v.toString)
@@ -1104,7 +1103,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(!FaultyFs.reset(), "the fault never fired")
     assert(!new java.io.File(s"$work/registry").exists())
-    StreamingJobs.screenBatch(b2, 3L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b2, 3L, work, 4)
     val v3 = spark.read.parquet(s"$work/verdicts/batch=3").orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
     assert(v3 == Seq((11L, false), (13L, false), (15L, false)), v3.toString)
@@ -1121,8 +1120,8 @@ class StreamingSpec extends AnyFunSuite {
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"),
       (4L, "one two three four five")).toDF("doc_id", "text")
     val b1 = Seq((3L, "something else entirely here now")).toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b0, 0L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
-    StreamingJobs.screenBatch(b1, 1L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b0, 0L, work, 4)
+    StreamingJobs.screenBatch(b1, 1L, work, 4)
     // right-to-be-forgotten: doc 2 is un-indexed; docs 3 and 4 stay
     StreamingJobs.deleteFromRegistry(spark, work, Seq(2L).toDF("doc_id"))
     val reg = spark.read.parquet(s"$work/registry").select("doc_id")
@@ -1137,7 +1136,7 @@ class StreamingSpec extends AnyFunSuite {
     val b2 = Seq((31L, "alpha beta gamma delta epsilon"),
       (33L, "one two three four five"),
       (35L, "something else entirely here now")).toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b2, 2L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b2, 2L, work, 4)
     val v = spark.read.parquet(s"$work/verdicts/batch=2").orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
     assert(v == Seq((31L, true), (33L, false), (35L, false)), v.toString)
@@ -1154,12 +1153,12 @@ class StreamingSpec extends AnyFunSuite {
     val work = SparkTestSession.tempDir("st10-delall").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b0, 0L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b0, 0L, work, 4)
     StreamingJobs.deleteFromRegistry(spark, work, Seq(2L).toDF("doc_id"))
     // a re-crawl of the wiped corpus passes and re-enters the registry
     val b1 = Seq((11L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b1, 1L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b1, 1L, work, 4)
     val v = spark.read.parquet(s"$work/verdicts/batch=1")
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
     assert(v == Seq((11L, true)), v.toString)
@@ -1175,8 +1174,8 @@ class StreamingSpec extends AnyFunSuite {
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
     val b1 = Seq((4L, "one two three four five")).toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b0, 0L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
-    StreamingJobs.screenBatch(b1, 1L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b0, 0L, work, 4)
+    StreamingJobs.screenBatch(b1, 1L, work, 4)
     // a PLAIN fold first: re-keys both rows' partition to batch=1 —
     // retention must key on ingest_batch (data column), which the fold
     // preserves, never on the re-keyed partition
@@ -1188,7 +1187,7 @@ class StreamingSpec extends AnyFunSuite {
     // aged-out content passes; in-window content still flags
     val b2 = Seq((11L, "alpha beta gamma delta epsilon"),
       (13L, "one two three four five")).toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b2, 2L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b2, 2L, work, 4)
     val v = spark.read.parquet(s"$work/verdicts/batch=2").orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
     assert(v == Seq((11L, true), (13L, false)), v.toString)
@@ -1212,10 +1211,8 @@ class StreamingSpec extends AnyFunSuite {
     val plain = SparkTestSession.tempDir("st12-plain").toString
     val onl = SparkTestSession.tempDir("st12-online").toString
     b.zipWithIndex.foreach { case (df, i) =>
-      StreamingJobs.screenBatch(df, i.toLong, plain, "doc_id", "text",
-        3, 32, 8, 0.7, 4)
-      StreamingJobs.screenBatch(df, i.toLong, onl, "doc_id", "text",
-        3, 32, 8, 0.7, 4, compactEvery = 1)
+      StreamingJobs.screenBatch(df, i.toLong, plain, 4)
+      StreamingJobs.screenBatch(df, i.toLong, onl, 4, compactEvery = 1)
     }
     def verdicts(w: String) = spark.read.parquet(s"$w/verdicts")
       .selectExpr("CAST(batch AS LONG) AS batch", "doc_id", "keep")
@@ -1252,8 +1249,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((5L, "genuinely novel text right here"))
     ).map(_.toDF("doc_id", "text"))
     b.zipWithIndex.foreach { case (df, i) =>
-      StreamingJobs.screenBatch(df, i.toLong, work, "doc_id", "text",
-        3, 32, 8, 0.7, 4, compactEvery = 0)
+      StreamingJobs.screenBatch(df, i.toLong, work, 4, compactEvery = 0)
     }
     val parts = new java.io.File(s"$work/registry").listFiles()
       .filter(_.getName.startsWith("batch=")).map(_.getName).sorted.toSeq
@@ -1274,8 +1270,7 @@ class StreamingSpec extends AnyFunSuite {
     val b2 = Seq((11L, "alpha beta gamma delta epsilon"),
       (15L, "genuinely novel text right here")).toDF("doc_id", "text")
     def run(df: org.apache.spark.sql.DataFrame, id: Long) =
-      StreamingJobs.screenBatch(df, id, work, "doc_id", "text",
-        3, 32, 8, 0.7, 4, compactEvery = 1)
+      StreamingJobs.screenBatch(df, id, work, 4, compactEvery = 1)
     run(b0, 0L); run(b1, 1L); run(b2, 2L) // batch 2 folds {0,1} -> {1}
     val first = spark.read.parquet(s"$work/verdicts/batch=2")
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
@@ -1293,19 +1288,26 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("near-dup screen: restart under a different MinHash config fails loudly") {
-    // the ADVICE r17 scenario: a registry built under numHashes=32
-    // re-screened with numHashes=16 would band into different buckets
+    // the ADVICE r17 scenario: a registry built under numHashes=16
+    // re-screened with numHashes=32 would band into different buckets
     // and simply never collide — duplicates passing unflagged with
-    // zero errors. The persisted table properties must reject it.
+    // zero errors. The persisted params file must reject it: a
+    // registry from a numHashes=16 build is staged by rewriting it
     import spark.implicits._
     val work = SparkTestSession.tempDir("st10-params").toString
     val b0 = Seq((2L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
-    StreamingJobs.screenBatch(b0, 0L, work, "doc_id", "text", 3, 32, 8, 0.7, 4)
+    StreamingJobs.screenBatch(b0, 0L, work, 4)
+    val params = new org.apache.hadoop.fs.Path(s"$work/registry_params")
+    val fs = params.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val built = graft.io.TextFiles.readParams(fs, params)
+    assert(built.get("numHashes").contains("32"), built.toString)
+    graft.io.TextFiles.writeParams(fs, params,
+      (built + ("numHashes" -> "16")).toSeq)
     val e = intercept[IllegalArgumentException] {
-      StreamingJobs.screenBatch(b0, 1L, work, "doc_id", "text", 3, 16, 8, 0.7, 4)
+      StreamingJobs.screenBatch(b0, 1L, work, 4)
     }
-    assert(e.getMessage.contains("numHashes"), e.getMessage)
+    assert(e.getMessage.contains("numHashes=16"), e.getMessage)
     spark.sql(s"DROP TABLE IF EXISTS ${StreamingJobs.registryTable(work)}")
   }
 
@@ -1313,7 +1315,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[SessionEvent]
-    val q = StreamingJobs.sessionize(in.toDS(), gapMinutes = 30, watermark = "5 minutes")
+    val q = StreamingJobs.sessionize(in.toDS(), gapMinutes = 30)
       .writeStream.outputMode("append")
       .format("memory").queryName("sess_out")
       .start()
