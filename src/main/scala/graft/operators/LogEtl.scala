@@ -17,7 +17,7 @@ import graft.sources.S3AccessLog
   * (s3_server_access_logs.py:378-466):
   *
   *   text scan → parse → project(27 cols, request_time at position 3) →
-  *   repartition(numOutputFiles) → sortWithinPartitions(request_time) →
+  *   coalesce(numOutputFiles) → sortWithinPartitions(request_time) →
   *   snappy parquet, published over the day's previous output.
   *
   * Differences by design (SURVEY.md §3/§4): the scan is Spark's native
@@ -30,10 +30,18 @@ import graft.sources.S3AccessLog
   * shards it across executors.
   *
   * Scale notes:
-  *  - `repartition(n)` (RoundRobinPartitioning) bounds output file count,
-  *    the reference's core value prop (>100k tiny files/day → n files,
-  *    converters/s3-server-access-log/README.md:3-7). At cluster scale
-  *    pick n from target file size (total bytes / ~512 MB), not a constant.
+  *  - `coalesce(n)` bounds the output file count: at most n files per
+  *    (bucket, day), fewer when the scan has fewer than n splits, and
+  *    never an empty one. That bound is the reference's core value prop
+  *    (>100k tiny files/day → n files, converters/s3-server-access-log/
+  *    README.md:3-7); the reference reaches it with `repartition(n)`.
+  *    The coalesce merges scan splits instead of exchanging rows, so
+  *    parse, sort and Parquet encode run inside the scan stage: one job
+  *    per unit, and no row is written to or re-read from shuffle.
+  *  - The trade-off: when a day has more scan splits than n, parsing runs
+  *    on n tasks instead of one task per split. At cluster scale pick n
+  *    from target file size (total bytes / ~512 MB), not a constant:
+  *    each task then parses about 512 MB of text.
   *  - `sortWithinPartitions(request_time)` is deliberately partition-LOCAL
   *    (no global range exchange) — it exists to give Parquet row-group
   *    min/max stats selectivity on time (s3_server_access_logs.py:442,
@@ -61,7 +69,7 @@ object LogEtl {
     * The reference README claims "VPC, S3, ALB" converters but ships
     * only S3 (README.md:11, converters/ has one subdir) — this registry
     * is the actual family abstraction: everything downstream of parse
-    * (repartition → sort → snappy parquet → publish) is shared.
+    * (coalesce → sort → snappy parquet → publish) is shared.
     */
   final case class Format(parse: DataFrame => DataFrame, sortColumn: String)
 
@@ -113,10 +121,12 @@ object LogEtl {
     }
   }
 
-  /** O12–O14: bounded file count, partition-local time sort, snappy
-    * parquet (s3_server_access_logs.py:457-463), published over `dest`
-    * in one swap: the files are written beside it and replace the old
-    * ones only once every task has committed.
+  /** O12–O14: at most `numOutputFiles` files, each sorted on
+    * `sortColumn` (partition-local), snappy parquet
+    * (s3_server_access_logs.py:457-463), published over `dest` in one
+    * swap: the files are written beside it and replace the old ones only
+    * once every task has committed. The file bound is a coalesce of the
+    * scan's splits, so the write adds no exchange to the scan's stage.
     */
   def write(parsed: DataFrame, dest: String, numOutputFiles: Int = 10,
             sortColumn: String = "request_time"): Unit = {
@@ -124,7 +134,7 @@ object LogEtl {
     val fs = target.getFileSystem(parsed.sparkSession.sparkContext.hadoopConfiguration)
     Publish.replace(fs, target) { staging =>
       parsed
-        .repartition(numOutputFiles)
+        .coalesce(numOutputFiles)
         .sortWithinPartitions(sortColumn)
         .write
         .option("compression", "snappy")

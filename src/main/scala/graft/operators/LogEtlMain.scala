@@ -16,7 +16,9 @@ import java.time.LocalDate
   *                       (s3_server_access_logs.py:361-368)
   *   --end-date          engine extension: override the backfill terminus
   *                       for historical replays
-  *   --num-output-files  default 10 (s3_server_access_logs.py:507-511)
+  *   --num-output-files  default 10: at most n files per (bucket, day),
+  *                       fewer when a day's scan has fewer splits
+  *                       (s3_server_access_logs.py:507-511)
   *   --hive-formatted-folders  year=/month=/day= layout
   *                       (s3_server_access_logs.py:445-454)
   *   --format            engine extension: s3 (default) | vpc | alb | cloudfront —

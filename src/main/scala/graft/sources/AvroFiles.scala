@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * collection, no shuffle; the READ parallelizes the file list and
   * each task streams its file through `FsInput` (splittable-enough at
   * one-file-per-task granularity; a 100 TB deployment sizes files via
-  * `df.repartition(n)` before the write, the LogEtl discipline).
+  * `df.coalesce(n)` before the write, the LogEtl discipline).
   *
   * Deliberate scope notes: the writer commits files directly (no
   * temporary-directory rename protocol — a failed job can leave

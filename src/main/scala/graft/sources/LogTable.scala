@@ -45,7 +45,10 @@ object LogTable {
   }
 
   /** Read a date range of the compacted table: scans exactly the pruned
-    * day directories, nothing else.
+    * day directories, nothing else. The frame carries [[outputSchema]],
+    * the schema [[ddl]] publishes, so building it opens no Parquet footer
+    * and runs no Spark job, and a Hive-layout day adds no
+    * `year`/`month`/`day` column.
     */
   def read(spark: SparkSession, destRoot: String, bucketName: String,
            from: LocalDate, to: LocalDate,
@@ -53,7 +56,7 @@ object LogTable {
     val paths = dayPaths(spark, destRoot, bucketName, from, to, hiveLayout)
     require(paths.nonEmpty,
       s"no compacted data for $bucketName in [$from, $to] under $destRoot")
-    spark.read.parquet(paths: _*)
+    spark.read.schema(outputSchema).parquet(paths: _*)
   }
 
   private def hiveType(dt: DataType): String = dt match {

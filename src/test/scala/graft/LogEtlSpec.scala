@@ -34,7 +34,8 @@ class LogEtlSpec extends AnyFunSuite {
     LogEtl.compact(spark, in, out, numOutputFiles = 3)
     val parquets = new java.io.File(out).listFiles
       .filter(_.getName.endsWith(".parquet"))
-    assert(parquets.length == 3)
+    // at most n: a scan with fewer splits than n writes one file per split
+    assert(parquets.length == math.min(3, spark.read.text(in).rdd.getNumPartitions))
     assert(parquets.forall(_.getName.contains("snappy")))
     val back = spark.read.parquet(out)
     assert(back.columns.toSeq == S3AccessLog.OutputColumns)
@@ -82,11 +83,33 @@ class LogEtlSpec extends AnyFunSuite {
     assert(cf.filter($"x_edge_location" === "LAX1").count() == 50)
   }
 
+  test("compact: a scan with more splits than n writes exactly n files") {
+    val in = tmpDir(); val out = tmpDir()
+    Files.write(Paths.get(s"$in/part0.txt"), lines.mkString("\n").getBytes)
+    // 16 KB splits: the one ~60 KB file scans as four at any local[N]
+    val key = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "16384")
+    try {
+      assert(spark.read.text(in).rdd.getNumPartitions > 3)
+      LogEtl.compact(spark, in, out, numOutputFiles = 3)
+    } finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(parquetFiles(out).length == 3)
+    assert(spark.read.parquet(out).count() == 201)
+  }
+
   test("output is sorted by request_time within each partition (s3.py:457-458)") {
     val in = tmpDir(); val out = tmpDir()
-    Files.write(java.nio.file.Paths.get(s"$in/part0.txt"),
-      scala.util.Random.shuffle(lines).mkString("\n").getBytes)
+    // three input files scan as two or more splits: two files to check
+    scala.util.Random.shuffle(lines).grouped(lines.size / 3 + 1).zipWithIndex
+      .foreach { case (part, k) =>
+        Files.write(Paths.get(s"$in/part$k.txt"), part.mkString("\n").getBytes)
+      }
     LogEtl.compact(spark, in, out, numOutputFiles = 2)
+    assert(parquetFiles(out).length == 2)
     // each output file is one former partition — check per-file monotonicity
     val violations = spark.read.parquet(out)
       .select(input_file_name().as("f"), $"request_time")
@@ -116,7 +139,7 @@ class LogEtlSpec extends AnyFunSuite {
   }
 
   /** Raw logs for `<root>/<bucket>/yyyy/MM/dd/`, spread over three files
-    * (plus one dead-letter line) so each unit's write shuffles.
+    * (plus one dead-letter line each) so each unit's scan has three splits.
     */
   def writeDay(root: String, bucket: String, day: LocalDate, n: Int): Unit = {
     val dir = Paths.get(root, bucket,

@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,13 +36,18 @@ class PlanSpec extends AnyFunSuite {
     * round's truncation job — the frame it returns only reads the
     * checkpoint — so per-round plan pins read these.
     */
-  def truncationPlans(body: => Any): Seq[String] = {
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+  def truncationPlans(body: => Any): Seq[String] =
+    executedPlans(body).collect {
+      case ("localCheckpoint", p) => p.toString
+    }
+
+  /** Every action `body` runs, in order: its name and executed plan. */
+  def executedPlans(body: => Any): Seq[(String, SparkPlan)] = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution,
                     durationNs: Long): Unit =
-        if (funcName == "localCheckpoint")
-          plans.synchronized(plans += qe.executedPlan.toString)
+        plans.synchronized(plans += funcName -> qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution,
                     exception: Exception): Unit = ()
     }
@@ -283,6 +290,24 @@ class PlanSpec extends AnyFunSuite {
     val scanLine = p.linesIterator.find(_.contains("FileScan parquet")).get
     assert(!scanLine.contains("format_string"), scanLine)
     assert(p.contains("parse_s3_access_log"), p)
+  }
+
+  test("LogEtl.compact: the write runs in the scan's stage — no shuffle exchange") {
+    val in = SparkTestSession.tempDir("graft-plan-etl").toString
+    for (k <- 0 until 4)
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/f$k.log"),
+        (0 until 20).map(i => graft.sources.S3AccessLog.renderLine(
+          RenderFixtures.baseFields.updated("reqid", s"R$k-$i")))
+          .mkString("\n").getBytes)
+    val out = SparkTestSession.tempDir("graft-plan-etl").toString + "/day"
+    // descends into adaptive plans and their query stages
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val writes = executedPlans(graft.operators.LogEtl.compact(spark, in, out,
+        numOutputFiles = 2))
+      .map(_._2).filter(aqe.find(_)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+    assert(writes.size == 1, writes.mkString("\n"))
+    val shuffles = aqe.collect(writes.head) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.isEmpty, writes.head.toString)
   }
 
   test("q32: unpivot plans as a single-scan Expand, not union-of-scans") {

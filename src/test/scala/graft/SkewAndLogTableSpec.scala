@@ -1,9 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{LogEtl, Skew}
@@ -120,6 +123,59 @@ class SkewAndLogTableSpec extends AnyFunSuite {
     LogEtl.compact(spark, s"$inRoot/b1/2024/07/02", day2, numOutputFiles = 1)
     assert(LogTable.read(spark, outRoot, "b1",
       LocalDate.of(2024, 7, 1), LocalDate.of(2024, 7, 4)).count() == 60)
+  }
+
+  /** Raw logs of bucket b1 for the given days of July 2024, 30 lines each. */
+  def julyLogs(days: Seq[Int]): String = {
+    val inRoot = SparkTestSession.tempDir("graft-lt-in").toString
+    for (day <- days) {
+      val dir = Paths.get(f"$inRoot/b1/2024/07/$day%02d")
+      Files.createDirectories(dir)
+      Files.write(dir.resolve("f.log"), (0 until 30).map(i =>
+        S3AccessLog.renderLine(RenderFixtures.baseFields
+          .updated("time", f"[$day%02d/Jul/2024:${i % 24}%02d:00:00 +0000]")
+          .updated("reqid", s"D$day-R$i"))).mkString("\n").getBytes)
+    }
+    inRoot
+  }
+
+  val (july1, july2) = (LocalDate.of(2024, 7, 1), LocalDate.of(2024, 7, 2))
+
+  test("LogTable.read runs no Spark job before the first action, in either layout") {
+    val in = julyLogs(Seq(1, 2))
+    val sc = spark.sparkContext
+    for (hive <- Seq(false, true)) {
+      val out = SparkTestSession.tempDir("graft-lt-out").toString
+      LogEtl.runBackfill(spark, in, out, Seq("b1"), july1, july2,
+        numOutputFiles = 2, hiveLayout = hive)
+      bridge.drainListeners(sc)
+      val jobs = new AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      val df =
+        try LogTable.read(spark, out, "b1", july1, july2, hiveLayout = hive)
+        finally { bridge.drainListeners(sc); sc.removeSparkListener(listener) }
+      assert(jobs.get == 0, s"hiveLayout = $hive")
+      // the DDL's schema, no year/month/day from the Hive directories
+      assert(df.schema == LogTable.outputSchema, s"hiveLayout = $hive")
+      assert(df.count() == 60)
+    }
+  }
+
+  test("a Hive-layout table reads back the same rows as the raw layout") {
+    val in = julyLogs(Seq(1, 2))
+    def rows(hive: Boolean): Seq[String] = {
+      val out = SparkTestSession.tempDir("graft-lt-out").toString
+      LogEtl.runBackfill(spark, in, out, Seq("b1"), july1, july2,
+        numOutputFiles = 2, hiveLayout = hive)
+      LogTable.read(spark, out, "b1", july1, july2, hiveLayout = hive)
+        .collect().map(_.toString).sorted.toSeq
+    }
+    val raw = rows(hive = false)
+    assert(raw.size == 60)
+    assert(rows(hive = true) == raw)
   }
 
   test("LogTable.ddl emits the published Athena contract from the schema") {
