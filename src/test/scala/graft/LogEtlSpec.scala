@@ -32,8 +32,7 @@ class LogEtlSpec extends AnyFunSuite {
     Files.write(java.nio.file.Paths.get(s"$in/part0.txt"),
       lines.mkString("\n").getBytes)
     LogEtl.compact(spark, in, out, numOutputFiles = 3)
-    val parquets = new java.io.File(out).listFiles
-      .filter(_.getName.endsWith(".parquet"))
+    val parquets = parquetFiles(out)
     // at most n: a scan with fewer splits than n writes one file per split
     assert(parquets.length == math.min(3, spark.read.text(in).rdd.getNumPartitions))
     assert(parquets.forall(_.getName.contains("snappy")))
