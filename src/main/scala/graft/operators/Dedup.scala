@@ -485,63 +485,209 @@ object Dedup {
     * near-dup PAIRS become dedup GROUPS only through transitivity
     * (A~B, B~C ⇒ {A,B,C} even when A≁C), so clustering is the step
     * between candidate scoring and survivor selection in every dedup
-    * pipeline. Returns (id, cluster) where cluster = min id reachable.
+    * pipeline. Returns (id, cluster) for every node on an edge, where
+    * cluster = the MINIMUM id reachable from id: edge direction,
+    * duplicate edges and self-loops never change the labels, and a node
+    * seen only on a self-loop labels itself.
     *
-    * ALTERNATING STAR CONTRACTION (Kiveris, Lattanzi, Mirrokni,
-    * Rastogi, Vassilvitskii — "Connected Components in MapReduce and
-    * Beyond", SoCC 2014, the standard O(log n)-round formulation):
-    * each round applies
-    *   large-star — every node points its LARGER neighbors at its
-    *   local minimum (min of itself and its neighborhood), then
-    *   small-star — edges orient toward their larger endpoint and
-    *   every node points its (now all smaller) neighbors AND itself
-    *   at its local minimum,
-    * contracting every component onto its minimum id in rounds
-    * LOGARITHMIC in component size REGARDLESS OF DIAMETER. That is the
-    * property min-label BSP ([[connectedComponentsBsp]]) lacks — BSP
-    * rounds ∝ diameter, so a chain-shaped dup graph (each crawl
-    * near-dups the previous one) costs rounds × checkpoint: measured
-    * at the r18 rehearsal, a 50k-node chain needs 2 000+ BSP rounds vs
-    * a handful of star rounds. Per round this formulation is pure
-    * aggregations + equi-joins: the local minima come from a
-    * map-side-combined `min` per node (never a collected neighbor
-    * list, so a 100M-degree hub costs its edge count, not a buffer),
-    * and each round's output is checkpoint-truncated with the
-    * superseded round released only AFTER the convergence comparison
-    * reads it (Truncator.release — O(1) live copies).
+    * One operator, two cores, three arms chosen at run time from what
+    * the run observes:
     *
-    * Convergence = fixpoint: the deduped edge set repeats exactly
-    * (equal counts + empty exceptAll — a set comparison, not a
-    * probabilistic checksum). The fixpoint is the star forest
-    * {(member, component-min)}, read out as the labels; roots label
-    * themselves. Fails loudly past `maxIter` like every iterative
-    * operator here — silence would return a half-contracted forest as
-    * plausible-but-wrong groups.
+    *  1. CONVERGED — up to [[BspRounds]] (4) min-label BSP rounds run
+    *     first: each node takes the min of its own and its neighbors'
+    *     labels, one join + partial-aggregated min per round. The
+    *     rounds needed grow with the component DIAMETER, so the
+    *     shallow graphs near-dup pipelines usually produce settle here
+    *     and pay nothing more.
+    *  2. CONTRACT — a graph the budget leaves unconverged is collapsed
+    *     onto its partial labels and the contracted graph is finished
+    *     by alternating star contraction (Kiveris, Lattanzi, Mirrokni,
+    *     Rastogi, Vassilvitskii — "Connected Components in MapReduce
+    *     and Beyond", SoCC 2014): large-star points every node's larger
+    *     neighbors at its local minimum, small-star points every node
+    *     and its (now smaller) neighbors at theirs, and every component
+    *     contracts onto its minimum in rounds LOGARITHMIC in its size
+    *     whatever its diameter. Correctness of the handoff: after k BSP
+    *     rounds label(u) is the minimum id within distance k of u, so
+    *     every member of label class L reaches L itself (the class need
+    *     not induce a connected subgraph: with k = 1 and edges 7-5, 8-5,
+    *     5-2, class {7, 8} of label 5 has no internal edge) — collapsing
+    *     each class onto L turns edge (u, v) into (label(u), label(v))
+    *     and keeps the component structure exactly. A component's
+    *     global minimum m keeps label(m) = m, so star's min-id labels
+    *     over the contracted graph composed with label(id) ARE the
+    *     min-id labels of the original.
+    *  3. SKIP — the contraction pays two edge-keyed joins plus the
+    *     composition join and buys nothing when the BSP prefix barely
+    *     merged labels: on a MONOTONE-id chain (crawl ids ascending
+    *     along the dup chain) label(i) = i − k, the classes are
+    *     singletons and the chain shrinks only additively. The label
+    *     table in hand carries the signal — proxy shrinkage
+    *     1 − distinct labels / nodes, one aggregation over node-sized
+    *     data — and below [[ContractMinShrink]] (0.3) star contraction
+    *     runs on the ORIGINAL edges instead. The labels are the same
+    *     either way; the arm is WARN-logged like every self-engaging
+    *     switch.
+    *
+    * Measured trade-offs (SCALE.md r18cc and r19cc, recorded when pure
+    * BSP, pure star and this operator were three entry points): BSP
+    * alone needs rounds = diameter — 224.8 s on a 2 048-node chain,
+    * ~15 h extrapolated at 500 000 — while star alone holds a
+    * 500 000-node chain at 26–54 s but pays ~1.6× BSP on
+    * shallow graphs (two grouped minima + joins per round against
+    * one). On gr02's shallow dup-graph shape this operator read
+    * 1.56–2.05 s against star's 2.29 s and BSP's 2.94 s at 1×, and
+    * 6.20 s against star's 10.78 s at 100× (BSP alone 4.41 s there);
+    * the contraction roughly doubles the shuffle there (447.8 vs
+    * 211.0 MB). Chains take the skip arm: 44.9 s at 500 000 nodes,
+    * i.e. star plus [[BspRounds]] cheap rounds.
+    *
+    * Every round is pure aggregations + equi-joins (a local minimum is
+    * a map-side-combined `min`, never a collected neighbor list, so a
+    * 100M-degree hub costs its edge count) and is lineage-truncated by
+    * the [[Checkpointing]] policy, each superseded round released once
+    * nothing reads it. Star contraction converges at a fixpoint (the
+    * deduped edge set repeats exactly: equal counts and an empty
+    * exceptAll) and fails loudly past [[StarRounds]] rounds, since a
+    * half-contracted forest would read as plausible-but-wrong groups.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val cp = Checkpointing.truncator(edges.sparkSession)
-    // the non-self-loop edge count rides the dedup checkpoint's own
-    // observed metrics (r21) — it seeds the star loop's convergence
-    // counter, which previously cost a separate count() job
+    // one materialization of the (possibly expensive) upstream edge
+    // pipeline serves the BSP rounds, the contraction joins and the
+    // skip arm's star rounds; the per-round symmetric view is a cheap
+    // explode over the checkpoint — never union(e, e.swap), which
+    // would evaluate the upstream pipeline twice
+    val (e0, nEdges) = pinDistinct(edges, cp)
+    val (labels, converged) = bspMinLabelRounds(symmetric(e0), cp)
+    if (converged) {
+      cp.release(e0)
+      labels.select(col("id"), col("label").as("cluster"))
+    } else {
+      // decide from the label table (node-sized, already checkpointed)
+      // whether the contraction pays: one agg, never a pass over edges
+      val stats = labels
+        .agg(count(lit(1)).as("_n"), countDistinct(col("label")).as("_d"))
+        .head()
+      val (nNodes, nLabels) = (stats.getLong(0), stats.getLong(1))
+      val shrink =
+        if (nNodes == 0) 0.0 else (nNodes - nLabels).toDouble / nNodes
+      if (shrink < ContractMinShrink) {
+        logger.warn(f"graft connectedComponents: contraction " +
+          f"SKIPPED at shrinkage $shrink%.3f < $ContractMinShrink%.2f " +
+          f"($nLabels%d labels / $nNodes%d nodes after $BspRounds%d BSP " +
+          "rounds) — star contraction runs on the original edges; the " +
+          "labels are the same either way.")
+        // starContractFrom releases e0's storage itself once round 1
+        // and its node pin land
+        starContractFrom(e0, nEdges, cp)
+      } else {
+        val contracted = e0
+          .join(labels.select(col("id").as("src"), col("label").as("_ls")),
+            "src")
+          .join(labels.select(col("id").as("dst"), col("label").as("_ld")),
+            "dst")
+          .select(col("_ls").as("src"), col("_ld").as("dst"))
+        val (c0, nContracted) = pinDistinct(contracted, cp)
+        val star = starContractFrom(c0, nContracted, cp)
+        cp.release(e0)
+        // compose. Every label is present in star's output: intra-class
+        // edges contract to (L, L) self-loops, which are KEPT in
+        // `contracted` precisely so they pin L into star's node set (a
+        // fully-converged class would otherwise vanish) — do not
+        // "optimize" them away. The left join + coalesce is therefore
+        // belt-and-braces, not a live path.
+        labels
+          .join(star.select(col("id").as("label"), col("cluster")),
+            Seq("label"), "left")
+          .select(col("id"),
+            coalesce(col("cluster"), col("label")).as("cluster"))
+      }
+    }
+  }
+
+  /** Min-label BSP rounds [[connectedComponents]] runs before it hands
+    * an unconverged graph to star contraction.
+    */
+  private val BspRounds = 4
+
+  /** Star-contraction rounds past which [[connectedComponents]] fails
+    * instead of returning a half-contracted forest; rounds grow ~log of
+    * the component size, so a real graph stays far below it.
+    */
+  private val StarRounds = 40
+
+  /** Proxy shrinkage below which [[connectedComponents]] skips the
+    * contraction and runs star contraction on the original edges.
+    */
+  private val ContractMinShrink = 0.3
+
+  /** `edges` deduplicated and lineage-truncated, with its non-self-loop
+    * row count — read from the checkpoint job's own observed metrics,
+    * not a separate count() job; it seeds the star rounds' convergence
+    * counter.
+    */
+  private def pinDistinct(edges: DataFrame,
+                          cp: Checkpointing.Truncator): (DataFrame, Long) = {
     val obs = org.apache.spark.sql.Observation()
     val e0 = cp(edges.distinct()
       .observe(obs, count(when(col("src") =!= col("dst"), lit(1)))
         .as("_n")))
-    starContractFrom(e0, obs.get("_n").asInstanceOf[Long], maxIter)
+    (e0, obs.get("_n").asInstanceOf[Long])
+  }
+
+  /** Both directions of every edge, from one explode over `e`. */
+  private def symmetric(e: DataFrame): DataFrame =
+    e.select(explode(array(
+        struct(col("src").as("src"), col("dst").as("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
+  /** Up to [[BspRounds]] min-label rounds over the SYMMETRIC edge view:
+    * the final (id, label) frame and whether the fixpoint was DETECTED
+    * inside the budget.
+    */
+  private def bspMinLabelRounds(sym: DataFrame,
+                                cp: Checkpointing.Truncator): (DataFrame, Boolean) = {
+    var labels = cp.rolling(sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
+    var converged = false
+    var i = 0
+    // a round's checkpoint only needs to outlive the NEXT round's
+    // materialization — Truncator.rolling releases the superseded
+    // round (files in reliable mode, blocks in local mode), so
+    // executor storage holds O(1) label-table copies, not O(rounds)
+    while (!converged && i < BspRounds) {
+      val nbrMin = sym
+        .join(labels.select(col("id").as("src"), col("label")), "src")
+        .groupBy(col("dst").as("id")).agg(min(col("label")).as("_nbr"))
+      // one checkpointed join per round serves BOTH the convergence
+      // check and the next label frame — a separate next-vs-previous
+      // join would shuffle the label table a second time every round.
+      // The improvement count rides the checkpoint job's observed
+      // metrics: count(when(_nbr < label)) counts exactly the rows a
+      // filter(...).isEmpty action would scan for (null comparisons
+      // fall out of count the same way filter drops them)
+      val obs = org.apache.spark.sql.Observation()
+      val joined = cp.rolling(labels.join(nbrMin, Seq("id"), "left")
+        .observe(obs, count(when(col("_nbr") < col("label"), lit(1)))
+          .as("_viol")))
+      converged = obs.get("_viol").asInstanceOf[Long] == 0L
+      labels = joined.select(col("id"),
+        least(col("label"), coalesce(col("_nbr"), col("label"))).as("label"))
+      i += 1
+    }
+    (labels, converged)
   }
 
   /** The star-contraction rounds of [[connectedComponents]] over an
-    * ALREADY deduped + lineage-truncated edge set (`e0`, with
-    * `nEdges` = its non-self-loop row count) — split out (r21) so
-    * [[connectedComponentsHybrid]]'s contraction-skipped arm can hand
-    * its own pinned `e0` straight in instead of paying a second
-    * distinct + checkpoint of the identical set. Releases `e0`'s
-    * storage once round 1 and the node-set pin have materialized
-    * (nothing reads it after that), exactly as the fused form did.
+    * ALREADY deduped + lineage-truncated edge set (`e0`, with `nEdges`
+    * = its non-self-loop row count). Releases `e0`'s storage once
+    * round 1 and the node-set pin have materialized (nothing reads it
+    * after that).
     */
   private def starContractFrom(e0: DataFrame, nEdges: Long,
-                               maxIter: Int): DataFrame = {
-    val cp = Checkpointing.truncator(e0.sparkSession)
+                               cp: Checkpointing.Truncator): DataFrame = {
     def clean(e: DataFrame): DataFrame =
       e.filter(col("src") =!= col("dst")).distinct()
     // large-star: m(u) = min(Γ(u) ∪ {u}) over the SYMMETRIC view;
@@ -550,10 +696,7 @@ object Dedup {
     // edge points strictly downward (m < u < v), so self-loops cannot
     // appear.
     def largeStar(e: DataFrame): DataFrame = {
-      val s = e.select(explode(array(
-        struct(col("src").as("src"), col("dst").as("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
-        .select(col("p.src").as("src"), col("p.dst").as("dst"))
+      val s = symmetric(e)
       val mins = s.groupBy(col("src")).agg(min(col("dst")).as("_mn"))
         .select(col("src"), least(col("_mn"), col("src")).as("_m"))
       // NOT deduped: duplicates out of large-star are absorbed by
@@ -578,14 +721,14 @@ object Dedup {
     // the original node set, pinned BEFORE the loop contracts edges
     // away (roots lose their outgoing edges; they label themselves);
     // self-loops contribute their nodes here (a (x, x)-only node must
-    // still label itself — BSP parity), then drop in the filter below
+    // still label itself — the label contract), then drop in the filter below
     val nodes = cp(e0.select(explode(array(col("src"), col("dst")))
       .as("id")).distinct())
     var e: DataFrame = e0.filter(col("src") =!= col("dst"))
     var eCount = nEdges
     var converged = false
     var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged && i < StarRounds) {
       // the round's edge count rides the checkpoint job's own observed
       // metrics (r21) — the separate count() job per round is gone;
       // CCPropSpec "observe() metrics arrive on an eager
@@ -602,238 +745,14 @@ object Dedup {
       i += 1
     }
     if (!converged) sys.error(
-      s"connectedComponents did not converge in $maxIter star rounds — " +
-        "raise maxIter (rounds grow ~log component size)")
+      s"connectedComponents did not converge in $StarRounds star rounds " +
+        "(rounds grow ~log component size)")
     val labels = nodes
       .join(e.select(col("src").as("id"), col("dst").as("cluster")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
     labels
   }
-
-  /** Min-label BSP connected components — the pre-r18 default, kept
-    * for shallow graphs and as the independent implementation the
-    * star-contraction specs compare against. Each round every node
-    * takes the min of its own label and its neighbors' labels —
-    * converges in O(component diameter) rounds, which is FINE for the
-    * shallow components near-dup graphs usually produce and WRONG for
-    * chain-shaped ones (use [[connectedComponents]], whose round count
-    * is diameter-independent). Each round is one hash-partitioned join
-    * + partial-aggregated min, with per-round lineage truncation by
-    * the [[Checkpointing]] policy (reliable when the session has a
-    * checkpoint directory, `localCheckpoint` otherwise).
-    */
-  def connectedComponentsBsp(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val cp = Checkpointing.truncator(edges.sparkSession)
-    // symmetrize with a single explode, NOT union(e, e.swap): union would
-    // evaluate the (often expensive) upstream edge pipeline twice before
-    // the checkpoint — measured as ~half of dd08's runtime when the edges
-    // come out of an all-pairs Jaccard join
-    val sym = cp(edges
-      .select(explode(array(
-        struct(col("src").as("src"), col("dst").as("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    val (labels, converged) = bspMinLabelRounds(sym, cp, maxIter)
-    sym.unpersist()
-    // silence here would return plausible-but-WRONG groups (a transitive
-    // chain split mid-way) — fail loudly instead; callers with genuinely
-    // deep components raise maxIter
-    if (!converged) sys.error(
-      s"connectedComponentsBsp did not converge in $maxIter rounds — " +
-        "component diameter exceeds maxIter; raise it (or use the " +
-        "diameter-independent connectedComponents)")
-    labels.select(col("id"), col("label").as("cluster"))
-  }
-
-  /** The ONE min-label BSP core, shared by [[connectedComponentsBsp]]
-    * (runs to convergence, fails loudly past its budget) and
-    * [[connectedComponentsHybrid]] (runs a short budget, escapes to
-    * star contraction on non-convergence): up to `maxRounds` rounds
-    * over the SYMMETRIC edge view, returning the final (id, label)
-    * frame and whether the fixpoint was DETECTED inside the budget.
-    * The per-round join/min/checkpoint/convergence discipline lives
-    * exactly once so the hybrid's BSP prefix and the standalone BSP
-    * can never silently diverge.
-    */
-  private def bspMinLabelRounds(sym: DataFrame,
-                                cp: Checkpointing.Truncator,
-                                maxRounds: Int): (DataFrame, Boolean) = {
-    var labels = cp.rolling(sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var converged = false
-    var i = 0
-    // a round's checkpoint only needs to outlive the NEXT round's
-    // materialization — Truncator.rolling releases the superseded
-    // round (files in reliable mode, blocks in local mode), so
-    // executor storage holds O(1) label-table copies, not O(rounds)
-    while (!converged && i < maxRounds) {
-      val nbrMin = sym
-        .join(labels.select(col("id").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("label")).as("_nbr"))
-      // one checkpointed join per round serves BOTH the convergence
-      // check and the next label frame — a separate next-vs-previous
-      // join would shuffle the label table a second time every round.
-      // The improvement count rides the checkpoint job's observed
-      // metrics (r21): count(when(_nbr < label)) counts exactly the
-      // rows the old filter(...).isEmpty action scanned for (null
-      // comparisons fall out of count the same way filter drops them)
-      val obs = org.apache.spark.sql.Observation()
-      val joined = cp.rolling(labels.join(nbrMin, Seq("id"), "left")
-        .observe(obs, count(when(col("_nbr") < col("label"), lit(1)))
-          .as("_viol")))
-      converged = obs.get("_viol").asInstanceOf[Long] == 0L
-      labels = joined.select(col("id"),
-        least(col("label"), coalesce(col("_nbr"), col("label"))).as("label"))
-      i += 1
-    }
-    (labels, converged)
-  }
-
-  /** Hybrid connected components — min-label BSP rounds first, star
-    * contraction as the escape hatch: the r18 measurements
-    * (SCALE.md r18cc) showed each implementation losing on the other's
-    * shape. BSP ([[connectedComponentsBsp]]) runs ONE join + partial
-    * min per round and wins on the SHALLOW graphs near-dup pipelines
-    * usually produce (5.25 vs 8.15 s at the 100× rehearsal), but its
-    * round count is the component DIAMETER — unbounded, 225 s at a
-    * 2k-node chain. Star contraction ([[connectedComponents]]) is
-    * diameter-immune (~log rounds) but pays two grouped aggregations +
-    * joins per round, ~1.6× BSP on shallow graphs. The hybrid takes
-    * both ends: run BSP for at most `bspRounds` cheap rounds — a graph
-    * whose diameter fits converges there and pays nothing more — and
-    * otherwise CONTRACT the graph by the partial labels and hand the
-    * contracted edge set to star contraction, bounding the deep-graph
-    * cost at `bspRounds` wasted-cheap rounds + two contraction joins
-    * before star's diameter-free rounds take over.
-    *
-    * How much the contraction shrinks depends on the ID LAYOUT, not
-    * just the shape: after k rounds label(u) = min id within distance
-    * k, so label classes are min-of-window regions — on random-id
-    * paths a local minimum captures its ~(2k+1)-hop window and the
-    * contracted graph shrinks multiplicatively, and on shallow blobs
-    * most nodes reach the component minimum and whole components
-    * vanish into self-loops; but on a MONOTONE-id chain (crawl doc
-    * ids ascending along the dup chain — the motivating worst case)
-    * label(i) = i − k, classes are singletons, and the chain shrinks
-    * only ADDITIVELY by k. The hybrid's chain guarantee is therefore
-    * NOT a shorter star run — it is that the overhead stays bounded
-    * (k cheap rounds + the joins) while star does the diameter-free
-    * work, vs BSP's unbounded rounds-=-diameter wall.
-    *
-    * Correctness of the handoff: after k BSP rounds label(u) is the
-    * minimum id within distance k of u, so every member of label
-    * class L has a ≤k path to the label node L itself — any two
-    * members are connected THROUGH L in the original graph (the class
-    * need not induce a connected subgraph: with k=1 and edges 7-5,
-    * 8-5, 5-2, class {7,8} of label 5 has no internal edge, yet both
-    * members reach 5), and that via-L connectivity is all contraction
-    * needs: collapsing each class onto its label node preserves the
-    * component structure exactly — an original edge (u,v) becomes
-    * (label(u), label(v)) and label(u) is connected to u. The
-    * component's global minimum m always survives contraction
-    * (label(m) = m: no smaller id exists in its component, at any
-    * distance), so star's min-id cluster labels over the contracted
-    * graph ARE the original min-id labels, and composing
-    * star(label(id)) reproduces [[connectedComponents]]' output row
-    * for row.
-    *
-    * ADAPTIVE handoff: the contraction joins roughly DOUBLE the
-    * shuffle bytes of a pure star run (447.8 vs 211.0 MB on the
-    * shallow 100× rehearsal, SCALE.md r19cc) and buy nothing when the
-    * BSP prefix barely merged labels — on a monotone-id chain the
-    * classes are singletons and the graph shrinks only additively by
-    * `bspRounds`. The label table already in hand carries the signal:
-    * distinct-label count vs node count (node-sized aggregates, never
-    * the edge set). When the proxy shrinkage (1 − labels/nodes) is
-    * below [[ContractMinShrink]] (0.3), the contraction AND the
-    * composition join are skipped and star contraction runs on the
-    * ORIGINAL edges — its output is the same min-id component labeling
-    * either way (CCPropSpec holds at every budget), so the switch
-    * changes the plan, never the rows. Warn-logged like every
-    * self-engaging switch.
-    */
-  def connectedComponentsHybrid(edges: DataFrame, bspRounds: Int = 4,
-                                maxIter: Int = 20): DataFrame = {
-    require(bspRounds >= 1, s"bspRounds must be >= 1, got $bspRounds")
-    val cp = Checkpointing.truncator(edges.sparkSession)
-    // one materialization of the (possibly expensive) upstream edge
-    // pipeline serves the BSP rounds AND the contraction joins; the
-    // per-round symmetric view is a cheap explode over the checkpoint.
-    // The non-self-loop count rides the checkpoint's observed metrics
-    // (r21) — it seeds star contraction's convergence counter when the
-    // escape hatch hands e0 straight to starContractFrom
-    val obsE = org.apache.spark.sql.Observation()
-    val e0 = cp(edges.distinct()
-      .observe(obsE, count(when(col("src") =!= col("dst"), lit(1)))
-        .as("_n")))
-    val sym = e0.select(explode(array(
-        struct(col("src").as("src"), col("dst").as("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val (labels, converged) = bspMinLabelRounds(sym, cp, bspRounds)
-    if (converged) {
-      cp.release(e0)
-      labels.select(col("id"), col("label").as("cluster"))
-    } else {
-      // escape hatch: diameter exceeds the BSP budget. Decide from the
-      // label table (node-sized, already checkpointed) whether the
-      // contraction pays: one agg over it, never a pass over the edges
-      val stats = labels
-        .agg(count(lit(1)).as("_n"), countDistinct(col("label")).as("_d"))
-        .head()
-      val (nNodes, nLabels) = (stats.getLong(0), stats.getLong(1))
-      val shrink =
-        if (nNodes == 0) 0.0 else (nNodes - nLabels).toDouble / nNodes
-      if (shrink < ContractMinShrink) {
-        // the BSP prefix barely merged anything (the monotone-id chain
-        // shape): contracting would pay two edge-keyed joins plus the
-        // composition join to shrink the graph by ~nothing — hand the
-        // ORIGINAL edges to star contraction instead and drop the
-        // partial labels (bounded waste: bspRounds cheap rounds)
-        logger.warn(f"graft connectedComponentsHybrid: contraction " +
-          f"SKIPPED at shrinkage $shrink%.3f < $ContractMinShrink%.2f " +
-          f"($nLabels%d labels / $nNodes%d nodes after $bspRounds%d BSP " +
-          "rounds) — star contraction runs on the original edges; the " +
-          "labels are the same either way.")
-        // e0 is already deduped + pinned: hand it straight to the star
-        // rounds (r21; was a second distinct + checkpoint of the same
-        // set inside connectedComponents). starContractFrom releases
-        // e0's storage itself once round 1 and its node pin land.
-        starContractFrom(e0, obsE.get("_n").asInstanceOf[Long], maxIter)
-      } else {
-        // contract by the partial labels (two id-keyed joins over the
-        // checkpointed edges) and let star contraction finish
-        // diameter-free. No distinct on the contracted edges:
-        // connectedComponents dedupes its input in the same shuffle
-        // its own first checkpoint needs.
-        val contracted = e0
-          .join(labels.select(col("id").as("src"), col("label").as("_ls")),
-            "src")
-          .join(labels.select(col("id").as("dst"), col("label").as("_ld")),
-            "dst")
-          .select(col("_ls").as("src"), col("_ld").as("dst"))
-        val star = connectedComponents(contracted, maxIter)
-        cp.release(e0)
-        // compose. Every label is present in star's output: intra-class
-        // edges contract to (L, L) self-loops, which are KEPT in
-        // `contracted` precisely so they pin L into star's node set (a
-        // fully-converged class would otherwise vanish) — do not
-        // "optimize" them away. The left join + coalesce is therefore
-        // belt-and-braces, not a live path.
-        labels
-          .join(star.select(col("id").as("label"), col("cluster")),
-            Seq("label"), "left")
-          .select(col("id"),
-            coalesce(col("cluster"), col("label")).as("cluster"))
-      }
-    }
-  }
-
-  /** Proxy shrinkage below which [[connectedComponentsHybrid]] skips
-    * the contraction and runs star contraction on the original edges.
-    */
-  private val ContractMinShrink = 0.3
 
   /** Cluster resolution — the step that makes dup CLUSTERS a dedup:
     * per cluster, keep the highest-scoring member (ties to the lowest

@@ -1,22 +1,22 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Data-layout operators for scan pruning at scale (SURVEY.md §2c
-  * extension surface): Z-order (Morton) multi-dimensional clustering.
+/** Z-order (Morton) interleave of two dimensions (SURVEY.md §2c
+  * extension surface), as a Column and as the identical SQL text.
   *
   * Why it matters at 100 TB: parquet readers skip row groups / files
   * whose column min/max stats exclude a predicate, but a table sorted
-  * by ONE key only prunes on that key. Interleaving the bits of two
-  * keys and range-partitioning by the interleaved value lays every
-  * file out as a small RECTANGLE in (a, b) space, so min/max stats on
-  * BOTH columns stay tight and point/range predicates on EITHER
-  * dimension skip most files (the Delta/Iceberg `ZORDER BY` idea,
-  * from Morton 1966). The z-value itself is ~2·bits bitwise ops in
-  * whole-stage codegen — no UDF, no shuffle beyond the final
-  * range-exchange that any sorted write needs anyway.
+  * by ONE key only prunes on that key. Sorting by the interleaved bits
+  * of two keys lays every file out as a small RECTANGLE in (a, b)
+  * space, so min/max stats on BOTH columns stay tight and point/range
+  * predicates on EITHER dimension skip most files (the Delta/Iceberg
+  * `ZORDER BY` idea, from Morton 1966). The z-value itself is ~2·bits
+  * bitwise ops in whole-stage codegen — no UDF. q44 buckets lineitem
+  * by its high bits, and `GraftExtensions` registers it as the
+  * `z_value` SQL function.
   */
 object Layout {
 
@@ -53,34 +53,4 @@ object Layout {
     }
     terms.mkString("(", " | ", ")")
   }
-
-  /** Cluster `df` into `numFiles` z-ordered output partitions on
-    * (aCol, bCol): range-partition by the interleaved value (the low 16
-    * bits of each dimension), then sort
-    * within each partition — each output file covers a contiguous
-    * z-range, i.e. a bounded rectangle stack in (a, b). One range
-    * exchange (sampled boundaries), no global sort barrier; this is
-    * the write-side layout step before a parquet sink.
-    */
-  def zorder(df: DataFrame, aCol: String, bCol: String,
-             numFiles: Int): DataFrame = {
-    val z = zValue(col(aCol), col(bCol), 16).as("__z")
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
-
-  /** Per-file (per-partition) min/max envelope of both dimensions
-    * under a given layout — the exact statistics a parquet reader
-    * prunes with. Used by specs and ops reports to quantify skipping:
-    * the fraction of files whose [min,max] envelope intersects a
-    * predicate IS the fraction of files scanned.
-    */
-  def fileEnvelopes(df: DataFrame, aCol: String, bCol: String): DataFrame =
-    df.select(spark_partition_id().as("file"), col(aCol).as("a"), col(bCol).as("b"))
-      .groupBy("file")
-      .agg(min("a").as("a_min"), max("a").as("a_max"),
-        min("b").as("b_min"), max("b").as("b_max"),
-        count(lit(1)).as("rows"))
 }

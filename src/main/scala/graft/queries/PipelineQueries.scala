@@ -804,13 +804,13 @@ object PipelineQueries {
         |SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster
         |FROM cc GROUP BY id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // uncapped: mirrors the oracle's exact recursive-CTE edge set.
-      // Hybrid CC: near-dup graphs are usually shallow (BSP price),
-      // but a chain-shaped crawl history can't hang it (star escape)
+      // Near-dup graphs are usually shallow (they converge in the BSP
+      // rounds), but a chain-shaped crawl history can't hang it (star)
       val edges = Dedup.jaccardPairs(docsWide(s, dir), "doc_id", "text",
           maxPosting = Int.MaxValue)
         .filter(col("jac") >= 0.5)
         .select(col("da").as("src"), col("db").as("dst"))
-      Dedup.connectedComponentsHybrid(edges)
+      Dedup.connectedComponents(edges)
         .select(col("id").as("doc_id"), col("cluster"))
         .orderBy("doc_id")
     },
@@ -867,12 +867,12 @@ object PipelineQueries {
         |  CAST(n_members AS BIGINT) AS n_members
         |FROM m WHERE rn = 1 ORDER BY cluster""".stripMargin) { (s, dir) =>
       // uncapped: mirrors the oracle's exact recursive-CTE edge set;
-      // hybrid CC as in dd08 (shallow at BSP price, chain-immune)
+      // clustered as in dd08 (shallow at BSP price, chain-immune)
       val edges = Dedup.jaccardPairs(docsWide(s, dir), "doc_id", "text",
           maxPosting = Int.MaxValue)
         .filter(col("jac") >= 0.5)
         .select(col("da").as("src"), col("db").as("dst"))
-      val clusters = Dedup.connectedComponentsHybrid(edges)
+      val clusters = Dedup.connectedComponents(edges)
         .select(col("id").as("doc_id"), col("cluster"))
       val quality = TextAnalysis.qualityScore(docs(s, dir), "doc_id", "text")
       Dedup.resolveClusters(clusters, quality)
@@ -2653,7 +2653,7 @@ object PipelineQueries {
           maxPosting = Int.MaxValue)
         .filter(col("jac") >= 0.5)
         .select(col("da").as("src"), col("db").as("dst"))
-      val losers = Dedup.connectedComponentsHybrid(edges)
+      val losers = Dedup.connectedComponents(edges)
         .filter(col("id") =!= col("cluster"))
         .select(col("id").as("doc_id"))
       val surv = kept.join(losers, Seq("doc_id"), "left_anti")
@@ -4219,9 +4219,10 @@ object PipelineQueries {
     // Connected components over the high-value same-nation trade graph
     // (customers ↔ suppliers sharing an expensive order within their
     // own nation — 40 components of size 2–33 at the gate SF, not one
-    // giant blob). Spark runs the iterative min-label propagation of
-    // Dedup.connectedComponents; the oracle replays reachability as a
-    // recursive CTE closure (min reachable node ≡ min-label fixpoint).
+    // giant blob). Spark runs Dedup.connectedComponents (min-label BSP
+    // rounds, star contraction past their budget); the oracle replays
+    // reachability as a recursive CTE closure (min reachable node ≡
+    // the min-id label).
     QueryDef("gr02_components",
       """WITH RECURSIVE e0 AS (
         |  SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
@@ -4252,7 +4253,7 @@ object PipelineQueries {
         .select((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
         .distinct()
-      graft.operators.Dedup.connectedComponents(e0, maxIter = 40)
+      graft.operators.Dedup.connectedComponents(e0)
         .groupBy(col("cluster").cast(LongType).as("comp"))
         .agg(count(lit(1)).as("n_nodes"),
           sum(when(col("id") % 2 === 0, 1).otherwise(0)).cast(LongType)
@@ -4598,11 +4599,11 @@ object PipelineQueries {
         .orderBy(desc("authority"), desc("hub"), col("node")).limit(20)
     },
 
-    // Connected components on a DEEP graph — the hybrid's escape path
-    // as a gate row, not just a rehearsal: each customer's orders
+    // Connected components on a DEEP graph — the star-contraction
+    // escape as a gate row, not just a rehearsal: each customer's orders
     // linked consecutively by date form a CHAIN whose diameter is the
-    // customer's order count (~10–25 at the gate SF), far past the
-    // bspRounds = 2 budget, so star contraction finishes every
+    // customer's order count (~10–25 at the gate SF), past the fixed
+    // 4-round BSP budget, so star contraction finishes every
     // component. The oracle needs no recursion: a chain connects ALL
     // of its customer's orders, so the component label is simply the
     // customer's min order key and the size its order count —
@@ -4620,8 +4621,7 @@ object PipelineQueries {
         .withColumn("prev", lag(col("o_orderkey"), 1).over(w))
         .filter(col("prev").isNotNull)
         .select(col("prev").as("src"), col("o_orderkey").as("dst"))
-      graft.operators.Dedup.connectedComponentsHybrid(edges,
-          bspRounds = 2, maxIter = 40)
+      graft.operators.Dedup.connectedComponents(edges)
         .groupBy(col("cluster").cast(LongType).as("comp"))
         .agg(count(lit(1)).as("n_orders"))
         .orderBy("comp")

@@ -1022,28 +1022,21 @@ class PipelineSpec extends AnyFunSuite {
     assert((1L to 8L).forall(cc(_) == 1L), s"path not fully labeled: $cc")
   }
 
-  test("connected components: deep chain converges in log rounds where BSP fails loudly") {
-    // path of 12 nodes has diameter 11: min-label BSP at maxIter=5
-    // must throw (silent truncation would split the group), while the
-    // star-contraction default contracts it well inside 5 rounds —
-    // the diameter-independence that makes chain-shaped dup graphs
-    // survivable at scale
+  test("connected components: deep chain converges in log rounds") {
+    // path of 12 nodes has diameter 11, past the BSP budget: star
+    // contraction finishes it in ~log rounds, and the whole chain
+    // labels as one component
     val edges = (1L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
-    val e = intercept[RuntimeException] {
-      Dedup.connectedComponentsBsp(edges, maxIter = 5).collect()
-    }
-    assert(e.getMessage.contains("did not converge"), e.getMessage)
-    val cc = Dedup.connectedComponents(edges, maxIter = 5)
+    val cc = Dedup.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 12L).forall(cc(_) == 1L), s"$cc")
   }
 
-  test("connected components: star contraction equals BSP on chains, blobs, and noise") {
-    // two independent implementations must label identically: a
-    // planted 400-node chain (diameter far past any BSP default), a
-    // mesh blob, 200 random pairs over a small id space (dense
-    // transitive merges), a self loop, an isolated self-loop-only
-    // node, and duplicate edges
+  test("connected components: equal union-find on chains, blobs, and noise") {
+    // a planted 400-node chain (diameter far past the BSP budget, so
+    // star contraction finishes it), a mesh blob, 200 random pairs over
+    // a small id space (dense transitive merges), a self loop, an
+    // isolated self-loop-only node, and duplicate edges
     val rnd = new scala.util.Random(42)
     val chain = (1000L until 1399L).map(i => (i, i + 1))
     val blob = for {
@@ -1051,87 +1044,52 @@ class PipelineSpec extends AnyFunSuite {
     } yield (2000L + i, 2000L + j)
     val noise = Seq.fill(200)(
       (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
-    val edges = (chain ++ blob ++ noise ++
-      Seq((7L, 7L), (9999L, 9999L), (1000L, 1001L)))
-      .toDF("src", "dst")
-    val star = Dedup.connectedComponents(edges, maxIter = 30)
+    val pairs = chain ++ blob ++ noise ++
+      Seq((7L, 7L), (9999L, 9999L), (1000L, 1001L))
+    val cc = Dedup.connectedComponents(pairs.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bsp = Dedup.connectedComponentsBsp(edges, maxIter = 500)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == bsp,
-      s"star vs BSP diverged: ${star.toSet.diff(bsp.toSet)} / " +
-        s"${bsp.toSet.diff(star.toSet)}")
+    val expected = CCPropSpec.reference(pairs)
+    assert(cc == expected,
+      s"diverged from union-find: ${cc.toSet.diff(expected.toSet)} / " +
+        s"${expected.toSet.diff(cc.toSet)}")
     // the chain really is one component rooted at its minimum
-    assert((1000L to 1399L).forall(star(_) == 1000L))
-    assert(star(9999L) == 9999L, "isolated self-loop node lost")
-  }
-
-  test("hybrid components: escape path equals star and BSP on the mixed graph") {
-    // same adversarial mix as the star-vs-BSP spec; bspRounds = 2
-    // cannot converge the 400-chain, so the star escape hatch engages
-    // — the composed labels must still match both pure implementations
-    val rnd = new scala.util.Random(42)
-    val chain = (1000L until 1399L).map(i => (i, i + 1))
-    val blob = for {
-      i <- 0 until 15; j <- (i + 1) until 15 if (i + j) % 3 == 0
-    } yield (2000L + i, 2000L + j)
-    val noise = Seq.fill(200)(
-      (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
-    val edges = (chain ++ blob ++ noise ++
-      Seq((7L, 7L), (9999L, 9999L), (1000L, 1001L)))
-      .toDF("src", "dst")
-    val hybrid = Dedup.connectedComponentsHybrid(edges, bspRounds = 2,
-        maxIter = 30)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.connectedComponents(edges, maxIter = 30)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hybrid == star,
-      s"hybrid vs star diverged: ${hybrid.toSet.diff(star.toSet)} / " +
-        s"${star.toSet.diff(hybrid.toSet)}")
-    assert((1000L to 1399L).forall(hybrid(_) == 1000L))
-    assert(hybrid(9999L) == 9999L, "isolated self-loop node lost")
+    assert((1000L to 1399L).forall(cc(_) == 1000L))
+    assert(cc(9999L) == 9999L, "isolated self-loop node lost")
   }
 
   test("hybrid components: shallow graph converges inside the BSP budget") {
-    // diameter 2 — converges (and is DETECTED converged) within
-    // bspRounds = 4, so the escape never runs; labels match star
+    // diameter 2 — converges (and is DETECTED converged) within the
+    // 4-round BSP budget, so star contraction never runs
     val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L), (21L, 20L), (5L, 5L))
       .toDF("src", "dst")
-    val hybrid = Dedup.connectedComponentsHybrid(edges, bspRounds = 4)
+    val cc = Dedup.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hybrid == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
-      11L -> 10L, 20L -> 20L, 21L -> 20L, 5L -> 5L), s"$hybrid")
+    assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
+      11L -> 10L, 20L -> 20L, 21L -> 20L, 5L -> 5L), s"$cc")
   }
 
   test("hybrid components: mixed convergence — pair settles in BSP, chain needs star") {
     // the pair's class is fully contracted after round 1; the 30-node
-    // chain is not — the escape must finish the chain WITHOUT
+    // chain is not — star contraction must finish the chain WITHOUT
     // disturbing the already-converged class
     val edges = ((100L until 129L).map(i => (i, i + 1)) ++ Seq((10L, 11L)))
       .toDF("src", "dst")
-    val hybrid = Dedup.connectedComponentsHybrid(edges, bspRounds = 2,
-        maxIter = 10)
+    val cc = Dedup.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((100L to 129L).forall(hybrid(_) == 100L), s"$hybrid")
-    assert(hybrid(10L) == 10L && hybrid(11L) == 10L)
+    assert((100L to 129L).forall(cc(_) == 100L), s"$cc")
+    assert(cc(10L) == 10L && cc(11L) == 10L)
   }
 
   test("hybrid components: adaptive handoff skips contraction on monotone chains") {
-    // a monotone-id chain shrinks only ADDITIVELY by bspRounds, so the
-    // fixed threshold skips the contraction joins and hands the
-    // ORIGINAL edges to star — whose labels must equal plain star
-    // contraction's on the same chain: the switch changes the plan,
-    // never the rows
-    val edges = (500L until 560L).map(i => (i, i + 1)).toDF("src", "dst")
-    val skip = Dedup.connectedComponentsHybrid(edges, bspRounds = 2,
-        maxIter = 30)
+    // a monotone-id chain shrinks only ADDITIVELY over the BSP rounds,
+    // so the fixed threshold skips the contraction joins and hands the
+    // ORIGINAL edges to star — the switch changes the plan, never the
+    // rows (CCPropSpec asserts the skip itself)
+    val pairs = (500L until 560L).map(i => (i, i + 1))
+    val cc = Dedup.connectedComponents(pairs.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.connectedComponents(edges, maxIter = 30)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(skip == star,
-      s"skip arm vs star contraction diverged: ${skip.toSet.diff(star.toSet)}" +
-        s" / ${star.toSet.diff(skip.toSet)}")
-    assert((500L to 560L).forall(skip(_) == 500L), s"$skip")
+    assert(cc == CCPropSpec.reference(pairs), s"$cc")
+    assert((500L to 560L).forall(cc(_) == 500L), s"$cc")
   }
 
   test("funnel: out-of-order steps don't count, ordered paths do") {
