@@ -1032,29 +1032,69 @@ class PipelineSpec extends AnyFunSuite {
     assert((1L to 12L).forall(cc(_) == 1L), s"$cc")
   }
 
-  test("connected components: equal union-find on chains, blobs, and noise") {
-    // a planted 400-node chain (diameter far past the BSP budget, so
-    // star contraction finishes it), a mesh blob, 200 random pairs over
-    // a small id space (dense transitive merges), a self loop, an
-    // isolated self-loop-only node, and duplicate edges
+  /** The adversarial mix of the two specs below: a planted 400-node
+    * chain (diameter far past the BSP budget) laid over `chainIds`, a
+    * mesh blob, 200 random pairs over a small id space (dense
+    * transitive merges), a self loop, an isolated self-loop-only node,
+    * and a duplicate chain edge.
+    */
+  private def mixedGraph(chainIds: IndexedSeq[Long]): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(42)
-    val chain = (1000L until 1399L).map(i => (i, i + 1))
+    val chain = chainIds.sliding(2).map(p => (p(0), p(1))).toSeq
     val blob = for {
       i <- 0 until 15; j <- (i + 1) until 15 if (i + j) % 3 == 0
     } yield (2000L + i, 2000L + j)
     val noise = Seq.fill(200)(
       (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
-    val pairs = chain ++ blob ++ noise ++
-      Seq((7L, 7L), (9999L, 9999L), (1000L, 1001L))
-    val cc = Dedup.connectedComponents(pairs.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expected = CCPropSpec.reference(pairs)
-    assert(cc == expected,
-      s"diverged from union-find: ${cc.toSet.diff(expected.toSet)} / " +
-        s"${expected.toSet.diff(cc.toSet)}")
+    chain ++ blob ++ noise ++
+      Seq((7L, 7L), (9999L, 9999L), (chainIds(0), chainIds(1)))
+  }
+
+  private def assertLabels(name: String, got: Map[Long, Long],
+                           expected: Map[Long, Long]): Unit =
+    assert(got == expected,
+      s"diverged from $name: ${got.toSet.diff(expected.toSet)} / " +
+        s"${expected.toSet.diff(got.toSet)}")
+
+  test("connected components: star contraction equals BSP on chains, blobs, and noise") {
+    // ids ascend along the chain, so the BSP prefix merges too few
+    // labels to pay for the contraction (shrinkage 0.290 < 0.3): star
+    // contraction runs on the ORIGINAL edges, and its labels must
+    // match min-label propagation run to its fixpoint and union-find
+    val pairs = mixedGraph((1000L to 1399L).toVector)
+    val star = CCPropSpec.run(spark, pairs)
+    assert(star.skipped, "contraction not skipped on the monotone chain")
+    assertLabels("BSP", star.labels, CCPropSpec.bspReference(pairs))
+    assertLabels("union-find", star.labels, CCPropSpec.reference(pairs))
     // the chain really is one component rooted at its minimum
-    assert((1000L to 1399L).forall(cc(_) == 1000L))
-    assert(cc(9999L) == 9999L, "isolated self-loop node lost")
+    assert((1000L to 1399L).forall(star.labels(_) == 1000L))
+    assert(star.labels(9999L) == 9999L, "isolated self-loop node lost")
+  }
+
+  test("hybrid components: escape path equals star and BSP on the mixed graph") {
+    // the same mix with the chain over shuffled ids: window minima
+    // merge most chain labels, so the escape CONTRACTS onto the BSP
+    // labels before star finishes — the composed labels must match
+    // the BSP reference, and its components the star arm's on the
+    // monotone-id layout of the same graph
+    val ids = (1000L to 1399L).toVector
+    val shuffled = new scala.util.Random(7).shuffle(ids)
+    val pairs = mixedGraph(shuffled)
+    val escape = CCPropSpec.run(spark, pairs)
+    assert(!escape.skipped, "contraction skipped on the random-id chain")
+    assertLabels("BSP", escape.labels, CCPropSpec.bspReference(pairs))
+    assertLabels("union-find", escape.labels, CCPropSpec.reference(pairs))
+    assert(shuffled.forall(escape.labels(_) == 1000L))
+    assert(escape.labels(9999L) == 9999L, "isolated self-loop node lost")
+    // position i of the chain carries id shuffled(i) here and ids(i) in
+    // the star run; every other node keeps its id
+    val toStar = shuffled.zip(ids).toMap.withDefault(identity[Long])
+    def components(labels: Map[Long, Long], rename: Long => Long) =
+      labels.groupMap(_._2)(kv => rename(kv._1)).values.map(_.toSet).toSet
+    val star = CCPropSpec.run(spark, mixedGraph(ids))
+    assert(star.skipped, "contraction not skipped on the monotone chain")
+    assert(components(escape.labels, toStar) ==
+      components(star.labels, identity), "escape and star components differ")
   }
 
   test("hybrid components: shallow graph converges inside the BSP budget") {
